@@ -1,26 +1,10 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Right-size AQE coalescing for the small local SF: the 64m default
-      // advisory collapses a ~3MB shuffle to one partition, serializing
-      // every post-shuffle stage. At production scale partitions are far
-      // above the advisory and these settings are inert.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // Noop sink: materializes every output column (a `count()` action lets
     // the optimizer prune the very projections the query exists to compute).
@@ -29,10 +13,8 @@ object Bench {
 
     // Optional comma-separated subset for local iteration, e.g.
     // SPARK_GRAFT_BENCH_ONLY=dedup_simhash_pairs,dedup_jaccard
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val names = SparkEntry.select(sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .toSeq.flatMap(_.split(",").map(_.trim).filter(_.nonEmpty)))
     // Warm-up pass: JIT + codegen compile + parquet footer caches, so the
     // measured pass reflects steady-state per-query cost instead of charging
     // JVM start-up to whichever query happens to run first.

@@ -87,13 +87,9 @@ object Main {
         System.err.println(msg)
         sys.exit(1)
       case Right(cfg) =>
-        // honor spark-submit's --master when present; standalone default
-        // local[*] keeps `java -cp ... graft.Main` working for dev runs
-        val builder = SparkSession.builder().appName("graft")
-        val spark =
-          (if (sys.props.contains("spark.master")) builder
-           else builder.master("local[*]")).getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        // GraftSession honors spark-submit's --master when present; the
+        // local default keeps `java -cp ... graft.Main` working for dev runs
+        val spark = GraftSession()
         try run(spark, cfg) match {
           case Left(msg) =>
             System.err.println(msg)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility for the optimization rounds: writes each named declared
   * query's `.explain("formatted")` text to
@@ -11,24 +10,11 @@ import org.apache.spark.sql.SparkSession
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r21")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "before")
-    val names = sys.env.get("SPARK_GRAFT_PLAN_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val names = SparkEntry.select(sys.env.get("SPARK_GRAFT_PLAN_ONLY")
+      .toSeq.flatMap(_.split(",").map(_.trim).filter(_.nonEmpty)))
+    val spark = GraftSession()
     val dir = java.nio.file.Paths.get(outDir)
     java.nio.file.Files.createDirectories(dir)
     names.foreach { n =>

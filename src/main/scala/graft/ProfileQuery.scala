@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility for the optimization rounds: runs one declared query
   * (same construction as [[Bench]], same noop sink) a few times and
@@ -11,21 +10,10 @@ import org.apache.spark.sql.SparkSession
 object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.defaultCpus
     val name = sys.env.getOrElse("SPARK_GRAFT_PROFILE_QUERY", "q17_cube")
     val passes = sys.env.getOrElse("SPARK_GRAFT_PROFILE_PASSES", "2").toInt
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(cpus)
 
     case class JobRec(id: Int, desc: String, var ms: Long = -1,
       var start: Long = 0)

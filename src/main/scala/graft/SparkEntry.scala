@@ -1,18 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.{Dedup, Description, Fuzzy, Kmv, Multimodal, Similarity, TextAnalysis}
-import graft.model.{AlmaSchema, CodeTables}
-import graft.operators.{Anomaly, Attribution, Basket, Catalog, Changes, Compaction, FillStage, FormatStage, Funnel, IncrementalAgg, IncrementalJoin, Intervals, Layout, Mirror, RollingAgg, Skew, Skipping, Skyline, Snapshots, SplitStage, Stats, TemporalJoin, YearInference}
-import graft.sources.{AlmaXml, CsvStage, JsonStage, OrcStage}
-import graft.streaming.{AttributionStream, CoverageStream, FunnelStream, IntervalJoinStream, PhashStream, Sessionize, SnapshotStream, StreamCdc, StreamDedup, StreamGate}
+import graft.queries.{AlmaQueries, CoreQueries, DedupQueries, EventQueries, MultimodalQueries, QueryDef, SimilarityQueries, TextQueries}
 
 /** Driver contract: one query per implemented operator (SURVEY.md §2 plus
-  * the corpus-scale extensions), each with a DuckDB oracle where the
-  * semantics are ANSI-SQL-expressible.
+  * the corpus-scale extensions), each with a DuckDB oracle. Each query is
+  * declared once, as a [[QueryDef]] in its family's file under
+  * `graft/queries/`; `queries` and `oracleSql` are views of that registry.
   *
   * Oracle-parity ground rules used throughout (so value hashes match
   * bit-for-bit across engines):
@@ -26,10699 +21,29 @@ import graft.streaming.{AttributionStream, CoverageStream, FunnelStream, Interva
   */
 object SparkEntry {
 
-  // ---------------------------------------------------------------- utils
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  /** Spread a CPU-bound narrow pipeline across all cores. The local test
-    * parquet is one row group = one scan split, so regex/hash-heavy
-    * projections would otherwise run in a single task; a round-robin
-    * repartition costs one shuffle of the (small) input and unlocks full
-    * parallelism. Same pattern applies on clusters whenever input splits
-    * are fewer than cores (few large gzip/parquet files) and downstream
-    * compute dominates scan cost. Gated on the *file* count, not
-    * `rdd.getNumPartitions`: byte-range splitting of a single-row-group
-    * parquet file yields many splits where only one carries rows, so the
-    * split count over-reports real parallelism exactly in the case this
-    * helper exists for (and `df.rdd` forces eager physical planning at
-    * query-construction time). Few input files ⇒ few row-group-bearing
-    * splits ⇒ repartition; at production scale — thousands of files, splits
-    * far exceeding cores — the helper is a no-op instead of a full-input
-    * shuffle baked into the query. Not used on queries that demonstrate
-    * scan pushdown — a repartition would sit above the scan filters. */
-  private def par(s: SparkSession)(df: DataFrame): DataFrame = {
-    val target = s.sparkContext.defaultParallelism
-    if (df.inputFiles.length < target) df.repartition(target) else df
-  }
-
-  /** Exact integer cents: round(x*100) as long. */
-  private def cents(c: Column): Column = round(c * 100).cast("long")
-
-  /** Per-PROCESS scratch root for the persisted-artifact queries
-    * (codebook/IVF-store round-trips). Within one Verify/Bench process
-    * the per-query subpaths never collide, but a fixed CWD-relative
-    * `target/...` raced when two harness processes overlapped (bench at
-    * sf0.1 while verify ran sf0.01) — each could read the other's
-    * half-overwritten store. A temp dir per process ends that. */
-  private lazy val artifactRoot: String =
-    java.nio.file.Files.createTempDirectory("graft_artifacts_").toString
-
-  /** Unique SQL catalog names per invocation — Spark caches catalog
-    * instances by name once resolved, so a bench pass re-running a
-    * query with a fresh root must also mint a fresh name. */
-  private val sqlCatN = new java.util.concurrent.atomic.AtomicInteger()
-
-  /** Single-file stream-source glob — see [[Tables.streamGlob]] (one
-    * shared definition on purpose). */
-  private def streamGlob(path: String): String = Tables.streamGlob(path)
-
-  /** 2100-01-01 UTC: the far-future flush timestamp sentinel rows carry
-    * so a bounded streaming replay's watermark closes every real row's
-    * window/timeout. */
-  private val sentinelUs = 4102444800000000L
-
-  /** Stage a bounded streaming input (real rows + far-future sentinels)
-    * and return its schema. The max REAL event time (rows with
-    * `guardCol >= 0`) rides the staging write itself via `observe()` —
-    * no extra job — and the require fails LOUDLY if fixture timestamps
-    * ever grow within `horizonUs` of the sentinel, where the query would
-    * instead return silently-empty output because the watermark never
-    * clears the real rows' windows. Shared by every sentinel-flushed
-    * streaming query (sessionize, both as-of joins, the outer range
-    * join). */
-  private def stageWithSentinel(
-      s: SparkSession,
-      rows: DataFrame,
-      staging: String,
-      guardCol: String,
-      horizonUs: Long): org.apache.spark.sql.types.StructType = {
-    val obs = org.apache.spark.sql.Observation()
-    rows
-      .observe(obs, max(when(col(guardCol) >= 0,
-        unix_micros(col("ts")))).as("max_us"))
-      .write.mode("overwrite").parquet(staging)
-    val maxUs = obs.get("max_us").asInstanceOf[Long]
-    require(maxUs < sentinelUs - horizonUs,
-      s"fixture max event ts ($maxUs us) reaches the sentinel's " +
-        s"flush horizon ($horizonUs us) — watermark-driven emission " +
-        s"would silently never fire; move the sentinel out")
-    s.read.parquet(staging).schema
-  }
-
-  /** DuckDB cosine between two FLOAT[] expressions, matching
-    * [[Similarity.cosine]] bit-for-bit: double products, left-to-right
-    * list_aggregate sum, d/(sqrt(a)*sqrt(b)). */
-  private def duckDot(a: String, b: String): String =
-    s"list_aggregate(list_transform(list_zip($a, $b), x -> x[1]::DOUBLE * x[2]::DOUBLE), 'sum')"
-  private def duckCosine(a: String, b: String): String = {
-    val d = duckDot(a, b)
-    val na = s"sqrt(${duckDot(a, a)})"
-    val nb = s"sqrt(${duckDot(b, b)})"
-    s"(CASE WHEN $na > 0 AND $nb > 0 THEN $d / ($na * $nb) ELSE 0.0 END)"
-  }
-
-  /** DuckDB normalize/words/shingles matching [[TextAnalysis.normalize]]. */
-  private val duckNorm =
-    "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))"
-  private val duckWords = s"string_split($duckNorm, ' ')"
-
-  /** The messy synthetic URL each doc carries in the URL-dedup queries
-    * (four spellings per resource: default port + uppercase host,
-    * tracking params, fragments, an https:443 sibling) — the same
-    * closed-form construction in Spark and SQL so the oracle replays
-    * it arithmetically. */
-  private def messyUrl: Column = {
-    val k = pmod(col("doc_id"), lit(7)).cast("string")
-    val m = pmod(col("doc_id"), lit(3)).cast("string")
-    val v = pmod(col("doc_id"), lit(4))
-    concat(
-      when(v === 3, lit("HTTPS://Site")).otherwise(lit("HTTP://Site")),
-      k, lit(".Example.COM"),
-      when(v === 3, lit(":443")).otherwise(lit(":80")),
-      lit("/p"), m, lit("/"),
-      when(v === 1, lit("?utm_source=x&fbclid=y"))
-        .when(v === 2, lit("?a=1&utm_campaign=z#frag"))
-        .when(v === 3, lit("#sec"))
-        .otherwise(lit("")))
-  }
-  private val duckMessyUrl =
-    """CASE WHEN doc_id % 4 = 3 THEN 'HTTPS://Site' ELSE 'HTTP://Site' END
-      | || (doc_id % 7) || '.Example.COM'
-      | || CASE WHEN doc_id % 4 = 3 THEN ':443' ELSE ':80' END
-      | || '/p' || (doc_id % 3) || '/'
-      | || CASE doc_id % 4 WHEN 1 THEN '?utm_source=x&fbclid=y'
-      |    WHEN 2 THEN '?a=1&utm_campaign=z#frag'
-      |    WHEN 3 THEN '#sec' ELSE '' END""".stripMargin.replace("\n", "")
-
-  /** [[graft.functions.TextAnalysis.canonicalizeUrl]]'s chain as ONE
-    * nested DuckDB expression over `u` (a column or parenthesized
-    * expression) — for oracles that need the canonical form inline
-    * rather than as the CTE pipeline `text_url_canonical` replays. */
-  private def duckCanonical(u: String): String = {
-    def nf = s"regexp_replace($u, '#.*', '')"
-    val lh = s"lower(regexp_extract($nf, '(?i)^(https?://[^/?#]+)', 1))" +
-      s" || regexp_replace($nf, '(?i)^https?://[^/?#]+', '')"
-    val np = s"regexp_replace(regexp_replace($lh," +
-      s" '^(http://[^/:?#]+):80($$|[/?#].*)', '\\1\\2')," +
-      s" '^(https://[^/:?#]+):443($$|[/?#].*)', '\\1\\2')"
-    val nt = s"regexp_replace(regexp_replace(regexp_replace($np," +
-      s" '&(utm_[^=&]*|fbclid|gclid)=[^&]*', '', 'g')," +
-      s" '\\?(utm_[^=&]*|fbclid|gclid)=[^&]*&', '?')," +
-      s" '\\?(utm_[^=&]*|fbclid|gclid)=[^&]*$$', '')"
-    s"regexp_replace($nt, '/$$', '')"
-  }
-
-  /** The W1 natural-sort description synthesized from lineitem keys — the
-    * same expression in Spark and SQL. */
-  private def synthDesc: Column =
-    when(col("l_linenumber") % 7 === 0, lit("bound volume index"))
-      .when(col("l_linenumber") % 3 === 0,
-        concat(lit("ser."), (col("l_orderkey") % 5).cast("string"),
-          lit(" v."), (col("l_partkey") % 40).cast("string"),
-          lit(" no."), col("l_linenumber").cast("string")))
-      .otherwise(
-        concat(lit("v."), (col("l_partkey") % 40).cast("string"),
-          lit(" no."), col("l_linenumber").cast("string")))
-  private val duckSynthDesc =
-    """CASE WHEN l_linenumber % 7 = 0 THEN 'bound volume index'
-      | WHEN l_linenumber % 3 = 0 THEN 'ser.' || CAST(l_orderkey % 5 AS VARCHAR) || ' v.' || CAST(l_partkey % 40 AS VARCHAR) || ' no.' || CAST(l_linenumber AS VARCHAR)
-      | ELSE 'v.' || CAST(l_partkey % 40 AS VARCHAR) || ' no.' || CAST(l_linenumber AS VARCHAR) END""".stripMargin.replace("\n", "")
-
-  /** RE2-safe variant of the month canonicalization chain: identical to
-    * [[Description.monthSubs]] except the Fall pattern's lookahead
-    * (`au(?!thor|g)\w*`, not expressible in RE2) is replaced by
-    * `autum\w*`; equivalent on any vocabulary without other au- words
-    * (asserted by MonthSubSpec). */
-  private val oracleMonthSubs: Seq[(String, String)] =
-    Description.monthSubs().map {
-      case ("Fal", _) => ("Fal", """fa\w*|autum\w*""")
-      case other => other
-    }
-
-  // -------------------------------------------------------------- entry
+  /** Every declared query by name; a repeated name fails here. */
+  lazy val registry: Map[String, QueryDef] = QueryDef.index(
+    CoreQueries.defs ++ AlmaQueries.defs ++ DedupQueries.defs ++
+      SimilarityQueries.defs ++ TextQueries.defs ++ EventQueries.defs ++
+      MultimodalQueries.defs)
 
   /** Flagship: the 3-table join revenue query on sf0.001. */
   def entry(spark: SparkSession): DataFrame =
     queries("q03_join_revenue")(spark, "/root/testdata/sf0.001")
 
-  // ------------------------------------------------------------- queries
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ---- TPC-H-style relational core -------------------------------
-
-    "q01_agg_lineitem" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(cents(col("l_quantity"))).as("sum_qty_cents"),
-          sum(cents(col("l_extendedprice"))).as("sum_base_cents"),
-          sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-            .as("sum_disc_cents"),
-          count(lit(1)).as("n_rows"))
-        .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
-
-    "q02_filter_project" -> ((s, dir) => {
-      // predicate + projection pushdown: scan should read 3 columns,
-      // PushedFilters on p_type/p_size
-      t(s, dir, "part")
-        .filter(col("p_type") === "PROMO" && col("p_size") >= 25)
-        .select(col("p_partkey"), col("p_name"), col("p_size"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    "q03_join_revenue" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders")
-      val l = t(s, dir, "lineitem")
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(
-          sum(cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-            .as("revenue_cents"),
-          countDistinct(col("o_orderkey")).as("n_orders"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    "q04_broadcast_lookup" -> ((s, dir) => {
-      // dimension chain nation⋈region stays broadcast; fact side never
-      // shuffles for the join (P7's broadcast-lookup generalization)
-      val n = t(s, dir, "nation")
-      val r = t(s, dir, "region")
-      val c = t(s, dir, "customer")
-      c.join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("r_name"))
-        .agg(count(lit(1)).as("n_customers"),
-          sum(cents(col("c_acctbal"))).as("acctbal_cents"))
-        .orderBy(col("r_name"))
-    }),
-
-    "q05_topk" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(10)
-    }),
-
-    "q06_anti_join" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val urgent = t(s, dir, "orders").filter(col("o_orderpriority") === "1-URGENT")
-      c.join(urgent, col("c_custkey") === col("o_custkey"), "left_anti")
-        .select(col("c_custkey"))
-        .orderBy(col("c_custkey"))
-    }),
-
-    "q07_semi_join" -> ((s, dir) => {
-      val sup = t(s, dir, "supplier")
-      val l = t(s, dir, "lineitem").filter(col("l_quantity") >= 45)
-      sup.join(l, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select(col("s_suppkey"), col("s_name"))
-        .orderBy(col("s_suppkey"))
-    }),
-
-    "q08_window_rank" -> ((s, dir) => {
-      val w = Window.partitionBy(col("l_suppkey"))
-        .orderBy(col("l_extendedprice").desc, col("l_orderkey"), col("l_linenumber"))
-      t(s, dir, "lineitem")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 2)
-        .select(col("l_suppkey"), col("rn"), col("l_orderkey"),
-          col("l_linenumber"), col("l_extendedprice"))
-        .orderBy(col("l_suppkey"), col("rn"))
-    }),
-
-    "q09_set_except" -> ((s, dir) => {
-      val buyers = t(s, dir, "orders")
-        .filter(col("o_totalprice") >= 30000)
-        .select(col("o_custkey").as("custkey"))
-      val rich = t(s, dir, "customer")
-        .filter(col("c_acctbal") >= 5000)
-        .select(col("c_custkey").as("custkey"))
-      buyers.except(rich).orderBy(col("custkey"))
-    }),
-
-    "q11_set_intersect" -> ((s, dir) => {
-      // set intersection: urgent buyers who are also high-balance customers
-      val buyers = t(s, dir, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_custkey").as("custkey"))
-      val rich = t(s, dir, "customer")
-        .filter(col("c_acctbal") >= 5000)
-        .select(col("c_custkey").as("custkey"))
-      buyers.intersect(rich).orderBy(col("custkey"))
-    }),
-
-    "q12_rollup" -> ((s, dir) => {
-      // hierarchical aggregate (rollup): per (returnflag, linestatus),
-      // per returnflag subtotal, and grand total in one pass
-      t(s, dir, "lineitem")
-        .rollup(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(cents(col("l_quantity"))).as("qty_cents"))
-        .orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)
-    }),
-
-    "q13_zorder" -> ((s, dir) => {
-      // Z-order layout key: Morton interleave of (orderkey, partkey) —
-      // pure shift/mask integer arithmetic, codegen'd, engine-portable.
-      // clusterByZOrder range-partitions on this key so parquet min/max
-      // stats prune on EITHER dimension (RangePartitioning pinned in
-      // LayoutSpec; this query checks the interleave arithmetic).
-      t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"))
-        .withColumn("zkey",
-          Layout.zValue2(col("l_orderkey"), col("l_partkey")))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    "q14_skyline" -> ((s, dir) => {
-      // Pareto frontier of parts on (minimize price, maximize size):
-      // the two-level bucketed-window skyline — no self-join — against
-      // the oracle's textbook NOT EXISTS dominance scan. Integer cents
-      // keep every comparison exact. bucketBits=12 puts the ~200k-cent
-      // domain into ~50 buckets, so the level-2 frame is tiny while the
-      // level-1 windows stay parallel.
-      val p = t(s, dir, "part")
-        .select(col("p_partkey"), col("p_name"),
-          cents(col("p_retailprice")).as("price_cents"),
-          col("p_size").cast("long").as("sz"))
-      Skyline.frontier2(p, col("price_cents"), col("sz"), bucketBits = 12)
-        .orderBy(col("p_partkey"))
-    }),
-
-    "q15_assoc" -> ((s, dir) => {
-      // market-basket association rules over (order, brand) baskets:
-      // Apriori min-support pushdown BEFORE the pair self-join, counts
-      // exact longs, confidence/lift as explicitly-ordered IEEE
-      // arithmetic mirrored in the oracle
-      val b = t(s, dir, "lineitem")
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .select(col("l_orderkey"), col("p_brand"))
-      Basket.associationRules(b, "l_orderkey", "p_brand", minSupport = 300)
-        .orderBy(col("ante"), col("cons"))
-    }),
-
-    "q17_cube" -> ((s, dir) => {
-      // full CUBE over the two status dims — all four grouping sets in
-      // one pass (the Expand-based plan), the rollup twin's superset
-      t(s, dir, "lineitem")
-        .cube(col("l_returnflag"), col("l_linestatus"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(cents(col("l_quantity"))).as("qty_cents"))
-        .orderBy(col("l_returnflag").asc_nulls_first,
-          col("l_linestatus").asc_nulls_first)
-    }),
-
-    "q18_expectations" -> ((s, dir) => {
-      // the ingest-gate expectation suite: four row predicates counted
-      // in ONE scan + the key-uniqueness check, unioned into one
-      // (rule, n_rows, n_violations) report
-      val li = t(s, dir, "lineitem")
-      Stats.expectRows(li, Seq(
-          "qty_in_range" -> !col("l_quantity").between(1, 50),
-          "price_positive" -> (col("l_extendedprice") <= 0),
-          "returnflag_domain" -> !col("l_returnflag").isin("A", "N", "R"),
-          "shipdate_present" -> col("l_shipdate").isNull))
-        .unionByName(Stats.expectUniqueKey(li,
-          Seq("l_orderkey", "l_linenumber")))
-        .orderBy(col("rule"))
-    }),
-
-    "q36_expect_fk" -> ((s, dir) => {
-      // referential integrity in the expectation suite: the real
-      // lineitem → orders FK (zero violations) beside a deliberately
-      // broken one (parent restricted to even part keys, so odd
-      // l_partkeys violate) — both the clean and dirty paths under the
-      // oracle. Keys-only anti-joins; the report unions with the q18
-      // suite shape.
-      val li = t(s, dir, "lineitem")
-      Stats.expectForeignKey(li, t(s, dir, "orders"),
-          Seq("l_orderkey"), Seq("o_orderkey"), "lineitem_orders_fk")
-        .unionByName(Stats.expectForeignKey(li,
-          t(s, dir, "part").filter(col("p_partkey") % 2 === 0),
-          Seq("l_partkey"), Seq("p_partkey"), "lineitem_even_parts_fk"))
-        .orderBy(col("rule"))
-    }),
-
-    "q29_optimize" -> ((s, dir) => {
-      // OPTIMIZE inside the snapshot lineage: three append commits
-      // accrete a small-file mess (8 files each), optimize rewrites the
-      // latest snapshot into few uniform files AS A REPLACE VERSION —
-      // old versions stay readable until vacuumed, and the optimized
-      // read must carry EXACTLY the source rows (the oracle: the whole
-      // events table; SnapshotsSpec pins the file-count arithmetic).
-      val tbl = s"$artifactRoot/snap_opt_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 0)
-        .repartition(8), tbl, append = false)
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 1)
-        .repartition(8), tbl, append = true)
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 2)
-        .repartition(8), tbl, append = true)
-      val v = Snapshots.optimize(s, tbl, targetBytes = 1L << 20)
-      Snapshots.readAsOf(s, tbl, v).orderBy(col("event_id"))
-    }),
-
-    "q28_snapshot_skipping" -> ((s, dir) => {
-      // time travel × data skipping multiply — the Iceberg read path
-      // over plain parquet: both commits are range-clustered with
-      // per-file min/max stats persisted beside the version (the append
-      // commit REUSES the parent's stats rows), and a key-range scan AS
-      // OF each version plans only the admitted files (file-count
-      // arithmetic pinned in SnapshotsSpec). Pruning may skip bytes,
-      // never change rows — the oracle recomputes both snapshots'
-      // ranges from the source table.
-      val tbl = s"$artifactRoot/snap_skip_table"
-      Snapshots.init(s, tbl)
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-      val v0 = Snapshots.commitClustered(s,
-        li.filter(col("l_orderkey") % 2 === 0), tbl,
-        keyCol = "l_orderkey", numFiles = 8, append = false)
-      val v1 = Snapshots.commitClustered(s,
-        li.filter(col("l_orderkey") % 2 === 1), tbl,
-        keyCol = "l_orderkey", numFiles = 8, append = true)
-      Snapshots.scanRangeAsOf(s, tbl, v0, "l_orderkey", 1000L, 2000L)
-        .withColumn("version", lit(0L))
-        .unionByName(
-          Snapshots.scanRangeAsOf(s, tbl, v1, "l_orderkey", 1000L, 2000L)
-            .withColumn("version", lit(1L)))
-        .orderBy(col("version"), col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey"))
-    }),
-
-    "q27_mv_refresh" -> ((s, dir) => {
-      // the full MV LIFECYCLE under one oracle: build state over day-0
-      // facts, serve; a delta lands in the fact table (parquet append);
-      // the MV refreshes by ALGEBRAIC MERGE of the reloaded old state
-      // with the delta's aggregate — the fact table is never rescanned
-      // for maintenance — and the refreshed registration redirects the
-      // same dashboard aggregate, now bit-equal to a full recompute
-      // (q24's oracle verbatim: the whole events table). Deregister
-      // first so the build aggregates are immune to a previous run's
-      // registration (bench runs queries twice per process).
-      val fact = s"$artifactRoot/mvr_fact"
-      val mv0 = s"$artifactRoot/mvr_state0"
-      val mv1 = s"$artifactRoot/mvr_state1"
-      val keys = Seq("user_id", "event_type")
-      graft.plans.MvRewrite.install(s)
-      graft.plans.MvRewrite.deregister(fact)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      ev.filter(col("event_id") % 4 =!= 0)
-        .write.mode("overwrite").parquet(fact)
-      IncrementalAgg.aggregate(s.read.parquet(fact), keys,
-        sums = Seq("value_cents"), mins = Seq("value_cents"),
-        maxes = Seq("value_cents"))
-        .write.mode("overwrite").parquet(mv0)
-      val delta = ev.filter(col("event_id") % 4 === 0)
-      delta.write.mode("append").parquet(fact)
-      IncrementalAgg.merge(
-        IncrementalAgg.loadState(s, mv0, keys,
-          sums = Seq("value_cents"), mins = Seq("value_cents"),
-          maxes = Seq("value_cents")),
-        IncrementalAgg.aggregate(delta, keys,
-          sums = Seq("value_cents"), mins = Seq("value_cents"),
-          maxes = Seq("value_cents")),
-        keys, sums = Seq("value_cents"), mins = Seq("value_cents"),
-        maxes = Seq("value_cents"))
-        .write.mode("overwrite").parquet(mv1)
-      graft.plans.MvRewrite.register(s, fact, mv1, keys,
-        sums = Seq("value_cents"), mins = Seq("value_cents"),
-        maxes = Seq("value_cents"))
-      s.read.parquet(fact).groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value_cents")).as("sum_cents"),
-          min(col("value_cents")).as("min_cents"),
-          max(col("value_cents")).as("max_cents"))
-        .orderBy(col("user_id"))
-    }),
-
-    "q25_time_travel" -> ((s, dir) => {
-      // the snapshot lifecycle end-to-end under ONE oracle: v0 is
-      // "yesterday's" load (even event_ids), v1 appends the odd half
-      // WITHOUT rewriting v0's files (append-mode file sharing, pinned
-      // in SnapshotsSpec), v2 is a replace-commit compliance delete
-      // (every user_id % 13 == 0 purged). Versions 0 and 1 are read
-      // AS OF and materialized (the export-then-expire shape), vacuum
-      // expires everything below v2 — and MUST actually delete files
-      // (required loudly) while leaving the live snapshot untouched,
-      // which the post-vacuum v2 read proves. The oracle recomputes
-      // all three snapshots straight from events: versioning and
-      // vacuum may move bytes, never rows.
-      val tbl = s"$artifactRoot/snap_table"
-      val scratch = s"$artifactRoot/snap_export"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val v0 = Snapshots.commit(s, ev.filter(col("event_id") % 2 === 0),
-        tbl, append = false)
-      val v1 = Snapshots.commit(s, ev.filter(col("event_id") % 2 === 1),
-        tbl, append = true)
-      val v2 = Snapshots.commit(s,
-        Snapshots.readAsOf(s, tbl, v1).filter(col("user_id") % 13 =!= 0),
-        tbl, append = false)
-      // time-travel reads are lazy — materialize v0/v1 BEFORE their
-      // files expire
-      Snapshots.readAsOf(s, tbl, v0).withColumn("version", lit(0L))
-        .unionByName(
-          Snapshots.readAsOf(s, tbl, v1).withColumn("version", lit(1L)))
-        .write.mode("overwrite").parquet(scratch)
-      val deleted = Snapshots.vacuum(s, tbl, keepFrom = v2)
-      require(deleted > 0,
-        "vacuum retained every file — v0/v1's replace-expired data " +
-          "should have been deleted")
-      s.read.parquet(scratch)
-        .unionByName(
-          Snapshots.readAsOf(s, tbl, v2).withColumn("version", lit(2L)))
-        .orderBy(col("version"), col("event_id"))
-    }),
-
-    "q26_snapshot_diff" -> ((s, dir) => {
-      // the audit face of the same lineage: what did the v2 compliance
-      // delete change vs v1? diff() is a two-sided multiset EXCEPT ALL
-      // over the two AS-OF reads — here pure removals (the purged
-      // users' rows), which the oracle derives independently from
-      // events. Rebuilt lineage (bench runs queries twice per process;
-      // commits mint fresh versions only on a fresh root).
-      val tbl = s"$artifactRoot/snap_diff_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val v1 = Snapshots.commit(s, ev, tbl, append = false)
-      val v2 = Snapshots.commit(s, ev.filter(col("user_id") % 13 =!= 0),
-        tbl, append = false)
-      Snapshots.diff(s, tbl, oldVersion = v1, newVersion = v2)
-        .orderBy(col("change"), col("event_id"))
-    }),
-
-    "q31_snapshot_partitioned" -> ((s, dir) => {
-      // time travel × partition skip: the event stream versioned as a
-      // HIVE-PARTITIONED snapshot table (partition = event_type — the
-      // by-date/IVF-cell layout shape), v0 = event_id%3==0, v1 appends
-      // %3==1 (sharing v0's files, fragments and all), v2 appends the
-      // rest. Two partition-pruned AS-OF scans — 'purchase' AT v1 and
-      // 'view' AT v0 — aggregate per user; only the named partition's
-      // directories enter either plan (pinned in SnapshotsSpec), and
-      // AS-OF v1/v0 must NOT see v2's rows even though v2 exists by
-      // read time. The oracle recomputes both scans straight from the
-      // modulus slices of events.
-      val tbl = s"$artifactRoot/snap_part_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val v0 = Snapshots.commitPartitioned(s,
-        ev.filter(col("event_id") % 3 === 0), tbl, "event_type",
-        append = false)
-      val v1 = Snapshots.commitPartitioned(s,
-        ev.filter(col("event_id") % 3 === 1), tbl, "event_type",
-        append = true)
-      Snapshots.commitPartitioned(s,
-        ev.filter(col("event_id") % 3 === 2), tbl, "event_type",
-        append = true)
-      def slice(v: Long, et: String) =
-        Snapshots.scanPartitionAsOf(s, tbl, v, "event_type", et)
-          .groupBy(col("user_id"))
-          .agg(count(lit(1)).as("n_events"),
-            sum(col("value_cents")).as("cents"))
-          .withColumn("version", lit(v))
-          .withColumn("part", lit(et))
-      slice(v1, "purchase").unionByName(slice(v0, "view"))
-        .select(col("version"), col("part"), col("user_id"),
-          col("n_events"), col("cents"))
-        .orderBy(col("version"), col("part"), col("user_id"))
-    }),
-
-    "q33_snapshot_merge" -> ((s, dir) => {
-      // the lakehouse MERGE verb at partition scope: the event snapshot
-      // (partitioned by event_type) absorbs a correction batch — every
-      // purchase's cents bumped by 1 (same keys → updates) plus a batch
-      // of brand-new 'promo' rows (inserts into a new partition) —
-      // rewriting ONLY the purchase and promo directories; click/view/
-      // signup/error files carry over as manifest pointers
-      // (SnapshotsSpec pins the file reuse). The oracle recomputes the
-      // merged table straight from events.
-      val tbl = s"$artifactRoot/snap_merge_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commitPartitioned(s, ev, tbl, "event_type", append = false)
-      val updates = ev.filter(col("event_type") === "purchase")
-        .withColumn("value_cents", col("value_cents") + 1L)
-        .unionByName(ev.filter(col("event_id") % 7 === 0)
-          .withColumn("event_id", col("event_id") + 1000000L)
-          .withColumn("event_type", lit("promo")))
-      val v = Snapshots.mergePartitioned(s, tbl, updates,
-        keyCols = Seq("event_id"), partCol = "event_type")
-      Snapshots.readAsOf(s, tbl, v)
-        .select(col("event_id"), col("user_id"),
-          col("event_type").cast("string").as("event_type"),
-          col("value_cents"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q34_snapshot_merge_delete" -> ((s, dir) => {
-      // MERGE with per-row verbs — the full CDC-correction shape
-      // (ev_cdc_apply's delete semantics at the snapshot layer):
-      // one batch carries upserts (purchases bumped +1, new promo
-      // rows) AND deletes (every 5th click evicted, never
-      // re-inserted); only the purchase/click/promo directories
-      // rewrite, the rest of the partitions carry over as manifest
-      // pointers. The oracle replays the same verbs in SQL.
-      val tbl = s"$artifactRoot/snap_merge_del_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commitPartitioned(s, ev, tbl, "event_type", append = false)
-      val updates = ev.filter(col("event_type") === "purchase")
-        .withColumn("value_cents", col("value_cents") + 1L)
-        .withColumn("op", lit("upsert"))
-        .unionByName(ev.filter(col("event_id") % 7 === 0)
-          .withColumn("event_id", col("event_id") + 1000000L)
-          .withColumn("event_type", lit("promo"))
-          .withColumn("op", lit("upsert")))
-        .unionByName(ev
-          .filter(col("event_type") === "click" && col("event_id") % 5 === 0)
-          .withColumn("op", lit("delete")))
-      val v = Snapshots.mergePartitioned(s, tbl, updates,
-        keyCols = Seq("event_id"), partCol = "event_type",
-        opCol = Some("op"))
-      Snapshots.readAsOf(s, tbl, v)
-        .select(col("event_id"), col("user_id"),
-          col("event_type").cast("string").as("event_type"),
-          col("value_cents"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q35_optimize_partitioned" -> ((s, dir) => {
-      // partition-preserving OPTIMIZE: three append commits leave each
-      // event_type directory with three file sets (the small-file
-      // problem an appending table accrues); the rewrite compacts the
-      // latest snapshot to one file per partition while the manifest
-      // keeps carrying fragments — partition pruning survives the
-      // compaction (SnapshotsSpec pins the file counts and pruning).
-      // The oracle is the content invariant: compaction moves bytes,
-      // never rows.
-      val tbl = s"$artifactRoot/snap_optpart_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      (0 until 3).foreach { i =>
-        Snapshots.commitPartitioned(s,
-          ev.filter(col("event_id") % 3 === i), tbl, "event_type",
-          append = i > 0)
-      }
-      val v = Snapshots.optimizePartitioned(s, tbl, "event_type")
-      Snapshots.readAsOf(s, tbl, v)
-        .select(col("event_id"), col("user_id"),
-          col("event_type").cast("string").as("event_type"),
-          col("value_cents"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q24_mv_rewrite" -> ((s, dir) => {
-      // MV redirection end-to-end under the oracle: events stage as a
-      // fact table with exact integer cents; IncrementalAgg materializes
-      // the (user_id, event_type) state frame; MvRewrite registers it;
-      // the PLAIN per-user aggregate below is then redirected by the
-      // optimizer to roll the state frame up instead of rescanning the
-      // fact table (MvRewriteSpec pins that the plan really swaps scans;
-      // this row pins that redirection never changes an answer).
-      // Deregister-first makes the MV-build aggregate immune to the
-      // previous registration of the same path (bench runs each query
-      // twice per process).
-      val fact = s"$artifactRoot/mv_fact"
-      val mv = s"$artifactRoot/mv_state"
-      graft.plans.MvRewrite.install(s)
-      graft.plans.MvRewrite.deregister(fact)
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-        .write.mode("overwrite").parquet(fact)
-      IncrementalAgg.aggregate(s.read.parquet(fact),
-        keys = Seq("user_id", "event_type"), sums = Seq("value_cents"),
-        mins = Seq("value_cents"), maxes = Seq("value_cents"))
-        .write.mode("overwrite").parquet(mv)
-      graft.plans.MvRewrite.register(s, fact, mv,
-        keys = Seq("user_id", "event_type"), sums = Seq("value_cents"),
-        mins = Seq("value_cents"), maxes = Seq("value_cents"))
-      s.read.parquet(fact).groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value_cents")).as("sum_cents"),
-          min(col("value_cents")).as("min_cents"),
-          max(col("value_cents")).as("max_cents"))
-        .orderBy(col("user_id"))
-    }),
-
-    "q32_mv_filter" -> ((s, dir) => {
-      // MV redirection under a grouping-key FILTER — the most common
-      // dashboard shape (WHERE key = …  GROUP BY other_key): the
-      // predicate references only MV key columns, so it is constant
-      // within every state group and replays on the state frame; the
-      // plan then rolls the filtered state up WITHOUT scanning the
-      // fact table (plan swap pinned in MvRewriteSpec). The query
-      // groups by user_id while FILTERING on event_type — the filter
-      // key is not even in the grouping, the state-group constancy is
-      // what makes it sound. The oracle computes the same filtered
-      // aggregate straight from events.
-      val fact = s"$artifactRoot/mvf_fact"
-      val mv = s"$artifactRoot/mvf_state"
-      graft.plans.MvRewrite.install(s)
-      graft.plans.MvRewrite.deregister(fact)
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-        .write.mode("overwrite").parquet(fact)
-      IncrementalAgg.aggregate(s.read.parquet(fact),
-        keys = Seq("user_id", "event_type"), sums = Seq("value_cents"),
-        mins = Seq("value_cents"), maxes = Seq("value_cents"))
-        .write.mode("overwrite").parquet(mv)
-      graft.plans.MvRewrite.register(s, fact, mv,
-        keys = Seq("user_id", "event_type"), sums = Seq("value_cents"),
-        mins = Seq("value_cents"), maxes = Seq("value_cents"))
-      s.read.parquet(fact)
-        .filter(col("event_type").isin("purchase", "click"))
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value_cents")).as("sum_cents"),
-          min(col("value_cents")).as("min_cents"),
-          max(col("value_cents")).as("max_cents"))
-        .orderBy(col("user_id"))
-    }),
-
-    "q37_bloom_skipping" -> ((s, dir) => {
-      // bloom-index point lookups where min/max statistics are BLIND:
-      // events written UNCLUSTERED (round-robin repartition — every
-      // file's event_id interval spans the whole domain, so interval
-      // pruning admits everything), then a per-file bloom manifest
-      // answers "which files can contain event_id = v" and three point
-      // scans plan over only the admitted files. The oracle is the
-      // plain IN filter — skipping may only skip bytes, never rows;
-      // LayoutSpec pins that the blooms actually skip files where the
-      // min/max manifest cannot.
-      val store = s"$artifactRoot/bloom_store"
-      val man = s"$artifactRoot/bloom_manifest"
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          col("event_type").cast("string").as("event_type"),
-          cents(col("value")).as("value_cents"))
-      ev.repartition(8).write.mode("overwrite").parquet(store)
-      Skipping.writeBloomManifest(s, store, "event_id", man,
-        expectedPerFile = 20000L)
-      Seq(7L, 123L, 777L)
-        .map(id => Skipping.scanPoint(s, store, man, "event_id", id))
-        .reduce(_ unionByName _)
-        .orderBy(col("event_id"))
-    }),
-
-    "q50_delete_vectors" -> ((s, dir) => {
-      // row-level DELETE as a metadata commit (deletion vectors, the
-      // merge-on-read shape): v0 + append v1 build the full table, v2
-      // deletes purchases, v3 stacks a user-cohort delete on top —
-      // each delete writes a (file, row_index) sidecar and repoints
-      // the PARENT'S files verbatim (zero rows rewritten, spec-pinned
-      // in SnapshotsSpec), readers anti-join the governing set. All
-      // three faces stay readable: MVCC time travel composes with
-      // deletes. The oracle replays each face as a plain filter.
-      val tbl = s"$artifactRoot/snap_dv_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 2 === 0),
-        tbl, append = false)
-      val v1 = Snapshots.commit(s, ev.filter(col("event_id") % 2 === 1),
-        tbl, append = true)
-      val v2 = Snapshots.deleteWhere(s, tbl,
-        col("event_type") === "purchase")
-      val v3 = Snapshots.deleteWhere(s, tbl, col("user_id") % 10 === 3)
-      Snapshots.readAsOf(s, tbl, v1).withColumn("face", lit(1L))
-        .unionByName(
-          Snapshots.readAsOf(s, tbl, v2).withColumn("face", lit(2L)))
-        .unionByName(
-          Snapshots.readAsOf(s, tbl, v3).withColumn("face", lit(3L)))
-        .orderBy(col("face"), col("event_id"))
-    }),
-
-    "q61_correlated_scalar" -> ((s, dir) => {
-      // correlated SCALAR subquery surface (TPC-H Q2's shape): each
-      // part keeps its row iff it carries its brand's minimum retail
-      // price — Catalyst de-correlates the subquery into an aggregate
-      // + join (no per-row re-execution, the rewrite that makes the
-      // declarative form scale); DuckDB runs the identical SQL.
-      t(s, dir, "part").createOrReplaceTempView("part_q61")
-      s.sql(
-        """SELECT p_partkey, p_brand,
-          | CAST(round(p_retailprice * 100, 0) AS BIGINT) AS price_cents
-          |FROM part_q61 p
-          |WHERE p_retailprice = (SELECT min(p2.p_retailprice)
-          |  FROM part_q61 p2 WHERE p2.p_brand = p.p_brand)
-          |ORDER BY p_partkey""".stripMargin)
-    }),
-
-    "q62_correlated_exists" -> ((s, dir) => {
-      // correlated NOT EXISTS surface: suppliers with no shipment on
-      // or after 2001-10-25 (the fixture's final fortnight) — planned as a left-anti join (q06's
-      // physical shape reached from the correlated-subquery SQL form).
-      t(s, dir, "supplier").createOrReplaceTempView("supplier_q62")
-      t(s, dir, "lineitem").createOrReplaceTempView("lineitem_q62")
-      s.sql(
-        """SELECT s_suppkey, s_name FROM supplier_q62 s
-          |WHERE NOT EXISTS (SELECT 1 FROM lineitem_q62 l
-          |  WHERE l.l_suppkey = s.s_suppkey
-          |   AND l.l_shipdate >= TIMESTAMP '2001-10-25 00:00:00')
-          |ORDER BY s_suppkey""".stripMargin)
-    }),
-
-    "q65_catalog_join" -> ((s, dir) => {
-      // the NAMED CATALOG layer: two pipelines share tables by NAME —
-      // fact and dimension live as snapshot tables under roots neither
-      // query hard-codes, the catalog resolves names with per-table
-      // properties (CatalogSpec pins loud unknowns, metadata-only
-      // re-pointing, and the maintenance sweep that closes the
-      // DV-growth loop). Oracle: the plain join aggregate — the
-      // catalog may only change WHERE bytes come from, never values.
-      val cat = s"$artifactRoot/catalog_root"
-      Snapshots.init(s, cat) // wipe for rerun stability
-      val facts = s"$cat/storage/fact_events"
-      val dims = s"$cat/storage/dim_customer"
-      Snapshots.init(s, facts); Snapshots.init(s, dims)
-      Snapshots.commit(s,
-        t(s, dir, "events").select(col("event_id"), col("user_id"),
-          cents(col("value")).as("value_cents")),
-        facts, append = false)
-      Snapshots.commit(s,
-        t(s, dir, "customer").select(col("c_custkey"),
-          col("c_mktsegment")),
-        dims, append = false)
-      Catalog.register(s, cat, "fact_events", facts,
-        Map("owner" -> "pipeline-a"))
-      Catalog.register(s, cat, "dim_customer", dims,
-        Map("retain_versions" -> "8"))
-      Catalog.table(s, cat, "fact_events")
-        .join(Catalog.table(s, cat, "dim_customer"),
-          col("user_id") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value_cents")).as("sum_cents"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    "q66_sql_catalog" -> ((s, dir) => {
-      // the SQL face of the lakehouse layer: a DataSource V2
-      // TableCatalog (graft.sources.v2.GraftCatalog) over the named
-      // catalog, so registered snapshot tables are reachable from
-      // PLAIN SQL by name — including time travel, `VERSION AS OF 0`
-      // here reading the fact table's first era while the head carries
-      // both. The scan plans from the manifest file list (file-exact,
-      // pushdown-preserving — GraftCatalogSpec pins both, plus the
-      // honest refusals for DV/colmap/multi-root faces). Oracle: the
-      // same join over the v0 era expressed as a filter — the catalog
-      // may only change WHERE bytes come from, never values.
-      val cat = s"$artifactRoot/sqlcat_root"
-      Snapshots.init(s, cat)
-      val facts = s"$cat/storage/sql_fact"
-      val dims = s"$cat/storage/sql_dim"
-      Snapshots.init(s, facts); Snapshots.init(s, dims)
-      val ev = t(s, dir, "events")
-      Snapshots.commit(s,
-        ev.filter(col("event_id") % 2 === 0)
-          .select(col("event_id"), col("user_id"),
-            cents(col("value")).as("value_cents")),
-        facts, append = false)
-      Snapshots.commit(s,
-        ev.filter(col("event_id") % 2 === 1)
-          .select(col("event_id"), col("user_id"),
-            cents(col("value")).as("value_cents")),
-        facts, append = true)
-      Snapshots.commit(s,
-        t(s, dir, "customer").select(col("c_custkey"),
-          col("c_mktsegment")),
-        dims, append = false)
-      Catalog.register(s, cat, "sql_fact", facts)
-      Catalog.register(s, cat, "sql_dim", dims)
-      s.conf.set("spark.sql.catalog.gsql", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.gsql.root", cat)
-      s.sql(
-        """SELECT d.c_mktsegment,
-          | CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(f.value_cents) AS BIGINT) AS sum_cents
-          |FROM gsql.sql_fact VERSION AS OF 0 AS f
-          |JOIN gsql.sql_dim AS d ON f.user_id = d.c_custkey
-          |GROUP BY d.c_mktsegment
-          |ORDER BY d.c_mktsegment""".stripMargin)
-    }),
-
-    "q63_schema_widen" -> ((s, dir) => {
-      // schema TYPE WIDENING as pure metadata: v0 commits okey as
-      // int32; the append's okey is int64 with values no int32 can
-      // hold, and the merge PROMOTES the column (int→long — the
-      // Iceberg/Delta type-promotion rule) instead of refusing — zero
-      // bytes rewritten, the Spark 4 vectorized parquet reader
-      // up-casts the old files at scan time, and time travel below the
-      // widening commit still answers int32 (spec-pinned). Oracle: the
-      // two eras unioned with explicit casts.
-      val tbl = s"$artifactRoot/snap_widen_table"
-      Snapshots.init(s, tbl)
-      val li = t(s, dir, "lineitem")
-      Snapshots.commit(s,
-        li.filter(col("l_orderkey") % 2 === 0)
-          .select(col("l_orderkey").cast("int").as("okey"),
-            col("l_linenumber").cast("int").as("lineno"),
-            col("l_quantity").cast("int").as("qty")),
-        tbl, append = false)
-      val v1 = Snapshots.commit(s,
-        li.filter(col("l_orderkey") % 2 === 1)
-          .select((col("l_orderkey") + lit(3000000000L)).as("okey"),
-            col("l_linenumber").cast("int").as("lineno"),
-            col("l_quantity").cast("int").as("qty")),
-        tbl, append = true)
-      Snapshots.readAsOf(s, tbl, v1)
-        .orderBy(col("okey"), col("lineno"), col("qty"))
-    }),
-
-    "q64_zorder3" -> ((s, dir) => {
-      // N-dimensional Z-order: lineitem committed Morton-clustered on
-      // THREE keys (l_orderkey, l_partkey, l_suppkey) — per-file
-      // min/max covers a compact 3-rectangle, so a box over ANY SUBSET
-      // of the keys prunes files (SnapshotsMaintenanceSpec pins the
-      // strict file subset on each single key); here the scan
-      // constrains only (l_partkey, l_suppkey), leaving l_orderkey
-      // free — the subset-pruning a 1-D clustering cannot give.
-      // Oracle: the plain 2-of-3 filter.
-      val tbl = s"$artifactRoot/snap_zorder3_table"
-      Snapshots.init(s, tbl)
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-          col("l_linenumber"), col("l_quantity").cast("long").as("qty"))
-      val v0 = Snapshots.commitZorderedN(s, li, tbl,
-        Seq("l_orderkey", "l_partkey", "l_suppkey"),
-        numFiles = 16, append = false)
-      Snapshots.scanBoxAsOfN(s, tbl, v0,
-        Seq(("l_partkey", 100L, 300L), ("l_suppkey", 10L, 50L)))
-        .orderBy(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey"), col("qty"))
-    }),
-
-    "q67_hilbert" -> ((s, dir) => {
-      // the HILBERT layout (q64's locality refinement): lineitem
-      // committed Hilbert-clustered on the same THREE keys — identical
-      // stats sidecar and read path (pruning reads only min_*/max_*
-      // bounds, never the curve), but consecutive curve indexes are
-      // grid-ADJACENT, so per-file rectangles stay compact where
-      // Morton's bit spreading fattens them as keys grow
-      // (HilbertIndex's bijection + unit-step walk is spec-pinned over
-      // full 2-D/3-D grids; LayoutSpec). A DIFFERENT subset box than
-      // q64 so the two layouts' answers are independently oracled.
-      // Oracle: the plain 2-of-3 filter.
-      val tbl = s"$artifactRoot/snap_hilbert_table"
-      Snapshots.init(s, tbl)
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"),
-          col("l_linenumber"), col("l_quantity").cast("long").as("qty"))
-      val v0 = Snapshots.commitHilbertN(s, li, tbl,
-        Seq("l_orderkey", "l_partkey", "l_suppkey"),
-        numFiles = 16, append = false)
-      Snapshots.scanBoxAsOfN(s, tbl, v0,
-        Seq(("l_orderkey", 1000L, 4000L), ("l_suppkey", 5L, 40L)))
-        .orderBy(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey"), col("qty"))
-    }),
-
-    "q68_snapshot_mirror" -> ((s, dir) => {
-      // incremental table MIRRORING over the appends feed: the
-      // replication offset IS the destination's own commit stamp, so
-      // each poll is exactly-once by the atomic-manifest-publish
-      // argument (no side ledger, MirrorSpec pins the crash window).
-      // Seed on the source's first commit, then TWO source appends
-      // ship as ONE O(delta) poll; the caught-up rerun no-ops — both
-      // pinned here by require, values by the oracle (a mirror may
-      // only move bytes, never values). Fresh roots per invocation:
-      // the mirror offset is stateful by design.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_mirror_q68_").toString
-      val src = s"$root/src"; val dst = s"$root/dst"
-      Snapshots.init(s, src); Snapshots.init(s, dst)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 0),
-        src, append = false)
-      require(Mirror.mirrorAppends(s, src, dst).nonEmpty,
-        "the seed poll must mint the destination's v0")
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 1),
-        src, append = true)
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 2),
-        src, append = true)
-      require(Mirror.mirrorAppends(s, src, dst).nonEmpty,
-        "the delta poll must ship both source appends as one commit")
-      require(Mirror.mirrorAppends(s, src, dst).isEmpty,
-        "a caught-up rerun must no-op — exactly-once replication")
-      Snapshots.readAsOf(s, dst,
-        Snapshots.latestVersion(s, dst).get)
-        .orderBy(col("event_id"))
-    }),
-
-    "q69_mirror_cdc" -> ((s, dir) => {
-      // the CDC mirror — replication that survives DELETES: the source
-      // removes rows through deletion vectors and appends new ones;
-      // one poll over the '+'/'-' row-level feed (readChangesBetween)
-      // applies both to the destination as a keyed MERGE stamped with
-      // the new offset. The appends feed structurally cannot express
-      // the deletes; the oracle is the surviving-row set. Fresh roots
-      // per invocation (stateful offset).
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_mirror_q69_").toString
-      val src = s"$root/src"; val dst = s"$root/dst"
-      Snapshots.init(s, src); Snapshots.init(s, dst)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 2 === 0),
-        src, append = false)
-      require(Mirror.mirrorChanges(s, src, dst, Seq("event_id")).nonEmpty)
-      Snapshots.deleteWhere(s, src, col("user_id") % 20 === 0)
-      Snapshots.commit(s, ev.filter(col("event_id") % 2 === 1),
-        src, append = true)
-      require(Mirror.mirrorChanges(s, src, dst, Seq("event_id")).nonEmpty,
-        "one poll must replicate the deletes AND the appended rows")
-      require(Mirror.mirrorChanges(s, src, dst, Seq("event_id")).isEmpty,
-        "a caught-up rerun must no-op")
-      Snapshots.readAsOf(s, dst,
-        Snapshots.latestVersion(s, dst).get)
-        .orderBy(col("event_id"))
-    }),
-
-    "q70_sql_insert" -> ((s, dir) => {
-      // the SQL WRITE path: INSERT INTO a catalog table is an append
-      // commit through the snapshot verbs (V1Write bridge) — the
-      // manifest generation, racer reconciliation, and
-      // constraint/generated-column enforcement all ride the SQL verb
-      // (GraftCatalogSpec pins the refusals and the O(delta) file
-      // sharing). Era 0 commits through the function verb, era 1
-      // arrives via INSERT INTO ... SELECT; the aggregate must equal
-      // the plain whole-table rollup. Fresh catalog name + root per
-      // invocation: Spark caches catalog instances by name.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqlins_").toString
-      val tbl = s"$root/storage/ins"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 2 === 0),
-        tbl, append = false)
-      Catalog.register(s, root, "ins", tbl)
-      val cat = s"gins${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      ev.filter(col("event_id") % 2 === 1)
-        .createOrReplaceTempView("q70_insert_src")
-      s.sql(s"INSERT INTO $cat.ins " +
-        "SELECT event_id, user_id, value_cents FROM q70_insert_src")
-      require(Snapshots.latestVersion(s, tbl).contains(1L),
-        "INSERT INTO must mint exactly one append generation")
-      s.sql(
-        s"""SELECT user_id,
-           | CAST(count(*) AS BIGINT) AS n_events,
-           | CAST(sum(value_cents) AS BIGINT) AS sum_cents
-           |FROM $cat.ins
-           |GROUP BY user_id ORDER BY user_id""".stripMargin)
-    }),
-
-    "q72_sql_call" -> ((s, dir) => {
-      // SQL-DRIVEN MAINTENANCE (Spark 4's native CALL + a
-      // ProcedureCatalog, the Iceberg `CALL catalog.system.*` shape):
-      // a two-commit table compacts layout-preservingly through
-      // `CALL system.optimize`, then expires its pre-compaction
-      // history through `CALL system.vacuum` — the whole maintenance
-      // loop from plain SQL, no library call. The procedures report
-      // their actions as rows (version minted / files deleted,
-      // require-pinned); the oracle is the table rollup — maintenance
-      // may move bytes, never values. Fresh catalog name + root per
-      // invocation.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqlcall_").toString
-      val tbl = s"$root/storage/sc"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 2 === 0),
-        tbl, append = false)
-      Snapshots.commit(s, ev.filter(col("event_id") % 2 === 1),
-        tbl, append = true)
-      Catalog.register(s, root, "sc", tbl)
-      val cat = s"gcall${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val opt = s.sql(s"CALL $cat.system.optimize('sc')").collect()
-      require(opt.length == 1 && opt.head.getLong(1) == 2L,
-        "CALL optimize must mint the compaction version")
-      val vac = s.sql(s"CALL $cat.system.vacuum('sc', 2)").collect()
-      require(vac.head.getLong(1) >= 1L,
-        "CALL vacuum must delete the expired versions' files")
-      s.sql(
-        s"""SELECT user_id,
-           | CAST(count(*) AS BIGINT) AS n_events,
-           | CAST(sum(value_cents) AS BIGINT) AS sum_cents
-           |FROM $cat.sc
-           |GROUP BY user_id ORDER BY user_id""".stripMargin)
-    }),
-
-    "q74_sql_delete" -> ((s, dir) => {
-      // the merge-on-read DELETE loop entirely from SQL: DELETE FROM
-      // is a deletion-vector commit (zero data files rewritten,
-      // require-pinned via the version count — one metadata
-      // generation), the DV-governed face then refuses SQL scans
-      // toward CALL system.optimize, and the compaction restores the
-      // SQL face minus the subjects. Oracle: the surviving rows'
-      // rollup. Fresh catalog name + root per invocation.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqldel_").toString
-      val tbl = s"$root/storage/del"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 2 === 0),
-        tbl, append = false)
-      Catalog.register(s, root, "del", tbl)
-      val cat = s"gdel${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      // the predicate must translate to source filters (attribute
-      // comparisons/IN/AND/OR — Spark's DELETE pushdown contract);
-      // expression predicates route to Snapshots.deleteWhere
-      s.sql(s"DELETE FROM $cat.del WHERE user_id <= 30")
-      require(Snapshots.latestVersion(s, tbl).contains(1L),
-        "DELETE FROM must mint exactly one metadata generation")
-      s.sql(s"CALL $cat.system.optimize('del')")
-      s.sql(
-        s"""SELECT event_type,
-           | CAST(count(*) AS BIGINT) AS n_events,
-           | CAST(sum(value_cents) AS BIGINT) AS sum_cents
-           |FROM $cat.del
-           |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    }),
-
-    "q83_sql_read_dv" -> ((s, dir) => {
-      // SELECT straight after DELETE FROM, NO compaction: the
-      // governed-read rule (graft.plans.GraftGovernedReadRule)
-      // substitutes readAsOf's clean/dirty split for the plain scan —
-      // files no deletion vector touches keep their pushed-down
-      // parquet scan, only the dirty files pay the broadcast
-      // anti-join. Require-pins: the DELETE minted ONE metadata
-      // generation and rewrote ZERO data files, and the SELECT ran
-      // with no CALL system.optimize. Oracle: the same survivors'
-      // rollup q74 checks post-compaction — here served pre-compaction.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqlrdv_").toString
-      val tbl = s"$root/storage/rdv"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 2 === 0),
-        tbl, append = false)
-      val v0Files = Snapshots.readAsOf(s, tbl, 0L).inputFiles.toSet
-      Catalog.register(s, root, "rdv", tbl)
-      val cat = s"grdv${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      s.sql(s"DELETE FROM $cat.rdv WHERE user_id <= 30")
-      require(Snapshots.latestVersion(s, tbl).contains(1L),
-        "DELETE FROM must mint exactly one metadata generation")
-      require(Snapshots.readAsOf(s, tbl, 1L).inputFiles.toSet
-        .filter(_.contains("/data/")) == v0Files,
-        "DELETE FROM must rewrite ZERO data files (deletion vectors)")
-      s.sql(
-        s"""SELECT event_type,
-           | CAST(count(*) AS BIGINT) AS n_events,
-           | CAST(sum(value_cents) AS BIGINT) AS sum_cents
-           |FROM $cat.rdv
-           |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    }),
-
-    "q75_sql_update" -> ((s, dir) => {
-      // SQL row-level UPDATE as FILE-EXACT copy-on-write
-      // (graft.plans.GraftDmlRule → Snapshots.updateWhere): one
-      // predicate-pushed pass finds the files containing a matching
-      // row, ONLY those rewrite (require-pinned via manifest file
-      // sharing — the table is range-laid-out on the predicate key, so
-      // the blast radius is a file subset, the 100-TB shape), carried
-      // rows byte-equal, history stays below. Oracle: the CASE WHEN
-      // face of the same update. Fresh catalog name + root per
-      // invocation.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqlupd_").toString
-      val tbl = s"$root/storage/u"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-        .repartitionByRange(8, col("user_id"))
-      val v0 = Snapshots.commit(s, ev, tbl, append = false)
-      Catalog.register(s, root, "u", tbl)
-      val cat = s"gupd${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      s.sql(s"UPDATE $cat.u SET value_cents = value_cents + 100000, " +
-        "event_type = 'boosted' WHERE user_id <= 25")
-      val v1 = Snapshots.latestVersion(s, tbl).get
-      require(v1 == v0 + 1,
-        "SQL UPDATE must mint exactly one generation")
-      val shared = Snapshots.generationFiles(s, tbl, v0)._1.map(_._1).toSet
-        .intersect(Snapshots.generationFiles(s, tbl, v1)._1.map(_._1).toSet)
-      // the sharing pin is only falsifiable when some range file lies
-      // ENTIRELY above the predicate cut: at sf0.001 user_id tops out
-      // at 14, `<= 25` matches every row, and the correct file-exact
-      // blast radius IS the whole table — a vacuous pin there, not a
-      // rewrite bug (the query's RESULT is unchanged either way)
-      val maxUid = ev.agg(max(col("user_id"))).head().getLong(0)
-      require(shared.nonEmpty || maxUid <= 25,
-        "file-exact UPDATE must repoint the untouched range files " +
-          "verbatim — a whole-table rewrite shared nothing")
-      s.sql(
-        s"""SELECT event_type,
-           | CAST(count(*) AS BIGINT) AS n_events,
-           | CAST(sum(value_cents) AS BIGINT) AS sum_cents
-           |FROM $cat.u
-           |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    }),
-
-    "q76_sql_merge" -> ((s, dir) => {
-      // ANSI MERGE INTO from SQL (GraftDmlRule → Snapshots.mergeInto):
-      // matched targets update from the source, unmatched source rows
-      // insert, in ONE reconciled commit with the ANSI cardinality
-      // check riding the verb. Target = the even-id era; source = the
-      // %3 rows carrying value_cents+7. Oracle: the union face of the
-      // same merge. Fresh catalog name + root per invocation.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqlmrg_").toString
-      val tbl = s"$root/storage/mg"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val v0 = Snapshots.commit(s, ev.filter(col("event_id") % 2 === 0),
-        tbl, append = false)
-      Catalog.register(s, root, "mg", tbl)
-      val cat = s"gmrg${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      ev.filter(col("event_id") % 3 === 0)
-        .withColumn("value_cents", col("value_cents") + 7)
-        .createOrReplaceTempView("q76_merge_src")
-      s.sql(
-        s"""MERGE INTO $cat.mg AS tgt USING q76_merge_src AS src
-           |ON tgt.event_id = src.event_id
-           |WHEN MATCHED THEN UPDATE SET value_cents = src.value_cents * 2
-           |WHEN NOT MATCHED THEN INSERT (event_id, user_id, event_type,
-           |  value_cents) VALUES (src.event_id, src.user_id,
-           |  src.event_type, src.value_cents)""".stripMargin)
-      require(Snapshots.latestVersion(s, tbl).contains(v0 + 1),
-        "SQL MERGE must mint exactly one generation")
-      s.sql(
-        s"""SELECT event_type,
-           | CAST(count(*) AS BIGINT) AS n_events,
-           | CAST(sum(value_cents) AS BIGINT) AS sum_cents
-           |FROM $cat.mg
-           |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    }),
-
-    "q77_sql_tag" -> ((s, dir) => {
-      // TAGS — named version pointers (the Iceberg tag shape): a
-      // human-stable time-travel address (`VERSION AS OF 'baseline'`)
-      // that doubles as a RETENTION PIN — `CALL system.expire_snapshots`
-      // REFUSES while a tag pins an expiring version (require-pinned),
-      // and proceeds once the tag drops. The `.tags` metadata table
-      // serves the live listing from metadata alone. Oracle: the
-      // whole-table rollup (retention may only move bytes). Fresh
-      // catalog name + root per invocation.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqltag_").toString
-      val tbl = s"$root/storage/tg"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      // two REPLACE eras: expiry of era 0 then has files of its own to
-      // delete (an append would share them and expiry would be a no-op)
-      Snapshots.commit(s, ev.filter(col("event_id") % 2 === 0),
-        tbl, append = false)
-      Snapshots.tag(s, tbl, "baseline", 0L)
-      Snapshots.commit(s, ev, tbl, append = false)
-      Catalog.register(s, root, "tg", tbl)
-      val cat = s"gtag${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val eraN = s.sql(
-        s"SELECT count(*) FROM $cat.tg VERSION AS OF 'baseline'")
-        .collect().head.getLong(0)
-      val allN = s.sql(s"SELECT count(*) FROM $cat.tg")
-        .collect().head.getLong(0)
-      require(eraN > 0 && eraN < allN,
-        "VERSION AS OF '<tag>' must answer the tagged era, not the head")
-      val listed = s.sql(s"SELECT tag, version FROM $cat.tg.tags")
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      require(listed == Seq(("baseline", 0L)),
-        s"the .tags metadata table must list the live tag, got $listed")
-      val refused = scala.util.Try(
-        s.sql(s"CALL $cat.system.expire_snapshots('tg', 1)").collect())
-      require(refused.isFailure &&
-        refused.failed.get.getMessage.contains("tagged"),
-        "expire_snapshots must refuse while a tag pins the expiring era")
-      s.sql(s"CALL $cat.system.remove_tag('tg', 'baseline')")
-      val exp = s.sql(s"CALL $cat.system.expire_snapshots('tg', 1)")
-        .collect().head
-      require(exp.getLong(2) >= 1L,
-        "with the pin gone, expiry must delete the era-0-only files")
-      s.sql(
-        s"""SELECT event_type,
-           | CAST(count(*) AS BIGINT) AS n_events,
-           | CAST(sum(value_cents) AS BIGINT) AS sum_cents
-           |FROM $cat.tg
-           |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    }),
-
-    "q78_sql_alter" -> ((s, dir) => {
-      // SQL DDL over the metadata-only schema verbs: ALTER TABLE ADD
-      // COLUMNS widens the stored schema in ONE metadata generation —
-      // zero bytes move, the era-0 files null-fill the new column at
-      // scan time (the same stored-schema read path an evolving append
-      // uses), and time travel below the DDL still answers the narrow
-      // face (require-pinned). The inserted era then carries real
-      // values. Oracle: the coalesced rollup recomputed from events.
-      // Fresh catalog name + root per invocation.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqlalter_").toString
-      val tbl = s"$root/storage/al"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 2 === 0),
-        tbl, append = false)
-      Catalog.register(s, root, "al", tbl)
-      val cat = s"galt${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      s.sql(s"ALTER TABLE $cat.al ADD COLUMNS (bonus_cents BIGINT)")
-      require(Snapshots.latestVersion(s, tbl).contains(1L),
-        "ADD COLUMN must mint exactly one metadata generation")
-      require(!s.sql(s"SELECT * FROM $cat.al VERSION AS OF 0")
-        .columns.contains("bonus_cents"),
-        "time travel below the DDL must answer the narrow face")
-      ev.filter(col("event_id") % 2 === 1)
-        .withColumn("bonus_cents", col("user_id").cast("long"))
-        .createOrReplaceTempView("q78_alter_src")
-      s.sql(s"INSERT INTO $cat.al SELECT event_id, user_id, " +
-        "event_type, value_cents, bonus_cents FROM q78_alter_src")
-      s.sql(
-        s"""SELECT event_type,
-           | CAST(count(*) AS BIGINT) AS n_events,
-           | CAST(sum(coalesce(bonus_cents, 0)) AS BIGINT) AS sum_bonus
-           |FROM $cat.al
-           |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    }),
-
-    "q82_sql_replace_where" -> ((s, dir) => {
-      // SQL REPLACE WHERE — the predicate-scoped INSERT OVERWRITE
-      // (Delta's replaceWhere spelling) over commitReplaceWhere: ONE
-      // derived generation whose face is (old face WHERE NOT pred) ∪
-      // batch, FILE-EXACT blast radius require-pinned below — the
-      // table is clustered on the predicate column, so exactly the
-      // matching files rewrite and every clean file repoints
-      // verbatim. A batch row outside the predicate's scope refuses
-      // the whole statement (idempotent-reload contract), also pinned.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqlrw_").toString
-      val tbl = s"$root/storage/rw"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commitClustered(s, ev, tbl, "event_type",
-        numFiles = 6, append = false)
-      val v0 = Snapshots.latestVersion(s, tbl).get
-      val f0 = Snapshots.generationFiles(s, tbl, v0)._1.map(_._1).toSet
-      Catalog.register(s, root, "rw", tbl)
-      val cat = s"grw${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      // the corrected reload: click rows at doubled cents
-      ev.filter(col("event_type") === "click")
-        .withColumn("value_cents", col("value_cents") * 2)
-        .createOrReplaceTempView("q82_reload")
-      // a batch leaking OUTSIDE the predicate refuses whole
-      val leak = scala.util.Try(s.sql(
-        s"""INSERT INTO $cat.rw REPLACE WHERE event_type = 'view'
-           |SELECT * FROM q82_reload""".stripMargin))
-      require(leak.isFailure && Snapshots.latestVersion(s, tbl)
-        .contains(v0), "an out-of-scope batch must refuse whole")
-      s.sql(
-        s"""INSERT INTO $cat.rw REPLACE WHERE event_type = 'click'
-           |SELECT * FROM q82_reload""".stripMargin)
-      val v1 = Snapshots.latestVersion(s, tbl).get
-      require(v1 == v0 + 1,
-        "REPLACE WHERE must be exactly ONE derived generation")
-      val f1 = Snapshots.generationFiles(s, tbl, v1)._1.map(_._1).toSet
-      require((f0 -- f1).nonEmpty && (f0 intersect f1).nonEmpty,
-        s"file-exact blast radius: only the click-carrying files may " +
-          s"rewrite (rewrote ${(f0 -- f1).size} of ${f0.size})")
-      s.sql(
-        s"""SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-           | CAST(sum(value_cents) AS BIGINT) AS sum_cents
-           |FROM $cat.rw GROUP BY event_type
-           |ORDER BY event_type""".stripMargin)
-    }),
-
-    "q81_runtime_filter" -> ((s, dir) => {
-      // RUNTIME FILE PRUNING for a selective dim⋈fact join — the
-      // dynamic-file-pruning leg Spark's DPP cannot reach inside a
-      // manifest-planned snapshot scan: the dim side's key domain
-      // (bounds + distinct keys at plan time) prunes the fact FILE
-      // SET through the stats sidecar before any fact file opens,
-      // require-pinned below to admit strictly fewer files than the
-      // face carries while the join answer is byte-identical to the
-      // plain join (the oracle). At 100× the fact only grows more
-      // files of the same key-disjoint layout, so the admitted
-      // fraction — not the file count — is the scan cost.
-      val tbl = s"$artifactRoot/snap_runtime_filter"
-      Snapshots.init(s, tbl)
-      Snapshots.commitClustered(s,
-        t(s, dir, "events").select(col("user_id"), col("event_id"),
-          cents(col("value")).as("value_cents")),
-        tbl, "user_id", numFiles = 16, append = false)
-      val head = Snapshots.latestVersion(s, tbl).get
-      val total = Snapshots.readAsOf(s, tbl, head).inputFiles.length
-      val cut = t(s, dir, "events")
-        .agg(max(col("user_id"))).head().getLong(0) / 5L
-      val dim = t(s, dir, "customer")
-        .filter(col("c_custkey") <= cut &&
-          col("c_mktsegment") === "BUILDING")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      val fact = Snapshots.scanJoinPruned(s, tbl, head, "user_id",
-        dim.select(col("c_custkey")))
-      require(fact.inputFiles.length < total,
-        s"the dim side's key range must prune the fact file set " +
-          s"(${fact.inputFiles.length} of $total admitted)")
-      fact.join(broadcast(dim), col("user_id") === col("c_custkey"))
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value_cents")).as("sum_cents"))
-        .orderBy(col("c_mktsegment"))
-    }),
-
-    "q84_sql_runtime_filter" -> ((s, dir) => {
-      // q81's runtime file pruning, now on a PLAIN SQL catalog join —
-      // no function verb in sight: the stats-governed fact scan
-      // declares its clustered key runtime-filterable
-      // (SupportsRuntimeV2Filtering), Spark's dynamic-pruning rule
-      // wires the selective dim's key set into the scan at execution
-      // (reusing the join's own broadcast), and the sidecar admission
-      // re-plans the fact FILE LIST before any data file opens.
-      // Require-pinned: the executed scan admitted strictly fewer
-      // files than the face carries; the answer is byte-identical to
-      // the plain join (the oracle). The commonest BI query shape —
-      // SELECT ... FROM fact JOIN dim — now pays sidecar-pruned scans
-      // straight from SQL.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqlrtf_").toString
-      val factT = s"$root/storage/fact"; val dimT = s"$root/storage/dim"
-      Snapshots.init(s, factT); Snapshots.init(s, dimT)
-      Snapshots.commitClustered(s,
-        t(s, dir, "events").select(col("user_id"), col("event_id"),
-          cents(col("value")).as("value_cents")),
-        factT, "user_id", numFiles = 16, append = false)
-      val total = Snapshots.readAsOf(s, factT,
-        Snapshots.latestVersion(s, factT).get).inputFiles.length
-      val cut = t(s, dir, "events")
-        .agg(max(col("user_id"))).head().getLong(0) / 5L
-      Snapshots.commit(s, t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment")),
-        dimT, append = false)
-      Catalog.register(s, root, "fact", factT)
-      Catalog.register(s, root, "dim", dimT)
-      val cat = s"grtf${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val q = s.sql(
-        s"""SELECT d.c_mktsegment,
-           | CAST(count(*) AS BIGINT) AS n_events,
-           | CAST(sum(f.value_cents) AS BIGINT) AS sum_cents
-           |FROM $cat.fact f JOIN $cat.dim d ON f.user_id = d.c_custkey
-           |WHERE d.c_custkey <= $cut AND d.c_mktsegment = 'BUILDING'
-           |GROUP BY d.c_mktsegment ORDER BY d.c_mktsegment""".stripMargin)
-      q.collect() // execute THIS instance — the probe below reads it
-      def prunedScans(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[org.apache.spark.sql.GraftRuntimePrunedScan] = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          prunedScans(a.executedPlan)
-        case st: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          prunedScans(st.plan)
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-          if b.scan.isInstanceOf[org.apache.spark.sql.GraftRuntimePrunedScan]
-          => Seq(b.scan.asInstanceOf[org.apache.spark.sql.GraftRuntimePrunedScan])
-        case other => other.children.flatMap(prunedScans)
-      }
-      val admitted = prunedScans(q.queryExecution.executedPlan)
-        .flatMap(_.admittedFiles)
-      // the pruning pin is only falsifiable when the dim selection is
-      // NON-EMPTY: at sf0.001 no customer has both c_custkey <= cut
-      // and the BUILDING segment, AQE replaces the join subtree with
-      // EmptyRelation after the empty broadcast builds, and the
-      // injected runtime filter never executes — correct (and cheaper
-      // than any pruning), but unobservable by this probe
-      val dimSel = s.sql(s"SELECT CAST(count(*) AS BIGINT) FROM " +
-        s"$cat.dim WHERE c_custkey <= $cut AND c_mktsegment = " +
-        "'BUILDING'").head().getLong(0)
-      require((admitted.nonEmpty && admitted.head < total) || dimSel == 0L,
-        s"the SQL join's runtime filter must prune the fact file set " +
-          s"($admitted of $total admitted, $dimSel dim rows selected)")
-      q
-    }),
-
-    "q85_sql_read_mor" -> ((s, dir) => {
-      // SELECT on the table a CDC pipeline is upserting into, with NO
-      // fold in between: the governed-read rule substitutes
-      // readMorAsOf — tombstone keys read off the sidecar itself —
-      // so the SQL face equals the merge-on-read resolution (deleted
-      // keys gone, re-upserted keys surviving their own batch's
-      // tombstone). Require-pins: the sync rewrote ZERO pre-existing
-      // files and the tombstone sidecar is still LIVE at the SELECT
-      // (no fold ran). Oracle: the resolved face recomputed from
-      // events (the %5 keys re-keyed at +7 cents, the rest verbatim).
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqlmor_").toString
-      val tbl = s"$root/storage/mor"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev, tbl, append = false)
-      def filesOf(v: Long) =
-        Snapshots.generationFiles(s, tbl, v)._1.map(_._1).toSet
-      val changed = ev.filter(col("event_id") % 5 === 0)
-      val v1 = Snapshots.commitEqUpsert(s, tbl,
-        upserts = changed.withColumn("value_cents",
-          col("value_cents") + 7L),
-        tombstones = changed.select(col("event_id")),
-        keyCols = Seq("event_id"))
-      require(filesOf(0L).subsetOf(filesOf(v1)),
-        "the CDC sync must rewrite ZERO pre-existing files")
-      Catalog.register(s, root, "mor", tbl)
-      val cat = s"gmor${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val out = s.sql(
-        s"""SELECT event_type,
-           | CAST(count(*) AS BIGINT) AS n_events,
-           | CAST(sum(value_cents) AS BIGINT) AS sum_cents
-           |FROM $cat.mor
-           |GROUP BY event_type ORDER BY event_type""".stripMargin)
-      val rows = out.collect()
-      require(Snapshots.eqGovernedAt(s, tbl, v1) && rows.nonEmpty,
-        "the SELECT must have served a STILL-GOVERNED face (no fold)")
-      out
-    }),
-
-    "q80_sql_merge_sync" -> ((s, dir) => {
-      // the FULL-SYNC MERGE (WHEN NOT MATCHED BY SOURCE — the
-      // replication shape): after the statement the target IS the
-      // source's face — present keys update, absent keys DELETE, new
-      // keys insert — in ONE reconciled commit whose by-source blast
-      // radius is its own condition-pruned anti-join pass. Target =
-      // whole events; source = the %3 rows with value_cents+3; final
-      // face = exactly the source. Oracle: recomputed from events.
-      // Fresh catalog name + root per invocation.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqlsync_").toString
-      val tbl = s"$root/storage/sy"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val v0 = Snapshots.commit(s, ev, tbl, append = false)
-      Catalog.register(s, root, "sy", tbl)
-      val cat = s"gsy${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      ev.filter(col("event_id") % 3 === 0)
-        .withColumn("value_cents", col("value_cents") + 3)
-        .createOrReplaceTempView("q80_sync_src")
-      s.sql(
-        s"""MERGE INTO $cat.sy AS tgt USING q80_sync_src AS src
-           |ON tgt.event_id = src.event_id
-           |WHEN MATCHED THEN UPDATE SET value_cents = src.value_cents
-           |WHEN NOT MATCHED THEN INSERT (event_id, user_id,
-           |  event_type, value_cents) VALUES (src.event_id,
-           |  src.user_id, src.event_type, src.value_cents)
-           |WHEN NOT MATCHED BY SOURCE THEN DELETE""".stripMargin)
-      require(Snapshots.latestVersion(s, tbl).contains(v0 + 1),
-        "the full-sync MERGE must be exactly one commit")
-      s.sql(
-        s"""SELECT event_type,
-           | CAST(count(*) AS BIGINT) AS n_events,
-           | CAST(sum(value_cents) AS BIGINT) AS sum_cents
-           |FROM $cat.sy
-           |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    }),
-
-    "q79_sql_branch" -> ((s, dir) => {
-      // BRANCHES — write-audit-publish at LINEAGE scope (the Iceberg
-      // branch shape on the zero-copy clone): `CALL
-      // system.create_branch` forks an isolated writable lineage,
-      // commits stage invisibly to main (require-pinned: main's head
-      // never moves), `VERSION AS OF '<branch>'` serves the audit
-      // face from SQL, and `CALL system.fast_forward` publishes the
-      // whole staged lineage as ONE metadata-only main generation.
-      // Oracle: the whole-table rollup — the published face must be
-      // exactly what a direct write would have produced. Fresh
-      // catalog name + root per invocation.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqlbr_").toString
-      val tbl = s"$root/storage/br"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 2 === 0),
-        tbl, append = false)
-      Catalog.register(s, root, "br", tbl)
-      val cat = s"gbr${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      val bRoot = s.sql(s"CALL $cat.system.create_branch('br', 'wap')")
-        .collect().head.getString(2)
-      Snapshots.commit(s, ev.filter(col("event_id") % 2 === 1),
-        bRoot, append = true)
-      require(Snapshots.latestVersion(s, tbl).contains(0L),
-        "staged branch commits must be invisible to main")
-      val audit = s.sql(
-        s"SELECT count(*) FROM $cat.br VERSION AS OF 'wap'")
-        .collect().head.getLong(0)
-      val mainN = s.sql(s"SELECT count(*) FROM $cat.br")
-        .collect().head.getLong(0)
-      require(audit > mainN,
-        "the SQL audit face must be the branch head, not main")
-      val ff = s.sql(s"CALL $cat.system.fast_forward('br', 'wap')")
-        .collect().head
-      require(ff.getLong(1) == 1L,
-        "the publish must be exactly one main generation")
-      s.sql(
-        s"""SELECT event_type,
-           | CAST(count(*) AS BIGINT) AS n_events,
-           | CAST(sum(value_cents) AS BIGINT) AS sum_cents
-           |FROM $cat.br
-           |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    }),
-
-    "q73_sql_ctas" -> ((s, dir) => {
-      // atomic CTAS (StagingTableCatalog): CREATE TABLE AS SELECT
-      // births a snapshot table — the query result commits as version
-      // 0 of a fresh root under the catalog's own storage/, and the
-      // NAME registration is the publish point (abort deletes the
-      // staged root; readers can never see a half-created table — the
-      // WAP argument at DDL scope). The born table carries the full
-      // snapshot contract from birth: INSERT INTO appends a
-      // generation, VERSION AS OF 0 still answers the CTAS face
-      // (require-pinned). Oracle: the same per-type rollup computed
-      // straight from events. Fresh catalog name + root per invocation.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqlctas_").toString
-      Snapshots.init(s, root)
-      val cat = s"gctas${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      t(s, dir, "events")
-        .select(col("event_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-        .createOrReplaceTempView("q73_ctas_src")
-      s.sql(s"CREATE TABLE $cat.born AS " +
-        "SELECT * FROM q73_ctas_src WHERE event_id % 2 = 0")
-      s.sql(s"INSERT INTO $cat.born " +
-        "SELECT * FROM q73_ctas_src WHERE event_id % 2 = 1")
-      require(s.sql(s"SELECT count(*) FROM $cat.born VERSION AS OF 0")
-        .collect().head.getLong(0) <
-        s.sql(s"SELECT count(*) FROM $cat.born")
-          .collect().head.getLong(0),
-        "the CTAS face must stay time-travelable below the insert")
-      s.sql(
-        s"""SELECT event_type,
-           | CAST(count(*) AS BIGINT) AS n_events,
-           | CAST(sum(value_cents) AS BIGINT) AS sum_cents
-           |FROM $cat.born
-           |GROUP BY event_type ORDER BY event_type""".stripMargin)
-    }),
-
-    "q71_sql_meta" -> ((s, dir) => {
-      // SQL METADATA TABLES (the Iceberg shape): one extra identifier
-      // part under a registered name serves the commit timeline —
-      // `<cat>.<t>.history` — from the manifest alone, no data file
-      // opened (`<t>.files` is its per-generation sibling,
-      // GraftCatalogSpec pins both + the files VERSION AS OF travel).
-      // Three stamped commits; history rows carry (version, stamp,
-      // cumulative row count — append generations point at their
-      // parent's files too). Oracle: the counts recomputed from the
-      // slices. Fresh catalog name + root per invocation.
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_sqlmeta_").toString
-      val tbl = s"$root/storage/mt"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 0),
-        tbl, append = false, ts = Some(100L))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 1),
-        tbl, append = true, ts = Some(200L))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 2),
-        tbl, append = true, ts = Some(300L))
-      Catalog.register(s, root, "mt", tbl)
-      val cat = s"gmeta${sqlCatN.incrementAndGet()}"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.root", root)
-      s.sql(
-        s"""SELECT version, commit_ts, n_rows
-           |FROM $cat.mt.history ORDER BY version""".stripMargin)
-    }),
-
-    "q60_snapshot_zorder" -> ((s, dir) => {
-      // Z-order × time travel: lineitem committed Morton-clustered on
-      // (l_orderkey, l_partkey) with per-file min/max RECTANGLES in the
-      // stats sidecar — a 2-D box scan admits only intersecting files
-      // (metadata-decided on both dimensions at once; SnapshotsSpec
-      // pins the file subset AND that 1-D range scans prune on either
-      // column of the same sidecar — the pruning a 1-D clustering can
-      // only give its own key). Oracle: the plain box filter.
-      val tbl = s"$artifactRoot/snap_zorder_table"
-      Snapshots.init(s, tbl)
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_partkey"), col("l_linenumber"),
-          col("l_quantity").cast("long").as("qty"))
-      val v0 = Snapshots.commitZordered(s, li, tbl,
-        "l_orderkey", "l_partkey", numFiles = 16, append = false)
-      Snapshots.scanBoxAsOf(s, tbl, v0,
-        "l_orderkey", 1000L, 3000L, "l_partkey", 100L, 300L)
-        .orderBy(col("l_orderkey"), col("l_partkey"), col("l_linenumber"))
-    }),
-
-    "q59_multi_table_asof" -> ((s, dir) => {
-      // CROSS-TABLE consistent time travel: fact and dimension are
-      // separate snapshot tables, each stamping its commits with the
-      // same upstream LOGICAL watermark — so "the warehouse as of
-      // ts=250" is one versionAt resolution per table and the join is
-      // consistent by construction (fact slices 100+200 against the
-      // dimension's ts=100 face; the dimension's ts=300 append is
-      // invisible), the poor-engineer's multi-table transaction that
-      // needs no cross-table lock, only a shared watermark discipline.
-      val fact = s"$artifactRoot/snap_mt_fact"
-      val dim = s"$artifactRoot/snap_mt_dim"
-      Snapshots.init(s, fact); Snapshots.init(s, dim)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val cust = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 0),
-        fact, append = false, ts = Some(100L))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 1),
-        fact, append = true, ts = Some(200L))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 2),
-        fact, append = true, ts = Some(300L))
-      Snapshots.commit(s, cust.filter(col("c_custkey") % 2 === 0),
-        dim, append = false, ts = Some(100L))
-      Snapshots.commit(s, cust.filter(col("c_custkey") % 2 === 1),
-        dim, append = true, ts = Some(300L))
-      Snapshots.readAsOfTimestamp(s, fact, 250L)
-        .join(Snapshots.readAsOfTimestamp(s, dim, 250L),
-          col("user_id") === col("c_custkey"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value_cents"), col("c_mktsegment"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q58_generated_columns" -> ((s, dir) => {
-      // generated columns: declared once as a metadata-only commit,
-      // then MATERIALIZED inside every subsequent ingest's write job
-      // (a writer-supplied wrong value refuses — spec pins validation,
-      // constraint composition, drop, rollback travel). History is
-      // untouched: the pre-declaration era's rows null-fill by schema
-      // evolution, the post-declaration era carries the computed value.
-      val tbl = s"$artifactRoot/snap_gencol_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 2 === 0),
-        tbl, append = false)
-      Snapshots.addGeneratedColumn(s, tbl, "value_bucket",
-        "value_cents DIV 500")
-      val v = Snapshots.commit(s, ev.filter(col("event_id") % 2 === 1),
-        tbl, append = true)
-      Snapshots.readAsOf(s, tbl, v).orderBy(col("event_id"))
-    }),
-
-    "q57_optimize_clustered" -> ((s, dir) => {
-      // compaction that KEEPS range skipping: three round-robin append
-      // commits leave every file spanning the whole key domain (interval
-      // pruning admits everything), then optimizeClustered rewrites the
-      // head range-clustered with a fresh stats sidecar — scanRangeAsOf
-      // on the compacted version prunes again (file-subset spec-pinned
-      // in SnapshotsSpec, with a DV delete compacting away physically).
-      val tbl = s"$artifactRoot/snap_optclust_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      (0L until 3L).foreach { i =>
-        Snapshots.commit(s, ev.filter(col("event_id") % 3 === i)
-          .repartition(4), tbl, append = i > 0L)
-      }
-      val vOpt = Snapshots.optimizeClustered(s, tbl, "event_id", 8)
-      Snapshots.scanRangeAsOf(s, tbl, vOpt, "event_id", 100L, 400L)
-        .orderBy(col("event_id"))
-    }),
-
-    "q56_replace_partitions" -> ((s, dir) => {
-      // dynamic partition overwrite — the idempotent daily-reload verb:
-      // the corrected purchase feed (cents doubled, every 7th row
-      // dropped upstream) wholesale-replaces ONLY its partition; the
-      // four untouched partitions carry as pointers (spec pins file
-      // reuse + re-run convergence). A keyed merge cannot express the
-      // dropped rows; an append would duplicate the kept ones.
-      val tbl = s"$artifactRoot/snap_replace_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commitPartitioned(s, ev, tbl, "event_type",
-        append = false)
-      val corrected = ev.filter(col("event_type") === "purchase" &&
-        col("event_id") % 7 =!= 0)
-        .withColumn("value_cents", col("value_cents") * 2L)
-      val v1 = Snapshots.replacePartitions(s, tbl, corrected, "event_type")
-      Snapshots.readAsOf(s, tbl, v1)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value_cents"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q55_partition_evolution" -> ((s, dir) => {
-      // partition evolution: era 1 lands partitioned by event_type,
-      // era 2 switches the layout to a user bucket — zero bytes of
-      // history rewritten (the manifest carries each file's own
-      // fragment). The evolved scan composes three metadata decisions:
-      // fragment-match on the queried key, outright prune of same-key
-      // other-value fragments, and a data-filter fallback over the
-      // other era's files (the key is carried as DATA from day one —
-      // the evolution contract). Both directions exercised: the new
-      // key prunes era 2, the old key prunes era 1; the naive
-      // fragment-only scan refuses the mixed layout (spec-pinned).
-      val tbl = s"$artifactRoot/snap_evolve_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"),
-          (col("user_id") % 4).as("ub"))
-      Snapshots.commitPartitioned(s, ev.filter(col("event_id") % 2 === 0),
-        tbl, "event_type", append = false)
-      val v1 = Snapshots.commitPartitioned(s,
-        ev.filter(col("event_id") % 2 === 1), tbl, "ub", append = true)
-      val cols = Seq("event_id", "user_id", "event_type",
-        "value_cents", "ub").map(col)
-      Snapshots.scanPartitionEvolved(s, tbl, v1, "ub", 2L)
-        .select(cols :+ lit(1L).as("face"): _*)
-        .unionByName(
-          Snapshots.scanPartitionEvolved(s, tbl, v1, "event_type", "click")
-            .select(cols :+ lit(2L).as("face"): _*))
-        .orderBy(col("face"), col("event_id"))
-    }),
-
-    "q54_snapshot_cdc" -> ((s, dir) => {
-      // the O(delta) row-level CDC feed over an append+delete lineage:
-      // v0 commits evens, v1 appends odds, v2 deletion-vectors the
-      // purchases away; the v0→v2 changes are '+' for odd
-      // non-purchases (odd purchases were added AND deleted inside the
-      // interval — net nothing) and '-' for even purchases (real
-      // deletes of pre-existing rows), with only the fresh files and
-      // the delete-carrying files scanned (diff() is the O(table)
-      // fallback; SnapshotsSpec pins netting, resurrection, refusal).
-      val tbl = s"$artifactRoot/snap_cdc_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val v0 = Snapshots.commit(s, ev.filter(col("event_id") % 2 === 0),
-        tbl, append = false)
-      Snapshots.commit(s, ev.filter(col("event_id") % 2 === 1),
-        tbl, append = true)
-      val v2 = Snapshots.deleteWhere(s, tbl,
-        col("event_type") === "purchase")
-      Snapshots.readChangesBetween(s, tbl, v0, v2)
-        .orderBy(col("change"), col("event_id"))
-    }),
-
-    "q53_snapshot_rename" -> ((s, dir) => {
-      // RENAME/DROP COLUMN as pure metadata (the field-id idea reduced
-      // to names): files keep their PHYSICAL column names forever, a
-      // `_colmap` sidecar moves the logical label — zero bytes
-      // rewritten on a 100-TB table. v0 commits under "cents", v1
-      // renames to value_cents, v2 APPENDS speaking the new name (the
-      // write translates back to the old physical), v3 drops
-      // event_type (pruned at scan, tombstoned against resurrection).
-      // The head face must equal the plain projection of all events
-      // under the final names. SnapshotsSpec pins the per-face schema,
-      // tombstone refusals, rollback/clone travel, and the loud guards
-      // on name-addressed sidecar verbs.
-      val tbl = s"$artifactRoot/snap_rename_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-      Snapshots.commit(s,
-        ev.filter(col("event_id") % 2 === 0)
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            cents(col("value")).as("cents")),
-        tbl, append = false)
-      Snapshots.renameColumn(s, tbl, "cents", "value_cents")
-      Snapshots.commit(s,
-        ev.filter(col("event_id") % 2 === 1)
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            cents(col("value")).as("value_cents")),
-        tbl, append = true)
-      val v3 = Snapshots.dropColumn(s, tbl, "event_type")
-      Snapshots.readAsOf(s, tbl, v3)
-        .select(col("event_id"), col("user_id"), col("value_cents"))
-        .orderBy(col("event_id"))
-    }),
-
-    "q52_recursive_closure" -> ((s, dir) => {
-      // SQL-surface parity: WITH RECURSIVE (Spark 4's UnionLoop)
-      // computes a bounded-hop min-distance closure over a DATA-DERIVED
-      // graph — the dominant direction of each event-type transition
-      // (edge kept iff count(A→B) > count(B→A), the antisymmetric
-      // tournament) — the declarative twin of the explicit iterative
-      // loops the graph family runs (CC/SCC/PageRank, which remain the
-      // scale path: each UnionLoop round re-plans the full join).
-      // DuckDB runs the textually identical recursion as the oracle.
-      t(s, dir, "events").createOrReplaceTempView("ev_rec_q52")
-      s.sql(
-        """WITH RECURSIVE
-          |seq AS (SELECT user_id, event_type,
-          |  lead(event_type) OVER (PARTITION BY user_id
-          |    ORDER BY ts, event_id) AS nxt
-          | FROM ev_rec_q52),
-          |pc AS (SELECT event_type AS src, nxt AS dst,
-          |  CAST(count(*) AS BIGINT) AS c
-          | FROM seq WHERE nxt IS NOT NULL GROUP BY 1, 2),
-          |edges AS (SELECT a.src, a.dst FROM pc a LEFT JOIN pc b
-          |  ON a.src = b.dst AND a.dst = b.src
-          | WHERE a.src <> a.dst AND a.c > coalesce(b.c, CAST(0 AS BIGINT))),
-          |reach(src, dst, hops) AS (
-          |  SELECT src, dst, CAST(1 AS BIGINT) AS hops FROM edges
-          |  UNION ALL
-          |  SELECT r.src, e.dst, r.hops + 1
-          |  FROM reach r JOIN edges e ON r.dst = e.src
-          |  WHERE r.hops < 4 AND e.dst <> r.src)
-          |SELECT src, dst, min(hops) AS min_hops
-          |FROM reach GROUP BY src, dst ORDER BY src, dst""".stripMargin)
-    }),
-
-    "q51_snapshot_constraints" -> ((s, dir) => {
-      // versioned CHECK constraints: declared once as a metadata-only
-      // commit (parent files repointed, existing face validated), then
-      // enforced INSIDE every subsequent ingest's write job via an
-      // assert_true guard — zero extra passes, Delta's invariant
-      // shape. The violating batch (negated cents) must abort without
-      // publishing; the clean append lands; the head face equals the
-      // two clean slices. SnapshotsSpec pins the refusal naming the
-      // constraint, null semantics, drop/rollback/clone travel.
-      val tbl = s"$artifactRoot/snap_check_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 0),
-        tbl, append = false)
-      Snapshots.addConstraint(s, tbl, "cents_nonneg", "value_cents >= 0")
-      val bad = ev.filter(col("event_id") % 3 === 1)
-        .withColumn("value_cents", -col("value_cents") - 1L)
-      val refused =
-        try { Snapshots.commit(s, bad, tbl, append = true); false }
-        catch { case _: Exception => true }
-      require(refused, "the violating batch must abort")
-      val vOk = Snapshots.commit(s, ev.filter(col("event_id") % 3 === 1),
-        tbl, append = true)
-      Snapshots.readAsOf(s, tbl, vOk).orderBy(col("event_id"))
-    }),
-
-    "q49_snapshot_history" -> ((s, dir) => {
-      // the .history metadata view: three stamped modulus appends
-      // profiled as one row per version — logical commit stamp and
-      // manifest-summed row count, all from metadata (file counts are
-      // writer-dependent and stay out of the oracle surface); the
-      // oracle re-derives both columns from the slices
-      val tbl = s"$artifactRoot/snap_hist_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 0),
-        tbl, append = false, ts = Some(100L))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 1),
-        tbl, append = true, ts = Some(200L))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 2),
-        tbl, append = true, ts = Some(300L))
-      Snapshots.tableHistory(s, tbl)
-        .select(col("version"), col("commit_ts"), col("n_rows"))
-        .orderBy(col("version"))
-    }),
-
-    "q48_snapshot_bloom" -> ((s, dir) => {
-      // time travel x bloom skipping: two commitBloom generations over
-      // an UNCLUSTERED high-cardinality key (modulus slices,
-      // repartitioned round-robin so min/max pruning would admit
-      // everything), then point lookups AS OF both versions — v0 must
-      // MISS the id that only arrived in v1's append, v1 must find
-      // every id, all through sidecar-admitted files only
-      // (SnapshotsSpec pins the file skip). The oracle replays both
-      // faces as plain IN filters over the modulus slices.
-      val tbl = s"$artifactRoot/snap_bloom_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val v0 = Snapshots.commitBloom(s,
-        ev.filter(col("event_id") % 2 === 0).repartition(8),
-        tbl, "event_id", append = false, expectedPerFile = 20000L)
-      val v1 = Snapshots.commitBloom(s,
-        ev.filter(col("event_id") % 2 === 1).repartition(8),
-        tbl, "event_id", append = true, expectedPerFile = 20000L)
-      val asOf0 = Seq(42L, 777L)
-        .map(id => Snapshots.scanPointAsOf(s, tbl, v0, "event_id", id))
-        .reduce(_ unionByName _).withColumn("as_of", lit(0L))
-      val asOf1 = Seq(42L, 123L, 777L)
-        .map(id => Snapshots.scanPointAsOf(s, tbl, v1, "event_id", id))
-        .reduce(_ unionByName _).withColumn("as_of", lit(1L))
-      asOf0.unionByName(asOf1).orderBy(col("as_of"), col("event_id"))
-    }),
-
-    "q38_snapshot_rollback" -> ((s, dir) => {
-      // ROLLBACK as the recovery verb: v0 is the good load, v1 a
-      // botched "correction" (purchase amounts zeroed AND half the
-      // table dropped), v2 = rollback to v0 — published as POINTERS to
-      // v0's files, strictly metadata-only (no data file written,
-      // pinned in SnapshotsSpec). The head must read back as v0's
-      // content exactly, while the botch stays readable AS OF v1 for
-      // the post-mortem; the oracle recomputes both faces from events.
-      val tbl = s"$artifactRoot/snap_rb_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val v0 = Snapshots.commit(s, ev, tbl, append = false)
-      val bad = ev.filter(col("event_id") % 2 === 0)
-        .withColumn("value_cents",
-          when(col("event_type") === "purchase", lit(0L))
-            .otherwise(col("value_cents")))
-      val v1 = Snapshots.commit(s, bad, tbl, append = false)
-      val v2 = Snapshots.rollback(s, tbl, v0)
-      Snapshots.readAsOf(s, tbl, v1).withColumn("version", lit(v1))
-        .unionByName(
-          Snapshots.readAsOf(s, tbl, v2).withColumn("version", lit(v2)))
-        .orderBy(col("version"), col("event_id"))
-    }),
-
-    "q39_snapshot_stats" -> ((s, dir) => {
-      // COUNT(*) from metadata alone: q31's partitioned lineage (three
-      // modulus commits, appends sharing the parent's files) profiled
-      // via tableStats — every (version, partition) row count is a sum
-      // over the manifest's per-file footer counts, ZERO data files
-      // opened (SnapshotsSpec pins it by hiding the data directory
-      // entirely). File counts are writer-dependent so the query
-      // exposes only row counts; the oracle recomputes them from
-      // events' modulus slices.
-      val tbl = s"$artifactRoot/snap_stats_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commitPartitioned(s, ev.filter(col("event_id") % 3 === 0),
-        tbl, "event_type", append = false)
-      Snapshots.commitPartitioned(s, ev.filter(col("event_id") % 3 === 1),
-        tbl, "event_type", append = true)
-      Snapshots.commitPartitioned(s, ev.filter(col("event_id") % 3 === 2),
-        tbl, "event_type", append = true)
-      Snapshots.tableStats(s, tbl)
-        .select(col("version"), col("part"), col("n_rows"))
-        .orderBy(col("version"), col("part"))
-    }),
-
-    "q40_snapshot_incremental" -> ((s, dir) => {
-      // the incremental-ETL primitive: three append commits by modulus,
-      // then "what arrived after v0" answered as the manifest file-set
-      // difference — only the two delta commits' files enter the scan
-      // (SnapshotsSpec pins the plan via inputFiles, and that a replace
-      // in the interval refuses). A consumer checkpointing its last
-      // processed version pays O(delta) per poll on a 100-TB table.
-      val tbl = s"$artifactRoot/snap_incr_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val v0 = Snapshots.commit(s, ev.filter(col("event_id") % 3 === 0),
-        tbl, append = false)
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 1),
-        tbl, append = true)
-      val v2 = Snapshots.commit(s, ev.filter(col("event_id") % 3 === 2),
-        tbl, append = true)
-      Snapshots.readAppendsBetween(s, tbl, v0, v2)
-        .orderBy(col("event_id"))
-    }),
-
-    "q43_snapshot_purge" -> ((s, dir) => {
-      // right-to-erasure across the WHOLE history: a three-commit
-      // lineage, then every user_id divisible by 50 is purged — from
-      // EVERY version, not just the head (the one verb that rewrites
-      // history, file-granular: clean files keep their paths,
-      // spec-pinned). All three faces must read back minus the
-      // subjects; the oracle rebuilds each face from events with the
-      // subjects filtered out.
-      val tbl = s"$artifactRoot/snap_purge_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val v0 = Snapshots.commit(s, ev.filter(col("event_id") % 3 === 0),
-        tbl, append = false)
-      val v1 = Snapshots.commit(s, ev.filter(col("event_id") % 3 === 1),
-        tbl, append = true)
-      val v2 = Snapshots.commit(s, ev.filter(col("event_id") % 3 === 2),
-        tbl, append = true)
-      Snapshots.purgeKeys(s, tbl,
-        ev.filter(col("user_id") % 50 === 0)
-          .select(col("user_id")).distinct(),
-        Seq("user_id"))
-      Seq(v0, v1, v2).map(v =>
-        Snapshots.readAsOf(s, tbl, v).withColumn("version", lit(v)))
-        .reduce(_.unionByName(_))
-        .orderBy(col("version"), col("event_id"))
-    }),
-
-    "q47_snapshot_incr_mv" -> ((s, dir) => {
-      // the incremental-ETL loop END-TO-END: a consumer maintains a
-      // per-user rollup over a snapshot table without EVER rescanning
-      // history — checkpoint the last processed version, read ONLY the
-      // appended delta (manifest file-set difference), absorb it by
-      // algebraic merge. Three commits, two absorb rounds; the oracle
-      // recomputes from all events, and exact-long algebra makes
-      // absorb == full recompute bit-for-bit.
-      val tbl = s"$artifactRoot/snap_mv_loop_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"),
-          cents(col("value")).as("v"))
-      val v0 = Snapshots.commit(s, ev.filter(col("event_id") % 3 === 0),
-        tbl, append = false)
-      val v1 = Snapshots.commit(s, ev.filter(col("event_id") % 3 === 1),
-        tbl, append = true)
-      val v2 = Snapshots.commit(s, ev.filter(col("event_id") % 3 === 2),
-        tbl, append = true)
-      val keys = Seq("user_id")
-      var state = IncrementalAgg.aggregate(
-        Snapshots.readAsOf(s, tbl, v0), keys, sums = Seq("v"))
-      for ((from, to) <- Seq((v0, v1), (v1, v2))) {
-        val delta = IncrementalAgg.aggregate(
-          Snapshots.readAppendsBetween(s, tbl, from, to),
-          keys, sums = Seq("v"))
-        state = IncrementalAgg.merge(state, delta, keys, sums = Seq("v"))
-      }
-      state.orderBy(col("user_id"))
-    }),
-
-    "q46_snapshot_clone" -> ((s, dir) => {
-      // ZERO-COPY fork, then the clone runs its destructive verbs —
-      // purge of every user_id % 50 subject, a replace commit, vacuum
-      // — and the SOURCE must come through byte-untouched: its face
-      // still carries the purged subjects (the witness that the
-      // clone's purge rewrote pointers, not the source's files, and
-      // vacuum skipped the external files it merely borrowed).
-      val src = s"$artifactRoot/snap_clone_src"
-      val dst = s"$artifactRoot/snap_clone_dst"
-      Snapshots.init(s, src)
-      Snapshots.init(s, dst)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 0),
-        src, append = false)
-      val s1 = Snapshots.commit(s, ev.filter(col("event_id") % 3 === 1),
-        src, append = true)
-      Snapshots.cloneTable(s, src, s1, dst)
-      Snapshots.purgeKeys(s, dst,
-        ev.filter(col("user_id") % 50 === 0)
-          .select(col("user_id")).distinct(),
-        Seq("user_id"))
-      val d1 = Snapshots.commit(s, ev.filter(col("event_id") % 3 === 2),
-        dst, append = false)
-      Snapshots.vacuum(s, dst, keepFrom = d1)
-      Snapshots.readAsOf(s, dst, d1).withColumn("face", lit("dst"))
-        .unionByName(
-          Snapshots.readAsOf(s, src, s1).withColumn("face", lit("src")))
-        .orderBy(col("face"), col("event_id"))
-    }),
-
-    "q45_snapshot_drift" -> ((s, dir) => {
-      // distribution-drift monitor between two faces: v1 is a
-      // "correction" that nulls clicks' value_cents and doubles the
-      // rest — profileDrift catches the null-rate jump, the min/max
-      // stretch, and the distinct-count shift from ONE aggregate pass
-      // per side (no sums of floats, no sketches — every number
-      // replays on any engine)
-      val tbl = s"$artifactRoot/snap_drift_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val v0 = Snapshots.commit(s, ev, tbl, append = false)
-      val bad = ev.withColumn("value_cents",
-        when(col("event_type") === "click", lit(null).cast("long"))
-          .otherwise(col("value_cents") * 2L))
-      val v1 = Snapshots.commit(s, bad, tbl, append = false)
-      Stats.profileDrift(
-        Snapshots.readAsOf(s, tbl, v0),
-        Snapshots.readAsOf(s, tbl, v1),
-        Seq("value_cents", "user_id"))
-        .orderBy(col("col_name"), col("metric"))
-    }),
-
-    "q42_time_travel_ts" -> ((s, dir) => {
-      // AS OF TIMESTAMP over LOGICAL commit stamps: three modulus
-      // appends watermarked 100/200/300 (event-time, never wall clock
-      // — deterministic on any engine), then the table read at ts=250
-      // (resolves to the second commit: slices 0,1) and ts=999 (the
-      // head). Resolution is "latest version with commit_ts <= ts"
-      // over the metadata-scale manifest; boundary/refusal semantics
-      // pinned in SnapshotsSpec.
-      val tbl = s"$artifactRoot/snap_ts_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 0),
-        tbl, append = false, ts = Some(100L))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 1),
-        tbl, append = true, ts = Some(200L))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 2),
-        tbl, append = true, ts = Some(300L))
-      Snapshots.readAsOfTimestamp(s, tbl, 250L)
-        .withColumn("as_of", lit(250L))
-        .unionByName(Snapshots.readAsOfTimestamp(s, tbl, 999L)
-          .withColumn("as_of", lit(999L)))
-        .orderBy(col("as_of"), col("event_id"))
-    }),
-
-    "q41_snapshot_wap" -> ((s, dir) => {
-      // WRITE-AUDIT-PUBLISH: the bad batch (every value negated below
-      // zero) is staged, audited, REFUSED — its files deleted, never
-      // visible to any reader — then the clean batch passes the same
-      // gate and publishes. The oracle witnesses the refusal: had the
-      // bad batch published, the final table would carry its negated
-      // duplicates and hash-mismatch.
-      val tbl = s"$artifactRoot/snap_wap_table"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_type") === "purchase"),
-        tbl, append = false)
-      val rest = ev.filter(col("event_type") =!= "purchase")
-      val gate: DataFrame => DataFrame =
-        f => Stats.expectRows(f,
-          Seq("non_negative_cents" -> (col("value_cents") < 0)))
-      val bad = rest.withColumn("value_cents", -col("value_cents") - 1L)
-      val refused = Snapshots.commitAudited(s, bad, tbl, gate, append = true)
-      require(refused.isLeft, "the audit gate must refuse the bad batch")
-      val accepted = Snapshots.commitAudited(s, rest, tbl, gate,
-        append = true)
-      val v = accepted.getOrElse(
-        throw new IllegalStateException("the clean batch must publish"))
-      Snapshots.readAsOf(s, tbl, v).orderBy(col("event_id"))
-    }),
-
-    "q23_skipping" -> ((s, dir) => {
-      // planning-time file pruning under the oracle: lineitem is
-      // range-clustered on l_orderkey into 16 files, a min/max manifest
-      // built beside it, and the scan planned over ONLY the files whose
-      // stats admit the key range — the Delta/Iceberg data-skipping
-      // shape over plain parquet. The oracle is the plain filter on the
-      // source table: pruning may only skip bytes, never change rows.
-      // ScaleSpec pins the file arithmetic (scan numFiles < total).
-      val store = s"$artifactRoot/skip_store"
-      val man = s"$artifactRoot/skip_manifest"
-      val li = t(s, dir, "lineitem").select(col("l_orderkey"),
-        col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-      Skipping.writeClustered(li, "l_orderkey", numFiles = 16, path = store)
-      Skipping.writeManifest(s, store, Seq("l_orderkey"), man)
-      Skipping.scanRange(s, store, man, "l_orderkey", 1000L, 2000L)
-        // (l_orderkey, l_linenumber) is not unique in the fixture — all
-        // four columns join the sort so order is total up to fully-equal
-        // rows
-        .orderBy(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey"))
-    }),
-
-    "q22_compact" -> ((s, dir) => {
-      // table maintenance under the oracle: events staged as a 64-file
-      // small-file mess, compacted through the size-targeted rewrite,
-      // read back — the rows must be EXACTLY the source's (compaction
-      // may only move bytes, never rows). File-count arithmetic is
-      // pinned in ScaleSpec; the oracle pins content preservation.
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val small = s"$artifactRoot/compact_small"
-      val packed = s"$artifactRoot/compact_packed"
-      ev.repartition(64).write.mode("overwrite").parquet(small)
-      Compaction.compact(s, small, packed, targetBytes = 1L << 20)
-      s.read.parquet(packed).orderBy(col("event_id"))
-    }),
-
-    "q21_delta_join" -> ((s, dir) => {
-      // incremental join maintenance under the oracle: yesterday's
-      // materialized lineitem⋈orders absorbs today's deltas on BOTH
-      // sides via the three broadcast-delta terms (ΔA⋈B ∪ A⋈ΔB ∪ ΔA⋈ΔB)
-      // — the base tables never shuffle — and the result must equal the
-      // full join recomputed from scratch, row for row. Splits are
-      // arithmetic on the keys so the oracle reproduces them exactly.
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          cents(col("l_extendedprice")).as("l_cents"))
-      val ord = t(s, dir, "orders")
-        .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
-      val liNew = col("l_orderkey") % 4 === 0
-      val ordNew = col("l_orderkey") % 7 === 0
-      val jOld = li.filter(!liNew).join(ord.filter(!ordNew), Seq("l_orderkey"))
-      val delta = IncrementalJoin.joinDelta(
-        li.filter(!liNew), li.filter(liNew),
-        ord.filter(!ordNew), ord.filter(ordNew),
-        Seq("l_orderkey"))
-      // (l_orderkey, l_linenumber) is NOT unique in the fixture — cents
-      // joins the sort key so the order is total up to fully-equal rows
-      jOld.unionByName(delta)
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_cents"))
-    }),
-
-    "q20_skew_salted" -> ((s, dir) => {
-      // the skew mechanism under the oracle: lineitem's return flag has
-      // THREE values — every key is a hot key, the worst case a plain
-      // hash join degenerates to three straggler reducers on. The salted
-      // join scatters each hot key across 16 sub-keys and must produce
-      // exactly the plain join's rows (the salt never leaves the
-      // operator); the post-join aggregation makes the check
-      // scatter-invariant and the oracle is the unsalted join in SQL.
-      val li = t(s, dir, "lineitem")
-        .select(col("l_returnflag"), cents(col("l_quantity")).as("qty_cents"))
-      val dim = li.groupBy(col("l_returnflag"))
-        .agg(max(col("qty_cents")).as("max_qty_cents"))
-      Skew.saltedJoin(li, dim, Seq("l_returnflag"), salts = 16)
-        .groupBy(col("l_returnflag"), col("max_qty_cents"))
-        .agg(count(lit(1)).as("n_rows"),
-          sum(when(col("qty_cents") === col("max_qty_cents"), 1L)
-            .otherwise(0L)).as("n_at_max"))
-        .orderBy(col("l_returnflag"))
-    }),
-
-    "q19_communities" -> ((s, dir) => {
-      // label-propagation communities over the part co-occurrence graph
-      // (DISTINCT edges — votes are unweighted): 3 deterministic sync
-      // rounds, smallest-label tie-break, replayed round-for-round by
-      // the oracle's unrolled CTEs
-      val b = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("bk"), col("l_partkey").as("item"))
-      val edges = b.groupBy(col("bk"))
-        .agg(sort_array(collect_set(col("item"))).as("items"))
-        .select(explode(Dedup.sortedPairs(col("items"), "u", "v")).as("p"))
-        .select(col("p.u"), col("p.v")).distinct()
-      Dedup.labelPropagation(edges, rounds = 3, aCol = "u", bCol = "v")
-        .select(col("node").as("p_partkey"), col("community"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    "q30_kcore" -> ((s, dir) => {
-      // 80-core of the part co-occurrence graph: peel parts with fewer
-      // than 80 surviving co-purchase partners until the dense core
-      // stabilizes (5 sync rounds at this SF) — the dense-region
-      // extractor that separates structurally-embedded nodes from
-      // incidentally-connected ones. Output is each survivor's WITHIN-
-      // CORE degree; the oracle unrolls 12 peel rounds as CTEs
-      // (post-fixpoint rounds are no-ops, so the engine's
-      // converge-and-stop answer equals the fixed unroll).
-      val b = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("bk"), col("l_partkey").as("item"))
-      val edges = b.groupBy(col("bk"))
-        .agg(sort_array(collect_set(col("item"))).as("items"))
-        .select(explode(Dedup.sortedPairs(col("items"), "u", "v")).as("p"))
-        .select(col("p.u"), col("p.v")).distinct()
-      Dedup.kCore(edges, k = 80, aCol = "u", bCol = "v")
-        .select(col("node").as("p_partkey"), col("degree"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    "q44_scc" -> ((s, dir) => {
-      // STRONGLY connected components — the directed classic the
-      // undirected CC family cannot answer (redirect cycles, link
-      // rings). Closed-form directed graph over complete 8-doc groups:
-      // ids 8g..8g+3 form a 4-ring (one SCC, min 8g), 8g+3 exits into
-      // the chain 8g+4..8g+7 (singletons, trimmed as sources/sinks).
-      // FW-BW-MIN coloring with trimming; the oracle re-derives every
-      // component id arithmetically.
-      val docs = t(s, dir, "documents").select(col("doc_id"))
-      val lim = docs.agg((count(lit(1)) - count(lit(1)) % 8).as("lim"))
-      val nodes = docs.crossJoin(broadcast(lim))
-        .filter(col("doc_id") < col("lim")).select(col("doc_id"))
-      val g = col("doc_id") - col("doc_id") % 8
-      val p = col("doc_id") % 8
-      val ring = nodes.filter(p <= 3)
-        .select(col("doc_id").as("src"), (g + (p + 1) % 4).as("dst"))
-      val chain = nodes.filter(p >= 3 && p <= 6)
-        .select(col("doc_id").as("src"), (col("doc_id") + 1).as("dst"))
-      Dedup.stronglyConnectedComponents(
-        ring.unionByName(chain), "src", "dst")
-        .orderBy(col("node"))
-    }),
-
-    "q16_triangles" -> ((s, dir) => {
-      // triangle census of the part co-occurrence graph (parts sharing
-      // an order): edges from the bucket pair expansion, triangles via
-      // degree-ordered orientation (out-degree O(√m), no hub blowup),
-      // output per-part participation counts — the local-clustering
-      // numerator. The oracle recomputes via the naive a<b<c three-way
-      // join, so the orientation's count-each-once argument is under
-      // test.
-      val b = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("bk"), col("l_partkey").as("item"))
-      // no .distinct() here: triangles canonicalizes + dedups its edge
-      // input itself, a second pass would just shuffle the pairs twice
-      val edges = b.groupBy(col("bk"))
-        .agg(sort_array(collect_set(col("item"))).as("items"))
-        .select(explode(Dedup.sortedPairs(col("items"), "u", "v")).as("p"))
-        .select(col("p.u"), col("p.v"))
-      Dedup.triangles(edges, "u", "v")
-        .select(explode(array(col("a"), col("b"), col("c"))).as("p_partkey"))
-        .groupBy(col("p_partkey")).agg(count(lit(1)).as("n_triangles"))
-        .orderBy(col("p_partkey"))
-    }),
-
-    "q10_fill_route" -> ((s, dir) => {
-      // P4/P5/P8/P9 composed over orders: blank-fill, two conditional
-      // note-appends, and the success/error routing flag
-      val o = t(s, dir, "orders")
-        .withColumn("status_filled",
-          when(col("o_orderstatus") === "P", lit("PENDING"))
-            .otherwise(col("o_orderstatus")))
-        .withColumn("Notes", lit(""))
-      val noted = FillStage.noteAppendWhen(
-        col("o_orderpriority") === "1-URGENT", "urgent")(
-        FillStage.noteAppendWhen(col("o_totalprice") < 5000, "Err: low value")(o))
-      noted
-        .withColumn("route",
-          when(col("Notes").contains("Err"), lit("err")).otherwise(lit("ok")))
-        .select(col("o_orderkey"), col("status_filled"),
-          col("Notes").as("notes"), col("route"))
-        .orderBy(col("o_orderkey"))
-    }),
-
-    // ---- Alma-semantics operators over synthesized columns ----------
-
-    "alma_format_guard" -> ((s, dir) => {
-      // P1–P3: registry projection + apostrophe numeric guard via the
-      // real FormatStage against an item-shaped frame
-      val items = t(s, dir, "customer").select(
-        col("c_custkey").cast("string").as("MMS ID"),
-        (col("c_custkey") * 7).cast("string").as("Barcode"),
-        col("c_name").as("title"))
-      FormatStage(AlmaSchema.default)(items)
-        .withColumn("sort_key",
-          FormatStage.unguard(col("MMS ID")).cast("long"))
-        .orderBy(col("sort_key"))
-    }),
-
-    "alma_sort_keys" -> ((s, dir) => {
-      // R3 + W1: numeric (series, volume) keys extracted from the
-      // description drive the natural sort (v2 < v10)
-      val withDesc = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"), synthDesc.as("desc_s"))
-        .transform(par(s))
-      withDesc
-        .withColumn("ser_no", Description.seriesKey(col("desc_s")))
-        .withColumn("vol_no", Description.volumeKey(col("desc_s")))
-        .orderBy(col("ser_no"), col("vol_no"), col("desc_s"),
-          col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    "alma_chronj_norm" -> ((s, dir) => {
-      // R2: the sequential month/season substitution chain (RE2-safe
-      // variant; equivalence with the faithful chain is unit-tested)
-      val raw = when(col("event_type") === "click", lit("january-february"))
-        .when(col("event_type") === "view", lit("SEPT./october"))
-        .when(col("event_type") === "purchase", lit("winter"))
-        .when(col("event_type") === "signup", lit("spring-summer"))
-        .otherwise(lit("june, nov. and december"))
-      val canon = oracleMonthSubs.foldLeft(raw) { case (c, (repl, pat)) =>
-        regexp_replace(c, "(?i)" + pat, repl)
-      }
-      t(s, dir, "events")
-        .transform(par(s))
-        .select(col("event_id"), raw.as("chron_raw"), canon.as("chron_canon"))
-        .orderBy(col("event_id"))
-    }),
-
-    "alma_year_infer" -> ((s, dir) => {
-      // W2 (windowed formulation): 2-digit years healed from the nearest
-      // 4-digit neighbors within the user_id group, century arithmetic
-      // branch-for-branch from the reference
-      val y4 = (lit(1900) + (col("event_id") * 37) % 120)
-      val chron = when(col("event_id") % 3 === 0,
-        lpad((y4 % 100).cast("string"), 2, "0"))
-        .otherwise(y4.cast("string"))
-      val base = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"), chron.as("chron_raw"))
-        .withColumn("Chron I", col("chron_raw"))
-        .withColumn("Notes", lit(""))
-      YearInference.inferWindowed(
-        base, mmsCol = "user_id",
-        orderCols = _ => Seq(col("event_id")))
-        .select(col("user_id"), col("event_id"), col("chron_raw"),
-          col("Chron I").as("chron_fixed"), col("Notes").as("notes"))
-        .orderBy(col("user_id"), col("event_id"))
-    }),
-
-    "alma_code_translate" -> ((s, dir) => {
-      // P7: description→code dictionary translation as a literal-map
-      // lookup (the broadcast-join degenerate case for a ≤12-row dim)
-      val mat = when(col("l_linenumber") % 3 === 0, lit("Book"))
-        .when(col("l_linenumber") % 3 === 1, lit("DVD"))
-        .otherwise(lit("Thesis"))
-      t(s, dir, "lineitem")
-        .withColumn("Material Type", mat)
-        .withColumn("mat_code",
-          FillStage.translateCode("Material Type", CodeTables.materialType))
-        .groupBy(col("mat_code"))
-        .agg(count(lit(1)).as("n_items"))
-        .orderBy(col("mat_code"))
-    }),
-
-    "alma_domain_validate" -> ((s, dir) => {
-      // P6: domain validation as a broadcast anti-join against the code
-      // dimension — invalid values become error-noted rows instead of the
-      // reference's interactive re-prompt
-      val mat = when(col("l_linenumber") % 4 === 0, lit("Book"))
-        .when(col("l_linenumber") % 4 === 1, lit("DVD"))
-        .when(col("l_linenumber") % 4 === 2, lit("Thesis"))
-        .otherwise(lit("Scroll")) // not in the Material Type table
-      val base = t(s, dir, "lineitem")
-        .select(col("l_orderkey"), col("l_linenumber"),
-          mat.as("Material Type"))
-        .withColumn("Notes", lit(""))
-      FillStage.validateDomain(s, "Material Type")(base)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("Material Type").as("material_type"),
-          col("Notes").as("notes"))
-        .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
-
-    "alma_desc_parse" -> ((s, dir) => {
-      // R1 (full fidelity, Java-regex lookbehind — no RE2 oracle; unit
-      // specs + rows-only check): parse fixture-grammar descriptions
-      val desc = when(col("l_linenumber") % 5 === 0,
-        concat(lit("v."), (col("l_partkey") % 40).cast("string"),
-          lit(" no."), (col("l_linenumber") % 12).cast("string"),
-          lit(" (Oct 19"), lpad((col("l_orderkey") % 100).cast("string"), 2, "0"),
-          lit(")")))
-        .when(col("l_linenumber") % 5 === 1,
-          concat(lit("vol "), (col("l_partkey") % 40).cast("string"),
-            lit(" (20"), lpad((col("l_orderkey") % 100).cast("string"), 2, "0"),
-            lit(" Spring)")))
-        .when(col("l_linenumber") % 5 === 2,
-          concat(lit("v."), (col("l_partkey") % 40).cast("string"),
-            lit(" (Nov 98-Jan 99)")))
-        .when(col("l_linenumber") % 5 === 3,
-          concat(lit("ser.3 v."), (col("l_partkey") % 40).cast("string"),
-            lit(" nos.1-2 (Jan-Feb 99)")))
-        .otherwise(lit("unparseable description text"))
-      Description.withParsedDescription(
-        t(s, dir, "lineitem")
-          .select(col("l_orderkey"), col("l_linenumber"), desc.as("Description"))
-          .transform(par(s)))
-        .select(col("l_orderkey"), col("l_linenumber"), col("Description"),
-          col("Enum A"), col("Enum B"), col("Chron I"), col("Chron J"),
-          col("Pattern"))
-        // (l_orderkey, l_linenumber) is NOT unique in the synthetic data;
-        // ties beyond Description are byte-identical rows, so this order
-        // is output-deterministic
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("Description"))
-    }),
-
-    "alma_nomatch_count" -> ((s, dir) => {
-      // A1: the reference's "Could not parse N item descriptions" report
-      // (BatchUpdate.py:753-758) as a conditional aggregate over R1 output
-      val desc = when(col("l_linenumber") % 5 === 4,
-        lit("unparseable description text"))
-        .otherwise(
-          concat(lit("v."), (col("l_partkey") % 40).cast("string"),
-            lit(" no."), (col("l_linenumber") % 12).cast("string"),
-            lit(" (Oct 19"),
-            lpad((col("l_orderkey") % 100).cast("string"), 2, "0"),
-            lit(")")))
-      Description.withParsedDescription(
-        t(s, dir, "lineitem")
-          .select(desc.as("Description"))
-          .transform(par(s)))
-        .agg(
-          sum(when(col("Pattern") === "N/A", 1L).otherwise(0L))
-            .as("n_unmatched"),
-          count(lit(1)).as("n_total"))
-    }),
-
-    "alma_split_pipeline" -> ((s, dir) => {
-      // end-to-end split stage (rows-only; golden-tested in ScalaTest)
-      val items = t(s, dir, "customer").select(
-        col("c_nationkey").cast("string").as("MMS ID"),
-        concat(lit("3"), col("c_custkey").cast("string")).as("Barcode"),
-        col("c_name").as("title"),
-        concat(lit("v."), (col("c_custkey") % 30).cast("string"),
-          lit(" no."), (col("c_custkey") % 4).cast("string"),
-          lit(" (Oct 19"), lpad((col("c_custkey") % 100).cast("string"), 2, "0"),
-          lit(")")).as("Description"))
-      SplitStage(items)
-    }),
-
-    "json_roundtrip" -> ((s, dir) => {
-      // semi-structured ingest under the oracle: documents nest into
-      // JSONL objects ({doc_id, meta:{source,lang}, n_chars}), write
-      // through the partitioned sink, read back under the PINNED schema
-      // (FAILFAST — a corrupt line fails loudly, never silently nulls),
-      // and flatten the nested fields out. The oracle reads the same
-      // fields straight off parquet, so any drift in the JSON encode,
-      // the schema-pinned decode, or the nested access breaks the hash.
-      import org.apache.spark.sql.types._
-      val nested = t(s, dir, "documents").select(col("doc_id"),
-        struct(col("source"), col("lang")).as("meta"), col("n_chars"))
-      val path = JsonStage.write(nested, s"$artifactRoot/json_roundtrip")
-      val schema = StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("meta", StructType(Seq(
-          StructField("source", StringType),
-          StructField("lang", StringType)))),
-        StructField("n_chars", LongType)))
-      JsonStage.read(s, schema, path)
-        .select(col("doc_id"), col("meta.source").as("source"),
-          col("meta.lang").as("lang"), col("n_chars"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "orc_roundtrip" -> ((s, dir) => {
-      // the second columnar format under the oracle: events written as
-      // a hive-partitioned ORC store (partition = event_type), read
-      // back through the native vectorized reader with a partition
-      // filter — purchase/view directories only enter the plan
-      // (pruning pinned in PlanSpec) — and hashed against an oracle
-      // computed straight from the parquet source. Any drift in the
-      // ORC encode, the partition recovery, or the pruned read breaks
-      // the hash.
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val path = OrcStage.write(ev, s"$artifactRoot/orc_roundtrip",
-        partitionBy = Seq("event_type"))
-      OrcStage.read(s, path)
-        .filter(col("event_type").isin("purchase", "view"))
-        .select(col("event_id"), col("user_id"),
-          col("event_type").cast("string").as("event_type"),
-          col("value_cents"))
-        .orderBy(col("event_id"))
-    }),
-
-    "text_lm_score" -> ((s, dir) => {
-      // count-based bigram LM familiarity scoring — the exact-integer
-      // analog of perplexity filtering (CCNet-style: train a cheap LM
-      // on trusted text, score candidates, gate on the score). The LM
-      // trains on even doc_ids (bigram counts c2, unigram counts c1);
-      // each held-out doc scores Σ (10^6·c2(w1,w2)) div c1(w1) over its
-      // bigram POSITIONS — integer division both engines compute
-      // identically, no IEEE logs whose last ulp differs per libm.
-      // The count-table joins carry NO broadcast hint on purpose:
-      // a bigram table is CORPUS-sized, not vocabulary-sized (it grows
-      // with the trusted slice — a Wikipedia-scale LM's bigram table
-      // exceeds any broadcast threshold), so AQE's runtime sizing
-      // decides — broadcast while the LM is small, shuffle join once
-      // it isn't. A hard hint here would OOM the driver exactly when
-      // the trusted corpus is scaled up.
-      val docs = par(s)(t(s, dir, "documents"))
-      val train = docs.filter(col("doc_id") % 2 === 0)
-      val trainBigrams = train
-        .select(explode(Dedup.shingles(col("text"), 2)).as("bg"))
-        .filter(col("bg").contains(" "))
-        .groupBy(col("bg")).agg(count(lit(1)).as("c2"))
-      val trainWords = train
-        .filter(TextAnalysis.normalize(col("text")) =!= "")
-        .select(explode(TextAnalysis.words(col("text"))).as("w1"))
-        .filter(col("w1") =!= "")
-        .groupBy(col("w1")).agg(count(lit(1)).as("c1"))
-      docs.filter(col("doc_id") % 2 =!= 0)
-        .select(col("doc_id"), explode(Dedup.shingles(col("text"), 2)).as("bg"))
-        .filter(col("bg").contains(" "))
-        .withColumn("w1", substring_index(col("bg"), " ", 1))
-        .join(trainBigrams, Seq("bg"), "left")
-        .join(trainWords, Seq("w1"), "left")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_bigrams"),
-          sum(when(col("c2").isNotNull, 1L).otherwise(0L)).as("n_hit"),
-          coalesce(sum(when(col("c2").isNotNull,
-            expr("(1000000 * c2) div c1")).otherwise(0L)), lit(0L))
-            .as("score"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "csv_roundtrip" -> ((s, dir) => {
-      // S1/S2 under the oracle: write an item-shaped frame through the
-      // stage-prefix CSV sink, read it back through BOTH dialects (Spark
-      // CSV and the reference's naive bare-comma split,
-      // BatchUpdate.py:762-816), and hash against an oracle computed
-      // straight from the parquet source — any corruption in the write,
-      // the prefix naming, the per-part header handling, or either read
-      // path breaks the hash. Values are comma/quote-free by construction
-      // (the naive dialect corrupts them by design; that hazard is
-      // golden-tested separately in PipelineSpec).
-      val items = t(s, dir, "customer").select(
-        col("c_custkey").cast("string").as("MMS ID"),
-        (col("c_custkey") * 7).cast("string").as("Barcode"),
-        col("c_name").as("title"))
-      val staged = CsvStage.writeStage(
-        items, s"$artifactRoot/csv_roundtrip/items.csv", "f_")
-      CsvStage.read(s, staged).withColumn("dialect", lit("spark"))
-        .unionByName(
-          CsvStage.readNaive(s, staged).withColumn("dialect", lit("naive")))
-        .withColumn("ck", col("MMS ID").cast("long"))
-        .orderBy(col("dialect"), col("ck"))
-    }),
-
-    "alma_update_merge" -> ((s, dir) => {
-      // S3/S4 merge semantics under the oracle (transport excluded): a
-      // deterministic item-XML template stands in for the pre-fetched GET
-      // payload, and AlmaXml.merge (reference BatchUpdate.py:484-553)
-      // produces the PUT body. Exercises every merge path: existing
-      // element with desc-attr rewrite (physical_material_type), insert
-      // with desc (policy), text-only insert (enumeration_a), text-only
-      // overwrite of an existing element (chronology_i), conditional
-      // insert (chronology_j on even keys), and the blank-skip
-      // (enumeration_b). The oracle rebuilds the same strings in SQL, so
-      // a drift in element order, attribute rendering, or code-table
-      // translation breaks the hash.
-      val mergeUdf = udf((bc: String, mt: String, pol: String, ea: String,
-          cj: String) => {
-        val template =
-          s"""<item link="https://api.example.org/items/$bc"><item_data>""" +
-            s"""<barcode>$bc</barcode>""" +
-            s"""<physical_material_type desc="Issue">ISSUE""" +
-            s"""</physical_material_type>""" +
-            s"""<chronology_i>1999</chronology_i></item_data></item>"""
-        val root = AlmaXml.parse(template)
-        val body = AlmaXml.merge(root, AlmaXml.ItemFields(
-          materialType = Some(mt), itemPolicy = Some(pol),
-          enumA = Some(ea), enumB = Some(""),
-          chronI = Some("2001"), chronJ = Some(cj)))
-        Array(body, AlmaXml.updateUrl(root).getOrElse(""))
-      })
-      val mts = Seq("Book", "Issue", "DVD", "Thesis").map(lit)
-      val pols = Seq("general circulation", "non-circulating",
-        "WCat-ShortLoan").map(lit)
-      val rows = t(s, dir, "customer").select(
-        col("c_custkey").cast("string").as("barcode"),
-        col("c_custkey").as("ck"),
-        element_at(array(mts: _*), (col("c_custkey") % 4).cast("int") + 1)
-          .as("mt"),
-        element_at(array(pols: _*), (col("c_custkey") % 3).cast("int") + 1)
-          .as("pol"),
-        concat(lit("ea-"), (col("c_custkey") % 10).cast("string")).as("ea"),
-        when(col("c_custkey") % 2 === 0,
-          concat(lit("cj-"), (col("c_custkey") % 5).cast("string")))
-          .otherwise(lit("")).as("cj"))
-      rows
-        .withColumn("m", mergeUdf(col("barcode"), col("mt"), col("pol"),
-          col("ea"), col("cj")))
-        .select(col("barcode"), col("ck"),
-          element_at(col("m"), 1).as("put_body"),
-          element_at(col("m"), 2).as("put_url"))
-        .orderBy(col("ck"))
-    }),
-
-    // ---- Dedup suite over documents --------------------------------
-
-    "dedup_fuzzy_names" -> ((s, dir) => {
-      // typo-tolerant entity linkage: all customer-name pairs within
-      // edit distance 1 via SymSpell deletion-variant blocking (equi-join
-      // on shared variants, one levenshtein per distinct candidate) —
-      // the oracle recomputes the same set by brute-force dominance of
-      // the full name cross-product, so the blocking's no-miss guarantee
-      // is itself under test
-      Fuzzy.fuzzyPairs(t(s, dir, "customer"), "c_name")
-        .orderBy(col("s1"), col("s2"))
-    }),
-
-    "dedup_exact" -> ((s, dir) => {
-      // all fingerprint groups (sf0.01 plants no exact dups; the >1
-      // filter is Dedup.exactDuplicates and is covered by its spec)
-      Dedup.fingerprintGroups(par(s)(t(s, dir, "documents")))
-        .orderBy(col("fp"))
-    }),
-
-    "dedup_minhash" -> ((s, dir) => {
-      Dedup.withMinhashSignature(par(s)(t(s, dir, "documents")), k = 4)
-        .select(col("doc_id"), col("mh0"), col("mh1"), col("mh2"), col("mh3"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_minhash_pairs" -> ((s, dir) => {
-      Dedup.minhashCandidates(par(s)(t(s, dir, "documents")), k = 8, bands = 4)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    "dedup_recall_minhash" -> ((s, dir) => {
-      // the dedup mirror of sim_recall_ivfpq: how much of the EXACT
-      // 3-gram-Jaccard pair set (threshold 0.25, global block — the
-      // truth is corpus-wide like the LSH bands) does MinHash-LSH
-      // (k=8, bands of 2) recover, and at what precision? Counts are
-      // exact longs, the two ratios one IEEE division each — the
-      // deploy-time tuning surface for (k, bands) against a measured
-      // corpus rather than the textbook S-curve.
-      val docs = par(s)(t(s, dir, "documents"))
-      val truth = Dedup.ngramJaccardPairs(
-        docs.withColumn("__blk", lit("all")),
-        blockCol = "__blk", n = 3, threshold = 0.25)
-        .select(col("doc_a"), col("doc_b"))
-      val cand = Dedup.minhashCandidates(docs, k = 8, bands = 4)
-        .select(col("doc_a"), col("doc_b"))
-      val hit = truth.join(cand, Seq("doc_a", "doc_b"))
-      truth.agg(count(lit(1)).as("n_truth"))
-        .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
-        .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-        .select(col("n_truth"), col("n_cand"), col("n_hit"),
-          (col("n_hit").cast("double") / col("n_truth").cast("double"))
-            .as("recall"),
-          (col("n_hit").cast("double") / col("n_cand").cast("double"))
-            .as("precision"))
-    }),
-
-    "dedup_recall_hamming" -> ((s, dir) => {
-      // the hamming family's tuning mirror of dedup_recall_minhash:
-      // 48-bit simhash, maxDist 3 → four 12-bit pigeonhole chunks. The
-      // banding is LOSSLESS by construction, so recall against the
-      // BRUTE cross-product truth must read exactly 1.0 — measured
-      // here at corpus scale, not assumed — and the deploy-time
-      // quantity is PRECISION: candidate pairs per true near-dup, the
-      // in-bucket expansion the deployed chunk width admits. Counts
-      // are exact longs, the ratios one IEEE division each.
-      val docs = par(s)(t(s, dir, "documents"))
-      // ONE materialized (id, sh) frame — 16 bytes/doc — feeds the
-      // brute truth's both sides AND the banded candidates: the
-      // per-word md5 signature chain is the dominant cost and lambda
-      // variables defeat plan canonicalization (the README self-join
-      // note), so without this cut every consumer recomputes it
-      val sig = graft.functions.Materialize(docs.select(col("doc_id"),
-        Dedup.simhash(col("text"), bits = 48).as("sh")))
-      val aa = sig.select(col("doc_id").as("doc_a"), col("sh").as("sha"))
-      val bb = sig.select(col("doc_id").as("doc_b"), col("sh").as("shb"))
-      // truth and candidates each feed TWO consumers (their own count
-      // + the hit join) — materialize both or the quadratic brute pass
-      // and the banded pass run twice (the same double-evaluation cut
-      // as `sig` itself; r18 bench: 5.7 s → the pair frames are tiny)
-      val truth = graft.functions.Materialize(
-        aa.join(bb, col("doc_a") < col("doc_b"))
-          .filter(Dedup.hammingDistance(col("sha"), col("shb")) <= 3)
-          .select(col("doc_a"), col("doc_b")))
-      val cand = graft.functions.Materialize(
-        Dedup.hammingCandidatePairs(sig, "doc_id", "sh",
-          bits = 48, maxDist = 3)
-          .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")))
-      val hit = truth.join(cand, Seq("doc_a", "doc_b"))
-      truth.agg(count(lit(1)).as("n_truth"))
-        .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
-        .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
-        .select(col("n_truth"), col("n_cand"), col("n_hit"),
-          (col("n_hit").cast("double") / col("n_truth").cast("double"))
-            .as("recall"),
-          (col("n_hit").cast("double") / col("n_cand").cast("double"))
-            .as("precision"))
-    }),
-
-    "dedup_simhash" -> ((s, dir) => {
-      // 48-bit long signatures: the corpus-scale default — a 2^48 value
-      // space keeps pigeonhole buckets selective at >=10^8 docs, where
-      // 16/24-bit signatures saturate by pigeonhole alone
-      par(s)(t(s, dir, "documents"))
-        .select(col("doc_id"),
-          Dedup.simhash(col("text"), bits = 48).as("sh"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_simhash_pairs" -> ((s, dir) => {
-      // 48-bit signatures, 12-bit pigeonhole chunks (maxDist=3 -> 4
-      // chunks): each bucket keys on 12 real signature bits, so in-bucket
-      // expansion stays bounded even on boilerplate-heavy corpora
-      Dedup.simhashNearDupPairs(par(s)(t(s, dir, "documents")),
-        bits = 48, maxDist = 3)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "dedup_jaccard" -> ((s, dir) => {
-      // maxGramDf: inert at verify scale (500 docs), active at bench scale
-      // and beyond — hot boilerplate grams emit df^2 join rows and carry
-      // no similarity signal
-      Dedup.ngramJaccardPairs(par(s)(t(s, dir, "documents")), n = 2,
-        threshold = 0.25, maxGramDf = 500)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    "dedup_jaccard_prefix" -> ((s, dir) => {
-      // same parameters, same answer, PPJoin cost curve: candidates from
-      // rarest-first prefixes only, exact intersections re-counted on
-      // the candidate sliver (DedupSpec pins both equality with the full
-      // index join and the candidate-set shrinkage). On THIS fixture the
-      // variant benches SLOWER than the full join — the synthetic
-      // corpus's ~512-word vocabulary makes every gram heavy, so
-      // prefixes cannot prune and the extra ranking passes are pure
-      // overhead; the Σ prefix-df² win needs the long light tail a real
-      // web corpus has. ScaleSpec's "PPJoin crossover" test DEMONSTRATES
-      // that regime: on a 3660-doc zipfian-vocabulary corpus the prefix
-      // index shrinks Σ df² ~100× and the candidate set ~80×, and wins
-      // wall-clock against the full index join at the same threshold
-      // with identical output pairs. Bench history is BIMODAL (±2.5 s
-      // at identical plans — README "Performance notes" has the r17
-      // plan-diff); the structural floor after the materialized ranked
-      // index + pre-aggregated gram-df is ~6 s at sf0.1.
-      Dedup.ngramJaccardPairsPrefix(par(s)(t(s, dir, "documents")), n = 2,
-        threshold = 0.25, maxGramDf = 500)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    "dedup_jaccard_auto" -> ((s, dir) => {
-      // cost-based arm selection: measure both arms' quadratic terms
-      // (Σ df² of the full index vs Σ df² of the rarest-first prefix
-      // index) on the actual corpus — the optimizer-statistics pass —
-      // and run the cheaper arm. On THIS fixture's uniform ~512-word
-      // vocabulary prefixes cannot prune, so auto picks the FULL arm
-      // and benches near dedup_jaccard instead of paying the prefix
-      // arm's overhead (the fixed-arm bench pair shows the gap); on a
-      // zipfian corpus the same rule picks prefix (DedupSpec pins both
-      // choices and answer equality with the fixed arms)
-      Dedup.ngramJaccardPairsAuto(par(s)(t(s, dir, "documents")), n = 2,
-        threshold = 0.25, maxGramDf = 500)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    "dedup_containment" -> ((s, dir) => {
-      // asymmetric sub-document duplication: |A∩B| / min(|A|,|B|) finds
-      // the embedded-quote / wrapped-republication pairs whose Jaccard
-      // is diluted by the size mismatch; shares the jaccard query's
-      // inverted-index core (one code path, one materialization)
-      Dedup.ngramContainmentPairs(par(s)(t(s, dir, "documents")), n = 2,
-        threshold = 0.3, maxGramDf = 500)
-        .orderBy(col("doc_a"), col("doc_b"))
-    }),
-
-    "dedup_boilerplate" -> ((s, dir) => {
-      // C4/RefinedWeb-style line-level dedup, at 3-word-segment
-      // granularity (this corpus has no newline structure): segments
-      // appearing in > 3 distinct docs are boilerplate and every
-      // occurrence is dropped; docs reassemble from survivors in order.
-      // Only md5 segment keys shuffle; the drop set is the boilerplate
-      // sliver (52 segments at sf0.01), anti-joined broadcast-side.
-      Dedup.segmentDedup(par(s)(t(s, dir, "documents")),
-        width = 3, maxDf = 3L)
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_lines_within" -> ((s, dir) => {
-      // the intra-doc half of line dedup (dedup_boilerplate is the
-      // cross-doc half): first occurrence of each 3-word segment kept,
-      // repeats dropped — ONE narrow array expression, no explode, no
-      // window, NO SHUFFLE; a 100-TB corpus dedups at scan speed
-      Dedup.dedupSegmentsWithinDoc(par(s)(t(s, dir, "documents")),
-        width = 3)
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_jaccard_hot" -> ((s, dir) => {
-      // the hot-gram cap's observability face: grams whose per-source df
-      // exceeds the cap (here 5, active on this corpus) with their df —
-      // what ngramJaccardPairs would silently drop becomes a loggable
-      // frame
-      Dedup.jaccardHotGrams(par(s)(t(s, dir, "documents")),
-        maxGramDf = 5, n = 2)
-        .orderBy(col("blk"), col("gram"))
-    }),
-
-    "dedup_embed" -> ((s, dir) => {
-      Similarity.cosineNearDupPairs(t(s, dir, "embeddings"), threshold = 0.35)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "dedup_embed_lsh" -> ((s, dir) => {
-      // the corpus-scale variant: sign-bucket LSH blocking (hamming <= 1
-      // multi-probe) instead of the label block — buckets subdivide by
-      // adding positions; labels never do
-      Similarity.cosineNearDupPairsLsh(t(s, dir, "embeddings"), threshold = 0.35)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "dedup_embed_clusters" -> ((s, dir) => {
-      // the embedding-dedup DELIVERABLE: connected components over the
-      // LSH near-dup pairs — one row per EDGE-BEARING vector (CC's
-      // documented contract; edge-free vectors are all trivially
-      // survivors and join back via anti-join, the dedup_survivors
-      // shape) where the pair frame is quadratic on duplicate-heavy
-      // input; this is the frame the cosineNearDupPairsLsh scaladoc
-      // steers 100-TB users to, now first-class with its own oracle
-      val edges = Similarity
-        .cosineNearDupPairsLsh(t(s, dir, "embeddings"), threshold = 0.35)
-        .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-      Dedup.connectedComponents(edges)
-        .select(col("node").as("vec_id"),
-          col("component").as("cluster_id"),
-          (col("node") === col("component")).as("is_survivor"))
-        .orderBy(col("vec_id"))
-    }),
-
-    "dedup_semantic" -> ((s, dir) => {
-      // SemDeDup shape: coarse-quantizer cells block the candidate pairs
-      // (quadratic only within a cell), min-id cell-mate survives each
-      // near-dup chain; output = surviving corpus with its cell
-      val emb = t(s, dir, "embeddings")
-      val cb = Similarity.ivfCentroids(emb, k = 8)
-      Similarity.semanticDedup(emb, cb, tau = 0.4)
-        .select(col("vec_id"), col("cell").cast("long").as("cell"))
-        .orderBy(col("vec_id"))
-    }),
-
-    // ---- Similarity search over embeddings --------------------------
-
-    "dedup_survivors" -> ((s, dir) => {
-      // the end-to-end dedup DELIVERABLE: the kept corpus — every doc
-      // with no near-dup edge plus each cluster's canonical (min-id)
-      // member. Non-survivor cluster members drop via a left-anti join
-      // of the (tiny) component frame against the corpus; edge-free
-      // docs never enter the CC at all, so the anti join is the only
-      // place the full corpus participates.
-      val docs = par(s)(t(s, dir, "documents"))
-      val edges = Dedup.minhashCandidates(docs, k = 8, bands = 4)
-      val dropped = Dedup.connectedComponents(edges)
-        .filter(col("node") =!= col("component"))
-        .select(col("node").as("doc_id"))
-      docs.join(dropped, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_survivors_quality" -> ((s, dir) => {
-      // quality-aware survivor selection: within each near-dup cluster
-      // the HIGHEST-quality member survives (alpha ratio; tie → min id)
-      // instead of blindly keeping the min id — the policy a real corpus
-      // pipeline wants, since near-dup groups often mix a clean original
-      // with mangled scrapes. The rank runs over the cluster-member frame
-      // only (near-dup members, a small fraction of the corpus) — the
-      // kept filter is the top-1 COMPLEMENT (__rn > 1), which needs every
-      // member row anyway, so no group-limit pruning applies and none is
-      // needed — and only the non-survivor id list touches the full
-      // corpus, via an anti-join. No broadcast HINT on either join: the
-      // member/dropped frames are usually broadcast-sized and AQE will
-      // pick that plan from runtime stats, but on a duplicate-heavy
-      // corpus they scale with the dup rate and a forced broadcast would
-      // hard-fail where a shuffled anti-join degrades gracefully.
-      val docs = par(s)(t(s, dir, "documents"))
-      val quality = TextAnalysis.qualityColumns(col("text")).toMap
-      val scored = docs.select(col("doc_id"), col("source"),
-        quality("alpha_ratio").as("alpha_ratio"))
-      val edges = Dedup.minhashCandidates(docs, k = 8, bands = 4)
-      val comp = Dedup.connectedComponents(edges)
-        .select(col("node").as("doc_id"), col("component"))
-      val members = scored.join(comp, Seq("doc_id"))
-      val w = Window.partitionBy(col("component"))
-        .orderBy(col("alpha_ratio").desc, col("doc_id"))
-      val dropped = members
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") > 1)
-        .select(col("doc_id"))
-      scored.join(dropped, Seq("doc_id"), "left_anti")
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_clusters" -> ((s, dir) => {
-      // candidate pairs -> transitive closure -> dedup clusters with a
-      // canonical survivor (min member id): the step that makes pairwise
-      // candidates actionable. Edges are the MinHash LSH candidates, so
-      // the oracle chains a recursive CTE on the same edge SQL.
-      val edges = Dedup.minhashCandidates(par(s)(t(s, dir, "documents")),
-        k = 8, bands = 4)
-      Dedup.connectedComponents(edges)
-        .select(col("node").as("doc_id"), col("component").as("cluster_id"),
-          (col("node") === col("component")).as("is_survivor"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_clusters_incremental" -> ((s, dir) => {
-      // cluster maintenance without nightly re-clustering: 3/4 of the
-      // LSH candidate pairs play yesterday's graph (CC → labels), the
-      // rest arrive as today's delta, and the star-collapsed
-      // incremental fold must reproduce the full recompute exactly —
-      // dedup_clusters' oracle verbatim. The candidate frame is
-      // MATERIALIZED once: its two filter consumers (base, delta) sit
-      // under different filter nodes, so ReuseExchange cannot unify
-      // the expensive LSH self-join below them and an unshared plan
-      // runs the minhash banding twice — the pair set itself is tiny.
-      val edges = graft.functions.Materialize(
-        Dedup.minhashCandidates(par(s)(t(s, dir, "documents")),
-          k = 8, bands = 4))
-      val isDelta = (col("doc_a") + col("doc_b")) % 4 === 0
-      val baseLabels = Dedup.connectedComponents(edges.filter(!isDelta))
-      Dedup.incrementalComponents(baseLabels, edges.filter(isDelta))
-        .select(col("node").as("doc_id"), col("component").as("cluster_id"),
-          (col("node") === col("component")).as("is_survivor"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_pagerank" -> ((s, dir) => {
-      // degree-damped centrality over the same LSH candidate graph:
-      // which near-dup neighborhood member is the hub. Fixed-point
-      // integer ranks (10^6-scaled longs, 4 rounds) — order-independent
-      // sums and portable truncating division, so the oracle replays
-      // every round bit-for-bit as unrolled CTEs.
-      val edges = Dedup.minhashCandidates(par(s)(t(s, dir, "documents")),
-        k = 8, bands = 4)
-      Dedup.pagerank(edges, iterations = 4)
-        .select(col("node").as("doc_id"), col("rank_fp"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_pack" -> ((s, dir) => {
-      // sequence packing: per-source concatenate-and-chunk at 512 tokens,
-      // exact integer offsets; pack_id is the chunk the doc starts in
-      TextAnalysis.packByTokenBudget(par(s)(t(s, dir, "documents")),
-        budgetTokens = 512)
-        .select(col("doc_id"), col("source"), col("n_tokens"),
-          col("start_off"), col("pack_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_quality_filter" -> ((s, dir) => {
-      // rank-based per-source quality gate: keep each source's top half
-      // by alpha ratio — no global threshold to tune, robust to
-      // per-source scale drift. alpha_ratio is materialized as a column
-      // BEFORE the window (CollapseProject would re-inline the regex
-      // expression into every window comparison otherwise).
-      val quality = TextAnalysis.qualityColumns(col("text")).toMap
-      val scored = par(s)(t(s, dir, "documents"))
-        .select(col("doc_id"), col("source"),
-          quality("alpha_ratio").as("alpha_ratio"))
-      TextAnalysis.percentileRank(scored, "alpha_ratio")
-        .filter(col("prank") >= 0.5)
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_mixture" -> ((s, dir) => {
-      // per-source downsampling rates toward a uniform token mixture:
-      // one combinable agg over the corpus, then a #sources-row window
-      TextAnalysis.sourceMixture(par(s)(t(s, dir, "documents")))
-        .orderBy(col("source"))
-    }),
-
-    "text_mixture_apply" -> ((s, dir) => {
-      // the mixing loop CLOSED: sourceMixture's per-source downsampling
-      // weights actually gate the corpus. Keep a doc iff its salted-hash
-      // fraction u ∈ [0,1) falls below its source's weight —
-      // deterministic (rerun-stable, join/repartition-proof, unlike
-      // rand()), unbiased within source, and exactly the advertised
-      // rate in expectation. The weights frame is one row per source —
-      // broadcast by size. u = first 8 md5 hex digits / 2^32, the same
-      // portable construction the deterministic split uses.
-      val docs = par(s)(t(s, dir, "documents"))
-      val weights = TextAnalysis.sourceMixture(docs)
-        .select(col("source"), col("weight"))
-      val u = conv(substring(
-        md5(concat(lit("mix:"), col("doc_id").cast("string"))), 1, 8),
-        16, 10).cast("double") / lit(4294967296.0)
-      docs.join(broadcast(weights), Seq("source"))
-        .withColumn("u", u)
-        .filter(col("u") < col("weight"))
-        .select(col("doc_id"), col("source"), col("u"), col("weight"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_sample_weighted" -> ((s, dir) => {
-      // importance sampling inside a row budget: keep probability ∝
-      // document length (score = char count, an exact long), expected
-      // kept ≈ 200 of 500 docs biased long. One total + one-row
-      // broadcast + narrow hash gate — no corpus shuffle.
-      val docs = par(s)(t(s, dir, "documents"))
-        .withColumn("score", length(col("text")).cast("long"))
-      TextAnalysis.sampleWeighted(docs, "score", targetRows = 200)
-        .select(col("doc_id"), col("score"), col("p"), col("u"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_token_budget" -> ((s, dir) => {
-      // token-budget capped sampling: per source, docs admit in salted-
-      // hash order until 700 tokens fill (the first doc to cross the
-      // line still ships). One window per group, no global sort.
-      TextAnalysis.sampleTokenBudget(par(s)(t(s, dir, "documents")),
-        budgetTokens = 700)
-        .select(col("doc_id"), col("source"), col("n_tokens"),
-          col("tokens_before"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_stream_mixture_apply" -> ((s, dir) => {
-      // the batch-train / stream-apply twin of text_mixture_apply: the
-      // per-source downsampling weights train on the batch corpus (a
-      // #sources-row static frame, broadcast), and arriving docs join it
-      // stream-static — STATELESS: no watermark, no state store, the
-      // at-ingest mixing gate. The salted-hash keep decision depends only
-      // on (doc_id, weight), so a full replay equals the batch operator
-      // row-for-row and both share an oracle.
-      import org.apache.spark.sql.streaming.OutputMode
-      Tables.configure(s)
-      val weights = TextAnalysis.sourceMixture(par(s)(t(s, dir, "documents")))
-        .select(col("source"), col("weight"))
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(raw)
-        .parquet(streamGlob(s"$dir/documents.parquet"))
-      val u = conv(substring(
-        md5(concat(lit("mix:"), col("doc_id").cast("string"))), 1, 8),
-        16, 10).cast("double") / lit(4294967296.0)
-      val gated = stream.join(broadcast(weights), Seq("source"))
-        .withColumn("u", u)
-        .filter(col("u") < col("weight"))
-        .select(col("doc_id"), col("source"), col("u"), col("weight"))
-      Sessionize.runToMemory(s, gated, "text_stream_mix",
-        OutputMode.Append, statePartitions = 8)
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_stream_sample_weighted" -> ((s, dir) => {
-      // the batch-train / stream-apply twin of text_sample_weighted: the
-      // score total trains on the batch corpus (materialized one-row
-      // frame), the stream gates arriving docs statelessly against the
-      // broadcast total — no watermark, no state store, and over a full
-      // replay the kept set equals the batch operator's by construction,
-      // so both share an oracle.
-      import org.apache.spark.sql.streaming.OutputMode
-      Tables.configure(s)
-      def scoreOf(df: DataFrame) = df.select(col("doc_id"),
-        length(col("text")).cast("long").as("score"))
-      val totals = TextAnalysis.sampleWeightedTotals(
-        scoreOf(s.read.parquet(s"$dir/documents.parquet")), "score")
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(raw)
-        .parquet(streamGlob(s"$dir/documents.parquet"))
-      val gated = TextAnalysis.sampleWeightedApply(
-        scoreOf(stream), totals, "score", targetRows = 200)
-      Sessionize.runToMemory(s,
-        gated.select(col("doc_id"), col("score"), col("p"), col("u")),
-        "text_stream_sw", OutputMode.Append, statePartitions = 8)
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_pii_scrub" -> ((s, dir) => {
-      // PII redaction + per-category audit counts. The corpus text is
-      // PII-free synthetic prose, so the query deterministically plants
-      // an email, URL, phone, and IP derived from (doc_id, source) —
-      // both engines build the identical string, then redact it, putting
-      // the regex semantics themselves (not just a no-op pass) under the
-      // hash. Pure codegen'd projection either way.
-      val d = par(s)(t(s, dir, "documents"))
-        .withColumn("pii_text", concat(
-          lit("contact u"), col("doc_id").cast("string"),
-          lit("@"), col("source"), lit(".example.com or http://"),
-          col("source"), lit(".example.com/d/"), col("doc_id").cast("string"),
-          lit(" tel 555-0"),
-          lpad((col("doc_id") % 100).cast("string"), 2, "0"),
-          lit("-"), lpad((col("doc_id") % 10000).cast("string"), 4, "0"),
-          lit(" host 10."), (col("doc_id") % 200).cast("string"),
-          lit(".0."), (col("doc_id") % 250).cast("string"),
-          lit(" "), col("text")))
-      TextAnalysis.piiCounts(col("pii_text"))
-        .foldLeft(d) { case (acc, (n, c)) => acc.withColumn(n, c) }
-        .select(col("doc_id"),
-          TextAnalysis.scrubPii(col("pii_text")).as("scrubbed"),
-          col("n_url"), col("n_email"), col("n_ip"), col("n_phone"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_len_quantiles" -> ((s, dir) => {
-      // corpus length-distribution diagnostic: exact per-source token
-      // quantiles (exact for the oracle; approx_percentile is the same
-      // call with approx = true — the mergeable-sketch path for 100 TB)
-      TextAnalysis.lengthQuantiles(par(s)(t(s, dir, "documents")),
-        Seq(0.25, 0.5, 0.75, 0.9))
-        .select(col("source"),
-          col("qs")(0).as("p25"), col("qs")(1).as("p50"),
-          col("qs")(2).as("p75"), col("qs")(3).as("p90"))
-        .orderBy(col("source"))
-    }),
-
-    "text_chunk" -> ((s, dir) => {
-      // sliding-window context chunking: 32-token chunks every 16 tokens
-      // (50% overlap), short tail chunks kept — a narrow per-doc fan-out,
-      // no shuffle
-      TextAnalysis.chunkByTokens(par(s)(t(s, dir, "documents")),
-        chunkTokens = 32, stride = 16)
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    }),
-
-    "text_top_grams" -> ((s, dir) => {
-      // global heavy hitters: top-20 word-2-grams by occurrence count
-      // (non-distinct — every occurrence counts); partial-agg explode →
-      // count → TakeOrderedAndProject, no global sort
-      par(s)(t(s, dir, "documents"))
-        .select(explode(Dedup.shingles(col("text"), 2)).as("gram"))
-        .groupBy(col("gram")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("gram"))
-        .limit(20)
-    }),
-
-    "text_retrieve" -> ((s, dir) => {
-      // seed-based retrieval: every doc_id%100==0 doc queries the corpus
-      // for its top-10 by exact integer rarity-weighted gram overlap —
-      // the targeted-decontamination / data-selection primitive; the
-      // self-match ranks first by construction and stays (deterministic)
-      val docs = par(s)(t(s, dir, "documents"))
-      TextAnalysis.retrieveTopK(docs,
-        docs.filter(col("doc_id") % 100 === 0)
-          .select(col("doc_id").as("qid"), col("text").as("qtext")),
-        k = 10)
-        .orderBy(col("qid"), col("rank"))
-    }),
-
-    "text_heavy_grams" -> ((s, dir) => {
-      // exact frequent grams behind the CMS gate: the sketch-probe
-      // filter drops light grams map-side (no false negatives — CMS
-      // only overcounts), the exact count over the surviving sliver
-      // clears the gate's false positives; answer == plain groupBy
-      TextAnalysis.heavyGrams(par(s)(t(s, dir, "documents")), n = 2,
-        minCount = 30L)
-        .orderBy(col("gram"))
-    }),
-
-    "text_stream_quality_filter" -> ((s, dir) => {
-      // batch-train / stream-apply: a batch pass trains per-source
-      // rank thresholds (a percentile needs the whole corpus), the
-      // stream gates docs against the broadcast threshold table —
-      // stateless, no watermark, and by the min-kept-value threshold
-      // construction the admitted set is EXACTLY the batch
-      // text_quality_filter's (same oracle contract)
-      import org.apache.spark.sql.streaming.OutputMode
-      Tables.configure(s)
-      val quality = TextAnalysis.qualityColumns(col("text")).toMap
-      def scoreOf(df: DataFrame) = df.select(col("doc_id"), col("source"),
-        quality("alpha_ratio").as("alpha_ratio"))
-      val thresholds = StreamGate.rankThresholds(
-        scoreOf(s.read.parquet(s"$dir/documents.parquet")), "alpha_ratio")
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(raw)
-        .parquet(streamGlob(s"$dir/documents.parquet"))
-      val gated = StreamGate.applyThresholds(
-        scoreOf(stream), thresholds, "alpha_ratio")
-      Sessionize.runToMemory(s, gated.select(col("doc_id"), col("source")),
-        "text_stream_qf", OutputMode.Append, statePartitions = 8)
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_url_domains" -> ((s, dir) => {
-      // per-domain URL stats from raw markup: each doc carries one link
-      // whose host is closed-form in doc_id (site{id % 7}.example.com),
-      // so the engine must extract + parse real URLs while the oracle
-      // counts arithmetically — the blocklist/domain-mixing input
-      val id = col("doc_id").cast("string")
-      val raw = concat(
-        lit("<a href=\"https://site"),
-        pmod(col("doc_id"), lit(7)).cast("string"),
-        lit(".example.com/d/"), id, lit("?r=1\">x</a> <p>"),
-        col("text"), lit("</p>"))
-      par(s)(t(s, dir, "documents"))
-        .select(col("doc_id"),
-          explode(TextAnalysis.extractUrls(raw)).as("url"))
-        .select(col("doc_id"), TextAnalysis.urlDomain(col("url")).as("domain"))
-        .groupBy(col("domain"))
-        .agg(count(lit(1)).as("n_urls"),
-          countDistinct(col("doc_id")).as("n_docs"))
-        .orderBy(col("domain"))
-    }),
-
-    "text_chunk_overlap" -> ((s, dir) => {
-      // fixed-size overlapping token windows — the RAG/pretraining
-      // chunking op (size 32, stride 24 → 8-token overlap): chunk
-      // starts are a per-doc sequence(0, n−1, stride), each chunk is a
-      // SLICE of the one materialized words array — pure narrow
-      // expressions, no shuffle until the final sort; trailing
-      // fragments keep their honest (shorter) token count. Chunks
-      // travel as md5 digests — the dedup/jaccard layers downstream
-      // key on hashes, and the gate compares them engine-to-engine.
-      val size32 = lit(32)
-      val stride = 24
-      par(s)(t(s, dir, "documents"))
-        .filter(TextAnalysis.normalize(col("text")) =!= "")
-        .select(col("doc_id"), TextAnalysis.words(col("text")).as("ws"))
-        .withColumn("st",
-          explode(sequence(lit(0), size(col("ws")) - 1, lit(stride))))
-        .select(col("doc_id"),
-          expr(s"st div $stride").cast("long").as("chunk_idx"),
-          least(size32, size(col("ws")) - col("st")).cast("long")
-            .as("n_tokens"),
-          md5(concat_ws(" ", slice(col("ws"), col("st") + 1, size32)))
-            .as("chunk_md5"))
-        .orderBy(col("doc_id"), col("chunk_idx"))
-    }),
-
-    "text_url_canonical" -> ((s, dir) => {
-      // URL-level dedup, the cheapest tier of crawl curation: four
-      // messy spellings of each resource (default port + uppercase
-      // host, tracking params, fragments, https:443 sibling) are
-      // constructed closed-form per doc, canonicalized by the pure
-      // expression chain, and grouped — the oracle replays the exact
-      // regex surgery in SQL, so every collapse is engine-checked
-      par(s)(t(s, dir, "documents"))
-        .select(col("doc_id"), messyUrl.as("raw"))
-        .select(col("doc_id"), col("raw"),
-          TextAnalysis.canonicalizeUrl(col("raw")).as("url"))
-        .groupBy(col("url"))
-        .agg(count(lit(1)).as("n_urls"),
-          countDistinct(col("raw")).as("n_raw_forms"))
-        .orderBy(col("url"))
-    }),
-
-    "dedup_cascade" -> ((s, dir) => {
-      // the production dedup ARCHITECTURE, tiers in cost order — each
-      // tier runs only on the previous tier's survivors, so the cheap
-      // string key absorbs volume before any shingle forms: tier 1
-      // canonical-URL exact (keep min doc_id per canonical form),
-      // tier 2 content-hash exact (md5 of normalized text), tier 3
-      // MinHash-band near-dup — signatures banded ONCE over the full
-      // corpus (the production shape: signatures are an index, dedup
-      // is a policy over it), a survivor drops iff it band-collides
-      // with a LOWER-id survivor (greedy first-writer-wins, the
-      // StreamDedup rule — no transitive closure, deterministic).
-      // Output is the per-tier funnel report an operator reads.
-      // (DedupSpec drives all three tiers with planted duplicates —
-      // this fixture exercises tier 1 heavily, tiers 2/3 report clean.)
-      Dedup.cascadeReport(
-        par(s)(t(s, dir, "documents"))
-          .withColumn("url", TextAnalysis.canonicalizeUrl(messyUrl)),
-        urlCol = "url")
-        .orderBy(col("tier"))
-    }),
-
-    "text_sample_topk" -> ((s, dir) => {
-      // exact-k global sample: smallest k salted hashes, id tie-break;
-      // plans as TakeOrderedAndProject (map-side top-k, no global sort)
-      TextAnalysis.sampleExactK(par(s)(t(s, dir, "documents")), k = 100)
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_strip_html" -> ((s, dir) => {
-      // raw-web ingest: each doc is wrapped in deterministic markup
-      // (style + script blocks with stray '<' inside, tags, double-escaped
-      // entities, an href URL) and the engine must recover the prose via
-      // stripMarkup and the URLs via extractUrls; the oracle builds the
-      // identical wrap and replicates the RE2-portable chain verbatim
-      val id = col("doc_id").cast("string")
-      val wrapped = concat(
-        lit("<html><head><style type=\"text/css\">p { color: red; }" +
-          "</style></head><body><h1>Doc "), id,
-        lit("</h1><a href=\"https://example.com/d/"), id,
-        lit("?ref=corpus\">link</a><p>Q&amp;A &lt;3 "), col("text"),
-        lit("</p><script>if (1 < 2) { alert(\"x&y\"); }" +
-          "</script></body></html>"))
-      par(s)(t(s, dir, "documents"))
-        .select(col("doc_id"),
-          TextAnalysis.stripMarkup(wrapped).as("clean"),
-          concat_ws(",", TextAnalysis.extractUrls(wrapped)).as("urls_csv"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_oov" -> ((s, dir) => {
-      // per-doc OOV rate vs the corpus's learned top-16 vocabulary —
-      // the fixture corpus has ~31 distinct normalized terms, so 16
-      // actually exercises the LIMIT boundary and produces real OOV
-      // hits (a vocab above the distinct-term count would make the
-      // query degenerate: every n_oov = 0); the (count desc, term)
-      // total order makes the boundary deterministic cross-engine, and
-      // the ratio is one IEEE division of exact integer counts
-      TextAnalysis.oovRate(par(s)(t(s, dir, "documents")), vocabSize = 16)
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_vocab" -> ((s, dir) => {
-      // per-source vocabulary profile, exact path — hash-comparable
-      // cross-engine. The 100-TB default is vocabProfile(approx = true)
-      // (HLL++ sketch, bounded state, map-side mergeable), spec-tested
-      // against the exact counts at its documented error bound because
-      // sketch estimates are implementation-specific.
-      TextAnalysis.vocabProfile(par(s)(t(s, dir, "documents")))
-        .orderBy(col("source"))
-    }),
-
-    "text_tfidf" -> ((s, dir) => {
-      // per-doc top-3 salient terms: tf·(N+1)/(df+1) rarity weighting
-      // (log-free so scores hash-match across engines); the per-doc rank
-      // plans as WindowGroupLimit
-      TextAnalysis.topTfIdf(par(s)(t(s, dir, "documents")), k = 3)
-        .orderBy(col("doc_id"), col("term_rank"))
-    }),
-
-    "text_collocations" -> ((s, dir) => {
-      // corpus-wide top-25 collocations by log-free PMI: exact integer
-      // count products, one IEEE division, TakeOrderedAndProject top-k —
-      // only (term, count) pairs ever shuffle, never text
-      TextAnalysis.collocations(par(s)(t(s, dir, "documents")),
-        k = 25, minCount = 3)
-    }),
-
-    "text_repetition" -> ((s, dir) => {
-      // Gopher-style repetition diagnostics: duplicate-word and
-      // duplicate-2-gram fractions are narrow array expressions (no
-      // shuffle); the top-word fraction needs the word mode, a two-level
-      // partial-aggregated explode→count→max keyed on doc_id. Both
-      // divisions use |words| so the three fractions share a denominator.
-      val docs = par(s)(t(s, dir, "documents"))
-      val base = docs.select(col("doc_id"),
-        TextAnalysis.dupWordFrac(col("text")).as("dup_word_frac"),
-        TextAnalysis.dupNgramFrac(col("text"), 2).as("dup_2gram_frac"),
-        size(TextAnalysis.words(col("text"))).cast("long").as("n_words"))
-      val topWord = docs
-        .select(col("doc_id"),
-          explode(TextAnalysis.words(col("text"))).as("w"))
-        .groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("c"))
-        .groupBy(col("doc_id")).agg(max(col("c")).as("top_c"))
-      base.join(topWord, Seq("doc_id"))
-        .select(col("doc_id"), col("dup_word_frac"), col("dup_2gram_frac"),
-          (col("top_c").cast("double") / col("n_words").cast("double"))
-            .as("top_word_frac"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_online" -> ((s, dir) => {
-      // first-writer-wins fuzzy dedup: survivors are docs that are the
-      // min id in EVERY of their MinHash band buckets — the one-pass
-      // greedy the streaming twin runs continuously
-      Dedup.onlineDedup(par(s)(t(s, dir, "documents")))
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "dedup_online_stream" -> ((s, dir) => {
-      // the streaming twin: per-bucket first-writer-wins state over the
-      // band stream, emitting the LOSER feed (append mode, no watermark —
-      // a doc's verdict completes within its own micro-batch). Replayed
-      // as one batch this reduces to min-id-wins, so the distinct loser
-      // set shares the batch operator's oracle complement.
-      import org.apache.spark.sql.streaming.OutputMode
-      Tables.configure(s)
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(raw)
-        .parquet(streamGlob(s"$dir/documents.parquet"))
-      val losses = StreamDedup.onlineDedupStream(Dedup.bandKeys(stream))
-      Sessionize.runToMemory(s, losses.toDF(), "dedup_online_stream",
-        OutputMode.Append, statePartitions = 8)
-        .select(col("doc_id")).distinct()
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_decontaminate_fuzzy" -> ((s, dir) => {
-      // fuzzy decontamination: drop docs sharing ANY MinHash band bucket
-      // with the benchmark set (doc_id % 17 == 0 plays the eval suite) —
-      // catches near-dup leakage the exact-gram text_decontaminate
-      // misses; every benchmark doc trivially collides with itself, so
-      // the % 17 docs all drop along with their near-dups
-      val docs = par(s)(t(s, dir, "documents"))
-      val bench = docs.filter(col("doc_id") % 17 === 0)
-        .select(col("doc_id"), col("text"))
-      Dedup.decontaminateFuzzy(docs, bench)
-        .select(col("doc_id"), col("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_leak_census" -> ((s, dir) => {
-      // the eval-owner's face of decontamination: per BENCH item (every
-      // 50th doc, the suite's decontamination fixture), how many train
-      // docs leak it, across how many distinct grams, with what total
-      // mass — zero-leak items reported at 0, a census is complete.
-      // Bench grams broadcast with their item ids; only hit triples
-      // reach the aggregate.
-      val docs = par(s)(t(s, dir, "documents"))
-      Dedup.leakCensus(
-        docs.filter(col("doc_id") % 50 =!= 0),
-        docs.filter(col("doc_id") % 50 === 0), n = 3)
-        .orderBy(col("bench_id"))
-    }),
-
-    "text_decontaminate" -> ((s, dir) => {
-      // benchmark decontamination: per train doc, count distinct 3-gram
-      // shingles shared with the held-out benchmark set (doc_id % 50 ==
-      // 0 here; a real eval suite at scale). The benchmark gram set is
-      // small by construction — BROADCAST it so the train-side explode
-      // never shuffles; contaminated docs are then dropped (or flagged,
-      // as here) before training.
-      val docs = par(s)(t(s, dir, "documents"))
-      val benchGrams = docs.filter(col("doc_id") % 50 === 0)
-        .select(explode(array_distinct(
-          Dedup.shingles(col("text"), 3))).as("gram"))
-        .distinct()
-        .withColumn("__hit", lit(1))
-      val trainGrams = docs.filter(col("doc_id") % 50 =!= 0)
-        .select(col("doc_id"), explode(array_distinct(
-          Dedup.shingles(col("text"), 3))).as("gram"))
-      trainGrams.join(broadcast(benchGrams), Seq("gram"), "left")
-        .groupBy(col("doc_id"))
-        .agg(sum(when(col("__hit").isNotNull, 1L).otherwise(0L))
-          .as("n_shared"))
-        .withColumn("contaminated", col("n_shared") > 0)
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_decontaminate_spans" -> ((s, dir) => {
-      // span-LEVEL decontamination: not just WHICH docs leak benchmark
-      // text but WHERE — each hit 3-gram covers words [pos, pos+3), and
-      // overlapping/touching hit windows merge into maximal redaction
-      // spans via the SAME interval-union operator the event coverage
-      // uses (Intervals.mergeIslands — one operator, two domains; see
-      // Dedup.decontaminateSpans). A production pipeline cuts these
-      // spans and keeps the rest of the document; doc-level dropping
-      // wastes the clean 99% of a 20k-token page that quotes one
-      // benchmark item. Only (doc_id, pos) pairs of HIT grams shuffle —
-      // the benchmark set broadcasts as in text_decontaminate.
-      val docs = par(s)(t(s, dir, "documents"))
-      Dedup.decontaminateSpans(
-        docs.filter(col("doc_id") % 50 =!= 0),
-        docs.filter(col("doc_id") % 50 === 0))
-        .orderBy(col("doc_id"), col("island"))
-    }),
-
-    "text_split_decontaminated" -> ((s, dir) => {
-      // contamination-aware train/test split: a deterministic md5 gate
-      // proposes ~16% test, then any proposed test doc sharing even one
-      // 8-gram with any train doc MOVES to train — the held-out set has
-      // zero 8-gram overlap by construction (the GPT-3 split
-      // discipline, applied at split time). Long grams so only genuine
-      // near-dup leakage evicts, not shared idiom; the fixture's
-      // planted near-dups make the eviction set nontrivial.
-      val docs = par(s)(t(s, dir, "documents"))
-      Dedup.splitDecontaminated(docs)
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_selfdedup_spans" -> ((s, dir) => {
-      // exact-substring SELF-dedup (Lee et al. EXACTSUBSTR): every word
-      // 3-gram repeated anywhere in the corpus is redacted at all but
-      // one survivor occurrence (global min (doc,pos)); windows merge
-      // into maximal spans per doc via the same interval-union operator
-      // as decontamination. The suffix-array global sort of the paper
-      // becomes one partially-aggregated shuffle over the DISTINCT gram
-      // vocabulary plus a join that only duplicated occurrences survive.
-      val docs = par(s)(t(s, dir, "documents"))
-      Dedup.selfDedupSpans(docs)
-        .orderBy(col("doc_id"), col("island"))
-    }),
-
-    "text_stream_decontaminate" -> ((s, dir) => {
-      // decontamination at INGEST: the benchmark gram set is batch-built
-      // (eval suites change rarely) and broadcast; the train stream's
-      // gram explode left-joins it stream-static — stateless per gram —
-      // and the per-doc shared count is a Complete-mode aggregation
-      // (state: one count per doc in flight). Zero-hit docs keep their
-      // row via the left join, matching the batch oracle exactly.
-      import org.apache.spark.sql.streaming.OutputMode
-      val docs = t(s, dir, "documents")
-      val benchGrams = docs.filter(col("doc_id") % 50 === 0)
-        .select(explode(array_distinct(
-          Dedup.shingles(col("text"), 3))).as("gram"))
-        .distinct()
-        .withColumn("__hit", lit(1))
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(raw)
-        .parquet(streamGlob(s"$dir/documents.parquet"))
-      val trainGrams = stream.filter(col("doc_id") % 50 =!= 0)
-        .select(col("doc_id"), explode(array_distinct(
-          Dedup.shingles(col("text"), 3))).as("gram"))
-      val counts = trainGrams
-        .join(broadcast(benchGrams), Seq("gram"), "left")
-        .groupBy(col("doc_id"))
-        .agg(sum(when(col("__hit").isNotNull, 1L).otherwise(0L))
-          .as("n_shared"))
-        .withColumn("contaminated", col("n_shared") > 0)
-      Sessionize.runToMemory(s, counts, "text_stream_decon_sink",
-        OutputMode.Complete, statePartitions = 8)
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_decontaminate_bloom" -> ((s, dir) => {
-      // text_decontaminate's exact answer through the bloom-prefilter
-      // scale shape: the sketch (native BloomFilterAggregate, ~10
-      // bits/gram) drops definitely-clean grams before any join, and
-      // the exact semi-join — now free to shuffle rather than
-      // broadcast — clears the false positives. Same output as the
-      // broadcast form, so it shares that oracle verbatim.
-      val docs = par(s)(t(s, dir, "documents"))
-      val benchGrams = docs.filter(col("doc_id") % 50 === 0)
-        .select(explode(array_distinct(
-          Dedup.shingles(col("text"), 3))).as("gram"))
-      val trainGrams = docs.filter(col("doc_id") % 50 =!= 0)
-        .select(col("doc_id"), explode(array_distinct(
-          Dedup.shingles(col("text"), 3))).as("gram"))
-      Dedup.decontaminateBloomExact(trainGrams, benchGrams)
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_sample_stratified" -> ((s, dir) => {
-      // exact per-source quota by salted-hash order; WindowGroupLimit
-      // truncates each map task's groups to k before the shuffle
-      TextAnalysis.stratifiedSample(par(s)(t(s, dir, "documents")), k = 5)
-        .select(col("doc_id"), col("source"), col("rn"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "sim_topk_cosine" -> ((s, dir) => {
-      val q = t(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select(col("embedding")).first().getSeq[Float](0)
-      Similarity.bruteForceTopK(t(s, dir, "embeddings"), q, k = 10)
-    }),
-
-    "sim_topk_int8" -> ((s, dir) => {
-      // quantize-then-search: top-k cosine over the int8-quantized corpus
-      // (vec_dot_i8 exact integer dots; the only IEEE ops are one sqrt +
-      // one division per row, so the scores hash-match the oracle's
-      // replication of the identical quantization + integer arithmetic)
-      val q = t(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select(col("embedding")).first().getSeq[Float](0)
-      Similarity.int8TopK(t(s, dir, "embeddings"), q, k = 10)
-    }),
-
-    "sim_ann_bucket" -> ((s, dir) => {
-      val q = t(s, dir, "embeddings").filter(col("vec_id") === 0)
-        .select(col("embedding")).first().getSeq[Float](0)
-      Similarity.annTopK(t(s, dir, "embeddings"), q, k = 5)
-    }),
-
-    "sim_recall_ann" -> ((s, dir) => {
-      // the index-quality eval: recall@5 of hamming<=1 multi-probe vs
-      // exact brute force over a 10-query eval set — one broadcast
-      // scored pass shared by both rankings, exact integer hit counts,
-      // one IEEE division per query
-      val emb = t(s, dir, "embeddings")
-      Similarity.annRecallAtK(emb,
-        emb.filter(col("vec_id") % 50 === 0)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec")),
-        k = 5)
-        .orderBy(col("qid"))
-    }),
-
-    "emb_kmeans_step" -> ((s, dir) => {
-      // one Lloyd's iteration over the IVF codebook: narrow assignment
-      // (centroid literals), one map-side-combinable (cell, dim) shuffle,
-      // fixed-point sums so the means are order-independent
-      val emb = t(s, dir, "embeddings")
-      val cents = Similarity.ivfCentroids(emb, k = 8)
-      Similarity.kmeansStep(emb, cents)
-        .orderBy(col("cell"), col("dim"))
-    }),
-
-    "emb_quantize_int8" -> ((s, dir) => {
-      // symmetric absmax int8 quantization, serialized as csv for the
-      // hash compare (array columns don't cross the oracle boundary)
-      Similarity.quantizeInt8(t(s, dir, "embeddings"))
-        .select(col("vec_id"), col("q_scale"),
-          concat_ws(",", col("q")).as("q_csv"))
-        .orderBy(col("vec_id"))
-    }),
-
-    "emb_drift" -> ((s, dir) => {
-      // embedding drift monitor: per-(label, dim) mean gap between the
-      // standing corpus (3/4 of vectors) and a fresh ingest slice (the
-      // rest) — fixed-point sums, one IEEE division per mean, so every
-      // gap is bit-exact against the oracle
-      val e = t(s, dir, "embeddings")
-      Similarity.centroidDrift(
-        e.filter(col("vec_id") % 4 =!= 0),
-        e.filter(col("vec_id") % 4 === 0))
-        .orderBy(col("label"), col("dim"))
-    }),
-
-    "emb_pq_codes" -> ((s, dir) => {
-      // product quantization end to end: 4 independent 4-centroid
-      // codebooks over 16-dim slices (2 Lloyd's rounds each, the
-      // deterministic fixed-point replay), then every vector encoded as
-      // its 4 sub-codes — 64 floats → 4 small ints. Narrow assignment:
-      // codebooks are plan literals, the corpus never shuffles.
-      val e = t(s, dir, "embeddings")
-      val cbs = Similarity.pqTrain(e, d = 64, m = 4, k = 4, maxIters = 2)
-      e.select(col("vec_id"),
-          posexplode(Similarity.pqAssign(col("embedding"), cbs))
-            .as(Seq("subspace", "code")))
-        .select(col("vec_id"), col("subspace").cast("long").as("subspace"),
-          col("code"))
-        .orderBy(col("vec_id"), col("subspace"))
-    }),
-
-    "emb_kmeans_train" -> ((s, dir) => {
-      // the full Lloyd's training loop (3 fixed rounds; tol 0 so an
-      // exact fixed point short-circuits identically on both engines):
-      // per round one distributed step job, k×d means collected as the
-      // next round's plan literals. The oracle replays the identical 3
-      // rounds as unrolled CTEs — fixed-point sums make every round's
-      // means order-independent, so the trained codebook is bit-stable.
-      import s.implicits._
-      val emb = t(s, dir, "embeddings")
-      val trained = Similarity.kmeansTrain(emb, k = 8, maxIters = 3)
-      trained.zipWithIndex.flatMap { case (c, cid) =>
-        c.zipWithIndex.map { case (v, d) =>
-          (cid.toLong, d.toLong, v.toDouble)
-        }
-      }.toDF("cell", "dim", "val")
-        .orderBy(col("cell"), col("dim"))
-    }),
-
-    "dedup_semantic_trained" -> ((s, dir) => {
-      // SemDeDup over the TRAINED coarse quantizer: the codebook from
-      // two Lloyd's rounds replaces the id-order seed, tightening cells
-      // around true clusters (better recall per unit of within-cell
-      // quadratic work); everything downstream of the codebook is the
-      // identical semanticDedup plan
-      val emb = t(s, dir, "embeddings")
-      val cb = Similarity.kmeansTrain(emb, k = 8, maxIters = 2)
-      Similarity.semanticDedup(emb, cb, tau = 0.4)
-        .select(col("vec_id"), col("cell").cast("long").as("cell"))
-        .orderBy(col("vec_id"))
-    }),
-
-    "sim_ivf_topk_trained" -> ((s, dir) => {
-      // IVF probe against the trained codebook — same ivfTopK plan, but
-      // the codebook takes the full production path: trained once,
-      // persisted to parquet, RELOADED from disk for the probe (the
-      // train-weekly / encode-daily split). FloatType round-trips
-      // bit-exactly, so the result is identical to probing the
-      // in-memory codebook — which is exactly what the shared oracle
-      // checks.
-      val emb = t(s, dir, "embeddings")
-      val cb = Similarity.kmeansTrain(emb, k = 8, maxIters = 2)
-      val artifact = s"$artifactRoot/codebook_ivf"
-      Similarity.saveCodebook(s, cb, artifact)
-      val loaded = Similarity.loadCodebook(s, artifact)
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).first().getSeq[Float](0)
-      Similarity.ivfTopK(emb, loaded, q, k = 10, nprobe = 3)
-    }),
-
-    "sim_knn_join" -> ((s, dir) => {
-      // batch ANN: top-3 cosine neighbors for EVERY vector among its
-      // hamming<=1 sign-bucket candidates; per-vector top-k plans as
-      // WindowGroupLimit (map-side truncation to k before the shuffle)
-      Similarity.knnSelfJoin(t(s, dir, "embeddings"), k = 3)
-        .orderBy(col("vec_id"), col("nbr_rank"))
-    }),
-
-    "sim_ivf_topk" -> ((s, dir) => {
-      // IVF scale path: coarse-quantizer cell assignment (narrow), probe
-      // only the nprobe cells nearest the query, exact cosine within them
-      val emb = t(s, dir, "embeddings")
-      val cents = Similarity.ivfCentroids(emb, k = 8)
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).first().getSeq[Float](0)
-      Similarity.ivfTopK(emb, cents, q, k = 10, nprobe = 3)
-    }),
-
-    "sim_ivf_topk_partitioned" -> ((s, dir) => {
-      // the IVF scale layout made real: corpus written cell-partitioned
-      // (one directory per coarse cell — the index build), probe reads
-      // with DIRECTORY pruning so only nprobe/k of the bytes are
-      // touched. Same centroids and probe as sim_ivf_topk ⇒ same
-      // oracle, bit for bit; ScaleSpec pins the numFiles skip.
-      val emb = t(s, dir, "embeddings")
-      val cents = Similarity.ivfCentroids(emb, k = 8)
-      val store = s"$artifactRoot/ivf_store"
-      Similarity.writeIvfPartitioned(emb, cents, store)
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).first().getSeq[Float](0)
-      Similarity.ivfTopKPartitioned(s, store, cents, q, k = 10, nprobe = 3)
-    }),
-
-    "sim_pq_adc" -> ((s, dir) => {
-      // the PQ search path end to end: train 4 sub-codebooks, encode
-      // every vector to 4 codes, then answer a top-10 query from CODES
-      // alone — m LUT lookups per row summed in fixed order, no per-row
-      // vector math (the billion-scale ADC scan)
-      val emb = t(s, dir, "embeddings")
-      val cbs = Similarity.pqTrain(emb, d = 64, m = 4, k = 4, maxIters = 2)
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).first().getSeq[Float](0)
-      val codes = emb.select(col("vec_id"),
-        Similarity.pqAssign(col("embedding"), cbs).as("codes"))
-      Similarity.pqAdcTopK(codes, cbs, q, k = 10)
-    }),
-
-    "sim_pq_adc_trained" -> ((s, dir) => {
-      // sim_pq_adc through the PERSISTED-artifact path: the 4 sub-
-      // codebooks round-trip parquet (saveCodebooks/loadCodebooks multi-
-      // book form) before encoding and the ADC scan — the train-weekly /
-      // encode-daily split for PQ. Bit-exact round-trip ⇒ the same
-      // oracle as the in-memory twin.
-      val emb = t(s, dir, "embeddings")
-      val cbs = Similarity.pqTrain(emb, d = 64, m = 4, k = 4, maxIters = 2)
-      val artifact = s"$artifactRoot/codebook_pq"
-      Similarity.saveCodebooks(s, cbs, artifact)
-      val loaded = Similarity.loadCodebooks(s, artifact)
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).first().getSeq[Float](0)
-      val codes = emb.select(col("vec_id"),
-        Similarity.pqAssign(col("embedding"), loaded).as("codes"))
-      Similarity.pqAdcTopK(codes, loaded, q, k = 10)
-    }),
-
-    "sim_ivfpq_topk" -> ((s, dir) => {
-      // the billion-scale composite: the store holds (vec_id, codes)
-      // ONLY, partitioned by coarse cell — a probe directory-skips to
-      // nprobe/k of the files AND reads no vector bytes inside them
-      // (both pinned in ScaleSpec). Seed coarse codebook (= sim_ivf's),
-      // trained PQ codebooks (= sim_pq_adc's), so the oracle is the
-      // composition of the two green replays: ADC ranking restricted to
-      // probed cells.
-      val emb = t(s, dir, "embeddings")
-      val cents = Similarity.ivfCentroids(emb, k = 8)
-      val cbs = Similarity.pqTrain(emb, d = 64, m = 4, k = 4, maxIters = 2)
-      val store = s"$artifactRoot/ivfpq_store"
-      Similarity.writeIvfPqPartitioned(emb, cents, cbs, store)
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).first().getSeq[Float](0)
-      Similarity.ivfPqTopK(s, store, cents, cbs, q, k = 10, nprobe = 3)
-    }),
-
-    "sim_ivfpq_residual_topk" -> ((s, dir) => {
-      // the higher-recall residual sibling (FAISS by_residual=true): PQ
-      // codebooks train on CELL RESIDUALS, the store quantizes each
-      // vector's residual, and the probe builds per-cell LUTs from the
-      // query's residual against each probed centroid — nprobe pruned
-      // codes-only scans unioned into one global top-k. The oracle
-      // replays residual computation (double-subtract rounded once to
-      // REAL — the pinned rounding point), all four residual training
-      // chains, and the per-cell LUT join.
-      val emb = t(s, dir, "embeddings")
-      val cents = Similarity.ivfCentroids(emb, k = 8)
-      val cbs = Similarity.pqTrainResidual(emb, cents,
-        d = 64, m = 4, k = 4, maxIters = 2)
-      val store = s"$artifactRoot/ivfpq_res_store"
-      Similarity.writeIvfPqResidualPartitioned(emb, cents, cbs, store)
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).first().getSeq[Float](0)
-      Similarity.ivfPqResidualTopK(s, store, cents, cbs, q,
-        k = 10, nprobe = 3)
-    }),
-
-    "sim_ivfpq_filtered" -> ((s, dir) => {
-      // FILTERED vector search — nearest neighbors among rows passing a
-      // metadata predicate (here vec_id % 3 = 0, standing in for a
-      // per-source/tenant slice): PRE-filter semantics, so the ranking
-      // runs over probed-cells ∩ allowed and returns a full k whenever
-      // the intersection has k rows — a post-filter would silently
-      // under-fill. Same store, codebooks, and ADC arithmetic as the
-      // green sim_ivfpq_topk row; the oracle is that query's replay
-      // with the predicate applied before the LIMIT.
-      val emb = t(s, dir, "embeddings")
-      val cents = Similarity.ivfCentroids(emb, k = 8)
-      val cbs = Similarity.pqTrain(emb, d = 64, m = 4, k = 4, maxIters = 2)
-      val store = s"$artifactRoot/ivfpq_filtered_store"
-      Similarity.writeIvfPqPartitioned(emb, cents, cbs, store)
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).first().getSeq[Float](0)
-      Similarity.ivfPqTopKFiltered(s, store, cents, cbs, q,
-        allowed = emb.filter(col("vec_id") % 3 === 0).select(col("vec_id")),
-        k = 10, nprobe = 3)
-    }),
-
-    "sim_ivfpq_incremental" -> ((s, dir) => {
-      // INCREMENTAL index maintenance — the daily-crawl shape: the
-      // coarse codebook and PQ codebooks train once on the initial
-      // batch (even vec_ids) and FREEZE; the initial batch's codes
-      // commit as snapshot v0 of a cell-partitioned table, and the new
-      // batch (odd vec_ids) encodes under the frozen codebooks and
-      // APPENDS as v1 — v0's files carry into v1 as manifest pointers,
-      // so the daily cost is O(new batch), never a rebuild. The probe
-      // composes the whole stack: probe cells from the frozen coarse
-      // codebook, one metadata-pruned scanPartitionAsOf per probed
-      // cell AT v1, ADC over the union. The oracle replays frozen
-      // training on the even slice and ranks the full corpus — append
-      // vs rebuild must be invisible to the answer.
-      val emb = t(s, dir, "embeddings")
-      val a = emb.filter(col("vec_id") % 2 === 0)
-      val b = emb.filter(col("vec_id") % 2 =!= 0)
-      val cents = Similarity.ivfCentroids(a, k = 8)
-      val cbs = Similarity.pqTrain(a, d = 64, m = 4, k = 4, maxIters = 2)
-      val tbl = s"$artifactRoot/ivfpq_snap_store"
-      Snapshots.init(s, tbl)
-      def codes(df: DataFrame) = df.select(col("vec_id"),
-        Similarity.pqAssign(col("embedding"), cbs).as("codes"),
-        Similarity.ivfAssign(col("embedding"), cents).as("ivf_cell"))
-      Snapshots.commitPartitioned(s, codes(a), tbl, "ivf_cell",
-        append = false)
-      val v1 = Snapshots.commitPartitioned(s, codes(b), tbl, "ivf_cell",
-        append = true)
-      val q = emb.filter(col("vec_id") === 0)
-        .select(col("embedding")).first().getSeq[Float](0)
-      val scan = Similarity.probeCells(cents, q, nprobe = 3)
-        .map(c => Snapshots.scanPartitionAsOf(s, tbl, v1, "ivf_cell", c))
-        .reduce(_ unionByName _)
-      Similarity.pqAdcTopK(scan, cbs, q, k = 10)
-    }),
-
-    "sim_recall_ivfpq" -> ((s, dir) => {
-      // recall@10 of the index a user actually deploys: BOTH IVF-PQ
-      // variants (raw codes and FAISS-style residual codes) evaluated
-      // against exact L2 ground truth over a 5-query eval set — same
-      // seed coarse codebook, same nprobe=3 probe, same per-store ADC
-      // rankings as the green sim_ivfpq_topk / sim_ivfpq_residual_topk
-      // rows, so this measures the INDEX, not a new ranking. Both arms
-      // run through the BATCHED probe (ivfPqTopKBatch — the query
-      // frame joins its probed cells in one job; SimilaritySpec pins
-      // bit-equality with the per-query loop), so the eval set never
-      // collects to the driver and the harness is the serving shape a
-      // 10k-query suite needs. The residual variant's recall edge
-      // (tighter residual clusters under the same code budget) is
-      // asserted in SimilaritySpec; here both recalls sit under the
-      // oracle, denominators = the brute top-k's actual size per query.
-      import s.implicits._
-      val emb = t(s, dir, "embeddings")
-      val cents = Similarity.ivfCentroids(emb, k = 8)
-      val cbsRaw = Similarity.pqTrain(emb, d = 64, m = 4, k = 4, maxIters = 2)
-      val cbsRes = Similarity.pqTrainResidual(emb, cents,
-        d = 64, m = 4, k = 4, maxIters = 2)
-      val storeRaw = s"$artifactRoot/ivfpq_recall_raw"
-      val storeRes = s"$artifactRoot/ivfpq_recall_res"
-      Similarity.writeIvfPqPartitioned(emb, cents, cbsRaw, storeRaw)
-      Similarity.writeIvfPqResidualPartitioned(emb, cents, cbsRes, storeRes)
-      val k = 10
-      val qdf = graft.functions.Materialize(
-        emb.filter(col("vec_id") % 100 === 0)
-          .select(col("vec_id").as("qid"), col("embedding").as("qvec")))
-      val candRaw = Similarity.ivfPqTopKBatch(s, storeRaw, cents, cbsRaw,
-        qdf, k = k, nprobe = 3)
-        .select(col("qid"), col("vec_id"))
-      val candRes = Similarity.ivfPqTopKBatch(s, storeRes, cents, cbsRes,
-        qdf, k = k, nprobe = 3, byResidual = true)
-        .select(col("qid"), col("vec_id"))
-      // exact ground truth: ONE broadcast scored pass, L2 ascending,
-      // shared by both arms' recall joins
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("d").asc, col("vec_id"))
-      val brute = graft.functions.Materialize(
-        emb.crossJoin(broadcast(qdf))
-          .select(col("qid"), col("vec_id"),
-            Similarity.l2sq(col("embedding"), col("qvec")).as("d"))
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") <= k)
-          .select(col("qid"), col("vec_id")))
-      val bn = brute.groupBy(col("qid")).agg(count(lit(1)).as("n_brute"))
-      def hits(cand: DataFrame, as: String) =
-        cand.join(brute, Seq("qid", "vec_id"))
-          .groupBy(col("qid")).agg(count(lit(1)).as(as))
-      qdf.select(col("qid"))
-        .join(bn, Seq("qid"))
-        .join(hits(candRaw, "n_hit_raw"), Seq("qid"), "left")
-        .join(hits(candRes, "n_hit_res"), Seq("qid"), "left")
-        .select(col("qid"), col("n_brute"),
-          coalesce(col("n_hit_raw"), lit(0L)).as("n_hit_raw"),
-          coalesce(col("n_hit_res"), lit(0L)).as("n_hit_res"),
-          (coalesce(col("n_hit_raw"), lit(0L)).cast("double") /
-            col("n_brute").cast("double")).as("recall_raw"),
-          (coalesce(col("n_hit_res"), lit(0L)).cast("double") /
-            col("n_brute").cast("double")).as("recall_res"))
-        .orderBy(col("qid"))
-    }),
-
-    // ---- Text analysis over documents --------------------------------
-
-    "text_langid" -> ((s, dir) => {
-      par(s)(t(s, dir, "documents"))
-        .select(col("doc_id"), TextAnalysis.langId(col("text")).as("lang_pred"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_quality" -> ((s, dir) => {
-      TextAnalysis.withQuality(par(s)(t(s, dir, "documents")))
-        .select(col("doc_id"), col("n_chars_q"), col("n_words"),
-          col("avg_word_len"), col("punct_ratio"), col("alpha_ratio"),
-          col("stopword_ratio"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_tokens" -> ((s, dir) => {
-      par(s)(t(s, dir, "documents"))
-        .select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-          TextAnalysis.subwordCount(col("text")).as("n_subwords"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_sample_det" -> ((s, dir) => {
-      // deterministic content-hash sampling: the reproducible train/eval
-      // split primitive (stable under reruns, joins, and repartitioning —
-      // unlike rand()-based sampling)
-      par(s)(t(s, dir, "documents"))
-        .filter(substring(md5(concat(lit("split:"), col("doc_id"))), 1, 2) < "29")
-        .select(col("doc_id"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_corpus_stats" -> ((s, dir) => {
-      // corpus profile: doc/token totals and length quantiles — the
-      // summary a pipeline checks before/after each filter stage
-      par(s)(t(s, dir, "documents"))
-        .select(TextAnalysis.tokenCount(col("text")).as("n_tok"),
-          length(col("text")).cast("long").as("n_chars"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_tok")).as("total_tokens"),
-          sum(col("n_chars")).as("total_chars"),
-          min(col("n_tok")).as("min_tokens"),
-          max(col("n_tok")).as("max_tokens"),
-          expr("percentile(n_tok, array(0.5D, 0.9D))").as("p50_90"))
-        .select(col("n_docs"), col("total_tokens"), col("total_chars"),
-          col("min_tokens"), col("max_tokens"),
-          col("p50_90").getItem(0).as("p50_tokens"),
-          col("p50_90").getItem(1).as("p90_tokens"))
-    }),
-
-    "text_corpus_stats_approx" -> ((s, dir) => {
-      // the 100-TB default: approx_percentile's GK sketch is a bounded-size
-      // map-side-mergeable aggregate (one pass, no per-group sort), where
-      // exact percentile materializes and sorts every group's values. At
-      // the accuracy used here the rank error is < 1 for any corpus below
-      // ~10^6 docs, so the oracle can still compare discrete quantiles
-      // exactly; at real scale callers trade accuracy for memory.
-      par(s)(t(s, dir, "documents"))
-        .select(TextAnalysis.tokenCount(col("text")).as("n_tok"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          expr("approx_percentile(n_tok, array(0.5D, 0.9D), 1000000)")
-            .as("p50_90"))
-        .select(col("n_docs"),
-          col("p50_90").getItem(0).as("p50_tokens"),
-          col("p50_90").getItem(1).as("p90_tokens"))
-    }),
-
-    "text_fingerprint" -> ((s, dir) => {
-      par(s)(t(s, dir, "documents"))
-        .select(col("doc_id"),
-          TextAnalysis.fingerprint(col("text")).as("fp"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_bpe_merges" -> ((s, dir) => {
-      // BPE tokenizer training over the corpus: 8 merge rounds on the
-      // distinct-word frequency table (the corpus aggregates ONCE; every
-      // round after that is vocabulary-sized). The oracle replays the
-      // full loop — pair counts, argmax with the lexicographic
-      // tie-break, and the left-to-right non-overlapping fuse — as 8
-      // unrolled CTE rounds, so the learned merge table must match
-      // round-for-round, count-for-count.
-      import s.implicits._
-      val (ms, _) = TextAnalysis.bpeTrain(
-        par(s)(t(s, dir, "documents")), merges = 8)
-      ms.map(m => (m.round.toLong, m.lhs, m.rhs, m.lhs + m.rhs, m.count))
-        .toDF("round", "lhs", "rhs", "merged", "pair_count")
-        .orderBy(col("round"))
-    }),
-
-    "text_bpe_encode" -> ((s, dir) => {
-      // the trained tokenizer APPLIED: after the same 8 merges, the
-      // final word table's symbol string IS the encoding of every
-      // distinct word — corpus encoding is then a broadcast join on
-      // word. The oracle re-derives the merges and re-applies them, so
-      // both the training replay and the apply order are under test.
-      val (_, encoded) = TextAnalysis.bpeTrain(
-        par(s)(t(s, dir, "documents")), merges = 8)
-      encoded.select(col("word"), col("cnt"),
-        size(split(col("sym"), "\\|")).cast("long").as("n_tokens"),
-        col("sym").as("tokens"))
-        .orderBy(col("word"))
-    }),
-
-    "text_shuffle_det" -> ((s, dir) => {
-      // deterministic global shuffle into training shards: every doc
-      // gets a stable salted-hash position (rerun-stable, join/
-      // repartition-proof — unlike rand()), the hash's top 32 bits pick
-      // one of 16 shards, and ORDER IS SHARD-LOCAL: 16 independent
-      // windows instead of one global sort, so at 100 TB each shard
-      // ranks and writes in parallel and no stage ever totally orders
-      // the corpus. Reading shards round-robin replays the same
-      // training order on every run — the reproducible-data-order
-      // contract an LLM training job needs.
-      val h = md5(concat(lit("shuf:"), col("doc_id").cast("string")))
-      val w = Window.partitionBy(col("shard"))
-        .orderBy(col("h"), col("doc_id"))
-      par(s)(t(s, dir, "documents"))
-        .select(col("doc_id"), h.as("h"))
-        .withColumn("shard",
-          conv(substring(col("h"), 1, 8), 16, 10).cast("long") % 16)
-        .withColumn("pos", row_number().over(w).cast("long"))
-        .select(col("doc_id"), col("shard"), col("pos"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_bpe_doc_tokens" -> ((s, dir) => {
-      // the tokenizer budget loop CLOSED at corpus level: per-doc token
-      // counts under the TRAINED tokenizer (not whitespace) — the number
-      // that actually prices a document into a training mix. The
-      // encoded vocabulary is tiny, so it BROADCASTS and the corpus
-      // aggregates in one shuffle on doc_id; at 100 TB the per-doc cost
-      // is one explode + one hash-join probe per word.
-      val (_, encoded) = TextAnalysis.bpeTrain(
-        par(s)(t(s, dir, "documents")), merges = 8)
-      val wordTok = encoded.select(col("word"),
-        size(split(col("sym"), "\\|")).cast("long").as("w_tokens"))
-      par(s)(t(s, dir, "documents"))
-        .filter(TextAnalysis.normalize(col("text")) =!= "")
-        .select(col("doc_id"),
-          explode(TextAnalysis.words(col("text"))).as("word"))
-        .filter(col("word") =!= "")
-        .join(broadcast(wordTok), Seq("word"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_words"), sum(col("w_tokens")).as("n_bpe_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_cdc_chunks" -> ((s, dir) => {
-      // content-defined chunking: segment boundaries chosen by word
-      // CONTENT (md5 gate, expected length 8 words), not position — the
-      // rsync/LBFS property that makes segment-level dedup survive
-      // insertions: a fixed-width segmentation shifts every segment
-      // after an edit (zero shared keys), CDC re-synchronizes at the
-      // next content cut and the tail dedups again (DedupSpec
-      // demonstrates both behaviors side by side). One posexplode, one
-      // per-doc window cumsum, one grouped reassembly — only
-      // (doc, pos, word) rows shuffle.
-      Dedup.cdcSegments(par(s)(t(s, dir, "documents")), modulus = 8)
-        .orderBy(col("doc_id"), col("seg"))
-    }),
-
-    "text_kmv_vocab" -> ((s, dir) => {
-      // mergeable distinct-cardinality sketch: per-source vocabulary
-      // size via k-minimum-values (k=64) — the COUNT DISTINCT a 100-TB
-      // rollup cannot afford exactly, as a deterministic md5 bottom-k
-      // whose estimate an independent engine replays bit-for-bit
-      // (unlike any HLL register layout). The aggregation state is a
-      // bounded ≤64-entry array combined map-side; elements never
-      // shuffle. The exact count rides along so the estimate's error
-      // is visible in the gated row itself.
-      val words = par(s)(t(s, dir, "documents"))
-        .filter(TextAnalysis.normalize(col("text")) =!= "")
-        .select(col("source"),
-          explode(TextAnalysis.words(col("text"))).as("word"))
-        .filter(col("word") =!= "")
-      Kmv.kmvDistinct(words, "source", "word", k = 64)
-        .join(words.groupBy(col("source"))
-          .agg(countDistinct(col("word")).as("exact_distinct")),
-          Seq("source"))
-        .orderBy(col("source"))
-    }),
-
-    "text_pack_sequences" -> ((s, dir) => {
-      // GPT-style packed-sequence layout: documents are concatenated in
-      // a deterministic shard-local order and split into fixed
-      // 256-token training sequences — a doc may straddle a sequence
-      // boundary, exactly as Pile-style pretraining packs. The whole
-      // layout is window arithmetic over per-shard token cumsums (16
-      // independent shards, the text_shuffle_det scheme — no global
-      // sort at any scale); each doc's row says which sequences carry
-      // it and at which token offset, which is all a loader needs to
-      // materialize batch n without touching batch n-1.
-      val budget = 256
-      val h = md5(concat(lit("pack:"), col("doc_id").cast("string")))
-      val w = Window.partitionBy(col("shard"))
-        .orderBy(col("h"), col("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      par(s)(t(s, dir, "documents"))
-        .select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).as("n_tokens"), h.as("h"))
-        .filter(col("n_tokens") > 0)
-        .withColumn("shard",
-          conv(substring(col("h"), 1, 8), 16, 10).cast("long") % 16)
-        .withColumn("tok_start",
-          coalesce(sum(col("n_tokens")).over(w), lit(0L)))
-        .withColumn("tok_end", col("tok_start") + col("n_tokens"))
-        .withColumn("seq_first",
-          floor(col("tok_start") / budget).cast("long"))
-        .withColumn("seq_last",
-          floor((col("tok_end") - 1) / budget).cast("long"))
-        .select(col("doc_id"), col("shard"), col("n_tokens"),
-          col("tok_start"), col("tok_end"), col("seq_first"),
-          col("seq_last"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_bpe_apply_new" -> ((s, dir) => {
-      // the frozen-tokenizer production path: train on HALF the corpus
-      // (even doc_ids), then price the DISJOINT held-out half under the
-      // trained tokenizer. The apply is a merge REPLAY, not a vocabulary
-      // join against the training word table — the held-out corpus's own
-      // word table is char-split and the 8 learned merges re-run in
-      // order (TextAnalysis.bpeApply), so a word unseen at train time
-      // fuses less instead of silently dropping from the count. Every
-      // held-out word prices; n_words is total coverage by construction.
-      val docs = par(s)(t(s, dir, "documents"))
-      val (ms, _) = TextAnalysis.bpeTrain(
-        docs.filter(col("doc_id") % 2 === 0), merges = 8)
-      val held = docs.filter(col("doc_id") % 2 =!= 0)
-      val wordTok = TextAnalysis.bpeApply(ms, held)
-        .select(col("word"),
-          size(split(col("sym"), "\\|")).cast("long").as("w_tokens"))
-      held
-        .filter(TextAnalysis.normalize(col("text")) =!= "")
-        .select(col("doc_id"),
-          explode(TextAnalysis.words(col("text"))).as("word"))
-        .filter(col("word") =!= "")
-        .join(broadcast(wordTok), Seq("word"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_words"),
-          sum(col("w_tokens")).as("n_bpe_tokens"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "text_feature_hash" -> ((s, dir) => {
-      // hashing-trick features for a linear quality classifier: every
-      // word lands in one of 64 md5 buckets, counts aggregate per
-      // (doc, bucket) — a fixed-width sparse feature space with no
-      // vocabulary pass and no driver state. Sparse rows, not a dense
-      // array column: the oracle checks exact counts per cell and the
-      // downstream trainer consumes (row, col, value) triplets anyway.
-      TextAnalysis.featureHash(par(s)(t(s, dir, "documents")),
-        nBuckets = 64)
-        .orderBy(col("doc_id"), col("bucket"))
-    }),
-
-    // ---- Event windows / sessions ------------------------------------
-
-    "ev_window_fill" -> ((s, dir) => {
-      // the W2 window shape on real data: forward-fill the last purchase
-      // value per user (last ignoreNulls, unbounded preceding)
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("ts"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      t(s, dir, "events")
-        .withColumn("last_purchase_value",
-          last(when(col("event_type") === "purchase", col("value")),
-            ignoreNulls = true).over(w))
-        .select(col("user_id"), col("event_id"), col("last_purchase_value"))
-        .orderBy(col("user_id"), col("event_id"))
-    }),
-
-    "ev_sessionize" -> ((s, dir) => {
-      Sessionize.sessionSummaryBatch(t(s, dir, "events"), gapMinutes = 30)
-        .select(col("user_id"), col("session_idx"),
-          col("n_events"),
-          unix_micros(col("session_start")).as("start_us"),
-          unix_micros(col("session_end")).as("end_us"),
-          col("value_cents"))
-        .orderBy(col("user_id"), col("session_idx"))
-    }),
-
-    "ev_session_window" -> ((s, dir) => {
-      // the BUILT-IN session_window TVF beside the custom gaps-and-
-      // islands operator (ev_sessionize): same per-user 30-minute-gap
-      // sessions, but with the built-in's boundary semantics — windows
-      // are half-open [ts, ts+gap), so a successor at EXACTLY the gap
-      // starts a new session (the custom operator's `> gap` keeps it),
-      // and the session end is max(ts)+gap, not max(ts). The oracle
-      // replays those semantics; keeping both rows pins the divergence
-      // instead of papering over it.
-      t(s, dir, "events")
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(cents(col("value"))).as("value_cents"))
-        .select(col("user_id"),
-          unix_micros(col("session_window.start")).as("start_us"),
-          unix_micros(col("session_window.end")).as("end_us"),
-          col("n_events"), col("value_cents"))
-        .orderBy(col("user_id"), col("start_us"))
-    }),
-
-    "ev_windowed_agg" -> ((s, dir) => {
-      // tumbling event-time window (the batch twin of the streaming
-      // watermark aggregation in graft.streaming.Sessionize)
-      t(s, dir, "events")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(cents(col("value"))).as("value_cents"))
-        .select(unix_micros(col("window.start")).as("win_start_us"),
-          col("event_type"), col("n"), col("value_cents"))
-        .orderBy(col("win_start_us"), col("event_type"))
-    }),
-
-    "ev_json_extract" -> ((s, dir) => {
-      // typed metadata extraction from the JSON props column via
-      // from_json — schema'd parse, not string poking; a narrow
-      // codegen-adjacent projection (JsonToStructs), no shuffle
-      t(s, dir, "events")
-        .select(col("event_id"), col("event_type"),
-          from_json(col("props"), lit("k BIGINT")).getField("k").as("k"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_latest" -> ((s, dir) => {
-      // CDC/upsert compaction: latest event per user under a TOTAL order
-      // (ts desc, event_id desc — same-timestamp rows are a certainty at
-      // scale). row_number()==1 plans as WindowGroupLimit: map tasks
-      // truncate each key to one row before the exchange.
-      Changes.latestByKey(t(s, dir, "events"),
-        keyCols = Seq("user_id"), tsCol = "ts", tieCols = Seq("event_id"))
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-        .orderBy(col("user_id"))
-    }),
-
-    "ev_scd2" -> ((s, dir) => {
-      // SCD-2 interval construction: each change row gets
-      // [valid_from, valid_to) with valid_to = the key's next change
-      // (null = current). One window per key; facts then join these
-      // intervals with the banded range join.
-      Changes.scd2(t(s, dir, "events"),
-        keyCols = Seq("user_id"), tsCol = "ts", tieCols = Seq("event_id"))
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("valid_from")).as("valid_from_us"),
-          unix_micros(col("valid_to")).as("valid_to_us"),
-          col("is_current"))
-        .orderBy(col("user_id"), col("valid_from_us"), col("event_id"))
-    }),
-
-    "ev_funnel" -> ((s, dir) => {
-      // 3-step conversion funnel: earliest signup, earliest click after
-      // it, earliest purchase after that — per-step conditional min
-      // aggregations on the user key, no per-user event sorting
-      Funnel.funnel(t(s, dir, "events"),
-        steps = Seq("signup", "click", "purchase"))
-        .select(col("user_id"),
-          unix_micros(col("t1")).as("t1_us"),
-          unix_micros(col("t2")).as("t2_us"),
-          unix_micros(col("t3")).as("t3_us"),
-          col("funnel_depth"))
-        .orderBy(col("user_id"))
-    }),
-
-    "ev_rolling" -> ((s, dir) => {
-      // trailing-24h purchase velocity per user, per purchase event —
-      // a RANGE frame over epoch micros (tie-safe, deterministic), one
-      // exchange + ordered scan, no self-join
-      val p = t(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"),
-          cents(col("value")).as("cents"))
-      RollingAgg.trailingCountSum(p, col("cents"), windowSeconds = 86400,
-        suffix = "24h")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"),
-          col("n_24h"), col("sum_24h"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_retention" -> ((s, dir) => {
-      // cohort retention: users cohorted by first-signup day, active
-      // weeks counted by pure integer epoch arithmetic (engine-portable,
-      // no calendar truncation)
-      Funnel.retention(t(s, dir, "events"))
-        .orderBy(col("cohort_day"), col("week_offset"))
-    }),
-
-    "ev_cohort_ltv" -> ((s, dir) => {
-      // cohort lifetime value — ev_retention's revenue sibling: users
-      // cohorted by first-PURCHASE week (pure integer epoch
-      // arithmetic, no calendar truncation), revenue per (cohort, week
-      // offset) with the running cumulative LTV and cohort size — the
-      // curve a growth team actually reads. The cumulative window runs
-      // over the (cohort, offset) AGGREGATE frame (tens of rows per
-      // cohort), never over raw purchases.
-      val wk = 7L * 86400000000L
-      val p = t(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), cents(col("value")).as("cents"),
-          expr(s"unix_micros(ts) div $wk").as("wi"))
-      val cohorts = p.groupBy(col("user_id")).agg(min(col("wi")).as("cw"))
-      val cells = p.join(cohorts, Seq("user_id"))
-        .groupBy(col("cw"), (col("wi") - col("cw")).as("week_offset"))
-        .agg(sum(col("cents")).as("rev_cents"),
-          countDistinct(col("user_id")).as("n_active"))
-      val sizes = cohorts.groupBy(col("cw")).agg(count(lit(1)).as("n_users"))
-      val w = Window.partitionBy(col("cw")).orderBy(col("week_offset"))
-      cells.join(sizes, Seq("cw"))
-        .withColumn("cum_rev_cents", sum(col("rev_cents")).over(w))
-        .select(col("cw").as("cohort_week"), col("week_offset"),
-          col("n_users"), col("n_active"), col("rev_cents"),
-          col("cum_rev_cents"))
-        .orderBy(col("cohort_week"), col("week_offset"))
-    }),
-
-    "ev_attribution" -> ((s, dir) => {
-      // linear multi-touch attribution: each purchase's cents split
-      // equally over the user's clicks in the trailing 6 h; purchases
-      // with no qualifying click survive as the unattributed bucket
-      // (null touch columns, n_touches = 0). One banded time join (two
-      // bucket replicas per click) + one conversion-keyed window —
-      // never a per-user cross product. Credit = one IEEE division of
-      // exact integers, bit-identical across engines.
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("p_event_id"),
-          unix_micros(col("ts")).as("p_ts_us"),
-          cents(col("value")).as("p_cents"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("c_event_id"),
-          unix_micros(col("ts")).as("c_ts_us"))
-      Attribution.linear(purchases, clicks, Seq("user_id"),
-        convIdCol = "p_event_id", convTsUsCol = "p_ts_us",
-        valueCol = "p_cents", touchIdCol = "c_event_id",
-        touchTsUsCol = "c_ts_us", lookbackMicros = 21600000000L)
-        .orderBy(col("p_event_id"), coalesce(col("c_event_id"), lit(-1L)))
-    }),
-
-    "ev_transitions" -> ((s, dir) => {
-      // first-order Markov transition matrix over user timelines (the
-      // Sankey/flow-diagram aggregate): one lag window (tie-broken on
-      // event_id, so counts are deterministic) + one count; the matrix
-      // is |types|² rows, tiny at any corpus scale
-      Funnel.transitions(t(s, dir, "events"))
-        .orderBy(col("prev"), col("next"))
-    }),
-
-    "ev_top_paths" -> ((s, dir) => {
-      // funnel DISCOVERY: the 10 most common 3-step event-type paths
-      // across user timelines — what transitions' first-order matrix
-      // structurally cannot rank. Per-user lead windows (event_id
-      // tie-break), truncated at timeline ends, map-side-combined path
-      // counts; the closing rank runs over the path DOMAIN (|types|^3
-      // = 125 rows), never the event stream
-      Funnel.topPaths(t(s, dir, "events"), len = 3, k = 10)
-        .orderBy(col("rank"))
-    }),
-
-    "ev_anomaly" -> ((s, dir) => {
-      // robust per-user outlier purchases: |cents − median| > 3·MAD with
-      // a 5-purchase history floor — median/MAD stays exact (dyadic
-      // interpolation over integer cents, no libm), so flags match the
-      // oracle bit-for-bit where a σ-based z-score could not
-      val p = t(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"), cents(col("value")).as("cents"))
-      Anomaly.madOutliers(p, "cents", Seq("user_id"), k = 3.0, minRows = 5)
-        .select(col("user_id"), col("event_id"), col("cents"),
-          col("med"), col("mad"), col("dev"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_stream_ks" -> ((s, dir) => {
-      // the KS alarm at INGEST, split at its algebraic seam: the stream
-      // maintains only the Complete-mode (type, cents, side) counts —
-      // domain-sized state, map-side-combined — and the batch finish
-      // runs the cumulative-window arithmetic over the drained frame.
-      // Shares ev_ks_drift's oracle verbatim: batch-equal on replay.
-      import org.apache.spark.sql.streaming.OutputMode
-      val counted = Tables.streamEvents(s, dir)
-        .select(col("event_type"), cents(col("value")).as("cents"),
-          (col("event_id") % 2).as("side"))
-        .groupBy(col("event_type"), col("cents"))
-        .agg(sum(when(col("side") === 0, 1L).otherwise(0L)).as("ca"),
-          sum(when(col("side") === 1, 1L).otherwise(0L)).as("cb"))
-      val drained = Sessionize.runToMemory(s, counted, "ev_stream_ks",
-        OutputMode.Complete, statePartitions = 8)
-      Stats.ksScaledFromCounts(drained, Seq("event_type"), "cents",
-        "ca", "cb")
-        .orderBy(col("event_type"))
-    }),
-
-    "ev_ks_drift" -> ((s, dir) => {
-      // exact-integer two-sample KS distance per event type between the
-      // even and odd event halves — the distribution-shift alarm, with
-      // the IEEE ECDF division cross-multiplied away: ks_scaled =
-      // max |cumA·n_b − cumB·n_a| over count-by-value integers, the
-      // same argmax bit-for-bit in both engines. Count-by-value FIRST,
-      // so the cumulative window ranks each type's value DOMAIN, never
-      // its row stream.
-      val ev = t(s, dir, "events")
-        .select(col("event_type"), cents(col("value")).as("cents"),
-          (col("event_id") % 2).as("side"))
-      Stats.ksScaled(ev, Seq("event_type"), "cents", "side")
-        .orderBy(col("event_type"))
-    }),
-
-    "ev_seasonal" -> ((s, dir) => {
-      // seasonal detrending: every event's exact-integer deviation from
-      // its (event_type, day-of-week, hour) cell mean — "abnormal FOR a
-      // Tuesday 3 pm", not abnormal in the raw. The baseline aggregate
-      // is keys×7×24 rows regardless of volume (broadcast-sized at any
-      // scale, the stream never shuffles for the join); mean_milli is
-      // the scaled-integer mean so both engines agree bit-for-bit.
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("event_type"), col("ts"),
-          cents(col("value")).as("cents"))
-      Anomaly.seasonalResiduals(ev, "ts", "cents", Seq("event_type"))
-        .select(col("event_id"), col("event_type"), col("dow"),
-          col("hr"), col("cents"), col("n_cell"), col("mean_milli"),
-          col("residual_milli"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_coverage" -> ((s, dir) => {
-      // interval union per user: every event opens a 300-second validity
-      // window; overlapping/touching windows merge into islands (running
-      // max of prior ends — a single long-lived interval can swallow
-      // several later ones, so lag(end) alone would split islands
-      // wrongly). Exact epoch-micro arithmetic end to end.
-      val e = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("s"))
-        .withColumn("e", col("s") + lit(300000000L))
-      Intervals.mergeIslands(e, Seq("user_id"), "s", "e", "event_id")
-        .orderBy(col("user_id"), col("island"))
-    }),
-
-    "ev_unpivot" -> ((s, dir) => {
-      // the inverse reshape: the wide per-user activity matrix melted
-      // back to long (user_id, event_type, n) via the native unpivot
-      // operator (an Expand node — each input row fans out to five,
-      // zero shuffles; the only exchange is ev_pivot's own groupBy).
-      // Zero-count cells are kept: a melt must be lossless on the
-      // matrix, the round-trip property the spec pins.
-      t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .count()
-        .na.fill(0L)
-        .unpivot(Array(col("user_id")),
-          Array(col("click"), col("error"), col("purchase"),
-            col("signup"), col("view")),
-          "event_type", "n")
-        .orderBy(col("user_id"), col("event_type"))
-    }),
-
-    "ev_pivot" -> ((s, dir) => {
-      // per-user activity matrix: event-type counts pivoted wide. The
-      // value list is EXPLICIT, so no extra distinct-scan job runs
-      // before the pivot and the schema is stable under partial data —
-      // the form a 100-TB pivot must take (`.pivot(col)` without values
-      // collects the distinct set to the driver first).
-      t(s, dir, "events")
-        .groupBy(col("user_id"))
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .count()
-        .na.fill(0L)
-        .orderBy(col("user_id"))
-    }),
-
-    "ev_value_cdf" -> ((s, dir) => {
-      // per-type CDF normalization of event values: shared-rank
-      // percent_rank — exact integer ranks, one IEEE division — the
-      // outlier-robust feature scaling
-      Stats.cdfNormalize(
-        t(s, dir, "events")
-          .select(col("event_type"), col("event_id"),
-            cents(col("value")).as("cents")),
-        "cents", Seq("event_type"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_chisq" -> ((s, dir) => {
-      // independence diagnostics for event_type × value band: per-cell
-      // observed / expected / χ² contribution — per-cell so every
-      // number is engine-exact (a summed χ² depends on float addition
-      // order); bands are the histogram's exact floor anchors
-      val c = cents(col("value"))
-      val e = t(s, dir, "events")
-        .select(col("event_type"),
-          (c - pmod(c, lit(10000L))).as("value_band"))
-      Stats.chiSquareCells(e, "event_type", "value_band")
-        .orderBy(col("event_type"), col("value_band"))
-    }),
-
-    "text_winsorize" -> ((s, dir) => {
-      // per-source Tukey-fence clipping of document lengths: quartiles
-      // interpolate at DYADIC fractions, so fences and clips are exact
-      // doubles on both engines (a p05/p95 clip would drift in the last
-      // ulp — scaladoc'd in Stats.tukeyClip)
-      Stats.tukeyClip(
-        t(s, dir, "documents")
-          .select(col("doc_id"), col("source"), col("n_chars")),
-        "n_chars", Seq("source"))
-        .orderBy(col("doc_id"))
-    }),
-
-    "ev_median_mad" -> ((s, dir) => {
-      // robust location/scale per event type: EXACT lower median (the
-      // ⌈n/2⌉-th smallest — rank arithmetic, no averaging, no
-      // approx-percentile sketch whose buffer layout an independent
-      // engine can't replay) and MAD (the same rank over |x − median|).
-      // The robust pair an outlier-gated quality monitor wants where
-      // mean/stddev follow the tail. Plan shape is the 100-TB-safe one:
-      // a per-row window over the bare event_type key would funnel
-      // every row of a ~4-valued group into ONE sort task, so each
-      // pass instead pre-aggregates (event_type, value) → cnt — a
-      // map-side-combinable shuffle of DISTINCT VALUES — and selects
-      // the value whose cumulative-count range [cum−cnt+1, cum]
-      // contains rank ⌈n/2⌉. The windows rank the distinct-value
-      // frame (integer cents: orders of magnitude smaller than rows),
-      // never the row stream; the answer is identical because the
-      // value at a global (value, id)-rank depends on the value
-      // ordering alone.
-      val e = t(s, dir, "events")
-        .select(col("event_type"), cents(col("value")).as("x"))
-      val cnts = e.groupBy(col("event_type"), col("x"))
-        .agg(count(lit(1)).as("cnt"))
-      val byX = Window.partitionBy(col("event_type")).orderBy(col("x"))
-      val grp = Window.partitionBy(col("event_type"))
-      val med = cnts
-        .withColumn("cum", sum(col("cnt")).over(byX))
-        .withColumn("n", sum(col("cnt")).over(grp))
-        .filter(col("cum") >= expr("(n + 1) div 2") &&
-          col("cum") - col("cnt") < expr("(n + 1) div 2"))
-        .select(col("event_type"), col("n").as("n_events"),
-          col("x").as("median_cents"))
-      val dcnts = cnts.join(med, Seq("event_type"))
-        .groupBy(col("event_type"), col("n_events"), col("median_cents"),
-          abs(col("x") - col("median_cents")).as("d"))
-        .agg(sum(col("cnt")).as("cnt"))
-      val byD = Window.partitionBy(col("event_type")).orderBy(col("d"))
-      dcnts
-        .withColumn("cum", sum(col("cnt")).over(byD))
-        .filter(col("cum") >= expr("(n_events + 1) div 2") &&
-          col("cum") - col("cnt") < expr("(n_events + 1) div 2"))
-        .select(col("event_type"), col("n_events"),
-          col("median_cents"), col("d").as("mad_cents"))
-        .orderBy(col("event_type"))
-    }),
-
-    "ev_histogram" -> ((s, dir) => {
-      // per-type equi-width value histogram: bin anchors floor-aligned
-      // in exact long arithmetic (v − pmod(v, w)) — one map-side
-      // combinable aggregation, bounds materialized per bin
-      Stats.histogram(
-        t(s, dir, "events")
-          .select(col("event_type"), cents(col("value")).as("cents")),
-        "cents", Seq("event_type"), width = 2500L)
-        .orderBy(col("event_type"), col("bin_lo"))
-    }),
-
-    "text_stream_kmv" -> ((s, dir) => {
-      // distinct-cardinality AT INGEST: the same KMV bottom-k sketch as
-      // text_kmv_vocab running as a Complete-mode streaming aggregation
-      // — state per source is the bounded ≤64-hash array, combined
-      // incrementally as micro-batches arrive, so a live dashboard
-      // reads vocabulary size without a distinct-scan (exact
-      // count(DISTINCT) is structurally unsupported over streams; the
-      // sketch is the operator that CAN run there). Drained after the
-      // bounded replay; the oracle replays the bottom-k arithmetic.
-      import org.apache.spark.sql.streaming.OutputMode
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
-      val stream = s.readStream.schema(raw)
-        .parquet(streamGlob(s"$dir/documents.parquet"))
-      val words = stream
-        .filter(TextAnalysis.normalize(col("text")) =!= "")
-        .select(col("source"),
-          explode(TextAnalysis.words(col("text"))).as("word"))
-        .filter(col("word") =!= "")
-      val out = Kmv.kmvDistinct(words, "source", "word", k = 64)
-      Sessionize.runToMemory(s, out, "text_stream_kmv_sink",
-        OutputMode.Complete, statePartitions = 8)
-        .orderBy(col("source"))
-    }),
-
-    "ev_profile" -> ((s, dir) => {
-      // per-type ingest profile with a planted null regime (errors
-      // carry no amount): row/null counts, exact bounds, and KMV
-      // distinct cardinality of the non-null cents — one declarative
-      // aggregation, the same operator the stream twin runs at ingest.
-      // The all-null error group must report null bounds and a 0
-      // estimate, never fake zeros.
-      val ev = t(s, dir, "events").select(col("event_type"),
-        when(col("event_type") === "error", lit(null).cast("long"))
-          .otherwise(cents(col("value"))).as("v"))
-      Stats.profileByGroup(ev, "event_type", "v", k = 64)
-        .orderBy(col("event_type"))
-    }),
-
-    "ev_stream_profile" -> ((s, dir) => {
-      // the at-ingest drift gate: the SAME profile aggregation as a
-      // Complete-mode streaming aggregation — algebraic metrics plus
-      // the KMV sketch (exact count(DISTINCT) is structurally
-      // unsupported over streams; the sketch's merge-tree independence
-      // is why micro-batch absorption equals the batch answer). Shares
-      // ev_profile's oracle verbatim.
-      import org.apache.spark.sql.streaming.OutputMode
-      val feed = Tables.streamEvents(s, dir).select(col("event_type"),
-        when(col("event_type") === "error", lit(null).cast("long"))
-          .otherwise(cents(col("value"))).as("v"))
-      val prof = Stats.profileByGroup(feed, "event_type", "v", k = 64)
-      Sessionize.runToMemory(s, prof, "ev_stream_profile_sink",
-        OutputMode.Complete, statePartitions = 8)
-        .orderBy(col("event_type"))
-    }),
-
-    "ev_stream_histogram" -> ((s, dir) => {
-      // the live-dashboard face of ev_histogram: the SAME floor-aligned
-      // bin aggregation runs as a Complete-mode streaming aggregation
-      // (state = one row per (type, bin) — bounded by the value range,
-      // not the stream), drained after the bounded replay; shares the
-      // batch oracle verbatim. No sentinel/watermark: Complete mode
-      // re-emits full state each microbatch.
-      import org.apache.spark.sql.streaming.OutputMode
-      val feed = Tables.streamEvents(s, dir)
-        .select(col("event_type"), cents(col("value")).as("cents"))
-      val hist = Stats.histogram(feed, "cents", Seq("event_type"),
-        width = 2500L)
-      Sessionize.runToMemory(s, hist, "ev_stream_histogram_sink",
-        OutputMode.Complete, statePartitions = 8)
-        .orderBy(col("event_type"), col("bin_lo"))
-    }),
-
-    "ev_histogram_eqdepth" -> ((s, dir) => {
-      // equi-depth twin of ev_histogram: 8 equal-count tiles per type —
-      // informative under value skew where equi-width bins collapse;
-      // ntile over the totally ordered (cents, event_id) is
-      // deterministic and identically defined on both engines
-      Stats.equiDepthHistogram(
-        t(s, dir, "events")
-          .select(col("event_type"), col("event_id"),
-            cents(col("value")).as("cents")),
-        "cents", Seq("event_type"), buckets = 8, idCol = "event_id")
-        .orderBy(col("event_type"), col("tile"))
-    }),
-
-    "ev_twap" -> ((s, dir) => {
-      // time-weighted average purchase value per user: trapezoidal
-      // integral as exact cents·second long sums, one closing IEEE
-      // division. Seconds, not micros — the num sum must stay inside a
-      // long at any per-user history length (doc'd in Stats)
-      val p = t(s, dir, "events")
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"),
-          expr("unix_micros(ts) div 1000000").as("ts_s"),
-          cents(col("value")).as("cents"))
-      Stats.timeWeightedAvg(p, Seq("user_id"), "ts_s", "cents", "event_id")
-        .orderBy(col("user_id"))
-    }),
-
-    "ev_agg_incremental" -> ((s, dir) => {
-      // incremental rollup maintenance: the stored per-user state (base,
-      // here 3/4 of events playing yesterday's rollup) absorbs a delta
-      // batch (the remaining 1/4 playing today's arrivals) via algebraic
-      // merge — counts/sums add, mins/maxes combine — WITHOUT rescanning
-      // raw history. The oracle recomputes from ALL events; exact-long
-      // algebra makes merge == recompute bit-for-bit.
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), cents(col("value")).as("v"))
-      val keys = Seq("user_id")
-      val base = IncrementalAgg.aggregate(
-        ev.filter(col("event_id") % 4 =!= 0), keys,
-        sums = Seq("v"), mins = Seq("ts_us"), maxes = Seq("ts_us"))
-      val delta = IncrementalAgg.aggregate(
-        ev.filter(col("event_id") % 4 === 0), keys,
-        sums = Seq("v"), mins = Seq("ts_us"), maxes = Seq("ts_us"))
-      IncrementalAgg.merge(base, delta, keys,
-        sums = Seq("v"), mins = Seq("ts_us"), maxes = Seq("ts_us"))
-        .orderBy(col("user_id"))
-    }),
-
-    "ev_agg_incremental_stats" -> ((s, dir) => {
-      // the moment-sketch extension of ev_agg_incremental: (sum, count,
-      // sum-of-squares) state merges algebraically, and avg/variance are
-      // DERIVED at read time — never stored, so they stay exact under
-      // merging. The STATE rides DECIMAL(38,0) (a long×long product sum
-      // overflows int64 at corpus scale), but the CHECK SURFACE is pure
-      // BIGINT: at verify SF the exact values fit int64 with orders of
-      // magnitude to spare, ANSI mode makes the narrowing cast loud if
-      // that ever stops being true, and int64 mul/sub + one int64→double
-      // cast + one IEEE division are bit-identical across every DuckDB
-      // version — unlike HUGEINT arithmetic or DECIMAL(38,0) output
-      // canonicalization, both of which proved oracle-version-sensitive
-      // (r13's one red row). varnum/varden expose the variance fraction
-      // as exact integers so var_v is redundant to the integer check.
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"), cents(col("value")).as("v"))
-      val keys = Seq("user_id")
-      val base = IncrementalAgg.aggregate(
-        ev.filter(col("event_id") % 4 =!= 0), keys,
-        sums = Seq("v"), sumsqs = Seq("v"))
-      val delta = IncrementalAgg.aggregate(
-        ev.filter(col("event_id") % 4 === 0), keys,
-        sums = Seq("v"), sumsqs = Seq("v"))
-      val merged = IncrementalAgg.merge(base, delta, keys,
-        sums = Seq("v"), sumsqs = Seq("v"))
-      val sq = col("sumsq_v").cast("long")
-      IncrementalAgg.derived(merged, avgs = Seq("v"), vars = Seq("v"))
-        .select(col("user_id"), col("n_rows"), col("sum_v"),
-          sq.as("sumsq_v"), col("avg_v"),
-          (col("n_rows") * sq - col("sum_v") * col("sum_v")).as("varnum_v"),
-          (col("n_rows") * col("n_rows")).as("varden_v"),
-          col("var_v"))
-        .orderBy(col("user_id"))
-    }),
-
-    "ev_agg_incremental_rekey" -> ((s, dir) => {
-      // the append-only contract's escape hatch exercised: the rollup
-      // state absorbs a CORRECTION (every user_id % 10 == 0 had cents
-      // double-counted upstream) by rebuilding ONLY those keys from
-      // their corrected history and splicing — min/max included, which
-      // no algebraic merge could retract. Unaffected keys' state rows
-      // pass through untouched; the oracle recomputes the whole
-      // corrected corpus.
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
-          cents(col("value")).as("v"))
-      val keys = Seq("user_id")
-      val spec = (d: DataFrame) => IncrementalAgg.aggregate(d, keys,
-        sums = Seq("v"), mins = Seq("ts_us"), maxes = Seq("ts_us"))
-      // yesterday's state was built from the WRONG feed (doubled cents
-      // for the affected users)
-      val wrong = ev.withColumn("v",
-        when(col("user_id") % 10 === 0, col("v") * 2).otherwise(col("v")))
-      val state = spec(wrong)
-      // the corrected history of ONLY the affected keys
-      val corrected = ev.filter(col("user_id") % 10 === 0)
-      IncrementalAgg.reaggregateKeys(state, corrected, keys,
-        sums = Seq("v"), mins = Seq("ts_us"), maxes = Seq("ts_us"))
-        .orderBy(col("user_id"))
-    }),
-
-    "ev_stream_agg_incremental" -> ((s, dir) => {
-      // the object doc's claim made checkable: "the same state frame
-      // can absorb deltas from a batch backfill and a structured-
-      // streaming sink alike". Yesterday's state is batch-built from
-      // 3/4 of events; TODAY'S delta state is produced by a streaming
-      // aggregation (Complete mode — the running per-key state is the
-      // sink table) over the remaining 1/4, and IncrementalAgg.merge
-      // folds the two exactly as in the all-batch ev_agg_incremental —
-      // same oracle, full recompute over all events. No sentinel: a
-      // Complete-mode aggregation re-emits full state every batch, so
-      // draining the one data microbatch is the final answer.
-      import org.apache.spark.sql.streaming.OutputMode
-      val keys = Seq("user_id")
-      val spec = (d: DataFrame) => IncrementalAgg.aggregate(d, keys,
-        sums = Seq("v"), mins = Seq("ts_us"), maxes = Seq("ts_us"))
-      val evCols = (d: DataFrame) => d
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), cents(col("value")).as("v"))
-      val base = spec(evCols(t(s, dir, "events"))
-        .filter(col("event_id") % 4 =!= 0))
-      val deltaStream = spec(evCols(Tables.streamEvents(s, dir))
-        .filter(col("event_id") % 4 === 0))
-      val delta = Sessionize.runToMemory(s, deltaStream,
-        "ev_stream_agg_incr_sink", OutputMode.Complete,
-        statePartitions = 8)
-      IncrementalAgg.merge(base, delta, keys,
-        sums = Seq("v"), mins = Seq("ts_us"), maxes = Seq("ts_us"))
-        .orderBy(col("user_id"))
-    }),
-
-    "ev_agg_incremental_persisted" -> ((s, dir) => {
-      // the full daily-rollup lifecycle through a COLD artifact: state
-      // built from a wrong feed (doubled cents for user_id%10==0) is
-      // written to parquet, RELOADED, absorbs a delta batch by algebraic
-      // merge, then takes the targeted correction via reaggregateKeys —
-      // all downstream of the disk round-trip. Longs and DECIMAL(38,0)
-      // round-trip parquet exactly, so the chain must equal a clean full
-      // recompute bit-for-bit (the oracle). sumsq rides through the
-      // whole chain in decimal; the check surface casts it to BIGINT
-      // (the version-proof rule from ev_agg_incremental_stats).
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), cents(col("value")).as("v"))
-      val keys = Seq("user_id")
-      val wrong = ev.withColumn("v",
-        when(col("user_id") % 10 === 0, col("v") * 2).otherwise(col("v")))
-      val base = IncrementalAgg.aggregate(
-        wrong.filter(col("event_id") % 4 =!= 0), keys,
-        sums = Seq("v"), mins = Seq("ts_us"), maxes = Seq("ts_us"),
-        sumsqs = Seq("v"))
-      val store = s"$artifactRoot/incagg_state"
-      IncrementalAgg.saveState(base, store)
-      val loaded = IncrementalAgg.loadState(s, store, keys,
-        sums = Seq("v"), mins = Seq("ts_us"), maxes = Seq("ts_us"),
-        sumsqs = Seq("v"))
-      val delta = IncrementalAgg.aggregate(
-        wrong.filter(col("event_id") % 4 === 0), keys,
-        sums = Seq("v"), mins = Seq("ts_us"), maxes = Seq("ts_us"),
-        sumsqs = Seq("v"))
-      val merged = IncrementalAgg.merge(loaded, delta, keys,
-        sums = Seq("v"), mins = Seq("ts_us"), maxes = Seq("ts_us"),
-        sumsqs = Seq("v"))
-      val corrected = ev.drop("event_id").filter(col("user_id") % 10 === 0)
-      IncrementalAgg.reaggregateKeys(merged, corrected, keys,
-        sums = Seq("v"), mins = Seq("ts_us"), maxes = Seq("ts_us"),
-        sumsqs = Seq("v"))
-        .withColumn("sumsq_v", col("sumsq_v").cast("long"))
-        .orderBy(col("user_id"))
-    }),
-
-    "ev_scd2_lookup" -> ((s, dir) => {
-      // point-in-time lookup: for each click, the purchase VERSION valid
-      // at click time (SCD2 intervals over per-user purchases, then the
-      // as-of backward join — intervals partition the timeline, so
-      // "containing interval" = "latest valid_from <= ts" and no range
-      // join is needed). The oracle is the independent BETWEEN
-      // formulation over lead()-built intervals.
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("p_event_id"),
-          sum(cents(col("value"))).as("p_cents"))
-      val dims = Changes.scd2(purchases, Seq("user_id"), "ts")
-        .select(col("user_id"), col("valid_from"),
-          col("p_event_id"), col("p_cents"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      Changes.scd2Lookup(clicks, dims, keyCols = Seq("user_id"),
-        factTsCol = "ts", valueCols = Seq("p_event_id", "p_cents"))
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"),
-          col("v_p_event_id").as("p_event_id"),
-          col("v_p_cents").as("p_cents"),
-          unix_micros(col("v_valid_from")).as("valid_from_us"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_stream_scd2_enrich" -> ((s, dir) => {
-      // the point-in-time lookup's STREAM twin — the leakage-free live
-      // feature join: clicks stream against the static SCD2 purchase
-      // dimension via the interval formulation (valid_from <= ts <
-      // valid_to matches at most one version per fact, so the join is
-      // stateless Append — no watermark, no as-of ranking) and must
-      // reproduce the batch ev_scd2_lookup rows exactly, nulls for
-      // pre-first-version clicks included.
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("p_event_id"),
-          sum(cents(col("value"))).as("p_cents"))
-      val dims = Changes.scd2(purchases, Seq("user_id"), "ts")
-        .select(col("user_id"), col("valid_from"), col("valid_to"),
-          col("p_event_id"), col("p_cents"))
-      val clicks = Tables.streamEvents(s, dir)
-        .filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val enriched = Changes.scd2JoinIntervals(clicks, dims,
-        keyCols = Seq("user_id"), factTsCol = "ts",
-        valueCols = Seq("p_event_id", "p_cents"))
-      Sessionize.runToMemory(s, enriched, "ev_stream_scd2_sink",
-        OutputMode.Append, statePartitions = 8)
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"),
-          col("v_p_event_id").as("p_event_id"),
-          col("v_p_cents").as("p_cents"),
-          unix_micros(col("v_valid_from")).as("valid_from_us"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_cdc_apply" -> ((s, dir) => {
-      // CDC APPLY (batch MERGE INTO): even events form the base snapshot
-      // (compacted latest-per-user), odd events are the change feed with
-      // every 17th a delete; the apply folds them into the next
-      // snapshot — newest version wins per user, delete-latest users
-      // drop entirely. One WindowGroupLimit compaction over the union.
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type"), cents(col("value")).as("value_cents"))
-      val base = Changes.latestByKey(ev.filter(col("event_id") % 2 === 0),
-        keyCols = Seq("user_id"), tsCol = "ts", tieCols = Seq("event_id"))
-      val changes = ev.filter(col("event_id") % 2 === 1)
-        .withColumn("op",
-          when(col("event_id") % 17 === 0, lit("d")).otherwise(lit("u")))
-      Changes.applyCdc(base, changes, keyCols = Seq("user_id"),
-        tsCol = "ts", tieCols = Seq("event_id"))
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("event_type"),
-          col("value_cents"))
-        .orderBy(col("user_id"))
-    }),
-
-    "ev_stream_ingest_audited" -> ((s, dir) => {
-      // audited streaming ingest with a dead-letter queue: the real
-      // stream's batch passes the expectation suite and publishes; a
-      // poisoned batch (negated cents) is REFUSED — never visible to a
-      // table reader — and quarantined verbatim under the DLQ for
-      // triage, while the stream keeps moving. Replays of both kinds
-      // are exactly-once (spec-pinned: manifest stamp for published
-      // ids, DLQ-dir existence for refused ones). Face 1 = the audited
-      // table head, face 2 = the quarantined batch.
-      import org.apache.spark.sql.streaming.OutputMode
-      val tbl = s"$artifactRoot/snap_ingest_audited"
-      val dlq = s"$artifactRoot/snap_ingest_dlq"
-      Snapshots.init(s, tbl); Snapshots.init(s, dlq)
-      val audit = (df: DataFrame) => Stats.expectRows(df,
-        Seq(("neg_cents", col("value_cents") < 0L)))
-      val feed = Tables.streamEvents(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val q = SnapshotStream.ingestAudited(feed, tbl, dlq, audit,
-        "ev_stream_ingest_audited")
-      q.processAllAvailable(); q.stop()
-      val poisoned = t(s, dir, "events")
-        .filter(col("event_id") % 2 === 0)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          (-cents(col("value")) - 1L).as("value_cents"))
-      val refused = SnapshotStream.appendBatchAudited(
-        s, tbl, dlq, audit, 1L, poisoned)
-      require(refused.isEmpty, "the poisoned batch must be refused")
-      val latest = Snapshots.latestVersion(s, tbl).get
-      Snapshots.readAsOf(s, tbl, latest).withColumn("face", lit(1L))
-        .unionByName(
-          s.read.parquet(s"$dlq/b1").withColumn("face", lit(2L)))
-        .orderBy(col("face"), col("event_id"))
-    }),
-
-    "ev_stream_table_feed" -> ((s, dir) => {
-      // the snapshot table as a STREAMING SOURCE — the other half of
-      // the lakehouse streaming loop (SnapshotStream is the sink):
-      // `readStream.format("graft-snapshot")` subscribes to a table,
-      // versions ARE the offsets, and each un-served append interval
-      // plans the manifest file-set difference of exactly two
-      // generations — O(delta) per micro-batch through Spark's own
-      // parquet reader, exactly-once across checkpointed restarts
-      // because manifests are immutable (SnapshotSourceSpec pins the
-      // restart, startingVersion, and the replace/DV/schema-change
-      // refusals). Three commits drain as the stream's full content;
-      // the oracle is the plain union. Fresh dirs + sink name per
-      // invocation (stateful checkpoint).
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_tablefeed_").toString
-      val tbl = s"$root/tbl"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 0),
-        tbl, append = false)
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 1),
-        tbl, append = true)
-      Snapshots.commit(s, ev.filter(col("event_id") % 3 === 2),
-        tbl, append = true)
-      val sink = s"tablefeed_${sqlCatN.incrementAndGet()}"
-      val q = s.readStream.format("graft-snapshot")
-        .option("path", tbl).load()
-        .writeStream.format("memory").queryName(sink)
-        .option("checkpointLocation", s"$root/cp")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(sink).orderBy(col("event_id"))
-    }),
-
-    "ev_stream_snapshot_ingest" -> ((s, dir) => {
-      // streaming ingest into the lakehouse table, exactly-once: each
-      // micro-batch publishes one append generation stamped
-      // commit_ts = batchId — the atomic manifest rename IS the
-      // transaction marker, so a replayed batch is detected by one
-      // metadata-scale filter and skipped (no side ledger, no crash
-      // window; SnapshotStream scaladoc walks both crash shapes). The
-      // query REPLAYS batch 0 explicitly after the stream drains (the
-      // crash-after-publish replay) and requires the duplicate to be
-      // refused; the face read back must equal the plain batch table.
-      val tbl = s"$artifactRoot/snap_stream_ingest"
-      Snapshots.init(s, tbl)
-      val feed = Tables.streamEvents(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val q = SnapshotStream.ingest(feed, tbl, "ev_stream_snap_ingest")
-      q.processAllAvailable(); q.stop()
-      val replay = t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-      val dup = SnapshotStream.appendBatchExactlyOnce(s, tbl, 0L, replay)
-      require(dup.isEmpty,
-        "exactly-once ingest: replayed batch 0 must be skipped")
-      val latest = Snapshots.latestVersion(s, tbl).get
-      Snapshots.readAsOf(s, tbl, latest).orderBy(col("event_id"))
-    }),
-
-    "ev_stream_ingest_maintained" -> ((s, dir) => {
-      // the maintenance hook riding the ingest sink, END TO END on the
-      // fixture feed: a 5-file staging of the events projection streams
-      // one file per micro-batch, and every 2 batches the sink compacts
-      // through optimizePreserving and vacuums to a 3-generation
-      // retention (both under retryOnConflict) — so the streamed table
-      // stays BOUNDED in generations and head files (required below,
-      // not assumed) while the face stays value-equal to the plain
-      // batch projection. Maintenance may only change WHERE bytes
-      // live, never values — the oracle is the same projection.
-      val root = s"$artifactRoot/snap_stream_ingest_maint"
-      Snapshots.init(s, root)
-      val staging = s"$root/feed"
-      val tbl = s"$root/tbl"
-      t(s, dir, "events")
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          cents(col("value")).as("value_cents"))
-        .repartition(5)
-        .write.mode("overwrite").parquet(staging)
-      val raw = s.read.parquet(staging).schema
-      val feed = s.readStream.schema(raw)
-        .option("maxFilesPerTrigger", 1).parquet(staging)
-      val q = SnapshotStream.ingest(feed, tbl, "ev_stream_ingest_maint",
-        maintainEvery = 2, targetBytes = 1L << 30, retainVersions = 3)
-      q.processAllAvailable(); q.stop()
-      val versions = Snapshots.listGenerations(s, tbl)
-      require(versions.length <= 5,
-        s"maintained ingest left ${versions.length} generations — " +
-          "the maintenance hook did not run")
-      val head = versions.max
-      require(Snapshots.readAsOf(s, tbl, head).inputFiles.length <= 3,
-        "maintained ingest left an uncompacted head")
-      Snapshots.readAsOf(s, tbl, head).orderBy(col("event_id"))
-    }),
-
-    "ev_stream_cdc_apply" -> ((s, dir) => {
-      // the MERGE-INTO's stream twin, split at its algebraic seam:
-      // latest-wins is associative, so the STREAM runs only the per-key
-      // compaction (one max_by row of state per key, deletes riding
-      // through as data — a newer upsert may still resurrect the key)
-      // and the snapshot merge is the unmodified batch applyCdc over
-      // the drained state frame (keys × one row, not the raw feed).
-      // Same fixture split as ev_cdc_apply, whose oracle it shares.
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type"), cents(col("value")).as("value_cents"))
-      val base = Changes.latestByKey(ev.filter(col("event_id") % 2 === 0),
-        keyCols = Seq("user_id"), tsCol = "ts", tieCols = Seq("event_id"))
-      val feed = Tables.streamEvents(s, dir)
-        .filter(col("event_id") % 2 === 1)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type"), cents(col("value")).as("value_cents"))
-        .withColumn("op",
-          when(col("event_id") % 17 === 0, lit("d")).otherwise(lit("u")))
-      val latest = StreamCdc.latestChangeStream(feed,
-        keyCols = Seq("user_id"), tsCol = "ts", tieCols = Seq("event_id"))
-      val drained = Sessionize.runToMemory(s, latest, "ev_stream_cdc",
-        OutputMode.Complete, statePartitions = 8)
-      Changes.applyCdc(base, drained, keyCols = Seq("user_id"),
-        tsCol = "ts", tieCols = Seq("event_id"))
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("event_type"),
-          col("value_cents"))
-        .orderBy(col("user_id"))
-    }),
-
-    "ev_stream_cdc_mor" -> ((s, dir) => {
-      // MERGE-ON-READ CDC apply (the Iceberg v2 equality-delete /
-      // Flink upsert-sink shape): each micro-batch commits keyed
-      // tombstones + its winning rows as ONE metadata generation —
-      // zero pre-existing data files rewritten per sync, require-
-      // pinned below via manifest file-set containment across the
-      // whole stream. Winners resolve ts-aware against the current
-      // MOR face with deletes riding as soft rows, so an unordered
-      // multi-batch feed converges to exactly the batch applyCdc
-      // face (the ev_cdc_apply oracle). foldEqDeletes then
-      // materializes the same face copy-on-write; the folded count is
-      // require-pinned against the MOR read before the fold.
-      val tbl = s"$artifactRoot/snap_cdc_mor"
-      Snapshots.init(s, tbl)
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type"), cents(col("value")).as("value_cents"))
-      val base = Changes.latestByKey(ev.filter(col("event_id") % 2 === 0),
-        keyCols = Seq("user_id"), tsCol = "ts", tieCols = Seq("event_id"))
-        .withColumn("op", lit("u"))
-      Snapshots.commit(s, base, tbl, append = false)
-      // the change feed stages as 3 files → 3 micro-batches, split
-      // WITHOUT regard to event time (arrival order must not matter)
-      val staging = s"$artifactRoot/snap_cdc_mor_feed"
-      ev.filter(col("event_id") % 2 === 1)
-        .withColumn("op",
-          when(col("event_id") % 17 === 0, lit("d")).otherwise(lit("u")))
-        .repartition(3)
-        .write.mode("overwrite").parquet(staging)
-      val schema = s.read.parquet(staging).schema
-      val feed = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staging)
-      val q = SnapshotStream.upsertMor(feed, tbl, "ev_stream_cdc_mor_q",
-        keyCols = Seq("user_id"), tsCol = "ts", tieCols = Seq("event_id"))
-      q.processAllAvailable(); q.stop()
-      val head = Snapshots.latestVersion(s, tbl).get
-      require(head >= 3L,
-        s"the 3-file feed must commit one MOR generation per " +
-          s"micro-batch, head is v$head")
-      // ZERO-REWRITE pin: every sync's generation carries every file
-      // of its parent verbatim (tombstones + fresh files only)
-      (1L to head).foreach { v =>
-        val prev = Snapshots.generationFiles(s, tbl, v - 1)._1
-          .map(_._1).toSet
-        val cur = Snapshots.generationFiles(s, tbl, v)._1.map(_._1).toSet
-        require(prev.subsetOf(cur),
-          s"MOR sync v$v of the CDC stream rewrote a pre-existing file")
-      }
-      val morCount = Snapshots.readMorAsOf(s, tbl, head, Seq("user_id"))
-        .count()
-      val folded = Snapshots.foldEqDeletes(s, tbl, Seq("user_id"))
-      val face = Snapshots.readAsOf(s, tbl, folded)
-      require(face.count() == morCount,
-        "the folded copy-on-write face must carry exactly the " +
-          "merge-on-read rows")
-      face.filter(col("op") =!= "d").drop("op")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("ts_us"), col("event_type"),
-          col("value_cents"))
-        .orderBy(col("user_id"))
-    }),
-
-    "ev_asof_join" -> ((s, dir) => {
-      // backward as-of: each click picks up the user's most recent
-      // purchase at or before it (union-window shape, one shuffle+sort).
-      // Purchases pre-aggregate per (user, ts) so "most recent" is
-      // unambiguous — the operator's documented contract.
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("p_event_id"),
-          sum(cents(col("value"))).as("p_cents"))
-      TemporalJoin.asofBackward(clicks, purchases,
-        keyCols = Seq("user_id"), leftTsCol = "ts", rightTsCol = "ts",
-        valueCols = Seq("p_event_id", "p_cents"), prefix = "p_")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"),
-          col("p_p_event_id").as("p_event_id"),
-          col("p_p_cents").as("p_cents"),
-          unix_micros(col("p_ts")).as("p_ts_us"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_asof_fwd" -> ((s, dir) => {
-      // forward as-of: each click picks up the user's EARLIEST purchase
-      // at or after it ("next purchase after the click") — the mirror
-      // window of ev_asof_join, same single shuffle+sort
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("p_event_id"),
-          sum(cents(col("value"))).as("p_cents"))
-      TemporalJoin.asofForward(clicks, purchases,
-        keyCols = Seq("user_id"), leftTsCol = "ts", rightTsCol = "ts",
-        valueCols = Seq("p_event_id", "p_cents"), prefix = "p_")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"),
-          col("p_p_event_id").as("p_event_id"),
-          col("p_p_cents").as("p_cents"),
-          unix_micros(col("p_ts")).as("p_ts_us"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_asof_tol" -> ((s, dir) => {
-      // tolerance-bounded backward as-of: most recent purchase within 24
-      // hours of the click; staler matches are nulled, clicks always
-      // survive. Same plan as the unbounded variant plus a narrow
-      // projection — the fixture's median click->purchase lag is ~1.4
-      // days, so the cap nulls roughly half the matches.
-      val tolUs = 86400000000L
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("p_event_id"),
-          sum(cents(col("value"))).as("p_cents"))
-      TemporalJoin.asofBackwardTolerant(clicks, purchases,
-        keyCols = Seq("user_id"), leftTsCol = "ts", rightTsCol = "ts",
-        valueCols = Seq("p_event_id", "p_cents"),
-        lagOf = (l, r) => unix_micros(l) - unix_micros(r),
-        maxLag = lit(tolUs), prefix = "p_")
-        .select(col("event_id"), col("user_id"),
-          unix_micros(col("ts")).as("ts_us"),
-          col("p_p_event_id").as("p_event_id"),
-          col("p_p_cents").as("p_cents"),
-          unix_micros(col("p_ts")).as("p_ts_us"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_interval_join" -> ((s, dir) => {
-      // interval-OVERLAP join: odd events' validity windows × even
-      // events' windows per user — every overlapping pair with its
-      // exact overlap length. Buckets of one window-width make the
-      // join equi on (user, bucket) instead of a per-user cross join
-      // with a range predicate; the exact overlap filter clears bucket
-      // false positives and a pair surviving only in its FIRST common
-      // bucket emits exactly once — no distinct, no extra exchange.
-      // The oracle IS the quadratic form — the bucketing may only
-      // change cost, never pairs.
-      val e = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"),
-          unix_micros(col("ts")).as("s"))
-        .withColumn("e", col("s") + lit(300000000L))
-      val a = e.filter(col("event_id") % 2 === 1)
-        .select(col("user_id"), col("event_id").as("a_id"),
-          col("s").as("a_s"), col("e").as("a_e"))
-      val b = e.filter(col("event_id") % 2 === 0)
-        .select(col("user_id"), col("event_id").as("b_id"),
-          col("s").as("b_s"), col("e").as("b_e"))
-      TemporalJoin.intervalOverlapJoin(a, b, Seq("user_id"),
-        "a_s", "a_e", "b_s", "b_e", bucketMicros = 300000000L)
-        .select(col("user_id"), col("a_id"), col("b_id"),
-          (least(col("a_e"), col("b_e")) -
-            greatest(col("a_s"), col("b_s"))).as("overlap_us"))
-        .orderBy(col("user_id"), col("a_id"), col("b_id"))
-    }),
-
-    "ev_range_join" -> ((s, dir) => {
-      // bounded range join via interval bucketing: events within ±30 min
-      // of each signup, counted per signup (the count includes the signup
-      // itself — every signup row survives)
-      val w = 1800000000L
-      val ev = t(s, dir, "events")
-        .withColumn("ts_us", unix_micros(col("ts")))
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("event_id").as("s_event_id"), col("user_id"),
-          col("ts_us"))
-      val all = ev.select(col("user_id"), col("ts_us").as("e_ts_us"),
-        col("event_id").as("e_id"))
-      TemporalJoin.rangeJoinBucketed(signups, all,
-        keyCols = Seq("user_id"), leftTsUsCol = "ts_us",
-        rightTsUsCol = "e_ts_us", rangeMicros = w,
-        valueCols = Seq("e_id"))
-        .groupBy(col("s_event_id"), col("user_id"), col("ts_us"))
-        .agg(count(lit(1)).as("n_nearby"))
-        .orderBy(col("s_event_id"))
-    }),
-
-    "ev_stream_seasonal" -> ((s, dir) => {
-      // detrending at INGEST: the seasonal baseline is batch-built
-      // (cells change slowly — the batch-train/stream-apply split of
-      // ev_stream_anomaly) and broadcast; each arriving event joins its
-      // (type, dow, hr) cell statelessly and emits its exact-integer
-      // residual. Append mode, no watermark, no state store; the
-      // baseline is keys×7×24 rows at any volume. Shares ev_seasonal's
-      // oracle verbatim — batch-equal on full replay by construction.
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("event_type"), col("ts"),
-          cents(col("value")).as("cents"))
-      val base = broadcast(
-        Anomaly.seasonalBaseline(ev, "ts", "cents", Seq("event_type")))
-      val stream = Tables.streamEvents(s, dir)
-        .select(col("event_id"), col("event_type"), col("ts"),
-          cents(col("value")).as("cents"))
-        .withColumn("dow", (dayofweek(col("ts")) - 1).cast("long"))
-        .withColumn("hr", hour(col("ts")).cast("long"))
-        .join(base, Seq("event_type", "dow", "hr"))
-        .withColumn("residual_milli",
-          col("cents") * 1000L - col("mean_milli"))
-        .select(col("event_id"), col("event_type"), col("dow"),
-          col("hr"), col("cents"), col("n_cell"), col("mean_milli"),
-          col("residual_milli"))
-      Sessionize.runToMemory(s, stream, "ev_stream_seasonal",
-        OutputMode.Append)
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_stream_enrich" -> ((s, dir) => {
-      // stream-static enrichment: the event stream picks up its user's
-      // market segment from a broadcast dimension. Stateless (no
-      // watermark, no state store) — each micro-batch joins and emits;
-      // the explicit broadcast keeps the stream from re-shuffling every
-      // batch. Oracle = the plain batch left join.
-      import org.apache.spark.sql.streaming.OutputMode
-      val stream = Tables.streamEvents(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"))
-      val dim = t(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))
-      val enriched = Sessionize.enrichStream(stream, dim,
-        keyPairs = Seq("user_id" -> "c_custkey"))
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("c_mktsegment"))
-      Sessionize.runToMemory(s, enriched, "ev_stream_enrich",
-        OutputMode.Append)
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_stream_anomaly" -> ((s, dir) => {
-      // batch-train / stream-apply outlier flagging: per-user (med, mad)
-      // trains on batch history (a median is not computable
-      // row-at-a-time), the stream flags arriving purchases with ONE
-      // stateless join — no watermark, no state store. Over a full
-      // replay the flagged set equals batch ev_anomaly's by
-      // construction, so both share an oracle.
-      import org.apache.spark.sql.streaming.OutputMode
-      Tables.configure(s)
-      def purchases(df: DataFrame) =
-        df.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("event_id"),
-            cents(col("value")).as("cents"))
-      val thr = Anomaly.madThresholds(
-        purchases(t(s, dir, "events")), "cents", Seq("user_id"))
-      val flagged = Anomaly.applyMadThresholds(
-        purchases(Tables.streamEvents(s, dir)), thr, "cents")
-      Sessionize.runToMemory(s, flagged, "ev_stream_anomaly",
-        OutputMode.Append, statePartitions = 8)
-        .select(col("user_id"), col("event_id"), col("cents"),
-          col("med"), col("mad"), col("dev"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_stream_topk" -> ((s, dir) => {
-      // streaming leaderboard: per-user top-3 purchases maintained as
-      // bounded k-row state; Update emissions are version-tagged, the
-      // final board is each user's max-version rows (the bounded-replay
-      // reading of a stream that never closes). Oracle: the batch
-      // WindowGroupLimit top-k.
-      import org.apache.spark.sql.streaming.OutputMode
-      import org.apache.spark.sql.expressions.Window
-      import s.implicits._
-      val purchases = Tables.streamEvents(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id"),
-          cents(col("value")).as("cents"))
-        .as[Sessionize.TopKIn]
-      val out = Sessionize.topKStream(purchases, k = 3)
-      val tbl = Sessionize.runToMemory(s, out.toDF(), "ev_stream_topk",
-        OutputMode.Update, statePartitions = 8)
-      val w = Window.partitionBy(col("user_id"))
-      tbl.withColumn("__mv", max(col("version")).over(w))
-        .filter(col("version") === col("__mv"))
-        .select(col("user_id"), col("rank"), col("event_id"), col("cents"))
-        .orderBy(col("user_id"), col("rank"))
-    }),
-
-    "ev_stream_dedup" -> ((s, dir) => {
-      // streaming exact dedup validated the hard way: the staging input
-      // is the events table UNIONED WITH ITSELF, and the output must
-      // collapse back to exactly the source rows. A stateful filter, so
-      // first occurrences emit immediately — no flush sentinel needed.
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      val staging = s"$artifactRoot/stream_dedup_input"
-      ev.unionByName(ev).write.mode("overwrite").parquet(staging)
-      val schema = s.read.parquet(staging).schema
-      val deduped = Sessionize.dedupStream(
-        s.readStream.schema(schema).parquet(staging),
-        keys = Seq("event_id"))
-      import org.apache.spark.sql.streaming.OutputMode
-      Sessionize.runToMemory(s, deduped, "ev_stream_dedup",
-        OutputMode.Append, statePartitions = 8)
-        .select(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-          col("event_type"), cents(col("value")).as("value_cents"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_stream_windowed_agg" -> ((s, dir) => {
-      // the SAME aggregation as ev_windowed_agg, executed as an actual
-      // Structured Streaming query: parquet file source → complete-mode
-      // windowed aggregation → memory sink, drained synchronously. One
-      // oracle covers both execution models. Complete mode is the
-      // bounded-replay harness choice (one batch, full state re-emitted
-      // once); the production mode for an indefinite run is Append with
-      // a watermark — per-window emit-once plus state expiry — which
-      // the operator supports unchanged (ev_stream_sessionize runs it).
-      import org.apache.spark.sql.streaming.OutputMode
-      val stream = Tables.streamEvents(s, dir)
-      val agg = stream
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(cents(col("value"))).as("value_cents"))
-        .select(unix_micros(col("window.start")).as("win_start_us"),
-          col("event_type"), col("n"), col("value_cents"))
-      Sessionize.runToMemory(s, agg, "ev_stream_win", OutputMode.Complete,
-        statePartitions = 8)
-        .orderBy(col("win_start_us"), col("event_type"))
-    }),
-
-    "ev_stream_windowed_agg_append" -> ((s, dir) => {
-      // the PRODUCTION shape of the streaming windowed aggregation:
-      // event-time tumbling windows under a WATERMARK in APPEND mode.
-      // Each window emits exactly once when the watermark passes its
-      // end, and its state row expires with the emit — state is
-      // bounded by (group keys × windows inside the watermark horizon)
-      // where Complete mode re-emits and retains the WHOLE domain
-      // every batch (unbounded at a 100-TB feed's lifetime; the
-      // bounded-state contract is pinned in SessionizeSpec). The
-      // oracle is the batch aggregation restricted to FINALIZED
-      // windows — win_end ≤ max(ts) − delay — because windows the
-      // final watermark never cleared are still open and unemitted by
-      // the Append contract.
-      import org.apache.spark.sql.streaming.OutputMode
-      val agg = Tables.streamEvents(s, dir)
-        .withWatermark("ts", "30 minutes")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(cents(col("value"))).as("value_cents"))
-        .select(unix_micros(col("window.start")).as("win_start_us"),
-          col("event_type"), col("n"), col("value_cents"))
-      Sessionize.runToMemory(s, agg, "ev_stream_win_append",
-        OutputMode.Append, statePartitions = 8)
-        .orderBy(col("win_start_us"), col("event_type"))
-    }),
-
-    "ev_stream_range_join" -> ((s, dir) => {
-      // stream-stream bounded range join: all events within ±30 min of
-      // each signup, as raw pairs. Inner join emits when both sides have
-      // arrived (no sentinel); watermark + two-sided bound expire
-      // buffered state. Oracle = the plain theta join, pair-level.
-      import org.apache.spark.sql.streaming.OutputMode
-      def stream = Tables.streamEvents(s, dir)
-      val signups = stream.filter(col("event_type") === "signup")
-        .select(col("event_id").as("s_event_id"), col("user_id"),
-          col("ts").as("s_ts"))
-      val all = stream.select(col("event_id").as("e_id"),
-        col("user_id").as("e_user"), col("ts").as("e_ts"))
-      val joined = Sessionize.rangeJoinStream(signups, all,
-        keyPairs = Seq("user_id" -> "e_user"),
-        leftTsCol = "s_ts", rightTsCol = "e_ts", rangeSeconds = 1800)
-      Sessionize.runToMemory(s,
-        joined.select(col("s_event_id"), col("e_id")),
-        "ev_stream_rj", OutputMode.Append, statePartitions = 8)
-        .orderBy(col("s_event_id"), col("e_id"))
-    }),
-
-    "ev_stream_asof_join" -> ((s, dir) => {
-      // stream-stream BACKWARD AS-OF join (custom flatMapGroupsWithState
-      // state machine — Spark's native stream-stream joins can't express
-      // "latest right ≤ left ts"): clicks pick up the user's most recent
-      // prior purchase, left-outer, validated against the SAME DuckDB
-      // ASOF LEFT JOIN oracle as the batch ev_asof_join. Both sides ride
-      // ONE tagged stream (single watermark), so a single far-future
-      // sentinel flushes everything; purchases pre-aggregate per
-      // (user, ts) — the operator's uniqueness contract, shared with the
-      // batch twin.
-      import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("key"), col("ts"),
-          lit(true).as("is_left"), col("event_id").as("id"),
-          lit(0L).as("cents"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("id"),
-          sum(cents(col("value"))).as("cents"))
-        .select(col("user_id").as("key"), col("ts"),
-          lit(false).as("is_left"), col("id"), col("cents"))
-      val sentinel = s.range(1).select(lit(-1L).as("key"),
-        expr(s"timestamp_micros($sentinelUs)").as("ts"),
-        lit(true).as("is_left"), lit(-1L).as("id"), lit(0L).as("cents"))
-      val staging = s"$artifactRoot/stream_asof_input"
-      val schema = stageWithSentinel(s,
-        clicks.unionByName(purchases).unionByName(sentinel), staging,
-        guardCol = "key", horizonUs = 3600000000L) // the watermark delay
-      val out = Sessionize.asofJoinStream(
-        s.readStream.schema(schema).parquet(staging)
-          .as[Sessionize.AsofIn])
-      Sessionize.runToMemory(s, out.toDF(), "ev_stream_asof",
-        OutputMode.Append, statePartitions = 8)
-        .filter(col("l_id") >= 0)
-        .select(col("l_id").as("event_id"), col("key").as("user_id"),
-          col("l_ts_us").as("ts_us"), col("r_id").as("p_event_id"),
-          col("r_cents").as("p_cents"), col("r_ts_us").as("p_ts_us"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_stream_asof_tol" -> ((s, dir) => {
-      // stream-stream backward as-of with BOUNDED lookback (24 h): each
-      // click picks up the user's most recent purchase within a day
-      // before it — the streaming twin of the batch asofBackwardTolerant
-      // and the same DuckDB oracle as ev_asof_tol. The bound is what
-      // lets the state machine's retained right FULLY expire (the
-      // unbounded variant keeps one right per key for the key's
-      // lifetime), the posture a churning keyspace needs. Same
-      // staging/sentinel shape as ev_stream_asof_join.
-      import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      val tolSec = 86400L
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("key"), col("ts"),
-          lit(true).as("is_left"), col("event_id").as("id"),
-          lit(0L).as("cents"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("id"),
-          sum(cents(col("value"))).as("cents"))
-        .select(col("user_id").as("key"), col("ts"),
-          lit(false).as("is_left"), col("id"), col("cents"))
-      val sentinel = s.range(1).select(lit(-1L).as("key"),
-        expr(s"timestamp_micros($sentinelUs)").as("ts"),
-        lit(true).as("is_left"), lit(-1L).as("id"), lit(0L).as("cents"))
-      val staging = s"$artifactRoot/stream_asof_tol_input"
-      val schema = stageWithSentinel(s,
-        clicks.unionByName(purchases).unionByName(sentinel), staging,
-        guardCol = "key", horizonUs = 3600000000L) // the watermark delay
-      val out = Sessionize.asofJoinStream(
-        s.readStream.schema(schema).parquet(staging)
-          .as[Sessionize.AsofIn],
-        maxLookbackSeconds = Some(tolSec))
-      Sessionize.runToMemory(s, out.toDF(), "ev_stream_asof_tol",
-        OutputMode.Append, statePartitions = 8)
-        .filter(col("l_id") >= 0)
-        .select(col("l_id").as("event_id"), col("key").as("user_id"),
-          col("l_ts_us").as("ts_us"), col("r_id").as("p_event_id"),
-          col("r_cents").as("p_cents"), col("r_ts_us").as("p_ts_us"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_stream_asof_fwd" -> ((s, dir) => {
-      // stream-stream FORWARD as-of, tolerance-bounded (24 h): each
-      // click picks up the user's EARLIEST purchase within a day after
-      // it. The tolerance is what makes forward as-of streamable at all
-      // (finalize once the watermark passes ts + tol) and also what
-      // lets this state machine fully expire, unlike the backward
-      // variant's one-row-per-key tail. Same staging/sentinel shape as
-      // ev_stream_asof_join.
-      import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      val tolSec = 86400L
-      val ev = t(s, dir, "events")
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id").as("key"), col("ts"),
-          lit(true).as("is_left"), col("event_id").as("id"),
-          lit(0L).as("cents"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .groupBy(col("user_id"), col("ts"))
-        .agg(max(col("event_id")).as("id"),
-          sum(cents(col("value"))).as("cents"))
-        .select(col("user_id").as("key"), col("ts"),
-          lit(false).as("is_left"), col("id"), col("cents"))
-      val sentinel = s.range(1).select(lit(-1L).as("key"),
-        expr(s"timestamp_micros($sentinelUs)").as("ts"),
-        lit(true).as("is_left"), lit(-1L).as("id"), lit(0L).as("cents"))
-      val staging = s"$artifactRoot/stream_asof_fwd_input"
-      val schema = stageWithSentinel(s,
-        clicks.unionByName(purchases).unionByName(sentinel), staging,
-        guardCol = "key",
-        horizonUs = 3600000000L + tolSec * 1000000L) // delay + tolerance
-      val out = Sessionize.asofFwdJoinStream(
-        s.readStream.schema(schema).parquet(staging)
-          .as[Sessionize.AsofIn], tolSeconds = tolSec)
-      Sessionize.runToMemory(s, out.toDF(), "ev_stream_asof_fwd",
-        OutputMode.Append, statePartitions = 8)
-        .filter(col("l_id") >= 0)
-        .select(col("l_id").as("event_id"), col("key").as("user_id"),
-          col("l_ts_us").as("ts_us"), col("r_id").as("p_event_id"),
-          col("r_cents").as("p_cents"), col("r_ts_us").as("p_ts_us"))
-        .orderBy(col("event_id"))
-    }),
-
-    "ev_stream_range_join_outer" -> ((s, dir) => {
-      // stream-stream LEFT-OUTER bounded range join: each signup pairs
-      // with the user's purchases within ±30 min, and a signup with NO
-      // such purchase still emits (null right side) once the watermark
-      // passes its match window. Unmatched-left emission is
-      // watermark-driven, so a bounded replay needs a far-future flush
-      // row per side (same discipline as ev_stream_sessionize); the
-      // sentinels advance both watermarks past every real row's window,
-      // and the observe()-backed require fails loudly if fixture
-      // timestamps ever grow into the sentinel's horizon. Oracle = the
-      // batch left theta join, including the zero-match rows.
-      import org.apache.spark.sql.streaming.OutputMode
-      // stage only the two event types the join reads — the other ~80%
-      // of the table could never match and would only inflate the
-      // staging write and the per-batch scan
-      val ev = t(s, dir, "events")
-        .filter(col("event_type").isin("signup", "purchase"))
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      val sentinels = s.range(1).select(
-        explode(array(
-          struct(lit(-1L).as("event_id"),
-            expr(s"timestamp_micros($sentinelUs)").as("ts"),
-            lit(-1L).as("user_id"), lit("signup").as("event_type")),
-          struct(lit(-2L).as("event_id"),
-            expr(s"timestamp_micros($sentinelUs)").as("ts"),
-            lit(-1L).as("user_id"), lit("purchase").as("event_type"))))
-          .as("r"))
-        .select(col("r.event_id"), col("r.ts"), col("r.user_id"),
-          col("r.event_type"))
-      val staging = s"$artifactRoot/stream_range_outer_input"
-      val schema = stageWithSentinel(s, ev.unionByName(sentinels), staging,
-        guardCol = "user_id",
-        horizonUs = 3600000000L + 1800000000L) // watermark delay + range
-      def stream = s.readStream.schema(schema).parquet(staging)
-      val signups = stream.filter(col("event_type") === "signup")
-        .select(col("event_id").as("s_event_id"), col("user_id"),
-          col("ts").as("s_ts"))
-      val purchases = stream.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("e_id"), col("user_id").as("e_user"),
-          col("ts").as("e_ts"))
-      val joined = Sessionize.rangeJoinStream(signups, purchases,
-        keyPairs = Seq("user_id" -> "e_user"),
-        leftTsCol = "s_ts", rightTsCol = "e_ts", rangeSeconds = 1800,
-        joinType = "left_outer")
-      Sessionize.runToMemory(s,
-        joined.select(col("s_event_id"), col("e_id")),
-        "ev_stream_rj_outer", OutputMode.Append, statePartitions = 8)
-        .filter(col("s_event_id") >= 0)
-        // no signup mixes null and non-null e_id rows, so null placement
-        // never actually orders within a group — pinned anyway for
-        // engine-portable determinism
-        .orderBy(col("s_event_id"), col("e_id").asc_nulls_first)
-    }),
-
-    "ev_stream_latest" -> ((s, dir) => {
-      // streaming CDC compaction, windowed: the latest event per user
-      // per hour as a plain watermarked aggregation — max_by over the
-      // (ts, event_id) total order needs no custom state, emits each
-      // (window, user) cell once the watermark closes it, and state per
-      // cell is ONE row (the running argmax), the property that keeps
-      // indefinite compaction viable. Complete mode is this bounded
-      // replay's harness choice only (the single batch re-emits full
-      // state once); an indefinitely-running compaction runs the SAME
-      // aggregation in Append mode, where the watermark emits each
-      // closed cell exactly once and expires its state.
-      import org.apache.spark.sql.streaming.OutputMode
-      val stream = Tables.streamEvents(s, dir)
-      val agg = stream
-        .withWatermark("ts", "10 minutes")
-        .groupBy(window(col("ts"), "1 hour"), col("user_id"))
-        .agg(max_by(
-          struct(col("event_id"), unix_micros(col("ts")).as("ts_us"),
-            col("event_type"), cents(col("value")).as("value_cents")),
-          struct(col("ts"), col("event_id"))).as("last"))
-        .select(unix_micros(col("window.start")).as("win_start_us"),
-          col("user_id"), col("last.event_id").as("event_id"),
-          col("last.ts_us").as("ts_us"), col("last.event_type"),
-          col("last.value_cents"))
-      Sessionize.runToMemory(s, agg, "ev_stream_latest",
-        OutputMode.Complete, statePartitions = 8)
-        .orderBy(col("win_start_us"), col("user_id"))
-    }),
-
-    "ev_stream_sessionize" -> ((s, dir) => {
-      // the flatMapGroupsWithState path against the SAME oracle as the
-      // batch ev_sessionize: parquet file source → stateful sessionize →
-      // Append-mode memory sink. Append emits a session only when the
-      // watermark passes its timeout, so a far-future sentinel event
-      // (user_id -1, filtered from the output) is appended to the input:
-      // after the data batch advances the watermark past every real
-      // session's gap, the no-data microbatch fires all the timeouts.
-      import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      // Static far-future sentinel (2100-01-01 UTC): no driver-side max()
-      // action needed — any fixture timestamp precedes it by far more than
-      // the session gap, so the watermark after the single data batch
-      // clears every real session's timeout. The staging write stays
-      // partitioned (the file source drains all parts in one microbatch);
-      // a coalesce(1) here would serialize the write for no semantic gain.
-      val sentinel = s.range(1).select(
-        lit(-1L).as("event_id"),
-        expr(s"timestamp_micros($sentinelUs)").as("ts"),
-        lit(-1L).as("user_id"),
-        lit("sentinel").as("event_type"),
-        lit(0.0).as("value"))
-      val staging = s"$artifactRoot/stream_sessionize_input"
-      val schema = stageWithSentinel(s, ev.unionByName(sentinel), staging,
-        guardCol = "user_id",
-        horizonUs = 30L * 60L * 1000000L) // the session gap
-      val sessions = Sessionize.sessionizeStream(
-        s.readStream.schema(schema).parquet(staging)
-          .as[Sessionize.Event],
-        gapMinutes = 30)
-      Sessionize.runToMemory(s, sessions.toDF(), "ev_stream_sess",
-        OutputMode.Append, statePartitions = 8)
-        .filter(col("user_id") >= 0)
-        // sessions of one user never overlap (separated by > gap), so
-        // start order IS the batch session index
-        .withColumn("session_idx",
-          row_number().over(Window.partitionBy(col("user_id"))
-            .orderBy(col("session_start"))).cast("long"))
-        .select(col("user_id"), col("session_idx"), col("n_events"),
-          unix_micros(col("session_start")).as("start_us"),
-          unix_micros(col("session_end")).as("end_us"),
-          col("value_cents"))
-        .orderBy(col("user_id"), col("session_idx"))
-    }),
-
-    "ev_stream_funnel" -> ((s, dir) => {
-      // the per-user step-state machine against the SAME oracle as the
-      // batch ev_funnel: step-typed events buffer in state until the
-      // watermark passes the user's quiet horizon, then the in-order
-      // fold runs once and emits the converting user's row (Append — a
-      // funnel row is final by construction when it flushes). The
-      // far-future sentinel advances the watermark past every real
-      // user's horizon so the no-data microbatch fires all timeouts;
-      // its event_type is not a step, so it never reaches state.
-      import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val sentinel = s.range(1).select(
-        lit(-1L).as("event_id"),
-        expr(s"timestamp_micros($sentinelUs)").as("ts"),
-        lit(-1L).as("user_id"),
-        lit("sentinel").as("event_type"),
-        lit(0.0).as("value"))
-      val staging = s"$artifactRoot/stream_funnel_input"
-      val schema = stageWithSentinel(s, ev.unionByName(sentinel), staging,
-        guardCol = "user_id",
-        horizonUs = 30L * 60L * 1000000L) // the funnel quiet horizon
-      val hits = FunnelStream.funnelStream(
-        s.readStream.schema(schema).parquet(staging)
-          .as[Sessionize.Event],
-        steps = Seq("signup", "click", "purchase"), horizonMinutes = 30)
-      Sessionize.runToMemory(s, hits.toDF(), "ev_stream_funnel_sink",
-        OutputMode.Append, statePartitions = 8)
-        // uncompleted steps are absent from times_us; try_element_at
-        // nulls them — the batch twin's left-join null columns
-        .select(col("user_id"),
-          expr("try_element_at(times_us, 1)").as("t1_us"),
-          expr("try_element_at(times_us, 2)").as("t2_us"),
-          expr("try_element_at(times_us, 3)").as("t3_us"),
-          col("funnel_depth"))
-        .orderBy(col("user_id"))
-    }),
-
-    "ev_stream_coverage" -> ((s, dir) => {
-      // interval union's stream twin against the batch ev_coverage
-      // oracle: per-user event times buffer in state until the
-      // watermark clears the quiet horizon, then the island fold
-      // (sort, running max of ends, strict-gap boundary) runs once and
-      // emits the user's maximal islands — watermark-final, because a
-      // late long interval can swallow islands an eager merge would
-      // already have shipped. The flush sentinel rides user -1: its
-      // interval is real to the state machine but filtered from the
-      // sink before the compare.
-      import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val sentinel = s.range(1).select(
-        lit(-1L).as("event_id"),
-        expr(s"timestamp_micros($sentinelUs)").as("ts"),
-        lit(-1L).as("user_id"),
-        lit("sentinel").as("event_type"),
-        lit(0.0).as("value"))
-      val staging = s"$artifactRoot/stream_coverage_input"
-      val schema = stageWithSentinel(s, ev.unionByName(sentinel), staging,
-        guardCol = "user_id",
-        horizonUs = 30L * 60L * 1000000L)
-      val islands = CoverageStream.coverageStream(
-        s.readStream.schema(schema).parquet(staging)
-          .as[Sessionize.Event],
-        windowUs = 300000000L, horizonMinutes = 30)
-      Sessionize.runToMemory(s, islands.toDF(), "ev_stream_coverage_sink",
-        OutputMode.Append, statePartitions = 8)
-        .filter(col("user_id") >= 0)
-        .select(col("user_id"), col("island"), col("island_start"),
-          col("island_end"), col("n_intervals"), col("covered"))
-        .orderBy(col("user_id"), col("island"))
-    }),
-
-    "ev_stream_interval_join" -> ((s, dir) => {
-      // the interval-overlap join's stream twin against the batch
-      // quadratic oracle: both sides' intervals (odd event_ids = A,
-      // even = B — the same parity split the batch query uses) buffer
-      // per user until the watermark clears the quiet horizon, then
-      // the pairing runs once over the settled buffer — watermark-
-      // final, because either member of a pair can arrive late and
-      // Append mode cannot retract an early miss. The flush sentinel
-      // rides user -1 and is filtered before the compare.
-      import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val sentinel = s.range(1).select(
-        lit(-1L).as("event_id"),
-        expr(s"timestamp_micros($sentinelUs)").as("ts"),
-        lit(-1L).as("user_id"),
-        lit("sentinel").as("event_type"),
-        lit(0.0).as("value"))
-      val staging = s"$artifactRoot/stream_interval_join_input"
-      val schema = stageWithSentinel(s, ev.unionByName(sentinel), staging,
-        guardCol = "user_id",
-        horizonUs = 30L * 60L * 1000000L)
-      val pairs = IntervalJoinStream.intervalJoinStream(
-        s.readStream.schema(schema).parquet(staging)
-          .as[Sessionize.Event],
-        windowUs = 300000000L, horizonMinutes = 30)
-      Sessionize.runToMemory(s, pairs.toDF(), "ev_stream_interval_join_sink",
-        OutputMode.Append, statePartitions = 8)
-        .filter(col("user_id") >= 0)
-        .select(col("user_id"), col("a_id"), col("b_id"), col("overlap_us"))
-        .orderBy(col("user_id"), col("a_id"), col("b_id"))
-    }),
-
-    "ev_stream_transitions" -> ((s, dir) => {
-      // the transition matrix's stream twin against the batch oracle:
-      // per-user timelines buffer in state until the watermark passes
-      // the quiet horizon, the sort+lag fold emits each adjacency once
-      // (start sentinel included), and the matrix is a batch count over
-      // the drained edges. The flush sentinel rides user -1 — its
-      // timeline is real to the state machine but filtered from the
-      // drained frame before counting.
-      import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val sentinel = s.range(1).select(
-        lit(-1L).as("event_id"),
-        expr(s"timestamp_micros($sentinelUs)").as("ts"),
-        lit(-1L).as("user_id"),
-        lit("sentinel").as("event_type"),
-        lit(0.0).as("value"))
-      val staging = s"$artifactRoot/stream_transitions_input"
-      val schema = stageWithSentinel(s, ev.unionByName(sentinel), staging,
-        guardCol = "user_id",
-        horizonUs = 30L * 60L * 1000000L)
-      val edges = FunnelStream.transitionsStream(
-        s.readStream.schema(schema).parquet(staging)
-          .as[Sessionize.Event],
-        horizonMinutes = 30)
-      Sessionize.runToMemory(s, edges.toDF(), "ev_stream_transitions_sink",
-        OutputMode.Append, statePartitions = 8)
-        .filter(col("user_id") >= 0)
-        .groupBy(col("prev"), col("next"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy(col("prev"), col("next"))
-    }),
-
-    "ev_stream_top_paths" -> ((s, dir) => {
-      // topPaths' stream twin against the batch oracle: per-user
-      // timelines settle watermark-final (windows must never weld
-      // across a late arrival), each settled timeline emits its 3-step
-      // windows once, and the top-10 rank is a batch count over the
-      // drained (user, path) rows — as the transition matrix is a
-      // count over drained edges. Flush sentinel rides user -1.
-      import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      import org.apache.spark.sql.expressions.Window
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val sentinel = s.range(1).select(
-        lit(-1L).as("event_id"),
-        expr(s"timestamp_micros($sentinelUs)").as("ts"),
-        lit(-1L).as("user_id"),
-        lit("sentinel").as("event_type"),
-        lit(0.0).as("value"))
-      val staging = s"$artifactRoot/stream_top_paths_input"
-      val schema = stageWithSentinel(s, ev.unionByName(sentinel), staging,
-        guardCol = "user_id",
-        horizonUs = 30L * 60L * 1000000L)
-      val paths = FunnelStream.pathsStream(
-        s.readStream.schema(schema).parquet(staging)
-          .as[Sessionize.Event],
-        len = 3, horizonMinutes = 30)
-      Sessionize.runToMemory(s, paths.toDF(), "ev_stream_top_paths_sink",
-        OutputMode.Append, statePartitions = 8)
-        .filter(col("user_id") >= 0)
-        .groupBy(col("path")).agg(count(lit(1)).as("n"))
-        .withColumn("rank", row_number()
-          .over(Window.orderBy(col("n").desc, col("path"))).cast("long"))
-        .filter(col("rank") <= 10)
-        .orderBy(col("rank"))
-    }),
-
-    "ev_stream_retention" -> ((s, dir) => {
-      // cohort retention against the SAME oracle as the batch
-      // ev_retention: the per-user state machine finalizes each user's
-      // (cohort_day, active-week) memberships when the watermark clears
-      // their horizon — day-granular state, at-most-once membership
-      // rows — and the matrix is one count over the sink. The sentinel
-      // (non-anchor type, user -1) advances the watermark and emits
-      // nothing.
-      import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = t(s, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val sentinel = s.range(1).select(
-        lit(-1L).as("event_id"),
-        expr(s"timestamp_micros($sentinelUs)").as("ts"),
-        lit(-1L).as("user_id"),
-        lit("sentinel").as("event_type"),
-        lit(0.0).as("value"))
-      val staging = s"$artifactRoot/stream_retention_input"
-      val schema = stageWithSentinel(s, ev.unionByName(sentinel), staging,
-        guardCol = "user_id",
-        horizonUs = 30L * 60L * 1000000L)
-      val rows = FunnelStream.retentionStream(
-        s.readStream.schema(schema).parquet(staging)
-          .as[Sessionize.Event],
-        anchorType = "signup", horizonMinutes = 30)
-      Sessionize.runToMemory(s, rows.toDF(), "ev_stream_retention_sink",
-        OutputMode.Append, statePartitions = 8)
-        .filter(col("user_id") >= 0)
-        // membership rows are per-user at-most-once, so count(*) IS the
-        // distinct-user count the batch matrix reports
-        .groupBy(col("cohort_day"), col("week_offset"))
-        .agg(count(lit(1)).as("n_users"))
-        .orderBy(col("cohort_day"), col("week_offset"))
-    }),
-
-    "ev_stream_attribution" -> ((s, dir) => {
-      // linear attribution as a watermark-final per-user state machine
-      // against the SAME oracle as the batch ev_attribution: purchases
-      // and clicks ride one tagged stream; a purchase's credit rows
-      // emit when the watermark clears its timestamp (every qualifying
-      // click has ts <= purchase ts, so the split is final — Append
-      // without retraction). The sentinel rides as a touch for user -1
-      // (touches never emit), advancing the watermark past every real
-      // purchase so the no-data microbatch flushes the suite.
-      import s.implicits._
-      import org.apache.spark.sql.streaming.OutputMode
-      val ev = t(s, dir, "events")
-        .filter(col("event_type").isin("purchase", "click"))
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-      val sentinel = s.range(1).select(
-        lit(-1L).as("event_id"),
-        expr(s"timestamp_micros($sentinelUs)").as("ts"),
-        lit(-1L).as("user_id"),
-        lit("click").as("event_type"),
-        lit(0.0).as("value"))
-      val staging = s"$artifactRoot/stream_attr_input"
-      val schema = stageWithSentinel(s, ev.unionByName(sentinel), staging,
-        guardCol = "user_id",
-        horizonUs = 21600000000L) // the 6 h lookback = watermark delay
-      val tagged = s.readStream.schema(schema).parquet(staging)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          (col("event_type") === "purchase").as("isConv"),
-          cents(col("value")).as("cents"))
-        .as[AttributionStream.AttrEvent]
-      val out = AttributionStream.linearStream(tagged,
-        lookbackMicros = 21600000000L, delay = "6 hours")
-      Sessionize.runToMemory(s, out.toDF(), "ev_stream_attr_sink",
-        OutputMode.Append, statePartitions = 8)
-        .filter(col("user_id") >= 0)
-        .select(col("user_id"), col("p_event_id"), col("p_ts_us"),
-          col("p_cents"), col("c_event_id"), col("c_ts_us"),
-          col("n_touches"), col("credit"))
-        .orderBy(col("p_event_id"), coalesce(col("c_event_id"), lit(-1L)))
-    }),
-
-    // ---- Multimodal binary columns -----------------------------------
-
-    "mm_payload_stats" -> ((s, dir) => {
-      val assets = Multimodal.syntheticAssets(par(s)(t(s, dir, "documents")))
-      Multimodal.payloadStats(col("payload")).foldLeft(assets) {
-        case (d, (n, c)) => d.withColumn(n, c)
-      }
-        .select(col("asset_id"), col("payload_bytes"), col("payload_md5"))
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_dedup" -> ((s, dir) => {
-      // exact media dedup by payload digest: the digest is computed where
-      // the blob lives, so the exchange carries (16-byte md5, id) pairs —
-      // the payloads themselves never shuffle
-      Multimodal.payloadDedup(
-        Multimodal.syntheticAssets(par(s)(t(s, dir, "documents"))))
-        .orderBy(col("payload_md5"))
-    }),
-
-    "mm_features_bmp" -> ((s, dir) => {
-      // REAL decode path: the engine constructs an actual BMP per doc
-      // (closed-form dims) and must recover width/height by parsing the
-      // header bytes with BmpCodec; the oracle computes the same dims
-      // arithmetically, so a drift in either the byte layout or the
-      // little-endian parse breaks the match
-      Multimodal.extractFeatures(
-        Multimodal.syntheticBmpAssets(par(s)(t(s, dir, "documents"))),
-        Multimodal.BmpCodec)
-        .select(col("asset_id"), col("width"), col("height"))
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_features_gif" -> ((s, dir) => {
-      // REAL animated-GIF decode path: spec-valid GIF89a per doc
-      // (closed-form screen dims, frame count, palette size, delays)
-      // and the engine recovers the metadata by WALKING the block
-      // stream — extensions, descriptors, length-prefixed LZW
-      // sub-blocks — not by fixed offsets; the oracle replays the
-      // generator arithmetic. duration_ms = frames · delay_cs · 10.
-      Multimodal.extractGifMeta(
-        Multimodal.syntheticGifAssets(par(s)(t(s, dir, "documents"))))
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_audio_meta" -> ((s, dir) => {
-      // REAL audio decode path: the engine constructs an actual PCM WAV
-      // per doc (closed-form channels/rate/samples) and must recover the
-      // metadata by parsing the RIFF header bytes with WavCodec; the
-      // duration is exact integer arithmetic (dataSize*1000/byteRate),
-      // which the oracle reproduces after the block-align cancellation
-      Multimodal.extractAudioMeta(
-        Multimodal.syntheticWavAssets(par(s)(t(s, dir, "documents"))))
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_audio_loudness" -> ((s, dir) => {
-      // past the header and INTO the data chunk: full PCM payloads with
-      // closed-form int16 samples, and the engine computes sample-level
-      // loudness (peak, clipped count, exact sum-of-squares) by actually
-      // reading the interleaved samples out of the RIFF bytes; the
-      // oracle replays the sample formula arithmetically. mean_sq is
-      // the single IEEE division of exact fields at read time.
-      Multimodal.extractAudioStats(
-        Multimodal.syntheticWavAssetsWithSamples(
-          par(s)(t(s, dir, "documents"))))
-        .withColumn("mean_sq",
-          col("sumsq").cast("double") / col("n_samples").cast("double"))
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_audio_silence" -> ((s, dir) => {
-      // dead-air detection INSIDE the data chunk: assets carry emergent
-      // loud/quiet structure (closed-form samples, nobody is told the
-      // labels), the engine window-peaks the real PCM bytes and merges
-      // silent runs into frame intervals; the oracle replays the sample
-      // formula, re-derives the peaks, and rebuilds the islands in SQL.
-      // Window 50 frames, threshold 256 — quiet windows peak ≤ 64.
-      Multimodal.extractSilenceSegments(
-        Multimodal.syntheticWavSilenceAssets(par(s)(t(s, dir, "documents"))),
-        window = 50, threshold = 256)
-        .orderBy(col("asset_id"), col("seg_idx"))
-    }),
-
-    "mm_audio_decimate" -> ((s, dir) => {
-      // REAL audio down-res: full-PCM WAVs decimated 4× (every 4th
-      // frame, channels aligned) and re-encoded spec-valid; the probes
-      // (new rate, frame count, channel-0 samples at first/middle/last
-      // kept frame) are re-read from the re-encoded bytes and replayed
-      // arithmetically by the oracle — the mm_resize loop for audio.
-      Multimodal.extractDecimateProbes(
-        Multimodal.syntheticWavAssetsWithSamples(
-          par(s)(t(s, dir, "documents"))),
-        factor = 4)
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_audio_fingerprint_pairs" -> ((s, dir) => {
-      // perceptual AUDIO near-dup, completing the text/image/audio
-      // triad: channel-0 frames → 65 equal windows → exact-long
-      // energies → 64 gradient bits (e(b+1) > e(b)); every 17th doc
-      // gets a perturbed sibling (each 97th sample one step toward
-      // zero — re-encode-noise scale) that the gradient hash must
-      // shrug off, then hamming-≤3 pairs via the same pigeonhole
-      // banding as image dHash. 8 bytes per asset leave the blob scan;
-      // the oracle replays the closed-form samples arithmetically and
-      // brute-forces the pairs, so the banding is proven lossless.
-      Dedup.hammingNearDupPairs(
-        Multimodal.extractAudioFingerprint(
-          Multimodal.syntheticWavNearDupAssets(
-            par(s)(t(s, dir, "documents")))),
-        idCol = "asset_id", sigCol = "afp", bits = 64, maxDist = 3)
-        .select(col("id_a"), col("id_b"), col("dist"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "mm_video_fingerprint_pairs" -> ((s, dir) => {
-      // perceptual VIDEO near-dup, closing the text/image/audio/video
-      // quad: a video's fingerprint is the SET of its 4-frame
-      // signature shingles (order-aware where bag-of-frames is not,
-      // trim-robust where fixed alignment is not); every 7th doc gets
-      // an intro-trimmed twin (first 1 + id%3 frames cut) that keeps
-      // (n-k-3)/(n-3) of the shingle set and must clear Jaccard 0.5,
-      // while all other videos share no shingle. The closed-form
-      // fixture lets the oracle re-derive pairs AND exact scores with
-      // independent arithmetic; only 16-byte shingle keys leave the
-      // scan.
-      Multimodal.videoShingleNearDupPairs(
-        Multimodal.syntheticVideoNearDupAssets(
-          par(s)(t(s, dir, "documents"))),
-        w = 4, threshold = 0.5)
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "mm_video_meta" -> ((s, dir) => {
-      // REAL video decode path: canonical AVI headers per doc with
-      // closed-form geometry/timing, recovered by AviCodec's RIFF parse;
-      // duration_ms = µsPerFrame * nFrames / 1000, exact integers
-      Multimodal.extractVideoMeta(
-        Multimodal.syntheticAviAssets(par(s)(t(s, dir, "documents"))))
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_av_align" -> ((s, dir) => {
-      // audio-video alignment: which REAL scene cuts (decoded from the
-      // frame-sig assets) land inside REAL dead air (window-peaked from
-      // the WAV PCM bytes) — the clip-segmentation metric a captioning
-      // pipeline computes before cutting assets into training clips.
-      // Both extractors run their genuine decode; only per-asset
-      // metadata rows meet at the equi-join (blobs never move). The
-      // timelines bridge at 4 audio frames per video frame; the oracle
-      // re-derives both closed forms arithmetically and replays the
-      // same containment.
-      val docs = par(s)(t(s, dir, "documents"))
-      Multimodal.alignCutsToSilence(
-        Multimodal.keyframes(Multimodal.syntheticFrameSigAssets(docs)),
-        Multimodal.extractSilenceSegments(
-          Multimodal.syntheticWavSilenceAssets(docs),
-          window = 50, threshold = 256),
-        samplesPerFrame = 4L)
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_scene_cuts" -> ((s, dir) => {
-      // shot-boundary detection over per-frame signature arrays: cuts =
-      // positions whose signature differs from the predecessor — one
-      // narrow array expression, no shuffle, blobs never move. The
-      // fixture's closed-form runs let the oracle derive cut positions
-      // by independent arithmetic (every L-th frame), not array replay.
-      Multimodal.sceneCuts(
-        Multimodal.syntheticFrameSigAssets(par(s)(t(s, dir, "documents"))))
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_keyframes" -> ((s, dir) => {
-      // one row per scene: ordinal, opening frame, its signature — the
-      // frame-sample stream a per-frame model would consume; fixture
-      // runs are closed-form so the oracle derives every row (scene k
-      // of doc starts at k·L+1 with signature k) arithmetically
-      Multimodal.keyframes(
-        Multimodal.syntheticFrameSigAssets(par(s)(t(s, dir, "documents"))))
-        .orderBy(col("asset_id"), col("scene_idx"))
-    }),
-
-    "mm_features_errors" -> ((s, dir) => {
-      // routed-error decode path: every 13th payload is truncated inside
-      // the BMP file header, and routeErrors=true must convert the decode
-      // failure into a decode_error row (null dims + the exception
-      // message) instead of aborting the job; clean rows must still
-      // recover their closed-form dims via the real header parse
-      Multimodal.extractFeatures(
-        Multimodal.syntheticBmpAssetsCorrupted(par(s)(t(s, dir, "documents"))),
-        Multimodal.BmpCodec, routeErrors = true)
-        .select(col("asset_id"), col("width"), col("height"),
-          col("decode_error"))
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_features_jpeg" -> ((s, dir) => {
-      // REAL JPEG decode path: closed-form JFIF headers per doc (odd ids
-      // progressive SOF2, even baseline SOF0, both behind an APP0 the
-      // scan must walk by declared length), dims recovered by JpegCodec's
-      // marker scan; every 13th payload truncated inside APP0 exercises
-      // the routed-error policy (the scan runs out without a SOF)
-      Multimodal.extractFeatures(
-        Multimodal.syntheticJpegAssetsCorrupted(par(s)(t(s, dir, "documents"))),
-        Multimodal.JpegCodec, routeErrors = true)
-        .select(col("asset_id"), col("width"), col("height"),
-          col("decode_error"))
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_features_png" -> ((s, dir) => {
-      // REAL PNG decode path: spec-valid signature+IHDR prefixes per doc
-      // (closed-form dims, real CRC32), dims recovered by PngCodec's
-      // fixed-offset big-endian IHDR parse; every 13th payload truncated
-      // before the IHDR type exercises the routed-error policy
-      Multimodal.extractFeatures(
-        Multimodal.syntheticPngAssetsCorrupted(par(s)(t(s, dir, "documents"))),
-        Multimodal.PngCodec, routeErrors = true)
-        .select(col("asset_id"), col("width"), col("height"),
-          col("decode_error"))
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_resize" -> ((s, dir) => {
-      // REAL image resize: pixel-carrying BMPs (closed-form dims AND
-      // closed-form pixel values) nearest-neighbor-resized to 8×8 and
-      // re-encoded; the emitted probe pixels put the whole decode →
-      // resize → re-encode → re-decode loop under the oracle, which
-      // replays the integer source-pixel mapping arithmetically.
-      Multimodal.extractResizeProbes(
-        Multimodal.syntheticPixelBmpAssets(par(s)(t(s, dir, "documents"))),
-        dstW = 8, dstH = 8)
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_phash_pairs" -> ((s, dir) => {
-      // perceptual image near-dup: REAL pixel decode → 9×8 nearest-
-      // neighbor resize → 64-bit dHash per asset (8 bytes leave the
-      // blob scan), then hamming-≤3 pairs via the same pigeonhole
-      // banding as text simhash — 4 chunks of 16 bits, exact-match
-      // bucket join, exact hamming verify. No image bytes ever shuffle
-      // and no n² compare runs; the oracle replays the whole
-      // decode→resize→gradient chain as closed-form pixel arithmetic
-      // and brute-forces the pairs, so banding must lose nothing.
-      Dedup.hammingNearDupPairs(
-        Multimodal.extractDHash(
-          Multimodal.syntheticPixelBmpAssets(par(s)(t(s, dir, "documents")))),
-        idCol = "asset_id", sigCol = "phash", bits = 64, maxDist = 3)
-        .select(col("id_a"), col("id_b"), col("dist"))
-        .orderBy(col("id_a"), col("id_b"))
-    }),
-
-    "mm_stream_phash_dedup" -> ((s, dir) => {
-      // online image dedup at INGEST: hashes batch-extract (the codec
-      // runs in the scan; 8 bytes/image leave it) and stage; the stream
-      // then claims pigeonhole chunk buckets first-writer-wins with an
-      // exact hamming verify against each bucket's claimer — a 16-bit
-      // chunk collision alone is not similarity, unlike a MinHash band.
-      // Single-batch replay reduces to min-id-claims, which the oracle
-      // recomputes from closed-form pixel arithmetic. Loser feed,
-      // distinct ids.
-      import org.apache.spark.sql.streaming.OutputMode
-      val hashes = Multimodal.extractDHash(
-        Multimodal.syntheticPixelBmpAssets(t(s, dir, "documents")))
-      val staging = s"$artifactRoot/stream_phash_input"
-      hashes.write.mode("overwrite").parquet(staging)
-      val schema = s.read.parquet(staging).schema
-      val stream = s.readStream.schema(schema).parquet(staging)
-      val losses = PhashStream.onlineImageDedupStream(
-        Dedup.hammingChunkKeys(stream, "asset_id", "phash",
-          bits = 64, maxDist = 3))
-      Sessionize.runToMemory(s, losses.toDF(), "mm_stream_phash_sink",
-        OutputMode.Append, statePartitions = 8)
-        .select(col("asset_id")).distinct()
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_stream_audio_dedup" -> ((s, dir) => {
-      // online AUDIO dedup at ingest — the same claim protocol as the
-      // image stream (PhashStream is hash-generic: pigeonhole chunk
-      // buckets claimed first-writer-wins, exact hamming verify
-      // against the claimer), driven by the energy-gradient
-      // fingerprint: 8 bytes per asset leave the blob scan, perturbed
-      // siblings lose to their base asset, unrelated audio never
-      // collides. Single-batch replay reduces to min-id-claims, which
-      // the oracle recomputes from the closed-form samples.
-      import org.apache.spark.sql.streaming.OutputMode
-      val hashes = Multimodal.extractAudioFingerprint(
-        Multimodal.syntheticWavNearDupAssets(t(s, dir, "documents")))
-      val staging = s"$artifactRoot/stream_audiofp_input"
-      hashes.write.mode("overwrite").parquet(staging)
-      val schema = s.read.parquet(staging).schema
-      val stream = s.readStream.schema(schema).parquet(staging)
-      val losses = PhashStream.onlineImageDedupStream(
-        Dedup.hammingChunkKeys(stream, "asset_id", "afp",
-          bits = 64, maxDist = 3))
-      Sessionize.runToMemory(s, losses.toDF(), "mm_stream_audiofp_sink",
-        OutputMode.Append, statePartitions = 8)
-        .select(col("asset_id")).distinct()
-        .orderBy(col("asset_id"))
-    }),
-
-    "mm_features" -> ((s, dir) => {
-      // stubbed decode via FakeCodec (rows-only; determinism unit-tested)
-      Multimodal.extractFeatures(
-        Multimodal.syntheticAssets(par(s)(t(s, dir, "documents"))))
-        .select(col("asset_id"), col("width"), col("height"),
-          // null text → null features; concat_ws would fold the null array
-          // to "" while the oracle's md5(NULL) chain yields SQL NULL
-          when(col("frame_hashes").isNull, lit(null: String))
-            .otherwise(concat_ws(",", col("frame_hashes")))
-            .as("frame_hashes_csv"))
-        .orderBy(col("asset_id"))
-    }))
-
-  // ----------------------------------------------------------- oracles
-
-  // NB: DuckDB single-quoted strings are raw — regex backslashes pass
-  // through verbatim, so patterns are embedded unescaped.
-  private def duckMonthChain(inner: String): String =
-    oracleMonthSubs.foldLeft(inner) { case (acc, (repl, pat)) =>
-      s"regexp_replace($acc, '$pat', '$repl', 'gi')"
-    }
-
-  def oracleSql: Map[String, String] = {
-    val duckShingles2 =
-      s"(CASE WHEN len($duckWords) < 2 THEN [$duckNorm] ELSE list_transform(range(1, len($duckWords)), i -> $duckWords[i] || ' ' || $duckWords[i+1]) END)"
-    val duckShingles3 =
-      s"(CASE WHEN len($duckWords) < 3 THEN [$duckNorm] ELSE list_transform(range(1, len($duckWords)-1), i -> $duckWords[i] || ' ' || $duckWords[i+1] || ' ' || $duckWords[i+2]) END)"
-    def duckMinhash(shingles: String, seed: Int): String =
-      s"list_aggregate(list_transform($shingles, s -> md5(s || ':$seed')), 'min')"
-    def duckSimhash(bits: Int) = {
-      // mirror Dedup.simhash: one md5 gives 32 hex digits; wider
-      // signatures read a doubled digest (digits 1..32 unchanged)
-      val digest = if (bits <= 32) "md5(w)" else "md5(w) || md5(w || '~')"
-      s"""CAST(list_sum(list_transform(range(0, $bits), b ->
-         | CASE WHEN list_sum(list_transform($duckWords, w ->
-         |   CASE WHEN substr($digest, b + 1, 1) >= '8' THEN 1 ELSE -1 END)) > 0
-         |  THEN (1::BIGINT << b) ELSE 0::BIGINT END)) AS BIGINT)""".stripMargin.replace("\n", "")
-    }
-    val duckSimhash48 = duckSimhash(48)
-    // sig → band arithmetic shared by every MinHash oracle (pairs,
-    // clusters, fuzzy decontamination, online dedup)
-    val duckBandCtes =
-      s"""sig AS (SELECT doc_id,
-         | ${(0 until 8).map(i => duckMinhash(duckShingles3, i) + s" AS mh$i").mkString(", ")}
-         | FROM documents),
-         |band AS (
-         | ${(0 until 4).map(b =>
-           s"SELECT doc_id, $b AS band, md5(mh${2 * b} || '|' || mh${2 * b + 1}) AS bucket FROM sig")
-           .mkString(" UNION ALL ")})""".stripMargin
-    // first-writer-wins losers: docs that are NOT the min id in some of
-    // their band buckets — the complement of dedup_online's survivors and
-    // the streaming twin's single-batch loser feed
-    val duckOnlineLostCtes =
-      s"""$duckBandCtes,
-         |firsts AS (SELECT band, bucket, min(doc_id) AS f
-         | FROM band GROUP BY 1, 2),
-         |lost AS (SELECT DISTINCT b.doc_id FROM band b
-         | JOIN firsts f ON b.band = f.band AND b.bucket = f.bucket
-         |  AND b.doc_id <> f.f)""".stripMargin
-    // MinHash LSH candidate edges as reusable CTEs (sig → band → qual →
-    // edges), shared by the pair listing and the clusters closure
-    val duckMinhashEdgeCtes =
-      s"""$duckBandCtes,
-         |qual AS (SELECT band, bucket FROM band GROUP BY band, bucket
-         | HAVING count(*) > 1 AND count(*) <= 64),
-         |edges AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         | FROM band a JOIN qual q ON a.band = q.band AND a.bucket = q.bucket
-         | JOIN band b ON a.band = b.band AND a.bucket = b.bucket
-         |  AND a.doc_id < b.doc_id)""".stripMargin
-    // BPE training replay shared by the merge-table, encode, and
-    // held-out-apply oracles: w0 = the word-frequency table with
-    // pipe-joined char symbols, then per round p/x = pair explode, g =
-    // weighted pair counts, m = the argmax merge, w = the fused table.
-    // The fuse is the same whole-symbol left-to-right fold as
-    // TextAnalysis.bpeFusePair (list_reduce with a string accumulator:
-    // last emitted symbol == lhs AND next == rhs → append undelimited) —
-    // NOT a raw substring replace, which can match across symbol
-    // boundaries ('ab|c' contains 'b|c'). Each w{i} is MATERIALIZED:
-    // w{i-1} is referenced by its round's p AND w CTEs (and m{i} by the
-    // apply replay too), and DuckDB inlines multiply-referenced plain
-    // CTEs — materialization pins each round to one evaluation.
-    // Parameterized by a source filter so the apply oracle can train on
-    // a slice of the corpus.
-    def duckFuse(sym: String, lhs: String, rhs: String): String =
-      s"""list_reduce(string_split($sym, '|'),
-         |  (acc, x) -> CASE WHEN regexp_extract(acc, '([^|]*)$$', 1) = $lhs
-         |    AND x = $rhs THEN acc || x ELSE acc || '|' || x END)""".stripMargin
-    def duckBpeTrainCtes(where: String): String = {
-      val rounds = (1 to 8).map { i =>
-        s"""p$i AS (SELECT cnt, string_split(sym, '|') AS sy FROM w${i - 1}),
-           |x$i AS (SELECT cnt, sy, unnest(range(1, len(sy))) AS i FROM p$i),
-           |g$i AS (SELECT sy[i] AS lhs, sy[i + 1] AS rhs,
-           |  CAST(sum(cnt) AS BIGINT) AS n FROM x$i GROUP BY 1, 2),
-           |m$i AS MATERIALIZED (SELECT $i AS round, lhs, rhs, n FROM g$i
-           | ORDER BY n DESC, lhs, rhs LIMIT 1),
-           |w$i AS MATERIALIZED (SELECT word, cnt,
-           |  ${duckFuse("sym", "t.lhs", "t.rhs")} AS sym
-           | FROM w${i - 1}, m$i t)""".stripMargin
-      }.mkString(",\n")
-      s"""w0 AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS cnt,
-         |  rtrim(regexp_replace(word, '(.)', '\\1|', 'g'), '|') AS sym
-         | FROM (SELECT unnest($duckWords) AS word FROM documents
-         |   WHERE $duckNorm <> '' $where) WHERE word <> '' GROUP BY word),
-         |$rounds""".stripMargin
-    }
-    val duckBpeCtes: String = duckBpeTrainCtes("")
-    def duckLangScore(lang: String): String =
-      TextAnalysis.stopwords(lang)
-        .map(w => "len(regexp_extract_all(lower(text), '\\b" + w + "\\b'))")
-        .mkString("(", " + ", ")")
-    def duckL2(a: String, b: String): String =
-      s"list_aggregate(list_transform(list_zip($a, $b), " +
-        s"x -> (x[1]::DOUBLE - x[2]::DOUBLE) * (x[1]::DOUBLE - x[2]::DOUBLE)), 'sum')"
-    // sign-bucket key over defaultPositions (1/17/33/49) — shared by every
-    // embedding-LSH oracle so the bucket arithmetic cannot drift between
-    // the pair, cluster, knn, and ann restatements
-    def duckBkt(e: String): String =
-      s"""(CASE WHEN $e[1] > 0 THEN 1 ELSE 0 END
-         | + CASE WHEN $e[17] > 0 THEN 2 ELSE 0 END
-         | + CASE WHEN $e[33] > 0 THEN 4 ELSE 0 END
-         | + CASE WHEN $e[49] > 0 THEN 8 ELSE 0 END)""".stripMargin.replace("\n", "")
-    // the hamming<=1 near-dup edge SQL shared by dedup_embed_lsh (pair
-    // listing, with score) and dedup_embed_clusters (closure input) —
-    // one definition, as with duckMinhashEdgeCtes
-    val duckEmbedEdgeCtes: String =
-      s"""v AS (SELECT vec_id, embedding, ${duckBkt("embedding")} AS bk
-         |  FROM embeddings),
-         |eedges AS (SELECT x.vec_id AS id_a, y.vec_id AS id_b,
-         |  ${duckCosine("x.embedding", "y.embedding")} AS score
-         | FROM v x JOIN v y ON x.vec_id < y.vec_id
-         | WHERE bit_count(xor(x.bk, y.bk)) <= 1
-         |  AND ${duckCosine("x.embedding", "y.embedding")} >= 0.35)""".stripMargin
-    // Lloyd's training replay shared by every trained-codebook oracle:
-    // c0 = the id-order seed, then per round assign → fixed-point means →
-    // rebuild codebook (REAL cast = the engine's mean.toFloat; COALESCE =
-    // the empty-cell-keeps-centroid rule). After kmTrainCtes(n), CTE c<n>
-    // is the trained codebook (cid, ce).
-    // ONE iteration template serves both the full-vector kmeans replays
-    // and the PQ per-subspace replays — prefix `p` namespaces the CTE
-    // chain, `base`/`vcol` pick the (vec_id, vector) source
-    def lloydIterCtes(p: String, base: String, vcol: String)(i: Int): String =
-      s"""${p}a$i AS (SELECT v.vec_id, v.$vcol,
-         |   min({'d': ${duckL2(s"v.$vcol", "c.ce")}, 'cid': c.cid})['cid'] AS cell
-         | FROM $base v CROSS JOIN ${p}c${i - 1} c GROUP BY v.vec_id, v.$vcol),
-         |${p}x$i AS (SELECT cell,
-         |   CAST(generate_subscripts($vcol, 1) - 1 AS BIGINT) AS dim,
-         |   unnest($vcol) AS x
-         | FROM ${p}a$i),
-         |${p}s$i AS (SELECT cell, dim,
-         |   CAST(sum(CAST(round(x::DOUBLE * 1000000, 0) AS BIGINT)) AS DOUBLE)
-         |     / (count(*) * 1000000) AS mean
-         | FROM ${p}x$i GROUP BY cell, dim),
-         |${p}c$i AS (SELECT p.cid, COALESCE(n.ce, p.ce) AS ce
-         | FROM ${p}c${i - 1} p LEFT JOIN (SELECT cell AS cid,
-         |    list(CAST(mean AS REAL) ORDER BY dim) AS ce
-         |   FROM ${p}s$i GROUP BY cell) n ON n.cid = p.cid)""".stripMargin
-    def kmIterCtes(i: Int): String =
-      lloydIterCtes("", "embeddings", "embedding")(i)
-    // the same Lloyd's replay over a SLICED vector, prefixed p<j> so m
-    // independent subspace chains coexist in one statement — the PQ
-    // oracle; after pqSubCtes(j, ...), CTE p<j>f is that subspace's
-    // (vec_id, subspace, code) assignment under the trained codebook
-    def pqSubCtes(j: Int, lo: Int, hi: Int, iters: Int, k: Int,
-        src: String = "embeddings", vcol: String = "embedding"): String = {
-      val it = lloydIterCtes(s"p$j", s"p${j}v", "sv") _
-      s"""p${j}v AS (SELECT vec_id, $vcol[$lo:$hi] AS sv FROM $src),
-         |p${j}c0 AS (SELECT vec_id AS cid, sv AS ce
-         |  FROM p${j}v ORDER BY vec_id LIMIT $k),
-         |${(1 to iters).map(it).mkString(",\n")},
-         |p${j}f AS (SELECT v.vec_id, CAST($j AS BIGINT) AS subspace,
-         |   CAST(min({'d': ${duckL2("v.sv", "c.ce")}, 'cid': c.cid})['cid']
-         |     AS BIGINT) AS code
-         | FROM p${j}v v CROSS JOIN p${j}c$iters c GROUP BY v.vec_id)""".stripMargin
-    }
-    def kmTrainCtes(iters: Int, k: Int): String =
-      s"""c0 AS (SELECT vec_id AS cid, embedding AS ce
-         |  FROM embeddings ORDER BY vec_id LIMIT $k),
-         |${(1 to iters).map(kmIterCtes).mkString(",\n")}""".stripMargin
-
-    val base = Map(
-      "q01_agg_lineitem" ->
-        """SELECT l_returnflag, l_linestatus,
-          | CAST(sum(CAST(round(l_quantity*100,0) AS BIGINT)) AS BIGINT) AS sum_qty_cents,
-          | CAST(sum(CAST(round(l_extendedprice*100,0) AS BIGINT)) AS BIGINT) AS sum_base_cents,
-          | CAST(sum(CAST(round((l_extendedprice*(1.0-l_discount))*100,0) AS BIGINT)) AS BIGINT) AS sum_disc_cents,
-          | count(*) AS n_rows
-          |FROM lineitem GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-
-      "q02_filter_project" ->
-        """SELECT p_partkey, p_name, p_size FROM part
-          |WHERE p_type = 'PROMO' AND p_size >= 25 ORDER BY p_partkey""".stripMargin,
-
-      "q03_join_revenue" ->
-        """SELECT c_mktsegment,
-          | CAST(sum(CAST(round((l_extendedprice*(1.0-l_discount))*100,0) AS BIGINT)) AS BIGINT) AS revenue_cents,
-          | count(DISTINCT o_orderkey) AS n_orders
-          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-          |JOIN customer ON o_custkey = c_custkey
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "q04_broadcast_lookup" ->
-        """SELECT r_name, count(*) AS n_customers,
-          | CAST(sum(CAST(round(c_acctbal*100,0) AS BIGINT)) AS BIGINT) AS acctbal_cents
-          |FROM customer JOIN nation ON c_nationkey = n_nationkey
-          |JOIN region ON n_regionkey = r_regionkey
-          |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "q05_topk" ->
-        """SELECT o_orderkey, o_totalprice FROM orders
-          |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-
-      "q06_anti_join" ->
-        """SELECT c_custkey FROM customer c
-          |WHERE NOT EXISTS (SELECT 1 FROM orders o
-          |  WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
-          |ORDER BY c_custkey""".stripMargin,
-
-      "q07_semi_join" ->
-        """SELECT s_suppkey, s_name FROM supplier s
-          |WHERE EXISTS (SELECT 1 FROM lineitem l
-          |  WHERE l.l_suppkey = s.s_suppkey AND l.l_quantity >= 45)
-          |ORDER BY s_suppkey""".stripMargin,
-
-      "q08_window_rank" ->
-        """SELECT l_suppkey, rn, l_orderkey, l_linenumber, l_extendedprice FROM (
-          | SELECT l_suppkey, l_orderkey, l_linenumber, l_extendedprice,
-          |  CAST(row_number() OVER (PARTITION BY l_suppkey
-          |    ORDER BY l_extendedprice DESC, l_orderkey, l_linenumber) AS INT) AS rn
-          | FROM lineitem) WHERE rn <= 2 ORDER BY l_suppkey, rn""".stripMargin,
-
-      "q09_set_except" ->
-        """SELECT o_custkey AS custkey FROM orders WHERE o_totalprice >= 30000
-          |EXCEPT
-          |SELECT c_custkey AS custkey FROM customer WHERE c_acctbal >= 5000
-          |ORDER BY custkey""".stripMargin,
-
-      "q10_fill_route" ->
-        """SELECT o_orderkey,
-          | CASE WHEN o_orderstatus = 'P' THEN 'PENDING' ELSE o_orderstatus END AS status_filled,
-          | CASE
-          |  WHEN o_totalprice < 5000 AND o_orderpriority = '1-URGENT' THEN 'Err: low value; urgent'
-          |  WHEN o_totalprice < 5000 THEN 'Err: low value'
-          |  WHEN o_orderpriority = '1-URGENT' THEN 'urgent'
-          |  ELSE '' END AS notes,
-          | CASE WHEN o_totalprice < 5000 THEN 'err' ELSE 'ok' END AS route
-          |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-      "q11_set_intersect" ->
-        """SELECT o_custkey AS custkey FROM orders WHERE o_orderpriority = '1-URGENT'
-          |INTERSECT
-          |SELECT c_custkey AS custkey FROM customer WHERE c_acctbal >= 5000
-          |ORDER BY custkey""".stripMargin,
-
-      "q12_rollup" ->
-        """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-          | CAST(sum(CAST(round(l_quantity*100,0) AS BIGINT)) AS BIGINT) AS qty_cents
-          |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-          |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-
-      // identical shift/mask interleave, 42 generated terms — bitwise
-      // ops are exact and shared by both engines
-      // key reduction mirrors Layout.zValue2's pmod, not sign-preserving
-      // % — identical on the non-negative TPC-H keys, but the oracle
-      // must stay semantically identical to the engine if a fixture
-      // ever carries negative keys
-      "q13_zorder" -> {
-        def pm(c: String) = s"(($c % 2097152 + 2097152) % 2097152)"
-        val terms = (0 until 21).map(k =>
-          s"(((${pm("l_orderkey")} >> $k) & 1) << ${2 * k})" +
-            s" + (((${pm("l_partkey")} >> $k) & 1) << ${2 * k + 1})")
-          .mkString(" + ")
-        s"""SELECT l_orderkey, l_partkey, l_linenumber,
-           | CAST($terms AS BIGINT) AS zkey
-           |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin
-      },
-
-      // the textbook NOT EXISTS dominance scan — deliberately a
-      // DIFFERENT formulation from the engine's bucketed-window plan,
-      // so the frontier equivalence itself is what's checked
-      "q14_skyline" ->
-        """WITH p AS (SELECT p_partkey, p_name,
-          |  CAST(round(p_retailprice*100,0) AS BIGINT) AS price_cents,
-          |  CAST(p_size AS BIGINT) AS sz FROM part)
-          |SELECT p_partkey, p_name, price_cents, sz FROM p a
-          |WHERE NOT EXISTS (SELECT 1 FROM p b
-          |  WHERE b.price_cents <= a.price_cents AND b.sz >= a.sz
-          |    AND (b.price_cents < a.price_cents OR b.sz > a.sz))
-          |ORDER BY p_partkey""".stripMargin,
-
-      // same counts, same explicitly-ordered IEEE measure arithmetic:
-      // one division for confidence, double products for lift
-      "q15_assoc" ->
-        """WITH b AS (SELECT DISTINCT l_orderkey AS bk, p_brand AS item
-          |  FROM lineitem l JOIN part p ON l_partkey = p_partkey),
-          |n AS (SELECT CAST(count(DISTINCT bk) AS BIGINT) AS n FROM b),
-          |f AS (SELECT item, CAST(count(*) AS BIGINT) AS n_item
-          |  FROM b GROUP BY 1 HAVING count(*) >= 300),
-          |pr AS (SELECT a.item AS ante, c.item AS cons,
-          |  min(fa.n_item) AS n_ante, min(fc.n_item) AS n_cons,
-          |  CAST(count(*) AS BIGINT) AS n_pair
-          | FROM b a JOIN b c ON a.bk = c.bk AND a.item <> c.item
-          | JOIN f fa ON a.item = fa.item JOIN f fc ON c.item = fc.item
-          | GROUP BY 1, 2 HAVING count(*) >= 300)
-          |SELECT ante, cons, n_ante, n_cons, n_pair,
-          | CAST(n_pair AS DOUBLE) / n_ante AS confidence,
-          | (CAST(n_pair AS DOUBLE) * CAST(n.n AS DOUBLE))
-          |   / (CAST(n_ante AS DOUBLE) * CAST(n_cons AS DOUBLE)) AS lift
-          |FROM pr, n ORDER BY ante, cons""".stripMargin,
-
-      "q17_cube" ->
-        """SELECT l_returnflag, l_linestatus, count(*) AS n_rows,
-          | CAST(sum(CAST(round(l_quantity*100,0) AS BIGINT)) AS BIGINT)
-          |  AS qty_cents
-          |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-          |ORDER BY l_returnflag ASC NULLS FIRST,
-          | l_linestatus ASC NULLS FIRST""".stripMargin,
-
-      // each rule restated as an independent WHERE count; the unique-key
-      // rule sums the sizes of over-populated key groups
-      // SQL FK semantics both sides: null child keys assert nothing
-      "q36_expect_fk" ->
-        """SELECT 'lineitem_even_parts_fk' AS rule,
-          | (SELECT count(*) FROM lineitem) AS n_rows,
-          | (SELECT count(*) FROM lineitem WHERE l_partkey IS NOT NULL
-          |   AND l_partkey NOT IN (SELECT p_partkey FROM part
-          |     WHERE p_partkey % 2 = 0)) AS n_violations
-          |UNION ALL SELECT 'lineitem_orders_fk',
-          | (SELECT count(*) FROM lineitem),
-          | (SELECT count(*) FROM lineitem WHERE l_orderkey IS NOT NULL
-          |   AND l_orderkey NOT IN (SELECT o_orderkey FROM orders))
-          |ORDER BY rule""".stripMargin,
-
-      "q18_expectations" ->
-        """SELECT 'price_positive' AS rule,
-          | (SELECT count(*) FROM lineitem) AS n_rows,
-          | (SELECT count(*) FROM lineitem WHERE l_extendedprice <= 0)
-          |  AS n_violations
-          |UNION ALL SELECT 'qty_in_range',
-          | (SELECT count(*) FROM lineitem),
-          | (SELECT count(*) FROM lineitem
-          |   WHERE NOT (l_quantity BETWEEN 1 AND 50))
-          |UNION ALL SELECT 'returnflag_domain',
-          | (SELECT count(*) FROM lineitem),
-          | (SELECT count(*) FROM lineitem
-          |   WHERE l_returnflag NOT IN ('A', 'N', 'R'))
-          |UNION ALL SELECT 'shipdate_present',
-          | (SELECT count(*) FROM lineitem),
-          | (SELECT count(*) FROM lineitem WHERE l_shipdate IS NULL)
-          |UNION ALL SELECT 'unique_key',
-          | (SELECT count(*) FROM lineitem),
-          | (SELECT COALESCE(CAST(sum(c) AS BIGINT), 0) FROM (
-          |   SELECT count(*) AS c FROM lineitem
-          |   GROUP BY l_orderkey, l_linenumber HAVING count(*) > 1))
-          |ORDER BY rule""".stripMargin,
-
-      // the same aggregate straight over events — the MV-redirected
-      // engine plan must reproduce it exactly (all-long state algebra)
-      // both snapshots' key ranges recomputed from the source table —
-      // versioned stats pruning may skip bytes, never change rows
-      "q28_snapshot_skipping" ->
-        """WITH li AS (SELECT l_orderkey, l_linenumber, l_partkey,
-          |  l_suppkey FROM lineitem
-          | WHERE l_orderkey BETWEEN 1000 AND 2000)
-          |SELECT *, CAST(0 AS BIGINT) AS version FROM li
-          | WHERE l_orderkey % 2 = 0
-          |UNION ALL
-          |SELECT *, CAST(1 AS BIGINT) AS version FROM li
-          |ORDER BY version, l_orderkey, l_linenumber, l_partkey,
-          | l_suppkey""".stripMargin,
-
-      // all three snapshots recomputed straight from events —
-      // versioning and vacuum may move bytes, never rows
-      "q25_time_travel" ->
-        """WITH ev AS (SELECT event_id, user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents
-          | FROM events)
-          |SELECT *, CAST(0 AS BIGINT) AS version FROM ev
-          | WHERE event_id % 2 = 0
-          |UNION ALL
-          |SELECT *, CAST(1 AS BIGINT) AS version FROM ev
-          |UNION ALL
-          |SELECT *, CAST(2 AS BIGINT) AS version FROM ev
-          | WHERE user_id % 13 <> 0
-          |ORDER BY version, event_id""".stripMargin,
-
-      // the compliance delete's change set derived independently: pure
-      // removals — every row of the purged users
-      "q26_snapshot_diff" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents,
-          | '-' AS change
-          |FROM events WHERE user_id % 13 = 0
-          |ORDER BY change, event_id""".stripMargin,
-
-      // v1 = modulus slices {0,1}, v0 = slice {0}: the partitioned
-      // snapshot reads must equal these row-filters of the raw stream
-      "q31_snapshot_partitioned" ->
-        """WITH base AS (SELECT event_id, user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS cents FROM events),
-          |v1p AS (SELECT CAST(1 AS BIGINT) AS version,
-          |  'purchase' AS part, user_id,
-          |  CAST(count(*) AS BIGINT) AS n_events,
-          |  CAST(sum(cents) AS BIGINT) AS cents
-          | FROM base WHERE event_id % 3 <= 1 AND event_type = 'purchase'
-          | GROUP BY user_id),
-          |v0v AS (SELECT CAST(0 AS BIGINT) AS version,
-          |  'view' AS part, user_id,
-          |  CAST(count(*) AS BIGINT) AS n_events,
-          |  CAST(sum(cents) AS BIGINT) AS cents
-          | FROM base WHERE event_id % 3 = 0 AND event_type = 'view'
-          | GROUP BY user_id)
-          |SELECT * FROM (SELECT * FROM v1p UNION ALL SELECT * FROM v0v)
-          |ORDER BY version, part, user_id""".stripMargin,
-
-      "q32_mv_filter" ->
-        """WITH f AS (SELECT user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents
-          | FROM events)
-          |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(value_cents) AS BIGINT) AS sum_cents,
-          | min(value_cents) AS min_cents, max(value_cents) AS max_cents
-          |FROM f WHERE event_type IN ('purchase', 'click')
-          |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-      // merged table = purchases bumped, others verbatim, promo inserts
-      "q33_snapshot_merge" ->
-        """WITH base AS (SELECT event_id, user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents FROM events)
-          |SELECT event_id, user_id, event_type,
-          | CASE WHEN event_type = 'purchase' THEN value_cents + 1
-          |  ELSE value_cents END AS value_cents
-          |FROM base
-          |UNION ALL
-          |SELECT event_id + 1000000, user_id, 'promo' AS event_type,
-          | value_cents
-          |FROM base WHERE event_id % 7 = 0
-          |ORDER BY event_id""".stripMargin,
-
-      // the source rows verbatim — partitioned compaction moves bytes,
-      // never rows (q22's invariant at partition scope)
-      "q35_optimize_partitioned" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      // same merged table, minus the deleted click keys
-      "q34_snapshot_merge_delete" ->
-        """WITH base AS (SELECT event_id, user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents FROM events)
-          |SELECT event_id, user_id, event_type,
-          | CASE WHEN event_type = 'purchase' THEN value_cents + 1
-          |  ELSE value_cents END AS value_cents
-          |FROM base
-          |WHERE NOT (event_type = 'click' AND event_id % 5 = 0)
-          |UNION ALL
-          |SELECT event_id + 1000000, user_id, 'promo' AS event_type,
-          | value_cents
-          |FROM base WHERE event_id % 7 = 0
-          |ORDER BY event_id""".stripMargin,
-
-      "q24_mv_rewrite" ->
-        """WITH f AS (SELECT user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents
-          | FROM events)
-          |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(value_cents) AS BIGINT) AS sum_cents,
-          | min(value_cents) AS min_cents, max(value_cents) AS max_cents
-          |FROM f GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-      // the plain point-lookup filter — bloom skipping may only skip
-      // bytes, never change rows
-      "q37_bloom_skipping" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events WHERE event_id IN (7, 123, 777)
-          |ORDER BY event_id""".stripMargin,
-
-      // face 1 = the audited head (everything, the fixture is clean);
-      // face 2 = the quarantined poisoned batch, verbatim
-      "ev_stream_ingest_audited" ->
-        """WITH ev AS (SELECT event_id, user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents
-          | FROM events)
-          |SELECT event_id, user_id, event_type, value_cents,
-          | CAST(1 AS BIGINT) AS face FROM ev
-          |UNION ALL
-          |SELECT event_id, user_id, event_type,
-          | -value_cents - 1 AS value_cents, CAST(2 AS BIGINT) AS face
-          |FROM ev WHERE event_id % 2 = 0
-          |ORDER BY face, event_id""".stripMargin,
-
-      // the maintained stream's head face must STILL equal the plain
-      // batch table — compaction/retention may move bytes, not values
-      "ev_stream_ingest_maintained" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      // a table FEED may only move bytes: the drained stream is the
-      // three committed slices, i.e. all events
-      "ev_stream_table_feed" ->
-        """SELECT event_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      // the streamed table's head face must equal the plain batch
-      // table — exactly-once means nothing lost AND nothing doubled
-      "ev_stream_snapshot_ingest" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      // identical correlated SQL, DuckDB's own decorrelation
-      "q61_correlated_scalar" ->
-        """SELECT p_partkey, p_brand,
-          | CAST(round(p_retailprice * 100, 0) AS BIGINT) AS price_cents
-          |FROM part p
-          |WHERE p_retailprice = (SELECT min(p2.p_retailprice)
-          |  FROM part p2 WHERE p2.p_brand = p.p_brand)
-          |ORDER BY p_partkey""".stripMargin,
-
-      "q62_correlated_exists" ->
-        """SELECT s_suppkey, s_name FROM supplier s
-          |WHERE NOT EXISTS (SELECT 1 FROM lineitem l
-          |  WHERE l.l_suppkey = s.s_suppkey
-          |   AND l.l_shipdate >= TIMESTAMP '2001-10-25 00:00:00')
-          |ORDER BY s_suppkey""".stripMargin,
-
-      // names resolve to the same bytes: the plain join aggregate
-      "q65_catalog_join" ->
-        """SELECT c_mktsegment,
-          | CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT)
-          |  AS sum_cents
-          |FROM events JOIN customer ON user_id = c_custkey
-          |GROUP BY c_mktsegment
-          |ORDER BY c_mktsegment""".stripMargin,
-
-      // the two eras unioned; the widened column as explicit BIGINT
-      "q63_schema_widen" ->
-        """SELECT CAST(l_orderkey AS BIGINT) AS okey,
-          | CAST(l_linenumber AS INT) AS lineno,
-          | CAST(l_quantity AS INT) AS qty
-          |FROM lineitem WHERE l_orderkey % 2 = 0
-          |UNION ALL
-          |SELECT l_orderkey + 3000000000 AS okey,
-          | CAST(l_linenumber AS INT) AS lineno,
-          | CAST(l_quantity AS INT) AS qty
-          |FROM lineitem WHERE l_orderkey % 2 = 1
-          |ORDER BY okey, lineno, qty""".stripMargin,
-
-      // VERSION AS OF 0 = the even era; the SQL catalog may only
-      // change WHERE bytes come from, never values
-      "q66_sql_catalog" ->
-        """SELECT c_mktsegment,
-          | CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT)
-          |  AS sum_cents
-          |FROM events JOIN customer ON user_id = c_custkey
-          |WHERE event_id % 2 = 0
-          |GROUP BY c_mktsegment
-          |ORDER BY c_mktsegment""".stripMargin,
-
-      // the Hilbert layout's 2-of-3 subset box as a plain filter —
-      // the curve only moves bytes, never rows
-      "q67_hilbert" ->
-        """SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber,
-          | CAST(l_quantity AS BIGINT) AS qty
-          |FROM lineitem
-          |WHERE l_orderkey BETWEEN 1000 AND 4000
-          | AND l_suppkey BETWEEN 5 AND 40
-          |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey, qty""".stripMargin,
-
-      // a mirror may only move bytes: the caught-up destination is the
-      // whole source content, i.e. all three event slices
-      "q68_snapshot_mirror" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      // the CDC mirror's destination = the source's surviving rows:
-      // the even era minus the deleted subjects, plus the odd era
-      // (appended AFTER the delete, so its subjects survive)
-      "q69_mirror_cdc" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events
-          |WHERE (event_id % 2 = 0 AND user_id % 20 <> 0)
-          |   OR event_id % 2 = 1
-          |ORDER BY event_id""".stripMargin,
-
-      // both eras (function-verb commit + SQL INSERT) together are the
-      // whole events table — the SQL write may only add its era
-      "q70_sql_insert" ->
-        """SELECT user_id,
-          | CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT)
-          |  AS sum_cents
-          |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-      // maintenance may only move bytes: the post-optimize,
-      // post-vacuum face is still the whole-table rollup
-      "q72_sql_call" ->
-        """SELECT user_id,
-          | CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT)
-          |  AS sum_cents
-          |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-      // the post-delete, post-optimize face = the even era minus the
-      // deleted subjects
-      "q74_sql_delete" ->
-        """SELECT event_type,
-          | CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT)
-          |  AS sum_cents
-          |FROM events
-          |WHERE event_id % 2 = 0 AND user_id > 30
-          |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-      // the SAME survivors' rollup as q74 — served straight off the
-      // DV-governed face, no compaction between DELETE and SELECT
-      "q83_sql_read_dv" ->
-        """SELECT event_type,
-          | CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT)
-          |  AS sum_cents
-          |FROM events
-          |WHERE event_id % 2 = 0 AND user_id > 30
-          |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-      // the post-replace face: clicks at doubled cents, everything
-      // else untouched
-      "q82_sql_replace_where" ->
-        """WITH face AS (
-          | SELECT event_type, CAST(round(value*100,0) AS BIGINT)
-          |   AS value_cents
-          |  FROM events WHERE event_type <> 'click'
-          | UNION ALL
-          | SELECT event_type, CAST(round(value*100,0) AS BIGINT) * 2
-          |  FROM events WHERE event_type = 'click')
-          |SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(value_cents) AS BIGINT) AS sum_cents
-          |FROM face GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-      // runtime file pruning may only change WHICH files are opened,
-      // never the join's values — the plain selective join
-      "q81_runtime_filter" ->
-        """WITH dim AS (SELECT c_custkey, c_mktsegment FROM customer
-          | WHERE c_custkey <= (SELECT max(user_id) FROM events) // 5
-          |   AND c_mktsegment = 'BUILDING')
-          |SELECT c_mktsegment,
-          | CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT)
-          |  AS sum_cents
-          |FROM events JOIN dim ON user_id = c_custkey
-          |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-      // the SQL face of the runtime filter may only change WHICH
-      // files open, never the join's values — same plain join as q81
-      "q84_sql_runtime_filter" ->
-        """WITH dim AS (SELECT c_custkey, c_mktsegment FROM customer
-          | WHERE c_custkey <= (SELECT max(user_id) FROM events) // 5
-          |   AND c_mktsegment = 'BUILDING')
-          |SELECT c_mktsegment,
-          | CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT)
-          |  AS sum_cents
-          |FROM events JOIN dim ON user_id = c_custkey
-          |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-      // the SQL face of a live MOR lineage = the merge-on-read
-      // resolution: %5 keys re-keyed at +7 cents, the rest verbatim
-      "q85_sql_read_mor" ->
-        """WITH face AS (
-          | SELECT event_type, CAST(round(value*100,0) AS BIGINT) AS c
-          |  FROM events WHERE event_id % 5 <> 0
-          | UNION ALL
-          | SELECT event_type, CAST(round(value*100,0) AS BIGINT) + 7
-          |  FROM events WHERE event_id % 5 = 0)
-          |SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(c) AS BIGINT) AS sum_cents
-          |FROM face GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-      // after the full-sync merge the target IS the source's face:
-      // the %3 rows with their +3 cents
-      "q80_sql_merge_sync" ->
-        """SELECT event_type,
-          | CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT) + 3) AS BIGINT)
-          |  AS sum_cents
-          |FROM events WHERE event_id % 3 = 0
-          |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-      // the published face after the WAP loop is the whole table —
-      // branching may only stage bytes, never change values
-      "q79_sql_branch" ->
-        """SELECT event_type,
-          | CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT)
-          |  AS sum_cents
-          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-      // the evolved face: era-0 rows null-fill the added column
-      // (coalesce 0), the inserted era carries user_id as its bonus
-      "q78_sql_alter" ->
-        """SELECT event_type,
-          | CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(CASE WHEN event_id % 2 = 1
-          |   THEN user_id ELSE 0 END) AS BIGINT) AS sum_bonus
-          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-      // retention may only move bytes: the post-expiry head is the
-      // whole-table rollup
-      "q77_sql_tag" ->
-        """SELECT event_type,
-          | CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT)
-          |  AS sum_cents
-          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-      // the updated face as a CASE WHEN: boosted rows move bucket and
-      // gain the constant, every other row is untouched
-      "q75_sql_update" ->
-        """SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(new_cents) AS BIGINT) AS sum_cents
-          |FROM (
-          | SELECT
-          |  CASE WHEN user_id <= 25 THEN 'boosted'
-          |       ELSE event_type END AS event_type,
-          |  CASE WHEN user_id <= 25
-          |       THEN CAST(round(value*100,0) AS BIGINT) + 100000
-          |       ELSE CAST(round(value*100,0) AS BIGINT) END AS new_cents
-          | FROM events)
-          |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-      // the merged face as a union: matched evens (id%6=0) doubled
-      // from the source's +7 cents, unmatched evens untouched,
-      // odd source rows (id%3=0, odd) inserted with their +7 cents
-      "q76_sql_merge" ->
-        """SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(new_cents) AS BIGINT) AS sum_cents
-          |FROM (
-          | SELECT event_type,
-          |  CASE WHEN event_id % 6 = 0
-          |       THEN (CAST(round(value*100,0) AS BIGINT) + 7) * 2
-          |       ELSE CAST(round(value*100,0) AS BIGINT) END AS new_cents
-          | FROM events WHERE event_id % 2 = 0
-          | UNION ALL
-          | SELECT event_type,
-          |  CAST(round(value*100,0) AS BIGINT) + 7 AS new_cents
-          | FROM events WHERE event_id % 3 = 0 AND event_id % 2 = 1)
-          |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-      // CTAS era + INSERT era together are the whole events table;
-      // the rollup is engine-portable exact-cents arithmetic
-      "q73_sql_ctas" ->
-        """SELECT event_type,
-          | CAST(count(*) AS BIGINT) AS n_events,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT)
-          |  AS sum_cents
-          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-      // the history face recomputed from the slices: append
-      // generations carry their parent's files, so row counts are
-      // cumulative per version
-      "q71_sql_meta" ->
-        """SELECT CAST(0 AS BIGINT) AS version,
-          | CAST(100 AS BIGINT) AS commit_ts,
-          | (SELECT CAST(count(*) AS BIGINT) FROM events
-          |   WHERE event_id % 3 = 0) AS n_rows
-          |UNION ALL
-          |SELECT CAST(1 AS BIGINT), CAST(200 AS BIGINT),
-          | (SELECT CAST(count(*) AS BIGINT) FROM events
-          |   WHERE event_id % 3 IN (0, 1))
-          |UNION ALL
-          |SELECT CAST(2 AS BIGINT), CAST(300 AS BIGINT),
-          | (SELECT CAST(count(*) AS BIGINT) FROM events)
-          |ORDER BY version""".stripMargin,
-
-      // the 2-of-3 subset box as a plain filter; skipping only skips
-      "q64_zorder3" ->
-        """SELECT l_orderkey, l_partkey, l_suppkey, l_linenumber,
-          | CAST(l_quantity AS BIGINT) AS qty
-          |FROM lineitem
-          |WHERE l_partkey BETWEEN 100 AND 300
-          | AND l_suppkey BETWEEN 10 AND 50
-          |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey, qty""".stripMargin,
-
-      // the box as a plain 2-D filter; skipping may only skip bytes
-      "q60_snapshot_zorder" ->
-        """SELECT l_orderkey, l_partkey, l_linenumber,
-          | CAST(l_quantity AS BIGINT) AS qty
-          |FROM lineitem
-          |WHERE l_orderkey BETWEEN 1000 AND 3000
-          | AND l_partkey BETWEEN 100 AND 300
-          |ORDER BY l_orderkey, l_partkey, l_linenumber""".stripMargin,
-
-      // the warehouse as of ts=250: fact slices 0+1, even-custkey dim
-      "q59_multi_table_asof" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents,
-          | c_mktsegment
-          |FROM events JOIN customer ON user_id = c_custkey
-          |WHERE event_id % 3 IN (0, 1) AND c_custkey % 2 = 0
-          |ORDER BY event_id""".stripMargin,
-
-      // pre-declaration rows null-fill, post-declaration rows computed
-      "q58_generated_columns" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents,
-          | CASE WHEN event_id % 2 = 0 THEN NULL
-          |  ELSE CAST(round(value*100,0) AS BIGINT) // 500
-          | END AS value_bucket
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      // the compacted head's range scan: a plain interval filter
-      "q57_optimize_clustered" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events WHERE event_id BETWEEN 100 AND 400
-          |ORDER BY event_id""".stripMargin,
-
-      // untouched partitions verbatim + the corrected purchase feed
-      "q56_replace_partitions" ->
-        """WITH ev AS (SELECT event_id, user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents
-          | FROM events)
-          |SELECT event_id, user_id, event_type, value_cents FROM ev
-          |WHERE event_type <> 'purchase'
-          |UNION ALL
-          |SELECT event_id, user_id, event_type, value_cents * 2 FROM ev
-          |WHERE event_type = 'purchase' AND event_id % 7 <> 0
-          |ORDER BY event_id""".stripMargin,
-
-      // both evolved-scan faces recomputed as plain filters
-      "q55_partition_evolution" ->
-        """WITH ev AS (SELECT event_id, user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents,
-          |  user_id % 4 AS ub FROM events)
-          |SELECT event_id, user_id, event_type, value_cents, ub,
-          | CAST(1 AS BIGINT) AS face FROM ev WHERE ub = 2
-          |UNION ALL
-          |SELECT event_id, user_id, event_type, value_cents, ub,
-          | CAST(2 AS BIGINT) AS face FROM ev WHERE event_type = 'click'
-          |ORDER BY face, event_id""".stripMargin,
-
-      // net interval changes: '+' odd non-purchases (odd purchases
-      // netted out inside the interval), '-' even purchases
-      "q54_snapshot_cdc" ->
-        """WITH ev AS (SELECT event_id, user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents
-          | FROM events)
-          |SELECT event_id, user_id, event_type, value_cents,
-          | '+' AS change FROM ev
-          |WHERE event_id % 2 = 1 AND event_type <> 'purchase'
-          |UNION ALL
-          |SELECT event_id, user_id, event_type, value_cents,
-          | '-' AS change FROM ev
-          |WHERE event_id % 2 = 0 AND event_type = 'purchase'
-          |ORDER BY change, event_id""".stripMargin,
-
-      // the head face after rename + append + drop: all events under
-      // the final logical names
-      "q53_snapshot_rename" ->
-        """SELECT event_id, user_id,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      // the textually identical recursion (DuckDB's WITH RECURSIVE)
-      "q52_recursive_closure" ->
-        """WITH RECURSIVE
-          |seq AS (SELECT user_id, event_type,
-          |  lead(event_type) OVER (PARTITION BY user_id
-          |    ORDER BY ts, event_id) AS nxt
-          | FROM events),
-          |pc AS (SELECT event_type AS src, nxt AS dst,
-          |  CAST(count(*) AS BIGINT) AS c
-          | FROM seq WHERE nxt IS NOT NULL GROUP BY 1, 2),
-          |edges AS (SELECT a.src, a.dst FROM pc a LEFT JOIN pc b
-          |  ON a.src = b.dst AND a.dst = b.src
-          | WHERE a.src <> a.dst AND a.c > coalesce(b.c, CAST(0 AS BIGINT))),
-          |reach(src, dst, hops) AS (
-          |  SELECT src, dst, CAST(1 AS BIGINT) AS hops FROM edges
-          |  UNION ALL
-          |  SELECT r.src, e.dst, r.hops + 1
-          |  FROM reach r JOIN edges e ON r.dst = e.src
-          |  WHERE r.hops < 4 AND e.dst <> r.src)
-          |SELECT src, dst, min(hops) AS min_hops
-          |FROM reach GROUP BY src, dst ORDER BY src, dst""".stripMargin,
-
-      // the head face after the refused batch: exactly the two clean
-      // modulus slices — the botch contributed nothing
-      "q51_snapshot_constraints" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events WHERE event_id % 3 IN (0, 1)
-          |ORDER BY event_id""".stripMargin,
-
-      // three faces of the stacked deletes: v1 = the full table, v2
-      // minus purchases, v3 additionally minus the user cohort
-      "q50_delete_vectors" ->
-        """WITH ev AS (SELECT event_id, user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents
-          | FROM events)
-          |SELECT event_id, user_id, event_type, value_cents,
-          | CAST(1 AS BIGINT) AS face FROM ev
-          |UNION ALL
-          |SELECT event_id, user_id, event_type, value_cents,
-          | CAST(2 AS BIGINT) AS face FROM ev
-          |WHERE event_type <> 'purchase'
-          |UNION ALL
-          |SELECT event_id, user_id, event_type, value_cents,
-          | CAST(3 AS BIGINT) AS face FROM ev
-          |WHERE event_type <> 'purchase' AND user_id % 10 <> 3
-          |ORDER BY face, event_id""".stripMargin,
-
-      // version v holds slices <= v; stamps are the literal watermarks
-      "q49_snapshot_history" ->
-        """SELECT CAST(v.ver AS BIGINT) AS version,
-          | CAST(100 * (v.ver + 1) AS BIGINT) AS commit_ts,
-          | CAST(count(*) AS BIGINT) AS n_rows
-          |FROM (SELECT event_id % 3 AS m FROM events) ev,
-          | (VALUES (0), (1), (2)) AS v(ver)
-          |WHERE ev.m <= v.ver
-          |GROUP BY 1, 2
-          |ORDER BY version""".stripMargin,
-
-      // v0 holds even ids only (777 must MISS), v1 all ids; skipping
-      // may only skip bytes, never rows
-      "q48_snapshot_bloom" ->
-        """WITH ev AS (SELECT event_id, user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents
-          | FROM events)
-          |SELECT event_id, user_id, event_type, value_cents,
-          | CAST(0 AS BIGINT) AS as_of
-          |FROM ev WHERE event_id % 2 = 0 AND event_id IN (42, 777)
-          |UNION ALL
-          |SELECT event_id, user_id, event_type, value_cents,
-          | CAST(1 AS BIGINT) AS as_of
-          |FROM ev WHERE event_id IN (42, 123, 777)
-          |ORDER BY as_of, event_id""".stripMargin,
-
-      // both faces of the rollback: v1 is the botch (even ids only,
-      // purchases zeroed), v2 restores v0 = the full table verbatim
-      "q38_snapshot_rollback" ->
-        """WITH ev AS (SELECT event_id, user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents
-          | FROM events)
-          |SELECT event_id, user_id, event_type,
-          | CASE WHEN event_type = 'purchase' THEN CAST(0 AS BIGINT)
-          |  ELSE value_cents END AS value_cents,
-          | CAST(1 AS BIGINT) AS version
-          |FROM ev WHERE event_id % 2 = 0
-          |UNION ALL
-          |SELECT event_id, user_id, event_type, value_cents,
-          | CAST(2 AS BIGINT) AS version
-          |FROM ev
-          |ORDER BY version, event_id""".stripMargin,
-
-      // per-(version, partition) row counts recomputed from the raw
-      // stream: version v holds the modulus slices <= v (appends share
-      // the parent's files) — metadata may only summarize, never drift
-      "q39_snapshot_stats" ->
-        """SELECT CAST(v.ver AS BIGINT) AS version,
-          | 'event_type=' || event_type AS part,
-          | CAST(count(*) AS BIGINT) AS n_rows
-          |FROM (SELECT event_type, event_id % 3 AS m FROM events) ev,
-          | (VALUES (0), (1), (2)) AS v(ver)
-          |WHERE ev.m <= v.ver
-          |GROUP BY 1, 2
-          |ORDER BY version, part""".stripMargin,
-
-      // the appended delta: slices 1 and 2 arrived after v0's slice 0
-      "q40_snapshot_incremental" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events WHERE event_id % 3 IN (1, 2)
-          |ORDER BY event_id""".stripMargin,
-
-      // every face re-derived from the stream minus the purged
-      // subjects: version v holds slices <= v without user_id % 50 = 0
-      "q43_snapshot_purge" ->
-        """WITH ev AS (SELECT event_id, user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents
-          | FROM events WHERE user_id % 50 <> 0)
-          |SELECT event_id, user_id, event_type, value_cents,
-          | CAST(v.ver AS BIGINT) AS version
-          |FROM ev, (VALUES (0), (1), (2)) AS v(ver)
-          |WHERE event_id % 3 <= v.ver
-          |ORDER BY version, event_id""".stripMargin,
-
-      // absorb == full recompute: the rollup over all events
-      "q47_snapshot_incr_mv" ->
-        """SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS sum_v
-          |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      // dst face = slice 2 (the replace after the fork); src face =
-      // slices 0,1 INCLUDING the subjects the clone purged — the
-      // source must be untouched by the fork's destructive verbs
-      "q46_snapshot_clone" ->
-        """WITH ev AS (SELECT event_id, user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents
-          | FROM events)
-          |SELECT event_id, user_id, event_type, value_cents,
-          | 'dst' AS face
-          |FROM ev WHERE event_id % 3 = 2
-          |UNION ALL
-          |SELECT event_id, user_id, event_type, value_cents,
-          | 'src' AS face
-          |FROM ev WHERE event_id % 3 IN (0, 1)
-          |ORDER BY face, event_id""".stripMargin,
-
-      // five metrics x two columns, each side recomputed from events
-      // (o = raw cents, n = clicks nulled + rest doubled)
-      "q45_snapshot_drift" -> {
-        def sub(side: String, c: String, metric: String) = metric match {
-          case "n_rows" => s"(SELECT CAST(count(*) AS DOUBLE) FROM $side)"
-          case "n_nulls" =>
-            s"(SELECT CAST(count(*) - count($c) AS DOUBLE) FROM $side)"
-          case "n_distinct" =>
-            s"(SELECT CAST(count(DISTINCT $c) AS DOUBLE) FROM $side)"
-          case m => s"(SELECT CAST($m($c) AS DOUBLE) FROM $side)"
-        }
-        val rows = for {
-          c <- Seq("value_cents", "user_id")
-          mt <- Seq("max", "min", "n_distinct", "n_nulls", "n_rows")
-        } yield s"SELECT '$c' AS col_name, '$mt' AS metric, " +
-          s"${sub("o", c, mt)} AS old_value, ${sub("n", c, mt)} AS new_value, " +
-          s"${sub("n", c, mt)} - ${sub("o", c, mt)} AS delta"
-        s"""WITH o AS (SELECT user_id,
-           |  CAST(round(value*100,0) AS BIGINT) AS value_cents FROM events),
-           |n AS (SELECT user_id,
-           |  CASE WHEN event_type = 'click' THEN NULL
-           |   ELSE CAST(round(value*100,0) AS BIGINT) * 2 END AS value_cents
-           | FROM events)
-           |SELECT * FROM (
-           |${rows.mkString("\nUNION ALL\n")}
-           |) ORDER BY col_name, metric""".stripMargin
-      },
-
-      // ts=250 resolves to the second commit (slices 0,1); ts=999 to
-      // the head (all slices)
-      "q42_time_travel_ts" ->
-        """WITH ev AS (SELECT event_id, user_id, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents
-          | FROM events)
-          |SELECT event_id, user_id, event_type, value_cents,
-          | CAST(250 AS BIGINT) AS as_of
-          |FROM ev WHERE event_id % 3 IN (0, 1)
-          |UNION ALL
-          |SELECT event_id, user_id, event_type, value_cents,
-          | CAST(999 AS BIGINT) AS as_of
-          |FROM ev
-          |ORDER BY as_of, event_id""".stripMargin,
-
-      // the published faces only: base purchases + the clean batch; the
-      // refused negated batch must have left no rows behind
-      "q41_snapshot_wap" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events
-          |ORDER BY event_id""".stripMargin,
-
-      // the plain filter over the source table — manifest pruning may
-      // only skip bytes, never change rows
-      "q23_skipping" ->
-        """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey
-          |FROM lineitem WHERE l_orderkey BETWEEN 1000 AND 2000
-          |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey""".stripMargin,
-
-      // the same three sync rounds unrolled: count votes per (node,
-      // label), argmax via the same lexical min(-count, label) struct
-      // the source rows verbatim — compaction moves bytes, never rows
-      "q22_compact" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      // the full join recomputed from scratch — the maintained
-      // old ∪ three-delta-terms union must reproduce it row for row
-      "q21_delta_join" ->
-        """SELECT l.l_orderkey, l.l_linenumber,
-          | CAST(round(l.l_extendedprice*100,0) AS BIGINT) AS l_cents,
-          | o.o_orderpriority
-          |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-          |ORDER BY l.l_orderkey, l.l_linenumber, l_cents""".stripMargin,
-
-      // the UNSALTED join — the salted engine plan must reproduce it
-      // exactly, salts cancelling out of every aggregate
-      "q20_skew_salted" ->
-        """WITH li AS (SELECT l_returnflag,
-          |  CAST(round(l_quantity*100,0) AS BIGINT) AS qty_cents
-          | FROM lineitem),
-          |d AS (SELECT l_returnflag, max(qty_cents) AS max_qty_cents
-          | FROM li GROUP BY 1)
-          |SELECT l.l_returnflag, d.max_qty_cents,
-          | CAST(count(*) AS BIGINT) AS n_rows,
-          | CAST(sum(CASE WHEN l.qty_cents = d.max_qty_cents
-          |   THEN 1 ELSE 0 END) AS BIGINT) AS n_at_max
-          |FROM li l JOIN d USING (l_returnflag)
-          |GROUP BY 1, 2 ORDER BY 1""".stripMargin,
-
-      "q19_communities" -> {
-        val iter = (1 to 3).map { i =>
-          s"""cnt$i AS (SELECT e.dst AS node, l.lbl,
-             |  CAST(count(*) AS BIGINT) AS n
-             | FROM e JOIN l${i - 1} l ON l.node = e.src GROUP BY 1, 2),
-             |l$i AS (SELECT node, min({'a': -n, 'b': lbl})['b'] AS lbl
-             | FROM cnt$i GROUP BY 1)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS item
-           |  FROM lineitem),
-           |und AS (SELECT DISTINCT a.item AS u, c.item AS v
-           |  FROM b a JOIN b c ON a.bk = c.bk AND a.item < c.item),
-           |e AS (SELECT u AS src, v AS dst FROM und
-           |  UNION ALL SELECT v, u FROM und),
-           |l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM e),
-           |$iter
-           |SELECT node AS p_partkey, CAST(lbl AS BIGINT) AS community
-           |FROM l3 ORDER BY node""".stripMargin
-      },
-
-      // the naive sorted three-way join — independent of the engine's
-      // degree-ordered orientation
-      // sync peel unrolled: an edge of round i survives iff BOTH its
-      // endpoints had degree >= 80 in round i-1 — degrees come from two
-      // window counts over the symmetrized edge list, so each round
-      // references its predecessor exactly ONCE (a self-join form would
-      // re-expand the whole chain per reference under CTE inlining:
-      // 2^12 scans). 12 rounds >> the 5 the graph needs, and a
-      // post-fixpoint round is the identity.
-      "q30_kcore" -> {
-        val rounds = (1 to 12).map { i =>
-          s"""e$i AS (SELECT src, dst FROM (
-             |  SELECT src, dst, count(*) OVER (PARTITION BY src) AS dsrc,
-             |   count(*) OVER (PARTITION BY dst) AS ddst
-             |  FROM e${i - 1}) WHERE dsrc >= 80 AND ddst >= 80)"""
-            .stripMargin
-        }.mkString(",\n")
-        s"""WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS item
-           |  FROM lineitem),
-           |ed AS (SELECT DISTINCT a.item AS u, c.item AS v
-           |  FROM b a JOIN b c ON a.bk = c.bk AND a.item < c.item),
-           |e0 AS (SELECT u AS src, v AS dst FROM ed
-           |  UNION ALL SELECT v, u FROM ed),
-           |$rounds
-           |SELECT src AS p_partkey, CAST(count(*) AS BIGINT) AS degree
-           |FROM e12 GROUP BY src ORDER BY p_partkey""".stripMargin
-      },
-
-      // closed form: complete-group ring members collapse to the ring
-      // min, chain members are their own singleton SCC
-      "q44_scc" ->
-        """WITH lim AS (SELECT count(*) - count(*) % 8 AS l FROM documents)
-          |SELECT doc_id AS node,
-          | CASE WHEN doc_id % 8 <= 3 THEN doc_id - doc_id % 8
-          |  ELSE doc_id END AS scc
-          |FROM documents, lim WHERE doc_id < l
-          |ORDER BY node""".stripMargin,
-
-      "q16_triangles" ->
-        """WITH b AS (SELECT DISTINCT l_orderkey AS bk, l_partkey AS item
-          |  FROM lineitem),
-          |e AS (SELECT DISTINCT a.item AS u, c.item AS v
-          |  FROM b a JOIN b c ON a.bk = c.bk AND a.item < c.item),
-          |tri AS (SELECT x.u AS a, x.v AS b, y.v AS c FROM e x
-          |  JOIN e y ON x.u = y.u AND x.v < y.v
-          |  JOIN e z ON z.u = x.v AND z.v = y.v)
-          |SELECT node AS p_partkey, CAST(count(*) AS BIGINT) AS n_triangles
-          |FROM (SELECT a AS node FROM tri
-          |  UNION ALL SELECT b FROM tri
-          |  UNION ALL SELECT c FROM tri) t
-          |GROUP BY 1 ORDER BY p_partkey""".stripMargin,
-
-      "alma_format_guard" ->
-        """SELECT '''' || CAST(c_custkey AS VARCHAR) AS "MMS ID",
-          | '''' || CAST(c_custkey * 7 AS VARCHAR) AS "Barcode",
-          | c_name AS title,
-          | '' AS "Material Type", '' AS "Item Policy", '' AS "Description",
-          | '' AS "Enum A", '' AS "Enum B", '' AS "Chron I", '' AS "Chron J",
-          | c_custkey AS sort_key
-          |FROM customer ORDER BY sort_key""".stripMargin,
-
-      "alma_sort_keys" -> {
-        val pat = """'^(?:[sS][eE][rR]\.?\s*)?(\d+)?\s*(?:[vV][oO]?[lL]?\.?\s*)(\d+)'"""
-        s"""WITH d AS (SELECT l_orderkey, l_linenumber, $duckSynthDesc AS desc_s FROM lineitem)
-           |SELECT l_orderkey, l_linenumber, desc_s,
-           | CAST(CASE WHEN regexp_extract(desc_s, $pat, 1) = '' THEN 0
-           |   ELSE CAST(regexp_extract(desc_s, $pat, 1) AS INT) END AS INT) AS ser_no,
-           | CAST(CASE WHEN regexp_extract(desc_s, $pat, 2) = '' THEN 0
-           |   ELSE CAST(regexp_extract(desc_s, $pat, 2) AS INT) END AS INT) AS vol_no
-           |FROM d ORDER BY ser_no, vol_no, desc_s, l_orderkey, l_linenumber""".stripMargin
-      },
-
-      "alma_chronj_norm" -> {
-        val raw = """CASE WHEN event_type = 'click' THEN 'january-february'
-                    | WHEN event_type = 'view' THEN 'SEPT./october'
-                    | WHEN event_type = 'purchase' THEN 'winter'
-                    | WHEN event_type = 'signup' THEN 'spring-summer'
-                    | ELSE 'june, nov. and december' END""".stripMargin.replace("\n", "")
-        s"""SELECT event_id, $raw AS chron_raw, ${duckMonthChain(s"($raw)")} AS chron_canon
-           |FROM events ORDER BY event_id""".stripMargin
-      },
-
-      "alma_year_infer" ->
-        """WITH base AS (
-          | SELECT user_id, event_id,
-          |  CASE WHEN event_id % 3 = 0
-          |   THEN lpad(CAST((1900 + (event_id * 37) % 120) % 100 AS VARCHAR), 2, '0')
-          |   ELSE CAST(1900 + (event_id * 37) % 120 AS VARCHAR) END AS chron_raw
-          | FROM events),
-          |probe AS (SELECT *, regexp_extract(chron_raw, '^(\d+)', 1) AS yr FROM base),
-          |nb AS (SELECT *,
-          |  last_value(CASE WHEN length(yr) = 4 THEN yr END IGNORE NULLS) OVER
-          |   (PARTITION BY user_id ORDER BY event_id
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev,
-          |  first_value(CASE WHEN length(yr) = 4 THEN yr END IGNORE NULLS) OVER
-          |   (PARTITION BY user_id ORDER BY event_id
-          |    ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING) AS next
-          | FROM probe),
-          |fx AS (SELECT *,
-          |  4 - length(yr) AS dg,
-          |  CAST(prev AS INT) AS prev_i, CAST(next AS INT) AS next_i,
-          |  CAST(yr AS INT) AS yr_i,
-          |  CAST(substr(prev, 1, 4 - length(yr)) || yr AS INT) AS cand1,
-          |  CAST(substr(next, 1, 4 - length(yr)) || yr AS INT) AS cand2,
-          |  CAST(substr(prev, 1, 2) AS INT) AS cent,
-          |  (CAST(prev AS INT) + CAST(next AS INT)) / 2.0 AS avg_y,
-          |  CAST(right(next, 2) AS INT) AS nd,
-          |  CAST(right(prev, 2) AS INT) AS pd
-          | FROM nb)
-          |SELECT user_id, event_id, chron_raw,
-          | CASE WHEN length(yr) > 0 AND length(yr) < 4 THEN
-          |  CASE
-          |   WHEN prev IS NOT NULL AND next IS NOT NULL THEN
-          |    CASE
-          |     WHEN prev_i <= cand1 AND cand1 <= next_i THEN substr(prev, 1, dg) || chron_raw
-          |     WHEN prev_i <= cand2 AND cand2 <= next_i THEN substr(next, 1, dg) || chron_raw
-          |     ELSE CAST(
-          |      CASE
-          |       WHEN abs(avg_y - ((cent-1)*100 + yr_i)) <= abs(avg_y - (cent*100 + yr_i))
-          |        AND abs(avg_y - ((cent-1)*100 + yr_i)) <= abs(avg_y - ((cent+1)*100 + yr_i))
-          |        THEN cent - 1
-          |       WHEN abs(avg_y - (cent*100 + yr_i)) <= abs(avg_y - ((cent+1)*100 + yr_i))
-          |        THEN cent
-          |       ELSE cent + 1 END AS VARCHAR) || chron_raw
-          |    END
-          |   WHEN prev IS NULL AND next IS NOT NULL THEN
-          |    CAST(CASE WHEN yr_i > nd THEN next_i - nd - 100 + yr_i
-          |     ELSE next_i - nd + yr_i END AS VARCHAR)
-          |   WHEN prev IS NOT NULL AND next IS NULL THEN
-          |    CAST(CASE WHEN pd > yr_i THEN prev_i - pd + 100 + yr_i
-          |     ELSE prev_i - pd + yr_i END AS VARCHAR)
-          |   ELSE chron_raw END
-          | ELSE chron_raw END AS chron_fixed,
-          | CASE WHEN length(yr) > 0 AND length(yr) < 4 AND prev IS NULL AND next IS NULL
-          |  THEN 'Err: Problem interpreting Chron I' ELSE '' END AS notes
-          |FROM fx ORDER BY user_id, event_id""".stripMargin,
-
-      "alma_code_translate" ->
-        """SELECT mat_code, count(*) AS n_items FROM (
-          | SELECT CASE
-          |  WHEN l_linenumber % 3 = 0 THEN 'BOOK'
-          |  WHEN l_linenumber % 3 = 1 THEN 'DVD'
-          |  ELSE 'THESIS' END AS mat_code
-          | FROM lineitem) GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      "alma_nomatch_count" ->
-        """SELECT CAST(sum(CASE WHEN l_linenumber % 5 = 4 THEN 1 ELSE 0 END) AS BIGINT) AS n_unmatched,
-          | count(*) AS n_total
-          |FROM lineitem""".stripMargin,
-
-      "alma_domain_validate" ->
-        """SELECT l_orderkey, l_linenumber,
-          | CASE CAST(l_linenumber % 4 AS INT)
-          |  WHEN 0 THEN 'Book' WHEN 1 THEN 'DVD' WHEN 2 THEN 'Thesis'
-          |  ELSE 'Scroll' END AS material_type,
-          | CASE WHEN l_linenumber % 4 = 3
-          |  THEN 'Err: Invalid value for Material Type' ELSE '' END AS notes
-          |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-      "dedup_exact" ->
-        s"""SELECT md5($duckNorm) AS fp, count(*) AS n_dups,
-           | min(doc_id) AS keep_id
-           |FROM documents GROUP BY 1 ORDER BY fp""".stripMargin,
-
-      // brute-force the full cross-product (with only a length-band
-      // prefilter) where the engine blocks on deletion variants — the
-      // oracle's independence proves the blocking misses nothing
-      "dedup_fuzzy_names" ->
-        """WITH s AS (SELECT DISTINCT c_name AS nm FROM customer
-          |  WHERE c_name IS NOT NULL)
-          |SELECT a.nm AS s1, b.nm AS s2,
-          | CAST(levenshtein(a.nm, b.nm) AS BIGINT) AS dist
-          |FROM s a JOIN s b ON a.nm < b.nm
-          |WHERE abs(len(a.nm) - len(b.nm)) <= 1
-          |  AND levenshtein(a.nm, b.nm) <= 1
-          |ORDER BY s1, s2""".stripMargin,
-
-      "dedup_minhash" ->
-        s"""SELECT doc_id,
-           | ${duckMinhash(duckShingles3, 0)} AS mh0,
-           | ${duckMinhash(duckShingles3, 1)} AS mh1,
-           | ${duckMinhash(duckShingles3, 2)} AS mh2,
-           | ${duckMinhash(duckShingles3, 3)} AS mh3
-           |FROM documents ORDER BY doc_id""".stripMargin,
-
-      // truth = exact 3-gram jaccard >= 0.25 over ONE global block (no
-      // df cap); candidates = the shared LSH edge CTEs; counts exact,
-      // ratios one IEEE division each
-      "dedup_recall_minhash" ->
-        s"""WITH $duckMinhashEdgeCtes,
-           |em AS MATERIALIZED (SELECT doc_a, doc_b FROM edges),
-           |g AS (SELECT doc_id, unnest(list_distinct($duckShingles3)) AS gram
-           | FROM documents),
-           |sz AS (SELECT doc_id, count(*) AS sz FROM g GROUP BY doc_id),
-           |pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           |  count(*) AS inter
-           | FROM g a JOIN g b ON a.gram = b.gram AND a.doc_id < b.doc_id
-           | GROUP BY 1, 2),
-           |truth AS MATERIALIZED (SELECT p.doc_a, p.doc_b FROM pr p
-           | JOIN sz sa ON sa.doc_id = p.doc_a
-           | JOIN sz sb ON sb.doc_id = p.doc_b
-           | WHERE p.inter::DOUBLE / (sa.sz + sb.sz - p.inter)::DOUBLE >= 0.25),
-           |hit AS MATERIALIZED (SELECT t.doc_a, t.doc_b FROM truth t
-           | JOIN em e ON t.doc_a = e.doc_a AND t.doc_b = e.doc_b)
-           |SELECT
-           | (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           | (SELECT CAST(count(*) AS BIGINT) FROM em) AS n_cand,
-           | (SELECT CAST(count(*) AS BIGINT) FROM hit) AS n_hit,
-           | (SELECT count(*) FROM hit)::DOUBLE
-           |  / (SELECT count(*) FROM truth)::DOUBLE AS recall,
-           | (SELECT count(*) FROM hit)::DOUBLE
-           |  / (SELECT count(*) FROM em)::DOUBLE AS precision""".stripMargin,
-
-      // qual mirrors the engine's bucket-size cap (maxBucket = 64):
-      // oversized buckets are degenerate-shingle noise, dropped before
-      // any pair forms
-      "dedup_minhash_pairs" ->
-        s"""WITH $duckMinhashEdgeCtes
-           |SELECT doc_a, doc_b FROM edges
-           |ORDER BY doc_a, doc_b""".stripMargin,
-
-      // the tier funnel: canonical-url keep-min, content-md5 keep-min
-      // among tier-1 survivors, then the SAME full-corpus band edges
-      // restricted to tier-2 survivors (drop the higher id of each
-      // surviving edge). MATERIALIZED: t1/t2 feed several scalar
-      // subqueries and DuckDB inlines plain multi-referenced CTEs
-      "dedup_cascade" ->
-        s"""WITH $duckMinhashEdgeCtes,
-           |t1 AS MATERIALIZED (SELECT min(doc_id) AS doc_id FROM (
-           |   SELECT doc_id, ${duckCanonical(s"($duckMessyUrl)")} AS url
-           |   FROM documents)
-           | GROUP BY url),
-           |t2 AS MATERIALIZED (SELECT min(doc_id) AS doc_id FROM (
-           |   SELECT d.doc_id, md5($duckNorm) AS fp FROM documents d
-           |    JOIN t1 ON d.doc_id = t1.doc_id)
-           | GROUP BY fp),
-           |drop3 AS MATERIALIZED (SELECT DISTINCT e.doc_b AS doc_id
-           | FROM edges e
-           | JOIN t2 a ON e.doc_a = a.doc_id
-           | JOIN t2 b ON e.doc_b = b.doc_id)
-           |SELECT CAST(1 AS BIGINT) AS tier, 'url_canonical' AS method,
-           | (SELECT count(*) FROM documents) AS n_in,
-           | (SELECT count(*) FROM documents) - (SELECT count(*) FROM t1)
-           |   AS n_removed,
-           | (SELECT count(*) FROM t1) AS n_out
-           |UNION ALL SELECT 2, 'content_md5',
-           | (SELECT count(*) FROM t1),
-           | (SELECT count(*) FROM t1) - (SELECT count(*) FROM t2),
-           | (SELECT count(*) FROM t2)
-           |UNION ALL SELECT 3, 'minhash_band',
-           | (SELECT count(*) FROM t2),
-           | (SELECT count(*) FROM drop3),
-           | (SELECT count(*) FROM t2) - (SELECT count(*) FROM drop3)
-           |ORDER BY tier""".stripMargin,
-
-      // transitive closure of the SAME edge SQL via a recursive min-label
-      // reachability CTE; cluster id = min reachable node, survivor = the
-      // node equal to its cluster id
-      "dedup_clusters" ->
-        s"""WITH RECURSIVE $duckMinhashEdgeCtes,
-           |sym AS (SELECT doc_a AS a, doc_b AS b FROM edges
-           | UNION ALL SELECT doc_b, doc_a FROM edges),
-           |reach(node, lbl) AS (
-           | SELECT a, a FROM sym
-           | UNION
-           | SELECT s.b, r.lbl FROM reach r JOIN sym s ON s.a = r.node)
-           |SELECT node AS doc_id, min(lbl) AS cluster_id,
-           | node = min(lbl) AS is_survivor
-           |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin,
-
-      // same edge CTEs, 4 unrolled fixed-point rounds: contrib = r //
-      // deg of the SOURCE node, r' = 150000 + (85·Σcontrib) // 100 — all
-      // BIGINT, so every round matches the Spark longs bit-for-bit
-      "dedup_pagerank" -> {
-        val rounds = (1 to 4).map(i =>
-          s"""r$i AS (SELECT s.dst AS node,
-             | 150000 + (85 * sum(r${i - 1}.r // deg.d)) // 100 AS r
-             | FROM sym s JOIN r${i - 1} ON r${i - 1}.node = s.src
-             |  JOIN deg ON deg.src = s.src
-             | GROUP BY 1)""".stripMargin).mkString(",\n")
-        s"""WITH $duckMinhashEdgeCtes,
-           |sym AS (SELECT doc_a AS src, doc_b AS dst FROM edges
-           | UNION ALL SELECT doc_b, doc_a FROM edges),
-           |deg AS (SELECT src, CAST(count(*) AS BIGINT) AS d FROM sym
-           | GROUP BY 1),
-           |r0 AS (SELECT src AS node, CAST(1000000 AS BIGINT) AS r
-           | FROM deg),
-           |$rounds
-           |SELECT node AS doc_id, CAST(r AS BIGINT) AS rank_fp FROM r4
-           |ORDER BY doc_id""".stripMargin
-      },
-
-      // kept corpus = documents minus non-survivor cluster members, on
-      // the same recursive-CTE closure as dedup_clusters
-      "dedup_survivors" ->
-        s"""WITH RECURSIVE $duckMinhashEdgeCtes,
-           |sym AS (SELECT doc_a AS a, doc_b AS b FROM edges
-           | UNION ALL SELECT doc_b, doc_a FROM edges),
-           |reach(node, lbl) AS (
-           | SELECT a, a FROM sym
-           | UNION
-           | SELECT s.b, r.lbl FROM reach r JOIN sym s ON s.a = r.node),
-           |dropped AS (SELECT node FROM
-           |  (SELECT node, min(lbl) AS comp FROM reach GROUP BY node)
-           | WHERE node <> comp)
-           |SELECT doc_id, source FROM documents
-           |WHERE doc_id NOT IN (SELECT node FROM dropped)
-           |ORDER BY doc_id""".stripMargin,
-
-      // same recursive-CTE closure as dedup_survivors, but the survivor
-      // of each cluster is the max-alpha-ratio member (tie → min id);
-      // alpha_ratio is the identical expression text_quality_filter
-      // oracles, so the rank order agrees bit-for-bit
-      "dedup_survivors_quality" ->
-        s"""WITH RECURSIVE $duckMinhashEdgeCtes,
-           |sym AS (SELECT doc_a AS a, doc_b AS b FROM edges
-           | UNION ALL SELECT doc_b, doc_a FROM edges),
-           |reach(node, lbl) AS (
-           | SELECT a, a FROM sym
-           | UNION
-           | SELECT s.b, r.lbl FROM reach r JOIN sym s ON s.a = r.node),
-           |comp AS (SELECT node, min(lbl) AS component FROM reach GROUP BY node),
-           |q AS (SELECT doc_id, source,
-           |  CASE WHEN CAST(length(text) AS BIGINT) > 0
-           |   THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS BIGINT)::DOUBLE
-           |    / CAST(length(text) AS BIGINT)::DOUBLE
-           |   ELSE 0.0 END AS alpha_ratio
-           | FROM documents),
-           |r AS (SELECT c.node,
-           |  row_number() OVER (PARTITION BY c.component
-           |   ORDER BY q.alpha_ratio DESC, c.node) AS rn
-           | FROM comp c JOIN q ON q.doc_id = c.node),
-           |dropped AS (SELECT node FROM r WHERE rn > 1)
-           |SELECT doc_id, source, alpha_ratio FROM q
-           |WHERE doc_id NOT IN (SELECT node FROM dropped)
-           |ORDER BY doc_id""".stripMargin,
-
-      "dedup_simhash" ->
-        s"""SELECT doc_id, $duckSimhash48 AS sh
-           |FROM documents ORDER BY doc_id""".stripMargin,
-
-      // oracle is the brute-force O(n²) pair scan; the engine's pigeonhole
-      // chunk blocking must reproduce it exactly
-      "dedup_simhash_pairs" ->
-        s"""WITH s AS (SELECT doc_id, $duckSimhash48 AS sh FROM documents)
-           |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           | CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS dist
-           |FROM s a JOIN s b ON a.doc_id < b.doc_id
-           |WHERE bit_count(xor(a.sh, b.sh)) <= 3
-           |ORDER BY id_a, id_b""".stripMargin,
-
-      // truth = brute O(n²) hamming scan; candidates = the same 12-bit
-      // pigeonhole chunks in SQL. Lossless banding means recall reads
-      // EXACTLY 1.0 — the invariant is under oracle test, not assumed
-      "dedup_recall_hamming" ->
-        s"""WITH s AS MATERIALIZED (SELECT doc_id, $duckSimhash48 AS sh
-           |  FROM documents),
-           |ch AS MATERIALIZED (SELECT doc_id, c.ci AS ci,
-           |  (sh >> (c.ci * 12)) & 4095 AS cv
-           | FROM s, (SELECT unnest(range(4)) AS ci) c),
-           |cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS doc_a,
-           |  b.doc_id AS doc_b
-           | FROM ch a JOIN ch b ON a.ci = b.ci AND a.cv = b.cv
-           |  AND a.doc_id < b.doc_id),
-           |truth AS MATERIALIZED (SELECT a.doc_id AS doc_a,
-           |  b.doc_id AS doc_b
-           | FROM s a JOIN s b ON a.doc_id < b.doc_id
-           | WHERE bit_count(xor(a.sh, b.sh)) <= 3),
-           |hit AS MATERIALIZED (SELECT t.doc_a FROM truth t
-           | JOIN cand c ON t.doc_a = c.doc_a AND t.doc_b = c.doc_b)
-           |SELECT
-           | (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
-           | (SELECT CAST(count(*) AS BIGINT) FROM cand) AS n_cand,
-           | (SELECT CAST(count(*) AS BIGINT) FROM hit) AS n_hit,
-           | (SELECT count(*) FROM hit)::DOUBLE
-           |  / (SELECT count(*) FROM truth)::DOUBLE AS recall,
-           | (SELECT count(*) FROM hit)::DOUBLE
-           |  / (SELECT count(*) FROM cand)::DOUBLE AS precision""".stripMargin,
-
-      // the inverted-index shape in SQL, including the engine's hot-gram
-      // cap (maxGramDf = 500): grams with per-source df above the cap are
-      // dropped from every doc's set; sizes and intersections both count
-      // the capped gram space, so the ratio is Jaccard over the
-      // discriminative grams
-      "dedup_jaccard" ->
-        s"""WITH g AS (SELECT doc_id, source, unnest(list_distinct($duckShingles2)) AS gram
-           |  FROM documents),
-           |ok AS (SELECT source, gram FROM g GROUP BY source, gram
-           |  HAVING count(*) <= 500),
-           |k AS (SELECT g.doc_id, g.source, g.gram FROM g
-           |  JOIN ok ON g.source = ok.source AND g.gram = ok.gram),
-           |sz AS (SELECT doc_id, count(*) AS sz FROM k GROUP BY doc_id),
-           |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           |  count(*) AS inter
-           | FROM k a JOIN k b ON a.source = b.source AND a.gram = b.gram
-           |  AND a.doc_id < b.doc_id
-           | GROUP BY 1, 2)
-           |SELECT p.doc_a, p.doc_b,
-           | p.inter::DOUBLE / (sa.sz + sb.sz - p.inter)::DOUBLE AS jaccard
-           |FROM pairs p JOIN sz sa ON sa.doc_id = p.doc_a
-           |JOIN sz sb ON sb.doc_id = p.doc_b
-           |WHERE p.inter::DOUBLE / (sa.sz + sb.sz - p.inter)::DOUBLE >= 0.25
-           |ORDER BY doc_a, doc_b""".stripMargin,
-
-      // same index CTEs as dedup_jaccard; containment divides by the
-      // smaller set instead of the union
-      "dedup_containment" ->
-        s"""WITH g AS (SELECT doc_id, source, unnest(list_distinct($duckShingles2)) AS gram
-           |  FROM documents),
-           |ok AS (SELECT source, gram FROM g GROUP BY source, gram
-           |  HAVING count(*) <= 500),
-           |k AS (SELECT g.doc_id, g.source, g.gram FROM g
-           |  JOIN ok ON g.source = ok.source AND g.gram = ok.gram),
-           |sz AS (SELECT doc_id, count(*) AS sz FROM k GROUP BY doc_id),
-           |pairs AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           |  count(*) AS inter
-           | FROM k a JOIN k b ON a.source = b.source AND a.gram = b.gram
-           |  AND a.doc_id < b.doc_id
-           | GROUP BY 1, 2)
-           |SELECT p.doc_a, p.doc_b,
-           | p.inter::DOUBLE / least(sa.sz, sb.sz)::DOUBLE AS containment,
-           | p.inter::DOUBLE / (sa.sz + sb.sz - p.inter)::DOUBLE AS jaccard
-           |FROM pairs p JOIN sz sa ON sa.doc_id = p.doc_a
-           |JOIN sz sb ON sb.doc_id = p.doc_b
-           |WHERE p.inter::DOUBLE / least(sa.sz, sb.sz)::DOUBLE >= 0.3
-           |ORDER BY doc_a, doc_b""".stripMargin,
-
-      // segment replay: 1-based subscripts zip with unnest; seg index is
-      // (idx-1)//3 and within-segment order rides ORDER BY idx. n_segs
-      // comes from the document row itself (ceil arithmetic) so an
-      // all-boilerplate or empty doc still emits its row; the engine
-      // keys df on md5(seg_text), the oracle joins seg_text directly —
-      // identical verdicts short of an md5 collision
-      "dedup_boilerplate" ->
-        s"""WITH ws AS (SELECT doc_id, $duckWords AS w FROM documents
-           |  WHERE $duckNorm <> ''),
-           |ex AS (SELECT doc_id, unnest(w) AS x,
-           |  generate_subscripts(w, 1) AS idx FROM ws),
-           |seg AS (SELECT doc_id, (idx - 1) // 3 AS seg,
-           |  string_agg(x, ' ' ORDER BY idx) AS seg_text
-           | FROM ex GROUP BY doc_id, (idx - 1) // 3),
-           |fr AS (SELECT seg_text, count(DISTINCT doc_id) AS df
-           | FROM seg GROUP BY seg_text),
-           |kept AS (SELECT s.doc_id, s.seg, s.seg_text FROM seg s
-           |  JOIN fr ON s.seg_text = fr.seg_text WHERE fr.df <= 3),
-           |base AS (SELECT doc_id,
-           |  CASE WHEN $duckNorm = '' THEN CAST(0 AS BIGINT)
-           |   ELSE CAST((len($duckWords) + 2) // 3 AS BIGINT) END AS n_segs
-           | FROM documents),
-           |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-           |  string_agg(seg_text, ' ' ORDER BY seg) AS clean_text
-           | FROM kept GROUP BY doc_id)
-           |SELECT b.doc_id, b.n_segs,
-           | COALESCE(a.n_kept, 0) AS n_kept,
-           | COALESCE(a.clean_text, '') AS clean_text
-           |FROM base b LEFT JOIN agg a USING (doc_id)
-           |ORDER BY b.doc_id""".stripMargin,
-
-      // same segmentation as dedup_boilerplate; keep = the segment's
-      // index equals the doc-local FIRST index of its text
-      "dedup_lines_within" ->
-        s"""WITH ws AS (SELECT doc_id, $duckWords AS w FROM documents
-           |  WHERE $duckNorm <> ''),
-           |ex AS (SELECT doc_id, unnest(w) AS x,
-           |  generate_subscripts(w, 1) AS idx FROM ws),
-           |seg AS (SELECT doc_id, (idx - 1) // 3 AS seg,
-           |  string_agg(x, ' ' ORDER BY idx) AS seg_text
-           | FROM ex GROUP BY doc_id, (idx - 1) // 3),
-           |kept AS (SELECT doc_id, seg, seg_text FROM (
-           |  SELECT doc_id, seg, seg_text,
-           |   min(seg) OVER (PARTITION BY doc_id, seg_text) AS first_seg
-           |  FROM seg) WHERE seg = first_seg),
-           |tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_segs
-           | FROM seg GROUP BY doc_id),
-           |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-           |  string_agg(seg_text, ' ' ORDER BY seg) AS dedup_text
-           | FROM kept GROUP BY doc_id)
-           |SELECT t.doc_id, t.n_segs, a.n_kept, a.dedup_text
-           |FROM tot t JOIN agg a USING (doc_id)
-           |ORDER BY t.doc_id""".stripMargin,
-
-      "dedup_jaccard_hot" ->
-        s"""SELECT source AS blk, gram, count(*) AS gram_df
-           |FROM (SELECT doc_id, source, unnest(list_distinct($duckShingles2)) AS gram
-           |  FROM documents)
-           |GROUP BY source, gram HAVING count(*) > 5
-           |ORDER BY blk, gram""".stripMargin,
-
-      "dedup_embed" ->
-        s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           | ${duckCosine("a.embedding", "b.embedding")} AS score
-           |FROM embeddings a JOIN embeddings b
-           | ON a.label = b.label AND a.vec_id < b.vec_id
-           |WHERE ${duckCosine("a.embedding", "b.embedding")} >= 0.35
-           |ORDER BY id_a, id_b""".stripMargin,
-
-      // blocking is sign-bucket hamming <= 1 (the engine's multi-probe):
-      // same bucket arithmetic as sim_ann_bucket
-      "dedup_embed_lsh" ->
-        s"""WITH $duckEmbedEdgeCtes
-           |SELECT id_a, id_b, score FROM eedges
-           |ORDER BY id_a, id_b""".stripMargin,
-
-      // transitive closure over the SAME hamming<=1 pair SQL as
-      // dedup_embed_lsh, via the dedup_clusters recursive min-label CTE
-      "dedup_embed_clusters" ->
-        s"""WITH RECURSIVE $duckEmbedEdgeCtes,
-           |sym AS (SELECT id_a AS a, id_b AS b FROM eedges
-           | UNION ALL SELECT id_b, id_a FROM eedges),
-           |reach(node, lbl) AS (
-           | SELECT a, a FROM sym
-           | UNION
-           | SELECT s.b, r.lbl FROM reach r JOIN sym s ON s.a = r.node)
-           |SELECT node AS vec_id, min(lbl) AS cluster_id,
-           | node = min(lbl) AS is_survivor
-           |FROM reach GROUP BY node ORDER BY vec_id""".stripMargin,
-
-      // same assign CTE as emb_kmeans_step; min-id cell-mate at cosine
-      // >= tau survives, the other side of each pair drops
-      "dedup_semantic" -> {
-        s"""WITH c AS (SELECT vec_id AS cid, embedding AS ce
-           |  FROM embeddings ORDER BY vec_id LIMIT 8),
-           |assign AS (SELECT e.vec_id, e.embedding,
-           |   min({'d': ${duckL2("e.embedding", "c.ce")}, 'cid': c.cid})['cid'] AS cell
-           | FROM embeddings e CROSS JOIN c GROUP BY e.vec_id, e.embedding),
-           |dropped AS (SELECT DISTINCT b.vec_id FROM assign a JOIN assign b
-           |  ON a.cell = b.cell AND a.vec_id < b.vec_id
-           |  AND ${duckCosine("a.embedding", "b.embedding")} >= 0.4)
-           |SELECT vec_id, CAST(cell AS BIGINT) AS cell FROM assign
-           |WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
-           |ORDER BY vec_id""".stripMargin
-      },
-
-      "sim_topk_cosine" ->
-        s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)
-           |SELECT e.vec_id, ${duckCosine("e.embedding", "q.qe")} AS score
-           |FROM embeddings e, q
-           |ORDER BY score DESC, vec_id LIMIT 10""".stripMargin,
-
-      // int8 quantize-then-search: the oracle replicates the symmetric
-      // absmax quantization (identical IEEE floor(x*127/m + 0.5), the
-      // emb_quantize_int8 arithmetic), then EXACT integer dots; the only
-      // IEEE ops are the final sqrt + division, correctly rounded in both
-      // engines
-      "sim_topk_int8" ->
-        """WITH q8 AS (SELECT vec_id,
-          |  CASE WHEN ms > 0 THEN list_transform(embedding,
-          |    x -> CAST(floor(x::DOUBLE * 127.0 / ms + 0.5) AS BIGINT))
-          |   ELSE list_transform(embedding, x -> CAST(0 AS BIGINT)) END AS q
-          | FROM (SELECT vec_id, embedding,
-          |   COALESCE(list_aggregate(list_transform(embedding,
-          |     x -> abs(x::DOUBLE)), 'max'), 0.0) AS ms
-          |  FROM embeddings)),
-          |qv AS (SELECT q AS qq FROM q8 WHERE vec_id = 0),
-          |s AS (SELECT v.vec_id,
-          |  CAST(list_sum(list_transform(range(1, len(v.q) + 1),
-          |    i -> v.q[i] * qv.qq[i])) AS BIGINT) AS di,
-          |  CAST(list_sum(list_transform(v.q, x -> x * x)) AS BIGINT) AS na2,
-          |  CAST(list_sum(list_transform(qv.qq, x -> x * x)) AS BIGINT) AS nq2
-          | FROM q8 v, qv)
-          |SELECT vec_id,
-          | CASE WHEN na2 > 0 AND nq2 > 0
-          |  THEN di / sqrt(CAST(na2 * nq2 AS DOUBLE)) ELSE 0.0 END AS score
-          |FROM s ORDER BY score DESC, vec_id LIMIT 10""".stripMargin,
-
-      // per-vector top-3 among hamming<=1 bucket candidates; same bucket
-      // arithmetic as sim_ann_bucket, row_number tie-break on nbr id
-      "sim_knn_join" ->
-        s"""WITH v AS (SELECT vec_id, embedding,
-           |  ${duckBkt("embedding")} AS bk FROM embeddings),
-           |c AS (SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id,
-           |  ${duckCosine("a.embedding", "b.embedding")} AS score
-           | FROM v a JOIN v b ON a.vec_id <> b.vec_id
-           |  AND bit_count(xor(a.bk, b.bk)) <= 1),
-           |r AS (SELECT vec_id, nbr_id, score,
-           |  CAST(row_number() OVER (PARTITION BY vec_id
-           |    ORDER BY score DESC, nbr_id) AS BIGINT) AS nbr_rank
-           | FROM c)
-           |SELECT vec_id, nbr_id, score, nbr_rank FROM r
-           |WHERE nbr_rank <= 3 ORDER BY vec_id, nbr_rank""".stripMargin,
-
-      // hamming<=1 multi-probe: the engine probes the query bucket plus
-      // every single-bit flip of it, so the oracle filters on xor bit
-      // count rather than bucket equality
-      // both rankings replayed with the shared bucket/cosine chains;
-      // row_number ties break on vec_id exactly as the engine's window
-      "sim_recall_ann" ->
-        s"""WITH q AS (SELECT vec_id AS qid, embedding AS qe,
-           |  ${duckBkt("embedding")} AS qb
-           | FROM embeddings WHERE vec_id % 50 = 0),
-           |sc AS (SELECT q.qid, e.vec_id,
-           |  ${duckCosine("e.embedding", "q.qe")} AS score,
-           |  bit_count(xor(${duckBkt("e.embedding")}, q.qb)) AS ham
-           | FROM embeddings e, q),
-           |brute AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-           |  row_number() OVER (PARTITION BY qid
-           |   ORDER BY score DESC, vec_id) AS rn FROM sc) WHERE rn <= 5),
-           |ann AS (SELECT qid, vec_id FROM (SELECT qid, vec_id,
-           |  row_number() OVER (PARTITION BY qid
-           |   ORDER BY score DESC, vec_id) AS rn FROM sc WHERE ham <= 1)
-           |  WHERE rn <= 5),
-           |h AS (SELECT a.qid, CAST(count(*) AS BIGINT) AS n_hit
-           | FROM ann a JOIN brute b ON a.qid = b.qid
-           |  AND a.vec_id = b.vec_id GROUP BY a.qid),
-           |bn AS (SELECT qid, CAST(count(*) AS BIGINT) AS n_brute
-           | FROM brute GROUP BY qid)
-           |SELECT q.qid, coalesce(h.n_hit, 0) AS n_hit,
-           | CAST(coalesce(h.n_hit, 0) AS DOUBLE)
-           |  / CAST(coalesce(bn.n_brute, 5) AS DOUBLE) AS recall
-           |FROM q LEFT JOIN bn ON q.qid = bn.qid
-           | LEFT JOIN h ON q.qid = h.qid ORDER BY q.qid""".stripMargin,
-
-      "sim_ann_bucket" ->
-        s"""WITH q AS (SELECT embedding AS qe,
-           |  ${duckBkt("embedding")} AS qb
-           | FROM embeddings WHERE vec_id = 0)
-           |SELECT e.vec_id, ${duckCosine("e.embedding", "q.qe")} AS score
-           |FROM embeddings e, q
-           |WHERE bit_count(xor(${duckBkt("e.embedding")}, q.qb)) <= 1
-           |ORDER BY score DESC, vec_id LIMIT 5""".stripMargin,
-
-      // same assign CTE as sim_ivf_topk; fixed-point sums (round to 1e-6
-      // then BIGINT) make the mean order-independent on both engines
-      // same fixed-point slice sums as the kmeans oracles; means and
-      // the gap are the same IEEE division/subtraction in both engines
-      "emb_drift" ->
-        """WITH x AS (SELECT label, vec_id,
-          |  CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS dim,
-          |  unnest(embedding) AS x FROM embeddings),
-          |b AS (SELECT label, dim, CAST(count(*) AS BIGINT) AS n_base,
-          |  sum(CAST(round(x::DOUBLE * 1000000, 0) AS BIGINT)) AS s
-          | FROM x WHERE vec_id % 4 <> 0 GROUP BY 1, 2),
-          |d AS (SELECT label, dim, CAST(count(*) AS BIGINT) AS n_delta,
-          |  sum(CAST(round(x::DOUBLE * 1000000, 0) AS BIGINT)) AS s
-          | FROM x WHERE vec_id % 4 = 0 GROUP BY 1, 2)
-          |SELECT b.label, b.dim, b.n_base, d.n_delta,
-          | CAST(b.s AS DOUBLE) / (b.n_base * 1000000) AS mean_base,
-          | CAST(d.s AS DOUBLE) / (d.n_delta * 1000000) AS mean_delta,
-          | abs(CAST(b.s AS DOUBLE) / (b.n_base * 1000000)
-          |   - CAST(d.s AS DOUBLE) / (d.n_delta * 1000000)) AS gap
-          |FROM b JOIN d USING (label, dim) ORDER BY label, dim""".stripMargin,
-
-      "emb_kmeans_step" -> {
-        s"""WITH c AS (SELECT vec_id AS cid, embedding AS ce
-           |  FROM embeddings ORDER BY vec_id LIMIT 8),
-           |assign AS (SELECT e.vec_id, e.embedding,
-           |   min({'d': ${duckL2("e.embedding", "c.ce")}, 'cid': c.cid})['cid'] AS cell
-           | FROM embeddings e CROSS JOIN c GROUP BY e.vec_id, e.embedding),
-           |x AS (SELECT cell,
-           |   CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS dim,
-           |   unnest(embedding) AS x
-           | FROM assign)
-           |SELECT cell, dim, CAST(count(*) AS BIGINT) AS n,
-           | CAST(sum(CAST(round(x::DOUBLE * 1000000, 0) AS BIGINT)) AS DOUBLE)
-           |   / (count(*) * 1000000) AS mean
-           |FROM x GROUP BY cell, dim ORDER BY cell, dim""".stripMargin
-      },
-
-      // absmax and the floor(x+0.5) half-up rounding are the same IEEE
-      // double ops in both engines; csv render of the int components
-      "emb_quantize_int8" ->
-        """WITH m AS (SELECT vec_id, embedding,
-          |  COALESCE(list_aggregate(list_transform(embedding,
-          |    x -> abs(x::DOUBLE)), 'max'), 0.0) AS q_scale
-          | FROM embeddings)
-          |SELECT vec_id, q_scale,
-          | array_to_string(CASE WHEN q_scale > 0
-          |  THEN list_transform(embedding,
-          |    x -> CAST(floor(x::DOUBLE * 127.0 / q_scale + 0.5) AS INT))
-          |  ELSE list_transform(embedding, x -> 0) END, ',') AS q_csv
-          |FROM m ORDER BY vec_id""".stripMargin,
-
-      // codes joined back to their codewords per subspace, distance
-      // recomputed with the SAME sequential double sum, four terms
-      // added in the engine's fixed left-associated order
-      "sim_pq_adc" -> {
-        val subs = (0 until 4)
-          .map(j => pqSubCtes(j, j * 16 + 1, (j + 1) * 16, iters = 2, k = 4))
-          .mkString(",\n")
-        val dists = (0 until 4).map { j =>
-          s"""d$j AS (SELECT f.vec_id,
-             |  ${duckL2(s"(SELECT embedding[${j * 16 + 1}:${(j + 1) * 16}] FROM embeddings WHERE vec_id = 0)", "c.ce")} AS d
-             | FROM p${j}f f JOIN p${j}c2 c ON c.cid = f.code)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH $subs,
-           |$dists
-           |SELECT d0.vec_id, ((d0.d + d1.d) + d2.d) + d3.d AS adist
-           |FROM d0 JOIN d1 USING (vec_id) JOIN d2 USING (vec_id)
-           | JOIN d3 USING (vec_id)
-           |ORDER BY adist, vec_id LIMIT 10""".stripMargin
-      },
-
-      // the sim_pq_adc ADC ranking restricted to the sim_ivf_topk
-      // probed cells: the two green replays composed — seed coarse
-      // codebook for probe/assign, trained PQ codebooks for the dists
-      "sim_ivfpq_topk" -> {
-        val subs = (0 until 4)
-          .map(j => pqSubCtes(j, j * 16 + 1, (j + 1) * 16, iters = 2, k = 4))
-          .mkString(",\n")
-        val dists = (0 until 4).map { j =>
-          s"""d$j AS (SELECT f.vec_id,
-             |  ${duckL2(s"(SELECT embedding[${j * 16 + 1}:${(j + 1) * 16}] FROM embeddings WHERE vec_id = 0)", "c.ce")} AS d
-             | FROM p${j}f f JOIN p${j}c2 c ON c.cid = f.code)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH $subs,
-           |$dists,
-           |cc AS (SELECT vec_id AS cid, embedding AS ce
-           |  FROM embeddings ORDER BY vec_id LIMIT 8),
-           |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-           |probe AS (SELECT cid FROM cc, q
-           |  ORDER BY ${duckL2("ce", "qe")}, cid LIMIT 3),
-           |assign AS (SELECT e.vec_id,
-           |   min({'d': ${duckL2("e.embedding", "c.ce")}, 'cid': c.cid})['cid'] AS cell
-           | FROM embeddings e CROSS JOIN cc c GROUP BY e.vec_id, e.embedding)
-           |SELECT d0.vec_id, ((d0.d + d1.d) + d2.d) + d3.d AS adist
-           |FROM d0 JOIN d1 USING (vec_id) JOIN d2 USING (vec_id)
-           | JOIN d3 USING (vec_id) JOIN assign a ON a.vec_id = d0.vec_id
-           |WHERE a.cell IN (SELECT cid FROM probe)
-           |ORDER BY adist, vec_id LIMIT 10""".stripMargin
-      },
-
-      // sim_ivfpq_topk's replay with the metadata predicate applied
-      // BEFORE the limit — pre-filter semantics: rank over
-      // probed-cells ∩ allowed, return a full k when it has k rows
-      "sim_ivfpq_filtered" -> {
-        val subs = (0 until 4)
-          .map(j => pqSubCtes(j, j * 16 + 1, (j + 1) * 16, iters = 2, k = 4))
-          .mkString(",\n")
-        val dists = (0 until 4).map { j =>
-          s"""d$j AS (SELECT f.vec_id,
-             |  ${duckL2(s"(SELECT embedding[${j * 16 + 1}:${(j + 1) * 16}] FROM embeddings WHERE vec_id = 0)", "c.ce")} AS d
-             | FROM p${j}f f JOIN p${j}c2 c ON c.cid = f.code)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH $subs,
-           |$dists,
-           |cc AS (SELECT vec_id AS cid, embedding AS ce
-           |  FROM embeddings ORDER BY vec_id LIMIT 8),
-           |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-           |probe AS (SELECT cid FROM cc, q
-           |  ORDER BY ${duckL2("ce", "qe")}, cid LIMIT 3),
-           |assign AS (SELECT e.vec_id,
-           |   min({'d': ${duckL2("e.embedding", "c.ce")}, 'cid': c.cid})['cid'] AS cell
-           | FROM embeddings e CROSS JOIN cc c GROUP BY e.vec_id, e.embedding)
-           |SELECT d0.vec_id, ((d0.d + d1.d) + d2.d) + d3.d AS adist
-           |FROM d0 JOIN d1 USING (vec_id) JOIN d2 USING (vec_id)
-           | JOIN d3 USING (vec_id) JOIN assign a ON a.vec_id = d0.vec_id
-           |WHERE a.cell IN (SELECT cid FROM probe) AND d0.vec_id % 3 = 0
-           |ORDER BY adist, vec_id LIMIT 10""".stripMargin
-      },
-
-      // frozen-codebook incremental build: training chains run over the
-      // EVEN slice only (the initial batch), codes for the FULL corpus
-      // assign under those frozen codebooks, ranking as usual — append
-      // vs rebuild must be invisible to the answer
-      "sim_ivfpq_incremental" -> {
-        val subs = (0 until 4)
-          .map(j => pqSubCtes(j, j * 16 + 1, (j + 1) * 16, iters = 2,
-            k = 4, src = "av"))
-          .mkString(",\n")
-        val full = (0 until 4).map { j =>
-          s"""e$j AS (SELECT e.vec_id,
-             |   min({'d': ${duckL2(s"e.embedding[${j * 16 + 1}:${(j + 1) * 16}]", "c.ce")}, 'cid': c.cid})['cid'] AS code
-             | FROM embeddings e CROSS JOIN p${j}c2 c
-             | GROUP BY e.vec_id, e.embedding)""".stripMargin
-        }.mkString(",\n")
-        val dists = (0 until 4).map { j =>
-          s"""d$j AS (SELECT f.vec_id,
-             |  ${duckL2(s"(SELECT embedding[${j * 16 + 1}:${(j + 1) * 16}] FROM embeddings WHERE vec_id = 0)", "c.ce")} AS d
-             | FROM e$j f JOIN p${j}c2 c ON c.cid = f.code)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH av AS (SELECT vec_id, embedding FROM embeddings
-           |  WHERE vec_id % 2 = 0),
-           |$subs,
-           |$full,
-           |$dists,
-           |cc AS (SELECT vec_id AS cid, embedding AS ce
-           |  FROM av ORDER BY vec_id LIMIT 8),
-           |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-           |probe AS (SELECT cid FROM cc, q
-           |  ORDER BY ${duckL2("ce", "qe")}, cid LIMIT 3),
-           |assign AS (SELECT e.vec_id,
-           |   min({'d': ${duckL2("e.embedding", "c.ce")}, 'cid': c.cid})['cid'] AS cell
-           | FROM embeddings e CROSS JOIN cc c GROUP BY e.vec_id, e.embedding)
-           |SELECT d0.vec_id, ((d0.d + d1.d) + d2.d) + d3.d AS adist
-           |FROM d0 JOIN d1 USING (vec_id) JOIN d2 USING (vec_id)
-           | JOIN d3 USING (vec_id) JOIN assign a ON a.vec_id = d0.vec_id
-           |WHERE a.cell IN (SELECT cid FROM probe)
-           |ORDER BY adist, vec_id LIMIT 10""".stripMargin
-      },
-
-      // the residual composite: residuals = double-subtract rounded once
-      // to REAL (both engines' pinned recipe), four training chains over
-      // the residual corpus, per-cell LUTs via the qres join, ADC
-      // restricted to probed cells
-      "sim_ivfpq_residual_topk" -> {
-        val resSub = "CAST(x[1]::DOUBLE - x[2]::DOUBLE AS REAL)"
-        val subs = (0 until 4)
-          .map(j => pqSubCtes(j, j * 16 + 1, (j + 1) * 16, iters = 2,
-            k = 4, src = "res", vcol = "rv"))
-          .mkString(",\n")
-        val dists = (0 until 4).map { j =>
-          s"""d$j AS (SELECT f.vec_id,
-             |  ${duckL2(s"qres.rqv[${j * 16 + 1}:${(j + 1) * 16}]", "c.ce")} AS d
-             | FROM p${j}f f JOIN p${j}c2 c ON c.cid = f.code
-             | JOIN res r ON r.vec_id = f.vec_id
-             | JOIN qres ON qres.cell = r.cell)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH cc AS (SELECT vec_id AS cid, embedding AS ce
-           |  FROM embeddings ORDER BY vec_id LIMIT 8),
-           |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-           |probe AS (SELECT cid FROM cc, q
-           |  ORDER BY ${duckL2("ce", "qe")}, cid LIMIT 3),
-           |assign AS (SELECT e.vec_id, e.embedding,
-           |   min({'d': ${duckL2("e.embedding", "c.ce")}, 'cid': c.cid})['cid'] AS cell
-           | FROM embeddings e CROSS JOIN cc c GROUP BY e.vec_id, e.embedding),
-           |res AS (SELECT a.vec_id, a.cell,
-           |   list_transform(list_zip(a.embedding, c.ce), x -> $resSub) AS rv
-           | FROM assign a JOIN cc c ON c.cid = a.cell),
-           |qres AS (SELECT cc.cid AS cell,
-           |   list_transform(list_zip(q.qe, cc.ce), x -> $resSub) AS rqv
-           | FROM cc, q),
-           |$subs,
-           |$dists
-           |SELECT d0.vec_id, ((d0.d + d1.d) + d2.d) + d3.d AS adist
-           |FROM d0 JOIN d1 USING (vec_id) JOIN d2 USING (vec_id)
-           | JOIN d3 USING (vec_id) JOIN res rr ON rr.vec_id = d0.vec_id
-           |WHERE rr.cell IN (SELECT cid FROM probe)
-           |ORDER BY adist, vec_id LIMIT 10""".stripMargin
-      },
-
-      // both composite indexes replayed for a QUERY SET: raw chains
-      // prefix p0..p3, residual chains p4..p7 (over the res frame), a
-      // per-qid probe, per-qid ADC rankings restricted to probed cells,
-      // and exact-L2 brute ground truth. MATERIALIZED on the shared
-      // frames (qset/assign/res/brute) — each is referenced by several
-      // downstream CTEs and DuckDB inlines plain multi-referenced CTEs.
-      "sim_recall_ivfpq" -> {
-        val resSub = "CAST(x[1]::DOUBLE - x[2]::DOUBLE AS REAL)"
-        val subsRaw = (0 until 4)
-          .map(j => pqSubCtes(j, j * 16 + 1, (j + 1) * 16, iters = 2, k = 4))
-          .mkString(",\n")
-        val subsRes = (4 until 8)
-          .map(j => pqSubCtes(j, (j - 4) * 16 + 1, (j - 3) * 16, iters = 2,
-            k = 4, src = "res", vcol = "rv"))
-          .mkString(",\n")
-        val rawDists = (0 until 4).map { j =>
-          s"""rd$j AS (SELECT q.qid, f.vec_id,
-             |  ${duckL2(s"q.qe[${j * 16 + 1}:${(j + 1) * 16}]", "c.ce")} AS d
-             | FROM p${j}f f JOIN p${j}c2 c ON c.cid = f.code
-             | CROSS JOIN qset q)""".stripMargin
-        }.mkString(",\n")
-        val resDists = (0 until 4).map { j =>
-          s"""sd$j AS (SELECT qres.qid, f.vec_id,
-             |  ${duckL2(s"qres.rqv[${j * 16 + 1}:${(j + 1) * 16}]", "c.ce")} AS d
-             | FROM p${j + 4}f f JOIN p${j + 4}c2 c ON c.cid = f.code
-             | JOIN res r ON r.vec_id = f.vec_id
-             | JOIN qres ON qres.cell = r.cell)""".stripMargin
-        }.mkString(",\n")
-        def cand(name: String, d: String, cellOf: String) =
-          s"""$name AS (SELECT qid, vec_id FROM (
-             | SELECT qid, vec_id,
-             |  row_number() OVER (PARTITION BY qid
-             |   ORDER BY adist, vec_id) AS rn
-             | FROM (SELECT ${d}0.qid, ${d}0.vec_id,
-             |    ((${d}0.d + ${d}1.d) + ${d}2.d) + ${d}3.d AS adist
-             |   FROM ${d}0 JOIN ${d}1 USING (qid, vec_id)
-             |    JOIN ${d}2 USING (qid, vec_id)
-             |    JOIN ${d}3 USING (qid, vec_id)
-             |    JOIN $cellOf
-             |    JOIN probe p ON p.qid = ${d}0.qid AND p.cid = cl.cell))
-             | WHERE rn <= 10)""".stripMargin
-        s"""WITH cc AS (SELECT vec_id AS cid, embedding AS ce
-           |  FROM embeddings ORDER BY vec_id LIMIT 8),
-           |qset AS MATERIALIZED (SELECT vec_id AS qid, embedding AS qe
-           |  FROM embeddings WHERE vec_id % 100 = 0),
-           |probe AS MATERIALIZED (SELECT qid, cid FROM (
-           |  SELECT q.qid, cc.cid, row_number() OVER (PARTITION BY q.qid
-           |   ORDER BY ${duckL2("cc.ce", "q.qe")}, cc.cid) AS rn
-           |  FROM cc, qset q) WHERE rn <= 3),
-           |assign AS MATERIALIZED (SELECT e.vec_id, e.embedding,
-           |   min({'d': ${duckL2("e.embedding", "c.ce")}, 'cid': c.cid})['cid'] AS cell
-           | FROM embeddings e CROSS JOIN cc c GROUP BY e.vec_id, e.embedding),
-           |res AS MATERIALIZED (SELECT a.vec_id, a.cell,
-           |   list_transform(list_zip(a.embedding, c.ce), x -> $resSub) AS rv
-           | FROM assign a JOIN cc c ON c.cid = a.cell),
-           |qres AS MATERIALIZED (SELECT q.qid, cc.cid AS cell,
-           |   list_transform(list_zip(q.qe, cc.ce), x -> $resSub) AS rqv
-           | FROM cc, qset q),
-           |$subsRaw,
-           |$subsRes,
-           |$rawDists,
-           |$resDists,
-           |${cand("candraw", "rd", "assign cl ON cl.vec_id = rd0.vec_id")},
-           |${cand("candres", "sd", "res cl ON cl.vec_id = sd0.vec_id")},
-           |brute AS MATERIALIZED (SELECT qid, vec_id FROM (
-           |  SELECT q.qid, e.vec_id, row_number() OVER (PARTITION BY q.qid
-           |   ORDER BY ${duckL2("e.embedding", "q.qe")}, e.vec_id) AS rn
-           |  FROM embeddings e, qset q) WHERE rn <= 10),
-           |bn AS (SELECT qid, CAST(count(*) AS BIGINT) AS n_brute
-           | FROM brute GROUP BY qid),
-           |hr AS (SELECT c.qid, CAST(count(*) AS BIGINT) AS n
-           | FROM candraw c JOIN brute b USING (qid, vec_id) GROUP BY c.qid),
-           |hs AS (SELECT c.qid, CAST(count(*) AS BIGINT) AS n
-           | FROM candres c JOIN brute b USING (qid, vec_id) GROUP BY c.qid)
-           |SELECT q.qid, bn.n_brute,
-           | coalesce(hr.n, 0) AS n_hit_raw,
-           | coalesce(hs.n, 0) AS n_hit_res,
-           | CAST(coalesce(hr.n, 0) AS DOUBLE)
-           |  / CAST(bn.n_brute AS DOUBLE) AS recall_raw,
-           | CAST(coalesce(hs.n, 0) AS DOUBLE)
-           |  / CAST(bn.n_brute AS DOUBLE) AS recall_res
-           |FROM qset q JOIN bn ON bn.qid = q.qid
-           | LEFT JOIN hr ON hr.qid = q.qid
-           | LEFT JOIN hs ON hs.qid = q.qid
-           |ORDER BY q.qid""".stripMargin
-      },
-
-      // four independent sliced replays of the SAME training recipe,
-      // one per subspace, then the four assignments unioned
-      "emb_pq_codes" -> {
-        val subs = (0 until 4)
-          .map(j => pqSubCtes(j, j * 16 + 1, (j + 1) * 16, iters = 2, k = 4))
-          .mkString(",\n")
-        val un = (0 until 4).map(j => s"SELECT * FROM p${j}f")
-          .mkString(" UNION ALL ")
-        s"""WITH $subs
-           |SELECT vec_id, subspace, code FROM ($un)
-           |ORDER BY vec_id, subspace""".stripMargin
-      },
-
-      // the training loop unrolled: three identical (assign → fixed-point
-      // means → rebuild codebook) rounds as CTE blocks; an empty cell
-      // COALESCEs to its previous centroid, and the REAL cast per round
-      // mirrors the engine's mean.toFloat round-trip (both IEEE
-      // round-to-nearest-even)
-      "emb_kmeans_train" ->
-        s"""WITH ${kmTrainCtes(3, 8)}
-           |SELECT cell, dim, CAST(v AS DOUBLE) AS val FROM (
-           | SELECT CAST(cid AS BIGINT) AS cell,
-           |  CAST(generate_subscripts(ce, 1) - 1 AS BIGINT) AS dim,
-           |  unnest(ce) AS v
-           | FROM c3)
-           |ORDER BY cell, dim""".stripMargin,
-
-      // semanticDedup fed by the TRAINED codebook (2 replayed rounds):
-      // assignment and the within-cell pair drop run against c2 instead
-      // of the raw seed — the end-to-end wiring kmeansTrain exists for
-      "dedup_semantic_trained" ->
-        s"""WITH ${kmTrainCtes(2, 8)},
-           |assign AS (SELECT e.vec_id, e.embedding,
-           |   min({'d': ${duckL2("e.embedding", "c.ce")}, 'cid': c.cid})['cid'] AS cell
-           | FROM embeddings e CROSS JOIN c2 c GROUP BY e.vec_id, e.embedding),
-           |dropped AS (SELECT DISTINCT b.vec_id FROM assign a JOIN assign b
-           |  ON a.cell = b.cell AND a.vec_id < b.vec_id
-           |  AND ${duckCosine("a.embedding", "b.embedding")} >= 0.4)
-           |SELECT vec_id, CAST(cell AS BIGINT) AS cell FROM assign
-           |WHERE vec_id NOT IN (SELECT vec_id FROM dropped)
-           |ORDER BY vec_id""".stripMargin,
-
-      // ivfTopK fed by the TRAINED codebook: probe selection and cell
-      // assignment both run against c2
-      "sim_ivf_topk_trained" ->
-        s"""WITH ${kmTrainCtes(2, 8)},
-           |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-           |probe AS (SELECT cid FROM c2, q
-           |  ORDER BY ${duckL2("ce", "qe")}, cid LIMIT 3),
-           |assign AS (SELECT e.vec_id, e.embedding,
-           |   min({'d': ${duckL2("e.embedding", "c.ce")}, 'cid': c.cid})['cid'] AS cell
-           | FROM embeddings e CROSS JOIN c2 c GROUP BY e.vec_id, e.embedding)
-           |SELECT a.vec_id, ${duckCosine("a.embedding", "q.qe")} AS score
-           |FROM assign a, q
-           |WHERE a.cell IN (SELECT cid FROM probe)
-           |ORDER BY score DESC, vec_id LIMIT 10""".stripMargin,
-
-      "sim_ivf_topk" -> {
-        s"""WITH c AS (SELECT vec_id AS cid, embedding AS ce
-           |  FROM embeddings ORDER BY vec_id LIMIT 8),
-           |q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-           |probe AS (SELECT cid FROM c, q
-           |  ORDER BY ${duckL2("ce", "qe")}, cid LIMIT 3),
-           |assign AS (SELECT e.vec_id, e.embedding,
-           |   min({'d': ${duckL2("e.embedding", "c.ce")}, 'cid': c.cid})['cid'] AS cell
-           | FROM embeddings e CROSS JOIN c GROUP BY e.vec_id, e.embedding)
-           |SELECT a.vec_id, ${duckCosine("a.embedding", "q.qe")} AS score
-           |FROM assign a, q
-           |WHERE a.cell IN (SELECT cid FROM probe)
-           |ORDER BY score DESC, vec_id LIMIT 10""".stripMargin
-      },
-
-      "text_langid" -> {
-        val langs = TextAnalysis.stopwords.keys.toSeq.sorted
-        val scoreDefs = langs.map(l => s"${duckLangScore(l)} AS s_$l").mkString(", ")
-        val best = langs.map(l => s"s_$l").reduce((a, b) => s"greatest($a, $b)")
-        val pick = langs.foldRight("'und'") { (l, acc) =>
-          s"CASE WHEN s_$l = best AND s_$l > 0 THEN '$l' ELSE $acc END"
-        }
-        s"""WITH sc AS (SELECT doc_id, $scoreDefs FROM documents),
-           |b AS (SELECT *, $best AS best FROM sc)
-           |SELECT doc_id, $pick AS lang_pred FROM b ORDER BY doc_id""".stripMargin
-      },
-
-      "text_quality" -> {
-        val nChars = "CAST(length(text) AS BIGINT)"
-        val nWords = s"(CASE WHEN $duckNorm = '' THEN 0 ELSE CAST(len($duckWords) AS BIGINT) END)"
-        val nAlpha = "CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS BIGINT)"
-        val nPunct =
-          """CAST(length(regexp_replace(text, '[^.,;:!?''"()-]', '', 'g')) AS BIGINT)"""
-        val nStop = s"CAST(${duckLangScore("en")} AS BIGINT)"
-        s"""SELECT doc_id,
-           | $nChars AS n_chars_q,
-           | $nWords AS n_words,
-           | CASE WHEN $nWords > 0 THEN $nAlpha::DOUBLE / $nWords::DOUBLE ELSE 0.0 END AS avg_word_len,
-           | CASE WHEN $nChars > 0 THEN $nPunct::DOUBLE / $nChars::DOUBLE ELSE 0.0 END AS punct_ratio,
-           | CASE WHEN $nChars > 0 THEN $nAlpha::DOUBLE / $nChars::DOUBLE ELSE 0.0 END AS alpha_ratio,
-           | CASE WHEN $nWords > 0 THEN $nStop::DOUBLE / $nWords::DOUBLE ELSE 0.0 END AS stopword_ratio
-           |FROM documents ORDER BY doc_id""".stripMargin
-      },
-
-      "text_tokens" ->
-        s"""SELECT doc_id,
-           | (CASE WHEN $duckNorm = '' THEN 0 ELSE CAST(len($duckWords) AS BIGINT) END) AS n_tokens,
-           | CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS BIGINT) AS n_subwords
-           |FROM documents ORDER BY doc_id""".stripMargin,
-
-      // exclusive running token sum per source = start offset; integer
-      // division by the budget = pack (duckdb SUM(BIGINT) is HUGEINT —
-      // cast back so dtypes match the engine's long)
-      "text_pack" ->
-        s"""WITH t AS (SELECT doc_id, source,
-           | (CASE WHEN $duckNorm = '' THEN 0 ELSE CAST(len($duckWords) AS BIGINT) END) AS n_tokens
-           | FROM documents),
-           |o AS (SELECT doc_id, source, n_tokens,
-           | CAST(COALESCE(SUM(n_tokens) OVER (PARTITION BY source
-           |   ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-           |  0) AS BIGINT) AS start_off
-           | FROM t)
-           |SELECT doc_id, source, n_tokens, start_off,
-           | CAST(start_off // 512 AS BIGINT) AS pack_id
-           |FROM o ORDER BY doc_id""".stripMargin,
-
-      // ANSI percent_rank on the identically-computed alpha ratio: ties
-      // and the (rank-1)/(n-1) definition agree across engines, so the
-      // 0.5 gate keeps the same rows
-      "text_quality_filter" ->
-        """WITH q AS (SELECT doc_id, source,
-          | CASE WHEN CAST(length(text) AS BIGINT) > 0
-          |  THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS BIGINT)::DOUBLE
-          |   / CAST(length(text) AS BIGINT)::DOUBLE
-          |  ELSE 0.0 END AS alpha_ratio
-          | FROM documents),
-          |r AS (SELECT doc_id, source, alpha_ratio,
-          | percent_rank() OVER (PARTITION BY source ORDER BY alpha_ratio) AS prank
-          | FROM q)
-          |SELECT doc_id, source, alpha_ratio, prank FROM r
-          |WHERE prank >= 0.5 ORDER BY doc_id""".stripMargin,
-
-      // same rank-gate contract as text_quality_filter (the min-kept-value
-      // threshold reproduces it exactly), projected to the stream
-      // output's (doc_id, source)
-      "text_stream_quality_filter" ->
-        """WITH q AS (SELECT doc_id, source,
-          | CASE WHEN CAST(length(text) AS BIGINT) > 0
-          |  THEN CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS BIGINT)::DOUBLE
-          |   / CAST(length(text) AS BIGINT)::DOUBLE
-          |  ELSE 0.0 END AS alpha_ratio
-          | FROM documents),
-          |r AS (SELECT doc_id, source, alpha_ratio,
-          | percent_rank() OVER (PARTITION BY source ORDER BY alpha_ratio) AS prank
-          | FROM q)
-          |SELECT doc_id, source FROM r
-          |WHERE prank >= 0.5 ORDER BY doc_id""".stripMargin,
-
-      // share and weight are IEEE divisions of exact BIGINT sums; the
-      // uniform target factor is 1/count(DISTINCT source)
-      "text_mixture" ->
-        s"""WITH p AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(sum(CASE WHEN $duckNorm = '' THEN 0
-           |    ELSE CAST(len($duckWords) AS BIGINT) END) AS BIGINT) AS n_tokens
-           | FROM documents GROUP BY source),
-           |t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total,
-           |  CAST(count(*) AS BIGINT) AS nsrc FROM p)
-           |SELECT p.source, p.n_docs, p.n_tokens,
-           | CAST(p.n_tokens AS DOUBLE) / CAST(t.total AS DOUBLE) AS share,
-           | least(1.0, CAST(t.total AS DOUBLE)
-           |   / CAST(t.nsrc * p.n_tokens AS DOUBLE)) AS weight
-           |FROM p, t ORDER BY p.source""".stripMargin,
-
-      // hex→u32 by digit arithmetic (the mm_features strpos pattern);
-      // weight = the text_mixture formula inline
-      "text_mixture_apply" -> {
-        val hex8 = (1 to 8).map { i =>
-          s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1) * ${math.pow(16, 8 - i).toLong}"
-        }.mkString("(", " + ", ")")
-        s"""WITH p AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-           |  CAST(sum(CASE WHEN $duckNorm = '' THEN 0
-           |    ELSE CAST(len($duckWords) AS BIGINT) END) AS BIGINT) AS n_tokens
-           | FROM documents GROUP BY source),
-           |t AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS total,
-           |  CAST(count(*) AS BIGINT) AS nsrc FROM p),
-           |w AS (SELECT p.source,
-           |  least(1.0, CAST(t.total AS DOUBLE)
-           |    / CAST(t.nsrc * p.n_tokens AS DOUBLE)) AS weight
-           | FROM p, t),
-           |d AS (SELECT doc_id, source,
-           |  substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8) AS h
-           | FROM documents)
-           |SELECT d.doc_id, d.source,
-           | CAST($hex8 AS DOUBLE) / 4294967296.0 AS u, w.weight
-           |FROM d JOIN w USING (source)
-           |WHERE CAST($hex8 AS DOUBLE) / 4294967296.0 < w.weight
-           |ORDER BY d.doc_id""".stripMargin
-      },
-
-      // identical hash order + running-sum-before replay; the straddling
-      // doc ships on both engines (tokens_before < budget, not cumsum)
-      "text_token_budget" ->
-        s"""WITH d AS (SELECT doc_id, source,
-           |  (CASE WHEN $duckNorm = '' THEN 0
-           |    ELSE CAST(len($duckWords) AS BIGINT) END) AS n_tokens,
-           |  md5('budget:' || CAST(doc_id AS VARCHAR)) AS h
-           | FROM documents),
-           |c AS (SELECT doc_id, source, n_tokens,
-           |  CAST(COALESCE(sum(n_tokens) OVER (PARTITION BY source
-           |    ORDER BY h, doc_id
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           |   AS BIGINT) AS tokens_before
-           | FROM d)
-           |SELECT doc_id, source, n_tokens, tokens_before
-           |FROM c WHERE tokens_before < 700
-           |ORDER BY doc_id""".stripMargin,
-
-      // same md5-fraction gate construction as text_mixture_apply; p is
-      // one IEEE division of exact BIGINTs on both engines
-      "text_sample_weighted" -> {
-        val hex8 = (1 to 8).map { i =>
-          s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1) * ${math.pow(16, 8 - i).toLong}"
-        }.mkString("(", " + ", ")")
-        s"""WITH t AS (SELECT CAST(sum(CAST(len(text) AS BIGINT)) AS BIGINT)
-           |  AS total FROM documents),
-           |d AS (SELECT doc_id, CAST(len(text) AS BIGINT) AS score,
-           |  substr(md5('wsamp:' || CAST(doc_id AS VARCHAR)), 1, 8) AS h
-           | FROM documents)
-           |SELECT d.doc_id, d.score,
-           | least(1.0, CAST(d.score * 200 AS DOUBLE)
-           |   / CAST(t.total AS DOUBLE)) AS p,
-           | CAST($hex8 AS DOUBLE) / 4294967296.0 AS u
-           |FROM d, t
-           |WHERE CAST($hex8 AS DOUBLE) / 4294967296.0
-           |  < least(1.0, CAST(d.score * 200 AS DOUBLE)
-           |      / CAST(t.total AS DOUBLE))
-           |ORDER BY d.doc_id""".stripMargin
-      },
-
-      // both engines synthesize the identical PII-laden string, then
-      // redact: patterns and replacement order come verbatim from
-      // TextAnalysis.piiPatterns (single-quoted DuckDB strings are raw,
-      // so the compiled Scala patterns pass through unchanged)
-      "text_pii_scrub" -> {
-        val piiText =
-          "'contact u' || doc_id || '@' || source || '.example.com" +
-            " or http://' || source || '.example.com/d/' || doc_id ||" +
-            " ' tel 555-0' || lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0')" +
-            " || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') ||" +
-            " ' host 10.' || CAST(doc_id % 200 AS VARCHAR) || '.0.' ||" +
-            " CAST(doc_id % 250 AS VARCHAR) || ' ' || text"
-        val scrub = TextAnalysis.piiPatterns.foldLeft("pt") {
-          case (acc, (_, re, repl)) =>
-            s"regexp_replace($acc, '$re', '$repl', 'g')"
-        }
-        val counts = TextAnalysis.piiPatterns.map { case (name, re, _) =>
-          s"CAST(len(regexp_extract_all(pt, '$re')) AS BIGINT) AS n_$name"
-        }.mkString(", ")
-        s"""WITH p AS (SELECT doc_id, $piiText AS pt FROM documents)
-           |SELECT doc_id, $scrub AS scrubbed, $counts
-           |FROM p ORDER BY doc_id""".stripMargin
-      },
-
-      // exact interpolated quantiles: Spark percentile and DuckDB
-      // quantile_cont share the p·(n−1) linear-interpolation definition
-      "text_len_quantiles" ->
-        s"""WITH tk AS (SELECT source, CASE WHEN $duckNorm = '' THEN 0
-           |  ELSE CAST(len($duckWords) AS BIGINT) END AS n FROM documents)
-           |SELECT source,
-           | quantile_cont(n, 0.25) AS p25, quantile_cont(n, 0.5) AS p50,
-           | quantile_cont(n, 0.75) AS p75, quantile_cont(n, 0.9) AS p90
-           |FROM tk GROUP BY source ORDER BY source""".stripMargin,
-
-      // chunk starts 0,16,32,… while start < len(words); duckdb list
-      // slice is 1-based inclusive and clamps like Spark's slice
-      "text_chunk" ->
-        s"""WITH w AS (SELECT doc_id, $duckWords AS ws FROM documents),
-           |s AS (SELECT doc_id, ws,
-           |  unnest(range(0, len(ws), 16)) AS start_tok FROM w)
-           |SELECT doc_id,
-           | CAST(start_tok // 16 AS BIGINT) AS chunk_idx,
-           | CAST(start_tok AS BIGINT) AS start_tok,
-           | CAST(least(32, len(ws) - start_tok) AS BIGINT) AS n_tok,
-           | array_to_string(ws[start_tok + 1 : start_tok + 32], ' ') AS chunk_text
-           |FROM s ORDER BY doc_id, chunk_idx""".stripMargin,
-
-      "text_top_grams" ->
-        s"""SELECT gram, CAST(count(*) AS BIGINT) AS n
-           |FROM (SELECT unnest($duckShingles2) AS gram FROM documents)
-           |GROUP BY gram ORDER BY n DESC, gram LIMIT 20""".stripMargin,
-
-      // same inverted-index retrieval replayed: integer floor-division
-      // weights, long sums, row_number ties on doc_id
-      "text_retrieve" ->
-        s"""WITH g AS (SELECT doc_id,
-           |  unnest(list_distinct($duckShingles2)) AS gram
-           | FROM documents),
-           |nn AS (SELECT count(*) AS nd FROM documents),
-           |df AS (SELECT gram, CAST(count(*) AS BIGINT) AS df
-           | FROM g GROUP BY gram),
-           |q AS (SELECT doc_id AS qid, gram FROM g WHERE doc_id % 100 = 0),
-           |w AS (SELECT q.qid, q.gram, (1000 * nn.nd) // df.df AS w
-           | FROM q JOIN df USING (gram) CROSS JOIN nn),
-           |sc AS (SELECT w.qid, g.doc_id,
-           |  CAST(sum(w.w) AS BIGINT) AS score
-           | FROM g JOIN w ON g.gram = w.gram GROUP BY 1, 2),
-           |r AS (SELECT qid, doc_id, score,
-           |  CAST(row_number() OVER (PARTITION BY qid
-           |   ORDER BY score DESC, doc_id) AS INT) AS rank FROM sc)
-           |SELECT qid, doc_id, score, rank FROM r
-           |WHERE rank <= 10 ORDER BY qid, rank""".stripMargin,
-
-      // the plain threshold count — the sketch gate may drop work, never
-      // rows
-      "text_heavy_grams" ->
-        s"""SELECT gram, CAST(count(*) AS BIGINT) AS n
-           |FROM (SELECT unnest($duckShingles2) AS gram FROM documents)
-           |GROUP BY gram HAVING count(*) >= 30 ORDER BY gram""".stripMargin,
-
-      // same wrap, same RE2-portable strip chain: blocks -> tags ->
-      // entities (amp LAST) -> whitespace collapse; URL extraction runs
-      // on the RAW markup (stripMarkup eats hrefs)
-      "text_strip_html" ->
-        """WITH w AS (SELECT doc_id,
-          | '<html><head><style type="text/css">p { color: red; }</style></head><body><h1>Doc '
-          |  || doc_id || '</h1><a href="https://example.com/d/' || doc_id
-          |  || '?ref=corpus">link</a><p>Q&amp;A &lt;3 ' || text
-          |  || '</p><script>if (1 < 2) { alert("x&y"); }</script></body></html>' AS raw
-          | FROM documents)
-          |SELECT doc_id,
-          | trim(regexp_replace(
-          |  replace(replace(replace(replace(replace(replace(
-          |   regexp_replace(regexp_replace(raw,
-          |     '(?is)<(script|style)[^>]*>.*?</(script|style)\s*>', ' ', 'g'),
-          |     '(?s)<[^>]*>', ' ', 'g'),
-          |   '&lt;', '<'), '&gt;', '>'), '&quot;', '"'), '&#39;', ''''),
-          |   '&nbsp;', ' '), '&amp;', '&'),
-          |  '\s+', ' ', 'g')) AS clean,
-          | array_to_string(regexp_extract_all(raw,
-          |  'https?://[^\s<>"'']+', 0), ',') AS urls_csv
-          |FROM w ORDER BY doc_id""".stripMargin,
-
-      // top-16 vocabulary by the same (count desc, term) total order
-      // (below the fixture's ~31 distinct terms, so OOV hits are real);
-      // left join marks OOV terms, ratio = IEEE division of exact counts
-      "text_oov" ->
-        s"""WITH tok AS (SELECT doc_id, unnest($duckWords) AS term FROM documents),
-           |t AS (SELECT doc_id, term FROM tok WHERE term <> ''),
-           |v AS (SELECT term FROM (
-           |  SELECT term, count(*) AS n FROM t GROUP BY 1
-           |  ORDER BY n DESC, term LIMIT 16)),
-           |s AS (SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-           |  CAST(sum(CASE WHEN v.term IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
-           | FROM t LEFT JOIN v ON t.term = v.term GROUP BY 1)
-           |SELECT doc_id, n_tokens, n_oov,
-           | n_oov::DOUBLE / n_tokens::DOUBLE AS oov_rate
-           |FROM s ORDER BY doc_id""".stripMargin,
-
-      "text_vocab" ->
-        s"""WITH tok AS (SELECT source, unnest($duckWords) AS term FROM documents)
-           |SELECT source, count(*) AS n_tokens,
-           | count(DISTINCT term) AS n_terms,
-           | CAST(count(DISTINCT term) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-           |  AS type_token_ratio
-           |FROM tok WHERE term <> '' GROUP BY source ORDER BY source""".stripMargin,
-
-      // same inverted-index arithmetic: tf per (doc, term), df over the
-      // distinct tf frame, score = one IEEE division of exact integer
-      // products (no ln(), whose last ulp is engine-specific)
-      "text_tfidf" ->
-        s"""WITH tok AS (SELECT doc_id, unnest($duckWords) AS term FROM documents),
-           |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
-           | WHERE term <> '' GROUP BY 1, 2),
-           |dfq AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-           |n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-           |sc AS (SELECT tf.doc_id, tf.term, tf.tf, dfq.df,
-           |  CAST(tf.tf * (n.n_docs + 1) AS DOUBLE)
-           |    / CAST(dfq.df + 1 AS DOUBLE) AS score
-           | FROM tf JOIN dfq USING (term), n),
-           |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
-           |   ORDER BY score DESC, term) AS BIGINT) AS term_rank FROM sc)
-           |SELECT doc_id, term, tf, df, score, term_rank FROM r
-           |WHERE term_rank <= 3 ORDER BY doc_id, term_rank""".stripMargin,
-
-      // same log-free PMI arithmetic: c_xy·N and c_x·c_y as exact BIGINT
-      // products, one IEEE division, (score DESC, gram) total order; the
-      // two-component filter mirrors the shingle fallback drop
-      "text_collocations" ->
-        s"""WITH t AS (SELECT unnest($duckWords) AS term FROM documents),
-           |tok AS (SELECT term FROM t WHERE term <> ''),
-           |uni AS (SELECT term, CAST(count(*) AS BIGINT) AS c FROM tok
-           | GROUP BY 1),
-           |n AS (SELECT CAST(count(*) AS BIGINT) AS n_tok FROM tok),
-           |g AS (SELECT unnest($duckShingles2) AS gram FROM documents),
-           |bg AS (SELECT gram, CAST(count(*) AS BIGINT) AS c_xy FROM g
-           | WHERE len(string_split(gram, ' ')) = 2
-           |  AND string_split(gram, ' ')[1] <> ''
-           |  AND string_split(gram, ' ')[2] <> ''
-           | GROUP BY 1 HAVING count(*) >= 3)
-           |SELECT bg.gram, bg.c_xy, ux.c AS c_x, uy.c AS c_y,
-           | CAST(bg.c_xy * n.n_tok AS DOUBLE)
-           |  / CAST(ux.c * uy.c AS DOUBLE) AS score
-           |FROM bg CROSS JOIN n
-           | JOIN uni ux ON string_split(bg.gram, ' ')[1] = ux.term
-           | JOIN uni uy ON string_split(bg.gram, ' ')[2] = uy.term
-           |ORDER BY score DESC, gram LIMIT 25""".stripMargin,
-
-      // all three fractions divide by len(words); IEEE double division
-      // of exact integer counts on both engines
-      "text_repetition" ->
-        s"""WITH m AS (SELECT doc_id,
-           |  CAST(len($duckWords) - len(list_distinct($duckWords)) AS DOUBLE)
-           |    / CAST(len($duckWords) AS DOUBLE) AS dup_word_frac,
-           |  CAST(len($duckShingles2) - len(list_distinct($duckShingles2)) AS DOUBLE)
-           |    / CAST(len($duckShingles2) AS DOUBLE) AS dup_2gram_frac,
-           |  CAST(len($duckWords) AS BIGINT) AS n_words
-           | FROM documents),
-           |wc AS (SELECT doc_id, CAST(max(c) AS BIGINT) AS top_c FROM
-           |  (SELECT doc_id, w, count(*) AS c FROM
-           |    (SELECT doc_id, unnest($duckWords) AS w FROM documents)
-           |   GROUP BY 1, 2) GROUP BY 1)
-           |SELECT m.doc_id, m.dup_word_frac, m.dup_2gram_frac,
-           | CAST(wc.top_c AS DOUBLE) / CAST(m.n_words AS DOUBLE) AS top_word_frac
-           |FROM m JOIN wc USING (doc_id) ORDER BY m.doc_id""".stripMargin,
-
-      // benchmark = doc_id % 50 = 0; n_shared counts the train doc's
-      // DISTINCT 3-grams that appear anywhere in the benchmark set
-      // the reverse face: per bench item, distinct leaking train docs,
-      // distinct leaked grams, and total hit mass; zero-leak items at 0
-      "text_leak_census" ->
-        s"""WITH bg AS (SELECT doc_id AS bench_id,
-           |  unnest(list_distinct($duckShingles3)) AS gram
-           | FROM documents WHERE doc_id % 50 = 0),
-           |tg AS (SELECT doc_id AS train_id,
-           |  unnest(list_distinct($duckShingles3)) AS gram
-           | FROM documents WHERE doc_id % 50 <> 0),
-           |j AS (SELECT bench_id, train_id, gram
-           | FROM bg JOIN tg USING (gram)),
-           |c AS (SELECT bench_id,
-           |  CAST(count(DISTINCT train_id) AS BIGINT) AS n_leaking_docs,
-           |  CAST(count(DISTINCT gram) AS BIGINT) AS n_hit_grams,
-           |  CAST(count(*) AS BIGINT) AS n_hit_pairs
-           | FROM j GROUP BY 1)
-           |SELECT b.bench_id,
-           | COALESCE(c.n_leaking_docs, 0) AS n_leaking_docs,
-           | COALESCE(c.n_hit_grams, 0) AS n_hit_grams,
-           | COALESCE(c.n_hit_pairs, 0) AS n_hit_pairs
-           |FROM (SELECT DISTINCT doc_id AS bench_id FROM documents
-           |  WHERE doc_id % 50 = 0) b
-           |LEFT JOIN c USING (bench_id)
-           |ORDER BY bench_id""".stripMargin,
-
-      "text_decontaminate" ->
-        s"""WITH b AS (SELECT DISTINCT unnest(list_distinct($duckShingles3)) AS gram
-           | FROM documents WHERE doc_id % 50 = 0),
-           |t AS (SELECT doc_id, unnest(list_distinct($duckShingles3)) AS gram
-           | FROM documents WHERE doc_id % 50 <> 0)
-           |SELECT t.doc_id,
-           | CAST(sum(CASE WHEN b.gram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_shared,
-           | sum(CASE WHEN b.gram IS NOT NULL THEN 1 ELSE 0 END) > 0 AS contaminated
-           |FROM t LEFT JOIN b USING (gram)
-           |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
-
-      // hit 3-grams (ALL positions, not distinct — the same gram at two
-      // positions is two windows) cover [pos, pos+3) word intervals,
-      // merged into maximal spans by the ev_coverage island arithmetic
-      "text_decontaminate_spans" ->
-        s"""WITH bench AS (SELECT DISTINCT unnest($duckShingles3) AS gram
-           | FROM documents WHERE doc_id % 50 = 0),
-           |t0 AS (SELECT doc_id, len($duckWords) AS wc,
-           |  $duckShingles3 AS gs FROM documents WHERE doc_id % 50 <> 0),
-           |tg AS (SELECT doc_id, wc, unnest(gs) AS gram,
-           |  CAST(generate_subscripts(gs, 1) - 1 AS BIGINT) AS pos FROM t0),
-           |h AS (SELECT tg.doc_id, tg.pos, tg.pos AS s,
-           |  least(tg.pos + 3, tg.wc) AS e FROM tg JOIN bench USING (gram)),
-           |w AS (SELECT *, max(e) OVER (PARTITION BY doc_id
-           |  ORDER BY s, pos
-           |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe FROM h),
-           |g AS (SELECT *, CAST(sum(CASE WHEN pe IS NULL OR s > pe
-           |    THEN 1 ELSE 0 END) OVER (PARTITION BY doc_id
-           |  ORDER BY s, pos) AS BIGINT) AS island FROM w)
-           |SELECT doc_id, island, min(s) AS span_start,
-           | max(e) AS span_end, CAST(count(*) AS BIGINT) AS n_grams,
-           | max(e) - min(s) AS covered_words
-           |FROM g GROUP BY doc_id, island
-           |ORDER BY doc_id, island""".stripMargin,
-
-      // the same gate + 8-gram eviction replayed; w bound once per level
-      "text_split_decontaminated" -> {
-        val w = duckWords
-        val g8 = s"(CASE WHEN len($w) < 8 THEN [$duckNorm] ELSE " +
-          s"list_transform(range(1, len($w)-6), i -> " +
-          s"$w[i] || ' ' || $w[i+1] || ' ' || $w[i+2] || ' ' || $w[i+3]" +
-          s" || ' ' || $w[i+4] || ' ' || $w[i+5] || ' ' || $w[i+6]" +
-          s" || ' ' || $w[i+7]) END)"
-        s"""WITH d AS (SELECT doc_id,
-           |  CASE WHEN substr(md5('tsplit:' || CAST(doc_id AS VARCHAR)), 1, 2)
-           |   < '29' THEN 'test' ELSE 'train' END AS split0,
-           |  $g8 AS gs FROM documents),
-           |tg AS (SELECT DISTINCT unnest(gs) AS gram FROM d
-           |  WHERE split0 = 'train'),
-           |lk AS (SELECT DISTINCT doc_id FROM
-           |  (SELECT doc_id, unnest(gs) AS gram FROM d
-           |   WHERE split0 = 'test') x JOIN tg USING (gram))
-           |SELECT d.doc_id,
-           | CASE WHEN d.split0 = 'test' AND lk.doc_id IS NULL
-           |  THEN 'test' ELSE 'train' END AS split
-           |FROM d LEFT JOIN lk USING (doc_id)
-           |ORDER BY d.doc_id""".stripMargin
-      },
-
-      // exact-substring self-dedup: grams with corpus-wide count >= 2,
-      // all occurrences except the global (doc,pos)-min survivor become
-      // [pos, pos+3) windows, merged by the same island arithmetic
-      "text_selfdedup_spans" ->
-        s"""WITH t0 AS (SELECT doc_id, len($duckWords) AS wc,
-           |  $duckShingles3 AS gs FROM documents),
-           |tg AS (SELECT doc_id, wc, unnest(gs) AS gram,
-           |  CAST(generate_subscripts(gs, 1) - 1 AS BIGINT) AS pos FROM t0),
-           |rk AS (SELECT *, count(*) OVER (PARTITION BY gram) AS cnt,
-           |  row_number() OVER (PARTITION BY gram
-           |    ORDER BY doc_id, pos) AS rn FROM tg),
-           |h AS (SELECT doc_id, pos, pos AS s, least(pos + 3, wc) AS e
-           |  FROM rk WHERE cnt >= 2 AND rn > 1),
-           |w AS (SELECT *, max(e) OVER (PARTITION BY doc_id
-           |  ORDER BY s, pos
-           |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe FROM h),
-           |g AS (SELECT *, CAST(sum(CASE WHEN pe IS NULL OR s > pe
-           |    THEN 1 ELSE 0 END) OVER (PARTITION BY doc_id
-           |  ORDER BY s, pos) AS BIGINT) AS island FROM w)
-           |SELECT doc_id, island, min(s) AS span_start,
-           | max(e) AS span_end, CAST(count(*) AS BIGINT) AS n_grams,
-           | max(e) - min(s) AS covered_words
-           |FROM g GROUP BY doc_id, island
-           |ORDER BY doc_id, island""".stripMargin,
-
-      // the engine extracts + parses real URLs from markup; the oracle
-      // counts the closed-form hosts arithmetically
-      "text_url_domains" ->
-        """SELECT 'site' || (doc_id % 7) || '.example.com' AS domain,
-          | CAST(count(*) AS BIGINT) AS n_urls,
-          | CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs
-          |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      // the same start-sequence + list-slice chunking; DuckDB's range()
-      // excludes its bound where Spark's sequence() includes it, so the
-      // bounds differ by one to generate the same start set
-      "text_chunk_overlap" ->
-        s"""WITH w AS (SELECT doc_id, $duckWords AS ws FROM documents
-           |  WHERE $duckNorm <> ''),
-           |s AS (SELECT doc_id, ws,
-           |  CAST(unnest(range(0, len(ws), 24)) AS BIGINT) AS st FROM w)
-           |SELECT doc_id, st // 24 AS chunk_idx,
-           | CAST(least(32, len(ws) - st) AS BIGINT) AS n_tokens,
-           | md5(array_to_string(ws[st+1:st+32], ' ')) AS chunk_md5
-           |FROM s ORDER BY doc_id, chunk_idx""".stripMargin,
-
-      // the same canonicalization chain replayed in DuckDB's RE2 (the
-      // patterns avoid lookarounds precisely so both engines agree);
-      // DuckDB regexp_replace needs the explicit 'g' flag on the only
-      // rule with several occurrences per string
-      "text_url_canonical" ->
-        """WITH r AS (SELECT doc_id,
-          |  CASE WHEN doc_id % 4 = 3 THEN 'HTTPS://Site' ELSE 'HTTP://Site' END
-          |  || (doc_id % 7) || '.Example.COM'
-          |  || CASE WHEN doc_id % 4 = 3 THEN ':443' ELSE ':80' END
-          |  || '/p' || (doc_id % 3) || '/'
-          |  || CASE doc_id % 4 WHEN 1 THEN '?utm_source=x&fbclid=y'
-          |     WHEN 2 THEN '?a=1&utm_campaign=z#frag'
-          |     WHEN 3 THEN '#sec' ELSE '' END AS raw
-          | FROM documents),
-          |nf AS (SELECT doc_id, raw, regexp_replace(raw, '#.*', '') AS u FROM r),
-          |lh AS (SELECT doc_id, raw,
-          |  lower(regexp_extract(u, '(?i)^(https?://[^/?#]+)', 1))
-          |   || regexp_replace(u, '(?i)^https?://[^/?#]+', '') AS u FROM nf),
-          |np AS (SELECT doc_id, raw,
-          |  regexp_replace(regexp_replace(u,
-          |   '^(http://[^/:?#]+):80($|[/?#].*)', '\1\2'),
-          |   '^(https://[^/:?#]+):443($|[/?#].*)', '\1\2') AS u FROM lh),
-          |nt AS (SELECT doc_id, raw,
-          |  regexp_replace(regexp_replace(regexp_replace(u,
-          |   '&(utm_[^=&]*|fbclid|gclid)=[^&]*', '', 'g'),
-          |   '\?(utm_[^=&]*|fbclid|gclid)=[^&]*&', '?'),
-          |   '\?(utm_[^=&]*|fbclid|gclid)=[^&]*$', '') AS u FROM np),
-          |c AS (SELECT doc_id, raw, regexp_replace(u, '/$', '') AS url FROM nt)
-          |SELECT url, CAST(count(*) AS BIGINT) AS n_urls,
-          | CAST(count(DISTINCT raw) AS BIGINT) AS n_raw_forms
-          |FROM c GROUP BY url ORDER BY url""".stripMargin,
-
-      // identical salted-hash order on both engines (md5 hex strings)
-      "text_sample_topk" ->
-        """SELECT doc_id, source FROM (
-          | SELECT doc_id, source FROM documents
-          | ORDER BY md5('exact:' || CAST(doc_id AS VARCHAR)), doc_id
-          | LIMIT 100)
-          |ORDER BY doc_id""".stripMargin,
-
-      // the shared sig -> band CTEs; the benchmark (doc_id % 17 = 0) is a
-      // subset of the corpus, so its band keys are a filter over the
-      // shared band CTE rather than a second sig pass
-      "text_decontaminate_fuzzy" ->
-        s"""WITH $duckBandCtes,
-           |bkeys AS (SELECT DISTINCT band, bucket FROM band WHERE doc_id % 17 = 0),
-           |contaminated AS (SELECT DISTINCT a.doc_id FROM band a
-           | JOIN bkeys q ON a.band = q.band AND a.bucket = q.bucket)
-           |SELECT d.doc_id, d.source FROM documents d
-           |WHERE d.doc_id NOT IN (SELECT doc_id FROM contaminated)
-           |ORDER BY d.doc_id""".stripMargin,
-
-      // survivors = docs that are the min id in every band bucket
-      "dedup_online" ->
-        s"""WITH $duckOnlineLostCtes
-           |SELECT d.doc_id, d.source FROM documents d
-           |WHERE d.doc_id NOT IN (SELECT doc_id FROM lost)
-           |ORDER BY d.doc_id""".stripMargin,
-
-      // the streaming loser feed, distinct — single-batch replay reduces
-      // the arrival-order contract to min-id-wins, the batch complement
-      "dedup_online_stream" ->
-        s"""WITH $duckOnlineLostCtes
-           |SELECT doc_id FROM lost ORDER BY doc_id""".stripMargin,
-
-      "text_sample_det" ->
-        """SELECT doc_id FROM documents
-          |WHERE substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 2) < '29'
-          |ORDER BY doc_id""".stripMargin,
-
-      "text_corpus_stats" -> {
-        val nTok = s"(CASE WHEN $duckNorm = '' THEN 0 ELSE CAST(len($duckWords) AS BIGINT) END)"
-        s"""WITH t AS (SELECT $nTok AS n_tok,
-           |  CAST(length(text) AS BIGINT) AS n_chars FROM documents)
-           |SELECT count(*) AS n_docs,
-           | CAST(sum(n_tok) AS BIGINT) AS total_tokens,
-           | CAST(sum(n_chars) AS BIGINT) AS total_chars,
-           | min(n_tok) AS min_tokens, max(n_tok) AS max_tokens,
-           | quantile_cont(n_tok, 0.5) AS p50_tokens,
-           | quantile_cont(n_tok, 0.9) AS p90_tokens
-           |FROM t""".stripMargin
-      },
-
-      // discrete quantiles: at rank-exact accuracy Spark's GK sketch
-      // returns the element at rank floor(p*(n-1))+1; DuckDB's
-      // quantile_disc uses ceil(p*n), identical whenever p*n has no
-      // fractional part below 1-p — true for these p at the test corpus
-      // sizes (n = 50/500/5000), and verified empirically at all three SFs
-      "text_corpus_stats_approx" -> {
-        val nTok = s"(CASE WHEN $duckNorm = '' THEN 0 ELSE CAST(len($duckWords) AS BIGINT) END)"
-        s"""WITH t AS (SELECT $nTok AS n_tok FROM documents)
-           |SELECT count(*) AS n_docs,
-           | quantile_disc(n_tok, 0.5) AS p50_tokens,
-           | quantile_disc(n_tok, 0.9) AS p90_tokens
-           |FROM t""".stripMargin
-      },
-
-      "text_fingerprint" ->
-        s"""SELECT doc_id, md5($duckNorm) AS fp FROM documents ORDER BY doc_id""",
-
-      // the full BPE training loop unrolled: w0 = the word-frequency
-      // table with char-split symbol strings, then per round pair
-      // counts → argmax (count desc, lexicographic) → non-overlapping
-      // replace. DuckDB's replace and the engine's share left-to-right
-      // non-overlap semantics, which the 'a|a|a' overlap case exercises
-      // whenever a doubled letter wins a round.
-      "text_bpe_merges" -> {
-        s"""WITH $duckBpeCtes
-           |SELECT CAST(round AS BIGINT) AS round, lhs, rhs,
-           | lhs || rhs AS merged, n AS pair_count
-           |FROM (${(1 to 8).map(i => s"SELECT * FROM m$i").mkString(" UNION ALL ")})
-           |ORDER BY round""".stripMargin
-      },
-
-      "text_bpe_encode" -> {
-        s"""WITH $duckBpeCtes
-           |SELECT word, cnt,
-           | CAST(len(string_split(sym, '|')) AS BIGINT) AS n_tokens,
-           | sym AS tokens
-           |FROM w8 ORDER BY word""".stripMargin
-      },
-
-      // same salted-hash shard + shard-local rank arithmetic
-      "text_shuffle_det" -> {
-        val hex8 = (1 to 8).map { i =>
-          s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1) * ${math.pow(16, 8 - i).toLong}"
-        }.mkString("(", " + ", ")")
-        s"""WITH d AS (SELECT doc_id,
-           |  md5('shuf:' || CAST(doc_id AS VARCHAR)) AS h FROM documents),
-           |b AS (SELECT doc_id, h, CAST($hex8 AS BIGINT) % 16 AS shard
-           | FROM d)
-           |SELECT doc_id, shard,
-           | CAST(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id)
-           |  AS BIGINT) AS pos
-           |FROM b ORDER BY doc_id""".stripMargin
-      },
-
-      "text_bpe_doc_tokens" -> {
-        s"""WITH $duckBpeCtes,
-           |wt AS (SELECT word,
-           |  CAST(len(string_split(sym, '|')) AS BIGINT) AS w_tokens
-           | FROM w8),
-           |dw AS (SELECT doc_id, unnest($duckWords) AS word
-           | FROM documents WHERE $duckNorm <> ''),
-           |j AS (SELECT doc_id, w_tokens FROM dw JOIN wt USING (word)
-           | WHERE word <> '')
-           |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-           | CAST(sum(w_tokens) AS BIGINT) AS n_bpe_tokens
-           |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin
-      },
-
-      // same md5-gated boundary rule, window cumsum segment ids,
-      // position-ordered reassembly
-      "text_cdc_chunks" -> {
-        val hex8 = (1 to 8).map { i =>
-          s"(strpos('0123456789abcdef', substr(md5('cdc:' || word), $i, 1)) - 1) * ${math.pow(16, 8 - i).toLong}"
-        }.mkString("(", " + ", ")")
-        s"""WITH w AS (SELECT doc_id, unnest($duckWords) AS word,
-           |  CAST(generate_subscripts($duckWords, 1) - 1 AS BIGINT) AS pos
-           | FROM documents WHERE $duckNorm <> ''),
-           |c AS (SELECT doc_id, word, pos,
-           |  CASE WHEN pos > 0 AND CAST($hex8 AS BIGINT) % 8 = 0
-           |   THEN 1 ELSE 0 END AS cut
-           | FROM w WHERE word <> ''),
-           |s AS (SELECT *, CAST(sum(cut) OVER (PARTITION BY doc_id
-           |  ORDER BY pos) AS BIGINT) AS seg FROM c)
-           |SELECT doc_id, seg, CAST(count(*) AS BIGINT) AS n_words,
-           | md5(string_agg(word, ' ' ORDER BY pos)) AS seg_key
-           |FROM s GROUP BY doc_id, seg
-           |ORDER BY doc_id, seg""".stripMargin
-      },
-
-      // bottom-k of distinct word hashes per source; estimate = exact
-      // size below k, else (k-1)/u_k with u_k = first 8 hex digits of
-      // the k-th smallest hash over 2^32 — the engine's arithmetic,
-      // division for division
-      "text_kmv_vocab" -> {
-        val hex8 = (1 to 8).map { i =>
-          s"(strpos('0123456789abcdef', substr(k64.h, $i, 1)) - 1) * ${math.pow(16, 8 - i).toLong}"
-        }.mkString("(", " + ", ")")
-        s"""WITH w0 AS (SELECT source, unnest($duckWords) AS word
-           | FROM documents WHERE $duckNorm <> ''),
-           |w AS (SELECT DISTINCT source, md5(word) AS h
-           | FROM w0 WHERE word <> ''),
-           |r AS (SELECT source, h,
-           |  row_number() OVER (PARTITION BY source ORDER BY h) AS rn,
-           |  count(*) OVER (PARTITION BY source) AS n FROM w),
-           |k64 AS (SELECT source, h FROM r WHERE rn = 64),
-           |n AS (SELECT source, CAST(max(n) AS BIGINT) AS nd FROM r
-           | GROUP BY source),
-           |ex AS (SELECT source,
-           |  CAST(count(DISTINCT word) AS BIGINT) AS exact_distinct
-           | FROM w0 WHERE word <> '' GROUP BY source)
-           |SELECT n.source, least(n.nd, 64) AS n_mins,
-           | CASE WHEN n.nd < 64 THEN CAST(n.nd AS DOUBLE)
-           |  ELSE 63.0 / (CAST($hex8 AS DOUBLE) / 4294967296.0) END
-           |  AS est_distinct,
-           | ex.exact_distinct
-           |FROM n LEFT JOIN k64 ON k64.source = n.source
-           | JOIN ex ON ex.source = n.source
-           |ORDER BY n.source""".stripMargin
-      },
-
-      // same salted-hash shard assignment as text_shuffle_det, then
-      // shard-local token cumsums and integer sequence indices
-      "text_pack_sequences" -> {
-        val hex8 = (1 to 8).map { i =>
-          s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1) * ${math.pow(16, 8 - i).toLong}"
-        }.mkString("(", " + ", ")")
-        s"""WITH d AS (SELECT doc_id,
-           |  CAST(len($duckWords) AS BIGINT) AS n_tokens,
-           |  md5('pack:' || CAST(doc_id AS VARCHAR)) AS h
-           | FROM documents WHERE $duckNorm <> ''),
-           |b AS (SELECT doc_id, n_tokens, h,
-           |  CAST($hex8 AS BIGINT) % 16 AS shard FROM d),
-           |c AS (SELECT doc_id, shard, n_tokens,
-           |  CAST(coalesce(sum(n_tokens) OVER (PARTITION BY shard
-           |   ORDER BY h, doc_id
-           |   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-           |   AS BIGINT) AS tok_start FROM b)
-           |SELECT doc_id, shard, n_tokens, tok_start,
-           | tok_start + n_tokens AS tok_end,
-           | tok_start // 256 AS seq_first,
-           | (tok_start + n_tokens - 1) // 256 AS seq_last
-           |FROM c ORDER BY doc_id""".stripMargin
-      },
-
-      // the sketch columns of text_kmv_vocab (no exact_distinct — the
-      // stream twin can't run an exact distinct, that's its point)
-      "text_stream_kmv" -> {
-        val hex8 = (1 to 8).map { i =>
-          s"(strpos('0123456789abcdef', substr(k64.h, $i, 1)) - 1) * ${math.pow(16, 8 - i).toLong}"
-        }.mkString("(", " + ", ")")
-        s"""WITH w0 AS (SELECT source, unnest($duckWords) AS word
-           | FROM documents WHERE $duckNorm <> ''),
-           |w AS (SELECT DISTINCT source, md5(word) AS h
-           | FROM w0 WHERE word <> ''),
-           |r AS (SELECT source, h,
-           |  row_number() OVER (PARTITION BY source ORDER BY h) AS rn,
-           |  count(*) OVER (PARTITION BY source) AS n FROM w),
-           |k64 AS (SELECT source, h FROM r WHERE rn = 64),
-           |n AS (SELECT source, CAST(max(n) AS BIGINT) AS nd FROM r
-           | GROUP BY source)
-           |SELECT n.source, least(n.nd, 64) AS n_mins,
-           | CASE WHEN n.nd < 64 THEN CAST(n.nd AS DOUBLE)
-           |  ELSE 63.0 / (CAST($hex8 AS DOUBLE) / 4294967296.0) END
-           |  AS est_distinct
-           |FROM n LEFT JOIN k64 ON k64.source = n.source
-           |ORDER BY n.source""".stripMargin
-      },
-
-      // train replay restricted to even doc_ids, then the held-out apply
-      // replay: a0 = the ODD docs' own char-split word table, a1..a8 =
-      // the trained merges m1..m8 re-fused in order with the same
-      // whole-symbol fold. MATERIALIZED m's keep the double reference
-      // (training w{i} + apply a{i}) from re-inlining the whole chain.
-      "text_bpe_apply_new" -> {
-        val applyRounds = (1 to 8).map { i =>
-          s"""a$i AS MATERIALIZED (SELECT word, cnt,
-             |  ${duckFuse("sym", "t.lhs", "t.rhs")} AS sym
-             | FROM a${i - 1}, m$i t)""".stripMargin
-        }.mkString(",\n")
-        s"""WITH ${duckBpeTrainCtes("AND doc_id % 2 = 0")},
-           |a0 AS MATERIALIZED (SELECT word, CAST(count(*) AS BIGINT) AS cnt,
-           |  rtrim(regexp_replace(word, '(.)', '\\1|', 'g'), '|') AS sym
-           | FROM (SELECT unnest($duckWords) AS word FROM documents
-           |   WHERE $duckNorm <> '' AND doc_id % 2 = 1)
-           | WHERE word <> '' GROUP BY word),
-           |$applyRounds,
-           |wt AS (SELECT word,
-           |  CAST(len(string_split(sym, '|')) AS BIGINT) AS w_tokens
-           | FROM a8),
-           |dw AS (SELECT doc_id, unnest($duckWords) AS word
-           | FROM documents WHERE $duckNorm <> '' AND doc_id % 2 = 1),
-           |j AS (SELECT doc_id, w_tokens FROM dw JOIN wt USING (word)
-           | WHERE word <> '')
-           |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-           | CAST(sum(w_tokens) AS BIGINT) AS n_bpe_tokens
-           |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin
-      },
-
-      // same word→bucket map by digit arithmetic on the md5 prefix (the
-      // text_mixture_apply hex8 pattern, integer modulus instead of the
-      // double fraction)
-      "text_feature_hash" -> {
-        val hex8 = (1 to 8).map { i =>
-          s"(strpos('0123456789abcdef', substr(h, $i, 1)) - 1) * ${math.pow(16, 8 - i).toLong}"
-        }.mkString("(", " + ", ")")
-        s"""WITH w AS (SELECT doc_id,
-           |  substr(md5('fh:' || unnest($duckWords)), 1, 8) AS h
-           | FROM documents WHERE $duckNorm <> ''),
-           |b AS (SELECT doc_id, CAST($hex8 AS BIGINT) % 64 AS bucket FROM w)
-           |SELECT doc_id, bucket, count(*) AS n
-           |FROM b GROUP BY doc_id, bucket
-           |ORDER BY doc_id, bucket""".stripMargin
-      },
-
-      "ev_window_fill" ->
-        """SELECT user_id, event_id,
-          | last_value(CASE WHEN event_type = 'purchase' THEN value END IGNORE NULLS)
-          |  OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS last_purchase_value
-          |FROM events ORDER BY user_id, event_id""".stripMargin,
-
-      // the built-in TVF's boundary semantics: break at diff >= gap
-      // (half-open windows), session end = max(ts) + gap
-      "ev_session_window" ->
-        """WITH g AS (SELECT user_id, ts, event_id, value,
-          |  CASE WHEN lag(ts) OVER w IS NULL
-          |   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) >= 1800000000
-          |   THEN 1 ELSE 0 END AS brk
-          | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          |s AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM g)
-          |SELECT user_id, epoch_us(min(ts)) AS start_us,
-          | epoch_us(max(ts)) + 1800000000 AS end_us,
-          | count(*) AS n_events,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS value_cents
-          |FROM s GROUP BY user_id, session_idx
-          |ORDER BY user_id, start_us""".stripMargin,
-
-      // the cross-multiplied KS: max |cumA*nb - cumB*na| over the
-      // count-by-value frame, exact integers end to end
-      "ev_ks_drift" ->
-        """WITH ev AS (SELECT event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS cents,
-          |  event_id % 2 AS side FROM events),
-          |c AS (SELECT event_type, cents,
-          |  CAST(sum(CASE WHEN side = 0 THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-          |  CAST(sum(CASE WHEN side = 1 THEN 1 ELSE 0 END) AS BIGINT) AS cb
-          | FROM ev GROUP BY 1, 2),
-          |x AS (SELECT event_type,
-          |  sum(ca) OVER (PARTITION BY event_type ORDER BY cents
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_a,
-          |  sum(cb) OVER (PARTITION BY event_type ORDER BY cents
-          |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_b,
-          |  sum(ca) OVER (PARTITION BY event_type) AS na,
-          |  sum(cb) OVER (PARTITION BY event_type) AS nb
-          | FROM c)
-          |SELECT event_type, CAST(max(na) AS BIGINT) AS n_a,
-          | CAST(max(nb) AS BIGINT) AS n_b,
-          | CAST(max(abs(cum_a * nb - cum_b * na)) AS BIGINT) AS ks_scaled
-          |FROM x GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-      // same cell arithmetic: dow 0=Sunday, UTC hours, scaled-int mean
-      "ev_seasonal" ->
-        """WITH ev AS (SELECT event_id, event_type,
-          |  CAST(dayofweek(ts) AS BIGINT) AS dow,
-          |  CAST(hour(ts) AS BIGINT) AS hr,
-          |  CAST(round(value*100,0) AS BIGINT) AS cents FROM events),
-          |b AS (SELECT event_type, dow, hr,
-          |  CAST(count(*) AS BIGINT) AS n_cell,
-          |  CAST(sum(cents) AS BIGINT) AS sum_cell
-          | FROM ev GROUP BY 1, 2, 3)
-          |SELECT ev.event_id, ev.event_type, ev.dow, ev.hr, ev.cents,
-          | b.n_cell, sum_cell * 1000 // n_cell AS mean_milli,
-          | ev.cents * 1000 - sum_cell * 1000 // n_cell AS residual_milli
-          |FROM ev JOIN b USING (event_type, dow, hr)
-          |ORDER BY ev.event_id""".stripMargin,
-
-      "ev_sessionize" ->
-        """WITH g AS (SELECT user_id, ts, event_id, value,
-          |  CASE WHEN lag(ts) OVER w IS NULL
-          |   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1 ELSE 0 END AS brk
-          | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          |s AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM g)
-          |SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-          | count(*) AS n_events,
-          | epoch_us(min(ts)) AS start_us, epoch_us(max(ts)) AS end_us,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS value_cents
-          |FROM s GROUP BY user_id, session_idx ORDER BY user_id, session_idx""".stripMargin,
-
-      // identical oracle to ev_sessionize: the streaming path must
-      // reproduce the batch gaps-and-islands result exactly
-      "ev_stream_sessionize" ->
-        """WITH g AS (SELECT user_id, ts, event_id, value,
-          |  CASE WHEN lag(ts) OVER w IS NULL
-          |   OR epoch_us(ts) - epoch_us(lag(ts) OVER w) > 1800000000 THEN 1 ELSE 0 END AS brk
-          | FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-          |s AS (SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-          |  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_idx FROM g)
-          |SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-          | count(*) AS n_events,
-          | epoch_us(min(ts)) AS start_us, epoch_us(max(ts)) AS end_us,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS value_cents
-          |FROM s GROUP BY user_id, session_idx ORDER BY user_id, session_idx""".stripMargin,
-
-      "ev_windowed_agg" ->
-        """SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS win_start_us,
-          | event_type, count(*) AS n,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS value_cents
-          |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-
-      // the doubled staging input must collapse to exactly the source
-      // table (event_id is unique there — asserted by rows_match)
-      "ev_stream_dedup" ->
-        """SELECT event_id, epoch_us(ts) AS ts_us, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      // stream-static enrichment == the plain batch left join
-      "ev_stream_enrich" ->
-        """SELECT e.event_id, e.user_id, e.event_type, c.c_mktsegment
-          |FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-          |ORDER BY e.event_id""".stripMargin,
-
-      "ev_json_extract" ->
-        """SELECT event_id, event_type,
-          | CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-          |FROM events ORDER BY event_id""".stripMargin,
-
-      "ev_latest" ->
-        """WITH r AS (SELECT user_id, event_id, ts, event_type, value,
-          |  row_number() OVER (PARTITION BY user_id
-          |   ORDER BY ts DESC, event_id DESC) AS rn
-          | FROM events)
-          |SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-      // MERGE-INTO restatement: base = compacted even events, changes =
-      // odd events (every 17th a delete), newest version per user wins,
-      // delete-latest users vanish
-      "ev_cdc_apply" ->
-        """WITH ev AS (SELECT user_id, event_id, ts, event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS value_cents FROM events),
-          |base AS (SELECT user_id, event_id, ts, event_type, value_cents
-          | FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-          |    ORDER BY ts DESC, event_id DESC) AS rn
-          |   FROM ev WHERE event_id % 2 = 0) WHERE rn = 1),
-          |allr AS (
-          | SELECT user_id, event_id, ts, event_type, value_cents, 'u' AS op
-          |  FROM base
-          | UNION ALL
-          | SELECT user_id, event_id, ts, event_type, value_cents,
-          |   CASE WHEN event_id % 17 = 0 THEN 'd' ELSE 'u' END AS op
-          |  FROM ev WHERE event_id % 2 = 1),
-          |latest AS (SELECT * FROM (SELECT *, row_number() OVER
-          |   (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-          |  FROM allr) WHERE rn = 1)
-          |SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type,
-          | value_cents
-          |FROM latest WHERE op <> 'd' ORDER BY user_id""".stripMargin,
-
-      "ev_scd2" ->
-        """SELECT user_id, event_id, epoch_us(ts) AS valid_from_us,
-          | epoch_us(lead(ts) OVER (PARTITION BY user_id
-          |  ORDER BY ts, event_id)) AS valid_to_us,
-          | (lead(ts) OVER (PARTITION BY user_id
-          |  ORDER BY ts, event_id) IS NULL) AS is_current
-          |FROM events
-          |ORDER BY user_id, valid_from_us, event_id""".stripMargin,
-
-      // salted-hash order makes the per-source quota deterministic and
-      // engine-portable (md5 hex collates identically)
-      "text_sample_stratified" ->
-        """WITH r AS (SELECT doc_id, source,
-          | row_number() OVER (PARTITION BY source
-          |  ORDER BY md5('strat:' || CAST(doc_id AS VARCHAR)), doc_id) AS rn
-          | FROM documents)
-          |SELECT doc_id, source, CAST(rn AS BIGINT) AS rn FROM r
-          |WHERE rn <= 5 ORDER BY doc_id""".stripMargin,
-
-      // independent formulation: DuckDB's native ASOF LEFT JOIN checks
-      // the union-window implementation rather than restating it
-      "ev_asof_join" ->
-        """WITH p AS (SELECT user_id, ts,
-          |  max(event_id) AS p_event_id,
-          |  CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS p_cents
-          | FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-          |c AS (SELECT event_id, user_id, ts FROM events
-          | WHERE event_type = 'click')
-          |SELECT c.event_id, c.user_id, epoch_us(c.ts) AS ts_us,
-          | p.p_event_id, p.p_cents, epoch_us(p.ts) AS p_ts_us
-          |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts
-          |ORDER BY c.event_id""".stripMargin,
-
-      // forward variant: ASOF with the inequality flipped picks the
-      // EARLIEST right row at-or-after the left timestamp
-      "ev_asof_fwd" ->
-        """WITH p AS (SELECT user_id, ts,
-          |  max(event_id) AS p_event_id,
-          |  CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS p_cents
-          | FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-          |c AS (SELECT event_id, user_id, ts FROM events
-          | WHERE event_type = 'click')
-          |SELECT c.event_id, c.user_id, epoch_us(c.ts) AS ts_us,
-          | p.p_event_id, p.p_cents, epoch_us(p.ts) AS p_ts_us
-          |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts <= p.ts
-          |ORDER BY c.event_id""".stripMargin,
-
-      // independent step-by-step CTE formulation: each step's earliest
-      // occurrence strictly after the previous step's time
-      "ev_funnel" ->
-        """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
-          |  WHERE event_type = 'signup' GROUP BY 1),
-          |s2 AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-          |  JOIN s1 USING (user_id)
-          |  WHERE e.event_type = 'click' AND e.ts > s1.t1 GROUP BY 1),
-          |s3 AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-          |  JOIN s2 USING (user_id)
-          |  WHERE e.event_type = 'purchase' AND e.ts > s2.t2 GROUP BY 1)
-          |SELECT s1.user_id, epoch_us(s1.t1) AS t1_us,
-          | epoch_us(s2.t2) AS t2_us, epoch_us(s3.t3) AS t3_us,
-          | CAST(CASE WHEN s1.t1 IS NOT NULL THEN 1 ELSE 0 END
-          |  + CASE WHEN s2.t2 IS NOT NULL THEN 1 ELSE 0 END
-          |  + CASE WHEN s3.t3 IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-          |  AS funnel_depth
-          |FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)
-          |ORDER BY s1.user_id""".stripMargin,
-
-      // identical RANGE-frame window over epoch micros; counts and cents
-      // are exact integers
-      "ev_rolling" ->
-        """WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS ts_us,
-          |  CAST(round(value*100,0) AS BIGINT) AS cents
-          | FROM events WHERE event_type = 'purchase')
-          |SELECT event_id, user_id, ts_us,
-          | CAST(count(*) OVER w AS BIGINT) AS n_24h,
-          | CAST(sum(cents) OVER w AS BIGINT) AS sum_24h
-          |FROM p WINDOW w AS (PARTITION BY user_id ORDER BY ts_us
-          | RANGE BETWEEN 86400000000 PRECEDING AND CURRENT ROW)
-          |ORDER BY event_id""".stripMargin,
-
-      // identical integer day/week arithmetic (// is floor division; all
-      // epochs positive, so it agrees with Spark's truncating div)
-      "ev_retention" ->
-        """WITH a AS (SELECT user_id, min(ts) AS t0 FROM events
-          |  WHERE event_type = 'signup' GROUP BY 1),
-          |x AS (SELECT e.user_id,
-          |  epoch_us(a.t0) // 86400000000 AS cohort_day,
-          |  ((epoch_us(e.ts) // 86400000000)
-          |    - (epoch_us(a.t0) // 86400000000)) // 7 AS week_offset
-          | FROM events e JOIN a USING (user_id) WHERE e.ts >= a.t0)
-          |SELECT cohort_day, week_offset,
-          | CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-          |FROM x GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-      // independent plain BETWEEN-join formulation (no banding) — the
-      // bucketed join must reproduce exactly the pairs the naive
-      // inequality join finds, plus the null row per unattributed
-      // purchase; credit is the same one IEEE division
-      "ev_attribution" ->
-        """WITH p AS (SELECT user_id, event_id AS p_event_id,
-          |  epoch_us(ts) AS p_ts_us,
-          |  CAST(round(value*100,0) AS BIGINT) AS p_cents
-          | FROM events WHERE event_type = 'purchase'),
-          |c AS (SELECT user_id, event_id AS c_event_id,
-          |  epoch_us(ts) AS c_ts_us
-          | FROM events WHERE event_type = 'click'),
-          |j AS (SELECT p.user_id, p.p_event_id, p.p_ts_us, p.p_cents,
-          |  c.c_event_id, c.c_ts_us
-          | FROM p LEFT JOIN c ON p.user_id = c.user_id
-          |  AND c.c_ts_us <= p.p_ts_us
-          |  AND c.c_ts_us > p.p_ts_us - 21600000000)
-          |SELECT user_id, p_event_id, p_ts_us, p_cents, c_event_id,
-          | c_ts_us,
-          | CAST(count(c_event_id) OVER w AS BIGINT) AS n_touches,
-          | CASE WHEN count(c_event_id) OVER w > 0
-          |  THEN CAST(p_cents AS DOUBLE)
-          |    / CAST(count(c_event_id) OVER w AS DOUBLE) END AS credit
-          |FROM j WINDOW w AS (PARTITION BY p_event_id)
-          |ORDER BY p_event_id, coalesce(c_event_id, -1)""".stripMargin,
-
-      // same integer week indexing, same aggregate-frame cumulative sum
-      "ev_cohort_ltv" ->
-        """WITH p AS (SELECT user_id,
-          |  CAST(round(value*100,0) AS BIGINT) AS cents,
-          |  epoch_us(ts) // 604800000000 AS wi
-          | FROM events WHERE event_type = 'purchase'),
-          |c AS (SELECT user_id, min(wi) AS cw FROM p GROUP BY user_id),
-          |cells AS (SELECT cw, wi - cw AS week_offset,
-          |  CAST(sum(cents) AS BIGINT) AS rev_cents,
-          |  count(DISTINCT p.user_id) AS n_active
-          | FROM p JOIN c ON p.user_id = c.user_id GROUP BY 1, 2),
-          |sizes AS (SELECT cw, count(*) AS n_users FROM c GROUP BY cw)
-          |SELECT cells.cw AS cohort_week, week_offset, n_users, n_active,
-          | rev_cents,
-          | CAST(sum(rev_cents) OVER (PARTITION BY cells.cw
-          |   ORDER BY week_offset) AS BIGINT) AS cum_rev_cents
-          |FROM cells JOIN sizes ON cells.cw = sizes.cw
-          |ORDER BY cohort_week, week_offset""".stripMargin,
-
-      // identical lag window with the same (ts, event_id) tie-break and
-      // the same start sentinel
-      // same per-user lead windows; rank ties break on path text
-      "ev_top_paths" ->
-        """WITH t AS (SELECT event_type,
-          |  lead(event_type, 1) OVER (PARTITION BY user_id
-          |   ORDER BY ts, event_id) AS n1,
-          |  lead(event_type, 2) OVER (PARTITION BY user_id
-          |   ORDER BY ts, event_id) AS n2
-          | FROM events),
-          |p AS (SELECT event_type || '>' || n1 || '>' || n2 AS path,
-          |  CAST(count(*) AS BIGINT) AS n
-          | FROM t WHERE n2 IS NOT NULL GROUP BY 1)
-          |SELECT path, n,
-          | CAST(row_number() OVER (ORDER BY n DESC, path) AS BIGINT) AS rank
-          |FROM p QUALIFY rank <= 10 ORDER BY rank""".stripMargin,
-
-      // per-type profile: exact base metrics, KMV bottom-64 replay over
-      // md5 of the non-null cents rendered as strings; the all-null
-      // error group reports null bounds and a 0 estimate
-      "ev_profile" -> {
-        val hex8 = (1 to 8).map { i =>
-          s"(strpos('0123456789abcdef', substr(k64.h, $i, 1)) - 1) * ${math.pow(16, 8 - i).toLong}"
-        }.mkString("(", " + ", ")")
-        s"""WITH ev AS (SELECT event_type,
-           |  CASE WHEN event_type = 'error' THEN NULL
-           |   ELSE CAST(round(value*100,0) AS BIGINT) END AS v
-           | FROM events),
-           |base AS (SELECT event_type,
-           |  CAST(count(*) AS BIGINT) AS n_rows,
-           |  CAST(count(*) - count(v) AS BIGINT) AS n_nulls,
-           |  min(v) AS min_v, max(v) AS max_v
-           | FROM ev GROUP BY 1),
-           |h AS (SELECT DISTINCT event_type, md5(CAST(v AS VARCHAR)) AS h
-           | FROM ev WHERE v IS NOT NULL),
-           |r AS (SELECT event_type, h,
-           |  row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn,
-           |  count(*) OVER (PARTITION BY event_type) AS nd FROM h),
-           |k64 AS (SELECT event_type, h FROM r WHERE rn = 64),
-           |n AS (SELECT event_type, CAST(max(nd) AS BIGINT) AS nd
-           | FROM r GROUP BY 1)
-           |SELECT b.event_type, b.n_rows, b.n_nulls, b.min_v, b.max_v,
-           | CAST(CASE WHEN n.nd IS NULL THEN 0
-           |  ELSE least(n.nd, 64) END AS BIGINT) AS n_mins,
-           | CASE WHEN n.nd IS NULL THEN 0.0
-           |  WHEN n.nd < 64 THEN CAST(n.nd AS DOUBLE)
-           |  ELSE 63.0 / (CAST($hex8 AS DOUBLE) / 4294967296.0)
-           | END AS est_distinct
-           |FROM base b
-           |LEFT JOIN n ON n.event_type = b.event_type
-           |LEFT JOIN k64 ON k64.event_type = b.event_type
-           |ORDER BY b.event_type""".stripMargin
-      },
-
-      "ev_transitions" ->
-        """WITH x AS (SELECT event_type,
-          |  coalesce(lag(event_type) OVER (PARTITION BY user_id
-          |    ORDER BY ts, event_id), '∅') AS prev
-          | FROM events)
-          |SELECT prev, event_type AS next, CAST(count(*) AS BIGINT) AS n
-          |FROM x GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-      // same two-level median: quantile_cont interpolation over integer
-      // cents is the same dyadic multiply-add Spark's percentile runs,
-      // so med/mad/dev — and therefore the flag set — agree exactly
-      "ev_anomaly" ->
-        """WITH p AS (SELECT user_id, event_id,
-          |  CAST(round(value*100,0) AS BIGINT) AS cents
-          | FROM events WHERE event_type = 'purchase'),
-          |m AS (SELECT user_id, quantile_cont(cents, 0.5) AS med
-          | FROM p GROUP BY 1 HAVING count(*) >= 5),
-          |d AS (SELECT p.user_id, p.event_id, p.cents, m.med,
-          |  abs(p.cents - m.med) AS dev FROM p JOIN m USING (user_id)),
-          |md AS (SELECT user_id, quantile_cont(dev, 0.5) AS mad
-          | FROM d GROUP BY 1)
-          |SELECT d.user_id, d.event_id, d.cents, d.med, md.mad, d.dev
-          |FROM d JOIN md USING (user_id)
-          |WHERE d.dev > md.mad * 3.0
-          |ORDER BY d.event_id""".stripMargin,
-
-      // the stream-apply twin admits EXACTLY the batch flag set (same
-      // trained thresholds, stateless gate) — same oracle text
-      "ev_stream_anomaly" ->
-        """WITH p AS (SELECT user_id, event_id,
-          |  CAST(round(value*100,0) AS BIGINT) AS cents
-          | FROM events WHERE event_type = 'purchase'),
-          |m AS (SELECT user_id, quantile_cont(cents, 0.5) AS med
-          | FROM p GROUP BY 1 HAVING count(*) >= 5),
-          |d AS (SELECT p.user_id, p.event_id, p.cents, m.med,
-          |  abs(p.cents - m.med) AS dev FROM p JOIN m USING (user_id)),
-          |md AS (SELECT user_id, quantile_cont(dev, 0.5) AS mad
-          | FROM d GROUP BY 1)
-          |SELECT d.user_id, d.event_id, d.cents, d.med, md.mad, d.dev
-          |FROM d JOIN md USING (user_id)
-          |WHERE d.dev > md.mad * 3.0
-          |ORDER BY d.event_id""".stripMargin,
-
-      // identical running-max island construction — epoch-micro longs,
-      // so starts/ends/coverage are exact on both engines
-      "ev_coverage" ->
-        """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS s,
-          |  epoch_us(ts) + 300000000 AS e FROM events),
-          |w AS (SELECT *, max(e) OVER (PARTITION BY user_id
-          |  ORDER BY s, event_id
-          |  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe FROM e),
-          |g AS (SELECT *, CAST(sum(CASE WHEN pe IS NULL OR s > pe
-          |    THEN 1 ELSE 0 END) OVER (PARTITION BY user_id
-          |  ORDER BY s, event_id) AS BIGINT) AS island FROM w)
-          |SELECT user_id, island, min(s) AS island_start,
-          | max(e) AS island_end, CAST(count(*) AS BIGINT) AS n_intervals,
-          | max(e) - min(s) AS covered
-          |FROM g GROUP BY user_id, island
-          |ORDER BY user_id, island""".stripMargin,
-
-      // conditional aggregation — the relational reading of a pivot;
-      // FILTER counts yield 0 (not NULL) for absent combinations, the
-      // engine's na.fill twin
-      // the melt replayed as a grid: every (user, type) cell incl. zeros
-      "ev_unpivot" ->
-        """SELECT u.user_id, t.event_type,
-          | CAST(count(e.event_id) AS BIGINT) AS n
-          |FROM (SELECT DISTINCT user_id FROM events) u
-          |CROSS JOIN (VALUES ('click'), ('error'), ('purchase'),
-          |  ('signup'), ('view')) AS t(event_type)
-          |LEFT JOIN events e
-          |  ON e.user_id = u.user_id AND e.event_type = t.event_type
-          |GROUP BY 1, 2 ORDER BY u.user_id, t.event_type""".stripMargin,
-
-      "ev_pivot" ->
-        """SELECT user_id,
-          | CAST(count(*) FILTER (event_type = 'click') AS BIGINT) AS click,
-          | CAST(count(*) FILTER (event_type = 'error') AS BIGINT) AS error,
-          | CAST(count(*) FILTER (event_type = 'purchase') AS BIGINT) AS purchase,
-          | CAST(count(*) FILTER (event_type = 'signup') AS BIGINT) AS signup,
-          | CAST(count(*) FILTER (event_type = 'view') AS BIGINT) AS view
-          |FROM events GROUP BY 1 ORDER BY user_id""".stripMargin,
-
-      // the batch top-k the leaderboard must converge to over a full
-      // replay — row_number under (cents DESC, id ASC)
-      "ev_stream_topk" ->
-        """WITH p AS (SELECT user_id, event_id,
-          |  CAST(round(value*100,0) AS BIGINT) AS cents
-          | FROM events WHERE event_type = 'purchase'),
-          |r AS (SELECT user_id, event_id, cents,
-          |  CAST(row_number() OVER (PARTITION BY user_id
-          |    ORDER BY cents DESC, event_id) AS BIGINT) AS rank FROM p)
-          |SELECT user_id, rank, event_id, cents FROM r
-          |WHERE rank <= 3 ORDER BY user_id, rank""".stripMargin,
-
-      // shared-rank percent_rank is (rank−1)/(n−1) on both engines —
-      // integer ranks, one IEEE division
-      "ev_value_cdf" ->
-        """SELECT event_type, event_id,
-          | CAST(round(value*100,0) AS BIGINT) AS cents,
-          | CAST(rank() OVER w AS BIGINT) AS rank,
-          | percent_rank() OVER w AS pct
-          |FROM events
-          |WINDOW w AS (PARTITION BY event_type
-          |  ORDER BY CAST(round(value*100,0) AS BIGINT))
-          |ORDER BY event_id""".stripMargin,
-
-      // same marginals, same IEEE chain per cell: exact-long product →
-      // one division for expected, then subtract/square/divide
-      "ev_chisq" ->
-        """WITH e AS (SELECT event_type,
-          |  c - ((c % 10000) + 10000) % 10000 AS value_band
-          | FROM (SELECT event_type,
-          |   CAST(round(value*100,0) AS BIGINT) AS c FROM events)),
-          |cells AS (SELECT event_type, value_band,
-          |  CAST(count(*) AS BIGINT) AS observed FROM e GROUP BY 1, 2),
-          |r AS (SELECT event_type, CAST(sum(observed) AS BIGINT)
-          |  AS row_total FROM cells GROUP BY 1),
-          |cl AS (SELECT value_band, CAST(sum(observed) AS BIGINT)
-          |  AS col_total FROM cells GROUP BY 1),
-          |n AS (SELECT CAST(sum(observed) AS BIGINT) AS n FROM cells)
-          |SELECT event_type, value_band, observed, row_total, col_total,
-          | n.n,
-          | CAST(row_total * col_total AS DOUBLE) / n.n AS expected,
-          | ((observed - CAST(row_total * col_total AS DOUBLE) / n.n)
-          |   * (observed - CAST(row_total * col_total AS DOUBLE) / n.n))
-          |  / (CAST(row_total * col_total AS DOUBLE) / n.n) AS contribution
-          |FROM cells JOIN r USING (event_type) JOIN cl USING (value_band), n
-          |ORDER BY event_type, value_band""".stripMargin,
-
-      // quantile_cont at dyadic quarters == Spark percentile exactly
-      // over integer inputs; every fence/clip value is an exact double
-      "text_winsorize" ->
-        """WITH q AS (SELECT source,
-          |  quantile_cont(n_chars, 0.25) AS q1,
-          |  quantile_cont(n_chars, 0.75) AS q3
-          | FROM documents GROUP BY 1),
-          |f AS (SELECT source, q1, q3,
-          |  q1 - (q3 - q1) * 1.5 AS lo, q3 + (q3 - q1) * 1.5 AS hi FROM q)
-          |SELECT d.doc_id, d.source, d.n_chars, f.q1, f.q3, f.lo, f.hi,
-          | greatest(least(CAST(d.n_chars AS DOUBLE), f.hi), f.lo) AS clipped
-          |FROM documents d JOIN f USING (source)
-          |ORDER BY d.doc_id""".stripMargin,
-
-      // same floor-aligned bin anchor spelled as explicit pmod — both
-      // engines' % truncates, so the +w wrap makes them floor together
-      // the same lower-median rank arithmetic, twice
-      "ev_median_mad" ->
-        """WITH e AS (SELECT event_type, event_id,
-          |  CAST(round(value*100,0) AS BIGINT) AS x FROM events),
-          |r AS (SELECT event_type, x,
-          |  row_number() OVER (PARTITION BY event_type
-          |   ORDER BY x, event_id) AS rn,
-          |  count(*) OVER (PARTITION BY event_type) AS n FROM e),
-          |med AS (SELECT event_type, CAST(n AS BIGINT) AS n_events,
-          |  x AS median_cents FROM r WHERE rn = (n + 1) // 2),
-          |d AS (SELECT e.event_type, e.event_id, med.n_events,
-          |  med.median_cents, abs(e.x - med.median_cents) AS dv
-          | FROM e JOIN med USING (event_type)),
-          |r2 AS (SELECT event_type, n_events, median_cents, dv,
-          |  row_number() OVER (PARTITION BY event_type
-          |   ORDER BY dv, event_id) AS rn FROM d)
-          |SELECT event_type, n_events, median_cents, dv AS mad_cents
-          |FROM r2 WHERE rn = (n_events + 1) // 2
-          |ORDER BY event_type""".stripMargin,
-
-      "ev_histogram" ->
-        """WITH e AS (SELECT event_type,
-          |  CAST(round(value*100,0) AS BIGINT) AS cents FROM events)
-          |SELECT event_type,
-          | cents - ((cents % 2500) + 2500) % 2500 AS bin_lo,
-          | CAST(count(*) AS BIGINT) AS n,
-          | min(cents) AS v_min, max(cents) AS v_max,
-          | cents - ((cents % 2500) + 2500) % 2500 + 2500 AS bin_hi
-          |FROM e GROUP BY 1, 2
-          |ORDER BY event_type, bin_lo""".stripMargin,
-
-      // same ntile definition (first n mod k tiles take the extra row)
-      // over the same unique total order
-      "ev_histogram_eqdepth" ->
-        """WITH e AS (SELECT event_type, event_id,
-          |  CAST(round(value*100,0) AS BIGINT) AS cents FROM events),
-          |t AS (SELECT event_type, cents,
-          |  CAST(ntile(8) OVER (PARTITION BY event_type
-          |    ORDER BY cents, event_id) AS BIGINT) AS tile FROM e)
-          |SELECT event_type, tile, CAST(count(*) AS BIGINT) AS n,
-          | min(cents) AS v_min, max(cents) AS v_max
-          |FROM t GROUP BY 1, 2 ORDER BY event_type, tile""".stripMargin,
-
-      // identical lag-window trapezoid; integer-second timestamps and
-      // long sums keep num/den exact, the one division is IEEE on both
-      "ev_twap" ->
-        """WITH p AS (SELECT user_id, event_id,
-          |  epoch_us(ts) // 1000000 AS ts_s,
-          |  CAST(round(value*100,0) AS BIGINT) AS cents
-          | FROM events WHERE event_type = 'purchase'),
-          |w AS (SELECT user_id,
-          |  ts_s - lag(ts_s) OVER (PARTITION BY user_id
-          |    ORDER BY ts_s, event_id) AS dt,
-          |  cents + lag(cents) OVER (PARTITION BY user_id
-          |    ORDER BY ts_s, event_id) AS vs
-          | FROM p)
-          |SELECT user_id, CAST(count(dt) AS BIGINT) AS n_segments,
-          | CAST(sum(vs * dt) AS BIGINT) AS num,
-          | CAST(sum(dt) * 2 AS BIGINT) AS den,
-          | CASE WHEN sum(dt) * 2 > 0
-          |  THEN CAST(sum(vs * dt) AS DOUBLE) / CAST(sum(dt) * 2 AS BIGINT)
-          | END AS twa
-          |FROM w GROUP BY 1 ORDER BY user_id""".stripMargin,
-
-      // full recompute over ALL events — the merged base+delta state
-      // must equal it exactly (counts/sums/extrema are long algebra,
-      // associative with no float drift)
-      "ev_agg_incremental" ->
-        """SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS sum_v,
-          | min(epoch_us(ts)) AS min_ts_us,
-          | max(epoch_us(ts)) AS max_ts_us
-          |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      // after the targeted repair, every key's state must equal a clean
-      // full recompute — the affected keys via the rebuilt slice, the
-      // rest via pass-through (their wrong-feed doubling only ever hit
-      // user_id % 10 == 0, so clean == wrong for them)
-      "ev_agg_incremental_rekey" ->
-        """SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS sum_v,
-          | min(epoch_us(ts)) AS min_ts_us,
-          | max(epoch_us(ts)) AS max_ts_us
-          |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      // the persisted chain (save → cold reload → merge → rekey) must
-      // land on a clean full recompute exactly — the wrong-feed doubling
-      // and the disk round-trip both cancel out of the final state
-      "ev_agg_incremental_persisted" ->
-        """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us,
-          |  CAST(round(value*100,0) AS BIGINT) AS v FROM events)
-          |SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows,
-          | CAST(sum(v) AS BIGINT) AS sum_v,
-          | min(ts_us) AS min_ts_us,
-          | max(ts_us) AS max_ts_us,
-          | CAST(sum(v * v) AS BIGINT) AS sumsq_v
-          |FROM e GROUP BY 1 ORDER BY 1""".stripMargin,
-
-      // full recompute of the merged (sum, count, sum-sq) state plus the
-      // identical derived-moment recipe, ALL in BIGINT: int64 mul/sub,
-      // one int64→double cast, one IEEE division. No HUGEINT, no DECIMAL
-      // in the output — both behaved differently across oracle DuckDB
-      // versions (r13's red row); int64 arithmetic cannot
-      "ev_agg_incremental_stats" ->
-        """WITH s AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_rows,
-          |  CAST(sum(v) AS BIGINT) AS sum_v,
-          |  CAST(sum(v * v) AS BIGINT) AS sumsq_v
-          | FROM (SELECT user_id,
-          |   CAST(round(value*100,0) AS BIGINT) AS v FROM events)
-          | GROUP BY 1)
-          |SELECT user_id, n_rows, sum_v, sumsq_v,
-          | CAST(sum_v AS DOUBLE) / CAST(n_rows AS DOUBLE) AS avg_v,
-          | n_rows * sumsq_v - sum_v * sum_v AS varnum_v,
-          | n_rows * n_rows AS varden_v,
-          | CAST(n_rows * sumsq_v - sum_v * sum_v AS DOUBLE)
-          |   / CAST(n_rows * n_rows AS DOUBLE) AS var_v
-          |FROM s ORDER BY 1""".stripMargin,
-
-      // independent BETWEEN formulation over lead()-built intervals —
-      // the as-of implementation must reproduce interval containment
-      // exactly, including null rows for clicks before the first version
-      "ev_scd2_lookup" ->
-        """WITH p AS (SELECT user_id, ts,
-          |  max(event_id) AS p_event_id,
-          |  CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS p_cents
-          | FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-          |iv AS (SELECT user_id, ts AS valid_from,
-          |  lead(ts) OVER (PARTITION BY user_id ORDER BY ts) AS valid_to,
-          |  p_event_id, p_cents FROM p),
-          |c AS (SELECT event_id, user_id, ts FROM events
-          | WHERE event_type = 'click')
-          |SELECT c.event_id, c.user_id, epoch_us(c.ts) AS ts_us,
-          | iv.p_event_id, iv.p_cents,
-          | epoch_us(iv.valid_from) AS valid_from_us
-          |FROM c LEFT JOIN iv ON c.user_id = iv.user_id
-          | AND c.ts >= iv.valid_from
-          | AND (iv.valid_to IS NULL OR c.ts < iv.valid_to)
-          |ORDER BY c.event_id""".stripMargin,
-
-      // tolerance = null-out pass over the unbounded backward ASOF: the
-      // most recent row is the only backward candidate, so "most recent
-      // within 24h" is "most recent overall, nulled when older"
-      "ev_asof_tol" ->
-        """WITH p AS (SELECT user_id, ts,
-          |  max(event_id) AS p_event_id,
-          |  CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS p_cents
-          | FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-          |c AS (SELECT event_id, user_id, ts FROM events
-          | WHERE event_type = 'click'),
-          |j AS (SELECT c.event_id, c.user_id, epoch_us(c.ts) AS ts_us,
-          |  p.p_event_id, p.p_cents, epoch_us(p.ts) AS p_ts_us
-          | FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts)
-          |SELECT event_id, user_id, ts_us,
-          | CASE WHEN ts_us - p_ts_us <= 86400000000 THEN p_event_id END AS p_event_id,
-          | CASE WHEN ts_us - p_ts_us <= 86400000000 THEN p_cents END AS p_cents,
-          | CASE WHEN ts_us - p_ts_us <= 86400000000 THEN p_ts_us END AS p_ts_us
-          |FROM j ORDER BY event_id""".stripMargin,
-
-      // independent formulation: the plain theta join the bucketed
-      // implementation must reproduce exactly (count includes the signup
-      // row itself, so every signup survives the inner join)
-      // the quadratic ground truth the bucketed overlap join must equal
-      "ev_interval_join" ->
-        """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS s,
-          |  epoch_us(ts) + 300000000 AS e FROM events),
-          |a AS (SELECT user_id, event_id AS a_id, s AS a_s, e AS a_e
-          | FROM e WHERE event_id % 2 = 1),
-          |b AS (SELECT user_id, event_id AS b_id, s AS b_s, e AS b_e
-          | FROM e WHERE event_id % 2 = 0)
-          |SELECT a.user_id, a_id, b_id,
-          | least(a_e, b_e) - greatest(a_s, b_s) AS overlap_us
-          |FROM a JOIN b ON a.user_id = b.user_id
-          | AND a_s < b_e AND b_s < a_e
-          |ORDER BY a.user_id, a_id, b_id""".stripMargin,
-
-      "ev_range_join" ->
-        """WITH s AS (SELECT event_id AS s_event_id, user_id,
-          |  epoch_us(ts) AS ts_us FROM events WHERE event_type = 'signup')
-          |SELECT s.s_event_id, s.user_id, s.ts_us, count(*) AS n_nearby
-          |FROM s JOIN events e ON s.user_id = e.user_id
-          | AND abs(epoch_us(e.ts) - s.ts_us) <= 1800000000
-          |GROUP BY 1, 2, 3 ORDER BY 1""".stripMargin,
-
-      // pair-level restatement of the ev_range_join oracle — the
-      // streaming inner join must emit exactly the theta join's pairs
-      "ev_stream_range_join" ->
-        """SELECT s.event_id AS s_event_id, e.event_id AS e_id
-          |FROM events s JOIN events e ON s.user_id = e.user_id
-          | AND s.event_type = 'signup'
-          | AND abs(epoch_us(e.ts) - epoch_us(s.ts)) <= 1800000000
-          |ORDER BY 1, 2""".stripMargin,
-
-      // the identical ASOF LEFT JOIN oracle as the batch ev_asof_join —
-      // the streaming state machine must reproduce the batch as-of
-      // result exactly, nulls included
-      "ev_stream_asof_join" ->
-        """WITH p AS (SELECT user_id, ts,
-          |  max(event_id) AS p_event_id,
-          |  CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS p_cents
-          | FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-          |c AS (SELECT event_id, user_id, ts FROM events
-          | WHERE event_type = 'click')
-          |SELECT c.event_id, c.user_id, epoch_us(c.ts) AS ts_us,
-          | p.p_event_id, p.p_cents, epoch_us(p.ts) AS p_ts_us
-          |FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts
-          |ORDER BY c.event_id""".stripMargin,
-
-      // the identical oracle as the batch ev_asof_tol: the bounded-
-      // lookback stream state machine must reproduce the batch tolerant
-      // as-of exactly (most recent within 24 h, staler matches nulled)
-      "ev_stream_asof_tol" ->
-        """WITH p AS (SELECT user_id, ts,
-          |  max(event_id) AS p_event_id,
-          |  CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS p_cents
-          | FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-          |c AS (SELECT event_id, user_id, ts FROM events
-          | WHERE event_type = 'click'),
-          |j AS (SELECT c.event_id, c.user_id, epoch_us(c.ts) AS ts_us,
-          |  p.p_event_id, p.p_cents, epoch_us(p.ts) AS p_ts_us
-          | FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts)
-          |SELECT event_id, user_id, ts_us,
-          | CASE WHEN ts_us - p_ts_us <= 86400000000 THEN p_event_id END AS p_event_id,
-          | CASE WHEN ts_us - p_ts_us <= 86400000000 THEN p_cents END AS p_cents,
-          | CASE WHEN ts_us - p_ts_us <= 86400000000 THEN p_ts_us END AS p_ts_us
-          |FROM j ORDER BY event_id""".stripMargin,
-
-      // forward ASOF (earliest at-or-after) nulled past the tolerance —
-      // the earliest match beyond tol implies no match inside the window,
-      // so the null-out restates "earliest within [ts, ts+tol]" exactly
-      "ev_stream_asof_fwd" ->
-        """WITH p AS (SELECT user_id, ts,
-          |  max(event_id) AS p_event_id,
-          |  CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS p_cents
-          | FROM events WHERE event_type = 'purchase' GROUP BY 1, 2),
-          |c AS (SELECT event_id, user_id, ts FROM events
-          | WHERE event_type = 'click'),
-          |j AS (SELECT c.event_id, c.user_id, epoch_us(c.ts) AS ts_us,
-          |  p.p_event_id, p.p_cents, epoch_us(p.ts) AS p_ts_us
-          | FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts <= p.ts)
-          |SELECT event_id, user_id, ts_us,
-          | CASE WHEN p_ts_us - ts_us <= 86400000000 THEN p_event_id END AS p_event_id,
-          | CASE WHEN p_ts_us - ts_us <= 86400000000 THEN p_cents END AS p_cents,
-          | CASE WHEN p_ts_us - ts_us <= 86400000000 THEN p_ts_us END AS p_ts_us
-          |FROM j ORDER BY event_id""".stripMargin,
-
-      // batch left theta join restatement: signups keep their row when no
-      // purchase falls inside the ±30 min window (the right-side filter
-      // lives in the ON clause, which is pre-join filtering for LEFT JOIN)
-      "ev_stream_range_join_outer" ->
-        """SELECT s.event_id AS s_event_id, e.event_id AS e_id
-          |FROM events s LEFT JOIN events e ON s.user_id = e.user_id
-          | AND e.event_type = 'purchase'
-          | AND abs(epoch_us(e.ts) - epoch_us(s.ts)) <= 1800000000
-          |WHERE s.event_type = 'signup'
-          |ORDER BY 1, 2 NULLS FIRST""".stripMargin,
-
-      // per-(hour, user) latest by the (ts, event_id) total order — the
-      // windowed compaction the streaming max_by must reproduce
-      "ev_stream_latest" ->
-        """SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS win_start_us,
-          | user_id, event_id, epoch_us(ts) AS ts_us, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM (SELECT *, row_number() OVER (PARTITION BY
-          |   time_bucket(INTERVAL '1 hour', ts), user_id
-          |   ORDER BY ts DESC, event_id DESC) AS rn
-          |  FROM events)
-          |WHERE rn = 1 ORDER BY win_start_us, user_id""".stripMargin,
-
-      "ev_stream_windowed_agg" ->
-        """SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS win_start_us,
-          | event_type, count(*) AS n,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS value_cents
-          |FROM events GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-
-      // Append mode emits exactly the FINALIZED windows: those whose
-      // end the final watermark (max event time − 30 min, at Spark's
-      // millisecond watermark granularity) passed
-      "ev_stream_windowed_agg_append" ->
-        """SELECT epoch_us(time_bucket(INTERVAL '1 hour', ts)) AS win_start_us,
-          | event_type, count(*) AS n,
-          | CAST(sum(CAST(round(value*100,0) AS BIGINT)) AS BIGINT) AS value_cents
-          |FROM events
-          |WHERE time_bucket(INTERVAL '1 hour', ts) + INTERVAL '1 hour'
-          |  <= (SELECT max(ts) - INTERVAL '30 minutes' FROM events)
-          |GROUP BY 1,2 ORDER BY 1,2""".stripMargin,
-
-      "mm_payload_stats" ->
-        """SELECT doc_id AS asset_id,
-          | CAST(octet_length(encode(text)) AS BIGINT) AS payload_bytes,
-          | md5(text) AS payload_md5
-          |FROM documents ORDER BY asset_id""".stripMargin,
-
-      // md5 of the utf-8 payload == md5 of the text on both engines
-      "mm_dedup" ->
-        """SELECT md5(text) AS payload_md5,
-          | CAST(count(*) AS BIGINT) AS n_assets,
-          | min(doc_id) AS survivor_id
-          |FROM documents GROUP BY payload_md5
-          |ORDER BY payload_md5""".stripMargin,
-
-      // the BMP dims are closed-form in doc_id (syntheticBmpAssets);
-      // the engine side must reproduce them via a real header parse
-      "mm_features_bmp" ->
-        """SELECT doc_id AS asset_id,
-          | CAST(16 + doc_id % 1024 AS INT) AS width,
-          | CAST(16 + (doc_id * 7) % 1024 AS INT) AS height
-          |FROM documents ORDER BY asset_id""".stripMargin,
-
-      // the WAV parameters are closed-form in doc_id (syntheticWavAssets);
-      // duration_ms = dataSize*1000/byteRate, and the channels·2 block
-      // align cancels, leaving exact integer floor(nSamples*1000/rate)
-      "mm_audio_meta" ->
-        """SELECT doc_id AS asset_id,
-          | CAST(1 + doc_id % 2 AS INT) AS channels,
-          | CAST(CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-          |  ELSE 44100 END AS INT) AS sample_rate,
-          | CAST((1000 + doc_id % 9000) * 1000 AS BIGINT)
-          |  // CAST(CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-          |   ELSE 44100 END AS BIGINT) AS duration_ms
-          |FROM documents ORDER BY asset_id""".stripMargin,
-
-      // the engine reads real interleaved int16 samples out of RIFF
-      // bytes; the oracle replays the closed-form sample scramble
-      // s(j) = ((j·2657 + id·7919) mod 65536) − 32768 over
-      // j ∈ [0, ch·n) and aggregates in exact integers
-      "mm_features_gif" ->
-        """SELECT doc_id AS asset_id,
-          | CAST(16 + doc_id % 1024 AS INT) AS width,
-          | CAST(16 + (doc_id * 7) % 1024 AS INT) AS height,
-          | CAST(1 + doc_id % 5 AS INT) AS n_frames,
-          | CAST(1 << CAST(1 + doc_id % 8 AS INT) AS INT) AS gct_entries,
-          | CAST((1 + doc_id % 5) * (10 + doc_id % 90) * 10 AS BIGINT)
-          |  AS duration_ms
-          |FROM documents ORDER BY asset_id""".stripMargin,
-
-      // replay the silence generator's sample formula, window-peak,
-      // then standard gaps-and-islands over the silent windows
-      "mm_audio_silence" ->
-        """WITH p AS (SELECT doc_id, 200 + doc_id % 800 AS n FROM documents),
-          |s AS (SELECT doc_id, n, unnest(range(0, n)) AS j FROM p),
-          |v AS (SELECT doc_id, n, j // 50 AS w,
-          |  CASE WHEN ((j // 50) + doc_id) % 3 = 0
-          |   THEN ((j * 31 + doc_id * 17) % 129) - 64
-          |   ELSE ((j * 2657 + doc_id * 7919) % 65536) - 32768 END AS smp
-          | FROM s),
-          |pk AS (SELECT doc_id, n, w, max(abs(smp)) AS peak
-          | FROM v GROUP BY doc_id, n, w),
-          |si AS (SELECT doc_id, n, w,
-          |  w - row_number() OVER (PARTITION BY doc_id ORDER BY w) AS grp
-          | FROM pk WHERE peak < 256),
-          |seg AS (SELECT doc_id, CAST(min(w) * 50 AS BIGINT) AS start_frame,
-          |  CAST(least((max(w) + 1) * 50, min(n)) AS BIGINT) AS end_frame
-          | FROM si GROUP BY doc_id, grp)
-          |SELECT doc_id AS asset_id,
-          | CAST(row_number() OVER (PARTITION BY doc_id ORDER BY start_frame)
-          |   - 1 AS BIGINT) AS seg_idx,
-          | start_frame, end_frame
-          |FROM seg ORDER BY asset_id, seg_idx""".stripMargin,
-
-      "mm_audio_loudness" ->
-        """WITH p AS (SELECT doc_id, 1 + doc_id % 2 AS ch,
-          |  200 + doc_id % 800 AS n FROM documents),
-          |s AS (SELECT doc_id, ch * n AS total,
-          |  unnest(range(0, ch * n)) AS j FROM p),
-          |v AS (SELECT doc_id, total,
-          |  ((j * 2657 + doc_id * 7919) % 65536) - 32768 AS smp FROM s),
-          |a AS (SELECT doc_id, CAST(max(total) AS BIGINT) AS n_samples,
-          |  CAST(max(abs(smp)) AS INT) AS peak,
-          |  CAST(count(*) FILTER (WHERE smp = 32767 OR smp = -32768)
-          |   AS BIGINT) AS n_clipped,
-          |  CAST(sum(smp * smp) AS BIGINT) AS sumsq
-          | FROM v GROUP BY doc_id)
-          |SELECT doc_id AS asset_id, n_samples, peak, n_clipped, sumsq,
-          | CAST(sumsq AS DOUBLE) / CAST(n_samples AS DOUBLE) AS mean_sq
-          |FROM a ORDER BY asset_id""".stripMargin,
-
-      // decimation replayed arithmetically: kept frames are 0,4,8,… of
-      // n = 200 + id%800, so n_kept = (n+3)//4 and the probed channel-0
-      // sample of kept frame k is the fixture formula at interleaved
-      // index (k*4)*ch
-      "mm_audio_decimate" ->
-        """WITH p AS (SELECT doc_id, 1 + doc_id % 2 AS ch,
-          |  CASE doc_id % 3 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-          |   ELSE 44100 END AS rate,
-          |  200 + doc_id % 800 AS n FROM documents),
-          |k AS (SELECT doc_id, ch, rate, (n + 3) // 4 AS nk FROM p),
-          |s AS (SELECT doc_id, ch, rate, nk,
-          |  0 AS f0, (nk // 2) * 4 AS fmid, (nk - 1) * 4 AS fend FROM k)
-          |SELECT doc_id AS asset_id,
-          | CAST(rate // 4 AS BIGINT) AS out_rate,
-          | CAST(nk AS BIGINT) AS out_frames,
-          | CAST(((f0 * ch * 2657 + doc_id * 7919) % 65536) - 32768
-          |  AS BIGINT) AS p0,
-          | CAST(((fmid * ch * 2657 + doc_id * 7919) % 65536) - 32768
-          |  AS BIGINT) AS pmid,
-          | CAST(((fend * ch * 2657 + doc_id * 7919) % 65536) - 32768
-          |  AS BIGINT) AS pend
-          |FROM s ORDER BY asset_id""".stripMargin,
-
-      // the only pairs are each multiple-of-7 doc and its intro-trimmed
-      // twin: with n = 24 + id%240 frames, trim k = 1 + id%3, shingle
-      // width 4, the twin keeps n-k-3 of the base's n-3 shingles —
-      // jaccard = (n-k-3)/(n-3), one IEEE division of exact ints; no
-      // other pair shares a single 4-frame window
-      "mm_video_fingerprint_pairs" ->
-        """SELECT doc_id AS id_a,
-          | doc_id + 1000000000 AS id_b,
-          | CAST((24 + doc_id % 240) - (1 + doc_id % 3) - 3 AS DOUBLE)
-          |  / CAST((24 + doc_id % 240) - 3 AS DOUBLE) AS jaccard
-          |FROM documents WHERE doc_id % 7 = 0
-          |ORDER BY id_a, id_b""".stripMargin,
-
-      // AVI parameters are closed-form in doc_id (syntheticAviAssets);
-      // duration_ms = usPerFrame * nFrames // 1000, exact integer floor
-      "mm_video_meta" ->
-        """SELECT doc_id AS asset_id,
-          | CAST(160 + 16 * (doc_id % 8) AS INT) AS width,
-          | CAST(120 + 8 * (doc_id % 6) AS INT) AS height,
-          | CAST(24 + doc_id % 240 AS INT) AS n_frames,
-          | (CAST(CASE WHEN doc_id % 2 = 0 THEN 33333 ELSE 41708 END AS BIGINT)
-          |  * CAST(24 + doc_id % 240 AS BIGINT)) // 1000 AS duration_ms
-          |FROM documents ORDER BY asset_id""".stripMargin,
-
-      // independent arithmetic (no array replay): with scene length L =
-      // 1 + id%7 and n = 24 + id%240 frames, cuts sit at k·L+1 for k =
-      // 1..(n−1)//L; mean length = n / (cuts+1), one IEEE division
-      // scene k (0-based) opens at frame k·L+1 whose signature is k —
-      // pure arithmetic, no array replay
-      "mm_keyframes" ->
-        """WITH p AS (SELECT doc_id, 24 + doc_id % 240 AS n,
-          |  1 + doc_id % 7 AS l FROM documents),
-          |s AS (SELECT doc_id, l, unnest(range(0, (n - 1) // l + 1)) AS k
-          | FROM p)
-          |SELECT doc_id AS asset_id,
-          | CAST(k + 1 AS INT) AS scene_idx,
-          | CAST(k * l + 1 AS INT) AS start_frame,
-          | CAST(k AS INT) AS sig
-          |FROM s ORDER BY asset_id, scene_idx""".stripMargin,
-
-      // both closed forms re-derived: video cuts at frames k*l+1 map to
-      // sample 4*k*l; a cut is silent iff its 50-sample window exists
-      // (cs < na) and is a quiet window ((w + doc) % 3 = 0) — mod-3
-      // windows never merge, so each silent island is one window
-      "mm_av_align" ->
-        """WITH p AS (SELECT doc_id, 24 + doc_id % 240 AS nv,
-          |  1 + doc_id % 7 AS l, 200 + doc_id % 800 AS na FROM documents),
-          |c AS (SELECT doc_id, na,
-          |  4 * unnest(range(1, (nv - 1) // l + 1)) * l AS cs FROM p),
-          |h AS (SELECT doc_id,
-          |  CASE WHEN cs < na AND ((cs // 50) + doc_id) % 3 = 0
-          |   THEN 1 ELSE 0 END AS silent
-          | FROM c)
-          |SELECT doc_id AS asset_id, CAST(count(*) AS BIGINT) AS n_cuts,
-          | CAST(sum(silent) AS BIGINT) AS n_silent_cuts
-          |FROM h GROUP BY 1 ORDER BY asset_id""".stripMargin,
-
-      "mm_scene_cuts" ->
-        """WITH p AS (SELECT doc_id, 24 + doc_id % 240 AS n,
-          |  1 + doc_id % 7 AS l FROM documents)
-          |SELECT doc_id AS asset_id,
-          | CAST(n AS BIGINT) AS n_frames,
-          | CAST((n - 1) // l AS BIGINT) AS n_cuts,
-          | array_to_string(list_transform(range(1, (n - 1) // l + 1),
-          |   k -> CAST(k * l + 1 AS VARCHAR)), ',') AS cuts_csv,
-          | CAST(n AS DOUBLE) / CAST((n - 1) // l + 1 AS DOUBLE)
-          |  AS mean_scene_len
-          |FROM p ORDER BY asset_id""".stripMargin,
-
-      // corruption is planted at doc_id % 13 = 0 (payload truncated inside
-      // the file header), so which rows error — and the codec's exact
-      // message (Scala require prefixes "requirement failed: ") — is
-      // closed-form; clean rows keep the mm_features_bmp dims
-      "mm_features_errors" ->
-        """SELECT doc_id AS asset_id,
-          | CASE WHEN doc_id % 13 = 0 THEN NULL
-          |  ELSE CAST(16 + doc_id % 1024 AS INT) END AS width,
-          | CASE WHEN doc_id % 13 = 0 THEN NULL
-          |  ELSE CAST(16 + (doc_id * 7) % 1024 AS INT) END AS height,
-          | CASE WHEN doc_id % 13 = 0
-          |  THEN 'requirement failed: not a BMP payload (missing BM magic or truncated header)'
-          |  ELSE NULL END AS decode_error
-          |FROM documents ORDER BY asset_id""".stripMargin,
-
-      // JPEG dims are closed-form in doc_id (syntheticJpegAssets); the
-      // corrupted 13th payloads end inside APP0, so the marker scan
-      // throws its no-SOF IllegalArgumentException (thrown directly —
-      // no "requirement failed: " prefix, unlike the BMP require path)
-      "mm_features_jpeg" ->
-        """SELECT doc_id AS asset_id,
-          | CASE WHEN doc_id % 13 = 0 THEN NULL
-          |  ELSE CAST(16 + doc_id % 1024 AS INT) END AS width,
-          | CASE WHEN doc_id % 13 = 0 THEN NULL
-          |  ELSE CAST(16 + (doc_id * 11) % 1024 AS INT) END AS height,
-          | CASE WHEN doc_id % 13 = 0
-          |  THEN 'truncated JPEG: no SOF marker found'
-          |  ELSE NULL END AS decode_error
-          |FROM documents ORDER BY asset_id""".stripMargin,
-
-      // PNG dims are closed-form in doc_id (syntheticPngAssets); the
-      // corrupted 13th payloads end before the IHDR type, so the
-      // signature/length require fires ("requirement failed: " prefix,
-      // the BMP-path message shape)
-      "mm_features_png" ->
-        """SELECT doc_id AS asset_id,
-          | CASE WHEN doc_id % 13 = 0 THEN NULL
-          |  ELSE CAST(16 + doc_id % 1024 AS INT) END AS width,
-          | CASE WHEN doc_id % 13 = 0 THEN NULL
-          |  ELSE CAST(16 + (doc_id * 13) % 1024 AS INT) END AS height,
-          | CASE WHEN doc_id % 13 = 0
-          |  THEN 'requirement failed: not a PNG payload (missing signature or truncated IHDR)'
-          |  ELSE NULL END AS decode_error
-          |FROM documents ORDER BY asset_id""".stripMargin,
-
-      // nearest-neighbor probe replay: src dims are closed-form in
-      // doc_id, dst is 8×8, so probe (x,y) reads source pixel
-      // (x·srcW//8, y·srcH//8) whose value is (sx·31 + sy·17) mod 256
-      "mm_resize" -> {
-        def probe(x: Int, y: Int) =
-          s"CAST(((($x * w) // 8) * 31 + (($y * h) // 8) * 17) % 256 AS INT)"
-        s"""WITH d AS (SELECT doc_id,
-           |  4 + doc_id % 13 AS w, 4 + doc_id % 11 AS h FROM documents)
-           |SELECT doc_id AS asset_id,
-           | CAST(8 AS INT) AS out_w, CAST(8 AS INT) AS out_h,
-           | ${probe(1, 2)} AS p12,
-           | ${probe(4, 4)} AS pmid,
-           | ${probe(7, 7)} AS pend
-           |FROM d ORDER BY asset_id""".stripMargin
-      },
-
-      // dHash replay: gray(x,y) of the 9×8 resize reads source pixel
-      // ((x·w)//9, (y·h)//8) whose value is (31·sx + 17·sy) mod 256 —
-      // the mm_resize arithmetic — and bit y·8+x compares adjacent
-      // grays. Bits 0..62 sum as shifted BIGINTs; bit 63 is the long's
-      // sign bit, added as -2^63 (DuckDB refuses 1<<63). Pairs are
-      // BRUTE-FORCED (a.id < b.id cross join + exact hamming), so the
-      // engine's pigeonhole banding is proven lossless against ground
-      // truth, not against itself.
-      "mm_phash_pairs" -> {
-        def gray(x: String, y: String) =
-          s"(31 * (($x * w) // 9) + 17 * (($y * h) // 8)) % 256"
-        s"""WITH d AS (SELECT doc_id,
-           |  4 + doc_id % 13 AS w, 4 + doc_id % 11 AS h FROM documents),
-           |hsh AS MATERIALIZED (SELECT doc_id,
-           |  CAST(list_sum(list_transform(range(0, 63), b ->
-           |    CASE WHEN ${gray("((b % 8) + 1)", "(b // 8)")}
-           |            > ${gray("(b % 8)", "(b // 8)")}
-           |     THEN (1::BIGINT << b) ELSE 0::BIGINT END)) AS BIGINT)
-           |  + CASE WHEN ${gray("8", "7")} > ${gray("7", "7")}
-           |     THEN (-9223372036854775807 - 1) ELSE 0 END AS ph
-           | FROM d)
-           |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           | CAST(bit_count(xor(a.ph, b.ph)) AS INT) AS dist
-           |FROM hsh a JOIN hsh b ON a.doc_id < b.doc_id
-           |WHERE bit_count(xor(a.ph, b.ph)) <= 3
-           |ORDER BY id_a, id_b""".stripMargin
-      },
-
-      // energy-gradient hash replay: per asset the 65 window energies
-      // materialize as ONE list (each window sums frames div 65
-      // closed-form middle-square |samples|; the sibling's every-13th
-      // sample shrinks up to 5 toward zero, i.e. |s| becomes
-      // max(|s|−5, 0)), bits compare adjacent energies, bit 63 rides
-      // the sign as -2^63. Pairs BRUTE-FORCED against ground truth,
-      // proving the banding lossless.
-      "mm_audio_fingerprint_pairs" -> {
-        val baseAbs =
-          "abs((((j*2657 + id*7919)*(j*2657 + id*7919)) // 256) % 65536 - 32768)"
-        val absExpr =
-          s"""CASE WHEN sib AND j % 13 = 0
-             |  THEN greatest($baseAbs - 5, 0)
-             |  ELSE $baseAbs
-             |  END""".stripMargin.replace("\n", " ")
-        s"""WITH assets AS (
-           |  SELECT doc_id AS aid, doc_id AS id, false AS sib,
-           |   260 + doc_id % 700 AS n FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 1000000, doc_id, true, 260 + doc_id % 700
-           |  FROM documents WHERE doc_id % 17 = 0),
-           |es AS MATERIALIZED (SELECT aid,
-           |  list_transform(range(0, 65), w ->
-           |   list_sum(list_transform(
-           |    range(w * (n // 65), (w + 1) * (n // 65)),
-           |    j -> $absExpr))) AS e
-           | FROM assets),
-           |hsh AS MATERIALIZED (SELECT aid,
-           |  CAST(list_sum(list_transform(range(0, 63), b ->
-           |    CASE WHEN e[b+2] > e[b+1]
-           |     THEN (1::BIGINT << b) ELSE 0::BIGINT END)) AS BIGINT)
-           |  + CASE WHEN e[65] > e[64]
-           |     THEN (-9223372036854775807 - 1) ELSE 0 END AS afp
-           | FROM es)
-           |SELECT a.aid AS id_a, b.aid AS id_b,
-           | CAST(bit_count(xor(a.afp, b.afp)) AS INT) AS dist
-           |FROM hsh a JOIN hsh b ON a.aid < b.aid
-           |WHERE bit_count(xor(a.afp, b.afp)) <= 3
-           |ORDER BY id_a, id_b""".stripMargin
-      },
-
-      // the audio twin of mm_stream_phash_dedup's replay: the same
-      // energy-gradient hash CTEs as mm_audio_fingerprint_pairs, then
-      // min-id-claims per (chunk, value) bucket + hamming verify
-      "mm_stream_audio_dedup" -> {
-        val baseAbs =
-          "abs((((j*2657 + id*7919)*(j*2657 + id*7919)) // 256) % 65536 - 32768)"
-        val absExpr =
-          s"""CASE WHEN sib AND j % 13 = 0
-             |  THEN greatest($baseAbs - 5, 0)
-             |  ELSE $baseAbs
-             |  END""".stripMargin.replace("\n", " ")
-        s"""WITH assets AS (
-           |  SELECT doc_id AS aid, doc_id AS id, false AS sib,
-           |   260 + doc_id % 700 AS n FROM documents
-           |  UNION ALL
-           |  SELECT doc_id + 1000000, doc_id, true, 260 + doc_id % 700
-           |  FROM documents WHERE doc_id % 17 = 0),
-           |es AS MATERIALIZED (SELECT aid,
-           |  list_transform(range(0, 65), w ->
-           |   list_sum(list_transform(
-           |    range(w * (n // 65), (w + 1) * (n // 65)),
-           |    j -> $absExpr))) AS e
-           | FROM assets),
-           |hsh AS MATERIALIZED (SELECT aid,
-           |  CAST(list_sum(list_transform(range(0, 63), b ->
-           |    CASE WHEN e[b+2] > e[b+1]
-           |     THEN (1::BIGINT << b) ELSE 0::BIGINT END)) AS BIGINT)
-           |  + CASE WHEN e[65] > e[64]
-           |     THEN (-9223372036854775807 - 1) ELSE 0 END AS afp
-           | FROM es),
-           |ck AS MATERIALIZED (SELECT aid, afp, u AS ci,
-           |  (afp >> (u * 16)) & 65535 AS cv
-           | FROM hsh, unnest([0, 1, 2, 3]) AS t(u)),
-           |cl AS (SELECT ci, cv, min(aid) AS winner
-           | FROM ck GROUP BY ci, cv)
-           |SELECT DISTINCT b.aid AS asset_id
-           |FROM ck b JOIN cl ON b.ci = cl.ci AND b.cv = cl.cv
-           | JOIN hsh a ON a.aid = cl.winner
-           |WHERE b.aid <> cl.winner
-           | AND bit_count(xor(a.afp, b.afp)) <= 3
-           |ORDER BY asset_id""".stripMargin
-      },
-
-      // single-batch replay of the claim protocol: per (chunk, value)
-      // bucket the min id claims; sharers lose iff within hamming 3 of
-      // THE CLAIMER (not of any neighbor — first-writer-wins is the
-      // semantics, same as dedup_online's band complement)
-      "mm_stream_phash_dedup" -> {
-        def gray(x: String, y: String) =
-          s"(31 * (($x * w) // 9) + 17 * (($y * h) // 8)) % 256"
-        s"""WITH d AS (SELECT doc_id,
-           |  4 + doc_id % 13 AS w, 4 + doc_id % 11 AS h FROM documents),
-           |hsh AS MATERIALIZED (SELECT doc_id,
-           |  CAST(list_sum(list_transform(range(0, 63), b ->
-           |    CASE WHEN ${gray("((b % 8) + 1)", "(b // 8)")}
-           |            > ${gray("(b % 8)", "(b // 8)")}
-           |     THEN (1::BIGINT << b) ELSE 0::BIGINT END)) AS BIGINT)
-           |  + CASE WHEN ${gray("8", "7")} > ${gray("7", "7")}
-           |     THEN (-9223372036854775807 - 1) ELSE 0 END AS ph
-           | FROM d),
-           |ck AS MATERIALIZED (SELECT doc_id, ph, u AS ci,
-           |  (ph >> (u * 16)) & 65535 AS cv
-           | FROM hsh, unnest([0, 1, 2, 3]) AS t(u)),
-           |cl AS (SELECT ci, cv, min(doc_id) AS winner
-           | FROM ck GROUP BY ci, cv)
-           |SELECT DISTINCT b.doc_id AS asset_id
-           |FROM ck b JOIN cl ON b.ci = cl.ci AND b.cv = cl.cv
-           | JOIN hsh a ON a.doc_id = cl.winner
-           |WHERE b.doc_id <> cl.winner
-           | AND bit_count(xor(a.ph, b.ph)) <= 3
-           |ORDER BY asset_id""".stripMargin
-      },
-
-      // FakeCodec is closed-form over md5 of the utf-8 payload
-      // (Multimodal.scala FakeCodec): dims from hex digits 1-3 / 4-6,
-      // frame hash i = md5(payload ++ byte(i)). chr(i) appends the same
-      // single byte in DuckDB's utf-8 varchar for i < 0x80.
-      "mm_features" -> {
-        def hex3(s: String): String =
-          s"((strpos('0123456789abcdef', substr($s,1,1))-1)*256" +
-            s" + (strpos('0123456789abcdef', substr($s,2,1))-1)*16" +
-            s" + (strpos('0123456789abcdef', substr($s,3,1))-1))"
-        s"""WITH h AS (SELECT doc_id AS asset_id, md5(text) AS hh, text FROM documents)
-           |SELECT asset_id,
-           | CAST(16 + ${hex3("substr(hh,1,3)")} AS INT) AS width,
-           | CAST(16 + ${hex3("substr(hh,4,3)")} AS INT) AS height,
-           | md5(text || chr(0)) || ',' || md5(text || chr(1)) || ',' || md5(text || chr(2)) AS frame_hashes_csv
-           |FROM h ORDER BY asset_id""".stripMargin
-      },
-
-      // R1 oracle: the five synthesized description shapes are closed-form
-      // in (l_partkey, l_orderkey, l_linenumber), so the expected parse is
-      // the same CASE arithmetic — no regex engine involved. Shape-to-field
-      // derivations follow Description.patterns group semantics (note the
-      // trailing spaces the chronJ group captures).
-      "alma_desc_parse" ->
-        """WITH d AS (SELECT l_orderkey, l_linenumber,
-          |  CAST(l_partkey % 40 AS VARCHAR) AS p,
-          |  lpad(CAST(l_orderkey % 100 AS VARCHAR), 2, '0') AS o2,
-          |  CAST(l_linenumber % 5 AS INT) AS m,
-          |  CAST(l_linenumber % 12 AS VARCHAR) AS ln12
-          | FROM lineitem)
-          |SELECT l_orderkey, l_linenumber,
-          | CASE m
-          |  WHEN 0 THEN 'v.' || p || ' no.' || ln12 || ' (Oct 19' || o2 || ')'
-          |  WHEN 1 THEN 'vol ' || p || ' (20' || o2 || ' Spring)'
-          |  WHEN 2 THEN 'v.' || p || ' (Nov 98-Jan 99)'
-          |  WHEN 3 THEN 'ser.3 v.' || p || ' nos.1-2 (Jan-Feb 99)'
-          |  ELSE 'unparseable description text' END AS "Description",
-          | CASE m WHEN 0 THEN 'v.' || p WHEN 1 THEN 'vol ' || p
-          |  WHEN 2 THEN 'v.' || p WHEN 3 THEN 'ser.3 v.' || p
-          |  ELSE '' END AS "Enum A",
-          | CASE m WHEN 0 THEN 'no.' || ln12 WHEN 3 THEN 'nos.1-2'
-          |  ELSE '' END AS "Enum B",
-          | CASE m WHEN 0 THEN '19' || o2 WHEN 1 THEN '20' || o2
-          |  WHEN 2 THEN '98-99' WHEN 3 THEN '99' ELSE '' END AS "Chron I",
-          | CASE m WHEN 0 THEN 'Oct ' WHEN 1 THEN 'Spring'
-          |  WHEN 2 THEN 'Nov-Jan' WHEN 3 THEN 'Jan-Feb ' ELSE '' END AS "Chron J",
-          | CASE m WHEN 4 THEN 'N/A' WHEN 1 THEN 'YearBeforeMonth'
-          |  WHEN 2 THEN 'SplitYears' ELSE 'StdMatch' END AS "Pattern"
-          |FROM d ORDER BY l_orderkey, l_linenumber, 3""".stripMargin,
-
-      // Full split-stage oracle: the customer-derived fixture is uniform
-      // (every description is the StdMatch shape with a 4-digit year, every
-      // barcode valid), so fills, parse, barcode checks, year inference
-      // (no-op on 4-digit years), and Chron J canonicalization are all
-      // closed-form; the natural sort is (MMS ID, series=0, volume,
-      // Description, Barcode) with string keys.
-      "alma_split_pipeline" ->
-        """WITH d AS (SELECT CAST(c_nationkey AS VARCHAR) AS mms,
-          |  '3' || CAST(c_custkey AS VARCHAR) AS bc, c_name,
-          |  CAST(c_custkey % 30 AS VARCHAR) AS vol,
-          |  CAST(c_custkey % 4 AS VARCHAR) AS no4,
-          |  lpad(CAST(c_custkey % 100 AS VARCHAR), 2, '0') AS y2,
-          |  CAST(c_custkey % 30 AS INT) AS vol_i
-          | FROM customer)
-          |SELECT mms AS "MMS ID", bc AS "Barcode", c_name AS title,
-          | 'v.' || vol || ' no.' || no4 || ' (Oct 19' || y2 || ')' AS "Description",
-          | 'Bound Issue' AS "Material Type",
-          | 'non-circulating' AS "Item Policy",
-          | 'v.' || vol AS "Enum A", 'no.' || no4 AS "Enum B",
-          | '19' || y2 AS "Chron I", 'Oct ' AS "Chron J",
-          | 'StdMatch' AS "Pattern", '' AS "Notes"
-          |FROM d
-          |ORDER BY mms, vol_i,
-          | 'v.' || vol || ' no.' || no4 || ' (Oct 19' || y2 || ')', bc""".stripMargin,
-
-      // the oracle computes the round-trip's fixed point straight from
-      // parquet: matching hashes prove the CSV write → stage-prefix naming
-      // → (Spark | naive) read loop is lossless for the item data model
-      "json_roundtrip" ->
-        """SELECT doc_id, source, lang, n_chars
-          |FROM documents ORDER BY doc_id""".stripMargin,
-
-      "orc_roundtrip" ->
-        """SELECT event_id, user_id, event_type,
-          | CAST(round(value*100,0) AS BIGINT) AS value_cents
-          |FROM events WHERE event_type IN ('purchase', 'view')
-          |ORDER BY event_id""".stripMargin,
-
-      // bigram counts from even docs, unigram prefix counts, then the
-      // held-out docs' positional bigrams scored by exact integer
-      // division — unseen bigrams contribute 0, sub-2-word docs have
-      // no bigram rows on either side
-      "text_lm_score" -> {
-        s"""WITH tb AS (SELECT gram AS bg, CAST(count(*) AS BIGINT) AS c2
-           | FROM (SELECT unnest($duckShingles2) AS gram FROM documents
-           |   WHERE doc_id % 2 = 0)
-           | WHERE gram LIKE '% %' GROUP BY 1),
-           |tw AS (SELECT word AS w1, CAST(count(*) AS BIGINT) AS c1
-           | FROM (SELECT unnest($duckWords) AS word FROM documents
-           |   WHERE doc_id % 2 = 0 AND $duckNorm <> '')
-           | WHERE word <> '' GROUP BY 1),
-           |hb AS (SELECT doc_id, gram AS bg,
-           |  split_part(gram, ' ', 1) AS w1
-           | FROM (SELECT doc_id, unnest($duckShingles2) AS gram
-           |   FROM documents WHERE doc_id % 2 = 1)
-           | WHERE gram LIKE '% %')
-           |SELECT h.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-           | CAST(sum(CASE WHEN tb.c2 IS NOT NULL THEN 1 ELSE 0 END)
-           |  AS BIGINT) AS n_hit,
-           | CAST(coalesce(sum(CASE WHEN tb.c2 IS NOT NULL
-           |   THEN (1000000 * tb.c2) // tw.c1 ELSE 0 END), 0)
-           |  AS BIGINT) AS score
-           |FROM hb h LEFT JOIN tb ON h.bg = tb.bg
-           | LEFT JOIN tw ON h.w1 = tw.w1
-           |GROUP BY h.doc_id ORDER BY h.doc_id""".stripMargin
-      },
-
-      "csv_roundtrip" ->
-        """WITH i AS (SELECT CAST(c_custkey AS VARCHAR) AS "MMS ID",
-          |  CAST(c_custkey * 7 AS VARCHAR) AS "Barcode", c_name AS title,
-          |  c_custkey AS ck FROM customer)
-          |SELECT "MMS ID", "Barcode", title, dialect, ck
-          |FROM (SELECT i.*, 'naive' AS dialect FROM i
-          |      UNION ALL SELECT i.*, 'spark' AS dialect FROM i) u
-          |ORDER BY dialect, ck""".stripMargin,
-
-      // the oracle rebuilds AlmaXml.merge's serialized output in SQL —
-      // code-table translation inline (the tables ARE the spec,
-      // BatchUpdate.py:40-77), element order fixed by the merge sequence
-      "alma_update_merge" ->
-        """WITH r AS (SELECT CAST(c_custkey AS VARCHAR) AS barcode,
-          |  c_custkey AS ck,
-          |  ['Book','Issue','DVD','Thesis'][CAST(c_custkey % 4 AS INT) + 1] AS mt,
-          |  ['BOOK','ISSUE','DVD','THESIS'][CAST(c_custkey % 4 AS INT) + 1] AS mtc,
-          |  ['general circulation','non-circulating','WCat-ShortLoan'][CAST(c_custkey % 3 AS INT) + 1] AS pol,
-          |  ['0','1','30'][CAST(c_custkey % 3 AS INT) + 1] AS polc,
-          |  'ea-' || CAST(c_custkey % 10 AS VARCHAR) AS ea,
-          |  CASE WHEN c_custkey % 2 = 0
-          |    THEN 'cj-' || CAST(c_custkey % 5 AS VARCHAR) ELSE '' END AS cj
-          | FROM customer)
-          |SELECT barcode, ck,
-          | '<item link="https://api.example.org/items/' || barcode
-          | || '"><item_data><barcode>' || barcode
-          | || '</barcode><physical_material_type desc="' || mt || '">' || mtc
-          | || '</physical_material_type><chronology_i>2001</chronology_i>'
-          | || '<policy desc="' || pol || '">' || polc
-          | || '</policy><enumeration_a>' || ea || '</enumeration_a>'
-          | || CASE WHEN cj <> '' THEN '<chronology_j>' || cj || '</chronology_j>'
-          |    ELSE '' END
-          | || '</item_data></item>' AS put_body,
-          | 'https://api.example.org/items/' || barcode AS put_url
-          |FROM r ORDER BY ck""".stripMargin)
-    // the disk-round-trip and stream twins are bit-exact replays by
-    // construction, so they share their in-memory/batch twin's oracle
-    // verbatim
-    base +
-      ("sim_pq_adc_trained" -> base("sim_pq_adc")) +
-      ("sim_ivf_topk_partitioned" -> base("sim_ivf_topk")) +
-      ("text_stream_sample_weighted" -> base("text_sample_weighted")) +
-      ("ev_stream_funnel" -> base("ev_funnel")) +
-      ("ev_stream_coverage" -> base("ev_coverage")) +
-      ("ev_stream_interval_join" -> base("ev_interval_join")) +
-      ("ev_stream_attribution" -> base("ev_attribution")) +
-      ("ev_stream_retention" -> base("ev_retention")) +
-      ("ev_stream_agg_incremental" -> base("ev_agg_incremental")) +
-      ("ev_stream_cdc_apply" -> base("ev_cdc_apply")) +
-      // the merge-on-read apply converges to the same latest-wins face
-      ("ev_stream_cdc_mor" -> base("ev_cdc_apply")) +
-      ("text_decontaminate_bloom" -> base("text_decontaminate")) +
-      ("dedup_jaccard_prefix" -> base("dedup_jaccard")) +
-      ("dedup_jaccard_auto" -> base("dedup_jaccard")) +
-      ("ev_stream_transitions" -> base("ev_transitions")) +
-      ("ev_stream_top_paths" -> base("ev_top_paths")) +
-      // refresh lands the MV at the full corpus state, so the
-      // redirected aggregate answers q24's full-recompute oracle
-      ("q27_mv_refresh" -> base("q24_mv_rewrite")) +
-      ("ev_stream_histogram" -> base("ev_histogram")) +
-      ("ev_stream_seasonal" -> base("ev_seasonal")) +
-      ("ev_stream_ks" -> base("ev_ks_drift")) +
-      ("ev_stream_profile" -> base("ev_profile")) +
-      // optimize moves bytes, never rows — q22's source-preservation
-      // oracle verbatim
-      ("q29_optimize" -> base("q22_compact")) +
-      ("ev_stream_scd2_enrich" -> base("ev_scd2_lookup")) +
-      ("text_stream_decontaminate" -> base("text_decontaminate")) +
-      ("dedup_clusters_incremental" -> base("dedup_clusters")) +
-      ("text_stream_mixture_apply" -> base("text_mixture_apply"))
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, d) => n -> d.build }
+
+  lazy val oracleSql: Map[String, String] =
+    registry.map { case (n, d) => n -> d.oracle }
+
+  /** The declared names to run, sorted: all of them when `only` is empty,
+    * else `only`. An unknown name fails loudly: a typo that silently
+    * dropped a query would make a bench total look faster and leave a
+    * stale verify output behind. */
+  def select(only: Iterable[String]): Seq[String] = {
+    val unknown = only.filterNot(registry.contains).toSeq.distinct.sorted
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
+    (if (only.isEmpty) registry.keys else only).toSeq.distinct.sorted
   }
 }

@@ -1,6 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.compact
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,24 +12,10 @@ object Verify {
     // names restrict the dump to those queries (dev iteration only)
     require(args.length >= 2, "usage: Verify <sfDir> <outDir> [queryName...]")
     val sfDir = args(0); val outDir = args(1)
-    val only = args.drop(2).toSet
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty,
-      s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")} — " +
-        s"a typo here would leave stale outputs and report a stale PASS")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // Small-SF AQE right-sizing (see Bench.scala).
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // unknown names fail here: a typo would leave stale outputs and
+    // report a stale PASS
+    val names = SparkEntry.select(args.drop(2))
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Run queries CONCURRENTLY on a small thread pool. At sf0.01 each
     // query is dominated by per-job scheduling overhead, not compute, so
@@ -42,13 +31,10 @@ object Verify {
     // under interleaving, and memory-sink tables register per-catalog.
     // Names are sorted so the submission order is deterministic;
     // per-query failures are isolated and reported, never fatal.
-    val toRun = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .sortBy(_._1)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val futures = toRun.map { case (name, fn) =>
+    val futures = names.map { name =>
       scala.concurrent.Future {
         // the WHOLE body sits in the try: a failure anywhere (including
         // the stale-output delete — listFiles() can return null) must
@@ -64,8 +50,8 @@ object Verify {
             f.delete(); ()
           }
           if (target.exists()) rm(target)
-          fn(spark.newSession(), sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
+          SparkEntry.queries(name)(spark.newSession(), sfDir)
+            .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
@@ -74,21 +60,8 @@ object Verify {
     futures.foreach(f =>
       scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf))
     pool.shutdown()
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      compact(SparkEntry.oracleSql))
     spark.stop()
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.QueryDef
+
 /** Pins the WIDTH of the correctness gate itself. The r11/r12 incidents
   * were not wrong answers but silently-missing gate rows (a wall-clock
   * cutoff, then a schema regression that errored three queries out of
@@ -53,5 +55,21 @@ class GateIntegritySpec extends SparkSuite {
       assert(name.matches("[a-z0-9_]+"),
         s"query name '$name' is not a stable snake_case identifier")
     }
+  }
+
+  test("the registry rejects a repeated query name") {
+    val d = QueryDef("dup_query", (s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException](
+      QueryDef.index(Seq(d, d.copy(oracle = "SELECT 2"))))
+    assert(e.getMessage.contains("dup_query"))
+  }
+
+  test("selecting an unknown query name fails instead of dropping it") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.select(Seq("q01_agg_lineitem", "q01_agg_lineitme")))
+    assert(e.getMessage.contains("q01_agg_lineitme"))
+    assert(SparkEntry.select(Seq("q05_topk", "q01_agg_lineitem")) ==
+      Seq("q01_agg_lineitem", "q05_topk"))
+    assert(SparkEntry.select(Nil) == SparkEntry.queries.keys.toSeq.sorted)
   }
 }

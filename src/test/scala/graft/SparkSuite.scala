@@ -5,19 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test run. */
 object SparkSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(cpus = 4)
 }
 
 trait SparkSuite extends AnyFunSuite {

@@ -3,8 +3,9 @@
 # classes + the image's Spark jars — no sbt lock, so A/B subset benches can
 # run while sbt is busy and without sbt's JVM spin-up between runs.
 # Usage: [env vars] tools/bench.sh [mainClass] [args...]
-#   SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_GRAFT_BENCH_ONLY,
-#   SPARK_GRAFT_BENCH_OUT, SPARK_GRAFT_BENCH_PASSES as in Bench.scala.
+#   SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_ONLY, SPARK_GRAFT_BENCH_OUT,
+#   SPARK_GRAFT_BENCH_PASSES as in Bench.scala; SPARK_GRAFT_CPUS as in
+#   GraftSession.scala.
 set -euo pipefail
 MAIN="${1:-graft.Bench}"
 shift || true
