@@ -49,11 +49,18 @@ object Materialize {
     * derived from a still-held materialized frame is safe, but the
     * dropped frame itself must never be executed again. No-op for
     * reliable checkpoints (their files are managed by the checkpoint
-    * cleaner, and unpersist of an unpersisted RDD does nothing). */
+    * cleaner, and unpersist of an unpersisted RDD does nothing).
+    * Refuses any frame whose plan is not a single `LogicalRDD` leaf —
+    * a [[Materialize]] result, possibly under projections: a join of
+    * two materialized frames would otherwise release BOTH inputs'
+    * blocks while they are still live. */
   def drop(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
+    df.queryExecution.analyzed.collectLeaves() match {
+      case Seq(l: org.apache.spark.sql.execution.LogicalRDD) =>
         l.rdd.unpersist(blocking = false)
-      case _ => ()
+      case leaves => throw new IllegalArgumentException(
+        "Materialize.drop takes one materialized frame (a single " +
+          "LogicalRDD leaf); got leaves " +
+          leaves.map(_.nodeName).mkString(", "))
     }
 }

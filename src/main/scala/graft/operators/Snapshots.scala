@@ -435,6 +435,22 @@ object Snapshots {
     }
   }
 
+  /** The observed head's manifest rows for a verb that derives its
+    * content from them. EMPTY only when a racing publisher retracted
+    * the head between its resolution and this read — a retry-able
+    * conflict ([[retryOnConflict]]), not a usage error. */
+  private def observedGeneration(
+      spark: SparkSession,
+      tablePath: String,
+      observed: Long,
+      verb: String): Array[Row] = {
+    val gen = manifestFor(spark, tablePath, observed)
+    if (gen.isEmpty) throw new ConcurrentCommitException(
+      s"$verb: version $observed of $tablePath vanished between the " +
+        "head resolution and its read — a racing retraction; retry")
+    gen
+  }
+
   // ------------------------------------------------------------------
   // MANIFEST CHECKPOINT — the Delta `_last_checkpoint` shape: every
   // [[CheckpointIntervalConf]] commits, (version, commit_ts, parent)
@@ -873,10 +889,9 @@ object Snapshots {
     f.delete(new Path(s"$tablePath/$VersionsDir/gen-v$version.parquet"),
       false)
     f.delete(branchOverMarker(tablePath, version), false)
-    Seq(dvDir(tablePath, version), constraintsDir(tablePath, version),
-      colMapDir(tablePath, version), genColsDir(tablePath, version),
-      statsDir(tablePath, version), bloomDir(tablePath, version),
-      eqDir(tablePath, version))
+    (Seq(dvDir(tablePath, version), statsDir(tablePath, version),
+      bloomDir(tablePath, version), eqDir(tablePath, version)) ++
+      GovFamilies.map(_.dirAt(tablePath, version)))
       .foreach(d => f.delete(new Path(d), true))
   }
 
@@ -891,13 +906,8 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       version: Option[Long]): Seq[Option[Long]] =
-    version match {
-      case None => Seq(None, None, None)
-      case Some(v) =>
-        Seq(constraintsRoot(tablePath), colMapRoot(tablePath),
-          genColsRoot(tablePath))
-          .map(r => sidecarResolve(spark, r, v).map(_._1))
-    }
+    GovFamilies.map(g => version.flatMap(v =>
+      sidecarResolve(spark, g.root(tablePath), v).map(_._1)))
 
   /** The APPEND commit tail with publish-time reconciliation (see the
     * commit-class contract in the object scaladoc). Each lap's
@@ -2005,40 +2015,25 @@ object Snapshots {
         writeDvSet(spark, tablePath, keepFrom, pruned)
       }
     }
-    // the CHECK-constraint sidecar follows the same rule (no file
-    // pruning — constraints reference columns, not files)
-    sidecarResolve(spark, constraintsRoot(tablePath), keepFrom)
-      .foreach { case (cV, _) =>
-        if (cV < keepFrom)
-          writeConstraints(spark, tablePath, keepFrom,
-            constraintsAsOf(spark, tablePath, keepFrom))
-      }
-    // and the column mapping
-    sidecarResolve(spark, colMapRoot(tablePath), keepFrom)
-      .foreach { case (cV, _) =>
-        if (cV < keepFrom)
-          writeColMap(spark, tablePath, keepFrom,
-            colMapAsOf(spark, tablePath, keepFrom))
-      }
-    // and generated columns
-    sidecarResolve(spark, genColsRoot(tablePath), keepFrom)
-      .foreach { case (cV, _) =>
-        if (cV < keepFrom)
-          writeGenCols(spark, tablePath, keepFrom,
-            generatedColumnsAsOf(spark, tablePath, keepFrom))
-      }
+    // the write-governance families follow the same rule (no file
+    // pruning — they reference columns, not files)
+    GovFamilies.foreach { g =>
+      if (sidecarResolve(spark, g.root(tablePath), keepFrom)
+          .exists(_._1 < keepFrom))
+        g.carry(spark, tablePath, keepFrom, tablePath, keepFrom)
+    }
 
     // per-version sidecars ride their version: expired generations'
     // stats dirs and commit markers go with their data (retained
     // versions keep theirs; claims only ever move upward, so dropping
     // an old marker can never free a number for re-minting)
     droppedVersions.foreach { v =>
-      Seq(statsDir(tablePath, v), bloomDir(tablePath, v),
-        dvDir(tablePath, v), constraintsDir(tablePath, v),
-        colMapDir(tablePath, v), genColsDir(tablePath, v)).foreach { d =>
-        val sd = new Path(d)
-        if (f.exists(sd)) f.delete(sd, true)
-      }
+      (Seq(statsDir(tablePath, v), bloomDir(tablePath, v),
+        dvDir(tablePath, v)) ++ GovFamilies.map(_.dirAt(tablePath, v)))
+        .foreach { d =>
+          val sd = new Path(d)
+          if (f.exists(sd)) f.delete(sd, true)
+        }
       val mk = new Path(s"$tablePath/$CommitsDir/v$v")
       if (f.exists(mk)) f.delete(mk, false)
     }
@@ -2436,7 +2431,8 @@ object Snapshots {
             "files — pass partCol so the sync batches keep the layout")
     }
     val gens = resolveSidecars(spark, tablePath, observed, allowEq = true)
-    require(gens.dv.isEmpty && gens.colMap.isEmpty && gens.genCols.isEmpty,
+    require(gens.dv.isEmpty && !gens.gov.contains(ColMap) &&
+      !gens.gov.contains(GenCols),
       s"commitEqUpsert: $tablePath carries DV/column-mapping/" +
         "generated-column governance — the MOR lineage composes with " +
         "append faces and CHECK constraints only")
@@ -2523,7 +2519,8 @@ object Snapshots {
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         stored.getOrElse(readAsOf(spark, tablePath, version).schema))
     val gens = resolveSidecars(spark, tablePath, version, allowEq = true)
-    require(gens.dv.isEmpty && gens.colMap.isEmpty && gens.genCols.isEmpty,
+    require(gens.dv.isEmpty && !gens.gov.contains(ColMap) &&
+      !gens.gov.contains(GenCols),
       s"readMorAsOf: $tablePath carries DV/column-mapping/generated-" +
         "column governance — the MOR lineage composes with plain " +
         "append faces only")
@@ -2741,9 +2738,7 @@ object Snapshots {
     * actually present, however many verbs stack. */
   private[graft] final case class SidecarGens(
       dv: Option[(Long, String)],
-      colMap: Option[(Long, String)],
-      constraints: Option[(Long, String)],
-      genCols: Option[(Long, String)],
+      gov: Map[GovFamily[_], (Long, String)],
       eq: Option[(Long, String)] = None)
 
   private[graft] def resolveSidecars(
@@ -2787,9 +2782,7 @@ object Snapshots {
         "materialize a copy-on-write face")
     SidecarGens(
       fam(dvRoot(tablePath)),
-      fam(colMapRoot(tablePath)),
-      fam(constraintsRoot(tablePath)),
-      fam(genColsRoot(tablePath)),
+      GovFamilies.flatMap(g => fam(g.root(tablePath)).map(g -> _)).toMap,
       eqPick)
   }
 
@@ -2807,22 +2800,8 @@ object Snapshots {
   private def colMapOf(
       spark: SparkSession,
       gens: SidecarGens): Seq[(String, Option[String])] =
-    gens.colMap.map { case (_, dir) => colMapRead(spark, dir) }
+    gens.gov.get(ColMap).map { case (_, dir) => ColMap.read(spark, dir) }
       .getOrElse(Seq.empty)
-
-  /** One colmap sidecar dir's rows — memoized per published dir
-    * ([[memoizedMeta]]): the mapping is consulted by every SQL
-    * statement's loadTable (the colMapped guard) and by every read/DML
-    * verb, and the dir is immutable once published. */
-  private def colMapRead(
-      spark: SparkSession,
-      dir: String): Seq[(String, Option[String])] =
-    memoizedMeta(fs(spark, dir), new Path(dir), "colmap") {
-      spark.read.schema(colMapSchema).parquet(dir)
-        .collect().map(r => (r.getString(0),
-          if (r.isNullAt(1)) None else Some(r.getString(1))))
-        .sortBy(_._1).toSeq
-    }
 
   /** (file, part) rows + stored schema of ONE generation from a single
     * eager manifest read — the verbs that once called [[manifest]]
@@ -3040,10 +3019,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"deleteWhere: $tablePath has no committed versions"))
     requireNotEqGoverned(spark, tablePath, observed, "deleteWhere")
-    val gen = manifestFor(spark, tablePath, observed)
-    require(gen.nonEmpty,
-      s"deleteWhere: version $observed of $tablePath vanished between " +
-        "the head resolution and its read — a racing retraction; retry")
+    val gen = observedGeneration(spark, tablePath, observed, "deleteWhere")
     val fileRows = fileRowsOf(gen)
     val schemaJson = schemaJsonOf(gen).orNull
     val stored = schemaJsonOf(gen).map(j =>
@@ -3114,10 +3090,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"updateWhere: $tablePath has no committed versions"))
     requireNotEqGoverned(spark, tablePath, observed, "updateWhere")
-    val gen = manifestFor(spark, tablePath, observed)
-    require(gen.nonEmpty,
-      s"updateWhere: version $observed of $tablePath vanished between " +
-        "the head resolution and its read — a racing retraction; retry")
+    val gen = observedGeneration(spark, tablePath, observed, "updateWhere")
     val fileRows = fileRowsOf(gen)
     val partCol = dmlPartitionCol(fileRows, observed, tablePath,
       "updateWhere")
@@ -3691,10 +3664,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"mergeInto: $tablePath has no committed versions"))
     requireNotEqGoverned(spark, tablePath, observed, "mergeInto")
-    val gen = manifestFor(spark, tablePath, observed)
-    require(gen.nonEmpty,
-      s"mergeInto: version $observed of $tablePath vanished between " +
-        "the head resolution and its read — a racing retraction; retry")
+    val gen = observedGeneration(spark, tablePath, observed, "mergeInto")
     val fileRows = fileRowsOf(gen)
     val partCol = dmlPartitionCol(fileRows, observed, tablePath,
       "mergeInto")
@@ -3895,46 +3865,165 @@ object Snapshots {
   }
 
   // ------------------------------------------------------------------
-  // CHECK constraints — declarative row invariants enforced at ingest
+  // Write-governance sidecar families — what batch preparation bakes
+  // into a batch (CHECK constraints, generated columns, column mapping)
   // ------------------------------------------------------------------
 
-  private def constraintsRoot(tablePath: String): String =
-    s"$tablePath/_constraints"
+  /** One versioned WRITE-GOVERNANCE sidecar family: each
+    * `<table>/<dirName>/v<N>` holds the FULL governing set of generation
+    * N as (key, value) string rows — `value` decoded from a nullable
+    * string — resolved latest-at-or-below ([[sidecarResolve]]), so
+    * governance travels with the table, appends inherit without
+    * copying, and every face replays under exactly the sets it was
+    * written under. [[GovFamilies]] lists them; every verb that moves
+    * governance between versions iterates that list. Deletion vectors
+    * stay outside: they govern reads, not batch preparation, and
+    * vacuum prunes them to kept files. */
+  private[graft] final class GovFamily[V](
+      val dirName: String,
+      keyCol: String,
+      valCol: String,
+      decode: String => V) {
 
-  private def constraintsDir(tablePath: String, version: Long): String =
-    s"${constraintsRoot(tablePath)}/v$version"
+    def root(tablePath: String): String = s"$tablePath/$dirName"
 
-  private def constraintSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("name",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("expr",
-      org.apache.spark.sql.types.StringType)))
+    def dirAt(tablePath: String, version: Long): String =
+      s"${root(tablePath)}/v$version"
+
+    /** One published dir's rows, sorted by key — memoized per dir
+      * ([[memoizedMeta]]): every ingest into a governed table and every
+      * SQL statement's loadTable consult them, and a published dir is
+      * immutable. */
+    def read(spark: SparkSession, dir: String): Seq[(String, V)] =
+      memoizedMeta(fs(spark, dir), new Path(dir), dirName) {
+        import org.apache.spark.sql.types._
+        spark.read.schema(StructType(Seq(StructField(keyCol, StringType),
+            StructField(valCol, StringType))))
+          .parquet(dir).collect()
+          .map(r => (r.getString(0), decode(r.getString(1))))
+          .sortBy(_._1).toSeq
+      }
+
+    /** The set GOVERNING `version` — empty when none does. */
+    def asOf(
+        spark: SparkSession,
+        tablePath: String,
+        version: Long): Seq[(String, V)] =
+      sidecarResolve(spark, root(tablePath), version)
+        .map { case (_, dir) => read(spark, dir) }.getOrElse(Seq.empty)
+
+    def write(
+        spark: SparkSession,
+        tablePath: String,
+        version: Long,
+        set: Seq[(String, V)]): Unit =
+      writeMetaDir(spark, dirAt(tablePath, version),
+        Seq(keyCol -> false, valCol -> false),
+        set.map { case (k, v) => Seq[Any](k, v) })
+
+    /** The carry rule of every verb that publishes another version's
+      * face ([[rollback]], [[cloneTable]], [[fastForward]], [[vacuum]]'s
+      * re-materialization): `src`'s set governing `srcVersion` becomes
+      * `dst`'s at `dstVersion` when it is non-empty or `dst` already has
+      * this family — an EMPTY set then masks governance committed after
+      * the source face instead of inheriting it. */
+    def carry(
+        spark: SparkSession,
+        src: String,
+        srcVersion: Long,
+        dst: String,
+        dstVersion: Long): Unit = {
+      val set = asOf(spark, src, srcVersion)
+      if (set.nonEmpty || fs(spark, dst).exists(new Path(root(dst))))
+        write(spark, dst, dstVersion, set)
+    }
+  }
+
+  /** CHECK constraints: (name, exprSql). */
+  private val Constraints =
+    new GovFamily[String]("_constraints", "name", "expr", identity)
+
+  /** Generated columns: (name, exprSql). */
+  private val GenCols =
+    new GovFamily[String]("_gencols", "name", "expr", identity)
+
+  /** Column mapping: (physical, logical), `logical = None` a DROP
+    * tombstone (see [[colMapAsOf]]). */
+  private val ColMap = new GovFamily[Option[String]](
+    "_colmap", "physical", "logical", Option(_))
+
+  /** Every write-governance family — a new family is one entry here. */
+  private[graft] val GovFamilies: Seq[GovFamily[_]] =
+    Seq(Constraints, ColMap, GenCols)
+
+  /** What a metadata-only DDL verb changes at the version it mints: the
+    * stored schema (None keeps the head's) and the governance set it
+    * writes there (`govWrite(version)`). */
+  private final case class DdlChange(
+      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      govWrite: Long => Unit = _ => ())
+
+  /** The shared commit tail of the metadata-only DDL verbs (constraint,
+    * generated-column and column add/drop/rename): the observed head —
+    * refused by name when the table is empty — and its files, handed to
+    * `change` for the verb's checks; then the claim, the governance
+    * write and the derived publish that repoints the head's files
+    * verbatim. Returns the minted version. */
+  private def metadataDdl(
+      spark: SparkSession,
+      tablePath: String,
+      verb: String)(
+      change: (Long, Seq[(String, String, Option[Long])]) => DdlChange)
+      : Long = {
+    val observed = latestVersion(spark, tablePath).getOrElse(
+      throw new IllegalArgumentException(
+        s"$verb: $tablePath has no committed versions"))
+    val gen = observedGeneration(spark, tablePath, observed, verb)
+    val fileRows = fileRowsOf(gen)
+    val c = change(observed, fileRows)
+    val version = claimVersion(spark, tablePath, observed + 1L)
+    c.govWrite(version)
+    publishDerived(spark, tablePath, version, fileRows,
+      c.schema.fold(schemaJsonOf(gen).orNull)(_.json), None, observed,
+      verb)
+  }
 
   /** The CHECK constraints GOVERNING `version`, as (name, exprSql)
-    * pairs — the versioned sidecar family again ([[sidecarResolve]]):
-    * each `_constraints/v<N>` holds the full active set of its
-    * version, so constraints travel with the table, appends inherit,
-    * and every face replays with exactly the invariants it was
-    * written under. */
+    * pairs. */
   def constraintsAsOf(
       spark: SparkSession,
       tablePath: String,
       version: Long): Seq[(String, String)] =
-    sidecarResolve(spark, constraintsRoot(tablePath), version).map {
-      case (_, dir) =>
-        spark.read.schema(constraintSchema).parquet(dir)
-          .collect().map(r => (r.getString(0), r.getString(1)))
-          .sortBy(_._1).toSeq
-    }.getOrElse(Seq.empty)
+    Constraints.asOf(spark, tablePath, version)
 
-  private def writeConstraints(
+  /** The generated columns GOVERNING `version` as (name, exprSql)
+    * pairs. */
+  def generatedColumnsAsOf(
       spark: SparkSession,
       tablePath: String,
-      version: Long,
-      set: Seq[(String, String)]): Unit =
-    writeMetaDir(spark, constraintsDir(tablePath, version),
-      Seq("name" -> false, "expr" -> false),
-      set.map(c => Seq[Any](c._1, c._2)))
+      version: Long): Seq[(String, String)] =
+    GenCols.asOf(spark, tablePath, version)
+
+  /** The column mapping GOVERNING `version`: (physical, logical) pairs
+    * where `logical = None` is a DROP tombstone. The Iceberg field-id
+    * idea reduced to names: data files carry a column's PHYSICAL name
+    * forever (assigned at column birth), renames and drops only move
+    * the logical label in this sidecar — zero data rewritten, O(1)
+    * metadata per schema change on a 100-TB table. Every write
+    * translates logical→physical before touching parquet; every read
+    * translates back. A dropped column's physical name stays
+    * tombstoned so a later re-add can never resurrect old file data
+    * under the same name (re-adds are refused loudly — the field-id
+    * refinement would mint a fresh physical name instead). */
+  def colMapAsOf(
+      spark: SparkSession,
+      tablePath: String,
+      version: Long): Seq[(String, Option[String])] =
+    ColMap.asOf(spark, tablePath, version)
+
+  // ------------------------------------------------------------------
+  // CHECK constraints — declarative row invariants enforced at ingest
+  // ------------------------------------------------------------------
 
   /** Wrap a fresh batch in its governing CHECK constraints as an
     * `assert_true` filter that RIDES the write job — Delta's
@@ -3961,21 +4050,6 @@ object Snapshots {
     }.reduce(_ && _))
   }
 
-  /** The latest generation's manifest rows + stored schema JSON — the
-    * shared fixture of every METADATA-ONLY commit (deletes,
-    * constraint changes): the new version repoints these verbatim. */
-  private def headGeneration(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long)
-      : (Seq[(String, String, Option[Long])], String) = {
-    val gen = manifestFor(spark, tablePath, version)
-    require(gen.nonEmpty,
-      s"snapshot version $version of $tablePath is not in the manifest " +
-        "(never committed, or expired by vacuum)")
-    (fileRowsOf(gen), schemaJsonOf(gen).orNull)
-  }
-
   /** ALTER TABLE ADD CONSTRAINT: a metadata-only commit (parent files
     * repointed verbatim) that installs a named CHECK expression
     * enforced on every subsequent ingest ([[constraintGuard]] rides
@@ -3989,34 +4063,29 @@ object Snapshots {
       name: String,
       exprSql: String): Long = {
     require(name.nonEmpty, "addConstraint needs a constraint name")
-    val observed = latestVersion(spark, tablePath).getOrElse(
-      throw new IllegalArgumentException(
-        s"addConstraint: $tablePath has no committed versions"))
-    val active = constraintsAsOf(spark, tablePath, observed)
-    require(!active.exists(_._1 == name),
-      s"addConstraint: constraint '$name' already exists on $tablePath")
-    // validate against the LOGICAL row shape — governing generated
-    // columns materialize first (materialize-ONLY: rows from files
-    // older than the generator null-fill the stored column, so the
-    // ingest-time equality check would misfire here; the defining
-    // expression is the truth either way), so a constraint may
-    // reference generated columns even though older files never wrote
-    // them
-    val face = generatedColumnsAsOf(spark, tablePath, observed)
-      .foldLeft(readAsOf(spark, tablePath, observed)) {
-        case (d, (n, e)) => d.withColumn(n, expr(e))
-      }
-    val bad = face
-      .filter(expr(exprSql) === lit(false)).limit(1).collect()
-    require(bad.isEmpty,
-      s"addConstraint('$name'): existing rows of $tablePath violate " +
-        s"'$exprSql' — fix the data (or the expression) first")
-    val (fileRows, schemaJson) = headGeneration(spark, tablePath, observed)
-    val version = claimVersion(spark, tablePath, observed + 1L)
-    writeConstraints(spark, tablePath, version,
-      active :+ (name -> exprSql))
-    publishDerived(spark, tablePath, version, fileRows, schemaJson, None,
-      observed, "addConstraint")
+    metadataDdl(spark, tablePath, "addConstraint") { (observed, _) =>
+      val active = constraintsAsOf(spark, tablePath, observed)
+      require(!active.exists(_._1 == name),
+        s"addConstraint: constraint '$name' already exists on $tablePath")
+      // validate against the LOGICAL row shape — governing generated
+      // columns materialize first (materialize-ONLY: rows from files
+      // older than the generator null-fill the stored column, so the
+      // ingest-time equality check would misfire here; the defining
+      // expression is the truth either way), so a constraint may
+      // reference generated columns even though older files never
+      // wrote them
+      val face = generatedColumnsAsOf(spark, tablePath, observed)
+        .foldLeft(readAsOf(spark, tablePath, observed)) {
+          case (d, (n, e)) => d.withColumn(n, expr(e))
+        }
+      val bad = face
+        .filter(expr(exprSql) === lit(false)).limit(1).collect()
+      require(bad.isEmpty,
+        s"addConstraint('$name'): existing rows of $tablePath violate " +
+          s"'$exprSql' — fix the data (or the expression) first")
+      DdlChange(govWrite = Constraints.write(spark, tablePath, _,
+        active :+ (name -> exprSql)))
+    }
   }
 
   /** ALTER TABLE DROP CONSTRAINT — the metadata-only inverse. Past
@@ -4026,51 +4095,18 @@ object Snapshots {
   def dropConstraint(
       spark: SparkSession,
       tablePath: String,
-      name: String): Long = {
-    val observed = latestVersion(spark, tablePath).getOrElse(
-      throw new IllegalArgumentException(
-        s"dropConstraint: $tablePath has no committed versions"))
-    val active = constraintsAsOf(spark, tablePath, observed)
-    require(active.exists(_._1 == name),
-      s"dropConstraint: no constraint '$name' on $tablePath")
-    val (fileRows, schemaJson) = headGeneration(spark, tablePath, observed)
-    val version = claimVersion(spark, tablePath, observed + 1L)
-    writeConstraints(spark, tablePath, version,
-      active.filterNot(_._1 == name))
-    publishDerived(spark, tablePath, version, fileRows, schemaJson, None,
-      observed, "dropConstraint")
-  }
+      name: String): Long =
+    metadataDdl(spark, tablePath, "dropConstraint") { (observed, _) =>
+      val active = constraintsAsOf(spark, tablePath, observed)
+      require(active.exists(_._1 == name),
+        s"dropConstraint: no constraint '$name' on $tablePath")
+      DdlChange(govWrite = Constraints.write(spark, tablePath, _,
+        active.filterNot(_._1 == name)))
+    }
 
   // ------------------------------------------------------------------
   // Generated columns — declared once, materialized at every ingest
   // ------------------------------------------------------------------
-
-  private def genColsRoot(tablePath: String): String = s"$tablePath/_gencols"
-
-  private def genColsDir(tablePath: String, version: Long): String =
-    s"${genColsRoot(tablePath)}/v$version"
-
-  /** The generated columns GOVERNING `version` as (name, exprSql)
-    * pairs — same versioned-sidecar family as constraints. */
-  def generatedColumnsAsOf(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long): Seq[(String, String)] =
-    sidecarResolve(spark, genColsRoot(tablePath), version).map {
-      case (_, dir) =>
-        spark.read.schema(constraintSchema).parquet(dir)
-          .collect().map(r => (r.getString(0), r.getString(1)))
-          .sortBy(_._1).toSeq
-    }.getOrElse(Seq.empty)
-
-  private def writeGenCols(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long,
-      set: Seq[(String, String)]): Unit =
-    writeMetaDir(spark, genColsDir(tablePath, version),
-      Seq("name" -> false, "expr" -> false),
-      set.map(c => Seq[Any](c._1, c._2)))
 
   /** Materialize the governing generated columns into a fresh batch —
     * or, when the writer supplied the column itself, VALIDATE it
@@ -4105,20 +4141,16 @@ object Snapshots {
       name: String,
       exprSql: String): Long = {
     require(name.nonEmpty, "addGeneratedColumn needs a column name")
-    val observed = latestVersion(spark, tablePath).getOrElse(
-      throw new IllegalArgumentException(
-        s"addGeneratedColumn: $tablePath has no committed versions"))
-    storedSchema(spark, tablePath, observed).foreach(st =>
-      require(!st.fieldNames.contains(name),
-        s"addGeneratedColumn: '$name' already exists as a data column"))
-    val active = generatedColumnsAsOf(spark, tablePath, observed)
-    require(!active.exists(_._1 == name),
-      s"addGeneratedColumn: '$name' is already generated")
-    val (fileRows, schemaJson) = headGeneration(spark, tablePath, observed)
-    val version = claimVersion(spark, tablePath, observed + 1L)
-    writeGenCols(spark, tablePath, version, active :+ (name -> exprSql))
-    publishDerived(spark, tablePath, version, fileRows, schemaJson, None,
-      observed, "addGeneratedColumn")
+    metadataDdl(spark, tablePath, "addGeneratedColumn") { (observed, _) =>
+      storedSchema(spark, tablePath, observed).foreach(st =>
+        require(!st.fieldNames.contains(name),
+          s"addGeneratedColumn: '$name' already exists as a data column"))
+      val active = generatedColumnsAsOf(spark, tablePath, observed)
+      require(!active.exists(_._1 == name),
+        s"addGeneratedColumn: '$name' is already generated")
+      DdlChange(govWrite = GenCols.write(spark, tablePath, _,
+        active :+ (name -> exprSql)))
+    }
   }
 
   /** Stop generating `name` — already-written data keeps the column
@@ -4126,19 +4158,14 @@ object Snapshots {
   def dropGeneratedColumn(
       spark: SparkSession,
       tablePath: String,
-      name: String): Long = {
-    val observed = latestVersion(spark, tablePath).getOrElse(
-      throw new IllegalArgumentException(
-        s"dropGeneratedColumn: $tablePath has no committed versions"))
-    val active = generatedColumnsAsOf(spark, tablePath, observed)
-    require(active.exists(_._1 == name),
-      s"dropGeneratedColumn: no generated column '$name' on $tablePath")
-    val (fileRows, schemaJson) = headGeneration(spark, tablePath, observed)
-    val version = claimVersion(spark, tablePath, observed + 1L)
-    writeGenCols(spark, tablePath, version, active.filterNot(_._1 == name))
-    publishDerived(spark, tablePath, version, fileRows, schemaJson, None,
-      observed, "dropGeneratedColumn")
-  }
+      name: String): Long =
+    metadataDdl(spark, tablePath, "dropGeneratedColumn") { (observed, _) =>
+      val active = generatedColumnsAsOf(spark, tablePath, observed)
+      require(active.exists(_._1 == name),
+        s"dropGeneratedColumn: no generated column '$name' on $tablePath")
+      DdlChange(govWrite = GenCols.write(spark, tablePath, _,
+        active.filterNot(_._1 == name)))
+    }
 
   /** The shared ingest preparation every data-writing verb runs:
     * generated columns materialize/validate, CHECK constraints guard,
@@ -4156,47 +4183,6 @@ object Snapshots {
   // ------------------------------------------------------------------
   // Column mapping — RENAME/DROP COLUMN as pure metadata (field-ids)
   // ------------------------------------------------------------------
-
-  private def colMapRoot(tablePath: String): String = s"$tablePath/_colmap"
-
-  private def colMapDir(tablePath: String, version: Long): String =
-    s"${colMapRoot(tablePath)}/v$version"
-
-  private def colMapSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("physical",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("logical",
-      org.apache.spark.sql.types.StringType, nullable = true)))
-
-  /** The column mapping GOVERNING `version`: (physical, logical) pairs
-    * where `logical = None` is a DROP tombstone. The Iceberg field-id
-    * idea reduced to names: data files carry a column's PHYSICAL name
-    * forever (assigned at column birth), renames and drops only move
-    * the logical label in this sidecar — zero data rewritten, O(1)
-    * metadata per schema change on a 100-TB table. Every write
-    * translates logical→physical before touching parquet; every read
-    * translates back. A dropped column's physical name stays
-    * tombstoned so a later re-add can never resurrect old file data
-    * under the same name (re-adds are refused loudly — the field-id
-    * refinement would mint a fresh physical name instead). Same
-    * versioned-sidecar family as DVs/constraints: latest-at-or-below,
-    * re-materialized by rollback/clone, folded by vacuum. */
-  def colMapAsOf(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long): Seq[(String, Option[String])] =
-    sidecarResolve(spark, colMapRoot(tablePath), version).map {
-      case (_, dir) => colMapRead(spark, dir)
-    }.getOrElse(Seq.empty)
-
-  private def writeColMap(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long,
-      set: Seq[(String, Option[String])]): Unit =
-    writeMetaDir(spark, colMapDir(tablePath, version),
-      Seq("physical" -> false, "logical" -> false),
-      set.map(c => Seq[Any](c._1, c._2)))
 
   private def logicalToPhysical(
       cmap: Seq[(String, Option[String])]): Map[String, String] =
@@ -4277,34 +4263,29 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       from: String,
-      to: String): Long = {
-    val observed = latestVersion(spark, tablePath).getOrElse(
-      throw new IllegalArgumentException(
-        s"renameColumn: $tablePath has no committed versions"))
-    val stored = storedSchema(spark, tablePath, observed).getOrElse(
-      throw new IllegalArgumentException(
-        s"renameColumn: version $observed of $tablePath predates " +
-          "manifest-carried schemas — recommit first"))
-    require(stored.fieldNames.contains(from),
-      s"renameColumn: no column '$from' in ${stored.fieldNames.mkString(",")}")
-    require(!stored.fieldNames.contains(to),
-      s"renameColumn: column '$to' already exists")
-    val (fileRows, _) = headGeneration(spark, tablePath, observed)
-    require(!fileRows.exists(r => r._2 != null && r._2.startsWith(s"$from=")),
-      s"renameColumn: '$from' is a partition column — its fragments " +
-        "are path-encoded and cannot be relabeled in metadata")
-    val cmap = colMapAsOf(spark, tablePath, observed)
-    require(!cmap.exists(_._1 == to),
-      s"renameColumn: '$to' collides with an existing physical name")
-    val phys = logicalToPhysical(cmap).getOrElse(from, from)
-    val newMap = cmap.filterNot(_._1 == phys) :+ (phys -> Some(to))
-    val newSchema = org.apache.spark.sql.types.StructType(
-      stored.fields.map(f => if (f.name == from) f.copy(name = to) else f))
-    val version = claimVersion(spark, tablePath, observed + 1L)
-    writeColMap(spark, tablePath, version, newMap)
-    publishDerived(spark, tablePath, version, fileRows, newSchema.json,
-      None, observed, "renameColumn")
-  }
+      to: String): Long =
+    metadataDdl(spark, tablePath, "renameColumn") { (observed, fileRows) =>
+      val stored = storedSchema(spark, tablePath, observed).getOrElse(
+        throw new IllegalArgumentException(
+          s"renameColumn: version $observed of $tablePath predates " +
+            "manifest-carried schemas — recommit first"))
+      require(stored.fieldNames.contains(from),
+        s"renameColumn: no column '$from' in ${stored.fieldNames.mkString(",")}")
+      require(!stored.fieldNames.contains(to),
+        s"renameColumn: column '$to' already exists")
+      require(!fileRows.exists(r => r._2 != null && r._2.startsWith(s"$from=")),
+        s"renameColumn: '$from' is a partition column — its fragments " +
+          "are path-encoded and cannot be relabeled in metadata")
+      val cmap = colMapAsOf(spark, tablePath, observed)
+      require(!cmap.exists(_._1 == to),
+        s"renameColumn: '$to' collides with an existing physical name")
+      val phys = logicalToPhysical(cmap).getOrElse(from, from)
+      DdlChange(
+        Some(org.apache.spark.sql.types.StructType(stored.fields.map(f =>
+          if (f.name == from) f.copy(name = to) else f))),
+        ColMap.write(spark, tablePath, _,
+          cmap.filterNot(_._1 == phys) :+ (phys -> Some(to))))
+    }
 
   /** ALTER TABLE DROP COLUMN as a metadata-only commit: the field
     * leaves the stored logical schema (so scans never even read its
@@ -4314,32 +4295,27 @@ object Snapshots {
   def dropColumn(
       spark: SparkSession,
       tablePath: String,
-      name: String): Long = {
-    val observed = latestVersion(spark, tablePath).getOrElse(
-      throw new IllegalArgumentException(
-        s"dropColumn: $tablePath has no committed versions"))
-    val stored = storedSchema(spark, tablePath, observed).getOrElse(
-      throw new IllegalArgumentException(
-        s"dropColumn: version $observed of $tablePath predates " +
-          "manifest-carried schemas — recommit first"))
-    require(stored.fieldNames.contains(name),
-      s"dropColumn: no column '$name' in ${stored.fieldNames.mkString(",")}")
-    require(stored.fields.length > 1,
-      "dropColumn: cannot drop the last column")
-    val (fileRows, _) = headGeneration(spark, tablePath, observed)
-    require(!fileRows.exists(r => r._2 != null && r._2.startsWith(s"$name=")),
-      s"dropColumn: '$name' is a partition column — drop is undefined " +
-        "for path-encoded fragments")
-    val cmap = colMapAsOf(spark, tablePath, observed)
-    val phys = logicalToPhysical(cmap).getOrElse(name, name)
-    val newMap = cmap.filterNot(_._1 == phys) :+ (phys -> None)
-    val newSchema = org.apache.spark.sql.types.StructType(
-      stored.fields.filterNot(_.name == name))
-    val version = claimVersion(spark, tablePath, observed + 1L)
-    writeColMap(spark, tablePath, version, newMap)
-    publishDerived(spark, tablePath, version, fileRows, newSchema.json,
-      None, observed, "dropColumn")
-  }
+      name: String): Long =
+    metadataDdl(spark, tablePath, "dropColumn") { (observed, fileRows) =>
+      val stored = storedSchema(spark, tablePath, observed).getOrElse(
+        throw new IllegalArgumentException(
+          s"dropColumn: version $observed of $tablePath predates " +
+            "manifest-carried schemas — recommit first"))
+      require(stored.fieldNames.contains(name),
+        s"dropColumn: no column '$name' in ${stored.fieldNames.mkString(",")}")
+      require(stored.fields.length > 1,
+        "dropColumn: cannot drop the last column")
+      require(!fileRows.exists(r => r._2 != null && r._2.startsWith(s"$name=")),
+        s"dropColumn: '$name' is a partition column — drop is undefined " +
+          "for path-encoded fragments")
+      val cmap = colMapAsOf(spark, tablePath, observed)
+      val phys = logicalToPhysical(cmap).getOrElse(name, name)
+      DdlChange(
+        Some(org.apache.spark.sql.types.StructType(
+          stored.fields.filterNot(_.name == name))),
+        ColMap.write(spark, tablePath, _,
+          cmap.filterNot(_._1 == phys) :+ (phys -> None)))
+    }
 
   /** ALTER TABLE ADD COLUMN as a metadata-only commit: the field joins
     * the stored logical schema at the END (nullable by contract — a
@@ -4356,29 +4332,24 @@ object Snapshots {
       name: String,
       dataType: org.apache.spark.sql.types.DataType): Long = {
     require(name.nonEmpty, "addColumn needs a column name")
-    val observed = latestVersion(spark, tablePath).getOrElse(
-      throw new IllegalArgumentException(
-        s"addColumn: $tablePath has no committed versions"))
-    val stored = storedSchema(spark, tablePath, observed).getOrElse(
-      throw new IllegalArgumentException(
-        s"addColumn: version $observed of $tablePath predates " +
-          "manifest-carried schemas — recommit first"))
-    require(!stored.fieldNames.contains(name),
-      s"addColumn: '$name' already exists")
-    val cmap = colMapAsOf(spark, tablePath, observed)
-    require(!cmap.map(_._1).contains(name),
-      s"addColumn: '$name' collides with a renamed or dropped column's " +
-        "physical name — a tombstoned name cannot be re-added")
-    require(!generatedColumnsAsOf(spark, tablePath, observed)
-      .exists(_._1 == name),
-      s"addColumn: '$name' is a generated column")
-    val (fileRows, _) = headGeneration(spark, tablePath, observed)
-    val newSchema = org.apache.spark.sql.types.StructType(
-      stored.fields :+ org.apache.spark.sql.types.StructField(
-        name, dataType, nullable = true))
-    val version = claimVersion(spark, tablePath, observed + 1L)
-    publishDerived(spark, tablePath, version, fileRows, newSchema.json,
-      None, observed, "addColumn")
+    metadataDdl(spark, tablePath, "addColumn") { (observed, _) =>
+      val stored = storedSchema(spark, tablePath, observed).getOrElse(
+        throw new IllegalArgumentException(
+          s"addColumn: version $observed of $tablePath predates " +
+            "manifest-carried schemas — recommit first"))
+      require(!stored.fieldNames.contains(name),
+        s"addColumn: '$name' already exists")
+      require(!colMapAsOf(spark, tablePath, observed).map(_._1)
+        .contains(name),
+        s"addColumn: '$name' collides with a renamed or dropped column's " +
+          "physical name — a tombstoned name cannot be re-added")
+      require(!generatedColumnsAsOf(spark, tablePath, observed)
+        .exists(_._1 == name),
+        s"addColumn: '$name' is a generated column")
+      DdlChange(Some(org.apache.spark.sql.types.StructType(
+        stored.fields :+ org.apache.spark.sql.types.StructField(
+          name, dataType, nullable = true))))
+    }
   }
 
   /** Render a partition value the way Spark's writer renders it into a
@@ -5415,21 +5386,11 @@ object Snapshots {
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], dvSchema))
       writeDvSet(spark, tablePath, version, restored)
     }
-    // same restore rule for the CHECK-constraint sidecar: the rolled-
-    // back head is governed by the TARGET's invariants, not by
-    // constraint changes committed after it
-    if (fs(spark, tablePath).exists(new Path(constraintsRoot(tablePath))))
-      writeConstraints(spark, tablePath, version,
-        constraintsAsOf(spark, tablePath, toVersion))
-    // and for the column mapping: the restored head reads and writes
-    // under the TARGET's names, masking later renames/drops
-    if (fs(spark, tablePath).exists(new Path(colMapRoot(tablePath))))
-      writeColMap(spark, tablePath, version,
-        colMapAsOf(spark, tablePath, toVersion))
-    // and for generated columns
-    if (fs(spark, tablePath).exists(new Path(genColsRoot(tablePath))))
-      writeGenCols(spark, tablePath, version,
-        generatedColumnsAsOf(spark, tablePath, toVersion))
+    // same restore rule for the write-governance families: the rolled-
+    // back head reads, writes and validates under the TARGET's
+    // constraints, names and generators, not changes committed after it
+    GovFamilies.foreach(_.carry(spark, tablePath, toVersion, tablePath,
+      version))
     publishDerived(spark, tablePath, version, rows, schemaJson, ts,
       observed, "rollback")
   }
@@ -5469,17 +5430,9 @@ object Snapshots {
     // a clone of a deleted-from snapshot must not resurrect its rows
     dvSet(spark, srcTable, version).foreach(d =>
       writeDvSet(spark, dstTable, v, d))
-    // and so do the governing CHECK constraints — the fork starts life
-    // under the same invariants it was cut from
-    val srcConstraints = constraintsAsOf(spark, srcTable, version)
-    if (srcConstraints.nonEmpty)
-      writeConstraints(spark, dstTable, v, srcConstraints)
-    val srcColMap = colMapAsOf(spark, srcTable, version)
-    if (srcColMap.nonEmpty)
-      writeColMap(spark, dstTable, v, srcColMap)
-    val srcGen = generatedColumnsAsOf(spark, srcTable, version)
-    if (srcGen.nonEmpty)
-      writeGenCols(spark, dstTable, v, srcGen)
+    // and so does its write governance — the fork starts life under
+    // the same invariants, names and generators it was cut from
+    GovFamilies.foreach(_.carry(spark, srcTable, version, dstTable, v))
     publishRows(spark, dstTable, v, rows, schemaJson, None, None)
   }
 
@@ -5629,18 +5582,7 @@ object Snapshots {
     // published carries its own deletes and invariants)
     dvSet(spark, root, bHead).foreach(d =>
       writeDvSet(spark, tablePath, version, d))
-    val bCons = constraintsAsOf(spark, root, bHead)
-    if (bCons.nonEmpty || fs(spark, tablePath).exists(
-      new Path(constraintsRoot(tablePath))))
-      writeConstraints(spark, tablePath, version, bCons)
-    val bMap = colMapAsOf(spark, root, bHead)
-    if (bMap.nonEmpty || fs(spark, tablePath).exists(
-      new Path(colMapRoot(tablePath))))
-      writeColMap(spark, tablePath, version, bMap)
-    val bGen = generatedColumnsAsOf(spark, root, bHead)
-    if (bGen.nonEmpty || fs(spark, tablePath).exists(
-      new Path(genColsRoot(tablePath))))
-      writeGenCols(spark, tablePath, version, bGen)
+    GovFamilies.foreach(_.carry(spark, root, bHead, tablePath, version))
     val published = publishDerived(spark, tablePath, version, rows,
       schemaJson, ts, fork, "fastForward")
     writeFork(spark, tablePath, name, published)

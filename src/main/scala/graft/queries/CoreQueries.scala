@@ -2273,7 +2273,7 @@ private[graft] object CoreQueries {
     QueryDef("q53_snapshot_rename", (s, dir) => {
       // RENAME/DROP COLUMN as pure metadata (the field-id idea reduced
       // to names): files keep their PHYSICAL column names forever, a
-      // `_colmap` sidecar moves the logical label — zero bytes
+      // column-mapping sidecar moves the logical label — zero bytes
       // rewritten on a 100-TB table. v0 commits under "cents", v1
       // renames to value_cents, v2 APPENDS speaking the new name (the
       // write translates back to the old physical), v3 drops

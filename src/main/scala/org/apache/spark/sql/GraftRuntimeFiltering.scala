@@ -68,18 +68,19 @@ class GraftRuntimePruneScanBuilder(
   * side's broadcast already materialized (DPP reuses it; the filter
   * is free on the dim side). */
 object GraftRuntimePrunedScan {
-  /** Observability for the admission-shape question: every predicate
-    * name Spark hands to [[GraftRuntimePrunedScan.filter]] lands here
-    * (spec-pinned in GraftCatalogSpec). Range admission (`>`/`<` via
-    * the stats sidecar's min/max) stays UNWRITTEN until this queue
-    * ever shows Spark emitting such a shape: Spark's runtime V2
+  /** Observability for the admission-shape question: the distinct
+    * predicate names Spark hands to [[GraftRuntimePrunedScan.filter]]
+    * (spec-pinned in GraftCatalogSpec) — a set, so a long-lived driver
+    * holds one entry per shape, not one per runtime-filtered scan.
+    * Range admission (`>`/`<` via the stats sidecar's min/max) stays
+    * UNWRITTEN until this set ever shows Spark emitting such a shape: Spark's runtime V2
     * filtering is dynamic partition/file pruning over an EQUI-join's
     * key values — `InSubqueryExec` materialized as IN (or = for a
     * single value) — and a non-equi join plans no runtime filter at
     * all, so a range branch in [[GraftRuntimePrunedScan.extractIn]]
     * would be dead code guarding nothing. */
-  val observedFilterShapes =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]
+  val observedFilterShapes: java.util.Set[String] =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 }
 
 class GraftRuntimePrunedScan(

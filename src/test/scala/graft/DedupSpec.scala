@@ -555,6 +555,23 @@ class DedupSpec extends SparkSuite {
     } finally spark.conf.unset(Materialize.ReliableConf)
   }
 
+  test("Materialize.drop refuses a frame over two materialized leaves " +
+    "and releases neither; a projection of one releases it") {
+    import graft.functions.Materialize
+    val a = Materialize(spark.range(0, 10).toDF("id"))
+    val b = Materialize(spark.range(5, 20).toDF("id"))
+    val e = intercept[IllegalArgumentException] {
+      Materialize.drop(a.join(b, Seq("id")))
+    }
+    assert(e.getMessage.contains("single LogicalRDD leaf"))
+    // both inputs' blocks survived the refused drop
+    assert(a.count() == 10L && b.count() == 15L)
+    val c = Materialize(spark.range(0, 3).toDF("id"))
+    Materialize.drop(c.select((c("id") + 1).as("id")))
+    Materialize.drop(a)
+    Materialize.drop(b)
+  }
+
   test("incrementalComponents: star-collapsed fold equals the full " +
     "recompute — delta bridges two base components, isolated base " +
     "components survive via their self-loop stars") {

@@ -773,4 +773,33 @@ class GraftCatalogSpec extends SparkSuite {
         "Spark ever starts emitting range runtime filters, extractIn " +
         "can now justify a min/max admission leg")
   }
+
+  test("runtime-filter shapes stay bounded: repeated runtime-filtered " +
+    "scans record each distinct shape once") {
+    val (cat, root) = freshCatalog()
+    val fact = s"$root/storage/bdfact"; val dim = s"$root/storage/bddim"
+    Snapshots.init(spark, fact); Snapshots.init(spark, dim)
+    Snapshots.commitClustered(spark,
+      (1L to 800L).map(i => (i, i * 3L)).toDF("k", "v"),
+      fact, "k", numFiles = 8, append = false)
+    Snapshots.commit(spark,
+      (1L to 800L by 50L).map(i => (i, if (i <= 100L) "hot" else "cold"))
+        .toDF("k", "seg"), dim, append = false)
+    Catalog.register(spark, root, "bdfact", fact)
+    Catalog.register(spark, root, "bddim", dim)
+    val shapes = org.apache.spark.sql.GraftRuntimePrunedScan
+      .observedFilterShapes
+    shapes.clear()
+    (1 to 3).foreach { _ =>
+      val eq = spark.sql(
+        s"""SELECT CAST(sum(f.v) AS BIGINT) AS s
+           |FROM $cat.bdfact f JOIN $cat.bddim d ON f.k = d.k
+           |WHERE d.seg = 'hot'""".stripMargin)
+      assert(eq.collect().head.getLong(0) == 156L)
+    }
+    import scala.jdk.CollectionConverters._
+    assert(shapes.size <= 2 && shapes.asScala.toSet.subsetOf(Set("IN", "=")),
+      s"three runtime-filtered scans left ${shapes.asScala.toSeq} — " +
+        "one entry per distinct shape (IN, =), not one per scan")
+  }
 }

@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
-# Run a graft main class (default graft.Bench) straight from the compiled
-# classes + the image's Spark jars — no sbt lock, so A/B subset benches can
-# run while sbt is busy and without sbt's JVM spin-up between runs.
+# Run a graft main class (default graft.Bench) straight from this checkout's
+# compiled classes + $SPARK_HOME's Spark jars — no sbt lock, so A/B subset
+# benches can run while sbt is busy and without sbt's JVM spin-up between
+# runs, and a second checkout (e.g. of a parent commit) runs its own build.
 # Usage: [env vars] tools/bench.sh [mainClass] [args...]
 #   SPARK_GRAFT_SF_DIR, SPARK_GRAFT_BENCH_ONLY, SPARK_GRAFT_BENCH_OUT,
 #   SPARK_GRAFT_BENCH_PASSES as in Bench.scala; SPARK_GRAFT_CPUS as in
@@ -9,7 +10,8 @@
 set -euo pipefail
 MAIN="${1:-graft.Bench}"
 shift || true
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$ROOT/target/scala-2.13/classes:${SPARK_HOME:?set SPARK_HOME to the Spark install}/jars/*"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
