@@ -709,8 +709,10 @@ object Dedup {
             .observe(tObs, count(lit(1)).as("n")))
         val t = Option(tObs.get.apply("n"))
           .map(_.asInstanceOf[Long]).getOrElse(0L)
-        if (t == 0) trimming = false
-        else {
+        if (t == 0) {
+          Materialize.drop(trimmed) // empty: `done` never reads it
+          trimming = false
+        } else {
           done = done.unionByName(
             trimmed.select(col("node"), col("node").as("scc")))
           replaceNodes(Materialize(

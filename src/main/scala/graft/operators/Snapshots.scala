@@ -694,6 +694,13 @@ object Snapshots {
   private def schemaJsonOf(gen: Array[Row]): Option[String] =
     gen.find(!_.isNullAt(3)).map(_.getString(3))
 
+  /** [[schemaJsonOf]], decoded. */
+  private def storedSchemaOf(
+      gen: Array[Row]): Option[org.apache.spark.sql.types.StructType] =
+    schemaJsonOf(gen).map(j =>
+      org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+
   /** (file, part, rows) triples of an already-read generation. */
   private def fileRowsOf(
       gen: Array[Row]): Seq[(String, String, Option[Long])] =
@@ -798,9 +805,7 @@ object Snapshots {
     // join the table, parent rows null-fill), a replace's is the fresh
     // batch's alone. Persisted per generation so readers never
     // footer-merge.
-    val schema = schemaJsonOf(parentGen)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    val schema = storedSchemaOf(parentGen)
       .map(ps => mergeSchemas(ps, nullableTop(freshSchema)))
       .getOrElse(nullableTop(freshSchema))
     publishRows(spark, tablePath, version, parentRows ++ fresh,
@@ -1049,9 +1054,7 @@ object Snapshots {
           parentOfParent = headParent
           parentInterior = interior
           shadowWait = None
-          val schema = schemaJsonOf(headRows)
-            .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-              .asInstanceOf[org.apache.spark.sql.types.StructType])
+          val schema = storedSchemaOf(headRows)
             .map(ps => mergeSchemas(ps, nullableTop(freshSchema)))
             .getOrElse(nullableTop(freshSchema))
           // a relap after someone built on our retracted generation
@@ -1176,9 +1179,7 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       version: Long): Option[org.apache.spark.sql.types.StructType] =
-    schemaJsonOf(manifestFor(spark, tablePath, version))
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+    storedSchemaOf(manifestFor(spark, tablePath, version))
 
   /** Top-level nullable copy (parquet reads surface every column as
     * nullable; storing the schema that way keeps the manifest's word
@@ -2408,10 +2409,8 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"commitEqUpsert: $tablePath has no committed versions — " +
           "commit the base face first"))
-    val gen = manifestFor(spark, tablePath, observed)
-    require(gen.nonEmpty,
-      s"commitEqUpsert: version $observed of $tablePath vanished " +
-        "between the head resolution and its read — retry")
+    val gen = observedGeneration(spark, tablePath, observed,
+      "commitEqUpsert")
     val fileRows = fileRowsOf(gen)
     // the MOR lineage composes with hive partitioning: a partitioned
     // base face syncs `partitionBy(partCol)` batches (fragments follow
@@ -2436,9 +2435,7 @@ object Snapshots {
       s"commitEqUpsert: $tablePath carries DV/column-mapping/" +
         "generated-column governance — the MOR lineage composes with " +
         "append faces and CHECK constraints only")
-    val stored = schemaJsonOf(gen).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]).getOrElse(
+    val stored = storedSchemaOf(gen).getOrElse(
       throw new IllegalArgumentException(
         s"commitEqUpsert: version $observed of $tablePath carries no " +
           "stored schema — recommit the base first"))
@@ -2845,11 +2842,9 @@ object Snapshots {
     require(rows.nonEmpty,
       s"snapshot version $version of $tablePath is not in the manifest " +
         "(never committed, or expired by vacuum)")
-    val stored = schemaJsonOf(rows).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
     (rows.map(r => (r.getString(1),
-      if (r.isNullAt(2)) null else r.getString(2))).toSeq, stored)
+      if (r.isNullAt(2)) null else r.getString(2))).toSeq,
+      storedSchemaOf(rows))
   }
 
   /** See [[sidecarResolve]] — the deletion-vector instance. */
@@ -3015,31 +3010,84 @@ object Snapshots {
       tablePath: String,
       predicate: org.apache.spark.sql.Column,
       ts: Option[Long] = None): Long = {
-    val observed = latestVersion(spark, tablePath).getOrElse(
-      throw new IllegalArgumentException(
-        s"deleteWhere: $tablePath has no committed versions"))
-    requireNotEqGoverned(spark, tablePath, observed, "deleteWhere")
-    val gen = observedGeneration(spark, tablePath, observed, "deleteWhere")
-    val fileRows = fileRowsOf(gen)
-    val schemaJson = schemaJsonOf(gen).orNull
-    val stored = schemaJsonOf(gen).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val prior = dvSet(spark, tablePath, observed)
-    val l2p = logicalToPhysical(colMapAsOf(spark, tablePath, observed))
-    val base = fromPhysical(readFileRows(spark,
-      fileRows.map(r => (r._1, r._2)),
-      stored.map(physicalSchema(_, l2p)),
-      withMeta = true), l2p)
-    val live = prior.fold(base)(applyDv(base, _))
-    val fresh = live.filter(predicate)
+    val face = dmlFace(spark, tablePath, "deleteWhere")
+    val fresh = face.live(face.fileRows).filter(predicate)
       .select(col(DvFileCol).as("file"), col(DvPosCol).as("row_index"))
-    val version = claimVersion(spark, tablePath, observed + 1L)
-    val full = prior.fold(fresh)(p =>
+    val version = claimVersion(spark, tablePath, face.observed + 1L)
+    val full = face.prior.fold(fresh)(p =>
       p.select(col("file"), col("row_index")).unionByName(fresh))
     writeDvSet(spark, tablePath, version, full)
-    publishDerived(spark, tablePath, version, fileRows, schemaJson, ts,
-      observed, "deleteWhere")
+    publishDerived(spark, tablePath, version, face.fileRows,
+      face.schemaJson, ts, face.observed, "deleteWhere")
+  }
+
+  /** The observed face every row-level DML verb reads and derives its
+    * commit from: the head's manifest rows and stored schema from ONE
+    * read, its column mapping, and the deletion vectors governing it. */
+  private final case class DmlFace(
+      spark: SparkSession,
+      tablePath: String,
+      observed: Long,
+      fileRows: Seq[(String, String, Option[Long])],
+      schemaJson: String,
+      stored: Option[org.apache.spark.sql.types.StructType],
+      l2p: Map[String, String],
+      prior: Option[DataFrame]) {
+
+    /** The live rows of `rows` (deletion vectors applied), carrying the
+      * [[DvFileCol]]/[[DvPosCol]] row identity. */
+    def live(rows: Seq[(String, String, Option[Long])]): DataFrame = {
+      val base = fromPhysical(readFileRows(spark,
+        rows.map(r => (r._1, r._2)),
+        stored.map(physicalSchema(_, l2p)), withMeta = true), l2p)
+      prior.fold(base)(applyDv(base, _))
+    }
+
+    /** (dirty, clean) file rows against a normalized dirty-file set. */
+    def split(dirty: Set[String])
+        : (Seq[(String, String, Option[Long])],
+          Seq[(String, String, Option[Long])]) =
+      fileRows.partition(r => dirty.contains(normPath(r._1)))
+  }
+
+  /** Resolve a DML verb's [[DmlFace]] at the current head. A table with
+    * no committed versions or a tombstone-governed head refuses; a
+    * head retracted between its resolution and the read is the
+    * retry-able conflict of [[observedGeneration]]. */
+  private def dmlFace(
+      spark: SparkSession,
+      tablePath: String,
+      verb: String): DmlFace = {
+    val observed = latestVersion(spark, tablePath).getOrElse(
+      throw new IllegalArgumentException(
+        s"$verb: $tablePath has no committed versions"))
+    requireNotEqGoverned(spark, tablePath, observed, verb)
+    val gen = observedGeneration(spark, tablePath, observed, verb)
+    DmlFace(spark, tablePath, observed, fileRowsOf(gen),
+      schemaJsonOf(gen).orNull, storedSchemaOf(gen),
+      logicalToPhysical(colMapAsOf(spark, tablePath, observed)),
+      dvSet(spark, tablePath, observed))
+  }
+
+  /** The normalized set of files a live frame (or a frame derived from
+    * one, still carrying [[DvFileCol]]) draws its rows from. */
+  private def dirtyFilesOf(live: DataFrame): Set[String] =
+    live.select(col(DvFileCol)).distinct()
+      .collect().map(r => normPath(r.getString(0))).toSet
+
+  /** The predicate's file blast radius over the face: stats- then
+    * bloom-sidecar pruning drops provably-clean files before any data
+    * file opens ([[statsPrunedForDml]], [[bloomPrunedForDml]]), then
+    * one scan reads only the predicate's columns (+ row identity) with
+    * row-group stats skip. */
+  private def predicateDirtyFiles(
+      face: DmlFace,
+      predicate: org.apache.spark.sql.Column): Set[String] = {
+    val discovery = bloomPrunedForDml(face.spark, face.tablePath,
+      face.observed, statsPrunedForDml(face.spark, face.tablePath,
+        face.observed, face.fileRows, predicate), predicate)
+    if (discovery.isEmpty) Set.empty
+    else dirtyFilesOf(face.live(discovery).filter(predicate))
   }
 
   /** Row-level UPDATE as FILE-EXACT copy-on-write — the other half of
@@ -3086,46 +3134,16 @@ object Snapshots {
       "updateWhere: duplicate assignment for column " +
         assignments.groupBy(_._1).collect { case (c, as) if as.length > 1 => c }
           .mkString(", "))
-    val observed = latestVersion(spark, tablePath).getOrElse(
-      throw new IllegalArgumentException(
-        s"updateWhere: $tablePath has no committed versions"))
-    requireNotEqGoverned(spark, tablePath, observed, "updateWhere")
-    val gen = observedGeneration(spark, tablePath, observed, "updateWhere")
-    val fileRows = fileRowsOf(gen)
-    val partCol = dmlPartitionCol(fileRows, observed, tablePath,
-      "updateWhere")
-    val schemaJson = schemaJsonOf(gen).orNull
-    val stored = schemaJsonOf(gen).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val l2p = logicalToPhysical(colMapAsOf(spark, tablePath, observed))
-    val prior = dvSet(spark, tablePath, observed)
-    def liveWithMeta(rows: Seq[(String, String, Option[Long])]): DataFrame = {
-      val base = fromPhysical(readFileRows(spark,
-        rows.map(r => (r._1, r._2)),
-        stored.map(physicalSchema(_, l2p)), withMeta = true), l2p)
-      prior.fold(base)(applyDv(base, _))
-    }
-    // pass 1 — the predicate's file blast radius: stats-sidecar
-    // pruning drops provably-clean files before any data file opens
-    // ([[statsPrunedForDml]]), then the scan reads only the
-    // predicate's columns (+ row identity) with row-group stats skip
-    if (fileRows.isEmpty) return observed // an empty face updates to itself
-    val discovery = bloomPrunedForDml(spark, tablePath, observed,
-      statsPrunedForDml(spark, tablePath, observed, fileRows, predicate),
-      predicate)
-    if (discovery.isEmpty) return observed // skipping disproves a match
-    val dirtySet = liveWithMeta(discovery)
-      .filter(predicate)
-      .select(col(DvFileCol)).distinct()
-      .collect().map(r => normPath(r.getString(0))).toSet
-    if (dirtySet.isEmpty) return observed
-    val (dirtyRows, cleanRows) =
-      fileRows.partition(r => dirtySet.contains(normPath(r._1)))
+    val face = dmlFace(spark, tablePath, "updateWhere")
+    val partCol = dmlPartitionCol(face, "updateWhere")
+    // pass 1 — the predicate's file blast radius
+    val dirtySet = predicateDirtyFiles(face, predicate)
+    if (dirtySet.isEmpty) return face.observed
+    val (dirtyRows, cleanRows) = face.split(dirtySet)
     // pass 2 — rewrite exactly the dirty files
-    val dirtyLive = liveWithMeta(dirtyRows).drop(DvFileCol, DvPosCol)
+    val dirtyLive = face.live(dirtyRows).drop(DvFileCol, DvPosCol)
     val colType: Map[String, org.apache.spark.sql.types.DataType] =
-      stored.getOrElse(dirtyLive.schema)
+      face.stored.getOrElse(dirtyLive.schema)
         .fields.map(f => f.name -> f.dataType).toMap
     assignments.foreach { case (c, _) =>
       require(colType.contains(c),
@@ -3148,25 +3166,8 @@ object Snapshots {
     }
     val updated = dirtyLive.withColumn(predFlag, predicate)
       .select(outCols.toIndexedSeq: _*)
-    val version = claimVersion(spark, tablePath, observed + 1L)
-    val prepared = prepareBatch(spark, tablePath, Some(observed), updated)
-    val fresh = writeDmlFiles(spark, tablePath, observed, version,
-      prepared, partCol)
-    // the new version's DV sidecar: untouched files' entries survive,
-    // rewritten files' entries died physically with the rewrite — an
-    // empty survivor set still writes (it supersedes the parent's)
-    prior.foreach { p =>
-      val survivingFiles = p.select(col("file")).distinct().collect()
-        .map(_.getString(0))
-        .filter(f => !dirtySet.contains(normPath(f)))
-      writeDvSet(spark, tablePath, version,
-        if (survivingFiles.isEmpty) p.limit(0)
-        else p.filter(col("file").isin(survivingFiles.toIndexedSeq: _*)))
-    }
-    maintainIndexSidecars(spark, tablePath, observed, version,
-      cleanRows.map(_._1), fresh.map(_._1))
-    publishDerived(spark, tablePath, version, cleanRows ++ fresh,
-      schemaJson, ts, observed, "updateWhere")
+    rewriteCommit(face, partCol, dirtySet, cleanRows, updated, ts,
+      "updateWhere")
   }
 
   /** REPLACE WHERE — Delta's `replaceWhere` / the predicate-scoped
@@ -3190,22 +3191,9 @@ object Snapshots {
       df: DataFrame,
       predicate: org.apache.spark.sql.Column,
       ts: Option[Long] = None): Long = {
-    val observed = latestVersion(spark, tablePath).getOrElse(
-      throw new IllegalArgumentException(
-        s"commitReplaceWhere: $tablePath has no committed versions"))
-    requireNotEqGoverned(spark, tablePath, observed, "commitReplaceWhere")
-    val gen = manifestFor(spark, tablePath, observed)
-    require(gen.nonEmpty,
-      s"commitReplaceWhere: version $observed of $tablePath vanished " +
-        "between the head resolution and its read — retry")
-    val fileRows = fileRowsOf(gen)
-    val partCol = dmlPartitionCol(fileRows, observed, tablePath,
-      "commitReplaceWhere")
-    val schemaJson = schemaJsonOf(gen).orNull
-    val stored = schemaJsonOf(gen).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    stored.foreach { st =>
+    val face = dmlFace(spark, tablePath, "commitReplaceWhere")
+    val partCol = dmlPartitionCol(face, "commitReplaceWhere")
+    face.stored.foreach { st =>
       require(df.columns.sorted.sameElements(st.fieldNames.sorted),
         s"commitReplaceWhere: batch columns ${df.columns.sorted.mkString(",")} " +
           s"must match the stored face ${st.fieldNames.sorted.mkString(",")}")
@@ -3219,55 +3207,20 @@ object Snapshots {
       s"commitReplaceWhere: the batch carries rows NOT satisfying the " +
         "REPLACE WHERE predicate — the reload would not be idempotent; " +
         "widen the predicate or filter the batch")
-    val l2p = logicalToPhysical(colMapAsOf(spark, tablePath, observed))
-    val prior = dvSet(spark, tablePath, observed)
-    def liveWithMeta(rows: Seq[(String, String, Option[Long])]): DataFrame = {
-      val base = fromPhysical(readFileRows(spark,
-        rows.map(r => (r._1, r._2)),
-        stored.map(physicalSchema(_, l2p)), withMeta = true), l2p)
-      prior.fold(base)(applyDv(base, _))
-    }
-    // discovery: the predicate's file blast radius, sidecar-pruned
-    // before any data file opens
-    val dirtySet: Set[String] =
-      if (fileRows.isEmpty) Set.empty
-      else {
-        val discovery = bloomPrunedForDml(spark, tablePath, observed,
-          statsPrunedForDml(spark, tablePath, observed, fileRows,
-            predicate), predicate)
-        if (discovery.isEmpty) Set.empty
-        else liveWithMeta(discovery).filter(predicate)
-          .select(col(DvFileCol)).distinct()
-          .collect().map(r => normPath(r.getString(0))).toSet
-      }
-    val (dirtyRows, cleanRows) =
-      fileRows.partition(r => dirtySet.contains(normPath(r._1)))
-    val colOrder = stored.map(_.fieldNames.toSeq).getOrElse(
+    val dirtySet = predicateDirtyFiles(face, predicate)
+    val (dirtyRows, cleanRows) = face.split(dirtySet)
+    val colOrder = face.stored.map(_.fieldNames.toSeq).getOrElse(
       df.columns.toSeq)
     val survivors =
       if (dirtyRows.isEmpty) None
-      else Some(liveWithMeta(dirtyRows).drop(DvFileCol, DvPosCol)
+      else Some(face.live(dirtyRows).drop(DvFileCol, DvPosCol)
         .filter(!coalesce(predicate, lit(false)))
         .select(colOrder.map(col): _*))
     val replaced = survivors
       .map(_.unionByName(df.select(colOrder.map(col): _*)))
       .getOrElse(df.select(colOrder.map(col): _*))
-    val version = claimVersion(spark, tablePath, observed + 1L)
-    val prepared = prepareBatch(spark, tablePath, Some(observed), replaced)
-    val fresh = writeDmlFiles(spark, tablePath, observed, version,
-      prepared, partCol)
-    prior.foreach { p =>
-      val survivingFiles = p.select(col("file")).distinct().collect()
-        .map(_.getString(0))
-        .filter(f => !dirtySet.contains(normPath(f)))
-      writeDvSet(spark, tablePath, version,
-        if (survivingFiles.isEmpty) p.limit(0)
-        else p.filter(col("file").isin(survivingFiles.toIndexedSeq: _*)))
-    }
-    maintainIndexSidecars(spark, tablePath, observed, version,
-      cleanRows.map(_._1), fresh.map(_._1))
-    publishDerived(spark, tablePath, version, cleanRows ++ fresh,
-      schemaJson, ts, observed, "commitReplaceWhere")
+    rewriteCommit(face, partCol, dirtySet, cleanRows, replaced, ts,
+      "commitReplaceWhere")
   }
 
   /** The partition column a file-swapping DML commit must preserve:
@@ -3277,11 +3230,9 @@ object Snapshots {
     * across partitions — re-derive from the data). A MIXED layout
     * (partition evolution mid-flight) refuses: fragment-scoped
     * answers over it are undefined until [[optimizePartitioned]]. */
-  private def dmlPartitionCol(
-      fileRows: Seq[(String, String, Option[Long])],
-      version: Long,
-      tablePath: String,
-      verb: String): Option[String] = {
+  private def dmlPartitionCol(face: DmlFace, verb: String): Option[String] = {
+    val (fileRows, version, tablePath) =
+      (face.fileRows, face.observed, face.tablePath)
     if (fileRows.isEmpty || fileRows.forall(_._2 == null)) None
     else {
       require(fileRows.forall(_._2 != null),
@@ -3322,6 +3273,71 @@ object Snapshots {
     }
   }
 
+  /** The commit tail of a file-exact copy-on-write verb: `frame` (the
+    * rewritten dirty files' rows plus any fresh rows) lands as fresh
+    * files beside the verbatim `cleanRows`. Every sidecar the new
+    * version needs — its DV set, its stats/bloom indexes — is written
+    * BEFORE [[publishDerived]], so a refused publish retracts them with
+    * the generation. Returns the minted version. */
+  private def rewriteCommit(
+      face: DmlFace,
+      partCol: Option[String],
+      dirtySet: Set[String],
+      cleanRows: Seq[(String, String, Option[Long])],
+      frame: DataFrame,
+      ts: Option[Long],
+      verb: String): Long = {
+    val spark = face.spark
+    val tablePath = face.tablePath
+    val version = claimVersion(spark, tablePath, face.observed + 1L)
+    val prepared = prepareBatch(spark, tablePath, Some(face.observed), frame)
+    val fresh = writeDmlFiles(spark, tablePath, face.observed, version,
+      prepared, partCol)
+    // the new version's DV sidecar: untouched files' entries survive,
+    // rewritten files' entries died physically with the rewrite — an
+    // empty survivor set still writes (it supersedes the parent's)
+    face.prior.foreach { p =>
+      val survivingFiles = p.select(col("file")).distinct().collect()
+        .map(_.getString(0))
+        .filter(f => !dirtySet.contains(normPath(f)))
+      writeDvSet(spark, tablePath, version,
+        if (survivingFiles.isEmpty) p.limit(0)
+        else p.filter(col("file").isin(survivingFiles.toIndexedSeq: _*)))
+    }
+    maintainIndexSidecars(spark, tablePath, face.observed, version,
+      cleanRows.map(_._1), fresh.map(_._1))
+    publishDerived(spark, tablePath, version, cleanRows ++ fresh,
+      face.schemaJson, ts, face.observed, verb)
+  }
+
+  /** A function call in the UNRESOLVED face of a predicate: the Column
+    * DSL converts to unresolved function nodes ('and, '=, '>=…) while
+    * the SQL DML rule hands over RESOLVED typed trees — the DML
+    * pruners match both faces of each shape. */
+  private object Fn {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    def unapply(e: Expression): Option[(String, Seq[Expression])] =
+      e match {
+        case f: UnresolvedFunction if f.nameParts.length == 1 =>
+          Some((f.nameParts.head.toLowerCase(java.util.Locale.ROOT),
+            f.arguments))
+        case _ => None
+      }
+  }
+
+  /** The top-level AND conjuncts of a predicate, in either face. */
+  private def conjunctsOf(predicate: org.apache.spark.sql.Column)
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+    def walk(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => walk(l) ++ walk(r)
+      case Fn("and", Seq(l, r)) => walk(l) ++ walk(r)
+      case other => Seq(other)
+    }
+    walk(org.apache.spark.sql.GraftSqlShim.eagerExpression(predicate))
+  }
+
   /** STATS-PRUNE a DML verb's DISCOVERY pass: when a stats sidecar
     * describes the parent generation, files whose per-file [min, max]
     * intervals PROVABLY cannot contain a predicate-matching row drop
@@ -3345,32 +3361,14 @@ object Snapshots {
       predicate: org.apache.spark.sql.Column)
       : Seq[(String, String, Option[Long])] = {
     if (fileRows.isEmpty) return fileRows
-    if (colMapAsOf(spark, tablePath, version)
-      .exists { case (p, l) => !l.contains(p) }) return fileRows
+    if (mapsColumns(spark, tablePath, version)) return fileRows
     val sd = describingSidecarDir(spark, tablePath, "_stats", version)
       .getOrElse(return fileRows)
     val side = spark.read.parquet(sd)
     val statKeys = side.columns.filter(_.startsWith("min_"))
       .map(_.stripPrefix("min_")).toSet
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Attribute, EqualTo => CEq, Expression, GreaterThan => CGt, GreaterThanOrEqual => CGe, In => CIn, LessThan => CLt, LessThanOrEqual => CLe, Literal => CLit}
-    // the Column DSL converts to UNRESOLVED function nodes ('and, '=,
-    // '>=…) while the SQL DML rule hands over RESOLVED typed trees —
-    // match both faces of each shape
-    object Fn {
-      def unapply(e: Expression): Option[(String, Seq[Expression])] =
-        e match {
-          case f: UnresolvedFunction if f.nameParts.length == 1 =>
-            Some((f.nameParts.head.toLowerCase(java.util.Locale.ROOT),
-              f.arguments))
-          case _ => None
-        }
-    }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-      case Fn("and", Seq(l, r)) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo => CEq, Expression, GreaterThan => CGt, GreaterThanOrEqual => CGe, In => CIn, LessThan => CLt, LessThanOrEqual => CLe, Literal => CLit}
     def keyOf(e: Expression): Option[String] = e match {
       case u: UnresolvedAttribute if u.nameParts.length == 1 &&
         statKeys.contains(u.nameParts.head) => Some(u.nameParts.head)
@@ -3410,9 +3408,7 @@ object Snapshots {
         case Fn("in", k +: vs) if vs.nonEmpty => admitOne(CIn(k, vs))
         case _ => None
       }
-    val admits = conjuncts(
-      org.apache.spark.sql.GraftSqlShim.eagerExpression(predicate))
-      .flatMap(admitOne)
+    val admits = conjunctsOf(predicate).flatMap(admitOne)
     if (admits.isEmpty) return fileRows
     val admitted = filterSidecarToFiles(side, fileRows.map(_._1).toSet)
       .filter(admits.reduce(_ && _))
@@ -3459,27 +3455,12 @@ object Snapshots {
       predicate: org.apache.spark.sql.Column)
       : Seq[(String, String, Option[Long])] = {
     if (fileRows.isEmpty) return fileRows
-    if (colMapAsOf(spark, tablePath, version)
-      .exists { case (p, l) => !l.contains(p) }) return fileRows
+    if (mapsColumns(spark, tablePath, version)) return fileRows
     val bd = describingSidecarDir(spark, tablePath, "_bloom", version)
       .getOrElse(return fileRows)
     val keyCol = bloomRecordedKey(spark, bd).getOrElse(return fileRows)
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, Attribute, EqualTo => CEq, Expression, In => CIn, Literal => CLit}
-    object Fn {
-      def unapply(e: Expression): Option[(String, Seq[Expression])] =
-        e match {
-          case f: UnresolvedFunction if f.nameParts.length == 1 =>
-            Some((f.nameParts.head.toLowerCase(java.util.Locale.ROOT),
-              f.arguments))
-          case _ => None
-        }
-    }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-      case Fn("and", Seq(l, r)) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo => CEq, Expression, In => CIn, Literal => CLit}
     def isKey(e: Expression): Boolean = e match {
       case u: UnresolvedAttribute =>
         u.nameParts.length == 1 && u.nameParts.head == keyCol
@@ -3501,9 +3482,7 @@ object Snapshots {
     }
     // the FIRST point conjunct suffices (conjuncts intersect): a row
     // matching the whole predicate must match it
-    conjuncts(org.apache.spark.sql.GraftSqlShim
-      .eagerExpression(predicate))
-      .flatMap(pointValues).headOption match {
+    conjunctsOf(predicate).flatMap(pointValues).headOption match {
       case None => fileRows
       case Some(values) =>
         val admitted = values
@@ -3533,29 +3512,14 @@ object Snapshots {
       on: org.apache.spark.sql.Column)
       : Seq[(String, String, Option[Long])] = {
     if (fileRows.isEmpty) return fileRows
-    if (colMapAsOf(spark, tablePath, version)
-      .exists { case (p, l) => !l.contains(p) }) return fileRows
+    if (mapsColumns(spark, tablePath, version)) return fileRows
     val sd = describingSidecarDir(spark, tablePath, "_stats", version)
       .getOrElse(return fileRows)
     val side = spark.read.parquet(sd)
     val statKeys = side.columns.filter(_.startsWith("min_"))
       .map(_.stripPrefix("min_")).toSet
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction}
-    import org.apache.spark.sql.catalyst.expressions.{And => CAnd, EqualTo => CEq, Expression}
-    object Fn {
-      def unapply(e: Expression): Option[(String, Seq[Expression])] =
-        e match {
-          case f: UnresolvedFunction if f.nameParts.length == 1 =>
-            Some((f.nameParts.head.toLowerCase(java.util.Locale.ROOT),
-              f.arguments))
-          case _ => None
-        }
-    }
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case CAnd(l, r) => conjuncts(l) ++ conjuncts(r)
-      case Fn("and", Seq(l, r)) => conjuncts(l) ++ conjuncts(r)
-      case other => Seq(other)
-    }
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo => CEq, Expression}
     def sided(e: Expression): Option[(String, String)] = e match {
       // (alias, column) of a two-part attribute — the verbs' own
       // t./s. aliases, whichever way the equality was written
@@ -3573,9 +3537,8 @@ object Snapshots {
       case Fn("=" | "==", Seq(a, b)) => eqKey(CEq(a, b))
       case _ => None
     }
-    val key = conjuncts(
-      org.apache.spark.sql.GraftSqlShim.eagerExpression(on))
-      .flatMap(eqKey).find { case (tc, sc) =>
+    val key = conjunctsOf(on).flatMap(eqKey)
+      .find { case (tc, sc) =>
         statKeys.contains(tc) && source.columns.contains(sc)
       }
       .getOrElse(return fileRows)
@@ -3660,26 +3623,9 @@ object Snapshots {
       case u: MergeUpdateBySource => u: MergeClause
       case d: MergeDeleteBySource => d: MergeClause
     }
-    val observed = latestVersion(spark, tablePath).getOrElse(
-      throw new IllegalArgumentException(
-        s"mergeInto: $tablePath has no committed versions"))
-    requireNotEqGoverned(spark, tablePath, observed, "mergeInto")
-    val gen = observedGeneration(spark, tablePath, observed, "mergeInto")
-    val fileRows = fileRowsOf(gen)
-    val partCol = dmlPartitionCol(fileRows, observed, tablePath,
-      "mergeInto")
-    val schemaJson = schemaJsonOf(gen).orNull
-    val stored = schemaJsonOf(gen).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    val l2p = logicalToPhysical(colMapAsOf(spark, tablePath, observed))
-    val prior = dvSet(spark, tablePath, observed)
-    def liveWithMeta(rows: Seq[(String, String, Option[Long])]): DataFrame = {
-      val base = fromPhysical(readFileRows(spark,
-        rows.map(r => (r._1, r._2)),
-        stored.map(physicalSchema(_, l2p)), withMeta = true), l2p)
-      prior.fold(base)(applyDv(base, _))
-    }
+    val face = dmlFace(spark, tablePath, "mergeInto")
+    val partCol = dmlPartitionCol(face, "mergeInto")
+    val fileRows = face.fileRows
     // the sentinel marks "the left join FOUND a source row" without
     // guessing at a non-null source column — MERGE's matched test
     val src = source.withColumn(MergeSrcSentinel, lit(1)).alias("s")
@@ -3694,11 +3640,11 @@ object Snapshots {
       else {
         // target files whose stats interval misses the source's whole
         // key range cannot contain a match — prune the match scan
-        val matchScan = mergeSourcePruned(spark, tablePath, observed,
+        val matchScan = mergeSourcePruned(spark, tablePath, face.observed,
           fileRows, source, on)
         if (matchScan.isEmpty) Set.empty // stats disprove any match
         else {
-          val matchCounts = liveWithMeta(matchScan).alias("t")
+          val matchCounts = face.live(matchScan).alias("t")
             .join(src, on, "inner")
             .groupBy(col(DvFileCol), col(DvPosCol))
             .agg(count(lit(1)).as("n_matches"))
@@ -3708,8 +3654,7 @@ object Snapshots {
             s"mergeInto: a target row of $tablePath matches more than " +
               "one source row — the ANSI MERGE cardinality contract; " +
               "deduplicate the source on the ON keys first")
-          matchCounts.select(col(DvFileCol)).distinct()
-            .collect().map(r => normPath(r.getString(0))).toSet
+          dirtyFilesOf(matchCounts)
         }
       }
     // the NOT MATCHED BY SOURCE blast radius: files containing a
@@ -3723,27 +3668,24 @@ object Snapshots {
           case MergeDeleteBySource(c) => c.getOrElse(lit(true))
           case _ => lit(false)
         }.reduce(_ || _)
-        liveWithMeta(fileRows).alias("t")
+        dirtyFilesOf(face.live(fileRows).alias("t")
           .join(src, on, "left_anti")
-          .filter(anyCond)
-          .select(col(DvFileCol)).distinct()
-          .collect().map(r => normPath(r.getString(0))).toSet
+          .filter(anyCond))
       }
     val dirtySet = dirtyMatched ++ dirtyBySource
-    val (dirtyRows, cleanRows) =
-      fileRows.partition(r => dirtySet.contains(normPath(r._1)))
+    val (dirtyRows, cleanRows) = face.split(dirtySet)
     val colType: Map[String, org.apache.spark.sql.types.DataType] =
-      stored.map(_.fields.map(f => f.name -> f.dataType).toMap)
+      face.stored.map(_.fields.map(f => f.name -> f.dataType).toMap)
         .getOrElse(Map.empty)
     def castTo(c: String, v: org.apache.spark.sql.Column) =
       colType.get(c).map(v.cast).getOrElse(v)
-    val targetCols: Seq[String] = stored.map(_.fieldNames.toSeq)
+    val targetCols: Seq[String] = face.stored.map(_.fieldNames.toSeq)
       .getOrElse {
         require(fileRows.nonEmpty,
-          s"mergeInto: version $observed of $tablePath is empty and " +
-            "carries no stored schema — the insert face is unknowable")
+          s"mergeInto: version ${face.observed} of $tablePath is empty " +
+            "and carries no stored schema — the insert face is unknowable")
         fromPhysical(readFileRows(spark,
-          fileRows.take(1).map(r => (r._1, r._2)), None), l2p)
+          fileRows.take(1).map(r => (r._1, r._2)), None), face.l2p)
           .columns.toSeq
       }
     // pass 2 — rewrite the dirty files: left-join their live rows to
@@ -3751,7 +3693,7 @@ object Snapshots {
     val rewritten: Option[DataFrame] =
       if (dirtyRows.isEmpty) None
       else {
-        val withSentinel = liveWithMeta(dirtyRows).alias("t")
+        val withSentinel = face.live(dirtyRows).alias("t")
           .join(src, on, "left_outer")
         val isMatched = col(MergeSrcSentinel).isNotNull
         // first-match-wins per row set: matched rows walk the matched
@@ -3818,7 +3760,7 @@ object Snapshots {
       else {
         val unmatched =
           if (fileRows.isEmpty) src
-          else src.join(liveWithMeta(fileRows).alias("t"), on, "left_anti")
+          else src.join(face.live(fileRows).alias("t"), on, "left_anti")
         var decided: org.apache.spark.sql.Column = lit(false)
         val legs = inserts.map { case MergeInsert(cond, values) =>
           values.foreach { case (c, _) =>
@@ -3844,24 +3786,9 @@ object Snapshots {
     // file rewrites force a commit anyway
     val anythingToWrite = freshFrame.isDefined &&
       (dirtyRows.nonEmpty || inserted.exists(!_.isEmpty))
-    if (!anythingToWrite) return observed
-    val version = claimVersion(spark, tablePath, observed + 1L)
-    val prepared = prepareBatch(spark, tablePath, Some(observed),
-      freshFrame.get)
-    val fresh = writeDmlFiles(spark, tablePath, observed, version,
-      prepared, partCol)
-    prior.foreach { p =>
-      val survivingFiles = p.select(col("file")).distinct().collect()
-        .map(_.getString(0))
-        .filter(f => !dirtySet.contains(normPath(f)))
-      writeDvSet(spark, tablePath, version,
-        if (survivingFiles.isEmpty) p.limit(0)
-        else p.filter(col("file").isin(survivingFiles.toIndexedSeq: _*)))
-    }
-    maintainIndexSidecars(spark, tablePath, observed, version,
-      cleanRows.map(_._1), fresh.map(_._1))
-    publishDerived(spark, tablePath, version, cleanRows ++ fresh,
-      schemaJson, ts, observed, "mergeInto")
+    if (!anythingToWrite) return face.observed
+    rewriteCommit(face, partCol, dirtySet, cleanRows, freshFrame.get, ts,
+      "mergeInto")
   }
 
   // ------------------------------------------------------------------
@@ -4020,6 +3947,16 @@ object Snapshots {
       tablePath: String,
       version: Long): Seq[(String, Option[String])] =
     ColMap.asOf(spark, tablePath, version)
+
+  /** Does a rename/drop column mapping govern `version`? Sidecar
+    * columns and physical file columns keep their birth names, so the
+    * verbs that address them by name stand down (or refuse) under one. */
+  private[graft] def mapsColumns(
+      spark: SparkSession,
+      tablePath: String,
+      version: Long): Boolean =
+    colMapAsOf(spark, tablePath, version)
+      .exists { case (p, l) => !l.contains(p) }
 
   // ------------------------------------------------------------------
   // CHECK constraints — declarative row invariants enforced at ingest
@@ -4244,8 +4181,7 @@ object Snapshots {
     // identical to resolving at the head version (sidecar generations
     // never outlive their commit: a refused commit retracts its dirs)
     // without the manifest read a latestVersion() would cost
-    val governed = colMapAsOf(spark, tablePath, Long.MaxValue)
-    require(governed.forall { case (p, l) => l.contains(p) },
+    require(!mapsColumns(spark, tablePath, Long.MaxValue),
       s"$verb: a column rename/drop mapping governs $tablePath — " +
         "this verb addresses physical file columns by name and is not " +
         "mapping-aware yet; run it before the schema change or extend " +
@@ -4561,8 +4497,7 @@ object Snapshots {
       dimKeys: DataFrame,
       maxPointKeys: Int,
       files: Seq[String]): Option[Set[String]] = {
-    if (colMapAsOf(spark, tablePath, version)
-      .exists { case (p, l) => !l.contains(p) }) return None
+    if (mapsColumns(spark, tablePath, version)) return None
     val dimCol = dimKeys.columns.head
     val sd = describingSidecarDir(spark, tablePath, "_stats", version)
       .filter(d => statsSidecarKeys(spark, d).contains(keyCol))
@@ -4610,8 +4545,7 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       version: Long): Seq[String] = {
-    if (colMapAsOf(spark, tablePath, version)
-      .exists { case (p, l) => !l.contains(p) }) return Seq.empty
+    if (mapsColumns(spark, tablePath, version)) return Seq.empty
     val statsKeys = describingSidecarDir(spark, tablePath, "_stats",
       version).toSeq.flatMap(d => statsSidecarKeys(spark, d))
     val bloomKey = describingSidecarDir(spark, tablePath, "_bloom",
@@ -4952,9 +4886,7 @@ object Snapshots {
       version: Long,
       keptFiles: Seq[String],
       freshFiles: Seq[String]): Unit = {
-    val mapped = colMapAsOf(spark, tablePath, parent)
-      .exists { case (p, l) => !l.contains(p) }
-    if (mapped) return
+    if (mapsColumns(spark, tablePath, parent)) return
     val kept = keptFiles.toSet
     describingSidecarDir(spark, tablePath, "_stats", parent).foreach { dir =>
       val side = spark.read.parquet(dir)
@@ -5204,11 +5136,8 @@ object Snapshots {
     val head = latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"optimizePreserving: $tablePath has no committed versions"))
-    val rows = manifestFor(spark, tablePath, head)
-    require(rows.nonEmpty,
-      s"optimizePreserving: version $head of $tablePath vanished " +
-        "between the head resolution and its read — a racing " +
-        "retraction; retry")
+    val rows = observedGeneration(spark, tablePath, head,
+      "optimizePreserving")
     val f = fs(spark, tablePath)
     if (rows.forall(r => !r.isNullAt(2))) {
       // fragment key precedes '='; hive escaping applies to VALUES only
@@ -5946,11 +5875,7 @@ object Snapshots {
     require(to.nonEmpty,
       s"snapshot version $toVersion of $tablePath is not in the " +
         "manifest (never committed, or expired by vacuum)")
-    val stored = rows.filter(r => r.getLong(0) == toVersion &&
-      !r.isNullAt(3)).headOption.map(r =>
-      org.apache.spark.sql.types.DataType.fromJson(r.getString(3))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    (from, to, stored)
+    (from, to, storedSchemaOf(rows.filter(_.getLong(0) == toVersion)))
   }
 
   /** Row-level CDC feed between two versions, O(delta) — the

@@ -790,8 +790,7 @@ private[v2] object GraftSnapshotTable {
     // DV guard — DDL and DML verbs legitimately load a mapped table
     // (ALTER TABLE DROP COLUMN after a RENAME must plan) without ever
     // scanning it through the SQL face
-    val cmap = Snapshots.colMapAsOf(spark, root, version)
-    val colMapped = !cmap.forall { case (p, l) => l.contains(p) }
+    val colMapped = Snapshots.mapsColumns(spark, root, version)
     val parted = rows.filter(_._2 != null)
     // partition columns are path-encoded; Spark reconstructs them from
     // ONE basePath — the single commit root every file of a freshly

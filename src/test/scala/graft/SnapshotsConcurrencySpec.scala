@@ -208,6 +208,61 @@ class SnapshotsConcurrencySpec extends SparkSuite {
     } finally spark.conf.unset("graft.manifest.checkpointInterval")
   }
 
+  test("copy-on-write verbs racing appends under checkpoint rolls: " +
+    "updateWhere and commitReplaceWhere retry to the exact face") {
+    val tbl = freshTable()
+    spark.conf.set("graft.manifest.checkpointInterval", "4")
+    try {
+      Snapshots.commit(spark,
+        (1L to 8L).map(i => (i, s"base$i")).toDF("id", "v"),
+        tbl, append = false, ts = Some(0L))
+      val pool = Executors.newFixedThreadPool(2)
+      val gate = new CountDownLatch(1)
+      val fa = pool.submit(new Callable[Unit] {
+        def call(): Unit = {
+          gate.await(10, TimeUnit.SECONDS)
+          (1 to 6).foreach { i =>
+            Snapshots.retryOnConflict(maxAttempts = 12) {
+              Snapshots.commit(spark,
+                Seq((100L + i, s"x$i")).toDF("id", "v"), tbl,
+                append = true, ts = Some(50L))
+            }
+          }
+        }
+      })
+      // thread B: per round, update one base row and replace another
+      val fb = pool.submit(new Callable[Unit] {
+        def call(): Unit = {
+          gate.await(10, TimeUnit.SECONDS)
+          (1 to 3).foreach { i =>
+            Snapshots.retryOnConflict(maxAttempts = 12) {
+              Snapshots.updateWhere(spark, tbl, col("id") === i.toLong,
+                Seq("v" -> lit(s"u$i")))
+            }
+            Snapshots.retryOnConflict(maxAttempts = 12) {
+              Snapshots.commitReplaceWhere(spark, tbl,
+                Seq((4L + i, s"r$i")).toDF("id", "v"),
+                col("id") === 4L + i)
+            }
+          }
+        }
+      })
+      gate.countDown()
+      fa.get(300, TimeUnit.SECONDS); fb.get(300, TimeUnit.SECONDS)
+      pool.shutdown()
+      val expect: Set[String] =
+        ((1 to 3).map(i => s"u$i") ++ Seq("base4") ++
+          (1 to 3).map(i => s"r$i") ++ Seq("base8") ++
+          (1 to 6).map(i => s"x$i")).toSet
+      val head = Snapshots.latestVersion(spark, tbl).get
+      val rows = Snapshots.readAsOf(spark, tbl, head)
+        .select($"v").as[String].collect()
+      assert(rows.toSet == expect && rows.length == expect.size,
+        s"the race must land every append and every rewrite exactly " +
+          s"once, got ${rows.sorted.mkString(",")}")
+    } finally spark.conf.unset("graft.manifest.checkpointInterval")
+  }
+
   test("stale-observed append REBASES onto the actual head at publish " +
     "time — the racer that published first loses nothing") {
     val tbl = freshTable()

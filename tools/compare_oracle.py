@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Dev-only harness (not part of the library): mimic the driver's DuckDB
 oracle compare. Usage: compare_oracle.py <sfDir> <verifyOutDir> [name...]
-Extra names restrict the compare to those queries (dev iteration)."""
+Extra names restrict the compare to those queries (dev iteration).
+Exit status: 0 when every compared query passes, 1 on a failure or when
+nothing was compared, 2 on a name with no oracle."""
 import json
 import sys
 
@@ -65,7 +67,11 @@ def main(sf_dir, out_dir, only=()):
             print(f"PASS {name} ({len(exp)} rows)")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
-    return 1 if n_fail else 0
+    unknown = sorted(set(only) - oracle.keys())
+    if unknown:
+        print(f"no oracle for: {' '.join(unknown)}")
+        return 2
+    return 1 if n_fail or not n_pass else 0
 
 
 if __name__ == "__main__":
