@@ -126,13 +126,29 @@ object Description {
     val parsed = parseDescription(col(descCol))
     def existing(c: String): Column =
       if (df.columns.contains(c)) col(c) else lit("")
-    df.withColumn("__p", parsed)
-      .withColumn("Enum A", coalesce(col("__p.enumA"), existing("Enum A")))
-      .withColumn("Enum B", coalesce(col("__p.enumB"), existing("Enum B")))
-      .withColumn("Chron I", coalesce(col("__p.chronI"), existing("Chron I")))
-      .withColumn("Chron J", coalesce(col("__p.chronJ"), existing("Chron J")))
-      .withColumn("Pattern", col("__p.pattern"))
-      .drop("__p")
+    val fields = Seq(
+      "Enum A" -> coalesce(col("__p.enumA"), existing("Enum A")),
+      "Enum B" -> coalesce(col("__p.enumB"), existing("Enum B")),
+      "Chron I" -> coalesce(col("__p.chronI"), existing("Chron I")),
+      "Chron J" -> coalesce(col("__p.chronJ"), existing("Chron J")),
+      "Pattern" -> col("__p.pattern"))
+    // the struct is its own projection (evaluated once per row); the five
+    // fields then replace or append in one more
+    setColumns(df.withColumn("__p", parsed), fields, drop = Set("__p"))
+  }
+
+  /** `withColumn` for several columns in one projection (one analyzer
+    * pass): each replaces its namesake in place or is appended in the
+    * given order; columns in `drop` are left out. */
+  private[graft] def setColumns(
+      df: DataFrame,
+      cols: Seq[(String, Column)],
+      drop: Set[String] = Set.empty): DataFrame = {
+    val byName = cols.toMap
+    val kept = df.columns.toSeq.filterNot(drop.contains)
+    df.select(
+      kept.map(c => byName.get(c).fold(col(c))(_.as(c))) ++
+        cols.collect { case (n, c) if !kept.contains(n) => c.as(n) }: _*)
   }
 
   /** R2 — month/season canonicalization (BatchUpdate.py:319-325, :417-418):

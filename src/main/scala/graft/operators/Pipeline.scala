@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 import graft.model.{AlmaSchema, ColumnRegistry}
@@ -64,14 +65,21 @@ object Pipeline {
       // in AlmaConnector.update are not idempotent, and cache() alone is
       // best-effort — an evicted partition (or task retry during the
       // second routed write) would re-execute the HTTP calls. One parquet
-      // write gives the two filtered sinks a stable, re-readable input.
+      // write gives the two filtered sinks a stable, re-readable input,
+      // read back with the schema just written (no footer-merge job).
       val staging = CsvStage.stagedPath(current, "upd_") + ".staging"
-      AlmaConnector.update(CsvStage.read(spark, current), factory)
-        .write.mode("overwrite").parquet(staging)
-      val annotated = spark.read.parquet(staging)
+      val updated = AlmaConnector.update(CsvStage.read(spark, current), factory)
+      updated.write.mode("overwrite").parquet(staging)
+      val annotated = spark.read.schema(updated.schema).parquet(staging)
       val (ok, bad) = AlmaConnector.routeUpdateResult(annotated)
-      (Some(CsvStage.writeStage(ok, current, "suc_")),
+      val routed = (Some(CsvStage.writeStage(ok, current, "suc_")),
         Some(CsvStage.writeStage(bad, current, "err_")))
+      // only once both routed sinks have committed: the reference leaves
+      // nothing but suc_/err_ beside the user's files
+      val stagingPath = new Path(staging)
+      stagingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(stagingPath, true)
+      routed
     } else (None, None)
 
     Result(formatted, splitOut, suc, err)

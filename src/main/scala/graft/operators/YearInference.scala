@@ -14,9 +14,9 @@ import graft.operators.FillStage.noteAppend
   *
   *  - [[inferWindowed]] — declarative: `first/last(..., ignoreNulls)` over
   *    an MMS-ID-partitioned window plus a pure `when`-tree for the century
-  *    arithmetic. One shuffle (hash partition by group key), whole-stage
-  *    codegen, scales to any number of groups. Neighbor years are the
-  *    ORIGINAL values.
+  *    arithmetic. One shuffle (a hash partition by group key, or none when
+  *    the input is already partitioned on it), whole-stage codegen, scales
+  *    to any number of groups. Neighbor years are the ORIGINAL values.
   *
   *  - [[inferSequential]] — exact-fidelity: the reference mutates rows
   *    in place while scanning (BatchUpdate.py:380-411), so a later row's
@@ -46,10 +46,12 @@ object YearInference {
     (col("MMS ID") +: descKeys) ++ tieBreak.filter(df.columns.contains).map(col)
   }
 
-  /** W1 as a global sort (range partitioned, spillable). For pipelines that
-    * only need W2's group-scoped order, prefer
-    * `repartition($"MMS ID").sortWithinPartitions(...)` — one hash shuffle
-    * instead of a global range sort; W2 never crosses group boundaries. */
+  /** W1 as a global sort (range partitioned, spillable). A pipeline that
+    * also runs W2 should not pay two exchanges: range-partition on the
+    * group key first, so that the window's clustering and this sort's
+    * ordering both ride that one exchange (a range partitioning on
+    * `MMS ID` satisfies any ordering that starts with `MMS ID`), and sort
+    * on key columns computed once, as [[SplitStage]] does. */
   def naturalSort(df: DataFrame, tieBreak: Seq[String] = Seq("Barcode")): DataFrame =
     df.orderBy(sortKeys(df, tieBreak): _*)
 
@@ -156,23 +158,25 @@ object YearInference {
     val four = when(length(year) === 4, year)
     val needsFix = length(year) > 0 && length(year) < 4
     val fixed = fixChronICol(col(chronICol), year, col("__prev"), col("__next"))
-    df.withColumn("__yr", Description.leadingDigits(col(chronICol)))
-      .withColumn("__prev", last(four, ignoreNulls = true)
-        .over(w.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("__next", first(four, ignoreNulls = true)
-        .over(w.rowsBetween(1, Window.unboundedFollowing)))
-      .withColumn("__fixed", when(needsFix, fixed))
-      .withColumn("__needs", needsFix)
-      .withColumn(
-        notesCol,
-        when(col("__needs") && col("__fixed").isNull,
-          noteAppend(col(notesCol), lit("Err: Problem interpreting Chron I")))
-          .otherwise(col(notesCol)))
-      .withColumn(
-        chronICol,
-        when(col("__needs") && col("__fixed").isNotNull, col("__fixed"))
-          .otherwise(col(chronICol)))
-      .drop("__yr", "__prev", "__next", "__fixed", "__needs")
+    val (needs, fix) = (col("__needs"), col("__fixed"))
+    // one projection per barrier (each is one analyzer pass): the probe,
+    // the window (both frames share one spec, so one Window node), the
+    // fix, then the in-place rewrite of Notes and Chron I
+    val probed = df.withColumn("__yr", Description.leadingDigits(col(chronICol)))
+    val neighbours = Description.setColumns(probed, Seq(
+      "__prev" -> last(four, ignoreNulls = true)
+        .over(w.rowsBetween(Window.unboundedPreceding, -1)),
+      "__next" -> first(four, ignoreNulls = true)
+        .over(w.rowsBetween(1, Window.unboundedFollowing))))
+    val fixes = Description.setColumns(neighbours, Seq(
+      "__fixed" -> when(needsFix, fixed),
+      "__needs" -> needsFix))
+    Description.setColumns(fixes, Seq(
+      notesCol -> when(needs && fix.isNull,
+        noteAppend(col(notesCol), lit("Err: Problem interpreting Chron I")))
+        .otherwise(col(notesCol)),
+      chronICol -> when(needs && fix.isNotNull, fix).otherwise(col(chronICol))),
+      drop = Set("__yr", "__prev", "__next", "__fixed", "__needs"))
   }
 
   /** Exact-fidelity W2: per-group sequential scan with in-place updates,

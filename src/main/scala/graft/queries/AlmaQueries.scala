@@ -70,13 +70,16 @@ private[graft] object AlmaQueries {
         .when(col("event_type") === "purchase", lit("winter"))
         .when(col("event_type") === "signup", lit("spring-summer"))
         .otherwise(lit("june, nov. and december"))
-      val canon = oracleMonthSubs.foldLeft(raw) { case (c, (repl, pat)) =>
+      val canon = oracleMonthSubs.foldLeft(col("chron_raw")) { case (c, (repl, pat)) =>
         regexp_replace(c, "(?i)" + pat, repl)
       }
+      // sort on the raw key first and run the regex chain after: the
+      // range sampling job then reads only the scan, and the exchange
+      // supplies the parallelism
       t(s, dir, "events")
-        .transform(par(s))
-        .select(col("event_id"), raw.as("chron_raw"), canon.as("chron_canon"))
+        .select(col("event_id"), raw.as("chron_raw"))
         .orderBy(col("event_id"))
+        .select(col("event_id"), col("chron_raw"), canon.as("chron_canon"))
     },
       oracle = {
         val raw = """CASE WHEN event_type = 'click' THEN 'january-february'
@@ -230,17 +233,19 @@ private[graft] object AlmaQueries {
           concat(lit("ser.3 v."), (col("l_partkey") % 40).cast("string"),
             lit(" nos.1-2 (Jan-Feb 99)")))
         .otherwise(lit("unparseable description text"))
+      // sort on the raw keys first and parse after (narrow projections
+      // keep the order): the range sampling job then reads only the scan,
+      // and the exchange supplies the parallelism.
+      // (l_orderkey, l_linenumber) is NOT unique in the synthetic data;
+      // ties beyond Description are byte-identical rows, so this order is
+      // output-deterministic
       Description.withParsedDescription(
         t(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_linenumber"), desc.as("Description"))
-          .transform(par(s)))
+          .orderBy(col("l_orderkey"), col("l_linenumber"), col("Description")))
         .select(col("l_orderkey"), col("l_linenumber"), col("Description"),
           col("Enum A"), col("Enum B"), col("Chron I"), col("Chron J"),
           col("Pattern"))
-        // (l_orderkey, l_linenumber) is NOT unique in the synthetic data;
-        // ties beyond Description are byte-identical rows, so this order
-        // is output-deterministic
-        .orderBy(col("l_orderkey"), col("l_linenumber"), col("Description"))
     },
       // R1 oracle: the five synthesized description shapes are closed-form
       // in (l_partkey, l_orderkey, l_linenumber), so the expected parse is

@@ -1,7 +1,12 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** CSV item-file source/sink with the reference's stage-prefix naming
   * (S1/S2 — BatchUpdate.py:762-780 read, :782-816 write).
@@ -41,13 +46,54 @@ object CsvStage {
     dir + prefix + base
   }
 
-  /** S1 — header CSV scan, every column string-typed. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read
+  /** S1 — header CSV scan, every column string-typed. The header is read
+    * on the driver ([[headerSchema]]) and handed to the reader as its
+    * schema, so opening a stage file runs no Spark job; the inferring
+    * reader is the fallback when no file has a line. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val reader = spark.read
       .option("header", "true")
       // the item model is all-string; inference would coerce barcodes/IDs
       .option("inferSchema", "false")
-      .csv(path)
+    headerSchema(spark, path).fold(reader)(reader.schema).csv(path)
+  }
+
+  /** The all-string schema Spark's reader infers for `path` with
+    * `header = true`, built from the same pieces without a job: the first
+    * comment-free, non-empty line of the first non-empty data file
+    * (codec-aware), tokenized by univocity under the reader's parser
+    * settings and made unique by `makeSafeHeader`. `None` when `path` is
+    * not a plain file or a flat directory of data files, or when no file
+    * has a line. */
+  private def headerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(hadoopConf)
+    val files: Seq[FileStatus] =
+      if (!fs.exists(root)) Nil
+      else fs.getFileStatus(root) match {
+        case file if file.isFile => Seq(file)
+        case _ =>
+          val data = fs.listStatus(root).toSeq.filterNot { s =>
+            val n = s.getPath.getName
+            n.startsWith("_") || n.startsWith(".")
+          }
+          // a nested layout (partition directories) is the inferring reader's
+          if (data.exists(_.isDirectory)) Nil
+          else data.filter(_.getLen > 0).sortBy(_.getPath.getName)
+      }
+    val sqlConf = spark.sessionState.conf
+    val options = new CSVOptions(Map("header" -> "true"),
+      sqlConf.csvColumnPruning, sqlConf.sessionLocalTimeZone)
+    files.iterator
+      .flatMap(f => CSVUtils.readHeaderLine(f.getPath, options, hadoopConf))
+      .nextOption()
+      .map { line =>
+        val tokens = new CsvParser(options.asParserSettings).parseLine(line)
+        StructType(CSVUtils.makeSafeHeader(tokens, sqlConf.caseSensitiveAnalysis, options)
+          .map(StructField(_, StringType)))
+      }
+  }
 
   /** S1, bug-compatible dialect: naive split on `","`, no quoting — the
     * reference's `_readFile` (BatchUpdate.py:770-776). Needed to round-trip

@@ -1,7 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Pipeline
@@ -101,5 +104,81 @@ class PipelineSpec extends SparkSuite {
     // unmatched descriptions routed to the error file, not uploaded
     assert(err.filter(col("Pattern") === "N/A").count() ==
       splitOut.filter(col("Pattern") === "N/A").count())
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusAccess.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def fixtureText: String = {
+    val src = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/alma/fixture.csv"), "UTF-8")
+    try src.mkString finally src.close()
+  }
+
+  test("CsvStage.read: the header is read on the driver (no job) and gives " +
+    "Spark's inferred schema and rows") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-header").toFile.getAbsolutePath
+    def file(name: String, text: String): String = {
+      Files.writeString(Paths.get(s"$dir/$name"), text)
+      s"$dir/$name"
+    }
+    val multiPart = CsvStage.writeStage(
+      (1 to 40).map(i => (s"'99$i", s"'3$i", s"t, $i")).toDF("MMS ID", "Barcode", "title")
+        .repartition(3),
+      s"$dir/items.csv", "f_")
+    assert(new java.io.File(multiPart).list().count(_.startsWith("part-")) > 1)
+    val inputs = Seq(
+      "raw file" -> file("raw.csv", fixtureText),
+      "multi-part stage directory" -> multiPart,
+      "quoted comma in the header" ->
+        file("quoted.csv", "MMS ID,\"Title, sub\",Barcode\n1,\"a, b\",2\n"),
+      "duplicate and empty names" ->
+        file("dups.csv", "a,b,a,,c,B\n1,2,3,4,5,6\n"),
+      "leading blank line" -> file("blank.csv", "\n\nMMS ID,Barcode\n1,2\n3,4\n"))
+    inputs.foreach { case (what, path) =>
+      val (read, jobs) = jobsDuring {
+        val df = CsvStage.read(spark, path)
+        df.schema
+        df
+      }
+      assert(jobs == 0, s"$what: CsvStage.read ran $jobs job(s)")
+      val inferred = spark.read.option("header", "true").csv(path)
+      assert(read.schema == inferred.schema, s"$what: ${read.schema} != ${inferred.schema}")
+      assert(read.collect().map(_.toSeq).toSet == inferred.collect().map(_.toSeq).toSet, what)
+    }
+  }
+
+  test("pipeline: format -> split -> update launches at most 7 jobs and " +
+    "leaves only the routed files beside the input") {
+    val dir = Files.createTempDirectory("graft-pipe-jobs").toFile.getAbsolutePath
+    Files.writeString(Paths.get(s"$dir/items.csv"), fixtureText)
+    val (res, jobs) = jobsDuring {
+      Pipeline.run(
+        spark, s"$dir/items.csv",
+        Pipeline.StageFlags(format = true, split = true, update = true),
+        store = Some(() => new AlmaConnectorSpec.StubStore))
+    }
+    // format: write; split: range sampling, range map stage, write;
+    // update: staging write, suc_ write, err_ write
+    assert(jobs <= 7, s"$jobs jobs")
+    assert(new java.io.File(dir).list().sorted.toSeq ==
+      Seq("err_items.csv", "f_items.csv", "items.csv", "s_items.csv", "suc_items.csv"))
+    val total = CsvStage.read(spark, res.split.get).count()
+    assert(CsvStage.read(spark, res.success.get).count() +
+      CsvStage.read(spark, res.error.get).count() == total)
   }
 }

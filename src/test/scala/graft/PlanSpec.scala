@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{FormatStage, YearInference}
+import graft.operators.{FormatStage, SplitStage, YearInference}
 import graft.model.AlmaSchema
 
 /** Physical-plan regression checks: the properties that matter at 100 TB —
@@ -167,6 +167,29 @@ class PlanSpec extends SparkSuite {
     assert(countIn(p, "Exchange rangepartitioning") == 0, p)
     // the year probe regex is evaluated once per row, not re-inlined per use
     assert(countIn(p, "regexp_extract") <= 3, p)
+  }
+
+  test("split (windowed): one range exchange on MMS ID serves the window " +
+    "and the global sort — no hash exchange, one Sort") {
+    val path = getClass.getResource("/alma/fixture.csv").getPath
+    val p = SplitStage(graft.sources.CsvStage.read(spark, path))
+      .queryExecution.executedPlan.toString
+    assert(countIn(p, "Exchange rangepartitioning\\(MMS ID") == 1, p)
+    assert(countIn(p, "Exchange") == 1, p)
+    assert(countIn(p, "hashpartitioning") == 0, p)
+    assert(countIn(p, "Sort \\[") == 1, p)
+  }
+
+  test("alma_desc_parse / alma_chronj_norm: sorted on the raw keys with the " +
+    "regex work above the one range exchange — the sampling job never runs it") {
+    Seq("alma_desc_parse" -> "parse_description",
+      "alma_chronj_norm" -> "regexp_replace").foreach { case (name, work) =>
+      val p = plan(name)
+      assert(countIn(p, "Exchange") == 1, p)
+      assert(countIn(p, "Exchange rangepartitioning") == 1, p)
+      val (above, below) = p.linesIterator.toSeq.span(!_.contains("Exchange"))
+      assert(above.exists(_.contains(work)) && !below.exists(_.contains(work)), p)
+    }
   }
 
   test("minhash LSH: signature computed once, one shuffle to the band buckets") {
