@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** File-level data skipping via an explicit min/max manifest — the
@@ -26,6 +26,13 @@ import org.apache.spark.sql.functions._
   * table. The manifest build here is a one-pass aggregation over the
   * data (portable, engine-checkable); a production writer would fold
   * the same rows out of its commit statistics for free.
+  *
+  * This object is the ONE owner of the index row format — the stats
+  * row builder ([[statsRows]]), the bloom row builder ([[bloomRows]]),
+  * the key reader of each ([[statsKeys]], [[bloomKeys]]) and interval
+  * admission ([[admits]]). The standalone manifests here and the
+  * versioned `_stats`/`_bloom` sidecars [[Snapshots]] keeps per
+  * generation (its `IndexFamilies`) are the same rows.
   */
 object Skipping {
 
@@ -45,23 +52,112 @@ object Skipping {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** The manifest frame for the table at `tablePath`: one row per data
-    * file — (file, n_rows, min_<c>/max_<c> for each tracked column).
-    * One grouped aggregation keyed on `input_file_name()`; map-side
-    * partial aggregation reduces each file's task to a single row
-    * before the (tiny) shuffle. */
-  def buildManifest(
+  /** The STATS row format: one row per data file of `files` (data
+    * files or directories) — (file, n_rows, min_<k>/max_<k> for each
+    * key). One grouped aggregation keyed on `input_file_name()`;
+    * map-side partial aggregation reduces each file's task to a single
+    * row before the (tiny) shuffle. */
+  private[graft] def statsRows(
       spark: SparkSession,
-      tablePath: String,
-      statsCols: Seq[String]): DataFrame = {
-    require(statsCols.nonEmpty, "track at least one column")
-    val aggs = count(lit(1)).as("n_rows") +:
-      statsCols.flatMap(c =>
-        Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    spark.read.parquet(tablePath)
+      files: Seq[String],
+      keys: Seq[String]): DataFrame = {
+    require(keys.nonEmpty, "track at least one column")
+    val aggs = count(lit(1)).as("n_rows") +: keys.flatMap(k =>
+      Seq(min(col(k)).as(s"min_$k"), max(col(k)).as(s"max_$k")))
+    spark.read.parquet(files: _*)
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
   }
+
+  /** The BLOOM row format: one row per data file of `files` — (file,
+    * n_rows, bf, key). `bf` is a `BloomFilterAggregate` over
+    * `xxhash64(key)`, one grouped data pass, map-side combined; `key`
+    * records the indexed column so a reader never has to be told it
+    * ([[bloomKeys]]). */
+  private[graft] def bloomRows(
+      spark: SparkSession,
+      files: Seq[String],
+      keyCol: String,
+      sizing: BloomSizing): DataFrame = {
+    import org.apache.spark.sql.GraftSqlShim
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    val agg = GraftSqlShim.column(
+      new BloomFilterAggregate(
+        GraftSqlShim.expression(xxhash64(col(keyCol))),
+        Literal(sizing.expectedPerFile), Literal(sizing.bits))
+        .toAggregateExpression())
+    spark.read.parquet(files: _*)
+      .groupBy(input_file_name().as("file"))
+      .agg(count(lit(1)).as("n_rows"), agg.as("bf"))
+      .withColumn("key", lit(keyCol))
+  }
+
+  /** A bloom's sizing: bits by the standard `n·ln(1/fpp)/ln²2` from
+    * `expectedPerFile` (size for the real per-file row count — an
+    * undersized bloom only costs false positives, never misses). */
+  private[graft] final case class BloomSizing(
+      expectedPerFile: Long,
+      fpp: Double) {
+    require(expectedPerFile > 0, "expectedPerFile must be positive")
+    require(fpp > 0 && fpp < 1, "fpp must be in (0, 1)")
+    def bits: Long = math.max(64L, math.ceil(
+      expectedPerFile * math.log(1 / fpp) /
+        (math.log(2) * math.log(2))).toLong)
+  }
+
+  /** The sizing of every bloom built without an explicit one. */
+  private[graft] val DefaultSizing = BloomSizing(100000L, 0.01)
+
+  /** The keys a stats manifest dir carries intervals for: every
+    * `min_<k>` column with a matching `max_<k>`. Memoized per published
+    * dir ([[Snapshots.memoizedMeta]]). */
+  private[graft] def statsKeys(
+      spark: SparkSession,
+      dir: String): Seq[String] =
+    memoized(spark, dir, "statskeys") {
+      val cs = spark.read.parquet(dir).columns
+      cs.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
+        .filter(k => cs.contains(s"max_$k")).toSeq
+    }
+
+  /** The key columns a bloom manifest dir records, sorted — empty for a
+    * legacy manifest without the `key` column. A probe is sound only
+    * when this is exactly the probed column. Memoized per published dir,
+    * keyed by its status: a dir recreated at the same path re-reads. */
+  private[graft] def bloomKeys(
+      spark: SparkSession,
+      dir: String): Seq[String] =
+    memoized(spark, dir, "bloomkeys") {
+      val side = spark.read.parquet(dir)
+      if (!side.columns.contains("key")) Seq.empty
+      else side.select(col("key")).filter(col("key").isNotNull).collect()
+        .map(_.getString(0)).distinct.sorted.toSeq
+    }
+
+  private def memoized[T <: AnyRef](
+      spark: SparkSession,
+      dir: String,
+      tag: String)(compute: => T): T = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Snapshots.memoizedMeta(f, p, tag)(compute)
+  }
+
+  /** Interval admission on a stats row: can a file whose
+    * [min_<key>, max_<key>] interval is read off the row hold a value in
+    * [lo, hi]? `lo`/`hi` are values or columns. An all-null file (null
+    * bounds) never admits — a null comparison is never TRUE. */
+  private[graft] def admits(key: String, lo: Any, hi: Any): Column =
+    col(s"max_$key") >= lit(lo) && col(s"min_$key") <= lit(hi)
+
+  /** The manifest frame for the table at `tablePath` ([[statsRows]]
+    * over the table directory). */
+  def buildManifest(
+      spark: SparkSession,
+      tablePath: String,
+      statsCols: Seq[String]): DataFrame =
+    statsRows(spark, Seq(tablePath), statsCols)
 
   /** Build and persist the manifest beside the table (parquet at
     * `manifestPath`). Separate from the data so a scan planner can read
@@ -77,19 +173,14 @@ object Skipping {
 
   /** The file list whose [min, max] interval on `keyCol` intersects
     * [lo, hi] — a driver-side collect over the manifest (O(files),
-    * see object scaladoc). All-null files (min/max null) cannot match a
-    * range predicate and are pruned. */
+    * see object scaladoc). */
   def pruneFiles(
       manifest: DataFrame,
       keyCol: String,
       lo: Any,
       hi: Any): Seq[String] =
-    manifest
-      .filter(col(s"max_$keyCol") >= lit(lo) && col(s"min_$keyCol") <= lit(hi))
-      .select(col("file"))
-      .collect()
-      .map(_.getString(0))
-      .toSeq
+    manifest.filter(admits(keyCol, lo, hi))
+      .select(col("file")).collect().map(_.getString(0)).toSeq
 
   /** Per-file BLOOM membership manifest — the min/max statistics'
     * complement for HIGH-CARDINALITY POINT lookups on an UNCLUSTERED
@@ -98,106 +189,96 @@ object Skipping {
     * on this column), min/max pruning admits every file, but a
     * per-file bloom answers "can file F contain key = v"
     * probabilistically with NO false negatives — admitted ⊇ true
-    * files, the exact row filter clears the false positives. One
-    * grouped aggregation builds every file's bloom in a single data
-    * pass (`BloomFilterAggregate` over `xxhash64(key)`, map-side
-    * combined); bits sized by the standard `n·ln(1/fpp)/ln²2` from
-    * `expectedPerFile` (size for the real per-file row count — an
-    * undersized bloom only costs false positives, never misses). */
+    * files, the exact row filter clears the false positives. The rows
+    * are [[bloomRows]] over the table directory. */
   def writeBloomManifest(
       spark: SparkSession,
       tablePath: String,
       keyCol: String,
       manifestPath: String,
       expectedPerFile: Long = 100000L,
-      fpp: Double = 0.01): Unit = {
-    require(expectedPerFile > 0, "expectedPerFile must be positive")
-    require(fpp > 0 && fpp < 1, "fpp must be in (0, 1)")
-    import org.apache.spark.sql.GraftSqlShim
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val bits = math.max(64L, math.ceil(
-      expectedPerFile * math.log(1 / fpp) /
-        (math.log(2) * math.log(2))).toLong)
-    val agg = GraftSqlShim.column(
-      new BloomFilterAggregate(
-        GraftSqlShim.expression(xxhash64(col(keyCol))),
-        Literal(expectedPerFile), Literal(bits)).toAggregateExpression())
-    spark.read.parquet(tablePath)
-      .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_rows"), agg.as("bf"))
+      fpp: Double = 0.01): Unit =
+    bloomRows(spark, Seq(tablePath), keyCol,
+      BloomSizing(expectedPerFile, fpp))
       .coalesce(1)
       .write.mode("overwrite").parquet(manifestPath)
-  }
 
   /** Bloom-pruned POINT scan: the manifest admits only the files whose
-    * bloom might contain `value` — probed driver-side over the
-    * metadata-scale manifest with the same sketch implementation the
-    * aggregate serialized (`might_contain` as an EXPRESSION insists on
-    * a foldable bloom, which a per-file column is not; the manifest is
-    * O(files) rows either way, the same driver scale as
-    * [[pruneFiles]]). No false negatives by construction; the exact
-    * predicate clears false positives. Zero admitted files is an
-    * answer (empty frame with the table's schema). */
+    * bloom might contain `value` ([[pruneFilesPoint]]). No false
+    * negatives by construction; the exact predicate clears false
+    * positives. */
   def scanPoint(
       spark: SparkSession,
       tablePath: String,
       manifestPath: String,
       keyCol: String,
-      value: Any): DataFrame = {
-    val files = pruneFilesPoint(spark, manifestPath, value)
-    val schema = spark.read.parquet(tablePath).schema
-    val base =
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else spark.read.schema(schema).parquet(files: _*)
-    base.filter(col(keyCol) === lit(value))
-  }
+      value: Any): DataFrame =
+    faceOver(spark, tablePath, pruneFilesPoint(spark, manifestPath, value))
+      .filter(col(keyCol) === lit(value))
 
   /** The files a [[writeBloomManifest]] manifest admits for
     * `key = value`: Spark's own `xxhash64(value)` (computed by the
     * engine so seeds/encodings can never drift from the aggregate's
-    * inserts) probed against each file's deserialized sketch. The
-    * probe runs ON EXECUTORS (a deserialize-and-test UDF — the one
-    * shape `might_contain` as an expression refuses, since a per-file
-    * bloom column is not foldable) so the driver collects only the
-    * admitted file NAMES: per-file blooms are ~100 KB each, and a
-    * million-file manifest must never ship its sketch bytes to the
-    * driver. */
+    * inserts) probed by [[bloomAdmitted]]. */
   def pruneFilesPoint(
       spark: SparkSession,
       manifestPath: String,
-      value: Any): Seq[String] = {
-    val h = spark.range(1).select(xxhash64(lit(value))).head().getLong(0)
+      value: Any): Seq[String] =
+    bloomAdmitted(spark, manifestPath, hashesOf(spark, Seq(value)))
+
+  /** `xxhash64` of each of `values`, computed by the engine in one job. */
+  private[graft] def hashesOf(
+      spark: SparkSession,
+      values: Seq[Any]): Seq[Long] = {
+    val r = spark.range(1).select(values.map(v => xxhash64(lit(v))): _*)
+      .head()
+    values.indices.map(r.getLong)
+  }
+
+  /** The files of the bloom manifest at `dir` whose sketch might
+    * contain any of `hashes`. The probe runs ON EXECUTORS (a
+    * deserialize-and-test UDF — the one shape `might_contain` as an
+    * expression refuses, since a per-file bloom column is not foldable)
+    * so the driver collects only the admitted file NAMES: per-file
+    * blooms are ~100 KB each, and a million-file manifest must never
+    * ship its sketch bytes to the driver. */
+  private[graft] def bloomAdmitted(
+      spark: SparkSession,
+      dir: String,
+      hashes: Seq[Long]): Seq[String] = {
     val admits = udf { (bf: Array[Byte]) =>
-      org.apache.spark.util.sketch.BloomFilter
+      val sk = org.apache.spark.util.sketch.BloomFilter
         .readFrom(new java.io.ByteArrayInputStream(bf))
-        .mightContainLong(h)
+      hashes.exists(sk.mightContainLong)
     }
-    spark.read.parquet(manifestPath)
-      .filter(admits(col("bf")))
+    spark.read.parquet(dir).filter(admits(col("bf")))
       .select(col("file")).collect().map(_.getString(0)).toIndexedSeq
   }
 
   /** Manifest-pruned range scan: plan the parquet read over ONLY the
     * files whose stats admit `keyCol` ∈ [lo, hi], then apply the exact
-    * row filter (file stats are necessary, not sufficient). Zero
-    * matching files returns an empty frame with the table's schema —
-    * a selective miss is an answer, not an error. */
+    * row filter (file stats are necessary, not sufficient). */
   def scanRange(
       spark: SparkSession,
       tablePath: String,
       manifestPath: String,
       keyCol: String,
       lo: Any,
-      hi: Any): DataFrame = {
-    val manifest = spark.read.parquet(manifestPath)
-    val files = pruneFiles(manifest, keyCol, lo, hi)
+      hi: Any): DataFrame =
+    faceOver(spark, tablePath,
+      pruneFiles(spark.read.parquet(manifestPath), keyCol, lo, hi))
+      .filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
+
+  /** The table at `tablePath` read over exactly `files`. Zero files is
+    * an answer — an empty frame with the table's schema: a selective
+    * miss is not an error. */
+  private def faceOver(
+      spark: SparkSession,
+      tablePath: String,
+      files: Seq[String]): DataFrame = {
     val schema = spark.read.parquet(tablePath).schema
-    val base =
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else spark.read.schema(schema).parquet(files: _*)
-    base.filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).parquet(files: _*)
   }
 }

@@ -300,7 +300,6 @@ object Snapshots {
     * trips Spark's hidden-path filter (warning today, possibly an error
     * in a future release). */
   def manifest(spark: SparkSession, tablePath: String): DataFrame = {
-    manifestReads.incrementAndGet()
     recoverManifestSwap(spark, tablePath)
     // Assembled from PER-GENERATION reads, each served by the same
     // status-keyed memo [[manifestFor]] uses: a repeated full-history
@@ -523,28 +522,51 @@ object Snapshots {
   private def ckptPointerPath(tablePath: String): Path =
     new Path(s"$tablePath/$VersionsDir/_last_checkpoint")
 
+  /** The one codec of the table's VERSION POINTERS — a Long in a small
+    * file: `_last_checkpoint`, tags, the eq-fold intent and branch fork
+    * markers. An absent file reads None. A present one that does not
+    * parse, or vanishes under the read, throws — unless `lenient`, for
+    * the pointers that are accelerators or crash-recovery hints (the
+    * checkpoint pointer, the fold intent), which read it as None. */
+  private def readPointer(
+      f: org.apache.hadoop.fs.FileSystem,
+      p: Path,
+      lenient: Boolean): Option[Long] =
+    try {
+      if (!f.exists(p)) None
+      else {
+        val in = f.open(p)
+        val body =
+          try {
+            val buf = new Array[Byte](64)
+            val n = in.read(buf)
+            new String(buf, 0, math.max(n, 0), "UTF-8").trim
+          } finally in.close()
+        Some(body.toLong)
+      }
+    } catch {
+      case e: Throwable if lenient &&
+        (e.isInstanceOf[NumberFormatException] || isFileGone(e)) => None
+    }
+
+  /** [[readPointer]]'s writer: overwrite `p` with `version`. */
+  private def writePointer(
+      f: org.apache.hadoop.fs.FileSystem,
+      p: Path,
+      version: Long): Unit = {
+    val out = f.create(p, true)
+    try out.write(version.toString.getBytes("UTF-8"))
+    finally out.close()
+  }
+
   /** The `_last_checkpoint` pointer's target version, if a readable
     * pointer exists — a dangling or corrupt pointer answers None (the
     * reader falls back to the full scan, never fails). */
   private[graft] def lastCheckpointVersion(
       spark: SparkSession,
-      tablePath: String): Option[Long] = {
-    val f = fs(spark, tablePath)
-    val p = ckptPointerPath(tablePath)
-    try {
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        try {
-          val buf = new Array[Byte](64)
-          val n = in.read(buf)
-          new String(buf, 0, math.max(n, 0), "UTF-8").trim.toLongOption
-        } finally in.close()
-      }
-    } catch {
-      case e: Throwable if isFileGone(e) => None
-    }
-  }
+      tablePath: String): Option[Long] =
+    readPointer(fs(spark, tablePath), ckptPointerPath(tablePath),
+      lenient = true)
 
   /** Roll the whole timeline's (version, commit_ts, parent) into one
     * checkpoint file at the current head and repoint
@@ -571,9 +593,7 @@ object Snapshots {
     f.delete(dest, false) // re-checkpointing the same head is idempotent
     require(f.rename(tmp, dest),
       s"manifest checkpoint publish failed for $tablePath at v$cv")
-    val out = f.create(ckptPointerPath(tablePath), true)
-    try out.write(cv.toString.getBytes("UTF-8"))
-    finally out.close()
+    writePointer(f, ckptPointerPath(tablePath), cv)
     val dir = new Path(s"$tablePath/$VersionsDir")
     f.listStatus(dir)
       .filter(s => s.isFile && isCkptFile(s.getPath.getName) &&
@@ -708,24 +728,33 @@ object Snapshots {
       if (r.isNullAt(2)) null else r.getString(2),
       if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSeq
 
-  /** The files generation `version` ADDED relative to its recorded
-    * lineage parent — the reconciliation-safe "fresh files of this
-    * commit" (a `data/v<N>/` path filter breaks when [[publishAppend]]
-    * publishes a corrective lap under a higher version than the dir
-    * the batch was written to). A parent-less generation (first
-    * commit, blind replace) is wholly fresh; a derived replace's
+  /** Generation `version`'s recorded lineage parent, that parent's
+    * files, and the files `version` ADDED relative to it — the
+    * reconciliation-safe "fresh files of this commit" (a `data/v<N>/`
+    * path filter breaks when [[publishAppend]] publishes a corrective
+    * lap under a higher version than the dir the batch was written
+    * to; the pre-claim observed head breaks when the reconciliation
+    * REBASED the append onto a racer's head). A parent-less generation
+    * (first commit, blind replace) is wholly fresh; a derived replace's
     * parent files left the lineage, so subtracting them is a no-op.
     * Two single-generation reads (the version's, its parent's) — never
     * the history. */
-  private def freshFilesOf(
+  private final case class Lineage(
+      parent: Option[Long],
+      parentFiles: Set[String],
+      fresh: Seq[String])
+
+  private def lineageOf(
       spark: SparkSession,
       tablePath: String,
-      version: Long): Seq[String] = {
+      version: Long): Lineage = {
     val gen = manifestFor(spark, tablePath, version)
-    val parentFiles = parentOf(gen)
-      .map(p => manifestFor(spark, tablePath, p).map(_.getString(1)).toSet)
+    val parent = parentOf(gen)
+    val parentFiles = parent
+      .map(p => manifestFiles(spark, tablePath, p).toSet)
       .getOrElse(Set.empty[String])
-    gen.map(_.getString(1)).filterNot(parentFiles).toSeq
+    Lineage(parent, parentFiles,
+      gen.map(_.getString(1)).filterNot(parentFiles).toSeq)
   }
 
   /** Atomically claim the next free version number at or above `from`:
@@ -894,9 +923,8 @@ object Snapshots {
     f.delete(new Path(s"$tablePath/$VersionsDir/gen-v$version.parquet"),
       false)
     f.delete(branchOverMarker(tablePath, version), false)
-    (Seq(dvDir(tablePath, version), statsDir(tablePath, version),
-      bloomDir(tablePath, version), eqDir(tablePath, version)) ++
-      GovFamilies.map(_.dirAt(tablePath, version)))
+    (Seq(dvDir(tablePath, version), eqDir(tablePath, version)) ++
+      sidecarFamilies.map(_.dirAt(tablePath, version)))
       .foreach(d => f.delete(new Path(d), true))
   }
 
@@ -2029,8 +2057,7 @@ object Snapshots {
     // versions keep theirs; claims only ever move upward, so dropping
     // an old marker can never free a number for re-minting)
     droppedVersions.foreach { v =>
-      (Seq(statsDir(tablePath, v), bloomDir(tablePath, v),
-        dvDir(tablePath, v)) ++ GovFamilies.map(_.dirAt(tablePath, v)))
+      (dvDir(tablePath, v) +: sidecarFamilies.map(_.dirAt(tablePath, v)))
         .foreach { d =>
           val sd = new Path(d)
           if (f.exists(sd)) f.delete(sd, true)
@@ -2112,12 +2139,8 @@ object Snapshots {
     require(manifestFor(spark, tablePath, version).nonEmpty,
       s"tag '$name': version $version of $tablePath is not in the " +
         "manifest (never committed, or expired by vacuum)")
-    val f = fs(spark, tablePath)
-    val dir = new Path(tagsRoot(tablePath))
-    if (!f.exists(dir)) f.mkdirs(dir)
-    val out = f.create(new Path(s"${tagsRoot(tablePath)}/$name"), true)
-    try out.write(version.toString.getBytes("UTF-8"))
-    finally out.close()
+    writePointer(fs(spark, tablePath),
+      new Path(s"${tagsRoot(tablePath)}/$name"), version)
   }
 
   /** All (name, version) tags of the table — one directory listing
@@ -2127,14 +2150,9 @@ object Snapshots {
     val dir = new Path(tagsRoot(tablePath))
     if (!f.exists(dir)) Seq.empty
     else f.listStatus(dir).filter(_.isFile).toSeq.map { st =>
-      val in = f.open(st.getPath)
-      val body =
-        try {
-          val buf = new Array[Byte](32)
-          val n = in.read(buf)
-          new String(buf, 0, math.max(n, 0), "UTF-8").trim
-        } finally in.close()
-      st.getPath.getName -> body.toLong
+      st.getPath.getName -> readPointer(f, st.getPath, lenient = false)
+        .getOrElse(throw new java.io.FileNotFoundException(
+          s"tag ${st.getPath} vanished under its read"))
     }.sortBy(_._1)
   }
 
@@ -2188,12 +2206,6 @@ object Snapshots {
       (keepFrom, vacuum(spark, tablePath, keepFrom))
     }
   }
-
-  private def statsDir(tablePath: String, version: Long): String =
-    s"$tablePath/_stats/v$version"
-
-  private def bloomDir(tablePath: String, version: Long): String =
-    s"$tablePath/_bloom/v$version"
 
   // ------------------------------------------------------------------
   // Deletion vectors — row-level DELETE without rewriting data files
@@ -2630,18 +2642,8 @@ object Snapshots {
     // from, so a re-run whose head is the crashed fold's OWN replace
     // commit (parent == intent, not an eq generation) just FINISHES —
     // re-deriving from it would refuse on its own mid-lineage commit
-    val intentFrom: Option[Long] = {
-      val p = eqFoldIntent(tablePath)
-      if (!f.exists(p)) None
-      else {
-        val in = f.open(p)
-        try {
-          val buf = new Array[Byte](64)
-          val n = in.read(buf)
-          new String(buf, 0, math.max(n, 0), "UTF-8").trim.toLongOption
-        } finally in.close()
-      }
-    }
+    val intentFrom =
+      readPointer(f, eqFoldIntent(tablePath), lenient = true)
     val eqVs = eqAll.map(_._1).toSet
     val crashedFoldLanded = intentFrom.exists { from =>
       head > from && !eqVs.contains(head) &&
@@ -2650,9 +2652,7 @@ object Snapshots {
     val v =
       if (crashedFoldLanded) head
       else {
-        val out0 = f.create(eqFoldIntent(tablePath), true)
-        try out0.write(head.toString.getBytes("UTF-8"))
-        finally out0.close()
+        writePointer(f, eqFoldIntent(tablePath), head)
         val face = readMorAsOf(spark, tablePath, head, keyCols)
         // a partitioned MOR lineage folds through the partitioned
         // commit — the materialized face keeps its layout (and its
@@ -2691,11 +2691,16 @@ object Snapshots {
   // Combined per-verb resolution — one listing pass, one manifest read
   // ------------------------------------------------------------------
 
-  /** Instrumentation: sidecar-family directory listings and eager
-    * manifest reads issued since process start — `private[graft]` so
-    * the listing-budget spec pins "one read verb = one combined
-    * resolution pass" as a counted fact instead of a wall-clock guess.
-    * Monotone; tests snapshot-and-diff around a verb. */
+  /** Instrumentation: sidecar-family directory listings and manifest
+    * reads issued since process start — `private[graft]` so the
+    * listing-budget spec pins "one read verb = one combined resolution
+    * pass" as a counted fact instead of a wall-clock guess. A manifest
+    * read is one read of manifest FILES: a single generation
+    * ([[manifestFor]], memo hits included), a timeline
+    * ([[manifestMeta]]) or a generation pair ([[generationPair]]); a
+    * full-history [[manifest]] counts once per generation it
+    * assembles, nothing for itself. Monotone; tests snapshot-and-diff
+    * around a verb. */
   private[graft] val sidecarListings =
     new java.util.concurrent.atomic.AtomicLong
   private[graft] val manifestReads =
@@ -3362,11 +3367,9 @@ object Snapshots {
       : Seq[(String, String, Option[Long])] = {
     if (fileRows.isEmpty) return fileRows
     if (mapsColumns(spark, tablePath, version)) return fileRows
-    val sd = describingSidecarDir(spark, tablePath, "_stats", version)
+    val sd = describingSidecarDir(spark, tablePath, StatsIndex, version)
       .getOrElse(return fileRows)
-    val side = spark.read.parquet(sd)
-    val statKeys = side.columns.filter(_.startsWith("min_"))
-      .map(_.stripPrefix("min_")).toSet
+    val statKeys = StatsIndex.keys(spark, sd).toSet
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo => CEq, Expression, GreaterThan => CGt, GreaterThanOrEqual => CGe, In => CIn, LessThan => CLt, LessThanOrEqual => CLe, Literal => CLit}
     def keyOf(e: Expression): Option[String] = e match {
@@ -3382,10 +3385,9 @@ object Snapshots {
     // test dropping it is exact, not just conservative
     def admitOne(e: Expression): Option[org.apache.spark.sql.Column] =
       e match {
-        case CEq(k, l: CLit) => keyOf(k).map(c =>
-          col(s"min_$c") <= litCol(l) && col(s"max_$c") >= litCol(l))
-        case CEq(l: CLit, k) => keyOf(k).map(c =>
-          col(s"min_$c") <= litCol(l) && col(s"max_$c") >= litCol(l))
+        case CEq(k, l: CLit) =>
+          keyOf(k).map(c => Skipping.admits(c, litCol(l), litCol(l)))
+        case CEq(l: CLit, k) => admitOne(CEq(k, l))
         case CGt(k, l: CLit) => keyOf(k).map(c => col(s"max_$c") > litCol(l))
         case CGt(l: CLit, k) => keyOf(k).map(c => col(s"min_$c") < litCol(l))
         case CGe(k, l: CLit) => keyOf(k).map(c => col(s"max_$c") >= litCol(l))
@@ -3396,9 +3398,10 @@ object Snapshots {
         case CLe(l: CLit, k) => keyOf(k).map(c => col(s"max_$c") >= litCol(l))
         case CIn(k, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[CLit]) =>
           keyOf(k).map { c =>
-            vs.map(v => col(s"min_$c") <= litCol(v.asInstanceOf[CLit]) &&
-              col(s"max_$c") >= litCol(v.asInstanceOf[CLit]))
-              .reduce(_ || _)
+            vs.map { v =>
+              val l = litCol(v.asInstanceOf[CLit])
+              Skipping.admits(c, l, l)
+            }.reduce(_ || _)
           }
         case Fn("=" | "==", Seq(a, b)) => admitOne(CEq(a, b))
         case Fn(">", Seq(a, b)) => admitOne(CGt(a, b))
@@ -3410,33 +3413,9 @@ object Snapshots {
       }
     val admits = conjunctsOf(predicate).flatMap(admitOne)
     if (admits.isEmpty) return fileRows
-    val admitted = filterSidecarToFiles(side, fileRows.map(_._1).toSet)
-      .filter(admits.reduce(_ && _))
-      .select(col("file")).collect()
-      .map(r => normPath(r.getString(0))).toSet
+    val admitted = statsAdmitted(spark, sd, admits.reduce(_ && _))
     fileRows.filter(r => admitted.contains(normPath(r._1)))
   }
-
-  /** The `key` column a bloom sidecar dir records — memoized per
-    * directory through [[memoizedMeta]], because the read is a (tiny)
-    * Spark job and the probe sits on hot paths (point scans,
-    * runtime-filter admission, DML discovery, loadTable). The
-    * FileStatus in the memo key closes the r20-advice hole a
-    * path-only key left open: dropping a table directory and
-    * re-initializing the SAME path restarts versions at 0, recreating
-    * e.g. `_bloom/v0` with a DIFFERENT key — under a path-only key
-    * the stale entry would let admission probe sketches built over
-    * another column, a silent false prune. The recreated dir's status
-    * differs, so it re-reads. */
-  private def bloomRecordedKey(
-      spark: SparkSession,
-      dir: String): Option[String] =
-    memoizedMeta(fs(spark, dir), new Path(dir), "bloomkey") {
-      val side = spark.read.parquet(dir)
-      if (!side.columns.contains("key")) None
-      else side.select(col("key")).limit(1).collect()
-        .headOption.map(_.getString(0))
-    }
 
   /** [[statsPrunedForDml]]'s point-lookup sibling: when a BLOOM
     * sidecar describes the parent generation and the predicate carries
@@ -3456,9 +3435,10 @@ object Snapshots {
       : Seq[(String, String, Option[Long])] = {
     if (fileRows.isEmpty) return fileRows
     if (mapsColumns(spark, tablePath, version)) return fileRows
-    val bd = describingSidecarDir(spark, tablePath, "_bloom", version)
+    val bd = describingSidecarDir(spark, tablePath, BloomIndex, version)
       .getOrElse(return fileRows)
-    val keyCol = bloomRecordedKey(spark, bd).getOrElse(return fileRows)
+    val keyCol = BloomIndex.keys(spark, bd).headOption
+      .getOrElse(return fileRows)
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo => CEq, Expression, In => CIn, Literal => CLit}
     def isKey(e: Expression): Boolean = e match {
@@ -3485,9 +3465,8 @@ object Snapshots {
     conjunctsOf(predicate).flatMap(pointValues).headOption match {
       case None => fileRows
       case Some(values) =>
-        val admitted = values
-          .flatMap(v => Skipping.pruneFilesPoint(spark, bd, v))
-          .map(normPath).toSet
+        val admitted = Skipping.bloomAdmitted(spark, bd,
+          Skipping.hashesOf(spark, values)).map(normPath).toSet
         fileRows.filter(r => admitted.contains(normPath(r._1)))
     }
   }
@@ -3513,11 +3492,9 @@ object Snapshots {
       : Seq[(String, String, Option[Long])] = {
     if (fileRows.isEmpty) return fileRows
     if (mapsColumns(spark, tablePath, version)) return fileRows
-    val sd = describingSidecarDir(spark, tablePath, "_stats", version)
+    val sd = describingSidecarDir(spark, tablePath, StatsIndex, version)
       .getOrElse(return fileRows)
-    val side = spark.read.parquet(sd)
-    val statKeys = side.columns.filter(_.startsWith("min_"))
-      .map(_.stripPrefix("min_")).toSet
+    val statKeys = StatsIndex.keys(spark, sd).toSet
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{EqualTo => CEq, Expression}
     def sided(e: Expression): Option[(String, String)] = e match {
@@ -3546,11 +3523,8 @@ object Snapshots {
     val bounds = source.agg(
       min(col(sCol)).as("lo"), max(col(sCol)).as("hi")).collect().head
     if (bounds.isNullAt(0)) return fileRows // all-null source key
-    val admitted = filterSidecarToFiles(side, fileRows.map(_._1).toSet)
-      .filter(col(s"max_$tCol") >= lit(bounds.get(0)) &&
-        col(s"min_$tCol") <= lit(bounds.get(1)))
-      .select(col("file")).collect()
-      .map(r => normPath(r.getString(0))).toSet
+    val admitted = statsAdmitted(spark, sd,
+      Skipping.admits(tCol, bounds.get(0), bounds.get(1)))
     fileRows.filter(r => admitted.contains(normPath(r._1)))
   }
 
@@ -3796,6 +3770,21 @@ object Snapshots {
   // into a batch (CHECK constraints, generated columns, column mapping)
   // ------------------------------------------------------------------
 
+  /** A versioned sidecar family: `<table>/<dirName>/v<N>` per
+    * generation, resolved latest-at-or-below ([[sidecarResolve]]).
+    * [[retractVersion]] and [[vacuum]]'s expiry sweep drop every
+    * family's dir of a withdrawn or expired version. */
+  private[graft] abstract class SidecarFamily(val dirName: String) {
+    def root(tablePath: String): String = s"$tablePath/$dirName"
+
+    def dirAt(tablePath: String, version: Long): String =
+      s"${root(tablePath)}/v$version"
+  }
+
+  /** The write-governance and pruning-index families. */
+  private def sidecarFamilies: Seq[SidecarFamily] =
+    GovFamilies ++ IndexFamilies
+
   /** One versioned WRITE-GOVERNANCE sidecar family: each
     * `<table>/<dirName>/v<N>` holds the FULL governing set of generation
     * N as (key, value) string rows — `value` decoded from a nullable
@@ -3807,15 +3796,10 @@ object Snapshots {
     * stay outside: they govern reads, not batch preparation, and
     * vacuum prunes them to kept files. */
   private[graft] final class GovFamily[V](
-      val dirName: String,
+      dirName: String,
       keyCol: String,
       valCol: String,
-      decode: String => V) {
-
-    def root(tablePath: String): String = s"$tablePath/$dirName"
-
-    def dirAt(tablePath: String, version: Long): String =
-      s"${root(tablePath)}/v$version"
+      decode: String => V) extends SidecarFamily(dirName) {
 
     /** One published dir's rows, sorted by key — memoized per dir
       * ([[memoizedMeta]]): every ingest into a governed table and every
@@ -4300,6 +4284,185 @@ object Snapshots {
     s"$partCol=${ExternalCatalogUtils.escapePathName(value)}"
   }
 
+  // ------------------------------------------------------------------
+  // Pruning-index sidecars — per-file min/max stats and per-file blooms
+  // ------------------------------------------------------------------
+
+  /** One versioned PRUNING-INDEX sidecar family: `<table>/<dirName>/v<N>`
+    * holds one row per data file of generation N in [[Skipping]]'s row
+    * format. [[Skipping]] is the one owner of that format — the row
+    * builders, the key readers and interval admission; this family list
+    * owns where the rows live and how they move between versions:
+    * every index verb pre-flights through [[preflightIndex]], mints
+    * through [[indexedCommit]] and writes through [[writeIndex]], and
+    * every version-keyed sweep iterates [[IndexFamilies]]. `keys` reads
+    * the (physical) key columns a published dir can be probed on — empty
+    * when none; `rows` builds fresh rows over a file list; `verbs` names
+    * what mints the family, for refusals. */
+  private[graft] final class IndexFamily(
+      dirName: String,
+      val noun: String,
+      val verbs: String,
+      val keys: (SparkSession, String) => Seq[String],
+      val rows: (SparkSession, Seq[String], Seq[String],
+        Skipping.BloomSizing) => DataFrame)
+      extends SidecarFamily(dirName)
+
+  /** Per-file min/max stats: range and box pruning. */
+  private val StatsIndex = new IndexFamily("_stats", "stats",
+    "a clustered/Z-ordered verb", Skipping.statsKeys,
+    (spark, files, keys, _) => Skipping.statsRows(spark, files, keys))
+
+  /** Per-file blooms: point pruning. A sketch answers for ONE column,
+    * so a dir recording none (legacy) or several serves no probe. */
+  private val BloomIndex = new IndexFamily("_bloom", "bloom", "commitBloom",
+    (spark, dir) =>
+      Some(Skipping.bloomKeys(spark, dir)).filter(_.size == 1)
+        .getOrElse(Seq.empty),
+    (spark, files, keys, sizing) =>
+      Skipping.bloomRows(spark, files, keys.head, sizing))
+
+  /** Every pruning-index family — a new family is one entry here. */
+  private[graft] val IndexFamilies: Seq[IndexFamily] =
+    Seq(StatsIndex, BloomIndex)
+
+  /** `keys` as the raw files of `version` spell them: index rows
+    * aggregate over the RAW files, whose columns carry physical names
+    * under a column mapping (the scans translate back). */
+  private def physicalKeys(
+      spark: SparkSession,
+      tablePath: String,
+      version: Long,
+      keys: Seq[String]): Seq[String] = {
+    val l2p = logicalToPhysical(colMapAsOf(spark, tablePath, version))
+    keys.map(k => l2p.getOrElse(k, k))
+  }
+
+  /** The one pre-flight of the index verbs: refuse an append onto a
+    * head that no `fam` generation describes, or whose describing
+    * sidecar records other keys than `keys`, BEFORE the commit
+    * publishes — the parent's files would silently vanish from pruning,
+    * or one sidecar would mix keys and a probe would test sketches or
+    * intervals of another column (dropped rows); a post-publish refusal
+    * would leave a committed head with no sidecar. The observed head
+    * may differ from the post-rebase recorded parent under an active
+    * race; [[indexedCommit]]'s resolve remains the authoritative check
+    * for that residual window. */
+  private def preflightIndex(
+      spark: SparkSession,
+      fam: IndexFamily,
+      tablePath: String,
+      keys: Seq[String],
+      append: Boolean,
+      verb: String): Unit =
+    if (append) latestVersion(spark, tablePath).foreach { h =>
+      val dir = describingSidecarDir(spark, tablePath, fam, h)
+      require(dir.isDefined,
+        s"$verb append onto version $h of $tablePath, which no " +
+          s"${fam.noun} sidecar describes — the parent's files would " +
+          s"silently vanish from ${fam.noun} pruning; commit the parent " +
+          s"through ${fam.verbs} first (refused before publishing; the " +
+          "table is untouched)")
+      val phys = physicalKeys(spark, tablePath, h, keys)
+      val recorded = fam.keys(spark, dir.get)
+      require(recorded.toSet == phys.toSet,
+        s"$verb append on ${phys.mkString(", ")} onto version $h of " +
+          s"$tablePath, whose ${fam.noun} sidecar records " +
+          s"[${recorded.mkString(", ")}] — one sidecar mixing keys would " +
+          "prune on the wrong column; append on the recorded keys, or " +
+          s"replace the table through ${fam.verbs} first (refused before " +
+          "publishing; the table is untouched)")
+    }
+
+  /** The ONE shape of every index-minting verb: [[preflightIndex]],
+    * the verb's own commit (`publish` — the layout is all that
+    * differs), then `fam`'s sidecar at the minted version over its
+    * fresh files, an append carrying the rows of its RECORDED lineage
+    * parent ([[lineageOf]] — never version−1, a crashed claim's numeric
+    * gap, and never the pre-claim observed head, which the
+    * reconciliation may have rebased past; unioning it would omit a
+    * racer's files, and the exact-dir fast path of
+    * [[describingSidecarDir]] would then skip the coverage check and
+    * the scans would silently never read them). The parent resolves
+    * through its DESCRIBING generation, so an append onto a
+    * file-preserving metadata head (deleteWhere, constraint change — no
+    * exact dir of its own) inherits the covering sidecar. `keys` are
+    * logical. Returns the version. */
+  private def indexedCommit(
+      spark: SparkSession,
+      fam: IndexFamily,
+      tablePath: String,
+      keys: Seq[String],
+      append: Boolean,
+      verb: String,
+      sizing: Skipping.BloomSizing = Skipping.DefaultSizing)(
+      publish: => Long): Long = {
+    preflightIndex(spark, fam, tablePath, keys, append, verb)
+    val version = publish
+    val phys = physicalKeys(spark, tablePath, version, keys)
+    val lin = lineageOf(spark, tablePath, version)
+    val parentDir = lin.parent.filter(_ => append).map { p =>
+      describingSidecarDir(spark, tablePath, fam, p)
+        .filter(d => fam.keys(spark, d).toSet == phys.toSet)
+        .getOrElse(throw new IllegalStateException(
+          s"$verb published version $version of $tablePath, but its " +
+            s"recorded parent $p carries no ${fam.noun} sidecar on " +
+            s"${phys.mkString(", ")} describing it (a racer rebased the " +
+            "append onto a head indexed otherwise) — re-index the table " +
+            s"with a replace through ${fam.verbs}"))
+    }
+    writeIndex(spark, fam, tablePath, version, phys, parentDir,
+      lin.parentFiles, lin.fresh, sizing)
+    version
+  }
+
+  /** The ONE write of a pruning-index sidecar at `version`: the rows of
+    * `parentDir` for the `kept` files carried forward — a describing
+    * dir may cover MORE files than the parent still lists, so only the
+    * kept files' rows are inherited and the minted sidecar is exactly
+    * the snapshot's file set — plus rows built over the `fresh` files
+    * alone: one data pass over the commit's own blast radius, never
+    * the table. */
+  private def writeIndex(
+      spark: SparkSession,
+      fam: IndexFamily,
+      tablePath: String,
+      version: Long,
+      keys: Seq[String],
+      parentDir: Option[String],
+      kept: Set[String],
+      fresh: Seq[String],
+      sizing: Skipping.BloomSizing): Unit = {
+    val carried =
+      parentDir.map(d => filterSidecarToFiles(spark.read.parquet(d), kept))
+    val built =
+      if (fresh.isEmpty && carried.isDefined) None
+      else Some(fam.rows(spark, fresh, keys, sizing))
+    (carried ++ built).reduce(_.unionByName(_))
+      .coalesce(1).write.mode("errorifexists")
+      .parquet(fam.dirAt(tablePath, version))
+  }
+
+  /** The stats-minting commit verbs' shared body: the layout (range
+    * clustering, Z-order or Hilbert — all that differs between them)
+    * committed through [[indexedCommit]]. */
+  private def statsCommit(
+      spark: SparkSession,
+      tablePath: String,
+      keyCols: Seq[String],
+      numFiles: Int,
+      append: Boolean,
+      derivedFrom: Option[Long],
+      verb: String)(
+      layout: => DataFrame): Long = {
+    require(numFiles >= 1, "numFiles must be positive")
+    require(keyCols.distinct.size == keyCols.size,
+      s"$verb: duplicate cluster keys in $keyCols")
+    indexedCommit(spark, StatsIndex, tablePath, keyCols, append, verb) {
+      commit(spark, layout, tablePath, append, None, derivedFrom, verb)
+    }
+  }
+
   /** [[commit]] with the physical layout that makes snapshots CHEAP to
     * query selectively — the Iceberg read path over plain parquet:
     * the batch is range-clustered on `keyCol` into `numFiles` tight-
@@ -4318,26 +4481,12 @@ object Snapshots {
       numFiles: Int,
       append: Boolean,
       derivedFrom: Option[Long] = None,
-      verb: String = "commitClustered"): Long = {
-    require(numFiles >= 1, "numFiles must be positive")
-    preflightStatsParent(spark, tablePath, append, "commitClustered")
-    val clustered = df
-      .repartitionByRange(numFiles, col(keyCol))
-      .sortWithinPartitions(col(keyCol))
-    val version =
-      commit(spark, clustered, tablePath, append, None, derivedFrom, verb)
-    // the stats parent is the generation's RECORDED lineage parent
-    // (writeKeyStats reads it from the manifest) — never version−1 (a
-    // crashed claim leaves a numeric gap with no stats dir) and never
-    // the pre-claim observed head (reconciliation may have rebased).
-    // MAPPING-AWARE: stats aggregate over the RAW FILES, whose columns
-    // carry physical names — the sidecar records min_/max_ under the
-    // key's physical name ([[scanRangeAsOf]] translates back)
-    val statsKey = logicalToPhysical(
-      colMapAsOf(spark, tablePath, version)).getOrElse(keyCol, keyCol)
-    writeKeyStats(spark, tablePath, version, Seq(statsKey), append)
-    version
-  }
+      verb: String = "commitClustered"): Long =
+    statsCommit(spark, tablePath, Seq(keyCol), numFiles, append,
+      derivedFrom, verb) {
+      df.repartitionByRange(numFiles, col(keyCol))
+        .sortWithinPartitions(col(keyCol))
+    }
 
   /** The sidecar generation GOVERNING a stats/bloom scan of `version`:
     * the exact `v<version>` dir when the generation minted one (the
@@ -4354,14 +4503,14 @@ object Snapshots {
   private def describingSidecarDir(
       spark: SparkSession,
       tablePath: String,
-      family: String,
+      fam: IndexFamily,
       version: Long): Option[String] = {
     val f = fs(spark, tablePath)
-    val exact = s"$tablePath/$family/v$version"
+    val exact = fam.dirAt(tablePath, version)
     if (f.exists(new Path(exact))) return Some(exact)
     val rows = manifestRows(spark, tablePath, version)
     if (rows.isEmpty) return None
-    sidecarResolve(spark, s"$tablePath/$family", version)
+    sidecarResolve(spark, fam.root(tablePath), version)
       .filter { case (_, dir) =>
         val described = sidecarDescribedFiles(spark, dir)
         rows.forall(r => described.contains(normPath(r._1)))
@@ -4380,6 +4529,15 @@ object Snapshots {
         .map(r => normPath(r.getString(0))).toSet
     }
 
+  /** The normalized files of the stats sidecar at `dir` whose rows
+    * pass `admit` ([[Skipping.admits]] conjuncts). */
+  private def statsAdmitted(
+      spark: SparkSession,
+      dir: String,
+      admit: org.apache.spark.sql.Column): Set[String] =
+    spark.read.parquet(dir).filter(admit).select(col("file")).collect()
+      .map(r => normPath(r.getString(0))).toSet
+
   /** Stats-pruned key-range scan AS OF `version`: the version's stats
     * manifest admits only the files whose [min, max] interval meets
     * [lo, hi]; the exact row filter clears file-level false positives
@@ -4390,44 +4548,36 @@ object Snapshots {
     * generation still fully describes — a deleteWhere or constraint
     * change repointed them verbatim — scans through that generation
     * ([[describingSidecarDir]]), composed with its own deletion
-    * vectors. */
+    * vectors. [[scanBoxAsOfN]] over one bound. */
   def scanRangeAsOf(
       spark: SparkSession,
       tablePath: String,
       version: Long,
       keyCol: String,
       lo: Any,
-      hi: Any): DataFrame = {
-    // MAPPING-AWARE: sidecar min_/max_ columns carry the key's
-    // PHYSICAL name forever (stats are computed over raw files); a
-    // renamed key resolves logical→physical for the sidecar probe and
-    // the row filter runs on the logical face — a rename costs the
-    // table nothing, not even its data skipping (the Iceberg field-id
-    // composition, reduced to names)
-    val gens = resolveSidecars(spark, tablePath, version)
-    val l2p = logicalToPhysical(colMapOf(spark, gens))
-    val phys = l2p.getOrElse(keyCol, keyCol)
-    val sd = describingSidecarDir(spark, tablePath, "_stats", version)
-      .getOrElse(throw new IllegalArgumentException(
-        s"no stats manifest for version $version of $tablePath — not " +
-          "committed via commitClustered, or expired by vacuum"))
-    val admitted = spark.read.parquet(sd)
-      .filter(col(s"max_$phys") >= lit(lo) && col(s"min_$phys") <= lit(hi))
-      .select(col("file")).collect().map(_.getString(0)).toIndexedSeq
-    // the manifest is read ONLY on the empty-answer path (for the
-    // schema) — the happy path stays at zero manifest reads, the
-    // budget [[SnapshotsResolutionSpec]] pins
-    val base =
-      if (admitted.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          generationOf(spark, tablePath, version)._2
-            .getOrElse(readAsOf(spark, tablePath, version).schema))
-      else {
-        val dv = dvSetOf(spark, gens)
-        readWithDv(spark, admitted.map((_, null: String)), None, dv, l2p)
-      }
-    base.filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
-  }
+      hi: Any): DataFrame =
+    scanBoxAsOfN(spark, tablePath, version, Seq((keyCol, lo, hi)))
+
+  /** The face of `version` over exactly the `admitted` files, composed
+    * with its deletion vectors and column mapping (`gens`, `l2p`). Zero
+    * admitted files is an answer: an empty frame with the snapshot's
+    * schema — the only path that reads the manifest, so a pruned scan's
+    * happy path stays at zero manifest reads (the budget
+    * [[SnapshotsResolutionSpec]] pins). */
+  private def admittedFace(
+      spark: SparkSession,
+      tablePath: String,
+      version: Long,
+      gens: SidecarGens,
+      l2p: Map[String, String],
+      admitted: Seq[String],
+      stored: Option[org.apache.spark.sql.types.StructType]): DataFrame =
+    if (admitted.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        stored.orElse(generationOf(spark, tablePath, version)._2)
+          .getOrElse(readAsOf(spark, tablePath, version).schema))
+    else readWithDv(spark, admitted.map((_, null: String)), stored,
+      dvSetOf(spark, gens), l2p)
 
   /** RUNTIME FILTER into a snapshot scan — the dynamic-file-pruning
     * leg Spark's DPP cannot give a manifest-planned union scan: for a
@@ -4499,10 +4649,10 @@ object Snapshots {
       files: Seq[String]): Option[Set[String]] = {
     if (mapsColumns(spark, tablePath, version)) return None
     val dimCol = dimKeys.columns.head
-    val sd = describingSidecarDir(spark, tablePath, "_stats", version)
-      .filter(d => statsSidecarKeys(spark, d).contains(keyCol))
-    val bd = describingSidecarDir(spark, tablePath, "_bloom", version)
-      .filter(d => bloomRecordedKey(spark, d).contains(keyCol))
+    val sd = describingSidecarDir(spark, tablePath, StatsIndex, version)
+      .filter(d => StatsIndex.keys(spark, d).contains(keyCol))
+    val bd = describingSidecarDir(spark, tablePath, BloomIndex, version)
+      .filter(d => BloomIndex.keys(spark, d).contains(keyCol))
     if (sd.isEmpty && bd.isEmpty) return None
     val bounds = dimKeys.agg(min(col(dimCol)).as("lo"),
       max(col(dimCol)).as("hi"),
@@ -4510,27 +4660,15 @@ object Snapshots {
     if (bounds.isNullAt(0)) return Some(Set.empty) // no dim keys at all
     var admitted: Set[String] = files.map(normPath).toSet
     sd.foreach { d =>
-      val hit = spark.read.parquet(d)
-        .filter(col(s"max_$keyCol") >= lit(bounds.get(0)) &&
-          col(s"min_$keyCol") <= lit(bounds.get(1)))
-        .select(col("file")).collect()
-        .map(r => normPath(r.getString(0))).toSet
-      admitted = admitted.intersect(hit)
+      admitted = admitted.intersect(statsAdmitted(spark, d,
+        Skipping.admits(keyCol, bounds.get(0), bounds.get(1))))
     }
     if (bd.isDefined && bounds.getLong(2) <= maxPointKeys &&
       admitted.nonEmpty) {
       val hashes = dimKeys.select(xxhash64(col(dimCol))).distinct()
-        .collect().map(_.getLong(0))
-      val admits = udf { (bf: Array[Byte]) =>
-        val sk = org.apache.spark.util.sketch.BloomFilter
-          .readFrom(new java.io.ByteArrayInputStream(bf))
-        hashes.exists(sk.mightContainLong)
-      }
-      val hit = spark.read.parquet(bd.get)
-        .filter(admits(col("bf")))
-        .select(col("file")).collect()
-        .map(r => normPath(r.getString(0))).toSet
-      admitted = admitted.intersect(hit)
+        .collect().map(_.getLong(0)).toSeq
+      admitted = admitted.intersect(
+        Skipping.bloomAdmitted(spark, bd.get, hashes).map(normPath).toSet)
     }
     Some(admitted)
   }
@@ -4546,24 +4684,10 @@ object Snapshots {
       tablePath: String,
       version: Long): Seq[String] = {
     if (mapsColumns(spark, tablePath, version)) return Seq.empty
-    val statsKeys = describingSidecarDir(spark, tablePath, "_stats",
-      version).toSeq.flatMap(d => statsSidecarKeys(spark, d))
-    val bloomKey = describingSidecarDir(spark, tablePath, "_bloom",
-      version).toSeq.flatMap(d => bloomRecordedKey(spark, d).toSeq)
-    (statsKeys ++ bloomKey).distinct
+    IndexFamilies.flatMap(fam =>
+      describingSidecarDir(spark, tablePath, fam, version)
+        .toSeq.flatMap(fam.keys(spark, _))).distinct
   }
-
-  /** The key columns a stats sidecar dir carries min_/max_ intervals
-    * for — memoized per published dir (a footer read otherwise
-    * repeated by every statement's loadTable and every admission). */
-  private def statsSidecarKeys(
-      spark: SparkSession,
-      dir: String): Seq[String] =
-    memoizedMeta(fs(spark, dir), new Path(dir), "statskeys") {
-      val cs = spark.read.parquet(dir).columns
-      cs.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-        .filter(k => cs.contains(s"max_$k")).toSeq
-    }
 
   /** The SQL runtime-filter bridge: the data files of `version` an
     * IN-set of `values` on `keyCol` admits, spelled EXACTLY as the
@@ -4617,66 +4741,11 @@ object Snapshots {
       append: Boolean,
       expectedPerFile: Long = 100000L,
       fpp: Double = 0.01,
-      ts: Option[Long] = None): Long = {
-    require(expectedPerFile > 0, "expectedPerFile must be positive")
-    require(fpp > 0 && fpp < 1, "fpp must be in (0, 1)")
-    val observed = latestVersion(spark, tablePath)
-    // pre-flight the parent's sidecar BEFORE the commit publishes — a
-    // post-publish refusal would leave a committed head with no bloom
-    // sidecar and a misleading "commit the parent first" error (the
-    // observed head may differ from the post-rebase recorded parent
-    // under an active race; the post-commit resolve below remains the
-    // authoritative check for that residual window)
-    if (append) observed.foreach { h =>
-      require(describingSidecarDir(spark, tablePath, "_bloom", h).isDefined,
-        s"commitBloom append onto version $h of $tablePath, which no " +
-          "bloom sidecar describes — the parent's files would silently " +
-          "vanish from point pruning; commit the parent through " +
-          "commitBloom first (refused before publishing; the table is " +
-          "untouched)")
+      ts: Option[Long] = None): Long =
+    indexedCommit(spark, BloomIndex, tablePath, Seq(keyCol), append,
+      "commitBloom", Skipping.BloomSizing(expectedPerFile, fpp)) {
+      commit(spark, df, tablePath, append, ts)
     }
-    val version = commit(spark, df, tablePath, append, ts)
-    // fresh files and the RECORDED lineage parent from the generation's
-    // own manifest rows (mirror writeKeyStats): the reconciliation may
-    // have REBASED the append onto a racer's head, and unioning the
-    // pre-claim observed head's sidecar would omit the racer's files —
-    // the exact-dir fast path in describingSidecarDir would then skip
-    // the coverage check and scanPointAsOf would silently never scan
-    // them (dropped rows)
-    val gen = manifestFor(spark, tablePath, version)
-    val recordedParent = parentOf(gen)
-    val parentFiles = recordedParent
-      .map(p => manifestFor(spark, tablePath, p).map(_.getString(1)).toSet)
-      .getOrElse(Set.empty[String])
-    val fresh = gen.map(_.getString(1)).filterNot(parentFiles).toSeq
-    // MAPPING-AWARE like [[commitClustered]]: the sketch aggregates
-    // over the raw files' physical column and records the PHYSICAL
-    // name as its key ([[scanPointAsOf]] translates the probe back)
-    val bloomKey = logicalToPhysical(
-      colMapAsOf(spark, tablePath, version)).getOrElse(keyCol, keyCol)
-    val freshBloom =
-      bloomRowsOf(spark, fresh.toIndexedSeq, bloomKey, expectedPerFile,
-        fpp)
-    val sidecar = recordedParent.filter(_ => append) match {
-      case Some(p) =>
-        val dir = describingSidecarDir(spark, tablePath, "_bloom", p)
-          .getOrElse(throw new IllegalStateException(
-            s"commitBloom published version $version of $tablePath, but " +
-              s"its recorded parent $p carries no describing bloom " +
-              "sidecar (a racer rebased the append onto an unindexed " +
-              "head) — rebuild the index with optimizeBloom"))
-        // a describing dir may conservatively cover MORE files than the
-        // parent generation still lists — inherit rows for the parent's
-        // own files only, so the minted sidecar stays exactly the
-        // snapshot's file set
-        filterSidecarToFiles(spark.read.parquet(dir), parentFiles)
-          .unionByName(freshBloom, allowMissingColumns = true)
-      case None => freshBloom
-    }
-    sidecar.coalesce(1).write.mode("errorifexists")
-      .parquet(bloomDir(tablePath, version))
-    version
-  }
 
   /** Restrict a (file, …) sidecar frame to rows describing `files`,
     * scheme-normalized on both sides (`input_file_name()` URIs vs
@@ -4691,39 +4760,6 @@ object Snapshots {
     df.filter(inSet(col("file")))
   }
 
-  /** One (file, n_rows, bf, key) sidecar row per listed file — one
-    * grouped data pass, map-side combined. `key` records the indexed
-    * column so maintenance ([[optimizePreserving]]) can rebuild the
-    * index without being told it. */
-  private def bloomRowsOf(
-      spark: SparkSession,
-      files: Seq[String],
-      keyCol: String,
-      expectedPerFile: Long,
-      fpp: Double): DataFrame = {
-    import org.apache.spark.sql.GraftSqlShim
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val bits = math.max(64L, math.ceil(
-      expectedPerFile * math.log(1 / fpp) /
-        (math.log(2) * math.log(2))).toLong)
-    val agg = GraftSqlShim.column(
-      new BloomFilterAggregate(
-        GraftSqlShim.expression(xxhash64(col(keyCol))),
-        Literal(expectedPerFile), Literal(bits)).toAggregateExpression())
-    spark.read.parquet(files: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("n_rows"), agg.as("bf"))
-      .withColumn("key", lit(keyCol))
-  }
-
-  /** [[optimize]] for a BLOOM-indexed table: the small-file rewrite
-    * lands as a replace version AND rebuilds the bloom sidecar over
-    * the compacted files, so point lookups keep their index across
-    * compaction — without this, an OPTIMIZE leaves the new head
-    * sidecar-less and [[scanPointAsOf]] refuses (loud, but a
-    * maintenance regression). Old versions keep their own sidecars
-    * until vacuum. Returns the minted version. */
   /** [[commitClustered]]'s TWO-dimensional sibling: the batch lays out
     * Z-ordered on `(xCol, yCol)` ([[Layout.clusterByZOrder]] — Morton
     * interleave + one range exchange), and the per-file stats sidecar
@@ -4766,21 +4802,11 @@ object Snapshots {
       append: Boolean,
       bits: Int = 21,
       derivedFrom: Option[Long] = None,
-      verb: String = "commitZorderedN"): Long = {
-    require(numFiles >= 1, "numFiles must be positive")
-    require(keyCols.distinct.size == keyCols.size,
-      s"commitZorderedN: duplicate cluster keys in $keyCols")
-    preflightStatsParent(spark, tablePath, append, "commitZorderedN")
-    val version = commit(spark,
-      Layout.clusterByZOrderN(df, keyCols, numFiles, bits).drop("zkey"),
-      tablePath, append, None, derivedFrom, verb)
-    // MAPPING-AWARE like [[commitClustered]]: stats aggregate over the
-    // raw files' physical columns ([[scanBoxAsOfN]] translates back)
-    val l2p = logicalToPhysical(colMapAsOf(spark, tablePath, version))
-    writeKeyStats(spark, tablePath, version,
-      keyCols.map(k => l2p.getOrElse(k, k)), append)
-    version
-  }
+      verb: String = "commitZorderedN"): Long =
+    statsCommit(spark, tablePath, keyCols, numFiles, append, derivedFrom,
+      verb) {
+      Layout.clusterByZOrderN(df, keyCols, numFiles, bits).drop("zkey")
+    }
 
   /** [[commitZorderedN]] on the HILBERT curve
     * ([[Layout.clusterByHilbertN]]) — same stats sidecar, same
@@ -4799,83 +4825,24 @@ object Snapshots {
       append: Boolean,
       bits: Int = 21,
       derivedFrom: Option[Long] = None,
-      verb: String = "commitHilbertN"): Long = {
-    require(numFiles >= 1, "numFiles must be positive")
-    require(keyCols.distinct.size == keyCols.size,
-      s"commitHilbertN: duplicate cluster keys in $keyCols")
-    preflightStatsParent(spark, tablePath, append, "commitHilbertN")
-    val version = commit(spark,
-      Layout.clusterByHilbertN(df, keyCols, numFiles, bits).drop("hkey"),
-      tablePath, append, None, derivedFrom, verb)
-    // MAPPING-AWARE like [[commitClustered]]
-    val l2p = logicalToPhysical(colMapAsOf(spark, tablePath, version))
-    writeKeyStats(spark, tablePath, version,
-      keyCols.map(k => l2p.getOrElse(k, k)), append)
-    version
-  }
-
-  /** The per-file min/max stats sidecar of a freshly committed
-    * generation over `keyCols`, parent rows carried on appends — the
-    * shared tail of the clustered/Z-ordered commit verbs. */
-  private def writeKeyStats(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long,
-      keyCols: Seq[String],
-      append: Boolean): Unit = {
-    // two single-generation reads answer both lineage questions (fresh
-    // files of the generation, recorded parent) — never the history
-    val gen = manifestFor(spark, tablePath, version)
-    val recordedParent = parentOf(gen)
-    val parentFiles = recordedParent
-      .map(p => manifestFor(spark, tablePath, p).map(_.getString(1)).toSet)
-      .getOrElse(Set.empty[String])
-    val fresh = gen.map(_.getString(1)).filterNot(parentFiles).toSeq
-    val aggs = count(lit(1)).as("n_rows") +:
-      keyCols.flatMap(k =>
-        Seq(min(col(k)).as(s"min_$k"), max(col(k)).as(s"max_$k")))
-    val freshStats = spark.read.parquet(fresh.toIndexedSeq: _*)
-      .groupBy(input_file_name().as("file"))
-      .agg(aggs.head, aggs.tail: _*)
-    // the recorded lineage parent (not the pre-claim observed head —
-    // reconciliation may have rebased the append) carries the stats
-    // rows the shared files keep, resolved through the DESCRIBING
-    // generation so an append onto a file-preserving metadata head
-    // (deleteWhere, constraint change — no exact stats dir of its own)
-    // inherits the covering sidecar instead of refusing; a parent no
-    // stats generation describes refuses loudly — its files would
-    // silently vanish from pruning (callers pre-flight this before the
-    // commit publishes; this residual check catches a racer's rebase)
-    val parent = recordedParent.filter(_ => append)
-    val stats = parent match {
-      case Some(p) =>
-        val dir = describingSidecarDir(spark, tablePath, "_stats", p)
-          .getOrElse(throw new IllegalStateException(
-            s"stats append onto version $p of $tablePath, which no " +
-              "stats sidecar describes — the parent's files would " +
-              "silently vanish from range/box pruning; commit the " +
-              "parent through a clustered/Z-ordered verb first"))
-        filterSidecarToFiles(spark.read.parquet(dir), parentFiles)
-          .unionByName(freshStats)
-      case None => freshStats
+      verb: String = "commitHilbertN"): Long =
+    statsCommit(spark, tablePath, keyCols, numFiles, append, derivedFrom,
+      verb) {
+      Layout.clusterByHilbertN(df, keyCols, numFiles, bits).drop("hkey")
     }
-    stats.coalesce(1).write.mode("errorifexists")
-      .parquet(statsDir(tablePath, version))
-  }
 
   /** Keep a stats/bloom-governed table's PRUNING INDEXES LIVE across a
-    * file-swapping DML commit ([[updateWhere]], [[mergeInto]]): when a
-    * sidecar describes the parent, mint the new version's sidecar as
-    * the parent's rows for the surviving files plus freshly computed
-    * rows for the fresh files — one data pass over the FRESH files
-    * only (the DML's own blast radius), never the table. The sidecar's
-    * own metadata names its keys (stats: the `min_<k>` columns; bloom:
-    * the recorded `key` column), so no caller has to remember how the
+    * file-swapping DML commit ([[updateWhere]], [[mergeInto]]): for
+    * each family whose sidecar describes the parent, mint the new
+    * version's sidecar through [[writeIndex]] — the parent's rows for
+    * the surviving files plus fresh rows for the fresh files only (the
+    * DML's own blast radius), never the table. The sidecar's own key
+    * reader names its keys, so no caller has to remember how the
     * table is indexed. Skips silently when nothing describes the
     * parent (the table was never index-governed), when a column
     * mapping governs (the stats verbs are not mapping-aware — scans
-    * already refuse loudly), or when a legacy bloom sidecar predates
-    * the recorded key; in those cases the new head is simply
+    * already refuse loudly), or when a bloom sidecar does not record
+    * exactly one key; in those cases the new head is simply
     * non-described, exactly as every pre-maintenance DML commit was.
     * Runs BEFORE the publish so a refused commit retracts the staged
     * sidecar with the generation. */
@@ -4885,64 +4852,15 @@ object Snapshots {
       parent: Long,
       version: Long,
       keptFiles: Seq[String],
-      freshFiles: Seq[String]): Unit = {
-    if (mapsColumns(spark, tablePath, parent)) return
-    val kept = keptFiles.toSet
-    describingSidecarDir(spark, tablePath, "_stats", parent).foreach { dir =>
-      val side = spark.read.parquet(dir)
-      val keyCols = side.columns.filter(_.startsWith("min_"))
-        .map(_.stripPrefix("min_")).toSeq
-      if (keyCols.nonEmpty) {
-        val aggs = count(lit(1)).as("n_rows") +:
-          keyCols.flatMap(k =>
-            Seq(min(col(k)).as(s"min_$k"), max(col(k)).as(s"max_$k")))
-        val freshStats =
-          if (freshFiles.isEmpty) filterSidecarToFiles(side, Set.empty)
-          else spark.read.parquet(freshFiles.toIndexedSeq: _*)
-            .groupBy(input_file_name().as("file"))
-            .agg(aggs.head, aggs.tail: _*)
-        filterSidecarToFiles(side, kept).unionByName(freshStats)
-          .coalesce(1).write.mode("errorifexists")
-          .parquet(statsDir(tablePath, version))
-      }
-    }
-    describingSidecarDir(spark, tablePath, "_bloom", parent).foreach { dir =>
-      val side = spark.read.parquet(dir)
-      if (side.columns.contains("key")) {
-        side.select(col("key")).limit(1).collect().headOption
-          .map(_.getString(0)).foreach { keyCol =>
-            val freshBloom =
-              if (freshFiles.isEmpty) filterSidecarToFiles(side, Set.empty)
-              else bloomRowsOf(spark, freshFiles.toIndexedSeq, keyCol,
-                100000L, 0.01)
-            filterSidecarToFiles(side, kept)
-              .unionByName(freshBloom, allowMissingColumns = true)
-              .coalesce(1).write.mode("errorifexists")
-              .parquet(bloomDir(tablePath, version))
-          }
-      }
-    }
-  }
-
-  /** The shared pre-flight of the stats-sidecar commit verbs: refuse
-    * an append onto a head no stats generation describes BEFORE the
-    * commit publishes — a post-publish refusal would leave a committed
-    * head with no sidecar and a misleading "commit the parent first"
-    * error (the observed head may differ from the post-rebase recorded
-    * parent under an active race; [[writeKeyStats]]' resolve remains
-    * the authoritative check for that residual window). */
-  private def preflightStatsParent(
-      spark: SparkSession,
-      tablePath: String,
-      append: Boolean,
-      verb: String): Unit =
-    if (append) latestVersion(spark, tablePath).foreach { h =>
-      require(describingSidecarDir(spark, tablePath, "_stats", h).isDefined,
-        s"$verb append onto version $h of $tablePath, which no stats " +
-          "sidecar describes — the parent's files would silently " +
-          "vanish from range/box pruning; commit the parent through a " +
-          "clustered/Z-ordered verb first (refused before publishing; " +
-          "the table is untouched)")
+      freshFiles: Seq[String]): Unit =
+    if (!mapsColumns(spark, tablePath, parent)) IndexFamilies.foreach {
+      fam =>
+        describingSidecarDir(spark, tablePath, fam, parent).foreach { dir =>
+          val keys = fam.keys(spark, dir)
+          if (keys.nonEmpty) writeIndex(spark, fam, tablePath, version,
+            keys, Some(dir), keptFiles.toSet, freshFiles,
+            Skipping.DefaultSizing)
+        }
     }
 
   /** 2-D box scan AS OF `version` over a [[commitZordered]] layout:
@@ -4973,32 +4891,27 @@ object Snapshots {
       version: Long,
       bounds: Seq[(String, Any, Any)]): DataFrame = {
     require(bounds.nonEmpty, "scanBoxAsOfN: no bounds given")
-    // MAPPING-AWARE like [[scanRangeAsOf]]: each bound's sidecar probe
-    // resolves logical→physical; the row filter runs on the logical face
+    // MAPPING-AWARE: sidecar min_/max_ columns carry each key's
+    // PHYSICAL name forever (stats are computed over raw files); each
+    // bound resolves logical→physical for the sidecar probe and the row
+    // filter runs on the logical face — a rename costs the table
+    // nothing, not even its data skipping
     val gens = resolveSidecars(spark, tablePath, version)
     val l2p = logicalToPhysical(colMapOf(spark, gens))
-    val sd = describingSidecarDir(spark, tablePath, "_stats", version)
+    val sd = describingSidecarDir(spark, tablePath, StatsIndex, version)
       .getOrElse(throw new IllegalArgumentException(
         s"no stats manifest for version $version of $tablePath — not " +
-          "committed via commitZordered, or expired by vacuum"))
+          "committed via a clustered/Z-ordered verb, or expired by " +
+          "vacuum"))
     val admit = bounds.map { case (c, lo, hi) =>
-      val p = l2p.getOrElse(c, c)
-      col(s"max_$p") >= lit(lo) && col(s"min_$p") <= lit(hi)
+      Skipping.admits(l2p.getOrElse(c, c), lo, hi)
     }.reduce(_ && _)
     val admitted = spark.read.parquet(sd).filter(admit)
       .select(col("file")).collect().map(_.getString(0)).toIndexedSeq
-    val base =
-      if (admitted.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          generationOf(spark, tablePath, version)._2
-            .getOrElse(readAsOf(spark, tablePath, version).schema))
-      else {
-        val dv = dvSetOf(spark, gens)
-        readWithDv(spark, admitted.map((_, null: String)), None, dv, l2p)
-      }
-    base.filter(bounds.map { case (c, lo, hi) =>
-      col(c) >= lit(lo) && col(c) <= lit(hi)
-    }.reduce(_ && _))
+    admittedFace(spark, tablePath, version, gens, l2p, admitted, None)
+      .filter(bounds.map { case (c, lo, hi) =>
+        col(c) >= lit(lo) && col(c) <= lit(hi)
+      }.reduce(_ && _))
   }
 
   /** OPTIMIZE that preserves RANGE skipping — [[optimizeBloom]]'s
@@ -5020,22 +4933,25 @@ object Snapshots {
       derivedFrom = Some(latest), verb = "optimizeClustered")
   }
 
+  /** [[optimize]] for a BLOOM-indexed table: the small-file rewrite
+    * lands as a replace version AND rebuilds the bloom sidecar over
+    * the compacted files, so point lookups keep their index across
+    * compaction — without this, an OPTIMIZE leaves the new head
+    * sidecar-less and [[scanPointAsOf]] refuses (loud, but a
+    * maintenance regression). Old versions keep their own sidecars
+    * until vacuum. Returns the minted version. */
   def optimizeBloom(
       spark: SparkSession,
       tablePath: String,
       keyCol: String,
       targetBytes: Long,
       expectedPerFile: Long = 100000L,
-      fpp: Double = 0.01): Long = {
-    val version = optimize(spark, tablePath, targetBytes)
-    val files = manifestRows(spark, tablePath, version).map(_._1)
-    val bloomKey = logicalToPhysical(
-      colMapAsOf(spark, tablePath, version)).getOrElse(keyCol, keyCol)
-    bloomRowsOf(spark, files, bloomKey, expectedPerFile, fpp)
-      .coalesce(1).write.mode("errorifexists")
-      .parquet(bloomDir(tablePath, version))
-    version
-  }
+      fpp: Double = 0.01): Long =
+    indexedCommit(spark, BloomIndex, tablePath, Seq(keyCol),
+      append = false, "optimizeBloom",
+      Skipping.BloomSizing(expectedPerFile, fpp)) {
+      optimize(spark, tablePath, targetBytes)
+    }
 
   /** Bloom-pruned POINT lookup AS OF `version`: the version's bloom
     * sidecar admits only the files that might contain `key = value`
@@ -5050,35 +4966,27 @@ object Snapshots {
       version: Long,
       keyCol: String,
       value: Any): DataFrame = {
-    // MAPPING-AWARE like [[scanRangeAsOf]]: the bloom sidecar records
+    // MAPPING-AWARE like [[scanBoxAsOfN]]: the bloom sidecar records
     // the key's PHYSICAL name; a renamed key resolves through the
     // mapping, and a key the sidecar does not index refuses loudly
     // (probing a sketch of a different column would falsely prune)
     val gens = resolveSidecars(spark, tablePath, version)
     val l2p = logicalToPhysical(colMapOf(spark, gens))
     val phys = l2p.getOrElse(keyCol, keyCol)
-    val bd = describingSidecarDir(spark, tablePath, "_bloom", version)
+    val bd = describingSidecarDir(spark, tablePath, BloomIndex, version)
       .getOrElse(throw new IllegalArgumentException(
         s"no bloom sidecar for version $version of $tablePath — not " +
           "committed via commitBloom, or expired by vacuum"))
-    bloomRecordedKey(spark, bd).foreach(recorded =>
-      require(recorded == phys,
-        s"scanPointAsOf: the bloom sidecar of $tablePath indexes " +
-          s"'$recorded', not '$keyCol' — a probe against it would " +
-          "falsely prune files; commitBloom on the queried key"))
+    val recorded = Skipping.bloomKeys(spark, bd)
+    require(recorded == Seq(phys),
+      s"scanPointAsOf: the bloom sidecar of $tablePath indexes " +
+        s"[${recorded.mkString(", ")}], not exactly '$keyCol' — a probe " +
+        "against it would falsely prune files; commitBloom on the " +
+        "queried key")
     val admitted = Skipping.pruneFilesPoint(spark, bd, value)
-    val stored = generationOf(spark, tablePath, version)._2
-    val base =
-      if (admitted.isEmpty) {
-        val schema = stored.getOrElse(
-          readAsOf(spark, tablePath, version).schema)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      } else {
-        val dv = dvSetOf(spark, gens)
-        readWithDv(spark, admitted.map((_, null: String)), stored, dv,
-          l2p)
-      }
-    base.filter(col(keyCol) === lit(value))
+    admittedFace(spark, tablePath, version, gens, l2p, admitted,
+      generationOf(spark, tablePath, version)._2)
+      .filter(col(keyCol) === lit(value))
   }
 
   /** OPTIMIZE: rewrite the latest snapshot's many small files into
@@ -5151,9 +5059,8 @@ object Snapshots {
     // own), false after a plain replace buried the clustered era. Key
     // names come off the sidecar's min_* schema; the rewrite
     // re-clusters on them and mints a FRESH sidecar at the new head.
-    describingSidecarDir(spark, tablePath, "_stats", head).foreach { dir =>
-      val keys = spark.read.parquet(dir).schema.fieldNames.toSeq
-        .filter(_.startsWith("min_")).map(_.substring(4))
+    describingSidecarDir(spark, tablePath, StatsIndex, head).foreach { dir =>
+      val keys = StatsIndex.keys(spark, dir)
       val bytes = rows
         .map(r => f.getFileStatus(new Path(r.getString(1))).getLen).sum
       val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
@@ -5173,18 +5080,13 @@ object Snapshots {
     // fleet sweep needs no out-of-band knowledge. A legacy sidecar
     // without the key (or with conflicting keys) refuses toward the
     // explicit verb rather than guessing.
-    describingSidecarDir(spark, tablePath, "_bloom", head).foreach { dir =>
-      val sc = spark.read.parquet(dir)
-      val keys =
-        if (!sc.columns.contains("key")) Seq.empty
-        else sc.select(col("key")).filter(col("key").isNotNull)
-          .distinct().collect().map(_.getString(0)).toSeq
-      require(keys.size == 1,
-        s"optimizePreserving: version $head of $tablePath is " +
-          "bloom-governed but the sidecar does not record ONE key " +
-          s"column (found ${keys.mkString(", ")}) — run " +
-          "optimizeBloom(keyCol) explicitly")
-      return optimizeBloom(spark, tablePath, keys.head, targetBytes)
+    describingSidecarDir(spark, tablePath, BloomIndex, head).foreach { dir =>
+      val key = BloomIndex.keys(spark, dir).headOption.getOrElse(
+        throw new IllegalArgumentException(
+          s"optimizePreserving: version $head of $tablePath is " +
+            "bloom-governed but the sidecar does not record ONE key " +
+            "column — run optimizeBloom(keyCol) explicitly"))
+      return optimizeBloom(spark, tablePath, key, targetBytes)
     }
     optimize(spark, tablePath, targetBytes)
   }
@@ -5382,30 +5284,16 @@ object Snapshots {
   private def readFork(
       spark: SparkSession,
       tablePath: String,
-      name: String): Option[Long] = {
-    val f = fs(spark, tablePath)
-    val p = forkMarker(tablePath, name)
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      try {
-        val buf = new Array[Byte](32)
-        val n = in.read(buf)
-        Some(new String(buf, 0, math.max(n, 0), "UTF-8").trim.toLong)
-      } finally in.close()
-    }
-  }
+      name: String): Option[Long] =
+    readPointer(fs(spark, tablePath), forkMarker(tablePath, name),
+      lenient = false)
 
   private def writeFork(
       spark: SparkSession,
       tablePath: String,
       name: String,
-      version: Long): Unit = {
-    val f = fs(spark, tablePath)
-    val out = f.create(forkMarker(tablePath, name), true)
-    try out.write(version.toString.getBytes("UTF-8"))
-    finally out.close()
-  }
+      version: Long): Unit =
+    writePointer(fs(spark, tablePath), forkMarker(tablePath, name), version)
 
   /** Fork an ISOLATED WRITABLE lineage off `fromVersion` (default the
     * head): a zero-copy clone under the table's own `_branches/<name>`
@@ -6150,7 +6038,7 @@ object Snapshots {
       // stored bounds and blooms stay valid — purging only REMOVES
       // rows, so both remain conservative supersets and pruning
       // remains sound (no false negatives can appear).
-      Seq("_stats", "_bloom").map(r => new Path(s"$tablePath/$r"))
+      IndexFamilies.map(fam => new Path(fam.root(tablePath)))
         .filter(f.exists).foreach { statsRoot =>
         f.listStatus(statsRoot).filter(_.isDirectory).foreach { d =>
           val sd = d.getPath.toString
