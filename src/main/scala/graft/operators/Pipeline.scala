@@ -1,17 +1,25 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import java.io.{IOException, OutputStreamWriter}
+import java.util.UUID
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import org.apache.spark.sql.functions.{monotonically_increasing_id, when}
+import org.apache.spark.sql.types.StructType
 
 import graft.model.{AlmaSchema, ColumnRegistry}
 import graft.sources.{AlmaConnector, CsvStage}
-// (routing for the update stage comes from AlmaConnector.routeUpdateResult)
+// (the update stage routes on AlmaConnector.succeeded)
 
 /** The reference's CLI lifecycle (BatchUpdate.py:114-136) as a composable
   * driver: stages chained in the fixed order format → split → update
   * regardless of how flags were given, each stage reading the previous
   * stage's CSV and writing a prefixed one (`f_`, `s_`, then `suc_`/`err_`
-  * from the routed update sinks).
+  * from the update stage). The update stage writes its annotated frame
+  * once, partitioned by route, and renames the two route directories to
+  * `suc_`/`err_` on the driver ([[writeRouted]]).
   *
   * The reference's interactive guards — the Y/N confirm before update
   * (:127-132) and the per-column value prompts (:227, :254) — become
@@ -61,27 +69,76 @@ object Pipeline {
       val factory = store.getOrElse(
         throw new IllegalArgumentException(
           "update stage needs an ItemStore factory (no interactive confirm in a cluster)"))
-      // Materialize the annotated result to disk BEFORE routing: the PUTs
-      // in AlmaConnector.update are not idempotent, and cache() alone is
-      // best-effort — an evicted partition (or task retry during the
-      // second routed write) would re-execute the HTTP calls. One parquet
-      // write gives the two filtered sinks a stable, re-readable input,
-      // read back with the schema just written (no footer-merge job).
-      val staging = CsvStage.stagedPath(current, "upd_") + ".staging"
-      val updated = AlmaConnector.update(CsvStage.read(spark, current), factory)
-      updated.write.mode("overwrite").parquet(staging)
-      val annotated = spark.read.schema(updated.schema).parquet(staging)
-      val (ok, bad) = AlmaConnector.routeUpdateResult(annotated)
-      val routed = (Some(CsvStage.writeStage(ok, current, "suc_")),
-        Some(CsvStage.writeStage(bad, current, "err_")))
-      // only once both routed sinks have committed: the reference leaves
-      // nothing but suc_/err_ beside the user's files
-      val stagingPath = new Path(staging)
-      stagingPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(stagingPath, true)
-      routed
+      val (ok, bad) = writeRouted(spark,
+        AlmaConnector.update(CsvStage.read(spark, current), factory), current)
+      (Some(ok), Some(bad))
     } else (None, None)
 
     Result(formatted, splitOut, suc, err)
+  }
+
+  /** The update stage's one write: the annotated frame, written once as CSV
+    * split into one directory per route, whose two directories are then
+    * renamed to `suc_<name>`/`err_<name>` on the driver. Returns the
+    * (success, error) paths.
+    *
+    * The PUTs in [[AlmaConnector.update]] are not idempotent, so the rows
+    * must flow through one write and never be recomputed for a second.
+    * `sortWithinPartitions` consumes each task's whole partition — every
+    * row's GET+PUT — before the writer sees a row, so they run exactly once
+    * per task attempt. Sorting by (route, input position) rather than by
+    * route alone keeps each file's rows in input order, and it is the
+    * ordering the partitioned writer needs, so Spark adds no sort of its
+    * own.
+    *
+    * The routed outputs are replaced only after the write has committed: a
+    * failed write leaves the previous run's `suc_`/`err_` as they were, and
+    * the temporary directory is always removed. */
+  private def writeRouted(
+      spark: SparkSession,
+      annotated: DataFrame,
+      current: String): (String, String) = {
+    val route = "__route"
+    val position = "__position"
+    val tmp = new Path(CsvStage.stagedPath(current, "upd_") + ".staging")
+    val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
+    val routed = annotated
+      .withColumn(route, when(AlmaConnector.succeeded, "suc_").otherwise("err_"))
+      .drop("__status")
+      .withColumn(position, monotonically_increasing_id())
+      .sortWithinPartitions(route, position)
+      .drop(position)
+    try {
+      routed.write.mode("overwrite").partitionBy(route)
+        .option("header", "true").csv(tmp.toString)
+      def publish(prefix: String): String = {
+        val target = new Path(CsvStage.stagedPath(current, prefix))
+        val dir = new Path(tmp, s"$route=$prefix")
+        fs.delete(target, true)
+        if (!fs.exists(dir)) writeHeaderOnly(spark, fs, target, routed.drop(route).schema)
+        else if (!fs.rename(dir, target))
+          throw new IOException(s"could not rename $dir to $target")
+        // the marker Spark's own write leaves in an output directory
+        fs.create(new Path(target, "_SUCCESS")).close()
+        target.toString
+      }
+      (publish("suc_"), publish("err_"))
+    } finally fs.delete(tmp, true)
+  }
+
+  /** A route with no rows gets the header-only part file Spark writes for
+    * an empty frame, written here on the driver so it runs no job. */
+  private def writeHeaderOnly(
+      spark: SparkSession,
+      fs: FileSystem,
+      dir: Path,
+      schema: StructType): Unit = {
+    val conf = spark.sessionState.conf
+    val options = new CSVOptions(Map("header" -> "true"),
+      conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    val file = new Path(dir, s"part-00000-${UUID.randomUUID()}-c000.csv")
+    val gen = new UnivocityGenerator(schema,
+      new OutputStreamWriter(fs.create(file, false), options.charset), options)
+    try gen.writeHeaders() finally gen.close()
   }
 }

@@ -1,6 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row}
+import java.time.Duration
+
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.{ExpressionEncoder, RowEncoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -12,8 +16,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * at a time (its own wall-clock print is the only perf artifact in the
   * repo). Here each Spark partition drives its own pooled HTTP client, so
   * throughput scales with `min(partitions, service rate limit)`; the row
-  * result carries an HTTP status so success/error routing stays a pair of
-  * filtered writes off one cached frame rather than driver-side lists.
+  * result carries an outcome status, and [[succeeded]] is the one routing
+  * decision over it, so success/error routing is a column of the annotated
+  * frame rather than driver-side lists.
   *
   * The transport is pluggable (`ItemStore`) so tests run against an
   * in-memory stub and production supplies a `java.net.http`-based client —
@@ -33,22 +38,30 @@ object AlmaConnector {
   }
 
   /** `java.net.http` client against a real Alma-style endpoint. One
-    * instance per executor partition; HTTP/1.1 keep-alive pooling. */
-  final class HttpItemStore(baseUrl: String, apiKey: String) extends ItemStore {
-    private lazy val client = java.net.http.HttpClient.newHttpClient()
+    * instance per executor partition; HTTP/1.1 keep-alive pooling.
+    * `timeout` bounds both the connect and each request, so a stalled
+    * endpoint fails its row with an `HttpTimeoutException` note instead
+    * of hanging the task. */
+  final class HttpItemStore(
+      baseUrl: String,
+      apiKey: String,
+      timeout: Duration = Duration.ofSeconds(30)) extends ItemStore {
+    private lazy val client =
+      java.net.http.HttpClient.newBuilder().connectTimeout(timeout).build()
     private def uri(s: String) = java.net.URI.create(s)
     private def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
     def fetch(barcode: String): (Int, String) = {
       val sep = if (baseUrl.contains("?")) "&" else "?"
       val req = java.net.http.HttpRequest.newBuilder(
         uri(s"$baseUrl${sep}apikey=${enc(apiKey)}&item_barcode=${enc(barcode)}"))
-        .GET().build()
+        .timeout(timeout).GET().build()
       val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
       (resp.statusCode(), resp.body())
     }
     def put(url: String, xml: String): Int = {
       val sep = if (url.contains("?")) "&" else "?"
       val req = java.net.http.HttpRequest.newBuilder(uri(s"$url${sep}apikey=${enc(apiKey)}"))
+        .timeout(timeout)
         .header("Content-Type", "application/xml")
         .PUT(java.net.http.HttpRequest.BodyPublishers.ofString(xml))
         .build()
@@ -58,8 +71,8 @@ object AlmaConnector {
 
   /** Run the update flow: for each non-errored row, fetch → merge → put,
     * appending a `__status` / `Notes` outcome. Returns the annotated frame;
-    * route with [[routeUpdateResult]] (which also drops the internal
-    * status column).
+    * route on [[succeeded]] ([[routeUpdateResult]] splits the frame on it
+    * and drops the internal status column).
     *
     * `storeFactory` must be serializable; it is invoked once per partition
     * on the executor (connection reuse, no driver round-trips). */
@@ -124,7 +137,9 @@ object AlmaConnector {
               }
             }
           } catch {
-            case e: Exception =>
+            // not InterruptedException: a cancelled task must stop, not
+            // record a row error and go on sending PUTs
+            case NonFatal(e) =>
               withNote("error", Some(s"Err: ${e.getClass.getSimpleName}: ${e.getMessage}"))
           }
         }
@@ -132,9 +147,14 @@ object AlmaConnector {
     }(enc)
   }
 
+  /** S5's routing decision over the annotated frame, defined once: a row
+    * goes to the success output iff its PUT answered 200; every other
+    * outcome (fetch or PUT error, skipped row) goes to the error output. */
+  val succeeded: Column = col("__status") === "success"
+
   /** S5 routing on the update result: (success frame, error frame) —
-    * two filtered views over one (cache-able) annotated frame. */
+    * two filtered views over the annotated frame, status dropped. */
   def routeUpdateResult(annotated: DataFrame): (DataFrame, DataFrame) = (
-    annotated.filter(col("__status") === "success").drop("__status"),
-    annotated.filter(col("__status") =!= "success").drop("__status"))
+    annotated.filter(succeeded).drop("__status"),
+    annotated.filter(!succeeded).drop("__status"))
 }

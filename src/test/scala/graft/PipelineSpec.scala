@@ -3,12 +3,14 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusAccess
+import org.apache.spark.{ListenerBusAccess, SparkException}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Pipeline
-import graft.sources.CsvStage
+import graft.sources.{AlmaConnector, CsvStage}
 
 /** S1/S2 CSV source/sink (prefix naming, dialects) and the §3 lifecycle:
   * format → split → update chained over staged CSV files, like the
@@ -173,12 +175,135 @@ class PipelineSpec extends SparkSuite {
         store = Some(() => new AlmaConnectorSpec.StubStore))
     }
     // format: write; split: range sampling, range map stage, write;
-    // update: staging write, suc_ write, err_ write
-    assert(jobs <= 7, s"$jobs jobs")
+    // update: one routed write
+    assert(jobs <= 5, s"$jobs jobs")
     assert(new java.io.File(dir).list().sorted.toSeq ==
       Seq("err_items.csv", "f_items.csv", "items.csv", "s_items.csv", "suc_items.csv"))
     val total = CsvStage.read(spark, res.split.get).count()
     assert(CsvStage.read(spark, res.success.get).count() +
       CsvStage.read(spark, res.error.get).count() == total)
+  }
+
+  /** Rows of every part file under `dir`, file by file in name order. */
+  private def rowsByFile(dir: String, schema: StructType): Seq[Seq[Any]] =
+    new java.io.File(dir).list().filter(_.startsWith("part-")).sorted.toSeq
+      .flatMap { f =>
+        spark.read.schema(schema).option("header", "true").csv(s"$dir/$f")
+          .collect().map(_.toSeq)
+      }
+
+  private def bytes(path: String): Seq[Byte] =
+    Files.readAllBytes(Paths.get(path)).toSeq
+
+  /** Every file under a routed output, by name, with its bytes. */
+  private def contents(dir: String): Map[String, Seq[Byte]] =
+    new java.io.File(dir).list().map(f => f -> bytes(s"$dir/$f")).toMap
+
+  private val itemHeader =
+    "MMS ID,Barcode,Material Type,Item Policy,Enum A,Enum B,Chron I,Chron J,Pattern,Notes"
+
+  test("update: one routed write gives the old routing's rows in input " +
+    "order, a header-only file for an empty route, one PUT per success " +
+    "and no upd_ entry") {
+    import spark.implicits._
+    import PipelineSpec.CountingStore
+    val dir = Files.createTempDirectory("graft-routed").toFile.getAbsolutePath
+    Files.writeString(Paths.get(s"$dir/items.csv"), fixtureText)
+    val fixture = Pipeline.run(spark, s"$dir/items.csv",
+      Pipeline.StageFlags(format = true, split = true)).split.get
+    // three parts, so three tasks each write their share of a route
+    val allSuccess = CsvStage.writeStage(
+      (1 to 30).map(i => s"'99$i,'31$i,Bound Issue,non-circulating,v.$i,,${1960 + i},,StdMatch,")
+        .toDF("value").repartition(3)
+        .select(split(col("value"), ",", -1).as("c"))
+        .select(itemHeader.split(",").zipWithIndex.map { case (h, i) =>
+          col("c")(i).as(h) }.toSeq: _*),
+      s"$dir/ok/items.csv", "s_")
+    val allError = s"$dir/bad/items.csv"
+    Files.createDirectories(Paths.get(s"$dir/bad"))
+    Files.writeString(Paths.get(allError), Seq(itemHeader,
+      "'991,'404,Bound Issue,non-circulating,v.1,,1998,,StdMatch,",
+      "'991,'3102,Bound Issue,non-circulating,,,,,N/A,",
+      "'991,'3103,Bound Issue,non-circulating,v.3,,2000,,StdMatch,Err: i-barcode",
+      "'991,'404,Bound Issue,non-circulating,v.4,,2001,,StdMatch,").mkString("", "\n", "\n"))
+
+    Seq("fixture" -> fixture, "all success" -> allSuccess, "all error" -> allError)
+      .foreach { case (what, input) =>
+        val before = CountingStore.puts.get
+        val (res, jobs) = jobsDuring {
+          Pipeline.run(spark, input, Pipeline.StageFlags(update = true),
+            store = Some(() => new CountingStore))
+        }
+        val puts = CountingStore.puts.get - before
+        val (ok, bad) = AlmaConnector.routeUpdateResult(
+          AlmaConnector.update(CsvStage.read(spark, input), () => new CountingStore))
+        val expected = Seq(res.success.get -> ok, res.error.get -> bad)
+        expected.foreach { case (out, old) =>
+          assert(rowsByFile(out, old.schema) == old.collect().map(_.toSeq).toSeq,
+            s"$what: $out")
+          val listing = new java.io.File(out).list().filterNot(_.startsWith("."))
+          assert(listing.contains("_SUCCESS"), s"$what: ${listing.toSeq}")
+          if (old.isEmpty) {
+            // the header-only file Spark writes for an empty frame
+            val empty = s"$dir/empty-${out.split('/').last}"
+            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], old.schema)
+              .write.option("header", "true").csv(empty)
+            val sparkFile = new java.io.File(empty).list().filter(_.startsWith("part-"))
+            val parts = listing.filter(_.startsWith("part-"))
+            assert(listing.length == 2 && parts.length == 1 && sparkFile.length == 1,
+              s"$what: ${listing.toSeq}")
+            assert(bytes(s"$out/${parts.head}") == bytes(s"$empty/${sparkFile.head}"), what)
+          }
+        }
+        val successes = ok.count()
+        assert(puts == successes, s"$what: $puts PUTs for $successes success rows")
+        what match {
+          case "fixture" =>
+            assert(successes > 0 && bad.count() > 0)
+            assert(jobs == 1, s"$what: the update stage ran $jobs jobs")
+          case "all success" => assert(bad.isEmpty && successes == 30)
+          case _ => assert(successes == 0 && bad.count() == 4)
+        }
+        val parent = new java.io.File(input).getParentFile
+        assert(!parent.list().exists(_.startsWith("upd_")), s"$what: ${parent.list().toSeq}")
+      }
+  }
+
+  test("update: a rerun whose write fails leaves the previous suc_/err_ " +
+    "as they were and no upd_ entry") {
+    val dir = Files.createTempDirectory("graft-routed-fail").toFile.getAbsolutePath
+    Files.writeString(Paths.get(s"$dir/items.csv"), fixtureText)
+    val first = Pipeline.run(spark, s"$dir/items.csv",
+      Pipeline.StageFlags(format = true, split = true, update = true),
+      store = Some(() => new PipelineSpec.CountingStore))
+    val before = Seq(first.success.get, first.error.get).map(contents)
+    intercept[SparkException] {
+      Pipeline.run(spark, first.split.get, Pipeline.StageFlags(update = true),
+        store = Some(() => new PipelineSpec.InterruptedStore))
+    }
+    assert(Seq(first.success.get, first.error.get).map(contents) == before)
+    assert(new java.io.File(dir).list().sorted.toSeq ==
+      Seq("err_items.csv", "f_items.csv", "items.csv", "s_items.csv", "suc_items.csv"))
+  }
+}
+
+object PipelineSpec {
+  /** [[AlmaConnectorSpec.StubStore]] that also counts its PUTs, JVM-wide
+    * (every executor under `local[N]`). */
+  class CountingStore extends AlmaConnectorSpec.StubStore {
+    override def put(url: String, xml: String): Int = {
+      CountingStore.puts.incrementAndGet()
+      super.put(url, xml)
+    }
+  }
+  object CountingStore {
+    val puts = new AtomicInteger
+  }
+
+  /** A store whose every call is interrupted, as a cancelled task's is:
+    * the update task fails. */
+  class InterruptedStore extends AlmaConnector.ItemStore with Serializable {
+    def fetch(barcode: String): (Int, String) = throw new InterruptedException("cancelled")
+    def put(url: String, xml: String): Int = throw new InterruptedException("cancelled")
   }
 }
