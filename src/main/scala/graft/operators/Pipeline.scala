@@ -1,13 +1,12 @@
 package graft.operators
 
-import java.io.{IOException, OutputStreamWriter}
-import java.util.UUID
+import java.io.IOException
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.csv.{CSVOptions, UnivocityGenerator}
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{monotonically_increasing_id, when}
-import org.apache.spark.sql.types.StructType
 
 import graft.model.{AlmaSchema, ColumnRegistry}
 import graft.sources.{AlmaConnector, CsvStage}
@@ -91,9 +90,13 @@ object Pipeline {
     * ordering the partitioned writer needs, so Spark adds no sort of its
     * own.
     *
-    * The routed outputs are replaced only after the write has committed: a
-    * failed write leaves the previous run's `suc_`/`err_` as they were, and
-    * the temporary directory is always removed. */
+    * The routed outputs are replaced only after the write has committed,
+    * and only once both route directories are ready (a route with no rows
+    * gets Spark's header-only file for an empty frame, one more job). The
+    * old `suc_`/`err_` are moved aside before the new ones are renamed in,
+    * and moved back if a rename fails: a failed write or a failed rename
+    * leaves the previous run's outputs as they were, and the temporary
+    * directory is always removed. */
   private def writeRouted(
       spark: SparkSession,
       annotated: DataFrame,
@@ -102,6 +105,8 @@ object Pipeline {
     val position = "__position"
     val tmp = new Path(CsvStage.stagedPath(current, "upd_") + ".staging")
     val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
+    def rename(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to)) throw new IOException(s"could not rename $from to $to")
     val routed = annotated
       .withColumn(route, when(AlmaConnector.succeeded, "suc_").otherwise("err_"))
       .drop("__status")
@@ -111,34 +116,33 @@ object Pipeline {
     try {
       routed.write.mode("overwrite").partitionBy(route)
         .option("header", "true").csv(tmp.toString)
-      def publish(prefix: String): String = {
-        val target = new Path(CsvStage.stagedPath(current, prefix))
-        val dir = new Path(tmp, s"$route=$prefix")
-        fs.delete(target, true)
-        if (!fs.exists(dir)) writeHeaderOnly(spark, fs, target, routed.drop(route).schema)
-        else if (!fs.rename(dir, target))
-          throw new IOException(s"could not rename $dir to $target")
-        // the marker Spark's own write leaves in an output directory
-        fs.create(new Path(target, "_SUCCESS")).close()
-        target.toString
+      // (route directory, target, where the old target waits)
+      val routes = Seq("suc_", "err_").map { prefix =>
+        (new Path(tmp, s"$route=$prefix"),
+          new Path(CsvStage.stagedPath(current, prefix)), new Path(tmp, s"old=$prefix"))
       }
-      (publish("suc_"), publish("err_"))
+      routes.foreach { case (dir, _, _) =>
+        if (fs.exists(dir))
+          // the marker Spark's own write leaves in an output directory
+          fs.create(new Path(dir, "_SUCCESS")).close()
+        else
+          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], routed.drop(route).schema)
+            .write.option("header", "true").csv(dir.toString)
+      }
+      var published = Set.empty[Path]
+      try routes.foreach { case (dir, target, old) =>
+        if (fs.exists(target)) rename(target, old)
+        rename(dir, target)
+        published += target
+      } catch {
+        case NonFatal(e) =>
+          routes.foreach { case (_, target, old) =>
+            if (published(target)) fs.delete(target, true)
+            if (fs.exists(old)) rename(old, target)
+          }
+          throw e
+      }
+      (routes(0)._2.toString, routes(1)._2.toString)
     } finally fs.delete(tmp, true)
-  }
-
-  /** A route with no rows gets the header-only part file Spark writes for
-    * an empty frame, written here on the driver so it runs no job. */
-  private def writeHeaderOnly(
-      spark: SparkSession,
-      fs: FileSystem,
-      dir: Path,
-      schema: StructType): Unit = {
-    val conf = spark.sessionState.conf
-    val options = new CSVOptions(Map("header" -> "true"),
-      conf.csvColumnPruning, conf.sessionLocalTimeZone)
-    val file = new Path(dir, s"part-00000-${UUID.randomUUID()}-c000.csv")
-    val gen = new UnivocityGenerator(schema,
-      new OutputStreamWriter(fs.create(file, false), options.charset), options)
-    try gen.writeHeaders() finally gen.close()
   }
 }

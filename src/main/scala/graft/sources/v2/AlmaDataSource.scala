@@ -3,6 +3,7 @@ package graft.sources.v2
 import java.util
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -138,7 +139,7 @@ private[v2] case class AlmaReaderFactory() extends PartitionReaderFactory {
           val bc = it.next()
           val (status, body) =
             try store.fetch(bc)
-            catch { case e: Exception => (-1, e.getMessage) }
+            catch { case NonFatal(e) => (-1, e.getMessage) }
           current = InternalRow(
             UTF8String.fromString(bc), status,
             UTF8String.fromString(body))
@@ -168,7 +169,7 @@ private[v2] case class AlmaWriterFactory(
         val code =
           try store.put(row.getUTF8String(urlIdx).toString,
             row.getUTF8String(xmlIdx).toString)
-          catch { case _: Exception => -1 }
+          catch { case NonFatal(_) => -1 }
         if (code == 200) ok += 1 else failed += 1
       }
       override def commit(): WriterCommitMessage = PutCounts(ok, failed)

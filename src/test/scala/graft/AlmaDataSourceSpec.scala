@@ -46,4 +46,56 @@ class AlmaDataSourceSpec extends SparkSuite {
       .save()
     assert(AlmaBatchWrite.lastCommitted == ((2L, 1L)))
   }
+
+  test("read: an interrupted fetch fails the task instead of becoming a " +
+    "-1 status, and no later barcode is fetched") {
+    import AlmaDataSourceSpec.InterruptingStore
+    val before = InterruptingStore.calls.get
+    val e = intercept[org.apache.spark.SparkException] {
+      spark.read.format("alma")
+        .option("storeClass", classOf[InterruptingStore].getName)
+        .option("barcodes", "100, 101, 102, 103")
+        .option("numPartitions", "1")
+        .load().collect()
+    }
+    assert(e.getMessage.contains("InterruptedException"), e.getMessage)
+    assert(InterruptingStore.calls.get - before == 2)
+  }
+
+  test("write: an interrupted PUT fails the task instead of counting as a " +
+    "failed PUT, and no later row is sent") {
+    import AlmaDataSourceSpec.InterruptingStore
+    val before = InterruptingStore.calls.get
+    val e = intercept[org.apache.spark.SparkException] {
+      Seq("100", "101", "102", "103")
+        .map(b => (s"http://stub/items/$b", "<item/>"))
+        .toDF("url", "xml").coalesce(1)
+        .write.format("alma")
+        .option("storeClass", classOf[InterruptingStore].getName)
+        .mode("append")
+        .save()
+    }
+    assert(e.getMessage.contains("InterruptedException"), e.getMessage)
+    assert(InterruptingStore.calls.get - before == 2)
+  }
+}
+
+object AlmaDataSourceSpec {
+  /** A store whose calls for barcode 101 are interrupted, as a cancelled
+    * task's are; counts every call JVM-wide (`local[N]`). */
+  class InterruptingStore extends graft.sources.AlmaConnector.ItemStore {
+    def fetch(barcode: String): (Int, String) = {
+      InterruptingStore.calls.incrementAndGet()
+      if (barcode == "101") throw new InterruptedException("cancelled")
+      else (200, "<item/>")
+    }
+    def put(url: String, xml: String): Int = {
+      InterruptingStore.calls.incrementAndGet()
+      if (url.endsWith("/101")) throw new InterruptedException("cancelled")
+      else 200
+    }
+  }
+  object InterruptingStore {
+    val calls = new java.util.concurrent.atomic.AtomicInteger
+  }
 }

@@ -1,7 +1,10 @@
 package graft
 
+import java.net.URI
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
+import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
 
 import org.apache.spark.{ListenerBusAccess, SparkException}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -285,6 +288,29 @@ class PipelineSpec extends SparkSuite {
     assert(new java.io.File(dir).list().sorted.toSeq ==
       Seq("err_items.csv", "f_items.csv", "items.csv", "s_items.csv", "suc_items.csv"))
   }
+
+  test("update: a rerun whose err_ rename fails after suc_ was replaced " +
+    "puts the previous suc_/err_ back and leaves no upd_ entry") {
+    import PipelineSpec.FaultyFs
+    spark.sparkContext.hadoopConfiguration.set("fs.faulty.impl", classOf[FaultyFs].getName)
+    val dir = Files.createTempDirectory("graft-routed-rename").toFile.getAbsolutePath
+    Files.writeString(Paths.get(s"$dir/items.csv"), fixtureText)
+    val first = Pipeline.run(spark, s"faulty://$dir/items.csv",
+      Pipeline.StageFlags(format = true, split = true, update = true),
+      store = Some(() => new PipelineSpec.CountingStore))
+    val outputs = Seq(first.success.get, first.error.get).map(new java.net.URI(_).getPath)
+    val before = outputs.map(contents)
+    FaultyFs.failNextErrRename.set(true)
+    val e = try intercept[java.io.IOException] {
+      Pipeline.run(spark, first.split.get, Pipeline.StageFlags(update = true),
+        store = Some(() => new PipelineSpec.CountingStore))
+    } finally FaultyFs.failNextErrRename.set(false)
+    assert(e.getMessage.contains("err_items.csv"), e.getMessage)
+    assert(outputs.forall(new java.io.File(_).isDirectory), outputs)
+    assert(outputs.map(contents) == before)
+    assert(new java.io.File(dir).list().sorted.toSeq ==
+      Seq("err_items.csv", "f_items.csv", "items.csv", "s_items.csv", "suc_items.csv"))
+  }
 }
 
 object PipelineSpec {
@@ -298,6 +324,19 @@ object PipelineSpec {
   }
   object CountingStore {
     val puts = new AtomicInteger
+  }
+
+  /** The local file system under the `faulty:` scheme; while
+    * `failNextErrRename` is set, the next rename onto an `err_` name
+    * returns false (and clears the flag). */
+  class FaultyFs extends RawLocalFileSystem {
+    override def getUri: URI = URI.create("faulty:///")
+    override def rename(src: HPath, dst: HPath): Boolean =
+      if (dst.getName.startsWith("err_") && FaultyFs.failNextErrRename.getAndSet(false)) false
+      else super.rename(src, dst)
+  }
+  object FaultyFs {
+    val failNextErrRename = new AtomicBoolean
   }
 
   /** A store whose every call is interrupted, as a cancelled task's is:
