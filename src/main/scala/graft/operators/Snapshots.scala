@@ -300,26 +300,32 @@ object Snapshots {
     * trips Spark's hidden-path filter (warning today, possibly an error
     * in a future release). */
   def manifest(spark: SparkSession, tablePath: String): DataFrame = {
-    recoverManifestSwap(spark, tablePath)
     // Assembled from PER-GENERATION reads, each served by the same
     // status-keyed memo [[manifestFor]] uses: a repeated full-history
-    // read (meta tables, maintenance verbs) costs the directory listing
-    // plus zero file opens once warm, and history growth re-reads only
-    // the new generations — where the former whole-directory
-    // mergeSchema read paid one driver job over O(versions) footers on
-    // EVERY call. Still materialized EAGERLY (metadata-scale by
-    // design): the frame is built from collected rows, so a read is a
-    // point-in-time snapshot of the manifest, never a torn one. A
-    // generation retracted between the listing and its read answers
-    // empty rows ([[manifestFor]]'s contract) — the same outcome the
-    // old retry-against-a-fresh-listing loop converged to. Row order
-    // is generation-ascending; consumers filter/aggregate and never
-    // depend on order (a DataFrame promises none).
-    val gens = listGenerations(spark, tablePath)
-    if (gens.isEmpty) return emptyManifest(spark)
-    val rows = gens.flatMap(v => manifestFor(spark, tablePath, v))
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), emptyManifest(spark).schema)
+    // read (meta tables, maintenance verbs) costs two directory
+    // listings plus zero file opens once warm, and history growth
+    // re-reads only the new generations. Materialized EAGERLY
+    // (metadata-scale by design). A whole-manifest swap
+    // ([[swapManifest]]: vacuum, purgeKeys) rewrites generation files
+    // under the SAME names, so one landing between two generation reads
+    // would mix pre- and post-swap rows: the assembly re-lists after
+    // reading and starts over when a generation it read is gone or
+    // carries another status. An append landing meanwhile changes no
+    // read generation, so the answer is still the view at the first
+    // listing. Row order is generation-ascending; consumers
+    // filter/aggregate and never depend on order (a DataFrame promises
+    // none).
+    var gens = generationStatuses(spark, tablePath)
+    while (true) {
+      val rows = gens.flatMap(g => manifestFor(spark, tablePath, g._1))
+      val now = generationStatuses(spark, tablePath)
+      if (gens.toSet.subsetOf(now.toSet))
+        return if (gens.isEmpty) emptyManifest(spark)
+        else spark.createDataFrame(
+          java.util.Arrays.asList(rows: _*), emptyManifest(spark).schema)
+      gens = now
+    }
+    throw new IllegalStateException("unreachable")
   }
 
   /** Manifests written by earlier layouts may lack the partition,
@@ -381,19 +387,31 @@ object Snapshots {
     * would materialize O(versions × files) rows to the driver. */
   private[graft] def listGenerations(
       spark: SparkSession,
-      tablePath: String): Seq[Long] = {
+      tablePath: String): Seq[Long] =
+    generationStatuses(spark, tablePath).map(_._1)
+
+  /** [[listGenerations]] with each generation file's (modificationTime,
+    * length) — the status a rewrite under the same name changes. */
+  private def generationStatuses(
+      spark: SparkSession,
+      tablePath: String): Seq[(Long, (Long, Long))] = {
     recoverManifestSwap(spark, tablePath)
     manifestDirListings.incrementAndGet()
-    val dir = s"$tablePath/$VersionsDir"
-    if (!fs(spark, tablePath).exists(new Path(dir))) Seq.empty
-    else genFilesOf(listDataFiles(spark, dir))
-      .map(p => new Path(p).getName).map {
-      case GenFileName(v) => v.toLong
-      case other => throw new IllegalStateException(
-        s"manifest file '$other' in $dir does not carry its generation " +
-          "number (gen-v<N>.parquet) — written by a foreign tool? The " +
-          "version-bounded reads cannot resolve it")
-    }.sorted
+    val dir = new Path(s"$tablePath/$VersionsDir")
+    val f = fs(spark, tablePath)
+    if (!f.exists(dir)) Seq.empty
+    else f.listStatus(dir).toSeq.filter { s =>
+      val n = s.getPath.getName
+      s.isFile && !n.startsWith("_") && !isCkptFile(n)
+    }.map { s =>
+      s.getPath.getName match {
+        case GenFileName(v) => v.toLong -> (s.getModificationTime -> s.getLen)
+        case other => throw new IllegalStateException(
+          s"manifest file '$other' in $dir does not carry its generation " +
+            "number (gen-v<N>.parquet) — written by a foreign tool? The " +
+            "version-bounded reads cannot resolve it")
+      }
+    }.sortBy(_._1)
   }
 
   /** The manifest rows of ONE generation, read from that generation's
@@ -910,7 +928,7 @@ object Snapshots {
   /** Withdraw a generation attempt: its manifest file (if it
     * published) and every version-keyed sidecar dir its verb may have
     * written before the refusal — without this, a refused
-    * [[deleteWhere]]'s `_dv/v<N>` sidecar would keep GOVERNING later
+    * [[deleteWhere]]'s deletion-vector sidecar would keep GOVERNING later
     * reads through latest-at-or-below resolution, applying deletes
     * that were never committed. Data files stay ([[removeOrphans]]'
     * territory) and the claim marker stays burned (a benign numeric
@@ -923,7 +941,7 @@ object Snapshots {
     f.delete(new Path(s"$tablePath/$VersionsDir/gen-v$version.parquet"),
       false)
     f.delete(branchOverMarker(tablePath, version), false)
-    (Seq(dvDir(tablePath, version), eqDir(tablePath, version)) ++
+    (eqDir(tablePath, version) +:
       sidecarFamilies.map(_.dirAt(tablePath, version)))
       .foreach(d => f.delete(new Path(d), true))
   }
@@ -1593,8 +1611,9 @@ object Snapshots {
     // the governing deletion vectors apply to the touched-partition
     // scan too — a rewrite that read the raw files would resurrect
     // DV-deleted rows into the new generation's fresh files
-    val dv = dvSet(spark, tablePath, latest)
-    val l2p = logicalToPhysical(colMapAsOf(spark, tablePath, latest))
+    val gens = resolveSidecars(spark, tablePath, latest, allowEq = true)
+    val dv = dvSetOf(spark, gens)
+    val l2p = logicalToPhysical(colMapOf(spark, gens))
     val survivors =
       if (touchedFiles.isEmpty) inserts.limit(0)
       else
@@ -1845,20 +1864,6 @@ object Snapshots {
         a.unionByName(b, allowMissingColumns = true))
   }
 
-  /** Expire every version below `keepFrom`: drop their manifest
-    * generations, then delete the data files no retained generation
-    * references. Returns the number of files deleted. The manifest
-    * rewrite stages through a sibling directory, moves the live
-    * manifest ASIDE (`_versions_prev`), renames the staged one in, and
-    * only then deletes the aside copy — so a COMPLETE manifest exists
-    * on disk at every instant. A crash between the renames (live
-    * missing, staged complete) is rolled forward by
-    * [[recoverManifestSwap]] on the next read; a crash before them
-    * leaves the live manifest untouched. */
-  /** Replace the ENTIRE live manifest with `rows` via the crash-safe
-    * staged swap ([[recoverManifestSwap]]'s contract): staged write →
-    * live moved aside → staged renamed in → aside deleted, so a
-    * COMPLETE manifest exists on disk at every instant. */
   /** Maintenance guard: the whole-manifest swap verbs ([[vacuum]],
     * [[purgeKeys]]) rewrite EVERY generation's rows from a
     * point-in-time snapshot — a commit racing past that snapshot would
@@ -1882,6 +1887,10 @@ object Snapshots {
           "erased by the swap; re-read and retry")
   }
 
+  /** Replace the ENTIRE live manifest with `rows` via the crash-safe
+    * staged swap ([[recoverManifestSwap]]'s contract): staged write →
+    * live moved aside → staged renamed in → aside deleted, so a
+    * COMPLETE manifest exists on disk at every instant. */
   private def swapManifest(
       spark: SparkSession,
       tablePath: String,
@@ -1960,6 +1969,16 @@ object Snapshots {
     f.delete(prev, true)
   }
 
+  /** Expire every version below `keepFrom`: drop their manifest
+    * generations, then delete the data files no retained generation
+    * references. Returns the number of files deleted. The manifest
+    * rewrite stages through a sibling directory, moves the live
+    * manifest ASIDE (`_versions_prev`), renames the staged one in, and
+    * only then deletes the aside copy — so a COMPLETE manifest exists
+    * on disk at every instant. A crash between the renames (live
+    * missing, staged complete) is rolled forward by
+    * [[recoverManifestSwap]] on the next read; a crash before them
+    * leaves the live manifest untouched. */
   def vacuum(
       spark: SparkSession,
       tablePath: String,
@@ -1968,7 +1987,8 @@ object Snapshots {
     // below themselves — expiring any part of that chain would
     // silently resurrect deletes; fold first
     latestVersion(spark, tablePath).foreach(h =>
-      requireNotEqGoverned(spark, tablePath, h, "vacuum"))
+      requireNotEqGoverned(liveEqDirs(spark, tablePath, h).nonEmpty,
+        tablePath, h, "vacuum"))
     val m = manifest(spark, tablePath)
     val keptRows = m.filter(col("version") >= keepFrom)
       .select(col("version"), col("file"), col("part"), col("schema_json"),
@@ -2027,37 +2047,20 @@ object Snapshots {
         { f.delete(new Path(file), false); true }
     }
 
-    // deletion-vector sidecars do NOT simply ride their version: a
-    // delete committed below keepFrom still GOVERNS every retained
-    // read (resolveDvDir walks downward). Materialize the oldest
-    // retained version's governing set AT keepFrom first — pruned to
-    // files a retained generation still references (DV compaction) —
-    // then the dropped dirs are safe to expire: every retained
-    // version's resolution lands on its own dir or this one,
-    // unchanged in content.
-    resolveDvDir(spark, tablePath, keepFrom).foreach { case (dvV, dir) =>
-      if (dvV < keepFrom) {
-        val keptFiles = spark.createDataFrame(
-          kept.toSeq.map(Tuple1(_))).toDF("file")
-        val pruned = spark.read.schema(dvSchema).parquet(dir)
-          .join(keptFiles, Seq("file"), "left_semi")
-        writeDvSet(spark, tablePath, keepFrom, pruned)
-      }
-    }
-    // the write-governance families follow the same rule (no file
-    // pruning — they reference columns, not files)
-    GovFamilies.foreach { g =>
-      if (sidecarResolve(spark, g.root(tablePath), keepFrom)
-          .exists(_._1 < keepFrom))
-        g.carry(spark, tablePath, keepFrom, tablePath, keepFrom)
-    }
+    // carried sidecars do NOT simply ride their version: a set
+    // committed below keepFrom still GOVERNS every retained read
+    // (resolution walks downward). Materialize the oldest retained
+    // version's governing set AT keepFrom first, then the dropped dirs
+    // are safe to expire: every retained version's resolution lands on
+    // its own dir or this one, unchanged in content.
+    CarriedFamilies.foreach(_.materializeAt(spark, tablePath, keepFrom, kept))
 
     // per-version sidecars ride their version: expired generations'
     // stats dirs and commit markers go with their data (retained
     // versions keep theirs; claims only ever move upward, so dropping
     // an old marker can never free a number for re-minting)
     droppedVersions.foreach { v =>
-      (dvDir(tablePath, v) +: sidecarFamilies.map(_.dirAt(tablePath, v)))
+      sidecarFamilies.map(_.dirAt(tablePath, v))
         .foreach { d =>
           val sd = new Path(d)
           if (f.exists(sd)) f.delete(sd, true)
@@ -2211,11 +2214,6 @@ object Snapshots {
   // Deletion vectors — row-level DELETE without rewriting data files
   // ------------------------------------------------------------------
 
-  private def dvRoot(tablePath: String): String = s"$tablePath/_dv"
-
-  private def dvDir(tablePath: String, version: Long): String =
-    s"${dvRoot(tablePath)}/v$version"
-
   /** Internal column names for the row identity a DV apply needs —
     * captured from the parquet scan's `_metadata` struct, rendered by
     * the same scan machinery on both the delete and the read side, so
@@ -2235,17 +2233,24 @@ object Snapshots {
     * GOVERNS all later versions until superseded (deletion vectors,
     * CHECK constraints): each dir holds the FULL applicable set of its
     * version (not a delta), so append commits inherit their ancestor's
-    * set without copying anything, while [[rollback]]/[[cloneTable]]
-    * re-materialize their target's set so restored content never
-    * inherits metadata committed after the target. Returns
+    * set without copying anything, while [[publishFace]] carries its
+    * source's set so restored content never inherits metadata
+    * committed after the source. Returns
     * (sidecarVersion, dir); None when nothing governs `version`. */
   private def sidecarResolve(
       spark: SparkSession,
       rootDir: String,
-      version: Long): Option[(Long, String)] = {
+      version: Long): Option[(Long, String)] =
+    pickAtOrBelow(sidecarListed(spark, rootDir), version)
+
+  /** Every generation dir of a sidecar family root, sorted by version —
+    * empty when the family does not exist. */
+  private def sidecarListed(
+      spark: SparkSession,
+      rootDir: String): Seq[(Long, String)] = {
     val f = fs(spark, rootDir)
-    if (!f.exists(new Path(rootDir))) None
-    else pickAtOrBelow(sidecarFamilyListed(f, rootDir), version)
+    if (!f.exists(new Path(rootDir))) Seq.empty
+    else sidecarFamilyListed(f, rootDir)
   }
 
   /** One LISTING of a sidecar family root: every `v<N>` generation dir,
@@ -2354,16 +2359,11 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       version: Long): Seq[(Long, String)] = {
-    val f = fs(spark, tablePath)
-    if (!f.exists(new Path(eqRoot(tablePath)))) Seq.empty
+    val fam = sidecarListed(spark, eqRoot(tablePath)).filter(_._1 <= version)
+    if (fam.isEmpty) Seq.empty
     else {
-      val fam = sidecarFamilyListed(f, eqRoot(tablePath))
-        .filter(_._1 <= version)
-      if (fam.isEmpty) Seq.empty
-      else {
-        val live = listGenerations(spark, tablePath).toSet
-        fam.filter(d => live.contains(d._1))
-      }
+      val live = listGenerations(spark, tablePath).toSet
+      fam.filter(d => live.contains(d._1))
     }
   }
 
@@ -2384,11 +2384,11 @@ object Snapshots {
     * face would rewrite rows WITHOUT applying the tombstones,
     * resurrecting deleted keys. */
   private def requireNotEqGoverned(
-      spark: SparkSession,
+      governed: Boolean,
       tablePath: String,
       version: Long,
       verb: String): Unit =
-    require(liveEqDirs(spark, tablePath, version).isEmpty,
+    require(!governed,
       s"$verb: version $version of $tablePath is governed by " +
         "equality-delete tombstones — foldEqDeletes materializes the " +
         "merge-on-read face before copy-on-write verbs apply")
@@ -2737,11 +2737,18 @@ object Snapshots {
     * verbs used to pay an exists+list pair PER FAMILY PER CALL, a
     * constant that grew with every sidecar family the engine accrued
     * (the r16 q25/q28 read-path creep); this caps it at 1 + families
-    * actually present, however many verbs stack. */
+    * actually present, however many verbs stack. The deletion-vector
+    * family's whole listing is kept, so an interval verb picks its
+    * other endpoint's set from the same listing ([[dvAt]]). */
   private[graft] final case class SidecarGens(
-      dv: Option[(Long, String)],
+      version: Long,
+      dvListed: Seq[(Long, String)],
       gov: Map[GovFamily[_], (Long, String)],
-      eq: Option[(Long, String)] = None)
+      eq: Option[(Long, String)]) {
+    def dv: Option[(Long, String)] = dvAt(version)
+
+    def dvAt(v: Long): Option[(Long, String)] = pickAtOrBelow(dvListed, v)
+  }
 
   private[graft] def resolveSidecars(
       spark: SparkSession,
@@ -2752,11 +2759,9 @@ object Snapshots {
     sidecarListings.incrementAndGet()
     val present = f.listStatus(new Path(tablePath))
       .filter(_.isDirectory).map(_.getPath.getName).toSet
-    def fam(root: String): Option[(Long, String)] = {
-      val name = root.substring(root.lastIndexOf('/') + 1)
-      if (!present.contains(name)) None
-      else pickAtOrBelow(sidecarFamilyListed(f, root), version)
-    }
+    def listed(fam: SidecarFamily): Seq[(Long, String)] =
+      if (!present.contains(fam.dirName)) Seq.empty
+      else sidecarFamilyListed(f, fam.root(tablePath))
     val eqPick =
       if (!present.contains("_eq")) None
       else {
@@ -2782,9 +2787,9 @@ object Snapshots {
         "tombstones (merge-on-read) — a plain scan would resurrect " +
         "deleted keys; read via readMorAsOf, or foldEqDeletes to " +
         "materialize a copy-on-write face")
-    SidecarGens(
-      fam(dvRoot(tablePath)),
-      GovFamilies.flatMap(g => fam(g.root(tablePath)).map(g -> _)).toMap,
+    SidecarGens(version, listed(Dv),
+      GovFamilies.flatMap(g =>
+        pickAtOrBelow(listed(g), version).map(g -> _)).toMap,
       eqPick)
   }
 
@@ -2793,9 +2798,7 @@ object Snapshots {
   private def dvSetOf(
       spark: SparkSession,
       gens: SidecarGens): Option[DataFrame] =
-    gens.dv.map { case (_, dir) =>
-      spark.read.schema(dvSchema).parquet(dir)
-    }
+    gens.dv.map { case (_, dir) => Dv.read(spark, dir) }
 
   /** The governing column mapping from an already-resolved
     * [[SidecarGens]] — zero further listings. */
@@ -2804,20 +2807,6 @@ object Snapshots {
       gens: SidecarGens): Seq[(String, Option[String])] =
     gens.gov.get(ColMap).map { case (_, dir) => ColMap.read(spark, dir) }
       .getOrElse(Seq.empty)
-
-  /** (file, part) rows + stored schema of ONE generation from a single
-    * eager manifest read — the verbs that once called [[manifest]]
-    * twice per answer (rows, then [[storedSchema]]) derive both from
-    * the same point-in-time snapshot. */
-  /** [[generationOf]] for the package's other faces (the SQL catalog
-    * plans scans from exactly these file rows). */
-  private[graft] def generationFiles(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long)
-      : (Seq[(String, String)],
-        Option[org.apache.spark.sql.types.StructType]) =
-    generationOf(spark, tablePath, version)
 
   /** (file, partition fragment, footer row count) of ONE generation —
     * the SQL catalog's `files` metadata-table face, read from that
@@ -2837,7 +2826,10 @@ object Snapshots {
       if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSeq
   }
 
-  private def generationOf(
+  /** (file, part) rows + stored schema of ONE generation from a single
+    * eager manifest read, so both come from the same point-in-time
+    * snapshot — what readers and the SQL catalog plan scans from. */
+  private[graft] def generationOf(
       spark: SparkSession,
       tablePath: String,
       version: Long)
@@ -2852,24 +2844,6 @@ object Snapshots {
       storedSchemaOf(rows))
   }
 
-  /** See [[sidecarResolve]] — the deletion-vector instance. */
-  private def resolveDvDir(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long): Option[(Long, String)] =
-    sidecarResolve(spark, dvRoot(tablePath), version)
-
-  /** The governing DV set of `version` as a (file, row_index) frame —
-    * None when no delete governs it. Metadata-scale: bounded by rows
-    * DELETED, never by table size. */
-  private def dvSet(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long): Option[DataFrame] =
-    resolveDvDir(spark, tablePath, version).map { case (_, dir) =>
-      spark.read.schema(dvSchema).parquet(dir)
-    }
-
   /** The normalized file set one DV sidecar dir records — the SQL
     * catalog's dv-governed probe ([[graft.sources.v2.GraftCatalog]]
     * resolves EVERY statement's table references through it), memoized
@@ -2879,56 +2853,47 @@ object Snapshots {
       spark: SparkSession,
       dir: String): Set[String] =
     memoizedMeta(fs(spark, dir), new Path(dir), "dvfiles") {
-      spark.read.schema(dvSchema).parquet(dir)
-        .select(col("file")).distinct()
+      Dv.read(spark, dir).select(col("file")).distinct()
         .collect().map(r => normPath(r.getString(0))).toSet
     }
 
-  private def writeDvSet(
+  /** Does a deletion-vector entry of ANY generation touch one of
+    * `files`? Callers pass files a manifest still lists, so entries on
+    * files that left the lineage never count; an entry of a generation
+    * that no longer governs (superseded, or expired but not yet swept)
+    * does. That errs on the safe side for the guards that use it —
+    * verbs whose answers would silently go wrong under row-level
+    * deletes, and the streaming table feed, which cannot anti-join
+    * vectors mid-flight. Metadata-scale: every DV dir is bounded by
+    * deletes. */
+  private[graft] def liveDvEntriesExist(
+      spark: SparkSession,
+      tablePath: String,
+      files: Seq[String]): Boolean = {
+    val dirs = sidecarListed(spark, Dv.root(tablePath)).map(_._2)
+    dirs.nonEmpty && {
+      val filesDf = spark.createDataFrame(
+        files.distinct.map(Tuple1(_))).toDF("file")
+      spark.read.schema(dvSchema).parquet(dirs: _*)
+        .join(filesDf, Seq("file"), "left_semi")
+        .limit(1).collect().nonEmpty
+    }
+  }
+
+  /** Does the deletion-vector set governing `version` touch one of
+    * `files`? The SQL catalog's scan guard, evaluated on every
+    * statement's table load — the recorded file set is memoized per
+    * published dir ([[dvRecordedFiles]]). */
+  private[graft] def dvGovernsAny(
       spark: SparkSession,
       tablePath: String,
       version: Long,
-      rows: DataFrame): Unit =
-    rows.select(col("file"), col("row_index"))
-      .coalesce(1)
-      .write.mode("errorifexists").parquet(dvDir(tablePath, version))
-
-  /** Does ANY deletion-vector entry reference a file some manifest
-    * generation still lists? Metadata-scale (every DV dir is bounded
-    * by deletes); the guard for verbs whose answers would silently go
-    * wrong under live row-level deletes. Dead entries (files already
-    * replaced or compacted away) don't count. */
-  /** True when ANY deletion-vector sidecar entry (any generation, live
-    * or expired-but-undeleted) touches one of `files` — the
-    * conservative gate the streaming table feed uses: a stream scan
-    * cannot anti-join vectors mid-flight, and over-refusing a dead
-    * entry is safe where under-refusing a live one replays deleted
-    * rows. */
-  private[graft] def dvEntriesTouch(
-      spark: SparkSession,
-      tablePath: String,
       files: Seq[String]): Boolean =
-    liveDvEntriesExist(spark, tablePath, files)
-
-  private def liveDvEntriesExist(
-      spark: SparkSession,
-      tablePath: String,
-      manifestFiles: Seq[String]): Boolean = {
-    val f = fs(spark, tablePath)
-    val root = new Path(dvRoot(tablePath))
-    if (!f.exists(root)) false
-    else {
-      val dirs = f.listStatus(root).filter(_.isDirectory)
-        .map(_.getPath.toString)
-      dirs.nonEmpty && {
-        val filesDf = spark.createDataFrame(
-          manifestFiles.distinct.map(Tuple1(_))).toDF("file")
-        spark.read.schema(dvSchema).parquet(dirs.toIndexedSeq: _*)
-          .join(filesDf, Seq("file"), "left_semi")
-          .limit(1).collect().nonEmpty
-      }
+    sidecarResolve(spark, Dv.root(tablePath), version).exists {
+      case (_, dir) =>
+        val dvFiles = dvRecordedFiles(spark, dir)
+        files.exists(f => dvFiles.contains(normPath(f)))
     }
-  }
 
   /** Anti-join `df` (carrying the [[DvFileCol]]/[[DvPosCol]] row
     * identity) against a DV set. The DV side is a file-based relation
@@ -2993,7 +2958,7 @@ object Snapshots {
   /** Row-level DELETE as a metadata commit — deletion vectors, the
     * merge-on-read half of the lakehouse delete design space: the new
     * version's manifest carries the parent's data files VERBATIM (zero
-    * rows rewritten — spec-pinned), plus a `_dv/v<version>` sidecar of
+    * rows rewritten — spec-pinned), plus a deletion-vector sidecar of
     * the (file, row_index) identities the predicate doomed, applied as
     * an anti-join by every read of this version onward. Copy-on-write
     * ([[mergePartitioned]], [[purgeKeys]]) pays O(touched files) per
@@ -3007,7 +2972,7 @@ object Snapshots {
     * entries plus the fresh ones — disjoint by construction, the fresh
     * side is filtered from the already-DV-applied live view), so a
     * reader resolves ONE directory, and versions committed in between
-    * by DV-unaware verbs inherit correctly (see [[resolveDvDir]]).
+    * by DV-unaware verbs inherit correctly (see [[sidecarResolve]]).
     * Older versions read back undeleted — MVCC — and [[rollback]]
     * restores the target's set. Returns the minted version. */
   def deleteWhere(
@@ -3021,7 +2986,7 @@ object Snapshots {
     val version = claimVersion(spark, tablePath, face.observed + 1L)
     val full = face.prior.fold(fresh)(p =>
       p.select(col("file"), col("row_index")).unionByName(fresh))
-    writeDvSet(spark, tablePath, version, full)
+    Dv.write(spark, tablePath, version, full)
     publishDerived(spark, tablePath, version, face.fileRows,
       face.schemaJson, ts, face.observed, "deleteWhere")
   }
@@ -3055,10 +3020,11 @@ object Snapshots {
       fileRows.partition(r => dirty.contains(normPath(r._1)))
   }
 
-  /** Resolve a DML verb's [[DmlFace]] at the current head. A table with
-    * no committed versions or a tombstone-governed head refuses; a
-    * head retracted between its resolution and the read is the
-    * retry-able conflict of [[observedGeneration]]. */
+  /** Resolve a DML verb's [[DmlFace]] at the current head, its
+    * sidecars from one [[resolveSidecars]] pass. A table with no
+    * committed versions or a tombstone-governed head refuses; a head
+    * retracted between its resolution and the read is the retry-able
+    * conflict of [[observedGeneration]]. */
   private def dmlFace(
       spark: SparkSession,
       tablePath: String,
@@ -3066,12 +3032,12 @@ object Snapshots {
     val observed = latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"$verb: $tablePath has no committed versions"))
-    requireNotEqGoverned(spark, tablePath, observed, verb)
+    val gens = resolveSidecars(spark, tablePath, observed, allowEq = true)
+    requireNotEqGoverned(gens.eq.nonEmpty, tablePath, observed, verb)
     val gen = observedGeneration(spark, tablePath, observed, verb)
     DmlFace(spark, tablePath, observed, fileRowsOf(gen),
       schemaJsonOf(gen).orNull, storedSchemaOf(gen),
-      logicalToPhysical(colMapAsOf(spark, tablePath, observed)),
-      dvSet(spark, tablePath, observed))
+      logicalToPhysical(colMapOf(spark, gens)), dvSetOf(spark, gens))
   }
 
   /** The normalized set of files a live frame (or a frame derived from
@@ -3305,7 +3271,7 @@ object Snapshots {
       val survivingFiles = p.select(col("file")).distinct().collect()
         .map(_.getString(0))
         .filter(f => !dirtySet.contains(normPath(f)))
-      writeDvSet(spark, tablePath, version,
+      Dv.write(spark, tablePath, version,
         if (survivingFiles.isEmpty) p.limit(0)
         else p.filter(col("file").isin(survivingFiles.toIndexedSeq: _*)))
     }
@@ -3781,25 +3747,103 @@ object Snapshots {
       s"${root(tablePath)}/v$version"
   }
 
-  /** The write-governance and pruning-index families. */
+  /** The carried, write-governance and pruning-index families. */
   private def sidecarFamilies: Seq[SidecarFamily] =
-    GovFamilies ++ IndexFamilies
+    CarriedFamilies ++ IndexFamilies
 
-  /** One versioned WRITE-GOVERNANCE sidecar family: each
-    * `<table>/<dirName>/v<N>` holds the FULL governing set of generation
-    * N as (key, value) string rows — `value` decoded from a nullable
-    * string — resolved latest-at-or-below ([[sidecarResolve]]), so
-    * governance travels with the table, appends inherit without
-    * copying, and every face replays under exactly the sets it was
-    * written under. [[GovFamilies]] lists them; every verb that moves
-    * governance between versions iterates that list. Deletion vectors
-    * stay outside: they govern reads, not batch preparation, and
-    * vacuum prunes them to kept files. */
+  /** A CARRIED sidecar family: each `<table>/<dirName>/v<N>` holds the
+    * FULL set governing generation N (a set of type `S`), resolved
+    * latest-at-or-below ([[sidecarResolve]]), so appends inherit
+    * without copying and every face replays under exactly the sets it
+    * was written under. [[CarriedFamilies]] lists them; every verb that
+    * publishes another version's face ([[publishFace]]) or expires the
+    * versions a set was written at ([[vacuum]]) iterates that list. */
+  private[graft] abstract class CarriedFamily[S](dirName: String)
+      extends SidecarFamily(dirName) {
+
+    /** One published dir's set. */
+    def read(spark: SparkSession, dir: String): S
+
+    def write(
+        spark: SparkSession,
+        tablePath: String,
+        version: Long,
+        set: S): Unit
+
+    /** The empty set — written, it masks every set below it. */
+    def empty(spark: SparkSession): S
+
+    /** `set` restricted to the data files a vacuum retains. */
+    protected def retain(spark: SparkSession, set: S, kept: Set[String]): S =
+      set
+
+    /** The carry rule: `src`'s set governing `srcVersion` becomes
+      * `dst`'s at `dstVersion` when it exists or `dst` already has this
+      * family — an EMPTY set then masks sets committed after the source
+      * face instead of inheriting them. */
+    def carry(
+        spark: SparkSession,
+        src: String,
+        srcVersion: Long,
+        dst: String,
+        dstVersion: Long): Unit = {
+      val set = sidecarResolve(spark, root(src), srcVersion)
+      if (set.nonEmpty || fs(spark, dst).exists(new Path(root(dst))))
+        write(spark, dst, dstVersion,
+          set.fold(empty(spark)) { case (_, dir) => read(spark, dir) })
+    }
+
+    /** [[vacuum]]'s step: a set governing `keepFrom` from BELOW it is
+      * written at `keepFrom` (restricted to the `kept` files), so the
+      * dirs of the expired versions can go. */
+    def materializeAt(
+        spark: SparkSession,
+        tablePath: String,
+        keepFrom: Long,
+        kept: Set[String]): Unit =
+      sidecarResolve(spark, root(tablePath), keepFrom).foreach {
+        case (v, dir) if v < keepFrom =>
+          write(spark, tablePath, keepFrom,
+            retain(spark, read(spark, dir), kept))
+        case _ =>
+      }
+  }
+
+  /** Deletion vectors: the (file, row_index) identities deleted from
+    * the data files, read as a frame. They govern reads, not batch
+    * preparation; a vacuum prunes them to the files it keeps. */
+  private object Dv extends CarriedFamily[DataFrame]("_dv") {
+    def read(spark: SparkSession, dir: String): DataFrame =
+      spark.read.schema(dvSchema).parquet(dir)
+
+    def write(
+        spark: SparkSession,
+        tablePath: String,
+        version: Long,
+        set: DataFrame): Unit =
+      set.select(col("file"), col("row_index"))
+        .coalesce(1)
+        .write.mode("errorifexists").parquet(dirAt(tablePath, version))
+
+    def empty(spark: SparkSession): DataFrame =
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], dvSchema)
+
+    override protected def retain(
+        spark: SparkSession,
+        set: DataFrame,
+        kept: Set[String]): DataFrame =
+      set.join(spark.createDataFrame(kept.toSeq.map(Tuple1(_))).toDF("file"),
+        Seq("file"), "left_semi")
+  }
+
+  /** One WRITE-GOVERNANCE family — what batch preparation bakes into a
+    * batch: its set is (key, value) string rows, `value` decoded from a
+    * nullable string. [[GovFamilies]] lists them. */
   private[graft] final class GovFamily[V](
       dirName: String,
       keyCol: String,
       valCol: String,
-      decode: String => V) extends SidecarFamily(dirName) {
+      decode: String => V) extends CarriedFamily[Seq[(String, V)]](dirName) {
 
     /** One published dir's rows, sorted by key — memoized per dir
       * ([[memoizedMeta]]): every ingest into a governed table and every
@@ -3832,22 +3876,7 @@ object Snapshots {
         Seq(keyCol -> false, valCol -> false),
         set.map { case (k, v) => Seq[Any](k, v) })
 
-    /** The carry rule of every verb that publishes another version's
-      * face ([[rollback]], [[cloneTable]], [[fastForward]], [[vacuum]]'s
-      * re-materialization): `src`'s set governing `srcVersion` becomes
-      * `dst`'s at `dstVersion` when it is non-empty or `dst` already has
-      * this family — an EMPTY set then masks governance committed after
-      * the source face instead of inheriting it. */
-    def carry(
-        spark: SparkSession,
-        src: String,
-        srcVersion: Long,
-        dst: String,
-        dstVersion: Long): Unit = {
-      val set = asOf(spark, src, srcVersion)
-      if (set.nonEmpty || fs(spark, dst).exists(new Path(root(dst))))
-        write(spark, dst, dstVersion, set)
-    }
+    def empty(spark: SparkSession): Seq[(String, V)] = Seq.empty
   }
 
   /** CHECK constraints: (name, exprSql). */
@@ -3866,6 +3895,10 @@ object Snapshots {
   /** Every write-governance family — a new family is one entry here. */
   private[graft] val GovFamilies: Seq[GovFamily[_]] =
     Seq(Constraints, ColMap, GenCols)
+
+  /** Every carried family — a new one is one entry here. */
+  private[graft] val CarriedFamilies: Seq[CarriedFamily[_]] =
+    Dv +: GovFamilies
 
   /** What a metadata-only DDL verb changes at the version it mints: the
     * stored schema (None keeps the head's) and the governance set it
@@ -5200,30 +5233,8 @@ object Snapshots {
     val observed = latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"rollback: $tablePath has no committed versions"))
-    val gen = manifestFor(spark, tablePath, toVersion)
-    require(gen.nonEmpty,
-      s"rollback: snapshot version $toVersion of $tablePath is not in " +
-        "the manifest (never committed, or expired by vacuum)")
-    val rows = fileRowsOf(gen)
-    val schemaJson = schemaJsonOf(gen).orNull
-    val version = claimVersion(spark, tablePath, observed + 1L)
-    // a rollback RESTORES content: re-materialize the TARGET's
-    // governing DV set (possibly empty) at the new version, masking
-    // any deletes committed in between — without this, resolveDvDir
-    // would hand the restored snapshot a later delete's entries and
-    // the rollback would silently keep them deleted
-    if (fs(spark, tablePath).exists(new Path(dvRoot(tablePath)))) {
-      val restored = dvSet(spark, tablePath, toVersion).getOrElse(
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], dvSchema))
-      writeDvSet(spark, tablePath, version, restored)
-    }
-    // same restore rule for the write-governance families: the rolled-
-    // back head reads, writes and validates under the TARGET's
-    // constraints, names and generators, not changes committed after it
-    GovFamilies.foreach(_.carry(spark, tablePath, toVersion, tablePath,
-      version))
-    publishDerived(spark, tablePath, version, rows, schemaJson, ts,
-      observed, "rollback")
+    publishFace(spark, tablePath, toVersion, tablePath, Some(observed),
+      "rollback", ts)
   }
 
   /** ZERO-COPY shallow clone: fork `srcTable`'s snapshot `version` as
@@ -5250,21 +5261,38 @@ object Snapshots {
       dstTable: String): Long = {
     require(latestVersion(spark, dstTable).isEmpty,
       s"cloneTable: destination $dstTable already has commits")
-    val gen = manifestFor(spark, srcTable, version)
+    publishFace(spark, srcTable, version, dstTable, None, "cloneTable")
+  }
+
+  /** The tail of every verb that publishes another version's face as a
+    * new version of `dst` ([[rollback]], [[cloneTable]],
+    * [[fastForward]]): `src`'s generation `srcVersion` — refused by
+    * name when it is not in the manifest — repointed verbatim (files,
+    * fragments, schema, row counts) under a version claimed above
+    * `onto`, with every carried family's set moved along: the face
+    * reads, writes and validates under the deletes, constraints, names
+    * and generators it had at the source, never ones committed after
+    * it. `onto` is the `dst` head the new version derives from (a
+    * derived commit, refused when the head moved); None for a fresh
+    * `dst`, whose version 0 has no parent. */
+  private def publishFace(
+      spark: SparkSession,
+      src: String,
+      srcVersion: Long,
+      dst: String,
+      onto: Option[Long],
+      verb: String,
+      ts: Option[Long] = None): Long = {
+    val gen = manifestFor(spark, src, srcVersion)
     require(gen.nonEmpty,
-      s"cloneTable: snapshot version $version of $srcTable is not in " +
+      s"$verb: snapshot version $srcVersion of $src is not in " +
         "the manifest (never committed, or expired by vacuum)")
     val rows = fileRowsOf(gen)
     val schemaJson = schemaJsonOf(gen).orNull
-    val v = claimVersion(spark, dstTable, 0L)
-    // the source's governing DV set transfers with the pointers —
-    // a clone of a deleted-from snapshot must not resurrect its rows
-    dvSet(spark, srcTable, version).foreach(d =>
-      writeDvSet(spark, dstTable, v, d))
-    // and so does its write governance — the fork starts life under
-    // the same invariants, names and generators it was cut from
-    GovFamilies.foreach(_.carry(spark, srcTable, version, dstTable, v))
-    publishRows(spark, dstTable, v, rows, schemaJson, None, None)
+    val version = claimVersion(spark, dst, onto.fold(0L)(_ + 1L))
+    CarriedFamilies.foreach(_.carry(spark, src, srcVersion, dst, version))
+    onto.fold(publishRows(spark, dst, version, rows, schemaJson, ts, None))(
+      publishDerived(spark, dst, version, rows, schemaJson, ts, _, verb))
   }
 
   // ------------------------------------------------------------------
@@ -5387,21 +5415,8 @@ object Snapshots {
     val bHead = latestVersion(spark, root).getOrElse(
       throw new IllegalArgumentException(
         s"fastForward('$name'): the branch has no commits"))
-    val gen = manifestFor(spark, root, bHead)
-    require(gen.nonEmpty,
-      s"fastForward('$name'): branch head $bHead vanished — a racing " +
-        "retraction; retry")
-    val rows = fileRowsOf(gen)
-    val schemaJson = schemaJsonOf(gen).orNull
-    val version = claimVersion(spark, tablePath, fork + 1L)
-    // the branch's governing sidecar sets become main's at the
-    // published version (the rollback restore pattern: the face being
-    // published carries its own deletes and invariants)
-    dvSet(spark, root, bHead).foreach(d =>
-      writeDvSet(spark, tablePath, version, d))
-    GovFamilies.foreach(_.carry(spark, root, bHead, tablePath, version))
-    val published = publishDerived(spark, tablePath, version, rows,
-      schemaJson, ts, fork, "fastForward")
+    val published = publishFace(spark, root, bHead, tablePath, Some(fork),
+      s"fastForward('$name')", ts)
     writeFork(spark, tablePath, name, published)
     published
   }
@@ -5799,22 +5814,14 @@ object Snapshots {
         "file(s) were rewritten in between; use diff() for the " +
         "row-level audit")
     // both versions' governing DV generations from ONE family listing
-    val f = fs(spark, tablePath)
-    val dvFam =
-      if (f.exists(new Path(dvRoot(tablePath))))
-        sidecarFamilyListed(f, dvRoot(tablePath))
-      else Seq.empty
     val gens = resolveSidecars(spark, tablePath, toVersion)
     val l2p = logicalToPhysical(colMapOf(spark, gens))
     val phys = stored.map(physicalSchema(_, l2p))
     def rowsOf(files: Seq[(String, String)], withMeta: Boolean) =
       fromPhysical(readFileRows(spark, files, phys, withMeta), l2p)
 
-    val emptyDv =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], dvSchema)
-    def dvAt(v: Long) = pickAtOrBelow(dvFam, v)
-      .map { case (_, dir) => spark.read.schema(dvSchema).parquet(dir) }
-      .getOrElse(emptyDv)
+    def dvAt(v: Long) =
+      gens.dvAt(v).fold(Dv.empty(spark))(d => Dv.read(spark, d._2))
     val dTo = dvAt(toVersion)
     val dFrom = dvAt(fromVersion)
     // DV sets are exact (file, row_index) id sets — set difference is

@@ -720,8 +720,6 @@ private[v2] object GraftProcedures {
   * table so pushdown/pruning/codegen are the stock ones. */
 private[v2] object GraftSnapshotTable {
 
-  private def norm(p: String): String = new Path(p).toUri.getPath
-
   /** V1 source filters → Column predicates for the snapshot delete —
     * None for shapes the translation doesn't cover (canDeleteWhere
     * reports them untranslatable, so Spark falls back to an error
@@ -760,7 +758,7 @@ private[v2] object GraftSnapshotTable {
       tableName: String,
       root: String,
       version: Long): Table = {
-    val (rows, stored) = Snapshots.generationFiles(spark, root, version)
+    val (rows, stored) = Snapshots.generationOf(spark, root, version)
     val files = rows.map(_._1)
     // honest-refusal guards: faces the plain parquet scan cannot
     // represent route to the function verbs instead of serving
@@ -768,24 +766,7 @@ private[v2] object GraftSnapshotTable {
     // (metadata-scale) but ENFORCED at scan build — DML verbs (DELETE
     // FROM, INSERT INTO) legitimately target a DV-governed table
     // without ever scanning it through the SQL face.
-    val dvGoverned: Boolean = {
-      val dvDir = new Path(s"$root/_dv")
-      val fsys =
-        dvDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fsys.exists(dvDir) && {
-        val dirs = fsys.listStatus(dvDir).filter(_.isDirectory)
-          .map(_.getPath)
-          .flatMap(p => scala.util.Try(p.getName.stripPrefix("v").toLong)
-            .toOption.map(_ -> p.toString))
-          .filter(_._1 <= version)
-        dirs.sortBy(_._1).lastOption.exists { case (_, dir) =>
-          // memoized per published dir — this probe runs on EVERY
-          // statement's loadTable
-          val dvFiles = Snapshots.dvRecordedFiles(spark, dir)
-          files.exists(f => dvFiles.contains(norm(f)))
-        }
-      }
-    }
+    val dvGoverned = Snapshots.dvGovernsAny(spark, root, version, files)
     // evaluated here (metadata-scale), ENFORCED at scan build like the
     // DV guard — DDL and DML verbs legitimately load a mapped table
     // (ALTER TABLE DROP COLUMN after a RENAME must plan) without ever
@@ -1008,7 +989,7 @@ private[v2] class GraftWriteBuilder(
             case None =>
               if (!overwrite)
                 Snapshots.latestVersion(s, root).foreach { head =>
-                  val (rows, _) = Snapshots.generationFiles(s, root, head)
+                  val (rows, _) = Snapshots.generationOf(s, root, head)
                   require(rows.forall(_._2 == null),
                     s"INSERT INTO $tableName: the head generation is " +
                       "hive-partitioned — a flat SQL append would mix " +

@@ -67,7 +67,7 @@ class GraftSnapshotStreamSource extends TableProvider
     val head = Snapshots.latestVersion(spark, root).getOrElse(
       throw new IllegalArgumentException(
         s"graft-snapshot stream source: $root has no committed versions"))
-    Snapshots.generationFiles(spark, root, head)._2.getOrElse(
+    Snapshots.generationOf(spark, root, head)._2.getOrElse(
       throw new IllegalArgumentException(
         s"graft-snapshot stream source: $root v$head carries no stored " +
           "schema (pre-schema-manifest generation) — recommit the head"))
@@ -144,7 +144,7 @@ private[v2] class GraftMicroBatchStream(
     val s = start.asInstanceOf[GraftVersionOffset].version
     val e = end.asInstanceOf[GraftVersionOffset].version
     if (e <= s || e < 0) return Array.empty
-    val (endRows, stored) = Snapshots.generationFiles(spark, root, e)
+    val (endRows, stored) = Snapshots.generationOf(spark, root, e)
     require(stored.contains(streamSchema) || stored.isEmpty,
       s"graft-snapshot stream on $root: version $e's stored schema " +
         s"(${stored.map(_.simpleString).getOrElse("?")}) no longer " +
@@ -154,7 +154,7 @@ private[v2] class GraftMicroBatchStream(
     val fresh =
       if (s < 0) endRows
       else {
-        val (startRows, _) = Snapshots.generationFiles(spark, root, s)
+        val (startRows, _) = Snapshots.generationOf(spark, root, s)
         val startFiles = startRows.map(_._1).toSet
         val dropped = startRows.map(_._1)
           .filterNot(f => endRows.exists(_._1 == f))
@@ -172,7 +172,7 @@ private[v2] class GraftMicroBatchStream(
         "hive-partitioned — the stream scan cannot reconstruct " +
         "path-encoded partition columns; poll " +
         "Snapshots.readAppendsBetween in batch")
-    require(!Snapshots.dvEntriesTouch(spark, root, fresh.map(_._1)),
+    require(!Snapshots.liveDvEntriesExist(spark, root, fresh.map(_._1)),
       s"graft-snapshot stream on $root: live deletion vectors govern " +
         "the interval's fresh files — the stream cannot apply them; " +
         "compact with optimize, or poll readChangesBetween in batch")

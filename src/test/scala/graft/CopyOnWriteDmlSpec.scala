@@ -64,7 +64,7 @@ class CopyOnWriteDmlSpec extends SparkSuite {
       .getOrElse(Set.empty)
 
   private def files(tbl: String, v: Long): Set[String] =
-    Snapshots.generationFiles(spark, tbl, v)._1
+    Snapshots.generationOf(spark, tbl, v)._1
       .map(r => new Path(r._1).toUri.getPath).toSet
 
   private val expected: Map[Long, Long] =

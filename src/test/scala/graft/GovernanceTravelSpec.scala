@@ -3,14 +3,15 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StringType
 
 import graft.operators.{ConcurrentCommitException, Snapshots}
 
-/** How write governance travels between versions, run once per
-  * write-governance sidecar family ([[Snapshots.GovFamilies]]): CHECK
-  * constraints, generated columns and the column mapping each move
-  * with rollback, clone, fastForward and vacuum by the same carry
+/** How carried sidecar sets travel between versions, run once per
+  * carried family ([[Snapshots.CarriedFamilies]]): deletion vectors,
+  * CHECK constraints, generated columns and the column mapping each
+  * move with rollback, clone, fastForward and vacuum by the same carry
   * rule, and a refused derived commit retracts whatever it staged. */
 class GovernanceTravelSpec extends SparkSuite {
   import spark.implicits._
@@ -24,7 +25,20 @@ class GovernanceTravelSpec extends SparkSuite {
       change: String => Long,
       asOf: (String, Long) => Seq[Any])
 
+  /** The deletion-vector set governing `v` as sorted (file, row_index)
+    * pairs — empty when none governs or the governing set is empty. */
+  private def dvAsOf(t: String, v: Long): Seq[(String, Long)] =
+    Snapshots.resolveSidecars(spark, t, v).dv.toSeq.flatMap {
+      case (_, dir) =>
+        spark.read.schema("file STRING, row_index BIGINT").parquet(dir)
+          .as[(String, Long)].collect().toSeq
+    }.sorted
+
   private val families = Seq(
+    Family("_dv",
+      t => Snapshots.deleteWhere(spark, t, col("id") === 1L),
+      t => Snapshots.deleteWhere(spark, t, col("id") === 2L),
+      dvAsOf),
     Family("_constraints",
       t => Snapshots.addConstraint(spark, t, "amt_pos", "amt > 0"),
       t => Snapshots.addConstraint(spark, t, "id_pos", "id > 0"),
@@ -53,13 +67,13 @@ class GovernanceTravelSpec extends SparkSuite {
 
   private def exists(path: String): Boolean = new File(path).exists
 
-  test("every write-governance family has a row in this spec") {
+  test("every carried sidecar family has a row in this spec") {
     assert(families.map(_.dir).toSet ==
-      Snapshots.GovFamilies.map(_.dirName).toSet)
+      Snapshots.CarriedFamilies.map(_.dirName).toSet)
   }
 
   families.foreach { f =>
-    val fam = Snapshots.GovFamilies.find(_.dirName == f.dir).get
+    val fam = Snapshots.CarriedFamilies.find(_.dirName == f.dir).get
 
     test(s"${f.dir}: clone carries it, fastForward publishes the " +
       "branch's set, rollback masks it, a refused commit retracts it") {
@@ -108,5 +122,29 @@ class GovernanceTravelSpec extends SparkSuite {
       assert(exists(fam.dirAt(tbl, v2)))
       assert(f.asOf(tbl, v2) == s1)
     }
+  }
+
+  test("_dv: vacuum prunes the re-materialized set to the files it keeps") {
+    val tbl = Files.createTempDirectory("gov_travel_").toString + "/tbl"
+    Snapshots.init(spark, tbl)
+    Snapshots.commitPartitioned(spark,
+      Seq((1L, "a"), (2L, "a"), (3L, "b"), (4L, "b")).toDF("id", "p"),
+      tbl, "p", append = false)
+    // deletes in both partitions, then partition a is replaced: its
+    // entries go dead, and the replace writes no set of its own
+    val vDel = Snapshots.deleteWhere(spark, tbl,
+      col("id") === 1L || col("id") === 3L)
+    val vRp = Snapshots.replacePartitions(spark, tbl,
+      Seq((5L, "a")).toDF("id", "p"), "p")
+    val full = dvAsOf(tbl, vRp)
+    assert(full.length == 2 && !exists(s"$tbl/_dv/v$vRp"))
+    val keptFiles = Snapshots.generationOf(spark, tbl, vRp)._1.map(_._1).toSet
+    Snapshots.vacuum(spark, tbl, keepFrom = vRp)
+    assert(!exists(s"$tbl/_dv/v$vDel"), "the delete's dir expires with it")
+    assert(dvAsOf(tbl, vRp) == full.filter(e => keptFiles.contains(e._1)),
+      "the set at keepFrom keeps only entries on retained files")
+    assert(dvAsOf(tbl, vRp).length == 1)
+    assert(Snapshots.readAsOf(spark, tbl, vRp).select("id").as[Long]
+      .collect().sorted.toSeq == Seq(4L, 5L))
   }
 }

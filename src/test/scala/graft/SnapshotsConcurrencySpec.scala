@@ -1,9 +1,13 @@
 package graft
 
+import java.net.URI
 import java.nio.file.Files
 import java.util.concurrent.{Callable, CountDownLatch, ExecutionException,
   Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicReference
 
+import org.apache.hadoop.fs.{LocalFileSystem, Path => HPath,
+  RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -459,5 +463,50 @@ class SnapshotsConcurrencySpec extends SparkSuite {
         (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
     assert(parents == Map(0L -> None, 1L -> Some(0L), 2L -> Some(1L),
       3L -> None), s"lineage parents wrong: $parents")
+  }
+
+  test("a full-history manifest read racing a manifest swap answers " +
+    "the post-swap view, never a mix of pre- and post-swap generations") {
+    import SnapshotsConcurrencySpec.SwapFs
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.swaphook.impl", classOf[SwapFs].getName)
+    val tbl = freshTable()
+    Seq("a", "b", "c").zipWithIndex.foreach { case (v, i) =>
+      Snapshots.commit(spark, Seq((i + 1L, v)).toDF("id", "v").coalesce(1),
+        tbl, append = i > 0)
+    }
+    def files(m: DataFrame): Set[(Long, String)] =
+      m.select(col("version"), col("file")).as[(Long, String)].collect().toSet
+    // purgeKeys rewrites id 1's file in EVERY generation, under the same
+    // generation file names; it lands after v0's read, before v1's
+    var purged = false
+    SwapFs.beforeGen1.set(() => {
+      Snapshots.purgeKeys(spark, tbl, Seq(Tuple1(1L)).toDF("id"), Seq("id"))
+      purged = true
+    })
+    val seen =
+      try files(Snapshots.manifest(spark, s"swaphook://$tbl"))
+      finally SwapFs.beforeGen1.set(null)
+    assert(purged, "the swap must land inside the manifest read")
+    assert(seen == files(Snapshots.manifest(spark, tbl)),
+      "the read mixed pre- and post-swap generations")
+  }
+}
+
+object SnapshotsConcurrencySpec {
+  /** The checksummed local file system under the `swaphook:` scheme;
+    * the first existence probe of `gen-v1.parquet` after `beforeGen1`
+    * is set runs it (and clears it) before answering. */
+  class SwapFs extends LocalFileSystem(new RawLocalFileSystem {
+    override def getUri: URI = URI.create("swaphook:///")
+  }) {
+    override def exists(p: HPath): Boolean = {
+      if (p.getName == "gen-v1.parquet")
+        Option(SwapFs.beforeGen1.getAndSet(null)).foreach(_.apply())
+      super.exists(p)
+    }
+  }
+  object SwapFs {
+    val beforeGen1 = new AtomicReference[() => Unit]
   }
 }

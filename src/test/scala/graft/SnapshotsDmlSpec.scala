@@ -31,7 +31,7 @@ class SnapshotsDmlSpec extends SparkSuite {
   }
 
   private def filesOf(tbl: String, v: Long): Set[String] =
-    Snapshots.generationFiles(spark, tbl, v)._1.map(_._1).toSet
+    Snapshots.generationOf(spark, tbl, v)._1.map(_._1).toSet
 
   test("updateWhere rewrites ONLY the predicate's files; carried rows " +
     "byte-equal; history time-travels") {
@@ -116,7 +116,7 @@ class SnapshotsDmlSpec extends SparkSuite {
       col("id") === 1L, Seq("v" -> lit("A")))
     val v2 = Snapshots.updateWhere(spark, tbl,
       col("id") === 2L, Seq("p" -> lit("p9")))
-    val rows2 = Snapshots.generationFiles(spark, tbl, v2)._1
+    val rows2 = Snapshots.generationOf(spark, tbl, v2)._1
     assert(rows2.forall(_._2 != null),
       "every manifest row must keep a partition fragment")
     assert(rows2.exists(_._2 == "p=p9"),
@@ -440,7 +440,7 @@ class SnapshotsDmlSpec extends SparkSuite {
       .toDF("id", "v", "amt")
     Snapshots.commitClustered(spark, df, tbl, "id",
       numFiles = 4, append = false)
-    val rows = Snapshots.generationFiles(spark, tbl, 0L)._1
+    val rows = Snapshots.generationOf(spark, tbl, 0L)._1
       .map { case (f, p) => (f, p, None: Option[Long]) }
     def admitted(pred: org.apache.spark.sql.Column): Int =
       Snapshots.statsPrunedForDml(spark, tbl, 0L, rows, pred).length
@@ -476,7 +476,7 @@ class SnapshotsDmlSpec extends SparkSuite {
       .repartitionByRange(4, col("id"))
       .sortWithinPartitions("id")
     Snapshots.commitBloom(spark, df, tbl, "id", append = false)
-    val rows = Snapshots.generationFiles(spark, tbl, 0L)._1
+    val rows = Snapshots.generationOf(spark, tbl, 0L)._1
       .map { case (f, p) => (f, p, None: Option[Long]) }
     def admitted(pred: org.apache.spark.sql.Column): Int =
       Snapshots.bloomPrunedForDml(spark, tbl, 0L, rows, pred).length
@@ -502,7 +502,7 @@ class SnapshotsDmlSpec extends SparkSuite {
       .toDF("id", "v", "amt")
     Snapshots.commitClustered(spark, df, tbl, "id",
       numFiles = 4, append = false)
-    val rows = Snapshots.generationFiles(spark, tbl, 0L)._1
+    val rows = Snapshots.generationOf(spark, tbl, 0L)._1
       .map { case (f, p) => (f, p, None: Option[Long]) }
     val narrow = Seq((4L, 1L), (5L, 2L)).toDF("sid", "samt")
     val admitted = Snapshots.mergeSourcePruned(spark, tbl, 0L, rows,
@@ -537,8 +537,8 @@ class SnapshotsDmlSpec extends SparkSuite {
     spark.sql(s"DELETE FROM $cat.xd WHERE id % 5 = 0 AND length(v) > 1")
     assert(Snapshots.latestVersion(spark, tbl).contains(1L),
       "the expression delete must be ONE metadata generation")
-    assert(Snapshots.generationFiles(spark, tbl, 0L)._1.map(_._1).toSet ==
-      Snapshots.generationFiles(spark, tbl, 1L)._1.map(_._1).toSet,
+    assert(Snapshots.generationOf(spark, tbl, 0L)._1.map(_._1).toSet ==
+      Snapshots.generationOf(spark, tbl, 1L)._1.map(_._1).toSet,
       "a deletion-vector commit rewrites no data file")
     val left = Snapshots.readAsOf(spark, tbl, 1L)
       .select("id").as[Long].collect().sorted.toSeq

@@ -196,10 +196,10 @@ class SnapshotsResolutionSpec extends SparkSuite {
         .collect().toSet)
     assert(changes == Set(("+", 3L), ("-", 2L)))
     assert(m == 1L, s"readChangesBetween took $m manifest reads, budget 1")
-    // one explicit DV-family listing + the combined resolution's
-    // root + dv listings
-    assert(l <= 3L,
-      s"readChangesBetween took $l sidecar listings, budget 3")
+    // the combined resolution's root + dv listings: both endpoints'
+    // DV sets come from the one dv listing
+    assert(l <= 2L,
+      s"readChangesBetween took $l sidecar listings, budget 2")
   }
 
   /** (result, manifest FILES opened) around `body`. */
