@@ -1,12 +1,18 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType,
+  TimestampType}
+
+import graft.operators.Snapshots
 
 /** Test-table loader: one parquet per table under the scale-factor dir
-  * (TESTDATA.md). Plain `spark.read.parquet` so Catalyst gets pushdown,
-  * pruning, and partition-size planning from the source stats.
+  * (TESTDATA.md). A plain parquet scan so Catalyst gets pushdown,
+  * pruning, and partition-size planning from the source stats, handed
+  * the schema read from the file's footer on the driver
+  * ([[footerSchema]]) so no table read runs a schema-inference job.
   *
   * The `events` table carries TIMESTAMP(NANOS) parquet, which Spark has no
   * native type for — sessions must set
@@ -21,8 +27,46 @@ object Tables {
 
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     configure(spark)
-    normalize(spark.read.parquet(s"$sfDir/$name.parquet"),
+    val path = s"$sfDir/$name.parquet"
+    normalize(spark.read.schema(footerSchema(spark, path)).parquet(path),
       isEvents = name == "events")
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver
+    * from the footer of `path` (a file, or a directory's first data
+    * file by name, `_`/`.` entries skipped — the file Spark's own
+    * inference picks without schema merging), with no Spark job.
+    * Converted by Spark's own footer reader under the session's
+    * parquet settings, so `nanosAsLong` and NTZ inference match: call
+    * it after [[configure]]. Memoized per file status
+    * ([[Snapshots.memoizedMeta]]), keyed also by those settings. */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val f = p.getFileSystem(conf)
+    val file =
+      if (f.getFileStatus(p).isFile) p
+      else f.listStatus(p).map(_.getPath)
+        .filterNot(q => q.getName.startsWith("_") || q.getName.startsWith("."))
+        .sortBy(_.getName).headOption.getOrElse(
+          throw new IllegalArgumentException(
+            s"footerSchema: $path holds no data file"))
+    val sql = spark.sessionState.conf
+    val settings = Seq(sql.isParquetBinaryAsString,
+      sql.isParquetINT96AsTimestamp, sql.legacyParquetNanosAsLong,
+      sql.parquetInferTimestampNTZEnabled).mkString(",")
+    Snapshots.memoizedMeta(f, file, s"footer[$settings]") {
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromPath(file, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+        new ParquetToSparkSchemaConverter(sql))
+    }
   }
 
   /** Streaming twin of the batch loader for the `events` table: the SAME
@@ -36,8 +80,8 @@ object Tables {
   def streamEvents(spark: SparkSession, sfDir: String): DataFrame = {
     configure(spark)
     val path = s"$sfDir/events.parquet"
-    val raw = spark.read.parquet(path).schema
-    normalize(spark.readStream.schema(raw).parquet(streamGlob(path)),
+    normalize(spark.readStream.schema(footerSchema(spark, path))
+        .parquet(streamGlob(path)),
       isEvents = true)
   }
 

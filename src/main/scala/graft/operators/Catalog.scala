@@ -48,21 +48,16 @@ object Catalog {
   private def fs(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def docSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("name",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("root",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("prop_key",
-      org.apache.spark.sql.types.StringType, nullable = true),
-    org.apache.spark.sql.types.StructField("prop_value",
-      org.apache.spark.sql.types.StringType, nullable = true)))
+  /** The catalog doc's columns: one row per (table, property), a
+    * table without properties one row with null key and value. */
+  private val DocCols = Seq("name", "root", "prop_key", "prop_value")
 
   /** One catalog entry: the table root plus its property map. */
   final case class Entry(root: String, props: Map[String, String])
 
   /** The latest catalog generation as name → [[Entry]] — one listing,
-    * one metadata-scale parquet read. Empty map for a fresh catalog. */
+    * one driver-side doc read, no Spark job. Empty map for a fresh
+    * catalog. */
   def entries(
       spark: SparkSession,
       catalogRoot: String): Map[String, Entry] = {
@@ -81,9 +76,11 @@ object Catalog {
       case Some((_, d)) =>
         // memoized per published catalog generation (rename-published,
         // immutable): the SQL catalog resolves EVERY statement's table
-        // references through entries(), a driver Spark job otherwise
+        // references through entries(); a miss reads the doc on the
+        // driver, no Spark job
         Snapshots.memoizedMeta(f, new Path(d), "catalog") {
-          spark.read.schema(docSchema).parquet(d).collect()
+          Snapshots.readMetaParquet(spark.sparkContext.hadoopConfiguration,
+            new Path(d), DocCols).toSeq
             .groupBy(_.getString(0))
             .map { case (name, rows) =>
               name -> Entry(rows.head.getString(1),
@@ -126,8 +123,7 @@ object Catalog {
       s"catalog staging dir $tmp already exists — racing publish?")
     Snapshots.writeMetaParquet(spark.sparkContext.hadoopConfiguration,
       new Path(tmp, "part-00000.parquet"),
-      Seq("name" -> false, "root" -> false,
-        "prop_key" -> false, "prop_value" -> false), rows)
+      DocCols.map(_ -> false), rows)
     require(f.rename(tmp,
       new Path(s"$catalogRoot/$CatalogDir/v${latest + 1}")),
       s"catalog publish failed for $catalogRoot — staged doc left at $tmp")

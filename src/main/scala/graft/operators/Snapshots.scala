@@ -166,8 +166,8 @@ object Snapshots {
     * long/string shapes every graft metadata schema uses; the written
     * types (optional int64 / optional binary UTF8) read back under
     * Spark as the same long/string columns the Spark-written files
-    * carried, and every reader goes through an explicit schema or
-    * [[normalizeManifest]] anyway. CREATE mode refuses an existing
+    * carried, and every reader reads its columns by name
+    * ([[readMetaParquet]]). CREATE mode refuses an existing
     * destination — the `errorifexists` the Spark writes used. */
   private[graft] def writeMetaParquet(
       conf: org.apache.hadoop.conf.Configuration,
@@ -206,6 +206,55 @@ object Snapshots {
     } finally w.close()
   }
 
+  /** The read twin of [[writeMetaParquet]]: the rows of one small
+    * metadata parquet file — or of every data file of a directory,
+    * `_`/`.` entries skipped (`_SUCCESS`, checksums) — read on the
+    * DRIVER with parquet's own record reader, no Spark job (a schema
+    * job plus a collect job per file on the `spark.read` path). Each
+    * row holds `cols` in the given order, read by name: a column the
+    * file lacks (an earlier layout) reads as null, an int32 column
+    * widens to long, a UTF8 binary reads as a string. Files written
+    * by Spark or by [[writeMetaParquet]] read the same. A missing
+    * path throws `FileNotFoundException`. Keeps no cache of its own:
+    * callers that re-read memoize through [[memoizedMeta]]. */
+  private[graft] def readMetaParquet(
+      conf: org.apache.hadoop.conf.Configuration,
+      file: Path,
+      cols: Seq[String]): Array[Row] = {
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+    import org.apache.parquet.schema.MessageType
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    // decode only the wanted columns the file has
+    val projected = new org.apache.parquet.hadoop.example.GroupReadSupport {
+      override def init(ctx: InitContext): ReadSupport.ReadContext = {
+        val fileSchema = ctx.getFileSchema
+        val present = cols.filter(fileSchema.containsField)
+        new ReadSupport.ReadContext(
+          if (present.isEmpty) fileSchema
+          else new MessageType(fileSchema.getName,
+            present.map(n =>
+              fileSchema.getType(fileSchema.getFieldIndex(n))): _*))
+      }
+    }
+    def value(g: Group, n: String): Any =
+      if (!g.getType.containsField(n) || g.getFieldRepetitionCount(n) == 0)
+        null
+      else g.getType.getType(n).asPrimitiveType.getPrimitiveTypeName match {
+        case INT64 => g.getLong(n, 0)
+        case INT32 => g.getInteger(n, 0).toLong
+        case BINARY => g.getString(n, 0)
+        case other => throw new IllegalStateException(
+          s"readMetaParquet: column $n of $file is $other — long/string " +
+            "metadata only")
+      }
+    val r = org.apache.parquet.hadoop.ParquetReader
+      .builder(projected, file).withConf(conf).build()
+    try Iterator.continually(r.read()).takeWhile(_ != null)
+      .map(g => Row.fromSeq(cols.map(value(g, _)))).toArray
+    finally r.close()
+  }
+
   /** [[writeMetaParquet]] into a DIRECTORY-shaped destination (the
     * sidecar layout Spark's own writer produced: a dir holding one
     * part file), refusing an existing dir — the `errorifexists`
@@ -226,11 +275,39 @@ object Snapshots {
   }
 
   /** The manifest generation file's column layout for
-    * [[writeMetaParquet]] — matches [[normalizeManifest]]'s order. */
+    * [[writeMetaParquet]], and the one order every manifest row is read
+    * back in ([[readMetaParquet]]): version(0), file(1), part(2),
+    * schema_json(3), rows(4), commit_ts(5), parent(6) — the positions
+    * every `Array[Row]` consumer below indexes by. Generations written
+    * by earlier layouts may lack the partition, schema, row-count,
+    * lineage and/or commit-ts columns; those read as null. */
   private val ManifestCols: Seq[(String, Boolean)] = Seq(
     "version" -> true, "file" -> false, "part" -> false,
     "schema_json" -> false, "rows" -> true, "commit_ts" -> true,
     "parent" -> true)
+
+  private val ManifestColNames: Seq[String] = ManifestCols.map(_._1)
+
+  /** The timeline columns of a generation or checkpoint file. */
+  private val TimelineCols = Seq("version", "commit_ts", "parent")
+
+  /** The rows of manifest-plane files — generations, checkpoints —
+    * in `cols` order, read on the driver and counted: every path as a
+    * file opened, every row kept (after `distinct`, when asked) as a
+    * row collected. */
+  private def readManifestFiles(
+      spark: SparkSession,
+      paths: Seq[String],
+      cols: Seq[String],
+      distinct: Boolean = false): Array[Row] = {
+    manifestFilesOpened.addAndGet(paths.length.toLong)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val read =
+      paths.toArray.flatMap(p => readMetaParquet(conf, new Path(p), cols))
+    val rows = if (distinct) read.distinct else read
+    manifestRowsCollected.addAndGet(rows.length.toLong)
+    rows
+  }
 
   /** Wipe the table root — a fresh snapshot lineage. (Harness queries
     * rebuild their fixture lineage per run; real tables call this
@@ -328,23 +405,6 @@ object Snapshots {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Manifests written by earlier layouts may lack the partition,
-    * schema, row-count, lineage and/or commit-ts columns; normalize so
-    * every consumer sees seven, in one fixed order: version(0),
-    * file(1), part(2), schema_json(3), rows(4), commit_ts(5),
-    * parent(6) — the positions every `Array[Row]` consumer below
-    * indexes by. */
-  private def normalizeManifest(m: DataFrame): DataFrame =
-    Seq("part" -> "string", "schema_json" -> "string",
-      "rows" -> "long", "commit_ts" -> "long", "parent" -> "long")
-      .foldLeft(m) { case (df, (c, tpe)) =>
-        if (df.columns.contains(c)) df
-        else df.withColumn(c, lit(null).cast(tpe))
-      }
-      .select(col("version"), col("file"), col("part"),
-        col("schema_json"), col("rows"), col("commit_ts"),
-        col("parent"))
-
   private def emptyManifest(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
@@ -418,7 +478,7 @@ object Snapshots {
     * own file alone — the version-bounded read every per-version verb
     * plans from: O(files of the version) rows collected, however long
     * the history (normalized column positions per
-    * [[normalizeManifest]]). EMPTY when the generation does not exist —
+    * [[ManifestCols]]). EMPTY when the generation does not exist —
     * never committed, retracted by a racing rebase between a listing
     * and this read, or expired by vacuum — callers turn that into
     * their own loud error (or a corrective lap). */
@@ -435,14 +495,11 @@ object Snapshots {
     // memoized per (path, FileStatus): a generation file is immutable
     // once published (vacuum/purge REPLACE it via swapManifest — new
     // status, fresh read), so repeated per-version resolution (every
-    // SQL statement's loadTable + governed-read substitution) pays the
-    // driver Spark job once, not per statement
+    // SQL statement's loadTable + governed-read substitution) opens the
+    // file once, not per statement
     memoizedMeta(f, new Path(path), "gen") {
       try {
-        manifestFilesOpened.incrementAndGet()
-        val rows = normalizeManifest(spark.read.parquet(path)).collect()
-        manifestRowsCollected.addAndGet(rows.length.toLong)
-        rows
+        readManifestFiles(spark, Seq(path), ManifestColNames)
       } catch {
         // the generation vanished between the exists check and the read
         // (a racer's retraction) — gone is gone, same answer as above;
@@ -625,8 +682,9 @@ object Snapshots {
     * files NEWER than it (≤ the checkpoint interval, however long the
     * history) — checkpoint rows are filtered to the generations the
     * directory listing still carries, so vacuum/retraction need no
-    * checkpoint rewrite. Without one (young table, post-vacuum), the
-    * full per-file scan with the fan-out dropped in the EXECUTORS.
+    * checkpoint rewrite. Without one (young table, post-vacuum), every
+    * gen file, its per-data-file fan-out dropped. All of it is read on
+    * the driver ([[readMetaParquet]]), no Spark job.
     * The timeline / lineage-chain read ([[versionAt]], the
     * reconciliation tails' contested laps, the streaming sink's
     * replay check). */
@@ -661,14 +719,7 @@ object Snapshots {
             val cp = ckptFilePath(tablePath, cv)
             try {
               if (!fs(spark, tablePath).exists(new Path(cp))) None
-              else {
-                manifestFilesOpened.incrementAndGet()
-                val r = spark.read.parquet(cp)
-                  .select(col("version"), col("commit_ts"), col("parent"))
-                  .collect()
-                manifestRowsCollected.addAndGet(r.length.toLong)
-                Some((cv, r))
-              }
+              else Some((cv, readManifestFiles(spark, Seq(cp), TimelineCols)))
             } catch {
               // a vanished, torn or unreadable checkpoint falls back
               // to the full per-file scan — never a read failure
@@ -683,15 +734,8 @@ object Snapshots {
         }
         val newer =
           if (newerPaths.isEmpty) Array.empty[Row]
-          else {
-            manifestFilesOpened.addAndGet(newerPaths.length.toLong)
-            val r = normalizeManifest(spark.read
-              .option("mergeSchema", "true").parquet(newerPaths: _*))
-              .select(col("version"), col("commit_ts"), col("parent"))
-              .distinct().collect()
-            manifestRowsCollected.addAndGet(r.length.toLong)
-            r
-          }
+          else readManifestFiles(spark, newerPaths, TimelineCols,
+            distinct = true)
         return base ++ newer
       } catch {
         case e: Throwable if isFileGone(e) => lastErr = e
@@ -1592,6 +1636,15 @@ object Snapshots {
     val latest = latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"mergePartitioned: $tablePath has no committed versions"))
+    // a tombstone-governed head refuses before any claim, as every
+    // copy-on-write verb does; the governing deletion vectors apply to
+    // the touched-partition scan too — a rewrite that read the raw
+    // files would resurrect DV-deleted rows into the new generation's
+    // fresh files
+    val gens = resolveSidecars(spark, tablePath, latest, allowEq = true,
+      govFamilies = Seq(ColMap))
+    requireNotEqGoverned(gens.eq.nonEmpty, tablePath, latest,
+      "mergePartitioned")
     val parentRows = manifestRows(spark, tablePath, latest)
     require(parentRows.forall(_._2 != null),
       s"mergePartitioned needs a partitioned table (commitPartitioned); " +
@@ -1608,10 +1661,6 @@ object Snapshots {
     // touched survivors; only upserts re-insert
     val inserts = opCol.fold(updates)(op =>
       updates.filter(col(op) === "upsert").drop(op))
-    // the governing deletion vectors apply to the touched-partition
-    // scan too — a rewrite that read the raw files would resurrect
-    // DV-deleted rows into the new generation's fresh files
-    val gens = resolveSidecars(spark, tablePath, latest, allowEq = true)
     val dv = dvSetOf(spark, gens)
     val l2p = logicalToPhysical(colMapOf(spark, gens))
     val survivors =
@@ -2739,7 +2788,10 @@ object Snapshots {
     * (the r16 q25/q28 read-path creep); this caps it at 1 + families
     * actually present, however many verbs stack. The deletion-vector
     * family's whole listing is kept, so an interval verb picks its
-    * other endpoint's set from the same listing ([[dvAt]]). */
+    * other endpoint's set from the same listing ([[dvAt]]). A caller
+    * that needs only some governance families names them
+    * (`govFamilies`); the others are not listed and absent from
+    * `gov`. */
   private[graft] final case class SidecarGens(
       version: Long,
       dvListed: Seq[(Long, String)],
@@ -2754,7 +2806,8 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       version: Long,
-      allowEq: Boolean = false): SidecarGens = {
+      allowEq: Boolean = false,
+      govFamilies: Seq[GovFamily[_]] = GovFamilies): SidecarGens = {
     val f = fs(spark, tablePath)
     sidecarListings.incrementAndGet()
     val present = f.listStatus(new Path(tablePath))
@@ -2788,7 +2841,7 @@ object Snapshots {
         "deleted keys; read via readMorAsOf, or foldEqDeletes to " +
         "materialize a copy-on-write face")
     SidecarGens(version, listed(Dv),
-      GovFamilies.flatMap(g =>
+      govFamilies.flatMap(g =>
         pickAtOrBelow(listed(g), version).map(g -> _)).toMap,
       eqPick)
   }
@@ -3021,7 +3074,9 @@ object Snapshots {
   }
 
   /** Resolve a DML verb's [[DmlFace]] at the current head, its
-    * sidecars from one [[resolveSidecars]] pass. A table with no
+    * sidecars (deletion vectors, column mapping; batch preparation
+    * reads the write-governance sets itself) from one
+    * [[resolveSidecars]] pass. A table with no
     * committed versions or a tombstone-governed head refuses; a head
     * retracted between its resolution and the read is the retry-able
     * conflict of [[observedGeneration]]. */
@@ -3032,7 +3087,8 @@ object Snapshots {
     val observed = latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"$verb: $tablePath has no committed versions"))
-    val gens = resolveSidecars(spark, tablePath, observed, allowEq = true)
+    val gens = resolveSidecars(spark, tablePath, observed, allowEq = true,
+      govFamilies = Seq(ColMap))
     requireNotEqGoverned(gens.eq.nonEmpty, tablePath, observed, verb)
     val gen = observedGeneration(spark, tablePath, observed, verb)
     DmlFace(spark, tablePath, observed, fileRowsOf(gen),
@@ -3851,10 +3907,8 @@ object Snapshots {
       * immutable. */
     def read(spark: SparkSession, dir: String): Seq[(String, V)] =
       memoizedMeta(fs(spark, dir), new Path(dir), dirName) {
-        import org.apache.spark.sql.types._
-        spark.read.schema(StructType(Seq(StructField(keyCol, StringType),
-            StructField(valCol, StringType))))
-          .parquet(dir).collect()
+        readMetaParquet(spark.sparkContext.hadoopConfiguration,
+          new Path(dir), Seq(keyCol, valCol))
           .map(r => (r.getString(0), decode(r.getString(1))))
           .sortBy(_._1).toSeq
       }
@@ -5757,13 +5811,8 @@ object Snapshots {
       .filter(p => f.exists(new Path(p)))
     val rows =
       if (paths.isEmpty) Array.empty[Row]
-      else try {
-        manifestFilesOpened.addAndGet(paths.length.toLong)
-        val r = normalizeManifest(spark.read
-          .option("mergeSchema", "true").parquet(paths: _*)).collect()
-        manifestRowsCollected.addAndGet(r.length.toLong)
-        r
-      } catch {
+      else try readManifestFiles(spark, paths, ManifestColNames)
+      catch {
         // an endpoint vanished mid-read (racing retraction/vacuum) —
         // same loud answer as a missing generation below
         case e: Throwable if isFileGone(e) => Array.empty[Row]

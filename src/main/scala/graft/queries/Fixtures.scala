@@ -100,7 +100,7 @@ private[queries] object Fixtures {
       s"fixture max event ts ($maxUs us) reaches the sentinel's " +
         s"flush horizon ($horizonUs us) — watermark-driven emission " +
         s"would silently never fire; move the sentinel out")
-    s.read.parquet(staging).schema
+    Tables.footerSchema(s, staging)
   }
 
   /** The messy synthetic URL each doc carries in the URL-dedup queries

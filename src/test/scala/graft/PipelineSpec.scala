@@ -6,8 +6,7 @@ import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import org.apache.hadoop.fs.{Path => HPath, RawLocalFileSystem}
 
-import org.apache.spark.{ListenerBusAccess, SparkException}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.SparkException
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -109,22 +108,6 @@ class PipelineSpec extends SparkSuite {
     // unmatched descriptions routed to the error file, not uploaded
     assert(err.filter(col("Pattern") === "N/A").count() ==
       splitOut.filter(col("Pattern") === "N/A").count())
-  }
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusAccess.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerBusAccess.drain(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
   }
 
   private def fixtureText: String = {

@@ -92,6 +92,32 @@ class SnapshotMorSpec extends SparkSuite {
     assert(Snapshots.readAsOf(spark, tbl, 0L).count() == 2L)
   }
 
+  test("mergePartitioned refuses a tombstone-governed head before " +
+    "claiming a version, like every copy-on-write verb") {
+    val tbl = freshTable()
+    Snapshots.commitPartitioned(spark,
+      Seq((1L, "p1", "a"), (2L, "p2", "b")).toDF("id", "p", "v"),
+      tbl, "p", append = false)
+    val v1 = Snapshots.commitEqUpsert(spark, tbl,
+      upserts = Seq((3L, "p1", "c")).toDF("id", "p", "v"),
+      tombstones = Seq(2L).toDF("id"), keyCols = Seq("id"),
+      partCol = Some("p"))
+    val e = intercept[IllegalArgumentException](
+      Snapshots.mergePartitioned(spark, tbl,
+        Seq((1L, "p1", "a2")).toDF("id", "p", "v"), Seq("id"), "p"))
+    assert(e.getMessage.contains("mergePartitioned") &&
+      e.getMessage.contains("equality-delete"), e.getMessage)
+    assert(Snapshots.latestVersion(spark, tbl).contains(v1))
+    // folded, the lineage takes the merge, and its MOR face still reads
+    val vF = Snapshots.foldEqDeletes(spark, tbl, Seq("id"))
+    val vM = Snapshots.mergePartitioned(spark, tbl,
+      Seq((1L, "p1", "a2")).toDF("id", "p", "v"), Seq("id"), "p")
+    assert(vM == vF + 1L)
+    assert(Snapshots.readMorAsOf(spark, tbl, vM, Seq("id"))
+      .select("id", "v").as[(Long, String)].collect().toMap ==
+      Map(1L -> "a2", 3L -> "c"))
+  }
+
   test("foldEqDeletes materializes the MOR face copy-on-write, drops " +
     "the tombstones, and expires the fold window HONESTLY: plain " +
     "verbs serve again at and above the fold, history inside the " +

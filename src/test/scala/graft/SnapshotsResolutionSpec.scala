@@ -1,7 +1,11 @@
 package graft
 
+import java.net.URI
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path => HPath,
+  RawLocalFileSystem}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Snapshots
@@ -67,6 +71,36 @@ class SnapshotsResolutionSpec extends SparkSuite {
     assert(l1 == 3L,
       s"sidecarred readAsOf took $l1 sidecar listings, budget 3 " +
         "(root + _dv + _constraints)")
+  }
+
+  test("copy-on-write DML lists only the sidecar families it reads: a " +
+    "CHECK constraint adds no listing to deleteWhere") {
+    import SnapshotsResolutionSpec.ListCountFs
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.listcount.impl", classOf[ListCountFs].getName)
+    // a table with a deletion vector, and its twin with a constraint too
+    def dvTable(constrained: Boolean): String = {
+      val tbl = "listcount://" + freshTable()
+      Snapshots.commit(spark,
+        Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").coalesce(1),
+        tbl, append = false)
+      Snapshots.deleteWhere(spark, tbl, col("id") === 1L)
+      if (constrained)
+        Snapshots.addConstraint(spark, tbl, "id_nn", "id IS NOT NULL")
+      tbl
+    }
+    def deleteListings(tbl: String): Long = {
+      val l0 = ListCountFs.listings.get
+      Snapshots.deleteWhere(spark, tbl, col("id") === 2L)
+      ListCountFs.listings.get - l0
+    }
+    val plain = deleteListings(dvTable(constrained = false))
+    val constrained = deleteListings(dvTable(constrained = true))
+    assert(plain <= 10L,
+      s"deleteWhere made $plain listStatus calls on a DV table, budget 10")
+    assert(constrained == plain,
+      s"deleteWhere made $constrained listStatus calls on a DV+constraint " +
+        s"table against $plain on a DV-only one")
   }
 
   test("countAsOf and scanRangeAsOf stay inside the same budget — the " +
@@ -405,5 +439,21 @@ class SnapshotsResolutionSpec extends SparkSuite {
     // the OLDEST entries were evicted and recompute correctly
     assert(read(0) == "v0")
     assert(computes == recomputesBefore + 1)
+  }
+}
+
+object SnapshotsResolutionSpec {
+  /** The checksummed local file system under the `listcount:` scheme,
+    * counting every directory listing made through it. */
+  class ListCountFs extends LocalFileSystem(new RawLocalFileSystem {
+    override def getUri: URI = URI.create("listcount:///")
+  }) {
+    override def listStatus(p: HPath): Array[FileStatus] = {
+      ListCountFs.listings.incrementAndGet()
+      super.listStatus(p)
+    }
+  }
+  object ListCountFs {
+    val listings = new AtomicLong
   }
 }

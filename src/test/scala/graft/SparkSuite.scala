@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,6 +14,22 @@ object SparkSuite {
 
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.spark
+
+  /** Spark jobs started while `body` runs. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusAccess.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Naive comma-split reader matching the reference's CSV dialect
     * (BatchUpdate.py:762-780) — the golden files contain a raw `"` (the
