@@ -110,29 +110,30 @@ object Skipping {
   private[graft] val DefaultSizing = BloomSizing(100000L, 0.01)
 
   /** The keys a stats manifest dir carries intervals for: every
-    * `min_<k>` column with a matching `max_<k>`. Memoized per published
-    * dir ([[Snapshots.memoizedMeta]]). */
+    * `min_<k>` column with a matching `max_<k>`, off the dir's footer
+    * ([[graft.Tables.footerSchema]], no Spark job). Memoized per
+    * published dir ([[Snapshots.memoizedMeta]]). */
   private[graft] def statsKeys(
       spark: SparkSession,
       dir: String): Seq[String] =
     memoized(spark, dir, "statskeys") {
-      val cs = spark.read.parquet(dir).columns
+      val cs = graft.Tables.footerSchema(spark, dir).fieldNames
       cs.filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
         .filter(k => cs.contains(s"max_$k")).toSeq
     }
 
   /** The key columns a bloom manifest dir records, sorted — empty for a
-    * legacy manifest without the `key` column. A probe is sound only
+    * legacy manifest without the `key` column (read as null). Read on
+    * the driver ([[Snapshots.readMetaParquet]]). A probe is sound only
     * when this is exactly the probed column. Memoized per published dir,
     * keyed by its status: a dir recreated at the same path re-reads. */
   private[graft] def bloomKeys(
       spark: SparkSession,
       dir: String): Seq[String] =
     memoized(spark, dir, "bloomkeys") {
-      val side = spark.read.parquet(dir)
-      if (!side.columns.contains("key")) Seq.empty
-      else side.select(col("key")).filter(col("key").isNotNull).collect()
-        .map(_.getString(0)).distinct.sorted.toSeq
+      Snapshots.readMetaParquet(spark.sparkContext.hadoopConfiguration,
+        new org.apache.hadoop.fs.Path(dir), Seq("key"))
+        .flatMap(r => Option(r.getString(0))).distinct.sorted.toSeq
     }
 
   private def memoized[T <: AnyRef](

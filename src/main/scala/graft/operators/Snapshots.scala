@@ -985,9 +985,8 @@ object Snapshots {
     f.delete(new Path(s"$tablePath/$VersionsDir/gen-v$version.parquet"),
       false)
     f.delete(branchOverMarker(tablePath, version), false)
-    (eqDir(tablePath, version) +:
-      sidecarFamilies.map(_.dirAt(tablePath, version)))
-      .foreach(d => f.delete(new Path(d), true))
+    sidecarFamilies.foreach(fam =>
+      f.delete(new Path(fam.dirAt(tablePath, version)), true))
   }
 
   /** The write-governance fingerprint of `version`: the sidecar
@@ -1641,10 +1640,8 @@ object Snapshots {
     // the touched-partition scan too — a rewrite that read the raw
     // files would resurrect DV-deleted rows into the new generation's
     // fresh files
-    val gens = resolveSidecars(spark, tablePath, latest, allowEq = true,
-      govFamilies = Seq(ColMap))
-    requireNotEqGoverned(gens.eq.nonEmpty, tablePath, latest,
-      "mergePartitioned")
+    val gens = resolveSidecars(spark, tablePath, latest,
+      refuseEqAs = Some("mergePartitioned"), govFamilies = Seq(ColMap))
     val parentRows = manifestRows(spark, tablePath, latest)
     require(parentRows.forall(_._2 != null),
       s"mergePartitioned needs a partitioned table (commitPartitioned); " +
@@ -2036,8 +2033,8 @@ object Snapshots {
     // below themselves — expiring any part of that chain would
     // silently resurrect deletes; fold first
     latestVersion(spark, tablePath).foreach(h =>
-      requireNotEqGoverned(liveEqDirs(spark, tablePath, h).nonEmpty,
-        tablePath, h, "vacuum"))
+      Eq.requireUngoverned(Eq.listing(spark, tablePath), tablePath, h,
+        "vacuum"))
     val m = manifest(spark, tablePath)
     val keptRows = m.filter(col("version") >= keepFrom)
       .select(col("version"), col("file"), col("part"), col("schema_json"),
@@ -2310,7 +2307,14 @@ object Snapshots {
       f: org.apache.hadoop.fs.FileSystem,
       rootDir: String): Seq[(Long, String)] = {
     sidecarListings.incrementAndGet()
-    f.listStatus(new Path(rootDir)).filter(_.isDirectory).map(_.getPath)
+    versionDirs(f.listStatus(new Path(rootDir)))
+  }
+
+  /** The `v<N>` generation dirs among a family root's entries, sorted
+    * by version. */
+  private def versionDirs(
+      entries: Array[org.apache.hadoop.fs.FileStatus]): Seq[(Long, String)] =
+    entries.filter(_.isDirectory).map(_.getPath)
       .flatMap { p =>
         val n = p.getName
         if (n.startsWith("v"))
@@ -2318,7 +2322,6 @@ object Snapshots {
         else None
       }
       .sortBy(_._1).toSeq
-  }
 
   private def pickAtOrBelow(
       family: Seq[(Long, String)],
@@ -2339,50 +2342,158 @@ object Snapshots {
   // resolved face as one copy-on-write replace and drops the
   // tombstones — the compaction that bounds read-side join depth.
   // Governed faces refuse every plain read/DML verb loudly
-  // ([[resolveSidecars]]' allowEq gate + [[requireNotEqGoverned]]);
-  // history inside a folded window refuses too (the tombstones that
-  // defined those faces are gone — a raw answer would be a lie).
+  // ([[Eq.requireUngoverned]]); history inside a folded window refuses
+  // too ([[Eq.Listing.foldedAt]]: the tombstones that defined those
+  // faces are gone — a raw answer would be a lie).
   // ------------------------------------------------------------------
 
-  private def eqRoot(tablePath: String): String = s"$tablePath/_eq"
+  /** Equality-delete tombstones: one `v<N>` dir per merge-on-read sync
+    * holding `keys` (the tombstone rows — a Spark-written frame, as
+    * large as the batch's deletes) and `fresh` (the sync's own data
+    * files, written on the driver), beside two root files: `folded`
+    * (the fold windows) and `folding` (a fold's intent). Every MOR
+    * verb reads the family through [[listing]] and the readers below. */
+  private[graft] object Eq extends SidecarFamily("_eq") {
 
-  private def eqDir(tablePath: String, version: Long): String =
-    s"${eqRoot(tablePath)}/v$version"
+    /** One listing of the family. `live`: the sync dirs whose version
+      * is a committed generation — the only dirs that GOVERN (a crashed
+      * commitEqUpsert leaves a dir no manifest references; honoring it
+      * would apply a batch that never happened). `stale`: that debris,
+      * swept by [[removeOrphans]]. `windows`: one `(firstEq, foldV)`
+      * per fold ever run, so a second fold never swallows the first
+      * fold's face. `generations`: the committed versions of the split
+      * (empty when the family holds no dir). */
+    final case class Listing(
+        live: Seq[(Long, String)],
+        stale: Seq[(Long, String)],
+        windows: Seq[(Long, Long)],
+        generations: Seq[Long]) {
 
-  private def eqFoldMarker(tablePath: String): Path =
-    new Path(s"${eqRoot(tablePath)}/folded")
+      /** Every tombstone set governing `version`, oldest first. */
+      def liveAt(version: Long): Seq[(Long, String)] =
+        live.filter(_._1 <= version)
 
-  /** The per-fold expiry windows, one `(firstEqVersion, foldVersion)`
-    * line per fold ever run: version v's MOR face is expired iff some
-    * window holds `firstEq <= v < foldV`. PER-FOLD, not one global
-    * window — a second fold must not retroactively swallow the first
-    * fold's materialized copy-on-write face (or plain commits between
-    * folds), which a single `(globalMin, latestFold)` pair would. */
-  private def readEqFoldWindows(
-      f: org.apache.hadoop.fs.FileSystem,
-      tablePath: String): Seq[(Long, Long)] = {
-    val p = eqFoldMarker(tablePath)
-    if (!f.exists(p)) Seq.empty
-    else {
-      val in = f.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](4096)
-        var n = in.read(buf)
-        while (n > 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        new String(bytes.toByteArray, "UTF-8").linesIterator
-          .map(_.trim).filter(_.nonEmpty).map { line =>
-            val parts = line.split(" ")
-            (parts(0).toLong, parts(1).toLong)
-          }.toSeq
-      } finally in.close()
+      /** The fold-window rule: `version`'s face is expired iff some
+        * window holds `firstEq <= version < foldV`. */
+      def foldedAt(version: Long): Option[(Long, Long)] =
+        windows.find { case (minEq, foldV) =>
+          version >= minEq && version < foldV }
+
+      /** Tombstones govern `version`, or its face folded away — either
+        * way a plain parquet scan would resurrect deleted keys. */
+      def governs(version: Long): Boolean =
+        liveAt(version).nonEmpty || foldedAt(version).nonEmpty
+    }
+
+    val Absent: Listing = Listing(Seq.empty, Seq.empty, Seq.empty, Seq.empty)
+
+    def foldMarker(tablePath: String): Path =
+      new Path(s"${root(tablePath)}/folded")
+
+    def foldIntent(tablePath: String): Path =
+      new Path(s"${root(tablePath)}/folding")
+
+    /** The family's ONE listing: its sync dirs split live/stale against
+      * one generation listing (taken only when a dir exists), and the
+      * fold windows (read only when the marker is listed). [[Absent]]
+      * when the table has no `_eq`. */
+    def listing(spark: SparkSession, tablePath: String): Listing = {
+      val f = fs(spark, tablePath)
+      val entries =
+        try f.listStatus(new Path(root(tablePath)))
+        catch { case _: java.io.FileNotFoundException => return Absent }
+      sidecarListings.incrementAndGet()
+      val dirs = versionDirs(entries)
+      val gens =
+        if (dirs.isEmpty) Seq.empty[Long] else listGenerations(spark, tablePath)
+      val committed = gens.toSet
+      val (live, stale) = dirs.partition(d => committed.contains(d._1))
+      val windows =
+        if (!entries.exists(_.getPath.getName == "folded")) Seq.empty
+        else {
+          val in = f.open(foldMarker(tablePath))
+          try new String(in.readAllBytes(), "UTF-8").linesIterator
+            .map(_.trim).filter(_.nonEmpty).map { line =>
+              val parts = line.split(" ")
+              (parts(0).toLong, parts(1).toLong)
+            }.toSeq
+          finally in.close()
+        }
+      Listing(live, stale, windows, gens)
+    }
+
+    /** A merge-on-read verb's [[resolveSidecars]] pass: the tombstones
+      * are its own to apply; deletion-vector, column-mapping and
+      * generated-column governance refuse. */
+    def resolve(
+        spark: SparkSession,
+        tablePath: String,
+        version: Long,
+        verb: String): SidecarGens = {
+      val gens = resolveSidecars(spark, tablePath, version, refuseEqAs = None)
+      require(gens.dv.isEmpty && !gens.gov.contains(ColMap) &&
+        !gens.gov.contains(GenCols),
+        s"$verb: $tablePath carries DV/column-mapping/generated-column " +
+          "governance — the MOR lineage composes with append faces and " +
+          "CHECK constraints only")
+      gens
+    }
+
+    /** The one guard: a plain scan or a copy-on-write verb on a
+      * tombstone-governed face would read or rewrite rows WITHOUT
+      * applying the tombstones, resurrecting deleted keys. */
+    def requireUngoverned(
+        eq: Listing,
+        tablePath: String,
+        version: Long,
+        verb: String): Unit =
+      require(eq.liveAt(version).isEmpty,
+        s"$verb: version $version of $tablePath is governed by " +
+          "equality-delete tombstones (merge-on-read) — a plain scan or " +
+          "a copy-on-write rewrite would resurrect deleted keys; read " +
+          "via readMorAsOf, or foldEqDeletes to materialize a " +
+          "copy-on-write face")
+
+    /** One sync's tombstone schema, off the keys file's footer — no
+      * Spark job ([[graft.Tables.footerSchema]], memoized per file). */
+    def keySchema(
+        spark: SparkSession,
+        dir: String): org.apache.spark.sql.types.StructType =
+      graft.Tables.footerSchema(spark, s"$dir/keys")
+
+    /** One sync's tombstone rows, as a frame. */
+    def keys(spark: SparkSession, dir: String): DataFrame =
+      spark.read.schema(keySchema(spark, dir)).parquet(s"$dir/keys")
+
+    /** One sync's tombstone count, off the keys files' footers. */
+    def keyCount(spark: SparkSession, dir: String): Long =
+      footerCounts(spark,
+        listDataFiles(spark, s"$dir/keys").map((_, null: String)))
+        .map(_._3.get).sum
+
+    /** One sync's own fresh data files, normalized — read on the
+      * driver and memoized per published dir (every governed SQL
+      * statement re-resolves it). Spark-written lists read the same. */
+    def fresh(spark: SparkSession, dir: String): Set[String] =
+      memoizedMeta(fs(spark, dir), new Path(s"$dir/fresh"), "eqfresh") {
+        readMetaParquet(spark.sparkContext.hadoopConfiguration,
+          new Path(s"$dir/fresh"), Seq("file"))
+          .map(r => normPath(r.getString(0))).toSet
+      }
+
+    /** Write sync `version`'s dir: its tombstone rows and fresh files. */
+    def write(
+        spark: SparkSession,
+        tablePath: String,
+        version: Long,
+        keys: DataFrame,
+        fresh: Seq[String]): Unit = {
+      val dir = dirAt(tablePath, version)
+      keys.coalesce(1).write.mode("errorifexists").parquet(s"$dir/keys")
+      writeMetaDir(spark, s"$dir/fresh", Seq("file" -> false),
+        fresh.map(Seq(_)))
     }
   }
-
-  private def inEqFoldWindow(
-      windows: Seq[(Long, Long)], version: Long): Boolean =
-    windows.exists { case (minEq, foldV) =>
-      version >= minEq && version < foldV }
 
   private def eqKeysSchema(stored: org.apache.spark.sql.types.StructType,
       keyCols: Seq[String]): org.apache.spark.sql.types.StructType =
@@ -2391,56 +2502,16 @@ object Snapshots {
         throw new IllegalArgumentException(
           s"equality-delete key '$k' is not a stored column"))))
 
-  private val eqFreshSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("file",
-      org.apache.spark.sql.types.StringType)))
-
-  /** The eq-delete sidecar dirs at or below `version` whose version is
-    * a LIVE generation — the only dirs that GOVERN. Tombstones commit
-    * WITH their generation: a crashed commitEqUpsert (version claimed,
-    * sidecar written, publish never landed) leaves a dir no manifest
-    * references, and honoring its tombstones would apply a batch that
-    * never happened (the replay re-commits under a fresh version,
-    * possibly with different winners). Stale dirs are crash debris —
-    * ignored here, swept by [[removeOrphans]]. One family listing +
-    * one generation listing, both metadata-scale. */
-  private def liveEqDirs(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long): Seq[(Long, String)] = {
-    val fam = sidecarListed(spark, eqRoot(tablePath)).filter(_._1 <= version)
-    if (fam.isEmpty) Seq.empty
-    else {
-      val live = listGenerations(spark, tablePath).toSet
-      fam.filter(d => live.contains(d._1))
-    }
-  }
-
   /** Is `version`'s face governed by equality-delete tombstones — or
     * inside a fold-expired window? The SQL catalog's scan guard: a
-    * plain parquet scan of either would resurrect deleted keys. */
+    * plain parquet scan of either would resurrect deleted keys. One
+    * `exists` call on a table without the family. */
   private[graft] def eqGovernedAt(
       spark: SparkSession,
       tablePath: String,
-      version: Long): Boolean = {
-    val f = fs(spark, tablePath)
-    f.exists(new Path(eqRoot(tablePath))) && (
-      liveEqDirs(spark, tablePath, version).nonEmpty ||
-        inEqFoldWindow(readEqFoldWindows(f, tablePath), version))
-  }
-
-  /** The DML-side guard: copy-on-write verbs on a tombstone-governed
-    * face would rewrite rows WITHOUT applying the tombstones,
-    * resurrecting deleted keys. */
-  private def requireNotEqGoverned(
-      governed: Boolean,
-      tablePath: String,
-      version: Long,
-      verb: String): Unit =
-    require(!governed,
-      s"$verb: version $version of $tablePath is governed by " +
-        "equality-delete tombstones — foldEqDeletes materializes the " +
-        "merge-on-read face before copy-on-write verbs apply")
+      version: Long): Boolean =
+    fs(spark, tablePath).exists(new Path(Eq.root(tablePath))) &&
+      Eq.listing(spark, tablePath).governs(version)
 
   /** ONE merge-on-read upsert commit: append `upserts` as fresh files
     * and record `tombstones` (rows of exactly `keyCols`) in the
@@ -2490,12 +2561,7 @@ object Snapshots {
           s"commitEqUpsert: $tablePath carries hive-partitioned " +
             "files — pass partCol so the sync batches keep the layout")
     }
-    val gens = resolveSidecars(spark, tablePath, observed, allowEq = true)
-    require(gens.dv.isEmpty && !gens.gov.contains(ColMap) &&
-      !gens.gov.contains(GenCols),
-      s"commitEqUpsert: $tablePath carries DV/column-mapping/" +
-        "generated-column governance — the MOR lineage composes with " +
-        "append faces and CHECK constraints only")
+    val gens = Eq.resolve(spark, tablePath, observed, "commitEqUpsert")
     val stored = storedSchemaOf(gen).getOrElse(
       throw new IllegalArgumentException(
         s"commitEqUpsert: version $observed of $tablePath carries no " +
@@ -2509,9 +2575,9 @@ object Snapshots {
     // readMorAsOf anti-joins every live sidecar against the same
     // keyCols, so a sync keyed differently than its predecessors would
     // poison every subsequent read; refuse it before anything publishes
-    liveEqDirs(spark, tablePath, observed).lastOption.foreach {
+    gens.eqLive.lastOption.foreach {
       case (n, dir) =>
-        val prev = spark.read.parquet(s"$dir/keys").columns.sorted
+        val prev = Eq.keySchema(spark, dir).fieldNames.sorted
         require(prev.sameElements(keyCols.sorted),
           s"commitEqUpsert: $tablePath's live tombstone sidecar v$n " +
             s"is keyed on (${prev.mkString(",")}) — a sync keyed on " +
@@ -2540,14 +2606,10 @@ object Snapshots {
     }
     // the sidecar: keyed tombstones + this commit's own fresh files
     // (the age index readMorAsOf scopes each tombstone set with)
-    tombstones.select(keyCols.map(c =>
-        col(c).cast(keysSchema(c).dataType)).toIndexedSeq: _*)
-      .distinct().coalesce(1)
-      .write.mode("errorifexists").parquet(s"${eqDir(tablePath, version)}/keys")
-    spark.createDataFrame(
-      java.util.Arrays.asList(fresh.map(r => Row(r._1)): _*),
-      eqFreshSchema).coalesce(1)
-      .write.mode("errorifexists").parquet(s"${eqDir(tablePath, version)}/fresh")
+    Eq.write(spark, tablePath, version,
+      tombstones.select(keyCols.map(c =>
+        col(c).cast(keysSchema(c).dataType)).toIndexedSeq: _*).distinct(),
+      fresh.map(_._1))
     publishDerived(spark, tablePath, version, fileRows ++ fresh,
       stored.json, ts, observed, "commitEqUpsert")
   }
@@ -2576,34 +2638,22 @@ object Snapshots {
     if (rows.isEmpty) // an absent partition answers empty, schema intact
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         stored.getOrElse(readAsOf(spark, tablePath, version).schema))
-    val gens = resolveSidecars(spark, tablePath, version, allowEq = true)
-    require(gens.dv.isEmpty && !gens.gov.contains(ColMap) &&
-      !gens.gov.contains(GenCols),
-      s"readMorAsOf: $tablePath carries DV/column-mapping/generated-" +
-        "column governance — the MOR lineage composes with plain " +
-        "append faces only")
-    val eqDirs = liveEqDirs(spark, tablePath, version)
+    val gens = Eq.resolve(spark, tablePath, version, "readMorAsOf")
+    val eqDirs = gens.eqLive
     if (eqDirs.isEmpty)
       return readWithDv(spark, rows, stored, None, Map.empty)
     val eqVs = eqDirs.map(_._1).toSet
     val firstEq = eqDirs.map(_._1).min
-    val foreign = listGenerations(spark, tablePath)
+    val foreign = gens.eq.generations
       .filter(g => g >= firstEq && g <= version && !eqVs.contains(g))
     require(foreign.isEmpty,
       s"readMorAsOf: version(s) ${foreign.mkString(",")} of $tablePath " +
         "landed mid-MOR-lineage from non-MOR verbs — their files' age " +
         "against the tombstones is unknowable; foldEqDeletes first")
     // per-file add sequence from the sidecars' own fresh lists —
-    // O(batches since fold) tiny metadata reads, never a history walk;
-    // memoized per published sidecar (every governed SQL statement
-    // re-resolves this read)
-    val freshOf: Seq[(Long, Set[String])] = eqDirs.map { case (n, dir) =>
-      n -> memoizedMeta(fs(spark, dir),
-        new Path(s"$dir/fresh"), "eqfresh") {
-        spark.read.schema(eqFreshSchema).parquet(s"$dir/fresh")
-          .collect().map(r => normPath(r.getString(0))).toSet
-      }
-    }
+    // O(batches since fold) tiny metadata reads, never a history walk
+    val freshOf: Seq[(Long, Set[String])] =
+      eqDirs.map { case (n, dir) => n -> Eq.fresh(spark, dir) }
     val claimed = freshOf.flatMap(_._2).toSet
     val seqCol = "__eq_seq"
     val legs = ((Long.MinValue,
@@ -2622,7 +2672,8 @@ object Snapshots {
     val data = legs.reduceLeft(_ unionByName _)
     val tombSeq = "__eq_tomb_seq"
     val tombs = eqDirs.map { case (n, dir) =>
-      val sideCols = eqSidecarKeyCols(spark, dir)
+      val keys = Eq.keys(spark, dir)
+      val sideCols = keys.columns
       // BY NAME, never positionally: the sidecar's parquet columns are
       // the keyCols of ITS commit — a caller passing a different order
       // (or a different key set than the syncs used) must resolve to
@@ -2633,7 +2684,7 @@ object Snapshots {
           s"on (${sideCols.sorted.mkString(",")}) but the read " +
           s"asked for (${keyCols.sorted.mkString(",")}) — the key " +
           "sets must match")
-      spark.read.parquet(s"$dir/keys").select(keyCols.map(k =>
+      keys.select(keyCols.map(k =>
           col(k).as(s"__eq_t_$k")).toIndexedSeq: _*)
         .withColumn(tombSeq, lit(n))
     }.reduceLeft(_ unionByName _)
@@ -2670,9 +2721,6 @@ object Snapshots {
     * (those faces' tombstones are gone; a raw answer would resurrect
     * deletes), while pre-MOR history below and the folded face above
     * keep serving. */
-  private def eqFoldIntent(tablePath: String): Path =
-    new Path(s"${eqRoot(tablePath)}/folding")
-
   def foldEqDeletes(
       spark: SparkSession,
       tablePath: String,
@@ -2681,9 +2729,8 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"foldEqDeletes: $tablePath has no committed versions"))
     val f = fs(spark, tablePath)
-    val eqAll =
-      if (!f.exists(new Path(eqRoot(tablePath)))) Seq.empty
-      else sidecarFamilyListed(f, eqRoot(tablePath))
+    val eq = Eq.listing(spark, tablePath)
+    val eqAll = eq.live ++ eq.stale
     require(eqAll.nonEmpty,
       s"foldEqDeletes: $tablePath carries no equality-delete sidecars")
     // TWO-PHASE against the crash between the replace commit and the
@@ -2692,7 +2739,7 @@ object Snapshots {
     // commit (parent == intent, not an eq generation) just FINISHES —
     // re-deriving from it would refuse on its own mid-lineage commit
     val intentFrom =
-      readPointer(f, eqFoldIntent(tablePath), lenient = true)
+      readPointer(f, Eq.foldIntent(tablePath), lenient = true)
     val eqVs = eqAll.map(_._1).toSet
     val crashedFoldLanded = intentFrom.exists { from =>
       head > from && !eqVs.contains(head) &&
@@ -2701,7 +2748,7 @@ object Snapshots {
     val v =
       if (crashedFoldLanded) head
       else {
-        writePointer(f, eqFoldIntent(tablePath), head)
+        writePointer(f, Eq.foldIntent(tablePath), head)
         val face = readMorAsOf(spark, tablePath, head, keyCols)
         // a partitioned MOR lineage folds through the partitioned
         // commit — the materialized face keeps its layout (and its
@@ -2725,14 +2772,13 @@ object Snapshots {
     // APPEND a per-fold window — rewriting one global (min, latest)
     // pair would retroactively refuse the previous fold's materialized
     // face and any plain commits that landed between folds.
-    val windows = readEqFoldWindows(f, tablePath) :+
-      (eqAll.map(_._1).min, v)
-    val out = f.create(eqFoldMarker(tablePath), true)
+    val windows = eq.windows :+ (eqAll.map(_._1).min, v)
+    val out = f.create(Eq.foldMarker(tablePath), true)
     try out.write(windows.map { case (a, b) => s"$a $b" }
       .mkString("\n").getBytes("UTF-8"))
     finally out.close()
     eqAll.foreach { case (_, dir) => f.delete(new Path(dir), true) }
-    f.delete(eqFoldIntent(tablePath), false)
+    f.delete(Eq.foldIntent(tablePath), false)
     v
   }
 
@@ -2788,25 +2834,29 @@ object Snapshots {
     * (the r16 q25/q28 read-path creep); this caps it at 1 + families
     * actually present, however many verbs stack. The deletion-vector
     * family's whole listing is kept, so an interval verb picks its
-    * other endpoint's set from the same listing ([[dvAt]]). A caller
-    * that needs only some governance families names them
-    * (`govFamilies`); the others are not listed and absent from
-    * `gov`. */
+    * other endpoint's set from the same listing ([[dvAt]]); so is
+    * [[Eq.listing]]. A caller that needs only some governance families
+    * names them (`govFamilies`); the others are not listed and absent
+    * from `gov`. A tombstone-governed face refuses as the verb
+    * `refuseEqAs` names; the merge-on-read verbs pass None. */
   private[graft] final case class SidecarGens(
       version: Long,
       dvListed: Seq[(Long, String)],
       gov: Map[GovFamily[_], (Long, String)],
-      eq: Option[(Long, String)]) {
+      eq: Eq.Listing) {
     def dv: Option[(Long, String)] = dvAt(version)
 
     def dvAt(v: Long): Option[(Long, String)] = pickAtOrBelow(dvListed, v)
+
+    /** The tombstone sets governing `version`, oldest first. */
+    def eqLive: Seq[(Long, String)] = eq.liveAt(version)
   }
 
   private[graft] def resolveSidecars(
       spark: SparkSession,
       tablePath: String,
       version: Long,
-      allowEq: Boolean = false,
+      refuseEqAs: Option[String] = Some("read"),
       govFamilies: Seq[GovFamily[_]] = GovFamilies): SidecarGens = {
     val f = fs(spark, tablePath)
     sidecarListings.incrementAndGet()
@@ -2815,35 +2865,24 @@ object Snapshots {
     def listed(fam: SidecarFamily): Seq[(Long, String)] =
       if (!present.contains(fam.dirName)) Seq.empty
       else sidecarFamilyListed(f, fam.root(tablePath))
-    val eqPick =
-      if (!present.contains("_eq")) None
-      else {
-        // a folded MOR lineage expired its tombstone history: versions
-        // inside the fold window have NO servable face at all — refuse
-        // toward the fold point instead of silently answering raw rows
-        readEqFoldWindows(f, tablePath)
-          .find { case (minEq, foldV) =>
-            version >= minEq && version < foldV }
-          .foreach { case (minEq, foldV) =>
-            throw new IllegalArgumentException(
-              s"version $version of $tablePath was merge-on-read " +
-                s"governed and its equality-delete history folded away " +
-                s"at v$foldV — no face exists inside [$minEq, $foldV); " +
-                s"read v$foldV or later, or a version outside the window")
-          }
-        // LIVE dirs only: a crashed upsert's unpublished sidecar is
-        // debris, not governance (removeOrphans sweeps it)
-        liveEqDirs(spark, tablePath, version).lastOption
-      }
-    require(allowEq || eqPick.isEmpty,
-      s"version $version of $tablePath is governed by equality-delete " +
-        "tombstones (merge-on-read) — a plain scan would resurrect " +
-        "deleted keys; read via readMorAsOf, or foldEqDeletes to " +
-        "materialize a copy-on-write face")
+    val eq =
+      if (!present.contains(Eq.dirName)) Eq.Absent
+      else Eq.listing(spark, tablePath)
+    // a folded MOR lineage expired its tombstone history: versions
+    // inside the fold window have NO servable face at all — refuse
+    // toward the fold point instead of silently answering raw rows
+    eq.foldedAt(version).foreach { case (minEq, foldV) =>
+      throw new IllegalArgumentException(
+        s"version $version of $tablePath was merge-on-read " +
+          s"governed and its equality-delete history folded away " +
+          s"at v$foldV — no face exists inside [$minEq, $foldV); " +
+          s"read v$foldV or later, or a version outside the window")
+    }
+    refuseEqAs.foreach(Eq.requireUngoverned(eq, tablePath, version, _))
     SidecarGens(version, listed(Dv),
       govFamilies.flatMap(g =>
         pickAtOrBelow(listed(g), version).map(g -> _)).toMap,
-      eqPick)
+      eq)
   }
 
   /** The governing DV frame from an already-resolved [[SidecarGens]] —
@@ -3087,9 +3126,8 @@ object Snapshots {
     val observed = latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"$verb: $tablePath has no committed versions"))
-    val gens = resolveSidecars(spark, tablePath, observed, allowEq = true,
-      govFamilies = Seq(ColMap))
-    requireNotEqGoverned(gens.eq.nonEmpty, tablePath, observed, verb)
+    val gens = resolveSidecars(spark, tablePath, observed,
+      refuseEqAs = Some(verb), govFamilies = Seq(ColMap))
     val gen = observedGeneration(spark, tablePath, observed, verb)
     DmlFace(spark, tablePath, observed, fileRowsOf(gen),
       schemaJsonOf(gen).orNull, storedSchemaOf(gen),
@@ -3803,9 +3841,10 @@ object Snapshots {
       s"${root(tablePath)}/v$version"
   }
 
-  /** The carried, write-governance and pruning-index families. */
+  /** The carried, write-governance, pruning-index and equality-delete
+    * families. */
   private def sidecarFamilies: Seq[SidecarFamily] =
-    CarriedFamilies ++ IndexFamilies
+    CarriedFamilies ++ IndexFamilies :+ Eq
 
   /** A CARRIED sidecar family: each `<table>/<dirName>/v<N>` holds the
     * FULL set governing generation N (a set of type `S`), resolved
@@ -5223,15 +5262,9 @@ object Snapshots {
     // a crashed commitEqUpsert's sidecar dir (version claimed, publish
     // never landed) is orphan metadata too: it never governs (the live
     // filter ignores it) but it accumulates — same safety window
-    val staleEq =
-      if (!f.exists(new Path(eqRoot(tablePath)))) Seq.empty
-      else {
-        val live = listGenerations(spark, tablePath).toSet
-        sidecarFamilyListed(f, eqRoot(tablePath))
-          .filterNot(d => live.contains(d._1))
-          .map(d => new Path(d._2))
-          .filter(p => f.getFileStatus(p).getModificationTime <= cutoff)
-      }
+    val staleEq = Eq.listing(spark, tablePath).stale
+      .map(d => new Path(d._2))
+      .filter(p => f.getFileStatus(p).getModificationTime <= cutoff)
     staleEq.foreach(p => f.delete(p, true))
     (orphans.length + staleEq.length).toLong
   }
@@ -5644,10 +5677,8 @@ object Snapshots {
     val head = latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"eqStats: $tablePath has no committed versions"))
-    val eqDirs = liveEqDirs(spark, tablePath, head)
-    val tombRows = eqDirs.map { case (_, dir) =>
-      spark.read.parquet(s"$dir/keys").count()
-    }.sum
+    val eqDirs = Eq.listing(spark, tablePath).liveAt(head)
+    val tombRows = eqDirs.map { case (_, dir) => Eq.keyCount(spark, dir) }.sum
     val rows = manifestRows(spark, tablePath, head)
     require(rows.forall(_._3.isDefined),
       s"version $head of $tablePath predates row-count manifests — " +
@@ -5671,20 +5702,9 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String): Option[Seq[String]] =
     latestVersion(spark, tablePath).flatMap(h =>
-      liveEqDirs(spark, tablePath, h).lastOption.map { case (_, dir) =>
-        eqSidecarKeyCols(spark, dir)
+      Eq.listing(spark, tablePath).liveAt(h).lastOption.map {
+        case (_, dir) => Eq.keySchema(spark, dir).fieldNames.toSeq
       })
-
-  /** One tombstone sidecar's recorded key columns (its keys-parquet
-    * column names) — memoized per published dir: a footer read
-    * otherwise repeated by every governed SQL statement's
-    * substitution. */
-  private def eqSidecarKeyCols(
-      spark: SparkSession,
-      dir: String): Seq[String] =
-    memoizedMeta(fs(spark, dir), new Path(s"$dir/keys"), "eqkeycols") {
-      spark.read.parquet(s"$dir/keys").columns.toSeq
-    }
 
   /** [[foldEqDeletes]] with the key columns derived from the newest
     * live sidecar itself — the maintenance-sweep entry point (the

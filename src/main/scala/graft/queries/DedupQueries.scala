@@ -767,7 +767,7 @@ private[graft] object DedupQueries {
       // as one batch this reduces to min-id-wins, so the distinct loser
       // set shares the batch operator's oracle complement.
       Tables.configure(s)
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
+      val raw = Tables.footerSchema(s, s"$dir/documents.parquet")
       val stream = s.readStream.schema(raw)
         .parquet(streamGlob(s"$dir/documents.parquet"))
       val losses = StreamDedup.onlineDedupStream(Dedup.bandKeys(stream))

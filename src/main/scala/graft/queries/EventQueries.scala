@@ -1406,7 +1406,7 @@ private[graft] object EventQueries {
       eventsCents(s, dir)
         .repartition(5)
         .write.mode("overwrite").parquet(staging)
-      val raw = s.read.parquet(staging).schema
+      val raw = Tables.footerSchema(s, staging)
       val feed = s.readStream.schema(raw)
         .option("maxFilesPerTrigger", 1).parquet(staging)
       val q = SnapshotStream.ingest(feed, tbl, "ev_stream_ingest_maint",
@@ -1490,7 +1490,7 @@ private[graft] object EventQueries {
           when(col("event_id") % 17 === 0, lit("d")).otherwise(lit("u")))
         .repartition(3)
         .write.mode("overwrite").parquet(staging)
-      val schema = s.read.parquet(staging).schema
+      val schema = Tables.footerSchema(s, staging)
       val feed = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(staging)
       val q = SnapshotStream.upsertMor(feed, tbl, "ev_stream_cdc_mor_q",
@@ -1834,7 +1834,7 @@ private[graft] object EventQueries {
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
       val staging = s"$artifactRoot/stream_dedup_input"
       ev.unionByName(ev).write.mode("overwrite").parquet(staging)
-      val schema = s.read.parquet(staging).schema
+      val schema = Tables.footerSchema(s, staging)
       val deduped = Sessionize.dedupStream(
         s.readStream.schema(schema).parquet(staging),
         keys = Seq("event_id"))

@@ -573,7 +573,7 @@ private[graft] object MultimodalQueries {
         Multimodal.syntheticPixelBmpAssets(t(s, dir, "documents")))
       val staging = s"$artifactRoot/stream_phash_input"
       hashes.write.mode("overwrite").parquet(staging)
-      val schema = s.read.parquet(staging).schema
+      val schema = Tables.footerSchema(s, staging)
       val stream = s.readStream.schema(schema).parquet(staging)
       val losses = PhashStream.onlineImageDedupStream(
         Dedup.hammingChunkKeys(stream, "asset_id", "phash",
@@ -626,7 +626,7 @@ private[graft] object MultimodalQueries {
         Multimodal.syntheticWavNearDupAssets(t(s, dir, "documents")))
       val staging = s"$artifactRoot/stream_audiofp_input"
       hashes.write.mode("overwrite").parquet(staging)
-      val schema = s.read.parquet(staging).schema
+      val schema = Tables.footerSchema(s, staging)
       val stream = s.readStream.schema(schema).parquet(staging)
       val losses = PhashStream.onlineImageDedupStream(
         Dedup.hammingChunkKeys(stream, "asset_id", "afp",

@@ -301,7 +301,7 @@ private[graft] object TextQueries {
       Tables.configure(s)
       val weights = TextAnalysis.sourceMixture(par(s)(t(s, dir, "documents")))
         .select(col("source"), col("weight"))
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
+      val raw = Tables.footerSchema(s, s"$dir/documents.parquet")
       val stream = s.readStream.schema(raw)
         .parquet(streamGlob(s"$dir/documents.parquet"))
       val u = conv(substring(
@@ -330,7 +330,7 @@ private[graft] object TextQueries {
         length(col("text")).cast("long").as("score"))
       val totals = TextAnalysis.sampleWeightedTotals(
         scoreOf(s.read.parquet(s"$dir/documents.parquet")), "score")
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
+      val raw = Tables.footerSchema(s, s"$dir/documents.parquet")
       val stream = s.readStream.schema(raw)
         .parquet(streamGlob(s"$dir/documents.parquet"))
       val gated = TextAnalysis.sampleWeightedApply(
@@ -511,7 +511,7 @@ private[graft] object TextQueries {
         quality("alpha_ratio").as("alpha_ratio"))
       val thresholds = StreamGate.rankThresholds(
         scoreOf(s.read.parquet(s"$dir/documents.parquet")), "alpha_ratio")
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
+      val raw = Tables.footerSchema(s, s"$dir/documents.parquet")
       val stream = s.readStream.schema(raw)
         .parquet(streamGlob(s"$dir/documents.parquet"))
       val gated = StreamGate.applyThresholds(
@@ -1063,7 +1063,7 @@ private[graft] object TextQueries {
           Dedup.shingles(col("text"), 3))).as("gram"))
         .distinct()
         .withColumn("__hit", lit(1))
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
+      val raw = Tables.footerSchema(s, s"$dir/documents.parquet")
       val stream = s.readStream.schema(raw)
         .parquet(streamGlob(s"$dir/documents.parquet"))
       val trainGrams = stream.filter(col("doc_id") % 50 =!= 0)
@@ -1639,7 +1639,7 @@ private[graft] object TextQueries {
       // count(DISTINCT) is structurally unsupported over streams; the
       // sketch is the operator that CAN run there). Drained after the
       // bounded replay; the oracle replays the bottom-k arithmetic.
-      val raw = s.read.parquet(s"$dir/documents.parquet").schema
+      val raw = Tables.footerSchema(s, s"$dir/documents.parquet")
       val stream = s.readStream.schema(raw)
         .parquet(streamGlob(s"$dir/documents.parquet"))
       val words = stream

@@ -118,6 +118,52 @@ class SnapshotMorSpec extends SparkSuite {
       Map(1L -> "a2", 3L -> "c"))
   }
 
+  /** A base face and two merge-on-read syncs keyed on `id`. */
+  private def twoSyncLineage(): (String, Long) = {
+    val tbl = freshTable()
+    Snapshots.commit(spark,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"),
+      tbl, append = false)
+    Snapshots.commitEqUpsert(spark, tbl,
+      upserts = Seq((4L, "d")).toDF("id", "v"),
+      tombstones = Seq(1L, 4L).toDF("id"), keyCols = Seq("id"))
+    val v2 = Snapshots.commitEqUpsert(spark, tbl,
+      upserts = Seq((2L, "b2")).toDF("id", "v"),
+      tombstones = Seq(2L).toDF("id"), keyCols = Seq("id"))
+    (tbl, v2)
+  }
+
+  test("the equality-delete metadata reads run no Spark job: a cold " +
+    "eqLiveKeyCols, eqStats and commitEqUpsert key check, and building " +
+    "readMorAsOf over a two-sync lineage") {
+    val (a, va) = twoSyncLineage()
+    val (refusal, checkJobs) = jobsDuring(
+      intercept[IllegalArgumentException](
+        Snapshots.commitEqUpsert(spark, a,
+          upserts = Seq((5L, "e")).toDF("id", "v"),
+          tombstones = Seq("e").toDF("v"), keyCols = Seq("v"))))
+    assert(refusal.getMessage.contains("cannot join the same"),
+      refusal.getMessage)
+    assert(checkJobs == 0,
+      s"commitEqUpsert's key check ran $checkJobs job(s)")
+    assert(Snapshots.latestVersion(spark, a).contains(va))
+    val (face, buildJobs) =
+      jobsDuring(Snapshots.readMorAsOf(spark, a, va, Seq("id")))
+    assert(buildJobs == 0, s"building readMorAsOf ran $buildJobs job(s)")
+    assert(face.select("id", "v").as[(Long, String)].collect().toMap ==
+      Map(2L -> "b2", 3L -> "c", 4L -> "d"))
+
+    val (b, _) = twoSyncLineage()
+    val (keys, keyJobs) = jobsDuring(Snapshots.eqLiveKeyCols(spark, b))
+    assert(keys.contains(Seq("id")))
+    assert(keyJobs == 0, s"a cold eqLiveKeyCols ran $keyJobs job(s)")
+    val (stats, statJobs) = jobsDuring(Snapshots.eqStats(spark, b))
+    assert(statJobs == 0, s"eqStats ran $statJobs job(s)")
+    val row = stats.select("physical_rows", "eq_tombstones", "eq_sidecars")
+      .as[(Long, Long, Long)].head()
+    assert(row == ((5L, 3L, 2L)), s"eqStats gauged $row")
+  }
+
   test("foldEqDeletes materializes the MOR face copy-on-write, drops " +
     "the tombstones, and expires the fold window HONESTLY: plain " +
     "verbs serve again at and above the fold, history inside the " +

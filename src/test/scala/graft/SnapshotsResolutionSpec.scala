@@ -103,6 +103,61 @@ class SnapshotsResolutionSpec extends SparkSuite {
         s"table against $plain on a DV-only one")
   }
 
+  private def listCountTable(): String = {
+    import SnapshotsResolutionSpec.ListCountFs
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.listcount.impl", classOf[ListCountFs].getName)
+    "listcount://" + freshTable()
+  }
+
+  test("the no-equality-delete fast path: eqGovernedAt makes one exists " +
+    "call and no listing, and resolveSidecars touches nothing of _eq") {
+    import SnapshotsResolutionSpec.ListCountFs
+    val tbl = listCountTable()
+    val v = Snapshots.commit(spark,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1), tbl,
+      append = false)
+    Snapshots.deleteWhere(spark, tbl, col("id") === 1L)
+    val head = Snapshots.latestVersion(spark, tbl).get
+    val (governed, calls) =
+      ListCountFs.during(Snapshots.eqGovernedAt(spark, tbl, head))
+    assert(!governed && head > v)
+    assert(calls == Seq(s"exists ${new HPath(tbl).toUri.getPath}/_eq"),
+      s"eqGovernedAt on a table with no _eq made: $calls")
+    val (gens, rcalls) =
+      ListCountFs.during(Snapshots.resolveSidecars(spark, tbl, head))
+    assert(gens.dv.nonEmpty)
+    assert(!rcalls.exists(_.contains("/_eq")),
+      s"resolveSidecars on a table with no _eq touched it: $rcalls")
+    assert(!rcalls.exists(_.startsWith("open")),
+      s"resolveSidecars on a table with no _eq opened a file: $rcalls")
+  }
+
+  test("readMorAsOf over a two-sync lineage lists _eq once and the " +
+    "manifest directory once") {
+    import SnapshotsResolutionSpec.ListCountFs
+    val tbl = listCountTable()
+    Snapshots.commit(spark,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").coalesce(1),
+      tbl, append = false)
+    Snapshots.commitEqUpsert(spark, tbl,
+      upserts = Seq((4L, "d")).toDF("id", "v"),
+      tombstones = Seq(1L, 4L).toDF("id"), keyCols = Seq("id"))
+    val v2 = Snapshots.commitEqUpsert(spark, tbl,
+      upserts = Seq((2L, "b2")).toDF("id", "v"),
+      tombstones = Seq(2L).toDF("id"), keyCols = Seq("id"))
+    val (face, calls) = ListCountFs.during(
+      Snapshots.readMorAsOf(spark, tbl, v2, Seq("id")))
+    val lists = calls.filter(_.startsWith("list "))
+    val eqLists = lists.count(_.endsWith("/_eq"))
+    val genLists = lists.count(_.endsWith("/_versions"))
+    assert(eqLists == 1, s"readMorAsOf listed _eq $eqLists times: $lists")
+    assert(genLists == 1,
+      s"readMorAsOf listed the manifest directory $genLists times: $lists")
+    assert(face.select("id", "v").as[(Long, String)].collect().toMap ==
+      Map(2L -> "b2", 3L -> "c", 4L -> "d"))
+  }
+
   test("countAsOf and scanRangeAsOf stay inside the same budget — the " +
     "stats scan's happy path reads the manifest ZERO times") {
     val tbl = freshTable()
@@ -444,16 +499,39 @@ class SnapshotsResolutionSpec extends SparkSuite {
 
 object SnapshotsResolutionSpec {
   /** The checksummed local file system under the `listcount:` scheme,
-    * counting every directory listing made through it. */
+    * counting every directory listing, `exists` call and file open made
+    * through it, and recording the paths they named. */
   class ListCountFs extends LocalFileSystem(new RawLocalFileSystem {
     override def getUri: URI = URI.create("listcount:///")
   }) {
     override def listStatus(p: HPath): Array[FileStatus] = {
       ListCountFs.listings.incrementAndGet()
+      ListCountFs.touched.add("list " + p.toUri.getPath)
       super.listStatus(p)
+    }
+
+    override def exists(p: HPath): Boolean = {
+      ListCountFs.touched.add("exists " + p.toUri.getPath)
+      super.exists(p)
+    }
+
+    override def open(p: HPath, bufferSize: Int)
+        : org.apache.hadoop.fs.FSDataInputStream = {
+      ListCountFs.touched.add("open " + p.toUri.getPath)
+      super.open(p, bufferSize)
     }
   }
   object ListCountFs {
     val listings = new AtomicLong
+    val touched = new java.util.concurrent.ConcurrentLinkedQueue[String]
+
+    /** The "<op> <path>" calls `body` made through the file system. */
+    def during[T](body: => T): (T, Seq[String]) = {
+      touched.clear()
+      val r = body
+      val calls = touched.toArray(Array.empty[String]).toSeq
+      touched.clear()
+      (r, calls)
+    }
   }
 }
