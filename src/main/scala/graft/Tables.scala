@@ -38,8 +38,9 @@ object Tables {
     * inference picks without schema merging), with no Spark job.
     * Converted by Spark's own footer reader under the session's
     * parquet settings, so `nanosAsLong` and NTZ inference match: call
-    * it after [[configure]]. Memoized per file status
-    * ([[Snapshots.memoizedMeta]]), keyed also by those settings. */
+    * it after [[configure]]. Every field nullable, as a file source
+    * reads it. Memoized per file status ([[Snapshots.memoizedMeta]]),
+    * keyed also by those settings. */
   def footerSchema(spark: SparkSession, path: String): StructType = {
     import org.apache.parquet.format.converter.ParquetMetadataConverter
     import org.apache.parquet.hadoop.Footer
@@ -64,8 +65,9 @@ object Tables {
       val footer = ParquetFooterReader.readFooter(
         HadoopInputFile.fromPath(file, conf),
         ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
-        new ParquetToSparkSchemaConverter(sql))
+      org.apache.spark.sql.GraftSqlShim.nullable(
+        ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+          new ParquetToSparkSchemaConverter(sql)))
     }
   }
 

@@ -252,9 +252,14 @@ object Skipping {
         .readFrom(new java.io.ByteArrayInputStream(bf))
       hashes.exists(sk.mightContainLong)
     }
-    spark.read.parquet(dir).filter(admits(col("bf")))
+    readIndex(spark, dir).filter(admits(col("bf")))
       .select(col("file")).collect().map(_.getString(0)).toIndexedSeq
   }
+
+  /** The rows of a stats/bloom manifest or sidecar dir, read with its
+    * footer schema ([[graft.Tables.footerSchema]]): no inference job. */
+  private[graft] def readIndex(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(graft.Tables.footerSchema(spark, dir)).parquet(dir)
 
   /** Manifest-pruned range scan: plan the parquet read over ONLY the
     * files whose stats admit `keyCol` ∈ [lo, hi], then apply the exact
@@ -267,7 +272,7 @@ object Skipping {
       lo: Any,
       hi: Any): DataFrame =
     faceOver(spark, tablePath,
-      pruneFiles(spark.read.parquet(manifestPath), keyCol, lo, hi))
+      pruneFiles(readIndex(spark, manifestPath), keyCol, lo, hi))
       .filter(col(keyCol) >= lit(lo) && col(keyCol) <= lit(hi))
 
   /** The table at `tablePath` read over exactly `files`. Zero files is
@@ -277,7 +282,7 @@ object Skipping {
       spark: SparkSession,
       tablePath: String,
       files: Seq[String]): DataFrame = {
-    val schema = spark.read.parquet(tablePath).schema
+    val schema = graft.Tables.footerSchema(spark, tablePath)
     if (files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     else spark.read.schema(schema).parquet(files: _*)

@@ -1641,7 +1641,7 @@ object Snapshots {
     // files would resurrect DV-deleted rows into the new generation's
     // fresh files
     val gens = resolveSidecars(spark, tablePath, latest,
-      refuseEqAs = Some("mergePartitioned"), govFamilies = Seq(ColMap))
+      refuseEqAs = Some("mergePartitioned"), families = Seq(ColMap))
     val parentRows = manifestRows(spark, tablePath, latest)
     require(parentRows.forall(_._2 != null),
       s"mergePartitioned needs a partitioned table (commitPartitioned); " +
@@ -1658,14 +1658,12 @@ object Snapshots {
     // touched survivors; only upserts re-insert
     val inserts = opCol.fold(updates)(op =>
       updates.filter(col(op) === "upsert").drop(op))
-    val dv = dvSetOf(spark, gens)
-    val l2p = logicalToPhysical(colMapOf(spark, gens))
     val survivors =
       if (touchedFiles.isEmpty) inserts.limit(0)
       else
         readWithDv(spark,
           touchedFiles.map { case (f, p, _) => (f, p) },
-          parentSchema, dv, l2p)
+          parentSchema, gens)
           .join(updates.select(keyCols.map(col): _*).distinct(),
             keyCols, "left_anti")
     val prepared = prepareBatch(spark, tablePath, Some(latest),
@@ -1785,13 +1783,66 @@ object Snapshots {
   def readAsOf(
       spark: SparkSession,
       tablePath: String,
-      version: Long): DataFrame = {
-    val (rows, stored) = generationOf(spark, tablePath, version)
-    val gens = resolveSidecars(spark, tablePath, version)
-    val dv = dvSetOf(spark, gens)
-    val l2p = logicalToPhysical(colMapOf(spark, gens))
-    readWithDv(spark, rows, stored, dv, l2p)
+      version: Long): DataFrame =
+    readFace(spark, resolveFace(spark, tablePath, version))
+
+  /** One resolved snapshot face: its (file, fragment) rows and stored
+    * schema from ONE manifest read, its sidecars from ONE
+    * [[sidecarPass]]. The SQL catalog derives a table load's scan
+    * guard, runtime-filter keys and governed read from one face;
+    * resolving refuses nothing, reading does ([[readFace]],
+    * [[readMorFace]]). */
+  private[graft] final case class Face(
+      tablePath: String,
+      version: Long,
+      rows: Seq[(String, String)],
+      stored: Option[org.apache.spark.sql.types.StructType],
+      gens: SidecarGens) {
+
+    /** A governing deletion vector touches one of the face's files. */
+    def dvGoverned(spark: SparkSession): Boolean =
+      gens.dv.exists { case (_, dir) =>
+        val dirty = dvRecordedFiles(spark, dir)
+        rows.exists(r => dirty.contains(normPath(r._1)))
+      }
+
+    /** A rename/drop column mapping governs the face. */
+    def mapsColumns(spark: SparkSession): Boolean =
+      renamesAny(colMapOf(spark, gens))
+
+    /** The tombstone key columns; empty when none governs. */
+    def eqKeyCols(spark: SparkSession): Seq[String] =
+      Eq.keyCols(spark, gens.eqLive).getOrElse(Seq.empty)
+
+    /** The key columns of the pruning-index sidecars that describe the
+      * face (resolved with [[IndexFamilies]]) — physical names, so of
+      * no use to a mapped face. */
+    def runtimeKeys(spark: SparkSession): Seq[String] =
+      IndexFamilies.flatMap(fam =>
+        describing(spark, fam).toSeq.flatMap(fam.keys(spark, _))).distinct
+
+    /** `fam`'s dir that describes the face, if one does. */
+    def describing(spark: SparkSession, fam: IndexFamily): Option[String] =
+      describes(spark, gens.picked.get(fam), version, rows.map(_._1))
   }
+
+  /** Resolve `version`'s [[Face]], listing `families` beside DV and
+    * `_eq`. */
+  private[graft] def resolveFace(
+      spark: SparkSession,
+      tablePath: String,
+      version: Long,
+      families: Seq[SidecarFamily] = GovFamilies): Face = {
+    val (rows, stored) = generationOf(spark, tablePath, version)
+    Face(tablePath, version, rows, stored,
+      sidecarPass(spark, tablePath, version, families))
+  }
+
+  /** Plan a face's read — deletion vectors and the column mapping
+    * applied. A tombstone-governed or folded-away face refuses. */
+  private[graft] def readFace(spark: SparkSession, face: Face): DataFrame =
+    readWithDv(spark, face.rows, face.stored,
+      face.gens.servable(face.tablePath, Some("read")))
 
   /** Plan a read over (file, fragment) manifest rows: flat files read
     * directly, partitioned ones via [[readPartedFiles]]' basePath
@@ -1856,10 +1907,8 @@ object Snapshots {
       val schema = stored.getOrElse(readAsOf(spark, tablePath, version).schema)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     } else {
-      val gens = resolveSidecars(spark, tablePath, version)
-      val dv = dvSetOf(spark, gens)
-      val l2p = logicalToPhysical(colMapOf(spark, gens))
-      readWithDv(spark, hit.toSeq, stored, dv, l2p)
+      readWithDv(spark, hit.toSeq, stored,
+        resolveSidecars(spark, tablePath, version))
     }
   }
 
@@ -1890,16 +1939,14 @@ object Snapshots {
     val fallback = all.filter(r =>
       r._2 == null || !r._2.startsWith(s"$partCol="))
     val gens = resolveSidecars(spark, tablePath, version)
-    val dv = dvSetOf(spark, gens)
-    val l2p = logicalToPhysical(colMapOf(spark, gens))
     // each leg plans its own file-level DV split (clean files join
     // nothing); the exact-value filter commutes with the anti-join
     val legs =
       (if (hit.nonEmpty)
-        Seq(readWithDv(spark, hit, stored, dv, l2p))
+        Seq(readWithDv(spark, hit, stored, gens))
       else Seq.empty) ++
         (if (fallback.nonEmpty)
-          Seq(readWithDv(spark, fallback, stored, dv, l2p)
+          Seq(readWithDv(spark, fallback, stored, gens)
             .filter(col(partCol) === lit(value)))
         else Seq.empty)
     if (legs.isEmpty) {
@@ -2422,17 +2469,16 @@ object Snapshots {
       Listing(live, stale, windows, gens)
     }
 
-    /** A merge-on-read verb's [[resolveSidecars]] pass: the tombstones
-      * are its own to apply; deletion-vector, column-mapping and
-      * generated-column governance refuse. */
-    def resolve(
-        spark: SparkSession,
+    /** A merge-on-read verb's sidecars (resolved with [[GovFamilies]]):
+      * a fold window, DV, column-mapping and generated-column
+      * governance refuse; the tombstones are its own to apply. */
+    def composable(
+        gens: SidecarGens,
         tablePath: String,
-        version: Long,
         verb: String): SidecarGens = {
-      val gens = resolveSidecars(spark, tablePath, version, refuseEqAs = None)
-      require(gens.dv.isEmpty && !gens.gov.contains(ColMap) &&
-        !gens.gov.contains(GenCols),
+      gens.servable(tablePath, refuseEqAs = None)
+      require(gens.dv.isEmpty && !gens.picked.contains(ColMap) &&
+        !gens.picked.contains(GenCols),
         s"$verb: $tablePath carries DV/column-mapping/generated-column " +
           "governance — the MOR lineage composes with append faces and " +
           "CHECK constraints only")
@@ -2460,6 +2506,14 @@ object Snapshots {
         spark: SparkSession,
         dir: String): org.apache.spark.sql.types.StructType =
       graft.Tables.footerSchema(spark, s"$dir/keys")
+
+    /** The key columns of the newest of `live` (one key set per lineage
+      * is commit-enforced, so it speaks for all). */
+    def keyCols(
+        spark: SparkSession,
+        live: Seq[(Long, String)]): Option[Seq[String]] =
+      live.lastOption.map { case (_, dir) =>
+        keySchema(spark, dir).fieldNames.toSeq }
 
     /** One sync's tombstone rows, as a frame. */
     def keys(spark: SparkSession, dir: String): DataFrame =
@@ -2503,9 +2557,10 @@ object Snapshots {
           s"equality-delete key '$k' is not a stored column"))))
 
   /** Is `version`'s face governed by equality-delete tombstones — or
-    * inside a fold-expired window? The SQL catalog's scan guard: a
-    * plain parquet scan of either would resurrect deleted keys. One
-    * `exists` call on a table without the family. */
+    * inside a fold-expired window? The catalog maintenance sweep's and
+    * the snapshot stream source's guard: a plain read of either would
+    * resurrect deleted keys. One `exists` call on a table without the
+    * family. */
   private[graft] def eqGovernedAt(
       spark: SparkSession,
       tablePath: String,
@@ -2561,7 +2616,9 @@ object Snapshots {
           s"commitEqUpsert: $tablePath carries hive-partitioned " +
             "files — pass partCol so the sync batches keep the layout")
     }
-    val gens = Eq.resolve(spark, tablePath, observed, "commitEqUpsert")
+    val gens = Eq.composable(
+      resolveSidecars(spark, tablePath, observed, refuseEqAs = None),
+      tablePath, "commitEqUpsert")
     val stored = storedSchemaOf(gen).getOrElse(
       throw new IllegalArgumentException(
         s"commitEqUpsert: version $observed of $tablePath carries no " +
@@ -2638,10 +2695,21 @@ object Snapshots {
     if (rows.isEmpty) // an absent partition answers empty, schema intact
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         stored.getOrElse(readAsOf(spark, tablePath, version).schema))
-    val gens = Eq.resolve(spark, tablePath, version, "readMorAsOf")
+    readMorFace(spark, Face(tablePath, version, rows, stored,
+      sidecarPass(spark, tablePath, version, GovFamilies)), keyCols)
+  }
+
+  /** Plan a face's merge-on-read resolution ([[readMorAsOf]]). */
+  private[graft] def readMorFace(
+      spark: SparkSession,
+      face: Face,
+      keyCols: Seq[String]): DataFrame = {
+    val Face(tablePath, version, rows, stored, _) = face
+    val gens = Eq.composable(face.gens, tablePath, "readMorAsOf")
+    require(keyCols.nonEmpty, "readMorAsOf needs key columns")
     val eqDirs = gens.eqLive
     if (eqDirs.isEmpty)
-      return readWithDv(spark, rows, stored, None, Map.empty)
+      return readWithDv(spark, rows, stored, gens)
     val eqVs = eqDirs.map(_._1).toSet
     val firstEq = eqDirs.map(_._1).min
     val foreign = gens.eq.generations
@@ -2826,23 +2894,18 @@ object Snapshots {
 
   /** Every versioned sidecar family's generation governing `version`,
     * resolved in ONE pass: a single listing of the table root discovers
-    * which families exist at all — on a table with no sidecars (the
-    * common case) that is the resolution's ONLY I/O — then exactly one
-    * listing per PRESENT family finds its latest-at-or-below dir. Read
-    * verbs used to pay an exists+list pair PER FAMILY PER CALL, a
-    * constant that grew with every sidecar family the engine accrued
-    * (the r16 q25/q28 read-path creep); this caps it at 1 + families
-    * actually present, however many verbs stack. The deletion-vector
-    * family's whole listing is kept, so an interval verb picks its
-    * other endpoint's set from the same listing ([[dvAt]]); so is
-    * [[Eq.listing]]. A caller that needs only some governance families
-    * names them (`govFamilies`); the others are not listed and absent
-    * from `gov`. A tombstone-governed face refuses as the verb
-    * `refuseEqAs` names; the merge-on-read verbs pass None. */
+    * which families exist at all — on a table with no sidecars that is
+    * the only I/O — then one listing per PRESENT family finds its
+    * latest-at-or-below dir, so the cost is 1 + families present,
+    * however many verbs stack. The deletion-vector family's whole
+    * listing is kept, so an interval verb picks its other endpoint's
+    * set from it ([[dvAt]]); so is [[Eq.listing]]. A caller names the
+    * other families it needs (`families`); the rest are not listed and
+    * absent from `picked`. */
   private[graft] final case class SidecarGens(
       version: Long,
       dvListed: Seq[(Long, String)],
-      gov: Map[GovFamily[_], (Long, String)],
+      picked: Map[SidecarFamily, (Long, String)],
       eq: Eq.Listing) {
     def dv: Option[(Long, String)] = dvAt(version)
 
@@ -2850,14 +2913,43 @@ object Snapshots {
 
     /** The tombstone sets governing `version`, oldest first. */
     def eqLive: Seq[(Long, String)] = eq.liveAt(version)
+
+    /** Refuse a version inside a fold window — its tombstone history
+      * expired, so it has NO face; raw rows would be a lie — and a
+      * tombstone-governed one as the verb `refuseEqAs` names (the
+      * merge-on-read verbs pass None). */
+    def servable(
+        tablePath: String,
+        refuseEqAs: Option[String]): SidecarGens = {
+      eq.foldedAt(version).foreach { case (minEq, foldV) =>
+        throw new IllegalArgumentException(
+          s"version $version of $tablePath was merge-on-read " +
+            s"governed and its equality-delete history folded away " +
+            s"at v$foldV — no face exists inside [$minEq, $foldV); " +
+            s"read v$foldV or later, or a version outside the window")
+      }
+      refuseEqAs.foreach(Eq.requireUngoverned(eq, tablePath, version, _))
+      this
+    }
   }
 
+  /** [[sidecarPass]] with the refusals of a served face
+    * ([[SidecarGens.servable]]). */
   private[graft] def resolveSidecars(
       spark: SparkSession,
       tablePath: String,
       version: Long,
       refuseEqAs: Option[String] = Some("read"),
-      govFamilies: Seq[GovFamily[_]] = GovFamilies): SidecarGens = {
+      families: Seq[SidecarFamily] = GovFamilies): SidecarGens =
+    sidecarPass(spark, tablePath, version, families)
+      .servable(tablePath, refuseEqAs)
+
+  /** The listing pass of [[SidecarGens]]; refuses nothing. */
+  private def sidecarPass(
+      spark: SparkSession,
+      tablePath: String,
+      version: Long,
+      families: Seq[SidecarFamily]): SidecarGens = {
     val f = fs(spark, tablePath)
     sidecarListings.incrementAndGet()
     val present = f.listStatus(new Path(tablePath))
@@ -2865,24 +2957,11 @@ object Snapshots {
     def listed(fam: SidecarFamily): Seq[(Long, String)] =
       if (!present.contains(fam.dirName)) Seq.empty
       else sidecarFamilyListed(f, fam.root(tablePath))
-    val eq =
-      if (!present.contains(Eq.dirName)) Eq.Absent
-      else Eq.listing(spark, tablePath)
-    // a folded MOR lineage expired its tombstone history: versions
-    // inside the fold window have NO servable face at all — refuse
-    // toward the fold point instead of silently answering raw rows
-    eq.foldedAt(version).foreach { case (minEq, foldV) =>
-      throw new IllegalArgumentException(
-        s"version $version of $tablePath was merge-on-read " +
-          s"governed and its equality-delete history folded away " +
-          s"at v$foldV — no face exists inside [$minEq, $foldV); " +
-          s"read v$foldV or later, or a version outside the window")
-    }
-    refuseEqAs.foreach(Eq.requireUngoverned(eq, tablePath, version, _))
     SidecarGens(version, listed(Dv),
-      govFamilies.flatMap(g =>
+      families.flatMap(g =>
         pickAtOrBelow(listed(g), version).map(g -> _)).toMap,
-      eq)
+      if (!present.contains(Eq.dirName)) Eq.Absent
+      else Eq.listing(spark, tablePath))
   }
 
   /** The governing DV frame from an already-resolved [[SidecarGens]] —
@@ -2897,7 +2976,7 @@ object Snapshots {
   private def colMapOf(
       spark: SparkSession,
       gens: SidecarGens): Seq[(String, Option[String])] =
-    gens.gov.get(ColMap).map { case (_, dir) => ColMap.read(spark, dir) }
+    gens.picked.get(ColMap).map { case (_, dir) => ColMap.read(spark, dir) }
       .getOrElse(Seq.empty)
 
   /** (file, partition fragment, footer row count) of ONE generation —
@@ -2937,10 +3016,10 @@ object Snapshots {
   }
 
   /** The normalized file set one DV sidecar dir records — the SQL
-    * catalog's dv-governed probe ([[graft.sources.v2.GraftCatalog]]
-    * resolves EVERY statement's table references through it), memoized
-    * per published dir ([[memoizedMeta]]): a driver Spark job
-    * otherwise repeated per statement. */
+    * catalog's DV guard ([[Face.dvGoverned]]) and every governed read's
+    * clean/dirty split ([[readWithDv]]), memoized per published dir
+    * ([[memoizedMeta]]): a driver Spark job otherwise repeated per
+    * statement and per read. */
   private[graft] def dvRecordedFiles(
       spark: SparkSession,
       dir: String): Set[String] =
@@ -2972,21 +3051,6 @@ object Snapshots {
     }
   }
 
-  /** Does the deletion-vector set governing `version` touch one of
-    * `files`? The SQL catalog's scan guard, evaluated on every
-    * statement's table load — the recorded file set is memoized per
-    * published dir ([[dvRecordedFiles]]). */
-  private[graft] def dvGovernsAny(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long,
-      files: Seq[String]): Boolean =
-    sidecarResolve(spark, Dv.root(tablePath), version).exists {
-      case (_, dir) =>
-        val dvFiles = dvRecordedFiles(spark, dir)
-        files.exists(f => dvFiles.contains(normPath(f)))
-    }
-
   /** Anti-join `df` (carrying the [[DvFileCol]]/[[DvPosCol]] row
     * identity) against a DV set. The DV side is a file-based relation
     * with known size, so the planner broadcasts it statically whenever
@@ -2999,37 +3063,26 @@ object Snapshots {
       df(DvFileCol) === dv("file") && df(DvPosCol) === dv("row_index"),
       "left_anti")
 
-  /** The DISTINCT files a governing DV set touches, scheme-normalized —
-    * metadata-scale (bounded by files CONTAINING deletes, never by the
-    * table), resolved once at plan time. */
-  private def dvFileSet(dv: DataFrame): Set[String] =
-    dv.select(col("file")).distinct().collect()
-      .map(r => normPath(r.getString(0))).toSet
-
-  /** Plan a (possibly DV-governed) read over manifest file rows with
-    * FILE-LEVEL DV PUSHDOWN: the admitted files split at METADATA time
-    * into DV-clean and DV-dirty via the governing set's distinct
-    * `file` column, and only the dirty files' scan carries the
-    * `_metadata` row identity and pays the anti-join — the clean
-    * files' subplan is a plain scan with NO JOIN AT ALL (spec-pinned).
-    * On a 100-TB table where deletes touch a handful of files, the
-    * bulk of the scan keeps its undisturbed whole-stage-codegen shape
-    * and the join cost scales with the DELETES' blast radius, not the
-    * table; a generation whose governing entries are all dead (files
-    * replaced or compacted away) plans zero joins. One metadata-scale
-    * collect per DV-governed read resolves the split. */
+  /** Plan a read over manifest file rows under the deletion vectors and
+    * column mapping `gens` resolved, with FILE-LEVEL DV PUSHDOWN: the
+    * files split at METADATA time into DV-clean and DV-dirty by the
+    * governing dir's recorded file set ([[dvRecordedFiles]]), and only
+    * the dirty files' scan carries the `_metadata` row identity and
+    * pays the anti-join — the clean files' subplan is a plain scan with
+    * NO JOIN AT ALL (spec-pinned), so the join cost scales with the
+    * deletes' blast radius, not the table. */
   private def readWithDv(
       spark: SparkSession,
       rows: Seq[(String, String)],
       stored: Option[org.apache.spark.sql.types.StructType],
-      dv: Option[DataFrame],
-      l2p: Map[String, String]): DataFrame = {
+      gens: SidecarGens): DataFrame = {
+    val l2p = logicalToPhysical(colMapOf(spark, gens))
     val phys = stored.map(physicalSchema(_, l2p))
-    dv match {
+    gens.dv match {
       case None =>
         fromPhysical(readFileRows(spark, rows, phys), l2p)
-      case Some(d) =>
-        val dirtySet = dvFileSet(d)
+      case Some((_, dir)) =>
+        val dirtySet = dvRecordedFiles(spark, dir)
         val (dirty, clean) = rows.partition(r =>
           dirtySet.contains(normPath(r._1)))
         val legs =
@@ -3040,7 +3093,7 @@ object Snapshots {
               Seq(applyDv(
                 fromPhysical(
                   readFileRows(spark, dirty, phys, withMeta = true), l2p),
-                d).drop(DvFileCol, DvPosCol))
+                Dv.read(spark, dir)).drop(DvFileCol, DvPosCol))
             else Seq.empty)
         legs.reduceLeft((a, b) =>
           a.unionByName(b, allowMissingColumns = true))
@@ -3127,7 +3180,7 @@ object Snapshots {
       throw new IllegalArgumentException(
         s"$verb: $tablePath has no committed versions"))
     val gens = resolveSidecars(spark, tablePath, observed,
-      refuseEqAs = Some(verb), govFamilies = Seq(ColMap))
+      refuseEqAs = Some(verb), families = Seq(ColMap))
     val gen = observedGeneration(spark, tablePath, observed, verb)
     DmlFace(spark, tablePath, observed, fileRowsOf(gen),
       schemaJsonOf(gen).orNull, storedSchemaOf(gen),
@@ -4065,8 +4118,11 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       version: Long): Boolean =
-    colMapAsOf(spark, tablePath, version)
-      .exists { case (p, l) => !l.contains(p) }
+    renamesAny(colMapAsOf(spark, tablePath, version))
+
+  /** A mapping that renames or drops some physical column. */
+  private def renamesAny(m: Seq[(String, Option[String])]): Boolean =
+    m.exists { case (p, l) => !l.contains(p) }
 
   // ------------------------------------------------------------------
   // CHECK constraints — declarative row invariants enforced at ingest
@@ -4560,7 +4616,8 @@ object Snapshots {
       fresh: Seq[String],
       sizing: Skipping.BloomSizing): Unit = {
     val carried =
-      parentDir.map(d => filterSidecarToFiles(spark.read.parquet(d), kept))
+      parentDir.map(d =>
+        filterSidecarToFiles(Skipping.readIndex(spark, d), kept))
     val built =
       if (fresh.isEmpty && carried.isDefined) None
       else Some(fam.rows(spark, fresh, keys, sizing))
@@ -4617,31 +4674,37 @@ object Snapshots {
   /** The sidecar generation GOVERNING a stats/bloom scan of `version`:
     * the exact `v<version>` dir when the generation minted one (the
     * zero-manifest-read fast path), else the latest-at-or-below dir
-    * that still DESCRIBES every file of the generation — which is how
-    * the index survives the FILE-PRESERVING metadata verbs
-    * (deleteWhere, constraint / generated-column changes) that repoint
-    * the parent's files verbatim without minting sidecar dirs of their
-    * own. Coverage is the proof, checked on the metadata-scale sidecar
-    * itself: a generation whose files left the described set (replace,
-    * OPTIMIZE, purge) answers None rather than pruning with bounds
-    * that no longer speak for the data; an unknown version answers
-    * None (nothing can describe files that do not exist). */
+    * that still DESCRIBES every file of the generation ([[describes]])
+    * — how the index survives the FILE-PRESERVING metadata verbs
+    * (deleteWhere, constraint changes) that repoint the parent's files
+    * verbatim. A generation whose files left the described set
+    * (replace, OPTIMIZE, purge), or an unknown version, answers None
+    * rather than pruning with bounds that no longer speak for it. */
   private def describingSidecarDir(
       spark: SparkSession,
       tablePath: String,
       fam: IndexFamily,
       version: Long): Option[String] = {
-    val f = fs(spark, tablePath)
     val exact = fam.dirAt(tablePath, version)
-    if (f.exists(new Path(exact))) return Some(exact)
-    val rows = manifestRows(spark, tablePath, version)
-    if (rows.isEmpty) return None
-    sidecarResolve(spark, fam.root(tablePath), version)
-      .filter { case (_, dir) =>
-        val described = sidecarDescribedFiles(spark, dir)
-        rows.forall(r => described.contains(normPath(r._1)))
-      }.map(_._2)
+    if (fs(spark, tablePath).exists(new Path(exact))) Some(exact)
+    else describes(spark, sidecarResolve(spark, fam.root(tablePath), version),
+      version, manifestRows(spark, tablePath, version).map(_._1))
   }
+
+  /** `picked`'s dir when it describes `version`'s `files`: it is the
+    * version's own dir, or its recorded files cover them all (and
+    * there are some). */
+  private def describes(
+      spark: SparkSession,
+      picked: Option[(Long, String)],
+      version: Long,
+      files: Seq[String]): Option[String] =
+    picked.filter { case (v, dir) =>
+      v == version || files.nonEmpty && {
+        val described = sidecarDescribedFiles(spark, dir)
+        files.forall(f => described.contains(normPath(f)))
+      }
+    }.map(_._2)
 
   /** The normalized `file` set a stats/bloom sidecar dir describes —
     * the coverage-proof read of [[describingSidecarDir]], memoized per
@@ -4651,7 +4714,7 @@ object Snapshots {
       spark: SparkSession,
       dir: String): Set[String] =
     memoizedMeta(fs(spark, dir), new Path(dir), "described") {
-      spark.read.parquet(dir).select(col("file")).collect()
+      Skipping.readIndex(spark, dir).select(col("file")).collect()
         .map(r => normPath(r.getString(0))).toSet
     }
 
@@ -4661,8 +4724,8 @@ object Snapshots {
       spark: SparkSession,
       dir: String,
       admit: org.apache.spark.sql.Column): Set[String] =
-    spark.read.parquet(dir).filter(admit).select(col("file")).collect()
-      .map(r => normPath(r.getString(0))).toSet
+    Skipping.readIndex(spark, dir).filter(admit).select(col("file"))
+      .collect().map(r => normPath(r.getString(0))).toSet
 
   /** Stats-pruned key-range scan AS OF `version`: the version's stats
     * manifest admits only the files whose [min, max] interval meets
@@ -4685,7 +4748,7 @@ object Snapshots {
     scanBoxAsOfN(spark, tablePath, version, Seq((keyCol, lo, hi)))
 
   /** The face of `version` over exactly the `admitted` files, composed
-    * with its deletion vectors and column mapping (`gens`, `l2p`). Zero
+    * with the deletion vectors and column mapping `gens` resolved. Zero
     * admitted files is an answer: an empty frame with the snapshot's
     * schema — the only path that reads the manifest, so a pruned scan's
     * happy path stays at zero manifest reads (the budget
@@ -4695,15 +4758,13 @@ object Snapshots {
       tablePath: String,
       version: Long,
       gens: SidecarGens,
-      l2p: Map[String, String],
       admitted: Seq[String],
       stored: Option[org.apache.spark.sql.types.StructType]): DataFrame =
     if (admitted.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         stored.orElse(generationOf(spark, tablePath, version)._2)
           .getOrElse(readAsOf(spark, tablePath, version).schema))
-    else readWithDv(spark, admitted.map((_, null: String)), stored,
-      dvSetOf(spark, gens), l2p)
+    else readWithDv(spark, admitted.map((_, null: String)), stored, gens)
 
   /** RUNTIME FILTER into a snapshot scan — the dynamic-file-pruning
     * leg Spark's DPP cannot give a manifest-planned union scan: for a
@@ -4734,57 +4795,48 @@ object Snapshots {
     require(dimKeys.columns.length == 1,
       s"scanJoinPruned: dimKeys must carry exactly the join key " +
         s"column, got ${dimKeys.columns.mkString(", ")}")
-    val (rows, stored) = generationOf(spark, tablePath, version)
-    def emptyFace = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row],
-      stored.getOrElse(readAsOf(spark, tablePath, version).schema))
-    val admitted = sidecarAdmission(spark, tablePath, version, keyCol,
-      dimKeys, maxPointKeys, rows.map(_._1))
+    val face = resolveFace(spark, tablePath, version,
+      GovFamilies ++ IndexFamilies)
+    val admitted = sidecarAdmission(spark, face, keyCol, dimKeys,
+      maxPointKeys)
       .getOrElse(throw new IllegalArgumentException(
         s"scanJoinPruned: version $version of $tablePath carries no " +
           s"stats or bloom sidecar applicable to '$keyCol' — nothing " +
           "answers file admission; commit via commitClustered/" +
           "commitBloom on that key (or join the plain readAsOf face)"))
-    val files = rows.filter(r => admitted.contains(normPath(r._1)))
-    if (files.isEmpty) emptyFace
-    else {
-      val dv = dvSetOf(spark, resolveSidecars(spark, tablePath, version))
-      readWithDv(spark, files, stored, dv, Map.empty)
-    }
+    val files = face.rows.filter(r => admitted.contains(normPath(r._1)))
+    if (files.isEmpty) spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row],
+      face.stored.getOrElse(readAsOf(spark, tablePath, version).schema))
+    else readFace(spark, face.copy(rows = files))
   }
 
-  /** The STATS/BLOOM admission core shared by [[scanJoinPruned]] (the
-    * explicit verb) and the SQL catalog scan's
-    * `SupportsRuntimeV2Filtering` path: which of `files` can a bounded
-    * join-key set NOT rule out? None when no sidecar APPLICABLE TO
-    * `keyCol` governs `version` (stats must carry min_/max_ columns
-    * for the key; a bloom's recorded key column must BE the key — a
-    * probe against a sketch of a different column would falsely prune
-    * files containing matching rows); the caller decides whether that
-    * refuses loudly (the verb) or scans everything (the transparent
-    * SQL path). Some(admitted) is scheme-NORMALIZED paths. Two dim
-    * passes at most: one bounds aggregate, one executor-side sketch
-    * probe when the distinct count is within `maxPointKeys`. */
-  private[graft] def sidecarAdmission(
+  /** The STATS/BLOOM admission core of [[scanJoinPruned]] and the SQL
+    * catalog scan's runtime filter: which of the face's files can a
+    * bounded join-key set NOT rule out? None when no sidecar APPLICABLE
+    * TO `keyCol` describes the face (a bloom's recorded key must BE the
+    * key — a sketch of another column would falsely prune); the verb
+    * refuses then, the SQL path scans everything. Some(admitted) is
+    * scheme-NORMALIZED paths. Two dim passes at most: one bounds
+    * aggregate, one executor-side sketch probe within `maxPointKeys`. */
+  private def sidecarAdmission(
       spark: SparkSession,
-      tablePath: String,
-      version: Long,
+      face: Face,
       keyCol: String,
       dimKeys: DataFrame,
-      maxPointKeys: Int,
-      files: Seq[String]): Option[Set[String]] = {
-    if (mapsColumns(spark, tablePath, version)) return None
+      maxPointKeys: Int): Option[Set[String]] = {
+    if (face.mapsColumns(spark)) return None
     val dimCol = dimKeys.columns.head
-    val sd = describingSidecarDir(spark, tablePath, StatsIndex, version)
-      .filter(d => StatsIndex.keys(spark, d).contains(keyCol))
-    val bd = describingSidecarDir(spark, tablePath, BloomIndex, version)
-      .filter(d => BloomIndex.keys(spark, d).contains(keyCol))
+    def applicable(fam: IndexFamily): Option[String] =
+      face.describing(spark, fam).filter(fam.keys(spark, _).contains(keyCol))
+    val sd = applicable(StatsIndex)
+    val bd = applicable(BloomIndex)
     if (sd.isEmpty && bd.isEmpty) return None
     val bounds = dimKeys.agg(min(col(dimCol)).as("lo"),
       max(col(dimCol)).as("hi"),
       count_distinct(col(dimCol)).as("n")).collect().head
     if (bounds.isNullAt(0)) return Some(Set.empty) // no dim keys at all
-    var admitted: Set[String] = files.map(normPath).toSet
+    var admitted: Set[String] = face.rows.map(r => normPath(r._1)).toSet
     sd.foreach { d =>
       admitted = admitted.intersect(statsAdmitted(spark, d,
         Skipping.admits(keyCol, bounds.get(0), bounds.get(1))))
@@ -4799,33 +4851,14 @@ object Snapshots {
     Some(admitted)
   }
 
-  /** The key columns whose sidecars can answer runtime file admission
-    * for `version` — what the SQL catalog scan declares as
-    * `filterAttributes` so Spark's dynamic-pruning rule wires the dim
-    * side's runtime filter to it. Empty under a non-trivial column
-    * mapping (sidecar columns are physical names) and when no sidecar
-    * governs; metadata-scale (footer reads + one 1-row probe). */
-  private[graft] def runtimeFilterKeys(
+  /** The SQL runtime-filter bridge: the files of a catalog table's
+    * resolved face an IN-set of `values` on `keyCol` admits, spelled
+    * EXACTLY as the manifest lists them (the caller rebuilds its file
+    * index over the subset verbatim). None when nothing applicable
+    * governs or the set is unusably large; never a false prune. */
+  private[graft] def runtimeAdmittedFiles(
       spark: SparkSession,
-      tablePath: String,
-      version: Long): Seq[String] = {
-    if (mapsColumns(spark, tablePath, version)) return Seq.empty
-    IndexFamilies.flatMap(fam =>
-      describingSidecarDir(spark, tablePath, fam, version)
-        .toSeq.flatMap(fam.keys(spark, _))).distinct
-  }
-
-  /** The SQL runtime-filter bridge: the data files of `version` an
-    * IN-set of `values` on `keyCol` admits, spelled EXACTLY as the
-    * manifest lists them (what the catalog's ParquetTable was built
-    * from — the caller rebuilds its file index over the subset
-    * verbatim). None when nothing applicable governs or the set is
-    * unusably large; never a false prune (both sidecar legs are
-    * conservative). */
-  def runtimeAdmittedFiles(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long,
+      face: Face,
       keyCol: String,
       values: Seq[Any],
       valueType: org.apache.spark.sql.types.DataType,
@@ -4836,11 +4869,9 @@ object Snapshots {
       org.apache.spark.sql.types.StructField(keyCol, valueType)))
     val dimKeys = spark.createDataFrame(
       java.util.Arrays.asList(values.map(Row(_)): _*), schema)
-    val (rows, _) = generationOf(spark, tablePath, version)
-    sidecarAdmission(spark, tablePath, version, keyCol, dimKeys,
-      maxPointKeys, rows.map(_._1)).map { admitted =>
-      rows.map(_._1).filter(f => admitted.contains(normPath(f)))
-    }
+    sidecarAdmission(spark, face, keyCol, dimKeys, maxPointKeys)
+      .map(admitted =>
+        face.rows.map(_._1).filter(f => admitted.contains(normPath(f))))
   }
 
   /** [[commit]] plus a per-file BLOOM sidecar on `keyCol` — the
@@ -5032,9 +5063,9 @@ object Snapshots {
     val admit = bounds.map { case (c, lo, hi) =>
       Skipping.admits(l2p.getOrElse(c, c), lo, hi)
     }.reduce(_ && _)
-    val admitted = spark.read.parquet(sd).filter(admit)
+    val admitted = Skipping.readIndex(spark, sd).filter(admit)
       .select(col("file")).collect().map(_.getString(0)).toIndexedSeq
-    admittedFace(spark, tablePath, version, gens, l2p, admitted, None)
+    admittedFace(spark, tablePath, version, gens, admitted, None)
       .filter(bounds.map { case (c, lo, hi) =>
         col(c) >= lit(lo) && col(c) <= lit(hi)
       }.reduce(_ && _))
@@ -5110,7 +5141,7 @@ object Snapshots {
         "against it would falsely prune files; commitBloom on the " +
         "queried key")
     val admitted = Skipping.pruneFilesPoint(spark, bd, value)
-    admittedFace(spark, tablePath, version, gens, l2p, admitted,
+    admittedFace(spark, tablePath, version, gens, admitted,
       generationOf(spark, tablePath, version)._2)
       .filter(col(keyCol) === lit(value))
   }
@@ -5553,17 +5584,24 @@ object Snapshots {
       s"snapshot version $version of $tablePath predates row-count " +
         "manifests — its generation carries no footer counts")
     val base = rows.map(_._3.get).sum
-    // deletion vectors subtract from the footer counts; entries
-    // referencing files outside this generation (replaced or compacted
-    // away) are dead and must not be counted. Still zero DATA files
-    // opened — the DV sidecar is metadata-scale (bounded by deletes).
-    dvSetOf(spark, resolveSidecars(spark, tablePath, version)).fold(base) {
-      dv =>
-        val files = spark.createDataFrame(rows.map(r => Tuple1(r._1)))
-          .toDF("file")
-        base - dv.join(files, Seq("file"), "left_semi").count()
-    }
+    // deletion vectors subtract from the footer counts. Still zero
+    // DATA files opened — the DV sidecar is metadata-scale (bounded by
+    // deletes).
+    base - liveDvRows(spark, tablePath, version, rows)
   }
+
+  /** The governing DV entries of `version` on the generation's own
+    * `rows` — entries on files outside it (replaced or compacted away)
+    * are dead and never count. */
+  private def liveDvRows(
+      spark: SparkSession,
+      tablePath: String,
+      version: Long,
+      rows: Seq[(String, String, Option[Long])]): Long =
+    dvSetOf(spark, resolveSidecars(spark, tablePath, version)).fold(0L) {
+      _.join(spark.createDataFrame(rows.map(r => Tuple1(r._1))).toDF("file"),
+        Seq("file"), "left_semi").count()
+    }
 
   /** Metadata-only statistics frame: one row per (version, part) with
     * its file and row counts — `part` null for flat commits. Every
@@ -5644,12 +5682,7 @@ object Snapshots {
       s"version $head of $tablePath predates row-count manifests — " +
         "dvStats needs footer counts; recommit the version")
     val physical = rows.map(_._3.get).sum
-    val dvRows = dvSetOf(spark, resolveSidecars(spark, tablePath, head))
-      .map { dv =>
-        val files = spark.createDataFrame(rows.map(r => Tuple1(r._1)))
-          .toDF("file")
-        dv.join(files, Seq("file"), "left_semi").count()
-      }.getOrElse(0L)
+    val dvRows = liveDvRows(spark, tablePath, head, rows)
     val frac =
       if (physical == 0L) 0.0 else dvRows.toDouble / physical.toDouble
     spark.createDataFrame(Seq(
@@ -5702,9 +5735,7 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String): Option[Seq[String]] =
     latestVersion(spark, tablePath).flatMap(h =>
-      Eq.listing(spark, tablePath).liveAt(h).lastOption.map {
-        case (_, dir) => Eq.keySchema(spark, dir).fieldNames.toSeq
-      })
+      Eq.keyCols(spark, Eq.listing(spark, tablePath).liveAt(h)))
 
   /** [[foldEqDeletes]] with the key columns derived from the newest
     * live sidecar itself — the maintenance-sweep entry point (the
@@ -5803,10 +5834,8 @@ object Snapshots {
         readAsOf(spark, tablePath, toVersion).schema)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     } else {
-      val gens = resolveSidecars(spark, tablePath, toVersion)
-      val dv = dvSetOf(spark, gens)
-      val l2p = logicalToPhysical(colMapOf(spark, gens))
-      readWithDv(spark, fresh, stored, dv, l2p)
+      readWithDv(spark, fresh, stored,
+        resolveSidecars(spark, tablePath, toVersion))
     }
   }
 
@@ -6079,7 +6108,8 @@ object Snapshots {
           val frag = if (row.isNullAt(2)) null else row.getString(2)
           val outDir = if (frag == null) s"$purgeRoot/f$i"
             else s"$purgeRoot/f$i/$frag"
-          spark.read.parquet(old)
+          spark.read.schema(graft.Tables.footerSchema(spark, old))
+            .parquet(old)
             .join(k, keyCols.toSeq, "left_anti")
             .coalesce(1)
             .write.mode("errorifexists").parquet(outDir)
@@ -6118,7 +6148,8 @@ object Snapshots {
         .filter(f.exists).foreach { statsRoot =>
         f.listStatus(statsRoot).filter(_.isDirectory).foreach { d =>
           val sd = d.getPath.toString
-          val rows = spark.read.parquet(sd).collect()
+          val index = Skipping.readIndex(spark, sd)
+          val rows = index.collect()
           val fileIx = rows.headOption.map(_.fieldIndex("file")).getOrElse(-1)
           val nIx = rows.headOption.map(_.fieldIndex("n_rows")).getOrElse(-1)
           if (rows.exists(r => mapping.contains(norm(r.getString(fileIx))))) {
@@ -6133,13 +6164,12 @@ object Snapshots {
                 case None => r
               }
             }
-            val schema = spark.read.parquet(sd).schema
             val tmp = new Path(sd + "_staged")
             val prev = new Path(sd + "_prev")
             if (f.exists(tmp)) f.delete(tmp, true)
             if (f.exists(prev)) f.delete(prev, true)
             spark.createDataFrame(
-              spark.sparkContext.parallelize(fixed.toSeq, 1), schema)
+              spark.sparkContext.parallelize(fixed.toSeq, 1), index.schema)
               .coalesce(1).write.parquet(tmp.toString)
             require(f.rename(d.getPath, prev) && f.rename(tmp, d.getPath),
               s"stats swap failed for $sd")

@@ -7,34 +7,28 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 import graft.operators.Snapshots
-import graft.sources.v2.GraftSnapshotTable
+import graft.sources.v2.{GraftSnapshotTable, ScanRefusal}
 
 /** SQL reads over GOVERNED snapshot faces — the analyzer rule that
   * makes `SELECT * FROM graft.t` work right after `DELETE FROM graft.t`
   * (a deletion-vector commit) with no `CALL system.optimize`, the way
   * Delta and Iceberg serve their merge-on-read faces directly.
   *
-  * A [[GraftSnapshotTable]] whose face carries live deletion vectors, a
-  * column mapping, or a multi-root partition layout cannot be served by
-  * the plain file-list parquet scan (it would resurrect deleted rows,
-  * surface physical names, or mis-build the partition column), so its
-  * `toBatch` refuses. This rule substitutes, in READ position only, the
-  * relation with the ANALYZED plan of
-  * [[Snapshots.readAsOf]] — whose clean/dirty split plans the files no
-  * DV touches through a stock parquet relation (file-exact, filters and
-  * pruning push down as ever) and anti-joins the DV frame against only
-  * the dirty files. The substitution happens at analysis, so Catalyst
-  * optimizes straight through it: predicate pushdown and column pruning
-  * reach the underlying parquet scans of both legs.
-  *
-  * An EQUALITY-DELETE (merge-on-read) face substitutes
-  * [[Snapshots.readMorAsOf]] instead — the tombstone key set reads
-  * off the newest live sidecar (one key set per lineage is
-  * commit-enforced, so any sidecar's columns speak for all), which is
-  * how a SQL user reads the table a CDC stream is upserting into with
-  * no fold in between. A face the resolved read itself refuses (a
-  * fold-expired history window, a mid-lineage foreign commit) keeps
-  * the loud `toBatch` refusal.
+  * A [[GraftSnapshotTable]] whose face the plain file-list parquet scan
+  * cannot serve (live deletion vectors, a column mapping, a multi-root
+  * partition layout, equality-delete tombstones) refuses at `toBatch`
+  * ([[ScanRefusal]]). In READ position only, this rule substitutes the
+  * ANALYZED plan of the table's OWN resolved face — no second manifest
+  * read or sidecar listing: [[Snapshots.readFace]] (what
+  * [[Snapshots.readAsOf]] plans: the files no DV touches read through
+  * a stock parquet relation, the DV anti-join over the dirty files
+  * only), or for tombstones [[Snapshots.readMorFace]] (what
+  * [[Snapshots.readMorAsOf]] plans), keyed on the face's newest live
+  * sidecar. The substitution happens at analysis, so predicate
+  * pushdown and column pruning reach the underlying parquet scans. A
+  * face the resolved read itself refuses (a fold-expired history
+  * window, a mid-lineage foreign commit) keeps the loud `toBatch`
+  * refusal.
   *
   * DML targets are exempt (collected by reference before the
   * transform): `DELETE FROM` / `UPDATE` / `MERGE INTO` / `INSERT` plan
@@ -44,16 +38,17 @@ import graft.sources.v2.GraftSnapshotTable
   * WITHOUT [[graft.GraftExtensions]]. */
 object GraftGovernedReadRule extends Rule[LogicalPlan] {
 
-  private def servable(t: GraftSnapshotTable): Boolean =
-    t.needsResolvedRead || t.isEqGoverned
+  /** A relation over a face the plain scan refuses. */
+  private object Refused {
+    def unapply(r: DataSourceV2Relation): Option[GraftSnapshotTable] =
+      Some(r.table).collect {
+        case t: GraftSnapshotTable if t.refusal.nonEmpty => t
+      }
+  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val governed = plan.collect {
-      case r: DataSourceV2Relation
-        if r.table.isInstanceOf[GraftSnapshotTable] &&
-          servable(r.table.asInstanceOf[GraftSnapshotTable]) => r
-    }
-    if (governed.isEmpty) return plan
+    if (plan.find { case Refused(_) => true; case _ => false }.isEmpty)
+      return plan
     // WRITE/DML-position relations, by reference — a MERGE whose source
     // reads the same governed table still rewrites the source leg while
     // the target leg stays verb-owned
@@ -71,11 +66,7 @@ object GraftGovernedReadRule extends Rule[LogicalPlan] {
     })
     val spark = SparkSession.active
     plan.transformUp {
-      case r: DataSourceV2Relation
-        if r.table.isInstanceOf[GraftSnapshotTable] &&
-          servable(r.table.asInstanceOf[GraftSnapshotTable]) &&
-          !exempt.exists(_ eq r) =>
-        val t = r.table.asInstanceOf[GraftSnapshotTable]
+      case r @ Refused(t) if !exempt.exists(_ eq r) =>
         // a face the resolved read itself refuses (fold-expired
         // window, foreign mid-lineage commit) keeps the loud toBatch
         // refusal rather than failing analysis with a stack. ONLY the
@@ -85,18 +76,13 @@ object GraftGovernedReadRule extends Rule[LogicalPlan] {
         val resolved =
           try {
             val df =
-              if (t.isEqGoverned)
-                Snapshots.readMorAsOf(spark, t.snapshotRoot,
-                  t.snapshotVersion,
-                  Snapshots.eqLiveKeyCols(spark, t.snapshotRoot)
-                    .getOrElse(throw new IllegalStateException(
-                      "eq-governed face with no live sidecar")))
-              else Snapshots.readAsOf(spark, t.snapshotRoot,
-                t.snapshotVersion)
+              if (t.refusal.contains(ScanRefusal.Eq))
+                Snapshots.readMorFace(spark, t.face, t.face.eqKeyCols(spark))
+              else Snapshots.readFace(spark, t.face)
             Some(df.queryExecution.analyzed)
           } catch {
-            case _: IllegalArgumentException => None
-            case _: IllegalStateException => None
+            case _: IllegalArgumentException | _: IllegalStateException =>
+              None
           }
         val substituted = resolved.flatMap { res =>
           val byName = res.output.map(a => a.name -> a).toMap

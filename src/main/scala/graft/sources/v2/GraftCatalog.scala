@@ -49,11 +49,11 @@ import graft.operators.{Catalog, Snapshots}
   * scan never lists the data directory and never sees files of other
   * versions. Partitioned generations whose files live under one
   * commit root read with their path-encoded partition column
-  * reconstructed (`basePath`); multi-root partitioned lineages, and
-  * versions governed by deletion vectors or a column mapping, REFUSE
-  * LOUDLY toward the DV- and mapping-aware function verbs rather than
-  * returning silently wrong rows — the SQL face never serves a face
-  * the plain parquet scan cannot represent.
+  * reconstructed (`basePath`). A face the plain parquet scan cannot
+  * represent (deletion vectors, a column mapping, tombstones, a
+  * multi-root partitioned lineage) is read through the governed-read
+  * rule ([[graft.plans.GraftGovernedReadRule]]), or refuses loudly at
+  * scan build — never silently wrong rows.
   *
   * DDL surface: `DROP TABLE graft.t` unregisters the NAME (the
   * catalog adopts existing roots, it never owns data — matching
@@ -753,59 +753,72 @@ private[v2] object GraftSnapshotTable {
     }
   }
 
+  /** Resolve a table load into ONE [[Snapshots.Face]] (one manifest
+    * read, one sidecar pass) and derive the scan guard and the
+    * runtime-filter keys from it. Loading never refuses — DDL and DML
+    * legitimately load a face they never scan (ALTER TABLE DROP COLUMN
+    * after a RENAME) — so the guard is ENFORCED at scan build. */
   def resolve(
       spark: SparkSession,
       tableName: String,
       root: String,
       version: Long): Table = {
-    val (rows, stored) = Snapshots.generationOf(spark, root, version)
-    val files = rows.map(_._1)
-    // honest-refusal guards: faces the plain parquet scan cannot
-    // represent route to the function verbs instead of serving
-    // silently wrong rows. The deletion-vector check is EVALUATED here
-    // (metadata-scale) but ENFORCED at scan build — DML verbs (DELETE
-    // FROM, INSERT INTO) legitimately target a DV-governed table
-    // without ever scanning it through the SQL face.
-    val dvGoverned = Snapshots.dvGovernsAny(spark, root, version, files)
-    // evaluated here (metadata-scale), ENFORCED at scan build like the
-    // DV guard — DDL and DML verbs legitimately load a mapped table
-    // (ALTER TABLE DROP COLUMN after a RENAME must plan) without ever
-    // scanning it through the SQL face
-    val colMapped = Snapshots.mapsColumns(spark, root, version)
-    val parted = rows.filter(_._2 != null)
+    val face = Snapshots.resolveFace(spark, root, version,
+      Snapshots.GovFamilies ++ Snapshots.IndexFamilies)
+    val parted = face.rows.filter(_._2 != null)
     // partition columns are path-encoded; Spark reconstructs them from
     // ONE basePath — the single commit root every file of a freshly
     // written or compacted partitioned generation shares. A MULTI-ROOT
-    // lineage (a partitioned table after file-swapping DML) cannot,
-    // so it refuses — at SCAN EXECUTION like the DV/mapping guards,
-    // because UPDATE/MERGE/optimize on such a table must still plan.
+    // lineage (a partitioned table after file-swapping DML) cannot.
     val partRoots =
-      if (parted.isEmpty) Seq.empty
-      else files.map(f => new Path(f).getParent.getParent.toString).distinct
+      parted.map(r => new Path(r._1).getParent.getParent.toString).distinct
     val multiRoot = parted.nonEmpty &&
-      (parted.length != rows.length || partRoots.length != 1)
+      (parted.length != face.rows.length || partRoots.length != 1)
     val options: Map[String, String] =
       if (parted.isEmpty || multiRoot) Map.empty
       else Map("basePath" -> partRoots.head)
-    // equality-delete tombstones (merge-on-read) — same
-    // enforce-at-scan-build shape as the DV guard
-    val eqGoverned = Snapshots.eqGovernedAt(spark, root, version)
+    val refusal =
+      if (face.dvGoverned(spark)) Some(ScanRefusal.Dv)
+      else if (face.mapsColumns(spark)) Some(ScanRefusal.ColMap)
+      else if (face.gens.eq.governs(version)) Some(ScanRefusal.Eq)
+      else if (multiRoot) Some(ScanRefusal.MultiRoot)
+      else None
     // stats/bloom-governed plain faces declare their sidecar keys as
     // runtime-filterable: Spark's dynamic-pruning rule then routes a
     // selective dim join's key set into the scan, which re-plans its
     // file list through the sidecars (GraftRuntimePrunedScan) — the
-    // SQL face of scanJoinPruned. Governed faces skip it (they read
-    // through the analyzer-substituted readAsOf plan instead).
-    val runtimeKeys =
-      if (dvGoverned || colMapped || multiRoot || eqGoverned) Seq.empty
-      else Snapshots.runtimeFilterKeys(spark, root, version)
-    new GraftSnapshotTable(tableName, root, version, dvGoverned,
-      colMapped, multiRoot, eqGoverned,
+    // SQL face of scanJoinPruned.
+    new GraftSnapshotTable(tableName, face, refusal,
       ParquetTable(tableName, spark,
         new CaseInsensitiveStringMap(options.asJava),
-        files.toIndexedSeq, stored, classOf[ParquetFileFormat]),
-      runtimeKeys)
+        face.rows.map(_._1).toIndexedSeq, face.stored,
+        classOf[ParquetFileFormat]),
+      if (refusal.isEmpty) face.runtimeKeys(spark) else Seq.empty)
   }
+}
+
+/** Why the plain file-list parquet scan cannot serve a face: its
+  * `toBatch` refuses with `reason`. */
+private[graft] sealed abstract class ScanRefusal(reason: String) {
+  def message(tableName: String, version: Long): String =
+    s"$tableName VERSION AS OF $version $reason"
+}
+
+private[graft] object ScanRefusal {
+  case object Dv extends ScanRefusal("is governed by live deletion " +
+    "vectors — the SQL scan cannot apply them; read through " +
+    "Snapshots.readAsOf (or compact with CALL system.optimize)")
+  case object ColMap extends ScanRefusal("is governed by a column " +
+    "rename/drop mapping — the SQL scan cannot translate physical " +
+    "names; read through Snapshots.readAsOf")
+  case object Eq extends ScanRefusal("is governed by equality-delete " +
+    "tombstones (merge-on-read) — the SQL scan would resurrect deleted " +
+    "keys; read through Snapshots.readMorAsOf, or foldEqDeletes to " +
+    "materialize")
+  case object MultiRoot extends ScanRefusal("mixes partition roots or " +
+    "layouts — the SQL scan cannot reconstruct its partition column " +
+    "from one basePath; read through Snapshots.readAsOf (or compact " +
+    "with optimizePartitioned / CALL system.optimize)")
 }
 
 /** The resolved snapshot as a V2 table. Reads plan file-exact through
@@ -816,23 +829,17 @@ private[v2] object GraftSnapshotTable {
   * the write job) and `INSERT OVERWRITE` is the replace commit.
   * `DELETE FROM ... WHERE` is [[Snapshots.deleteWhere]] — a row-level
   * delete as a METADATA commit (deletion vectors, zero rows
-  * rewritten); after it the head is DV-governed, so SQL SCANS refuse
-  * toward `CALL system.optimize` while further DML keeps working (the
-  * refusal is enforced at scan build, not table load, exactly so).
-  * Either way the table's history stays time-travelable — a SQL
-  * writer gets the full lakehouse contract, never a bare directory
-  * write. */
+  * rewritten). Either way the table's history stays time-travelable.
+  * `face` is the load's one resolution; `refusal` names why the plain
+  * scan cannot serve it, if it cannot. */
 private[graft] class GraftSnapshotTable(
     tableName: String,
-    root: String,
-    version: Long,
-    dvGoverned: Boolean,
-    colMapped: Boolean,
-    multiRoot: Boolean,
-    eqGoverned: Boolean,
+    private[graft] val face: Snapshots.Face,
+    private[graft] val refusal: Option[ScanRefusal],
     delegate: ParquetTable,
-    runtimeKeys: Seq[String] = Seq.empty) extends Table with SupportsRead
+    runtimeKeys: Seq[String]) extends Table with SupportsRead
     with SupportsWrite with SupportsDelete with TruncatableTable {
+  private val root = face.tablePath
 
   /** `TRUNCATE TABLE` — one empty REPLACE generation derived from the
     * head: past versions stay time-travelable (their files die later
@@ -852,25 +859,6 @@ private[graft] class GraftSnapshotTable(
     * route UPDATE/MERGE through the snapshot verbs against it. */
   private[graft] def snapshotRoot: String = root
 
-  /** The resolved snapshot version this table pins. */
-  private[graft] def snapshotVersion: Long = version
-
-  /** True when the face needs [[graft.operators.Snapshots.readAsOf]]'s
-    * resolution to serve correctly from SQL (live deletion vectors, a
-    * column mapping, or a multi-root partition layout) — the
-    * analyzer rule [[graft.plans.GraftGovernedReadRule]] substitutes
-    * that read for the plain scan in READ position, so `SELECT` works
-    * right after `DELETE FROM` with no `CALL system.optimize`. */
-  private[graft] def needsResolvedRead: Boolean =
-    (dvGoverned || colMapped || multiRoot) && !eqGoverned
-
-  /** True when the face is governed by equality-delete tombstones —
-    * the rule substitutes [[graft.operators.Snapshots.readMorAsOf]]
-    * (key columns read off the sidecar itself; one key set per
-    * lineage is commit-enforced, so any live sidecar's columns
-    * speak for all); a fold-expired window has no servable face and
-    * keeps the loud `toBatch` refusal. */
-  private[graft] def isEqGoverned: Boolean = eqGoverned
   override def name(): String = tableName
   override def schema(): StructType = delegate.schema
   override def capabilities(): util.Set[TableCapability] =
@@ -878,7 +866,7 @@ private[graft] class GraftSnapshotTable(
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
       TableCapability.OVERWRITE_BY_FILTER)
   override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
-    if (!dvGoverned && !colMapped && !multiRoot && !eqGoverned) {
+    if (refusal.isEmpty) {
       val inner = delegate.newScanBuilder(o)
       inner match {
         // a sidecar-governed face exposes its keys for runtime file
@@ -886,40 +874,23 @@ private[graft] class GraftSnapshotTable(
         // dynamic filter then prunes the manifest-planned file list
         case f: org.apache.spark.sql.execution.datasources.v2.FileScanBuilder
           if runtimeKeys.nonEmpty =>
+          val spark = SparkSession.active
           new org.apache.spark.sql.GraftRuntimePruneScanBuilder(
-            f, SparkSession.active, root, version, runtimeKeys)
+            f, spark, runtimeKeys, Snapshots.runtimeAdmittedFiles(
+              spark, face, _, _, _))
         case other => other
       }
     }
     else new ScanBuilder {
       // DML/DDL planning (DELETE FROM's optimizer pass, ALTER TABLE's
-      // loadTable) builds scans it never executes — so a DV-governed
-      // or column-mapped face refuses at EXECUTION (toBatch), not at
-      // plan construction or table load
+      // loadTable) builds scans it never executes — so a refused face
+      // refuses at EXECUTION (toBatch), not at plan construction or
+      // table load
       private val inner = delegate.newScanBuilder(o)
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = inner.build().readSchema()
         override def toBatch: Batch = throw new IllegalArgumentException(
-          if (dvGoverned)
-            s"$tableName VERSION AS OF $version is governed by live " +
-              "deletion vectors — the SQL scan cannot apply them; read " +
-              "through Snapshots.readAsOf (or compact with CALL " +
-              "system.optimize)"
-          else if (colMapped)
-            s"$tableName VERSION AS OF $version is governed by a " +
-              "column rename/drop mapping — the SQL scan cannot " +
-              "translate physical names; read through Snapshots.readAsOf"
-          else if (eqGoverned)
-            s"$tableName VERSION AS OF $version is governed by " +
-              "equality-delete tombstones (merge-on-read) — the SQL " +
-              "scan would resurrect deleted keys; read through " +
-              "Snapshots.readMorAsOf, or foldEqDeletes to materialize"
-          else
-            s"$tableName VERSION AS OF $version mixes partition roots " +
-              "or layouts — the SQL scan cannot reconstruct its " +
-              "partition column from one basePath; read through " +
-              "Snapshots.readAsOf (or compact with " +
-              "optimizePartitioned / CALL system.optimize)")
+          refusal.get.message(tableName, face.version))
       }
     }
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
 import org.apache.spark.sql.execution.datasources.v2.FileScanBuilder
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** RUNTIME FILE PRUNING for the graft catalog's SQL scans — the DSv2
   * `SupportsRuntimeV2Filtering` face of
@@ -32,13 +32,13 @@ import org.apache.spark.sql.types.StructType
   * [[SupportsPushDownCatalystFilters]] — the builder must forward it
   * or the wrap would cost the scan its parquet pushdown. (Aggregate
   * pushdown — default-off for parquet — is the one builder face not
-  * forwarded.) */
+  * forwarded.) `admit` maps one runtime IN-set (key, values, type) to
+  * the admitted files in manifest spelling; None when nothing applies. */
 class GraftRuntimePruneScanBuilder(
     inner: FileScanBuilder,
     spark: SparkSession,
-    tablePath: String,
-    version: Long,
-    keys: Seq[String]) extends ScanBuilder
+    keys: Seq[String],
+    admit: GraftRuntimePrunedScan.Admit) extends ScanBuilder
     with SupportsPushDownRequiredColumns
     with SupportsPushDownCatalystFilters {
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -55,7 +55,7 @@ class GraftRuntimePruneScanBuilder(
     // sidecars), but guard EXPLICITLY so a future partitioned+sidecar
     // composition degrades to unpruned, never to wrong values
     case ps: ParquetScan if ps.readPartitionSchema.isEmpty =>
-      new GraftRuntimePrunedScan(ps, spark, tablePath, version, keys)
+      new GraftRuntimePrunedScan(ps, spark, keys, admit)
     case other => other // non-parquet/partitioned delegate: no hook
   }
 }
@@ -68,6 +68,8 @@ class GraftRuntimePruneScanBuilder(
   * side's broadcast already materialized (DPP reuses it; the filter
   * is free on the dim side). */
 object GraftRuntimePrunedScan {
+  type Admit = (String, Seq[Any], DataType) => Option[Seq[String]]
+
   /** Observability for the admission-shape question: the distinct
     * predicate names Spark hands to [[GraftRuntimePrunedScan.filter]]
     * (spec-pinned in GraftCatalogSpec) — a set, so a long-lived driver
@@ -86,9 +88,8 @@ object GraftRuntimePrunedScan {
 class GraftRuntimePrunedScan(
     inner: ParquetScan,
     spark: SparkSession,
-    tablePath: String,
-    version: Long,
-    keys: Seq[String]) extends Scan with Batch
+    keys: Seq[String],
+    admit: GraftRuntimePrunedScan.Admit) extends Scan with Batch
     with SupportsRuntimeV2Filtering {
 
   @volatile private var current: ParquetScan = inner
@@ -127,8 +128,7 @@ class GraftRuntimePrunedScan(
       GraftRuntimePrunedScan.observedFilterShapes.add(p.name()))
     predicates.foreach { p =>
       extractIn(p).foreach { case (key, values, dt) =>
-        graft.operators.Snapshots.runtimeAdmittedFiles(
-          spark, tablePath, version, key, values, dt).foreach { adm =>
+        admit(key, values, dt).foreach { adm =>
           // both in manifest spelling; conservative legs make order moot
           kept = Some(kept.fold(adm)(prev =>
             adm.filter(prev.toSet.contains)))

@@ -2,6 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.types.StructType
 
 /** Spark 4 moved the `Column` ↔ catalyst `Expression` bridge behind
   * `private[sql]` (`org.apache.spark.sql.classic.ExpressionUtils`). Extension
@@ -23,6 +24,10 @@ object GraftSqlShim {
     * function builder must return. */
   def eagerExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** `schema` with every field nullable, nested ones too — the form a
+    * file source reads any schema in. */
+  def nullable(schema: StructType): StructType = schema.asNullable
 
   /** A DataFrame over an already-resolved logical plan — what a command
     * node captured at analysis time (Spark 4 hides `Dataset.ofRows`

@@ -160,10 +160,41 @@ class IndexFormatSpec extends SparkSuite {
     assert(f.rename(new Path(mixed), new Path(dir)))
     intercept[IllegalArgumentException](
       Snapshots.scanPointAsOf(spark, tbl, v, "id", 7L))
-    assert(Snapshots.runtimeFilterKeys(spark, tbl, v).isEmpty)
+    assert(Snapshots.resolveFace(spark, tbl, v, Snapshots.IndexFamilies)
+      .runtimeKeys(spark).isEmpty)
     val rows = Snapshots.generationFileMeta(spark, tbl, v)
     assert(Snapshots.bloomPrunedForDml(spark, tbl, v, rows,
       col("id") === 7L) == rows)
+  }
+
+  test("index reads take the footer schema: a standalone scanRange plans " +
+    "in one job and a cold sidecar-pruned read in two; an empty answer " +
+    "keeps the nullable schema a parquet read infers") {
+    // spark.range's id is a non-nullable long
+    val data = freshDir() + "/data"
+    val man = freshDir() + "/man"
+    Skipping.writeClustered(spark.range(0L, 100L).toDF("k"), "k",
+      numFiles = 4, path = data)
+    Skipping.writeManifest(spark, data, Seq("k"), man)
+    val (hit, jobs) =
+      jobsDuring(Skipping.scanRange(spark, data, man, "k", 10L, 20L))
+    assert(jobs == 1, s"a standalone scanRange planned in $jobs jobs")
+    assert(hit.count() == 11L)
+    val miss = Skipping.scanRange(spark, data, man, "k", 500L, 600L)
+    assert(miss.schema == spark.read.parquet(data).schema,
+      s"empty answer ${miss.schema} against ${spark.read.parquet(data).schema}")
+    assert(miss.count() == 0L)
+
+    val tbl = freshTable()
+    val v = Snapshots.commitClustered(spark, spark.range(0L, 100L).toDF("k"),
+      tbl, "k", numFiles = 4, append = false)
+    // the admission collect, and the admitted files' schema merge (the
+    // pruned scan reads no manifest, so it has no stored schema)
+    val (face, coldJobs) =
+      jobsDuring(Snapshots.scanRangeAsOf(spark, tbl, v, "k", 10L, 20L))
+    assert(coldJobs == 2,
+      s"a cold sidecar-pruned read planned in $coldJobs jobs")
+    assert(face.count() == 11L)
   }
 
   test("version pointers: a corrupt checkpoint pointer reads as absent, " +
