@@ -64,7 +64,7 @@ object Skipping {
     require(keys.nonEmpty, "track at least one column")
     val aggs = count(lit(1)).as("n_rows") +: keys.flatMap(k =>
       Seq(min(col(k)).as(s"min_$k"), max(col(k)).as(s"max_$k")))
-    spark.read.parquet(files: _*)
+    readFresh(spark, files)
       .groupBy(input_file_name().as("file"))
       .agg(aggs.head, aggs.tail: _*)
   }
@@ -87,11 +87,20 @@ object Skipping {
         GraftSqlShim.expression(xxhash64(col(keyCol))),
         Literal(sizing.expectedPerFile), Literal(sizing.bits))
         .toAggregateExpression())
-    spark.read.parquet(files: _*)
+    readFresh(spark, files)
       .groupBy(input_file_name().as("file"))
       .agg(count(lit(1)).as("n_rows"), agg.as("bf"))
       .withColumn("key", lit(keyCol))
   }
+
+  /** The files a row builder aggregates over, read with the first
+    * one's footer schema ([[graft.Tables.footerSchema]], no inference
+    * job): the files of one commit come from one write, so they share
+    * it. An empty list reads as Spark reads it. */
+  private def readFresh(spark: SparkSession, files: Seq[String]): DataFrame =
+    (if (files.isEmpty) spark.read
+    else spark.read.schema(graft.Tables.footerSchema(spark, files.head)))
+      .parquet(files: _*)
 
   /** A bloom's sizing: bits by the standard `n·ln(1/fpp)/ln²2` from
     * `expectedPerFile` (size for the real per-file row count — an

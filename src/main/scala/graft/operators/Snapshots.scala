@@ -338,15 +338,20 @@ object Snapshots {
     * missing but the staged one is complete (live is only moved aside
     * AFTER the staged write finishes) — roll it forward. A leftover
     * prev beside a live manifest (crash after the second rename) is
-    * inert and cleared at the next vacuum. */
-  private def recoverManifestSwap(spark: SparkSession, tablePath: String): Unit = {
+    * inert and cleared at the next vacuum. Answers whether the live
+    * manifest dir exists afterwards. */
+  private def recoverManifestSwap(
+      spark: SparkSession,
+      tablePath: String): Boolean = {
     val f = fs(spark, tablePath)
     val live = new Path(s"$tablePath/$VersionsDir")
     val staged = new Path(s"$tablePath/${VersionsDir}_staged")
-    if (!f.exists(live) && f.exists(staged))
+    f.exists(live) || f.exists(staged) && {
       require(f.rename(staged, live),
         s"manifest swap recovery failed for $tablePath — complete staged " +
           s"manifest at $staged could not be installed")
+      true
+    }
   }
 
   /** The manifest frame: one row per (version, file, part,
@@ -455,11 +460,11 @@ object Snapshots {
   private def generationStatuses(
       spark: SparkSession,
       tablePath: String): Seq[(Long, (Long, Long))] = {
-    recoverManifestSwap(spark, tablePath)
+    val present = recoverManifestSwap(spark, tablePath)
     manifestDirListings.incrementAndGet()
     val dir = new Path(s"$tablePath/$VersionsDir")
     val f = fs(spark, tablePath)
-    if (!f.exists(dir)) Seq.empty
+    if (!present) Seq.empty
     else f.listStatus(dir).toSeq.filter { s =>
       val n = s.getPath.getName
       s.isFile && !n.startsWith("_") && !isCkptFile(n)
@@ -990,7 +995,7 @@ object Snapshots {
   }
 
   /** The write-governance fingerprint of `version`: the sidecar
-    * generations whose content [[prepareBatch]]/[[toPhysical]] bake
+    * generations whose content [[writeBatch]] bakes
     * into a batch (CHECK constraints, column mapping, generated
     * columns — deletion vectors govern reads, not batch preparation).
     * An append may rebase onto a moved head exactly when this
@@ -1443,22 +1448,17 @@ object Snapshots {
     val observed = latestVersion(spark, tablePath)
     val version = claimVersion(spark, tablePath,
       observed.map(_ + 1L).getOrElse(0L))
-    val dataPath = s"$tablePath/$DataDir/v$version"
-    val prepared = prepareBatch(spark, tablePath, observed, df)
-    toPhysical(spark, tablePath, observed, prepared)
-      .write.mode("errorifexists").parquet(dataPath)
-    val fresh = footerCounts(spark,
-      listDataFiles(spark, dataPath).map((_, null: String)))
+    val w = writeBatch(spark, tablePath, version,
+      observed.map(sidecarPass(spark, tablePath, _, GovFamilies)), df)
     if (append)
-      publishAppend(spark, tablePath, version, fresh, observed,
-        prepared.schema, ts)
+      publishAppend(spark, tablePath, version, w.fresh, observed, w.schema,
+        ts)
     else derivedFrom match {
       case Some(d) =>
-        publishDerived(spark, tablePath, version, fresh,
-          nullableTop(prepared.schema).json, ts, d, verb)
+        publishDerived(spark, tablePath, version, w.fresh,
+          nullableTop(w.schema).json, ts, d, verb)
       case None =>
-        publish(spark, tablePath, version, fresh, None, prepared.schema,
-          ts)
+        publish(spark, tablePath, version, w.fresh, None, w.schema, ts)
     }
   }
 
@@ -1495,12 +1495,8 @@ object Snapshots {
     val head = latestVersion(spark, tablePath)
     val version = claimVersion(spark, tablePath,
       head.map(_ + 1L).getOrElse(0L))
-    val dataPath = s"$tablePath/$DataDir/v$version"
-    val prepared = prepareBatch(spark, tablePath, parent, df)
-    toPhysical(spark, tablePath, parent, prepared)
-      .write.mode("errorifexists").parquet(dataPath)
-    val fresh = footerCounts(spark,
-      listDataFiles(spark, dataPath).map((_, null: String)))
+    val w = writeBatch(spark, tablePath, version,
+      parent.map(sidecarPass(spark, tablePath, _, GovFamilies)), df)
     // branching over the physical head (parent != head) skips interior
     // generations PERMANENTLY — mark the generation BEFORE its manifest
     // publishes, so any reader that sees it classifies its interiors as
@@ -1511,7 +1507,7 @@ object Snapshots {
       if (!f.exists(live)) f.mkdirs(live)
       f.create(branchOverMarker(tablePath, version), true).close()
     }
-    publish(spark, tablePath, version, fresh, parent, prepared.schema, ts)
+    publish(spark, tablePath, version, w.fresh, parent, w.schema, ts)
   }
 
   /** [[commit]] over a HIVE-PARTITIONED layout: the batch is written
@@ -1538,21 +1534,18 @@ object Snapshots {
     val observed = latestVersion(spark, tablePath)
     val version = claimVersion(spark, tablePath,
       observed.map(_ + 1L).getOrElse(0L))
-    val dataPath = s"$tablePath/$DataDir/v$version"
-    val prepared = prepareBatch(spark, tablePath, observed, df)
-    toPhysical(spark, tablePath, observed, prepared)
-      .write.mode("errorifexists").partitionBy(partCol).parquet(dataPath)
-    val fresh = footerCounts(spark, listPartitionedFiles(spark, dataPath))
+    val w = writeBatch(spark, tablePath, version,
+      observed.map(sidecarPass(spark, tablePath, _, GovFamilies)), df,
+      Some(partCol))
     if (append)
-      publishAppend(spark, tablePath, version, fresh, observed,
-        prepared.schema, ts)
+      publishAppend(spark, tablePath, version, w.fresh, observed, w.schema,
+        ts)
     else derivedFrom match {
       case Some(d) =>
-        publishDerived(spark, tablePath, version, fresh,
-          nullableTop(prepared.schema).json, ts, d, verb)
+        publishDerived(spark, tablePath, version, w.fresh,
+          nullableTop(w.schema).json, ts, d, verb)
       case None =>
-        publish(spark, tablePath, version, fresh, None, prepared.schema,
-          ts)
+        publish(spark, tablePath, version, w.fresh, None, w.schema, ts)
     }
   }
 
@@ -1641,7 +1634,7 @@ object Snapshots {
     // files would resurrect DV-deleted rows into the new generation's
     // fresh files
     val gens = resolveSidecars(spark, tablePath, latest,
-      refuseEqAs = Some("mergePartitioned"), families = Seq(ColMap))
+      refuseEqAs = Some("mergePartitioned"))
     val parentRows = manifestRows(spark, tablePath, latest)
     require(parentRows.forall(_._2 != null),
       s"mergePartitioned needs a partitioned table (commitPartitioned); " +
@@ -1652,7 +1645,6 @@ object Snapshots {
     val (touchedFiles, untouched) =
       parentRows.partition(r => touched.contains(r._2))
     val version = claimVersion(spark, tablePath, latest + 1L)
-    val dataPath = s"$tablePath/$DataDir/v$version"
     val parentSchema = storedSchema(spark, tablePath, latest)
     // every update row — upsert AND delete — evicts its key from the
     // touched survivors; only upserts re-insert
@@ -1666,16 +1658,12 @@ object Snapshots {
           parentSchema, gens)
           .join(updates.select(keyCols.map(col): _*).distinct(),
             keyCols, "left_anti")
-    val prepared = prepareBatch(spark, tablePath, Some(latest),
-      survivors.unionByName(inserts))
-    toPhysical(spark, tablePath, Some(latest), prepared)
-      .write.mode("errorifexists").partitionBy(partCol).parquet(dataPath)
+    val w = writeBatch(spark, tablePath, version, Some(gens),
+      survivors.unionByName(inserts), Some(partCol))
     val schema = parentSchema
-      .map(ps => mergeSchemas(ps, nullableTop(prepared.schema)))
-      .getOrElse(nullableTop(prepared.schema))
-    publishDerived(spark, tablePath, version,
-      untouched ++
-        footerCounts(spark, listPartitionedFiles(spark, dataPath)),
+      .map(ps => mergeSchemas(ps, nullableTop(w.schema)))
+      .getOrElse(nullableTop(w.schema))
+    publishDerived(spark, tablePath, version, untouched ++ w.fresh,
       schema.json, None, latest, "mergePartitioned")
   }
 
@@ -1713,17 +1701,14 @@ object Snapshots {
       .collect().map(r => partFragment(partCol, r.getString(0))).toSet
     val untouched = parentRows.filterNot(r => touched.contains(r._2))
     val version = claimVersion(spark, tablePath, latest + 1L)
-    val dataPath = s"$tablePath/$DataDir/v$version"
-    val prepared = prepareBatch(spark, tablePath, Some(latest), df)
-    toPhysical(spark, tablePath, Some(latest), prepared)
-      .write.mode("errorifexists").partitionBy(partCol).parquet(dataPath)
+    val w = writeBatch(spark, tablePath, version,
+      Some(sidecarPass(spark, tablePath, latest, GovFamilies)), df,
+      Some(partCol))
     val parentSchema = storedSchema(spark, tablePath, latest)
     val schema = parentSchema
-      .map(ps => mergeSchemas(ps, nullableTop(prepared.schema)))
-      .getOrElse(nullableTop(prepared.schema))
-    publishDerived(spark, tablePath, version,
-      untouched ++
-        footerCounts(spark, listPartitionedFiles(spark, dataPath)),
+      .map(ps => mergeSchemas(ps, nullableTop(w.schema)))
+      .getOrElse(nullableTop(w.schema))
+    publishDerived(spark, tablePath, version, untouched ++ w.fresh,
       schema.json, None, latest, "replacePartitions")
   }
 
@@ -1808,7 +1793,7 @@ object Snapshots {
 
     /** A rename/drop column mapping governs the face. */
     def mapsColumns(spark: SparkSession): Boolean =
-      renamesAny(colMapOf(spark, gens))
+      renamesAny(gens.governing(spark, ColMap))
 
     /** The tombstone key columns; empty when none governs. */
     def eqKeyCols(spark: SparkSession): Seq[String] =
@@ -1823,7 +1808,7 @@ object Snapshots {
 
     /** `fam`'s dir that describes the face, if one does. */
     def describing(spark: SparkSession, fam: IndexFamily): Option[String] =
-      describes(spark, gens.picked.get(fam), version, rows.map(_._1))
+      gens.describing(spark, fam, rows.map(_._1))
   }
 
   /** Resolve `version`'s [[Face]], listing `families` beside DV and
@@ -2648,19 +2633,9 @@ object Snapshots {
     // violating sync fails by constraint name before anything
     // publishes (the ingest path is exactly the one you want
     // constrained; the claimed number burns as a benign gap)
-    val dataPath = s"$tablePath/$DataDir/v$version"
-    val prepared = constraintGuard(spark, tablePath, Some(observed),
-      upserts.select(stored.fieldNames.map(col).toIndexedSeq: _*))
-    val fresh = partCol match {
-      case Some(pc) =>
-        prepared.write.mode("errorifexists").partitionBy(pc)
-          .parquet(dataPath)
-        footerCounts(spark, listPartitionedFiles(spark, dataPath))
-      case None =>
-        prepared.write.mode("errorifexists").parquet(dataPath)
-        footerCounts(spark,
-          listDataFiles(spark, dataPath).map((_, null: String)))
-    }
+    val fresh = writeBatch(spark, tablePath, version, Some(gens),
+      upserts.select(stored.fieldNames.map(col).toIndexedSeq: _*),
+      partCol).fresh
     // the sidecar: keyed tombstones + this commit's own fresh files
     // (the age index readMorAsOf scopes each tombstone set with)
     Eq.write(spark, tablePath, version,
@@ -2904,6 +2879,7 @@ object Snapshots {
     * absent from `picked`. */
   private[graft] final case class SidecarGens(
       version: Long,
+      families: Seq[SidecarFamily],
       dvListed: Seq[(Long, String)],
       picked: Map[SidecarFamily, (Long, String)],
       eq: Eq.Listing) {
@@ -2913,6 +2889,35 @@ object Snapshots {
 
     /** The tombstone sets governing `version`, oldest first. */
     def eqLive: Seq[(Long, String)] = eq.liveAt(version)
+
+    /** `fam`'s set governing `version` — empty when none does. */
+    def governing[V](spark: SparkSession, fam: GovFamily[V]): Seq[(String, V)] =
+      picked.get(fam).map { case (_, dir) => fam.read(spark, dir) }
+        .getOrElse(Seq.empty)
+
+    /** The one "describes" rule of the pruning indexes: `fam`'s picked
+      * dir describes `version` when it is the version's own dir, or when
+      * its recorded files cover all of the version's `files` (and there
+      * are some) — how an index survives the FILE-PRESERVING metadata
+      * verbs (deleteWhere, constraint changes) that repoint the parent's
+      * files verbatim. A generation whose files left the described set
+      * (replace, OPTIMIZE, purge) answers None rather than pruning with
+      * bounds that no longer speak for it. `files` is read only for the
+      * coverage check, so a version with its own dir costs no manifest
+      * read. */
+    def describing(
+        spark: SparkSession,
+        fam: IndexFamily,
+        files: => Seq[String]): Option[String] =
+      picked.get(fam).filter { case (v, dir) =>
+        v == version || {
+          val fs = files
+          fs.nonEmpty && {
+            val described = sidecarDescribedFiles(spark, dir)
+            fs.forall(f => described.contains(normPath(f)))
+          }
+        }
+      }.map(_._2)
 
     /** Refuse a version inside a fold window — its tombstone history
       * expired, so it has NO face; raw rows would be a lie — and a
@@ -2957,7 +2962,7 @@ object Snapshots {
     def listed(fam: SidecarFamily): Seq[(Long, String)] =
       if (!present.contains(fam.dirName)) Seq.empty
       else sidecarFamilyListed(f, fam.root(tablePath))
-    SidecarGens(version, listed(Dv),
+    SidecarGens(version, families, listed(Dv),
       families.flatMap(g =>
         pickAtOrBelow(listed(g), version).map(g -> _)).toMap,
       if (!present.contains(Eq.dirName)) Eq.Absent
@@ -2970,14 +2975,6 @@ object Snapshots {
       spark: SparkSession,
       gens: SidecarGens): Option[DataFrame] =
     gens.dv.map { case (_, dir) => Dv.read(spark, dir) }
-
-  /** The governing column mapping from an already-resolved
-    * [[SidecarGens]] — zero further listings. */
-  private def colMapOf(
-      spark: SparkSession,
-      gens: SidecarGens): Seq[(String, Option[String])] =
-    gens.picked.get(ColMap).map { case (_, dir) => ColMap.read(spark, dir) }
-      .getOrElse(Seq.empty)
 
   /** (file, partition fragment, footer row count) of ONE generation —
     * the SQL catalog's `files` metadata-table face, read from that
@@ -3076,7 +3073,7 @@ object Snapshots {
       rows: Seq[(String, String)],
       stored: Option[org.apache.spark.sql.types.StructType],
       gens: SidecarGens): DataFrame = {
-    val l2p = logicalToPhysical(colMapOf(spark, gens))
+    val l2p = logicalToPhysical(gens.governing(spark, ColMap))
     val phys = stored.map(physicalSchema(_, l2p))
     gens.dv match {
       case None =>
@@ -3125,7 +3122,7 @@ object Snapshots {
       tablePath: String,
       predicate: org.apache.spark.sql.Column,
       ts: Option[Long] = None): Long = {
-    val face = dmlFace(spark, tablePath, "deleteWhere")
+    val face = dmlFace(spark, tablePath, "deleteWhere", Seq(ColMap))
     val fresh = face.live(face.fileRows).filter(predicate)
       .select(col(DvFileCol).as("file"), col(DvPosCol).as("row_index"))
     val version = claimVersion(spark, tablePath, face.observed + 1L)
@@ -3138,16 +3135,22 @@ object Snapshots {
 
   /** The observed face every row-level DML verb reads and derives its
     * commit from: the head's manifest rows and stored schema from ONE
-    * read, its column mapping, and the deletion vectors governing it. */
-  private final case class DmlFace(
+    * read, and the sidecars its verb reads from ONE pass (`gens`) —
+    * the column mapping, the deletion vectors governing it, the
+    * write-governance sets its batch is prepared under
+    * ([[writeBatch]]) and the pruning indexes describing it
+    * ([[indexDir]]). */
+  private[graft] final case class DmlFace(
       spark: SparkSession,
       tablePath: String,
       observed: Long,
       fileRows: Seq[(String, String, Option[Long])],
       schemaJson: String,
       stored: Option[org.apache.spark.sql.types.StructType],
-      l2p: Map[String, String],
-      prior: Option[DataFrame]) {
+      gens: SidecarGens) {
+    private val cmap = gens.governing(spark, ColMap)
+    val l2p: Map[String, String] = logicalToPhysical(cmap)
+    val prior: Option[DataFrame] = dvSetOf(spark, gens)
 
     /** The live rows of `rows` (deletion vectors applied), carrying the
       * [[DvFileCol]]/[[DvPosCol]] row identity. */
@@ -3163,28 +3166,37 @@ object Snapshots {
         : (Seq[(String, String, Option[Long])],
           Seq[(String, String, Option[Long])]) =
       fileRows.partition(r => dirty.contains(normPath(r._1)))
+
+    /** `fam`'s dir that describes the observed head — None under a
+      * rename/drop column mapping: index rows and physical file columns
+      * keep their birth names, so the DML pruners and index maintenance
+      * stand down there. */
+    def indexDir(fam: IndexFamily): Option[String] =
+      if (renamesAny(cmap)) None
+      else gens.describing(spark, fam, fileRows.map(_._1))
   }
 
   /** Resolve a DML verb's [[DmlFace]] at the current head, its
-    * sidecars (deletion vectors, column mapping; batch preparation
-    * reads the write-governance sets itself) from one
-    * [[resolveSidecars]] pass. A table with no
-    * committed versions or a tombstone-governed head refuses; a head
-    * retracted between its resolution and the read is the retry-able
-    * conflict of [[observedGeneration]]. */
-  private def dmlFace(
+    * sidecars from one [[resolveSidecars]] pass over `families` (the
+    * file-rewriting verbs' default: the write-governance and
+    * pruning-index families). A table with no committed versions or a
+    * tombstone-governed head refuses; a head retracted between its
+    * resolution and the read is the retry-able conflict of
+    * [[observedGeneration]]. */
+  private[graft] def dmlFace(
       spark: SparkSession,
       tablePath: String,
-      verb: String): DmlFace = {
+      verb: String,
+      families: Seq[SidecarFamily] = GovFamilies ++ IndexFamilies)
+      : DmlFace = {
     val observed = latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"$verb: $tablePath has no committed versions"))
     val gens = resolveSidecars(spark, tablePath, observed,
-      refuseEqAs = Some(verb), families = Seq(ColMap))
+      refuseEqAs = Some(verb), families = families)
     val gen = observedGeneration(spark, tablePath, observed, verb)
     DmlFace(spark, tablePath, observed, fileRowsOf(gen),
-      schemaJsonOf(gen).orNull, storedSchemaOf(gen),
-      logicalToPhysical(colMapOf(spark, gens)), dvSetOf(spark, gens))
+      schemaJsonOf(gen).orNull, storedSchemaOf(gen), gens)
   }
 
   /** The normalized set of files a live frame (or a frame derived from
@@ -3201,9 +3213,8 @@ object Snapshots {
   private def predicateDirtyFiles(
       face: DmlFace,
       predicate: org.apache.spark.sql.Column): Set[String] = {
-    val discovery = bloomPrunedForDml(face.spark, face.tablePath,
-      face.observed, statsPrunedForDml(face.spark, face.tablePath,
-        face.observed, face.fileRows, predicate), predicate)
+    val discovery = bloomPrunedForDml(face,
+      statsPrunedForDml(face, face.fileRows, predicate), predicate)
     if (discovery.isEmpty) Set.empty
     else dirtyFilesOf(face.live(discovery).filter(predicate))
   }
@@ -3227,7 +3238,7 @@ object Snapshots {
     * physically dropped — the new version's sidecar carries only the
     * untouched files' surviving entries. CHECK constraints and
     * generated-column definitions govern the updated rows exactly as
-    * they govern ingest ([[prepareBatch]]); a column-mapping face
+    * they govern ingest ([[writeBatch]]); a column-mapping face
     * translates both ways. Updated columns keep their stored type
     * (assignments cast; a type-changing update is a replace commit's
     * job). Hive-partitioned generations rewrite `partitionBy`, so
@@ -3366,31 +3377,6 @@ object Snapshots {
     }
   }
 
-  /** Write a DML verb's fresh files — flat or `partitionBy` to match
-    * the generation's layout — and return their manifest rows. */
-  private def writeDmlFiles(
-      spark: SparkSession,
-      tablePath: String,
-      parent: Long,
-      version: Long,
-      prepared: DataFrame,
-      partCol: Option[String]): Seq[(String, String, Option[Long])] = {
-    val dataPath = s"$tablePath/$DataDir/v$version"
-    val w = toPhysical(spark, tablePath, Some(parent), prepared)
-      .write.mode("errorifexists")
-    partCol match {
-      case Some(pc) =>
-        require(prepared.columns.contains(pc),
-          s"DML rewrite of $tablePath lost partition column '$pc'")
-        w.partitionBy(pc).parquet(dataPath)
-        footerCounts(spark, listPartitionedFiles(spark, dataPath))
-      case None =>
-        w.parquet(dataPath)
-        footerCounts(spark,
-          listDataFiles(spark, dataPath).map((_, null: String)))
-    }
-  }
-
   /** The commit tail of a file-exact copy-on-write verb: `frame` (the
     * rewritten dirty files' rows plus any fresh rows) lands as fresh
     * files beside the verbatim `cleanRows`. Every sidecar the new
@@ -3408,9 +3394,8 @@ object Snapshots {
     val spark = face.spark
     val tablePath = face.tablePath
     val version = claimVersion(spark, tablePath, face.observed + 1L)
-    val prepared = prepareBatch(spark, tablePath, Some(face.observed), frame)
-    val fresh = writeDmlFiles(spark, tablePath, face.observed, version,
-      prepared, partCol)
+    val fresh = writeBatch(spark, tablePath, version, Some(face.gens),
+      frame, partCol).fresh
     // the new version's DV sidecar: untouched files' entries survive,
     // rewritten files' entries died physically with the rewrite — an
     // empty survivor set still writes (it supersedes the parent's)
@@ -3422,8 +3407,8 @@ object Snapshots {
         if (survivingFiles.isEmpty) p.limit(0)
         else p.filter(col("file").isin(survivingFiles.toIndexedSeq: _*)))
     }
-    maintainIndexSidecars(spark, tablePath, face.observed, version,
-      cleanRows.map(_._1), fresh.map(_._1))
+    maintainIndexSidecars(face, version, cleanRows.map(_._1),
+      fresh.map(_._1))
     publishDerived(spark, tablePath, version, cleanRows ++ fresh,
       face.schemaJson, ts, face.observed, verb)
   }
@@ -3472,16 +3457,13 @@ object Snapshots {
     * sidecar describes the generation, a column mapping governs, or
     * nothing translates. */
   private[graft] def statsPrunedForDml(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long,
+      face: DmlFace,
       fileRows: Seq[(String, String, Option[Long])],
       predicate: org.apache.spark.sql.Column)
       : Seq[(String, String, Option[Long])] = {
     if (fileRows.isEmpty) return fileRows
-    if (mapsColumns(spark, tablePath, version)) return fileRows
-    val sd = describingSidecarDir(spark, tablePath, StatsIndex, version)
-      .getOrElse(return fileRows)
+    val spark = face.spark
+    val sd = face.indexDir(StatsIndex).getOrElse(return fileRows)
     val statKeys = StatsIndex.keys(spark, sd).toSet
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo => CEq, Expression, GreaterThan => CGt, GreaterThanOrEqual => CGe, In => CIn, LessThan => CLt, LessThanOrEqual => CLe, Literal => CLit}
@@ -3540,16 +3522,13 @@ object Snapshots {
     * widen admission, blooms never produce false negatives, and the
     * exact predicate still runs row-level. */
   private[graft] def bloomPrunedForDml(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long,
+      face: DmlFace,
       fileRows: Seq[(String, String, Option[Long])],
       predicate: org.apache.spark.sql.Column)
       : Seq[(String, String, Option[Long])] = {
     if (fileRows.isEmpty) return fileRows
-    if (mapsColumns(spark, tablePath, version)) return fileRows
-    val bd = describingSidecarDir(spark, tablePath, BloomIndex, version)
-      .getOrElse(return fileRows)
+    val spark = face.spark
+    val bd = face.indexDir(BloomIndex).getOrElse(return fileRows)
     val keyCol = BloomIndex.keys(spark, bd).headOption
       .getOrElse(return fileRows)
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
@@ -3596,17 +3575,14 @@ object Snapshots {
     * rows outside the admitted files cannot match (their key interval
     * misses every source key), so the join answer is unchanged. */
   private[graft] def mergeSourcePruned(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long,
+      face: DmlFace,
       fileRows: Seq[(String, String, Option[Long])],
       source: DataFrame,
       on: org.apache.spark.sql.Column)
       : Seq[(String, String, Option[Long])] = {
     if (fileRows.isEmpty) return fileRows
-    if (mapsColumns(spark, tablePath, version)) return fileRows
-    val sd = describingSidecarDir(spark, tablePath, StatsIndex, version)
-      .getOrElse(return fileRows)
+    val spark = face.spark
+    val sd = face.indexDir(StatsIndex).getOrElse(return fileRows)
     val statKeys = StatsIndex.keys(spark, sd).toSet
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{EqualTo => CEq, Expression}
@@ -3727,8 +3703,7 @@ object Snapshots {
       else {
         // target files whose stats interval misses the source's whole
         // key range cannot contain a match — prune the match scan
-        val matchScan = mergeSourcePruned(spark, tablePath, face.observed,
-          fileRows, source, on)
+        val matchScan = mergeSourcePruned(face, fileRows, source, on)
         if (matchScan.isEmpty) Set.empty // stats disprove any match
         else {
           val matchCounts = face.live(matchScan).alias("t")
@@ -4111,16 +4086,9 @@ object Snapshots {
       version: Long): Seq[(String, Option[String])] =
     ColMap.asOf(spark, tablePath, version)
 
-  /** Does a rename/drop column mapping govern `version`? Sidecar
+  /** A mapping that renames or drops some physical column. Sidecar
     * columns and physical file columns keep their birth names, so the
     * verbs that address them by name stand down (or refuse) under one. */
-  private[graft] def mapsColumns(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long): Boolean =
-    renamesAny(colMapAsOf(spark, tablePath, version))
-
-  /** A mapping that renames or drops some physical column. */
   private def renamesAny(m: Seq[(String, Option[String])]): Boolean =
     m.exists { case (p, l) => !l.contains(p) }
 
@@ -4140,18 +4108,13 @@ object Snapshots {
     * same benign debris any crashed committer leaves
     * ([[removeOrphans]]' job); the manifest never saw the batch. */
   private def constraintGuard(
-      spark: SparkSession,
-      tablePath: String,
-      parent: Option[Long],
-      df: DataFrame): DataFrame = {
-    val active = parent
-      .map(constraintsAsOf(spark, tablePath, _)).getOrElse(Seq.empty)
+      active: Seq[(String, String)],
+      df: DataFrame): DataFrame =
     if (active.isEmpty) df
     else df.filter(active.map { case (n, e) =>
       assert_true(coalesce(expr(e), lit(true)),
         lit(s"CHECK constraint '$n' violated: $e")).isNull
     }.reduce(_ && _))
-  }
 
   /** ALTER TABLE ADD CONSTRAINT: a metadata-only commit (parent files
     * repointed verbatim) that installs a named CHECK expression
@@ -4220,18 +4183,13 @@ object Snapshots {
     * reference generated columns, and before the physical translation
     * so expressions speak logical names. */
   private def genColumnsApply(
-      spark: SparkSession,
-      tablePath: String,
-      parent: Option[Long],
-      df: DataFrame): DataFrame = {
-    val gens = parent
-      .map(generatedColumnsAsOf(spark, tablePath, _)).getOrElse(Seq.empty)
-    gens.foldLeft(df) { case (d, (n, e)) =>
+      generated: Seq[(String, String)],
+      df: DataFrame): DataFrame =
+    generated.foldLeft(df) { case (d, (n, e)) =>
       if (!d.columns.contains(n)) d.withColumn(n, expr(e))
       else d.filter(assert_true(col(n) <=> expr(e),
         lit(s"generated column '$n' violated its definition: $e")).isNull)
     }
-  }
 
   /** Declare a generated column: from this version on, every ingest
     * materializes `name = exprSql` when the batch lacks the column and
@@ -4270,18 +4228,64 @@ object Snapshots {
         active.filterNot(_._1 == name)))
     }
 
-  /** The shared ingest preparation every data-writing verb runs:
-    * generated columns materialize/validate, CHECK constraints guard,
-    * the column mapping translates to physical names — in that order
-    * (constraints may reference generated columns; both speak logical
-    * names). */
-  private def prepareBatch(
+  /** A batch written for ingest: its LOGICAL schema (what the manifest
+    * records), the logical→physical names its files carry, and their
+    * manifest rows. */
+  private final case class Written(
+      schema: org.apache.spark.sql.types.StructType,
+      l2p: Map[String, String],
+      fresh: Seq[(String, String, Option[Long])])
+
+  /** The ONE ingest write of every data-writing verb: `df` prepared
+    * under the write-governance sets `gens` resolved at the batch's
+    * parent (None: a first commit, nothing governs) — generated columns
+    * materialize/validate, CHECK constraints guard, the column mapping
+    * translates to physical names, in that order (constraints may
+    * reference generated columns; both speak logical names) — then
+    * written to `data/v<version>`, flat or `partitionBy(partCol)`. A
+    * fresh column whose name collides with a mapped or tombstoned
+    * physical name refuses: writing it would alias old file data under
+    * the new column on read. */
+  private def writeBatch(
       spark: SparkSession,
       tablePath: String,
-      parent: Option[Long],
-      df: DataFrame): DataFrame =
-    constraintGuard(spark, tablePath, parent,
-      genColumnsApply(spark, tablePath, parent, df))
+      version: Long,
+      gens: Option[SidecarGens],
+      df: DataFrame,
+      partCol: Option[String] = None): Written = {
+    def set[V](fam: GovFamily[V]): Seq[(String, V)] =
+      gens.fold(Seq.empty[(String, V)]) { g =>
+        require(g.families.contains(fam),
+          s"batch preparation read sidecars resolved without ${fam.dirName}")
+        g.governing(spark, fam)
+      }
+    val logical = constraintGuard(set(Constraints),
+      genColumnsApply(set(GenCols), df))
+    val cmap = set(ColMap)
+    val l2p = logicalToPhysical(cmap)
+    val reserved = cmap.map(_._1).toSet
+    logical.columns.foreach { c =>
+      require(l2p.contains(c) || !reserved.contains(c),
+        s"column '$c' collides with a renamed or dropped column's " +
+          "physical name — a tombstoned name cannot be re-added " +
+          "(rename the new column first)")
+    }
+    val w = l2p.foldLeft(logical) { case (d, (l, p)) =>
+      if (l == p || !d.columns.contains(l)) d else d.withColumnRenamed(l, p)
+    }.write.mode("errorifexists")
+    val dataPath = s"$tablePath/$DataDir/v$version"
+    Written(logical.schema, l2p, partCol match {
+      case Some(pc) =>
+        require(logical.columns.contains(pc),
+          s"DML rewrite of $tablePath lost partition column '$pc'")
+        w.partitionBy(pc).parquet(dataPath)
+        footerCounts(spark, listPartitionedFiles(spark, dataPath))
+      case None =>
+        w.parquet(dataPath)
+        footerCounts(spark,
+          listDataFiles(spark, dataPath).map((_, null: String)))
+    })
+  }
 
   // ------------------------------------------------------------------
   // Column mapping — RENAME/DROP COLUMN as pure metadata (field-ids)
@@ -4290,34 +4294,6 @@ object Snapshots {
   private def logicalToPhysical(
       cmap: Seq[(String, Option[String])]): Map[String, String] =
     cmap.collect { case (p, Some(l)) => l -> p }.toMap
-
-  /** Translate a LOGICAL frame to the PHYSICAL column names its files
-    * must carry. Refuses a fresh column whose name collides with a
-    * mapped or tombstoned physical name — silently writing it would
-    * alias old file data under the new column on read. */
-  private def toPhysical(
-      spark: SparkSession,
-      tablePath: String,
-      parent: Option[Long],
-      df: DataFrame): DataFrame = {
-    val cmap = parent
-      .map(v => colMapAsOf(spark, tablePath, v)).getOrElse(Seq.empty)
-    if (cmap.isEmpty) df
-    else {
-      val l2p = logicalToPhysical(cmap)
-      val reserved = cmap.map(_._1).toSet
-      df.columns.foreach { c =>
-        require(l2p.contains(c) || !reserved.contains(c),
-          s"column '$c' collides with a renamed or dropped column's " +
-            "physical name — a tombstoned name cannot be re-added " +
-            "(rename the new column first)")
-      }
-      l2p.foldLeft(df) { case (d, (l, p)) =>
-        if (l == p || !d.columns.contains(l)) d
-        else d.withColumnRenamed(l, p)
-      }
-    }
-  }
 
   /** Translate a scanned PHYSICAL frame back to logical names. */
   private def fromPhysical(
@@ -4347,7 +4323,7 @@ object Snapshots {
     // identical to resolving at the head version (sidecar generations
     // never outlive their commit: a refused commit retracts its dirs)
     // without the manifest read a latestVersion() would cost
-    require(!mapsColumns(spark, tablePath, Long.MaxValue),
+    require(!renamesAny(colMapAsOf(spark, tablePath, Long.MaxValue)),
       s"$verb: a column rename/drop mapping governs $tablePath — " +
         "this verb addresses physical file columns by name and is not " +
         "mapping-aware yet; run it before the schema change or extend " +
@@ -4508,15 +4484,13 @@ object Snapshots {
   private[graft] val IndexFamilies: Seq[IndexFamily] =
     Seq(StatsIndex, BloomIndex)
 
-  /** `keys` as the raw files of `version` spell them: index rows
-    * aggregate over the RAW files, whose columns carry physical names
-    * under a column mapping (the scans translate back). */
+  /** `keys` as raw files spell them under the column mapping `cmap`:
+    * index rows aggregate over the RAW files, whose columns carry
+    * physical names under a column mapping (the scans translate back). */
   private def physicalKeys(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long,
+      cmap: Seq[(String, Option[String])],
       keys: Seq[String]): Seq[String] = {
-    val l2p = logicalToPhysical(colMapAsOf(spark, tablePath, version))
+    val l2p = logicalToPhysical(cmap)
     keys.map(k => l2p.getOrElse(k, k))
   }
 
@@ -4538,14 +4512,16 @@ object Snapshots {
       append: Boolean,
       verb: String): Unit =
     if (append) latestVersion(spark, tablePath).foreach { h =>
-      val dir = describingSidecarDir(spark, tablePath, fam, h)
+      val gens = sidecarPass(spark, tablePath, h, Seq(ColMap, fam))
+      val dir = gens.describing(spark, fam,
+        manifestRows(spark, tablePath, h).map(_._1))
       require(dir.isDefined,
         s"$verb append onto version $h of $tablePath, which no " +
           s"${fam.noun} sidecar describes — the parent's files would " +
           s"silently vanish from ${fam.noun} pruning; commit the parent " +
           s"through ${fam.verbs} first (refused before publishing; the " +
           "table is untouched)")
-      val phys = physicalKeys(spark, tablePath, h, keys)
+      val phys = physicalKeys(gens.governing(spark, ColMap), keys)
       val recorded = fam.keys(spark, dir.get)
       require(recorded.toSet == phys.toSet,
         s"$verb append on ${phys.mkString(", ")} onto version $h of " +
@@ -4563,13 +4539,13 @@ object Snapshots {
     * parent ([[lineageOf]] — never version−1, a crashed claim's numeric
     * gap, and never the pre-claim observed head, which the
     * reconciliation may have rebased past; unioning it would omit a
-    * racer's files, and the exact-dir fast path of
-    * [[describingSidecarDir]] would then skip the coverage check and
-    * the scans would silently never read them). The parent resolves
-    * through its DESCRIBING generation, so an append onto a
-    * file-preserving metadata head (deleteWhere, constraint change — no
-    * exact dir of its own) inherits the covering sidecar. `keys` are
-    * logical. Returns the version. */
+    * racer's files, and a version's own dir describes it with no
+    * coverage check ([[SidecarGens.describing]]), so the scans would
+    * silently never read them). The parent resolves through its
+    * DESCRIBING generation, so an append onto a file-preserving
+    * metadata head (deleteWhere, constraint change — no exact dir of
+    * its own) inherits the covering sidecar. `keys` are logical.
+    * Returns the version. */
   private def indexedCommit(
       spark: SparkSession,
       fam: IndexFamily,
@@ -4581,10 +4557,11 @@ object Snapshots {
       publish: => Long): Long = {
     preflightIndex(spark, fam, tablePath, keys, append, verb)
     val version = publish
-    val phys = physicalKeys(spark, tablePath, version, keys)
+    val phys = physicalKeys(colMapAsOf(spark, tablePath, version), keys)
     val lin = lineageOf(spark, tablePath, version)
     val parentDir = lin.parent.filter(_ => append).map { p =>
-      describingSidecarDir(spark, tablePath, fam, p)
+      sidecarPass(spark, tablePath, p, Seq(fam))
+        .describing(spark, fam, lin.parentFiles.toSeq)
         .filter(d => fam.keys(spark, d).toSet == phys.toSet)
         .getOrElse(throw new IllegalStateException(
           s"$verb published version $version of $tablePath, but its " +
@@ -4671,43 +4648,8 @@ object Snapshots {
         .sortWithinPartitions(col(keyCol))
     }
 
-  /** The sidecar generation GOVERNING a stats/bloom scan of `version`:
-    * the exact `v<version>` dir when the generation minted one (the
-    * zero-manifest-read fast path), else the latest-at-or-below dir
-    * that still DESCRIBES every file of the generation ([[describes]])
-    * — how the index survives the FILE-PRESERVING metadata verbs
-    * (deleteWhere, constraint changes) that repoint the parent's files
-    * verbatim. A generation whose files left the described set
-    * (replace, OPTIMIZE, purge), or an unknown version, answers None
-    * rather than pruning with bounds that no longer speak for it. */
-  private def describingSidecarDir(
-      spark: SparkSession,
-      tablePath: String,
-      fam: IndexFamily,
-      version: Long): Option[String] = {
-    val exact = fam.dirAt(tablePath, version)
-    if (fs(spark, tablePath).exists(new Path(exact))) Some(exact)
-    else describes(spark, sidecarResolve(spark, fam.root(tablePath), version),
-      version, manifestRows(spark, tablePath, version).map(_._1))
-  }
-
-  /** `picked`'s dir when it describes `version`'s `files`: it is the
-    * version's own dir, or its recorded files cover them all (and
-    * there are some). */
-  private def describes(
-      spark: SparkSession,
-      picked: Option[(Long, String)],
-      version: Long,
-      files: Seq[String]): Option[String] =
-    picked.filter { case (v, dir) =>
-      v == version || files.nonEmpty && {
-        val described = sidecarDescribedFiles(spark, dir)
-        files.forall(f => described.contains(normPath(f)))
-      }
-    }.map(_._2)
-
   /** The normalized `file` set a stats/bloom sidecar dir describes —
-    * the coverage-proof read of [[describingSidecarDir]], memoized per
+    * the coverage-proof read of [[SidecarGens.describing]], memoized per
     * published dir ([[memoizedMeta]]) because it is a driver Spark job
     * on every resolve of a sidecar-governed table. */
   private def sidecarDescribedFiles(
@@ -4736,7 +4678,7 @@ object Snapshots {
     * clustering) is an error. A version whose files the latest stats
     * generation still fully describes — a deleteWhere or constraint
     * change repointed them verbatim — scans through that generation
-    * ([[describingSidecarDir]]), composed with its own deletion
+    * ([[SidecarGens.describing]]), composed with its own deletion
     * vectors. [[scanBoxAsOfN]] over one bound. */
   def scanRangeAsOf(
       spark: SparkSession,
@@ -5004,20 +4946,17 @@ object Snapshots {
     * Runs BEFORE the publish so a refused commit retracts the staged
     * sidecar with the generation. */
   private def maintainIndexSidecars(
-      spark: SparkSession,
-      tablePath: String,
-      parent: Long,
+      face: DmlFace,
       version: Long,
       keptFiles: Seq[String],
       freshFiles: Seq[String]): Unit =
-    if (!mapsColumns(spark, tablePath, parent)) IndexFamilies.foreach {
-      fam =>
-        describingSidecarDir(spark, tablePath, fam, parent).foreach { dir =>
-          val keys = fam.keys(spark, dir)
-          if (keys.nonEmpty) writeIndex(spark, fam, tablePath, version,
-            keys, Some(dir), keptFiles.toSet, freshFiles,
-            Skipping.DefaultSizing)
-        }
+    IndexFamilies.foreach { fam =>
+      face.indexDir(fam).foreach { dir =>
+        val keys = fam.keys(face.spark, dir)
+        if (keys.nonEmpty) writeIndex(face.spark, fam, face.tablePath,
+          version, keys, Some(dir), keptFiles.toSet, freshFiles,
+          Skipping.DefaultSizing)
+      }
     }
 
   /** 2-D box scan AS OF `version` over a [[commitZordered]] layout:
@@ -5053,9 +4992,11 @@ object Snapshots {
     // bound resolves logical→physical for the sidecar probe and the row
     // filter runs on the logical face — a rename costs the table
     // nothing, not even its data skipping
-    val gens = resolveSidecars(spark, tablePath, version)
-    val l2p = logicalToPhysical(colMapOf(spark, gens))
-    val sd = describingSidecarDir(spark, tablePath, StatsIndex, version)
+    val gens = resolveSidecars(spark, tablePath, version,
+      families = GovFamilies ++ IndexFamilies)
+    val l2p = logicalToPhysical(gens.governing(spark, ColMap))
+    val sd = gens.describing(spark, StatsIndex,
+      manifestRows(spark, tablePath, version).map(_._1))
       .getOrElse(throw new IllegalArgumentException(
         s"no stats manifest for version $version of $tablePath — not " +
           "committed via a clustered/Z-ordered verb, or expired by " +
@@ -5127,10 +5068,12 @@ object Snapshots {
     // the key's PHYSICAL name; a renamed key resolves through the
     // mapping, and a key the sidecar does not index refuses loudly
     // (probing a sketch of a different column would falsely prune)
-    val gens = resolveSidecars(spark, tablePath, version)
-    val l2p = logicalToPhysical(colMapOf(spark, gens))
+    val gens = resolveSidecars(spark, tablePath, version,
+      families = GovFamilies ++ IndexFamilies)
+    val l2p = logicalToPhysical(gens.governing(spark, ColMap))
     val phys = l2p.getOrElse(keyCol, keyCol)
-    val bd = describingSidecarDir(spark, tablePath, BloomIndex, version)
+    val bd = gens.describing(spark, BloomIndex,
+      manifestRows(spark, tablePath, version).map(_._1))
       .getOrElse(throw new IllegalArgumentException(
         s"no bloom sidecar for version $version of $tablePath — not " +
           "committed via commitBloom, or expired by vacuum"))
@@ -5210,13 +5153,16 @@ object Snapshots {
       return optimizePartitioned(spark, tablePath, partCol)
     }
     // a stats generation GOVERNS the head when it still DESCRIBES
-    // every head file ([[describingSidecarDir]]) — true across
+    // every head file ([[SidecarGens.describing]]) — true across
     // file-preserving commits (deleteWhere, constraint/gencol changes
     // repoint files verbatim without minting a stats dir of their
     // own), false after a plain replace buried the clustered era. Key
     // names come off the sidecar's min_* schema; the rewrite
     // re-clusters on them and mints a FRESH sidecar at the new head.
-    describingSidecarDir(spark, tablePath, StatsIndex, head).foreach { dir =>
+    val gens = sidecarPass(spark, tablePath, head, IndexFamilies)
+    def describing(fam: IndexFamily): Option[String] =
+      gens.describing(spark, fam, rows.map(_.getString(1)).toSeq)
+    describing(StatsIndex).foreach { dir =>
       val keys = StatsIndex.keys(spark, dir)
       val bytes = rows
         .map(r => f.getFileStatus(new Path(r.getString(1))).getLen).sum
@@ -5237,7 +5183,7 @@ object Snapshots {
     // fleet sweep needs no out-of-band knowledge. A legacy sidecar
     // without the key (or with conflicting keys) refuses toward the
     // explicit verb rather than guessing.
-    describingSidecarDir(spark, tablePath, BloomIndex, head).foreach { dir =>
+    describing(BloomIndex).foreach { dir =>
       val key = BloomIndex.keys(spark, dir).headOption.getOrElse(
         throw new IllegalArgumentException(
           s"optimizePreserving: version $head of $tablePath is " +
@@ -5913,7 +5859,7 @@ object Snapshots {
         "row-level audit")
     // both versions' governing DV generations from ONE family listing
     val gens = resolveSidecars(spark, tablePath, toVersion)
-    val l2p = logicalToPhysical(colMapOf(spark, gens))
+    val l2p = logicalToPhysical(gens.governing(spark, ColMap))
     val phys = stored.map(physicalSchema(_, l2p))
     def rowsOf(files: Seq[(String, String)], withMeta: Boolean) =
       fromPhysical(readFileRows(spark, files, phys, withMeta), l2p)
@@ -5999,14 +5945,11 @@ object Snapshots {
     val version = claimVersion(spark, tablePath,
       observed.map(_ + 1L).getOrElse(0L))
     val dataPath = s"$tablePath/$DataDir/v$version"
-    val prepared = prepareBatch(spark, tablePath, observed, df)
-    toPhysical(spark, tablePath, observed, prepared)
-      .write.mode("errorifexists").parquet(dataPath)
-    val l2pAud = logicalToPhysical(observed
-      .map(v => colMapAsOf(spark, tablePath, v)).getOrElse(Seq.empty))
+    val w = writeBatch(spark, tablePath, version,
+      observed.map(sidecarPass(spark, tablePath, _, GovFamilies)), df)
     val staged = fromPhysical(spark.read
-      .schema(physicalSchema(nullableTop(prepared.schema), l2pAud))
-      .parquet(dataPath), l2pAud)
+      .schema(physicalSchema(nullableTop(w.schema), w.l2p))
+      .parquet(dataPath), w.l2p)
     val report = audit(staged)
     require(report.columns.contains("n_violations"),
       "commitAudited: the audit report must carry an n_violations column")
@@ -6018,16 +5961,11 @@ object Snapshots {
     if (!clean) {
       fs(spark, tablePath).delete(new Path(dataPath), true)
       Left(rows)
-    } else {
-      val fresh = footerCounts(spark,
-        listDataFiles(spark, dataPath).map((_, null: String)))
-      Right(
-        if (append)
-          publishAppend(spark, tablePath, version, fresh, observed,
-            prepared.schema, ts)
-        else publish(spark, tablePath, version, fresh, None,
-          prepared.schema, ts))
-    }
+    } else Right(
+      if (append)
+        publishAppend(spark, tablePath, version, w.fresh, observed,
+          w.schema, ts)
+      else publish(spark, tablePath, version, w.fresh, None, w.schema, ts))
   }
 
   /** RIGHT-TO-ERASURE purge: remove every row matching `keys` from the

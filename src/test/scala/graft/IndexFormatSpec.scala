@@ -163,7 +163,8 @@ class IndexFormatSpec extends SparkSuite {
     assert(Snapshots.resolveFace(spark, tbl, v, Snapshots.IndexFamilies)
       .runtimeKeys(spark).isEmpty)
     val rows = Snapshots.generationFileMeta(spark, tbl, v)
-    assert(Snapshots.bloomPrunedForDml(spark, tbl, v, rows,
+    assert(Snapshots.bloomPrunedForDml(
+      Snapshots.dmlFace(spark, tbl, "updateWhere"), rows,
       col("id") === 7L) == rows)
   }
 
@@ -195,6 +196,21 @@ class IndexFormatSpec extends SparkSuite {
     assert(coldJobs == 2,
       s"a cold sidecar-pruned read planned in $coldJobs jobs")
     assert(face.count() == 11L)
+  }
+
+  test("an indexed append builds its fresh rows off the footer schema: " +
+    "a clustered append runs 4 jobs") {
+    val tbl = freshTable()
+    Snapshots.commitClustered(spark,
+      (0L until 64L).map(i => (i, s"r$i")).toDF("k", "v"),
+      tbl, "k", numFiles = 4, append = false)
+    val (v, jobs) = jobsDuring(Snapshots.commitClustered(spark,
+      Seq((100L, "x")).toDF("k", "v"), tbl, "k", numFiles = 1,
+      append = true))
+    assert(jobs == 4, s"a clustered append ran $jobs jobs")
+    assert(Snapshots.scanRangeAsOf(spark, tbl, v, "k", 60L, 100L)
+      .select($"k").as[Long].collect().sorted.toSeq ==
+      Seq(60L, 61L, 62L, 63L, 100L))
   }
 
   test("version pointers: a corrupt checkpoint pointer reads as absent, " +

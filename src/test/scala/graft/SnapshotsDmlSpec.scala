@@ -442,8 +442,9 @@ class SnapshotsDmlSpec extends SparkSuite {
       numFiles = 4, append = false)
     val rows = Snapshots.generationOf(spark, tbl, 0L)._1
       .map { case (f, p) => (f, p, None: Option[Long]) }
+    val face = Snapshots.dmlFace(spark, tbl, "updateWhere")
     def admitted(pred: org.apache.spark.sql.Column): Int =
-      Snapshots.statsPrunedForDml(spark, tbl, 0L, rows, pred).length
+      Snapshots.statsPrunedForDml(face, rows, pred).length
     assert(admitted(col("id") === 5L) == 1,
       "a point predicate on the clustered key admits ONE file")
     assert(admitted(col("id") >= 4L && col("id") <= 7L) == 2)
@@ -478,8 +479,9 @@ class SnapshotsDmlSpec extends SparkSuite {
     Snapshots.commitBloom(spark, df, tbl, "id", append = false)
     val rows = Snapshots.generationOf(spark, tbl, 0L)._1
       .map { case (f, p) => (f, p, None: Option[Long]) }
+    val face = Snapshots.dmlFace(spark, tbl, "updateWhere")
     def admitted(pred: org.apache.spark.sql.Column): Int =
-      Snapshots.bloomPrunedForDml(spark, tbl, 0L, rows, pred).length
+      Snapshots.bloomPrunedForDml(face, rows, pred).length
     assert(admitted(col("id") === 5L) <= 2 && admitted(col("id") === 5L) >= 1,
       "a point predicate must bloom-prune to the containing file(s)")
     assert(admitted(col("id").isin(2L, 11L) && col("amt") > 0L) <= 3)
@@ -505,12 +507,13 @@ class SnapshotsDmlSpec extends SparkSuite {
     val rows = Snapshots.generationOf(spark, tbl, 0L)._1
       .map { case (f, p) => (f, p, None: Option[Long]) }
     val narrow = Seq((4L, 1L), (5L, 2L)).toDF("sid", "samt")
-    val admitted = Snapshots.mergeSourcePruned(spark, tbl, 0L, rows,
+    val face = Snapshots.dmlFace(spark, tbl, "mergeInto")
+    val admitted = Snapshots.mergeSourcePruned(face, rows,
       narrow, col("t.id") === col("s.sid"))
     assert(admitted.length == 1,
       s"source keys 4..5 live in ONE range file, got ${admitted.length}")
     // no stats key in the ON clause → conservative, everything stays
-    assert(Snapshots.mergeSourcePruned(spark, tbl, 0L, rows,
+    assert(Snapshots.mergeSourcePruned(face, rows,
       narrow, col("t.amt") === col("s.samt")).length == 4)
     // end-to-end on the pruned path: values land, untouched rows stay
     val v = Snapshots.mergeInto(spark, tbl, narrow,
@@ -520,6 +523,33 @@ class SnapshotsDmlSpec extends SparkSuite {
       .select("id", "amt").as[(Long, Long)].collect().toMap
     assert(now(4L) == 1L && now(5L) == 2L && now(6L) == 60L &&
       now(12L) == 120L && now.size == 12)
+  }
+
+  test("DML on a column-mapped indexed table: the pruners and index " +
+    "maintenance stand down, the answer is right, and the new head is " +
+    "left undescribed") {
+    val tbl = freshTable()
+    Snapshots.commitClustered(spark,
+      (1L to 12L).map(i => (i, s"v$i", i * 10L)).toDF("k", "v", "amt"),
+      tbl, "k", numFiles = 4, append = false)
+    Snapshots.renameColumn(spark, tbl, "k", "key")
+    val face = Snapshots.dmlFace(spark, tbl, "updateWhere")
+    assert(Snapshots.statsPrunedForDml(face, face.fileRows,
+      col("key") === 5L) == face.fileRows,
+      "stats pruning must stand down under a column mapping")
+    val v = Snapshots.updateWhere(spark, tbl, col("key") === 5L,
+      Seq("amt" -> lit(999L)))
+    val now = Snapshots.readAsOf(spark, tbl, v)
+      .select("key", "amt").as[(Long, Long)].collect().toMap
+    assert(now.size == 12 && now(5L) == 999L && now(4L) == 40L &&
+      now(6L) == 60L)
+    val fs = new org.apache.hadoop.fs.Path(tbl)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$tbl/_stats/v$v")),
+      "index maintenance must stand down under a column mapping")
+    val e = intercept[IllegalArgumentException](
+      Snapshots.scanRangeAsOf(spark, tbl, v, "key", 1L, 12L))
+    assert(e.getMessage.contains("no stats manifest"), e.getMessage)
   }
 
   test("SQL DELETE FROM takes ANY predicate shape (expression deletes " +

@@ -1,11 +1,8 @@
 package graft
 
-import java.net.URI
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path => HPath,
-  RawLocalFileSystem}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Snapshots
@@ -75,7 +72,6 @@ class SnapshotsResolutionSpec extends SparkSuite {
 
   test("copy-on-write DML lists only the sidecar families it reads: a " +
     "CHECK constraint adds no listing to deleteWhere") {
-    import SnapshotsResolutionSpec.ListCountFs
     spark.sparkContext.hadoopConfiguration
       .set("fs.listcount.impl", classOf[ListCountFs].getName)
     // a table with a deletion vector, and its twin with a constraint too
@@ -104,7 +100,6 @@ class SnapshotsResolutionSpec extends SparkSuite {
   }
 
   private def listCountTable(): String = {
-    import SnapshotsResolutionSpec.ListCountFs
     spark.sparkContext.hadoopConfiguration
       .set("fs.listcount.impl", classOf[ListCountFs].getName)
     "listcount://" + freshTable()
@@ -112,7 +107,6 @@ class SnapshotsResolutionSpec extends SparkSuite {
 
   test("the no-equality-delete fast path: eqGovernedAt makes one exists " +
     "call and no listing, and resolveSidecars touches nothing of _eq") {
-    import SnapshotsResolutionSpec.ListCountFs
     val tbl = listCountTable()
     val v = Snapshots.commit(spark,
       Seq((1L, "a"), (2L, "b")).toDF("id", "v").coalesce(1), tbl,
@@ -133,9 +127,51 @@ class SnapshotsResolutionSpec extends SparkSuite {
       s"resolveSidecars on a table with no _eq opened a file: $rcalls")
   }
 
+  test("a write verb resolves its sidecars once: a warm updateWhere on " +
+    "a plain, clustered or bloom table and a clustered mergeInto read " +
+    "the manifest twice and probe no mapping or index root") {
+    def table(layout: (String, org.apache.spark.sql.DataFrame) => Long)
+        : String = {
+      val tbl = listCountTable()
+      layout(tbl, (1L to 12L).map(i => (i, s"v$i", i * 10L))
+        .toDF("id", "v", "amt").repartitionByRange(4, col("id")))
+      tbl
+    }
+    val plain = table((t, df) => Snapshots.commit(spark, df, t,
+      append = false))
+    val clustered = table((t, df) => Snapshots.commitClustered(spark, df,
+      t, "id", numFiles = 4, append = false))
+    val bloom = table((t, df) => Snapshots.commitBloom(spark, df, t, "id",
+      append = false))
+    def update(tbl: String)(amt: Long): Long =
+      Snapshots.updateWhere(spark, tbl, col("id") === 5L,
+        Seq("amt" -> lit(amt)))
+    def merge(tbl: String)(amt: Long): Long =
+      Snapshots.mergeInto(spark, tbl, Seq((5L, amt)).toDF("sid", "samt"),
+        col("t.id") === col("s.sid"),
+        Seq(Snapshots.MergeUpdate(None, Seq("amt" -> col("s.samt")))))
+    Seq(("plain updateWhere", plain, update(plain) _),
+      ("clustered updateWhere", clustered, update(clustered) _),
+      ("bloom updateWhere", bloom, update(bloom) _),
+      ("clustered mergeInto", clustered, merge(clustered) _)).foreach {
+      case (name, tbl, verb) =>
+        verb(1L) // warms the memos
+        val m0 = Snapshots.manifestReads.get
+        val (_, calls) = ListCountFs.during(verb(2L))
+        val m = Snapshots.manifestReads.get - m0
+        assert(m == 2L, s"$name read the manifest $m times: $calls")
+        val path = new HPath(tbl).toUri.getPath
+        val probed = Seq("_colmap", "_stats", "_bloom")
+          .filter(f => calls.contains(s"exists $path/$f"))
+        assert(probed.isEmpty, s"$name probed $probed: $calls")
+        assert(Snapshots.readAsOf(spark, tbl,
+          Snapshots.latestVersion(spark, tbl).get)
+          .filter(col("id") === 5L).select("amt").as[Long].head() == 2L)
+    }
+  }
+
   test("readMorAsOf over a two-sync lineage lists _eq once and the " +
     "manifest directory once") {
-    import SnapshotsResolutionSpec.ListCountFs
     val tbl = listCountTable()
     Snapshots.commit(spark,
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").coalesce(1),
@@ -494,44 +530,5 @@ class SnapshotsResolutionSpec extends SparkSuite {
     // the OLDEST entries were evicted and recompute correctly
     assert(read(0) == "v0")
     assert(computes == recomputesBefore + 1)
-  }
-}
-
-object SnapshotsResolutionSpec {
-  /** The checksummed local file system under the `listcount:` scheme,
-    * counting every directory listing, `exists` call and file open made
-    * through it, and recording the paths they named. */
-  class ListCountFs extends LocalFileSystem(new RawLocalFileSystem {
-    override def getUri: URI = URI.create("listcount:///")
-  }) {
-    override def listStatus(p: HPath): Array[FileStatus] = {
-      ListCountFs.listings.incrementAndGet()
-      ListCountFs.touched.add("list " + p.toUri.getPath)
-      super.listStatus(p)
-    }
-
-    override def exists(p: HPath): Boolean = {
-      ListCountFs.touched.add("exists " + p.toUri.getPath)
-      super.exists(p)
-    }
-
-    override def open(p: HPath, bufferSize: Int)
-        : org.apache.hadoop.fs.FSDataInputStream = {
-      ListCountFs.touched.add("open " + p.toUri.getPath)
-      super.open(p, bufferSize)
-    }
-  }
-  object ListCountFs {
-    val listings = new AtomicLong
-    val touched = new java.util.concurrent.ConcurrentLinkedQueue[String]
-
-    /** The "<op> <path>" calls `body` made through the file system. */
-    def during[T](body: => T): (T, Seq[String]) = {
-      touched.clear()
-      val r = body
-      val calls = touched.toArray(Array.empty[String]).toSeq
-      touched.clear()
-      (r, calls)
-    }
   }
 }

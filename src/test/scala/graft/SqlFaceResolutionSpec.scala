@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.functions._
 
-import graft.SnapshotsResolutionSpec.ListCountFs
 import graft.operators.{Catalog, Snapshots}
 
 /** The metadata budget of ONE SQL `SELECT` over a catalog table, as
@@ -84,6 +83,12 @@ class SqlFaceResolutionSpec extends SparkSuite {
     val (c, m, calls) = selectCounted(cat, "plain")
     assert(c == 6L)
     assertFaceBudget(tbl, Set.empty, m, calls)
+    // the head's listing and the generation read each probe _versions
+    // once; the listing takes its presence from the swap recovery
+    val versionsProbes =
+      calls.count(_ == s"exists ${new HPath(tbl).toUri.getPath}/_versions")
+    assert(versionsProbes == 2,
+      s"_versions probed $versionsProbes times: $calls")
   }
 
   test("a SELECT over a DV-governed catalog table lists _dv once and " +
