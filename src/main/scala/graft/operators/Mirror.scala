@@ -57,13 +57,13 @@ object Mirror {
     * silently re-seeding would double rows. */
   def offsetOf(spark: SparkSession, dst: String): Option[Long] =
     Snapshots.latestVersion(spark, dst).map { head =>
-      val meta = Snapshots.manifestMeta(spark, dst)
-        .find(_.getLong(0) == head)
-      require(meta.exists(r => !r.isNullAt(1)),
+      val stamp = Snapshots.manifestMeta(spark, dst)
+        .find(_.version == head).flatMap(_.commitTs)
+      require(stamp.isDefined,
         s"mirror: destination $dst head v$head carries no offset " +
           "stamp (commit_ts) — not a mirror destination; seed a fresh " +
           "table or reseed() explicitly")
-      meta.get.getLong(1)
+      stamp.get
     }
 
   /** One mirror poll over the APPENDS feed. Seeds an empty destination

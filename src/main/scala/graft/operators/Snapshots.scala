@@ -274,40 +274,107 @@ object Snapshots {
       new Path(d, "part-00000.parquet"), cols, rows)
   }
 
+  /** One data file of a generation: its path, its hive partition
+    * fragment (`"event_date=2024-01-03"`; None for a flat commit) and
+    * the record count its footer held at commit time (None for
+    * generations written before row counts). */
+  private[graft] final case class DataFile(
+      path: String,
+      part: Option[String],
+      rows: Option[Long])
+
+  /** One timeline entry: a generation's version, its caller-supplied
+    * logical commit stamp and the version its content built on (see
+    * [[manifest]]); both are constant per generation. */
+  private[graft] final case class Commit(
+      version: Long,
+      commitTs: Option[Long],
+      parent: Option[Long])
+
+  /** One manifest generation, decoded once ([[readGenerations]]): its
+    * timeline entry, its data files and the snapshot's stored read
+    * schema — None for generations written before stored schemas,
+    * whose reads footer-merge. */
+  private[graft] final case class Generation(
+      commit: Commit,
+      files: Seq[DataFile],
+      schemaJson: Option[String]) {
+    def version: Long = commit.version
+
+    def parent: Option[Long] = commit.parent
+
+    def paths: Seq[String] = files.map(_.path)
+
+    /** The decoded stored schema — parsed on first use. */
+    lazy val schema: Option[org.apache.spark.sql.types.StructType] =
+      schemaJson.map(j => org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+  }
+
   /** The manifest generation file's column layout for
-    * [[writeMetaParquet]], and the one order every manifest row is read
-    * back in ([[readMetaParquet]]): version(0), file(1), part(2),
-    * schema_json(3), rows(4), commit_ts(5), parent(6) — the positions
-    * every `Array[Row]` consumer below indexes by. Generations written
-    * by earlier layouts may lack the partition, schema, row-count,
-    * lineage and/or commit-ts columns; those read as null. */
+    * [[writeMetaParquet]], and the order [[readGenerations]] reads it
+    * back in. Generations written by earlier layouts may lack the
+    * partition, schema, row-count, lineage and/or commit-ts columns;
+    * those read as null. */
   private val ManifestCols: Seq[(String, Boolean)] = Seq(
     "version" -> true, "file" -> false, "part" -> false,
     "schema_json" -> false, "rows" -> true, "commit_ts" -> true,
     "parent" -> true)
 
-  private val ManifestColNames: Seq[String] = ManifestCols.map(_._1)
-
   /** The timeline columns of a generation or checkpoint file. */
   private val TimelineCols = Seq("version", "commit_ts", "parent")
 
   /** The rows of manifest-plane files — generations, checkpoints —
-    * in `cols` order, read on the driver and counted: every path as a
-    * file opened, every row kept (after `distinct`, when asked) as a
-    * row collected. */
+    * one array per path, in `cols` order, read on the driver; every
+    * path counts as a file opened. Read only by the two decoders
+    * below, the one code that knows the row layout. */
   private def readManifestFiles(
       spark: SparkSession,
       paths: Seq[String],
-      cols: Seq[String],
-      distinct: Boolean = false): Array[Row] = {
+      cols: Seq[String]): Seq[Array[Row]] = {
     manifestFilesOpened.addAndGet(paths.length.toLong)
     val conf = spark.sparkContext.hadoopConfiguration
-    val read =
-      paths.toArray.flatMap(p => readMetaParquet(conf, new Path(p), cols))
-    val rows = if (distinct) read.distinct else read
-    manifestRowsCollected.addAndGet(rows.length.toLong)
-    rows
+    paths.map(p => readMetaParquet(conf, new Path(p), cols))
   }
+
+  private def longAt(r: Row, i: Int): Option[Long] =
+    if (r.isNullAt(i)) None else Some(r.getLong(i))
+
+  private def stringAt(r: Row, i: Int): Option[String] =
+    if (r.isNullAt(i)) None else Some(r.getString(i))
+
+  /** Generation files decoded, one [[Generation]] per file that has
+    * rows; every row counts as collected. */
+  private def readGenerations(
+      spark: SparkSession,
+      paths: Seq[String]): Seq[Generation] =
+    readManifestFiles(spark, paths, ManifestCols.map(_._1)).flatMap { rows =>
+      manifestRowsCollected.addAndGet(rows.length.toLong)
+      rows.headOption.map(h => Generation(
+        Commit(h.getLong(0), longAt(h, 5), longAt(h, 6)),
+        rows.map(r => DataFile(r.getString(1), stringAt(r, 2), longAt(r, 4)))
+          .toIndexedSeq,
+        rows.collectFirst { case r if !r.isNullAt(3) => r.getString(3) }))
+    }
+
+  /** The timeline entries of checkpoint or generation files — each
+    * generation's per-file fan-out dropped; every entry counts as a row
+    * collected. */
+  private def readCommits(
+      spark: SparkSession,
+      paths: Seq[String]): Seq[Commit] = {
+    val commits = readManifestFiles(spark, paths, TimelineCols)
+      .flatMap(_.distinct)
+      .map(r => Commit(r.getLong(0), longAt(r, 1), longAt(r, 2)))
+    manifestRowsCollected.addAndGet(commits.length.toLong)
+    commits
+  }
+
+  /** [[ManifestCols]]-ordered rows of a generation — the write twin of
+    * [[readGenerations]]. */
+  private def encode(g: Generation): Seq[Seq[Any]] =
+    g.files.map(d => Seq[Any](g.version, d.path, d.part, g.schemaJson,
+      d.rows, g.commit.commitTs, g.parent))
 
   /** Wipe the table root — a fresh snapshot lineage. (Harness queries
     * rebuild their fixture lineage per run; real tables call this
@@ -376,50 +443,53 @@ object Snapshots {
     * which the publish-time reconciliation walks to tell a successor
     * that SAW a commit from a racer that did not.
     * Empty (with the right schema) when the table has no commits yet.
-    * The `_`-prefixed manifest dir hides it from any scan of the TABLE
-    * root (the `_delta_log` convention), so it is read here by its
-    * listed part files — passing the hidden dir itself as a read root
-    * trips Spark's hidden-path filter (warning today, possibly an error
-    * in a future release). */
-  def manifest(spark: SparkSession, tablePath: String): DataFrame = {
-    // Assembled from PER-GENERATION reads, each served by the same
-    // status-keyed memo [[manifestFor]] uses: a repeated full-history
-    // read (meta tables, maintenance verbs) costs two directory
-    // listings plus zero file opens once warm, and history growth
-    // re-reads only the new generations. Materialized EAGERLY
-    // (metadata-scale by design). A whole-manifest swap
-    // ([[swapManifest]]: vacuum, purgeKeys) rewrites generation files
-    // under the SAME names, so one landing between two generation reads
-    // would mix pre- and post-swap rows: the assembly re-lists after
-    // reading and starts over when a generation it read is gone or
-    // carries another status. An append landing meanwhile changes no
-    // read generation, so the answer is still the view at the first
-    // listing. Row order is generation-ascending; consumers
-    // filter/aggregate and never depend on order (a DataFrame promises
-    // none).
+    * A DataFrame view of [[history]], built on the driver: no Spark
+    * job reads it. */
+  def manifest(spark: SparkSession, tablePath: String): DataFrame =
+    manifestFrame(spark, history(spark, tablePath))
+
+  /** `gens` as a driver-local frame of [[ManifestCols]] rows. */
+  private def manifestFrame(
+      spark: SparkSession,
+      gens: Seq[Generation]): DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(ManifestCols.map { case (n, isLong) =>
+      StructField(n, if (isLong) LongType else StringType,
+        nullable = n != "version")
+    })
+    val rows = gens.flatMap(encode).map(r => Row.fromSeq(r.map {
+      case o: Option[_] => o.orNull
+      case v => v
+    }))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** Every generation of the table, version-ascending — the full-history
+    * read of the maintenance verbs and the history tables. The
+    * `_`-prefixed manifest dir hides it from any scan of the TABLE root
+    * (the `_delta_log` convention), so it is assembled from
+    * PER-GENERATION reads, each served by the same status-keyed memo
+    * [[manifestFor]] uses: a repeated full-history read costs two
+    * directory listings plus zero file opens once warm, and history
+    * growth re-reads only the new generations. A whole-manifest swap
+    * ([[swapManifest]]: vacuum, purgeKeys) rewrites generation files
+    * under the SAME names, so one landing between two generation reads
+    * would mix pre- and post-swap rows: the assembly re-lists after
+    * reading and starts over when a generation it read is gone or
+    * carries another status. An append landing meanwhile changes no
+    * read generation, so the answer is still the view at the first
+    * listing. */
+  private[graft] def history(
+      spark: SparkSession,
+      tablePath: String): Seq[Generation] = {
     var gens = generationStatuses(spark, tablePath)
     while (true) {
-      val rows = gens.flatMap(g => manifestFor(spark, tablePath, g._1))
+      val read = gens.flatMap(g => manifestFor(spark, tablePath, g._1))
       val now = generationStatuses(spark, tablePath)
-      if (gens.toSet.subsetOf(now.toSet))
-        return if (gens.isEmpty) emptyManifest(spark)
-        else spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*), emptyManifest(spark).schema)
+      if (gens.toSet.subsetOf(now.toSet)) return read
       gens = now
     }
     throw new IllegalStateException("unreachable")
-  }
-
-  private def emptyManifest(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(Seq(StructField("version", LongType, nullable = false),
-        StructField("file", StringType, nullable = true),
-        StructField("part", StringType, nullable = true),
-        StructField("schema_json", StringType, nullable = true),
-        StructField("rows", LongType, nullable = true),
-        StructField("commit_ts", LongType, nullable = true),
-        StructField("parent", LongType, nullable = true))))
   }
 
   private def isFileGone(e: Throwable): Boolean = {
@@ -479,56 +549,55 @@ object Snapshots {
     }.sortBy(_._1)
   }
 
-  /** The manifest rows of ONE generation, read from that generation's
-    * own file alone — the version-bounded read every per-version verb
-    * plans from: O(files of the version) rows collected, however long
-    * the history (normalized column positions per
-    * [[ManifestCols]]). EMPTY when the generation does not exist —
-    * never committed, retracted by a racing rebase between a listing
-    * and this read, or expired by vacuum — callers turn that into
-    * their own loud error (or a corrective lap). */
+  /** ONE generation, read from its own file alone — the
+    * version-bounded read every per-version verb plans from: O(files of
+    * the version) rows collected, however long the history. None when
+    * the generation does not exist (or lists no file) — never
+    * committed, retracted by a racing rebase between a listing and this
+    * read, or expired by vacuum — callers turn that into their own loud
+    * error (or a corrective lap). */
   private def manifestFor(
       spark: SparkSession,
       tablePath: String,
-      version: Long): Array[Row] = {
+      version: Long): Option[Generation] = {
     manifestReads.incrementAndGet()
     recoverManifestSwap(spark, tablePath)
-    val path = genFilePath(tablePath, version)
+    val path = new Path(genFilePath(tablePath, version))
     val f = fs(spark, tablePath)
-    if (!f.exists(new Path(path)))
-      return Array.empty[Row]
+    if (!f.exists(path)) return None
     // memoized per (path, FileStatus): a generation file is immutable
     // once published (vacuum/purge REPLACE it via swapManifest — new
     // status, fresh read), so repeated per-version resolution (every
     // SQL statement's loadTable + governed-read substitution) opens the
     // file once, not per statement
-    memoizedMeta(f, new Path(path), "gen") {
-      try {
-        readManifestFiles(spark, Seq(path), ManifestColNames)
-      } catch {
+    memoizedMeta(f, path, "gen") {
+      try readGenerations(spark, Seq(path.toString)).headOption
+      catch {
         // the generation vanished between the exists check and the read
         // (a racer's retraction) — gone is gone, same answer as above;
         // the stale status key can never be consulted again
-        case e: Throwable if isFileGone(e) => Array.empty[Row]
+        case e: Throwable if isFileGone(e) => None
       }
     }
   }
 
-  /** The observed head's manifest rows for a verb that derives its
-    * content from them. EMPTY only when a racing publisher retracted
-    * the head between its resolution and this read — a retry-able
-    * conflict ([[retryOnConflict]]), not a usage error. */
+  /** The files of a generation read — none when it found none. */
+  private def filesOf(gen: Option[Generation]): Seq[DataFile] =
+    gen.fold(Seq.empty[DataFile])(_.files)
+
+  /** The observed head's generation for a verb that derives its content
+    * from it. Missing only when a racing publisher retracted the head
+    * between its resolution and this read — a retry-able conflict
+    * ([[retryOnConflict]]), not a usage error. */
   private def observedGeneration(
       spark: SparkSession,
       tablePath: String,
       observed: Long,
-      verb: String): Array[Row] = {
-    val gen = manifestFor(spark, tablePath, observed)
-    if (gen.isEmpty) throw new ConcurrentCommitException(
-      s"$verb: version $observed of $tablePath vanished between the " +
-        "head resolution and its read — a racing retraction; retry")
-    gen
-  }
+      verb: String): Generation =
+    manifestFor(spark, tablePath, observed).getOrElse(
+      throw new ConcurrentCommitException(
+        s"$verb: version $observed of $tablePath vanished between the " +
+          "head resolution and its read — a racing retraction; retry"))
 
   // ------------------------------------------------------------------
   // MANIFEST CHECKPOINT — the Delta `_last_checkpoint` shape: every
@@ -660,15 +729,13 @@ object Snapshots {
       tablePath: String): Option[Long] = {
     val meta = manifestMeta(spark, tablePath)
     if (meta.isEmpty) return None
-    val cv = meta.map(_.getLong(0)).max
+    val cv = meta.map(_.version).max
     val f = fs(spark, tablePath)
     val tmp = new Path(s"$tablePath/${VersionsDir}_ckpt_tmp_v$cv")
     f.delete(tmp, true) // overwrite semantics: a crashed stage re-stages
     writeMetaParquet(spark.sparkContext.hadoopConfiguration, tmp,
-      Seq("version" -> true, "commit_ts" -> true, "parent" -> true),
-      meta.map(r => Seq[Any](r.getLong(0),
-        if (r.isNullAt(1)) null else r.getLong(1),
-        if (r.isNullAt(2)) null else r.getLong(2))).toSeq)
+      TimelineCols.map(_ -> true),
+      meta.map(c => Seq[Any](c.version, c.commitTs, c.parent)))
     val dest = new Path(ckptFilePath(tablePath, cv))
     f.delete(dest, false) // re-checkpointing the same head is idempotent
     require(f.rename(tmp, dest),
@@ -682,7 +749,7 @@ object Snapshots {
     Some(cv)
   }
 
-  /** One row PER GENERATION — (version, commit_ts, parent). With a
+  /** One [[Commit]] PER GENERATION. With a
     * checkpoint present this opens ONE checkpoint file plus the gen
     * files NEWER than it (≤ the checkpoint interval, however long the
     * history) — checkpoint rows are filtered to the generations the
@@ -695,7 +762,7 @@ object Snapshots {
     * replay check). */
   private[graft] def manifestMeta(
       spark: SparkSession,
-      tablePath: String): Array[Row] = {
+      tablePath: String): Seq[Commit] = {
     manifestReads.incrementAndGet()
     recoverManifestSwap(spark, tablePath)
     val dir = s"$tablePath/$VersionsDir"
@@ -708,7 +775,7 @@ object Snapshots {
         if (fs(spark, tablePath).exists(new Path(dir)))
           genFilesOf(listDataFiles(spark, dir))
         else Seq.empty
-      if (parts.isEmpty) return Array.empty[Row]
+      if (parts.isEmpty) return Seq.empty
       val byVersion: Map[Long, String] = parts.map { p =>
         new Path(p).getName match {
           case GenFileName(v) => v.toLong -> p
@@ -719,12 +786,12 @@ object Snapshots {
         }
       }.toMap
       try {
-        val ckpt: Option[(Long, Array[Row])] =
+        val ckpt: Option[(Long, Seq[Commit])] =
           lastCheckpointVersion(spark, tablePath).flatMap { cv =>
             val cp = ckptFilePath(tablePath, cv)
             try {
               if (!fs(spark, tablePath).exists(new Path(cp))) None
-              else Some((cv, readManifestFiles(spark, Seq(cp), TimelineCols)))
+              else Some((cv, readCommits(spark, Seq(cp))))
             } catch {
               // a vanished, torn or unreadable checkpoint falls back
               // to the full per-file scan — never a read failure
@@ -732,16 +799,12 @@ object Snapshots {
             }
           }
         val (base, newerPaths) = ckpt match {
-          case Some((cv, rows)) =>
-            (rows.filter(r => byVersion.contains(r.getLong(0))),
+          case Some((cv, commits)) =>
+            (commits.filter(c => byVersion.contains(c.version)),
               byVersion.view.filterKeys(_ > cv).values.toSeq.sorted)
-          case None => (Array.empty[Row], parts)
+          case None => (Seq.empty, parts)
         }
-        val newer =
-          if (newerPaths.isEmpty) Array.empty[Row]
-          else readManifestFiles(spark, newerPaths, TimelineCols,
-            distinct = true)
-        return base ++ newer
+        return base ++ readCommits(spark, newerPaths)
       } catch {
         case e: Throwable if isFileGone(e) => lastErr = e
       }
@@ -756,44 +819,13 @@ object Snapshots {
   private def manifestChain(
       spark: SparkSession,
       tablePath: String): Map[Long, Option[Long]] =
-    manifestMeta(spark, tablePath).map(r => r.getLong(0) ->
-      (if (r.isNullAt(2)) None else Some(r.getLong(2)))).toMap
+    manifestMeta(spark, tablePath).map(c => c.version -> c.parent).toMap
 
   /** Latest committed version, or None for an empty table — resolved
     * from the manifest directory LISTING alone (the generation numbers
     * live in the filenames), zero rows read. */
   def latestVersion(spark: SparkSession, tablePath: String): Option[Long] =
     listGenerations(spark, tablePath).lastOption
-
-  private def manifestFiles(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long): Seq[String] =
-    manifestFor(spark, tablePath, version).map(_.getString(1)).toSeq
-
-  /** The recorded lineage parent of an already-read generation
-    * (constant per generation by construction). */
-  private def parentOf(gen: Array[Row]): Option[Long] =
-    gen.headOption.flatMap(r =>
-      if (r.isNullAt(6)) None else Some(r.getLong(6)))
-
-  /** The stored schema JSON of an already-read generation, if any. */
-  private def schemaJsonOf(gen: Array[Row]): Option[String] =
-    gen.find(!_.isNullAt(3)).map(_.getString(3))
-
-  /** [[schemaJsonOf]], decoded. */
-  private def storedSchemaOf(
-      gen: Array[Row]): Option[org.apache.spark.sql.types.StructType] =
-    schemaJsonOf(gen).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-
-  /** (file, part, rows) triples of an already-read generation. */
-  private def fileRowsOf(
-      gen: Array[Row]): Seq[(String, String, Option[Long])] =
-    gen.map(r => (r.getString(1),
-      if (r.isNullAt(2)) null else r.getString(2),
-      if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSeq
 
   /** Generation `version`'s recorded lineage parent, that parent's
     * files, and the files `version` ADDED relative to it — the
@@ -816,12 +848,12 @@ object Snapshots {
       tablePath: String,
       version: Long): Lineage = {
     val gen = manifestFor(spark, tablePath, version)
-    val parent = parentOf(gen)
+    val parent = gen.flatMap(_.parent)
     val parentFiles = parent
-      .map(p => manifestFiles(spark, tablePath, p).toSet)
-      .getOrElse(Set.empty[String])
+      .flatMap(p => manifestFor(spark, tablePath, p))
+      .fold(Set.empty[String])(_.paths.toSet)
     Lineage(parent, parentFiles,
-      gen.map(_.getString(1)).filterNot(parentFiles).toSeq)
+      gen.fold(Seq.empty[String])(_.paths.filterNot(parentFiles)))
   }
 
   /** Atomically claim the next free version number at or above `from`:
@@ -886,27 +918,31 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       version: Long,
-      fresh: Seq[(String, String, Option[Long])],
+      fresh: Seq[DataFile],
       parent: Option[Long],
       freshSchema: org.apache.spark.sql.types.StructType,
       commitTs: Option[Long] = None): Long = {
-    // ONE single-generation read answers the parent's file rows AND
-    // its stored schema
-    val parentGen =
-      parent.map(v => manifestFor(spark, tablePath, v))
-        .getOrElse(Array.empty[Row])
-    val parentRows = fileRowsOf(parentGen)
-    // the generation's read schema: an append's is the parent schema
-    // merged with the fresh batch's (schema evolution — new columns
-    // join the table, parent rows null-fill), a replace's is the fresh
-    // batch's alone. Persisted per generation so readers never
-    // footer-merge.
-    val schema = storedSchemaOf(parentGen)
+    // ONE single-generation read answers the parent's files AND its
+    // stored schema
+    val parentGen = parent.flatMap(v => manifestFor(spark, tablePath, v))
+    publishRows(spark, tablePath, Generation(
+      Commit(version, commitTs, parent),
+      filesOf(parentGen) ++ fresh,
+      Some(evolvedSchema(parentGen, freshSchema).json)))
+  }
+
+  /** A generation's read schema: an append's is its parent's stored
+    * schema merged with the fresh batch's (schema evolution — new
+    * columns join the table, parent rows null-fill), a replace's — or
+    * one over a parent without a stored schema — the fresh batch's
+    * alone. Persisted per generation so readers never footer-merge. */
+  private def evolvedSchema(
+      parent: Option[Generation],
+      freshSchema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    parent.flatMap(_.schema)
       .map(ps => mergeSchemas(ps, nullableTop(freshSchema)))
       .getOrElse(nullableTop(freshSchema))
-    publishRows(spark, tablePath, version, parentRows ++ fresh,
-      schema.json, commitTs, parent)
-  }
 
   /** The sanctioned retry loop of the optimistic-concurrency contract:
     * run `body` — a commit attempt that RE-READS the head and
@@ -1034,11 +1070,11 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       version: Long,
-      fresh: Seq[(String, String, Option[Long])],
+      fresh: Seq[DataFile],
       observed: Option[Long],
       freshSchema: org.apache.spark.sql.types.StructType,
       ts: Option[Long]): Long = {
-    val freshFiles = fresh.map(_._1).toSet
+    val freshFiles = fresh.map(_.path).toSet
     val prepGov = prepGovernanceAt(spark, tablePath, observed)
     var claimed = version
     var published = -1L
@@ -1079,8 +1115,8 @@ object Snapshots {
           if (!shadowed && !parentShadowed && head.exists { h =>
             h == published ||
               inLineage(manifestChain(spark, tablePath), published, h) ||
-              freshFiles.subsetOf(
-                manifestFor(spark, tablePath, h).map(_.getString(1)).toSet)
+              freshFiles.subsetOf(manifestFor(spark, tablePath, h)
+                .fold(Set.empty[String])(_.paths.toSet))
           }) {
             maybeCheckpointManifest(spark, tablePath, published)
             return published
@@ -1108,13 +1144,12 @@ object Snapshots {
         // it (the superseded claim burns as a benign gap)
         if (head.exists(_ >= claimed))
           claimed = claimVersion(spark, tablePath, head.get + 1L)
-        val headRows = head.map(h => manifestFor(spark, tablePath, h))
-          .getOrElse(Array.empty[Row])
-        val headParent = parentOf(headRows)
+        val headGen = head.flatMap(h => manifestFor(spark, tablePath, h))
+        val headParent = headGen.flatMap(_.parent)
         val interior: Set[Long] = headParent.map(p =>
           versions.filter(v => v > p && v < head.get).toSet)
           .getOrElse(Set.empty)
-        if (head.isDefined && headRows.isEmpty) {
+        if (head.isDefined && headGen.isEmpty) {
           // the listed head was retracted between the listing and its
           // read — rebasing on it would publish only the fresh files,
           // silently truncating the table; take a fresh lap instead
@@ -1148,17 +1183,15 @@ object Snapshots {
           parentOfParent = headParent
           parentInterior = interior
           shadowWait = None
-          val schema = storedSchemaOf(headRows)
-            .map(ps => mergeSchemas(ps, nullableTop(freshSchema)))
-            .getOrElse(nullableTop(freshSchema))
           // a relap after someone built on our retracted generation
           // could find our fresh paths already in the head — filter
           // them so a manifest row never duplicates (belt-and-braces;
           // the rebase guard above prevents the cause)
-          published = publishRows(spark, tablePath, claimed,
-            fileRowsOf(headRows).filterNot(r =>
-              freshFiles.contains(r._1)) ++ fresh,
-            schema.json, ts, head)
+          published = publishRows(spark, tablePath, Generation(
+            Commit(claimed, ts, head),
+            filesOf(headGen)
+              .filterNot(d => freshFiles.contains(d.path)) ++ fresh,
+            Some(evolvedSchema(headGen, freshSchema).json)))
         }
       }
     }
@@ -1181,7 +1214,7 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       version: Long,
-      fileRows: Seq[(String, String, Option[Long])],
+      files: Seq[DataFile],
       schemaJson: String,
       ts: Option[Long],
       derivedFrom: Long,
@@ -1202,7 +1235,7 @@ object Snapshots {
     // commitOntoParent's deliberate branch-over (permanent, its rows
     // unpinned-dead by contract) — accepted, and only interiors that
     // appear AFTER it refuse.
-    val dfParent = parentOf(manifestFor(spark, tablePath, derivedFrom))
+    val dfParent = manifestFor(spark, tablePath, derivedFrom).flatMap(_.parent)
     def interiorOf(versions: Seq[Long]): Set[Long] =
       dfParent.map(p =>
         versions.filter(v => v > p && v < derivedFrom).toSet)
@@ -1226,8 +1259,8 @@ object Snapshots {
       }
       preInterior = interiorOf(vs)
     }
-    publishRows(spark, tablePath, version, fileRows, schemaJson, ts,
-      Some(derivedFrom))
+    publishRows(spark, tablePath, Generation(
+      Commit(version, ts, Some(derivedFrom)), files, Option(schemaJson)))
     // ONE post-publish LISTING answers both window checks on the
     // uncontested path (version numbers alone); the lineage chain — a
     // per-generation projection, O(generations) rows — is read only
@@ -1273,7 +1306,7 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       version: Long): Option[org.apache.spark.sql.types.StructType] =
-    storedSchemaOf(manifestFor(spark, tablePath, version))
+    manifestFor(spark, tablePath, version).flatMap(_.schema)
 
   /** Top-level nullable copy (parquet reads surface every column as
     * nullable; storing the schema that way keeps the manifest's word
@@ -1326,15 +1359,6 @@ object Snapshots {
       merged ++ fresh.fields.filterNot(f => known.contains(f.name)))
   }
 
-  /** (file, part, rows) rows of one manifest generation — `rows` is
-    * None only for generations written by pre-row-count layouts. One
-    * single-generation read. */
-  private def manifestRows(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long): Seq[(String, String, Option[Long])] =
-    fileRowsOf(manifestFor(spark, tablePath, version))
-
   /** Per-file record counts read from the parquet FOOTERS of freshly
     * committed files — O(new files) metadata reads at commit time,
     * never a data scan (the Iceberg writer-stats retrofit: a writer
@@ -1355,7 +1379,7 @@ object Snapshots {
 
   private def footerCounts(
       spark: SparkSession,
-      files: Seq[(String, String)]): Seq[(String, String, Option[Long])] = {
+      files: Seq[DataFile]): Seq[DataFile] = {
     def readOne(conf: org.apache.hadoop.conf.Configuration)(
         f: String): Long = {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
@@ -1366,26 +1390,23 @@ object Snapshots {
     }
     if (files.size <= FooterFanoutThreshold) {
       val conf = spark.sparkContext.hadoopConfiguration
-      files.map { case (f, p) => (f, p, Some(readOne(conf)(f))) }
+      files.map(d => d.copy(rows = Some(readOne(conf)(d.path))))
     } else {
       val counts = spark.sparkContext
-        .parallelize(files.map(_._1), math.min(files.size, 64))
+        .parallelize(files.map(_.path), math.min(files.size, 64))
         .map { f =>
           f -> readOne(new org.apache.hadoop.conf.Configuration())(f)
         }
         .collect().toMap
-      files.map { case (f, p) => (f, p, Some(counts(f))) }
+      files.map(d => d.copy(rows = Some(counts(d.path))))
     }
   }
 
   private def publishRows(
       spark: SparkSession,
       tablePath: String,
-      version: Long,
-      fileRows: Seq[(String, String, Option[Long])],
-      schemaJson: String,
-      commitTs: Option[Long],
-      parent: Option[Long]): Long = {
+      gen: Generation): Long = {
+    val version = gen.version
     // one generation = one manifest file, staged at a version-unique
     // temp name and RENAMED in — never `mode("append")` into the shared
     // manifest dir, whose job-commit staging (`_temporary/0`) is a
@@ -1398,8 +1419,7 @@ object Snapshots {
     val f = fs(spark, tablePath)
     val tmp = new Path(s"$tablePath/${VersionsDir}_tmp_v$version")
     writeMetaParquet(spark.sparkContext.hadoopConfiguration, tmp,
-      ManifestCols, fileRows.map { case (file, p, n) =>
-        Seq[Any](version, file, p, schemaJson, n, commitTs, parent) })
+      ManifestCols, encode(gen))
     val live = new Path(s"$tablePath/$VersionsDir")
     if (!f.exists(live)) f.mkdirs(live)
     require(f.rename(tmp,
@@ -1549,36 +1569,36 @@ object Snapshots {
     }
   }
 
-  /** (file, fragment) rows of a freshly written partitioned batch. */
+  /** The files of a freshly written partitioned batch, uncounted. */
   private def listPartitionedFiles(
       spark: SparkSession,
-      dataPath: String): Seq[(String, String)] =
+      dataPath: String): Seq[DataFile] =
     fs(spark, dataPath).listStatus(new Path(dataPath))
       .filter(s => s.isDirectory && s.getPath.getName.contains("="))
       .toSeq
       .flatMap { d =>
         listDataFiles(spark, d.getPath.toString)
-          .map((_, d.getPath.getName))
+          .map(DataFile(_, Some(d.getPath.getName), None))
       }
-      .sortBy(_._1)
+      .sortBy(_.path)
 
-  /** Read a set of partitioned manifest rows, partition column rebuilt
+  /** Read a set of partitioned data files, partition column rebuilt
     * via per-version basePath groups. With a manifest-carried `schema`
     * the read plans entirely from metadata — files missing an evolved
     * column null-fill it, no footer is opened for schema; without one
     * (legacy generations) each group footer-merges. */
   private def readPartedFiles(
       spark: SparkSession,
-      rows: Seq[(String, String)],
+      files: Seq[DataFile],
       schema: Option[org.apache.spark.sql.types.StructType],
       withMeta: Boolean = false): DataFrame =
-    rows
-      .groupBy { case (f, _) => new Path(f).getParent.getParent.toString }
+    files
+      .groupBy(d => new Path(d.path).getParent.getParent.toString)
       .toSeq.sortBy(_._1)
       .map { case (root, fs) =>
         val rd = spark.read.option("basePath", root)
         val scan = schema.fold(rd.option("mergeSchema", "true"))(rd.schema)
-          .parquet(fs.map(_._1).toIndexedSeq: _*)
+          .parquet(fs.map(_.path).toIndexedSeq: _*)
         if (withMeta) attachRowMeta(scan) else scan
       }
       .reduceLeft((a, b) => a.unionByName(b, allowMissingColumns = true))
@@ -1635,17 +1655,17 @@ object Snapshots {
     // fresh files
     val gens = resolveSidecars(spark, tablePath, latest,
       refuseEqAs = Some("mergePartitioned"))
-    val parentRows = manifestRows(spark, tablePath, latest)
-    require(parentRows.forall(_._2 != null),
+    val parent = manifestFor(spark, tablePath, latest)
+    val parentFiles = filesOf(parent)
+    require(parentFiles.forall(_.part.isDefined),
       s"mergePartitioned needs a partitioned table (commitPartitioned); " +
         s"version $latest of $tablePath carries flat files")
     val touched = updates
       .select(col(partCol).cast("string")).distinct()
       .collect().map(r => partFragment(partCol, r.getString(0))).toSet
     val (touchedFiles, untouched) =
-      parentRows.partition(r => touched.contains(r._2))
+      parentFiles.partition(_.part.exists(touched.contains))
     val version = claimVersion(spark, tablePath, latest + 1L)
-    val parentSchema = storedSchema(spark, tablePath, latest)
     // every update row — upsert AND delete — evicts its key from the
     // touched survivors; only upserts re-insert
     val inserts = opCol.fold(updates)(op =>
@@ -1653,18 +1673,13 @@ object Snapshots {
     val survivors =
       if (touchedFiles.isEmpty) inserts.limit(0)
       else
-        readWithDv(spark,
-          touchedFiles.map { case (f, p, _) => (f, p) },
-          parentSchema, gens)
+        readWithDv(spark, touchedFiles, parent.flatMap(_.schema), gens)
           .join(updates.select(keyCols.map(col): _*).distinct(),
             keyCols, "left_anti")
     val w = writeBatch(spark, tablePath, version, Some(gens),
       survivors.unionByName(inserts), Some(partCol))
-    val schema = parentSchema
-      .map(ps => mergeSchemas(ps, nullableTop(w.schema)))
-      .getOrElse(nullableTop(w.schema))
     publishDerived(spark, tablePath, version, untouched ++ w.fresh,
-      schema.json, None, latest, "mergePartitioned")
+      evolvedSchema(parent, w.schema).json, None, latest, "mergePartitioned")
   }
 
   /** DYNAMIC PARTITION OVERWRITE into a partitioned snapshot table —
@@ -1692,24 +1707,22 @@ object Snapshots {
     val latest = latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"replacePartitions: $tablePath has no committed versions"))
-    val parentRows = manifestRows(spark, tablePath, latest)
-    require(parentRows.forall(_._2 != null),
+    val parent = manifestFor(spark, tablePath, latest)
+    val parentFiles = filesOf(parent)
+    require(parentFiles.forall(_.part.isDefined),
       s"replacePartitions needs a partitioned table (commitPartitioned); " +
         s"version $latest of $tablePath carries flat files")
     val touched = df
       .select(col(partCol).cast("string")).distinct()
       .collect().map(r => partFragment(partCol, r.getString(0))).toSet
-    val untouched = parentRows.filterNot(r => touched.contains(r._2))
+    val untouched = parentFiles.filterNot(_.part.exists(touched.contains))
     val version = claimVersion(spark, tablePath, latest + 1L)
     val w = writeBatch(spark, tablePath, version,
       Some(sidecarPass(spark, tablePath, latest, GovFamilies)), df,
       Some(partCol))
-    val parentSchema = storedSchema(spark, tablePath, latest)
-    val schema = parentSchema
-      .map(ps => mergeSchemas(ps, nullableTop(w.schema)))
-      .getOrElse(nullableTop(w.schema))
     publishDerived(spark, tablePath, version, untouched ++ w.fresh,
-      schema.json, None, latest, "replacePartitions")
+      evolvedSchema(parent, w.schema).json, None, latest,
+      "replacePartitions")
   }
 
   /** Reject unknown verbs in an op column before any data moves — a
@@ -1771,8 +1784,8 @@ object Snapshots {
       version: Long): DataFrame =
     readFace(spark, resolveFace(spark, tablePath, version))
 
-  /** One resolved snapshot face: its (file, fragment) rows and stored
-    * schema from ONE manifest read, its sidecars from ONE
+  /** One resolved snapshot face: its data files and stored schema
+    * from ONE manifest read, its sidecars from ONE
     * [[sidecarPass]]. The SQL catalog derives a table load's scan
     * guard, runtime-filter keys and governed read from one face;
     * resolving refuses nothing, reading does ([[readFace]],
@@ -1780,7 +1793,7 @@ object Snapshots {
   private[graft] final case class Face(
       tablePath: String,
       version: Long,
-      rows: Seq[(String, String)],
+      files: Seq[DataFile],
       stored: Option[org.apache.spark.sql.types.StructType],
       gens: SidecarGens) {
 
@@ -1788,7 +1801,7 @@ object Snapshots {
     def dvGoverned(spark: SparkSession): Boolean =
       gens.dv.exists { case (_, dir) =>
         val dirty = dvRecordedFiles(spark, dir)
-        rows.exists(r => dirty.contains(normPath(r._1)))
+        files.exists(d => dirty.contains(normPath(d.path)))
       }
 
     /** A rename/drop column mapping governs the face. */
@@ -1808,7 +1821,7 @@ object Snapshots {
 
     /** `fam`'s dir that describes the face, if one does. */
     def describing(spark: SparkSession, fam: IndexFamily): Option[String] =
-      gens.describing(spark, fam, rows.map(_._1))
+      gens.describing(spark, fam, files.map(_.path))
   }
 
   /** Resolve `version`'s [[Face]], listing `families` beside DV and
@@ -1818,18 +1831,18 @@ object Snapshots {
       tablePath: String,
       version: Long,
       families: Seq[SidecarFamily] = GovFamilies): Face = {
-    val (rows, stored) = generationOf(spark, tablePath, version)
-    Face(tablePath, version, rows, stored,
+    val gen = generationOf(spark, tablePath, version)
+    Face(tablePath, version, gen.files, gen.schema,
       sidecarPass(spark, tablePath, version, families))
   }
 
   /** Plan a face's read — deletion vectors and the column mapping
     * applied. A tombstone-governed or folded-away face refuses. */
   private[graft] def readFace(spark: SparkSession, face: Face): DataFrame =
-    readWithDv(spark, face.rows, face.stored,
+    readWithDv(spark, face.files, face.stored,
       face.gens.servable(face.tablePath, Some("read")))
 
-  /** Plan a read over (file, fragment) manifest rows: flat files read
+  /** Plan a read over a generation's data files: flat files read
     * directly, partitioned ones via [[readPartedFiles]]' basePath
     * groups. With a manifest-carried `stored` schema the plan is built
     * from metadata alone — an append that evolved the schema (columns
@@ -1841,15 +1854,15 @@ object Snapshots {
     * reads as a null-filled data column by name. */
   private def readFileRows(
       spark: SparkSession,
-      rows: Seq[(String, String)],
+      files: Seq[DataFile],
       stored: Option[org.apache.spark.sql.types.StructType],
       withMeta: Boolean = false): DataFrame = {
-    val (parted, flat) = rows.partition(_._2 != null)
+    val (parted, flat) = files.partition(_.part.isDefined)
     val reads =
       (if (flat.nonEmpty) {
         val rd = spark.read
         val scan = stored.fold(rd.option("mergeSchema", "true"))(rd.schema)
-          .parquet(flat.map(_._1).toIndexedSeq: _*)
+          .parquet(flat.map(_.path).toIndexedSeq: _*)
         Seq(if (withMeta) attachRowMeta(scan) else scan)
       } else Seq.empty) ++
         (if (parted.nonEmpty)
@@ -1874,25 +1887,26 @@ object Snapshots {
       version: Long,
       partCol: String,
       value: Any): DataFrame = {
-    val (all, stored) = generationOf(spark, tablePath, version)
+    val gen = generationOf(spark, tablePath, version)
+    val stored = gen.schema
     // under PARTITION EVOLUTION a generation mixes layouts: files not
     // keyed on partCol (another key, or flat) may still CONTAIN the
     // requested rows, and a fragment-only answer would silently drop
     // them — refuse toward the evolution-aware verb
-    require(all.forall(r => r._2 != null && r._2.startsWith(s"$partCol=")),
+    require(gen.files.forall(_.part.exists(_.startsWith(s"$partCol="))),
       s"scanPartitionAsOf: version $version of $tablePath carries " +
         s"files not partitioned on '$partCol' (mixed layout) — their " +
         "rows are invisible to fragment pruning; use " +
         "scanPartitionEvolved, which scans them with a data filter")
     val frag = partFragment(partCol, String.valueOf(value))
-    val hit = all.filter(_._2 == frag)
+    val hit = gen.files.filter(_.part.contains(frag))
     if (hit.isEmpty) {
       // the stored schema answers "what would this scan's columns be"
       // without opening a single data file
       val schema = stored.getOrElse(readAsOf(spark, tablePath, version).schema)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     } else {
-      readWithDv(spark, hit.toSeq, stored,
+      readWithDv(spark, hit, stored,
         resolveSidecars(spark, tablePath, version))
     }
   }
@@ -1918,11 +1932,12 @@ object Snapshots {
       version: Long,
       partCol: String,
       value: Any): DataFrame = {
-    val (all, stored) = generationOf(spark, tablePath, version)
+    val gen = generationOf(spark, tablePath, version)
+    val stored = gen.schema
     val frag = partFragment(partCol, String.valueOf(value))
-    val hit = all.filter(_._2 == frag)
-    val fallback = all.filter(r =>
-      r._2 == null || !r._2.startsWith(s"$partCol="))
+    val hit = gen.files.filter(_.part.contains(frag))
+    val fallback =
+      gen.files.filterNot(_.part.exists(_.startsWith(s"$partCol=")))
     val gens = resolveSidecars(spark, tablePath, version)
     // each leg plans its own file-level DV split (clean files join
     // nothing); the exact-value filter commutes with the anti-join
@@ -1965,16 +1980,14 @@ object Snapshots {
           "erased by the swap; re-read and retry")
   }
 
-  /** Replace the ENTIRE live manifest with `rows` via the crash-safe
+  /** Replace the ENTIRE live manifest with `gens` via the crash-safe
     * staged swap ([[recoverManifestSwap]]'s contract): staged write →
     * live moved aside → staged renamed in → aside deleted, so a
     * COMPLETE manifest exists on disk at every instant. */
   private def swapManifest(
       spark: SparkSession,
       tablePath: String,
-      rows: Seq[(Long, String, String, String, Option[Long], Option[Long],
-        Option[Long])])
-      : Unit = {
+      gens: Seq[Generation]): Unit = {
     val f = fs(spark, tablePath)
     val live = new Path(s"$tablePath/$VersionsDir")
     val staged = new Path(s"$tablePath/${VersionsDir}_staged")
@@ -1996,19 +2009,14 @@ object Snapshots {
     // column) and each part renames to its canonical name. Either way
     // the staged dir is complete and correctly named BEFORE the live
     // swap ([[recoverManifestSwap]]'s contract).
-    val byGen = rows.groupBy(_._1)
-    if (byGen.size <= SwapManifestFanoutThreshold) {
+    if (gens.size <= SwapManifestFanoutThreshold) {
       f.mkdirs(staged)
       val conf = spark.sparkContext.hadoopConfiguration
-      byGen.toSeq.sortBy(_._1).foreach { case (v, genRows) =>
-        writeMetaParquet(conf, new Path(s"$staged/gen-v$v.parquet"),
-          ManifestCols, genRows.map { case (ver, file, p, sj, n, ts, par) =>
-            Seq[Any](ver, file, p, sj, n, ts, par) })
-      }
+      gens.foreach(g => writeMetaParquet(conf,
+        new Path(s"$staged/gen-v${g.version}.parquet"), ManifestCols,
+        encode(g)))
     } else {
-      spark.createDataFrame(rows)
-        .toDF("version", "file", "part", "schema_json", "rows", "commit_ts",
-          "parent")
+      manifestFrame(spark, gens)
         .withColumn("gen", col("version"))
         .repartition(col("gen"))
         .write.partitionBy("gen").parquet(raw.toString)
@@ -2031,7 +2039,7 @@ object Snapshots {
     // readers to the timing fallback (a crash mid-swap loses them,
     // which degrades to that same safe fallback, never to a wrong
     // classification)
-    val kept = rows.map(_._1).toSet
+    val kept = gens.map(_.version).toSet
     f.listStatus(live).map(_.getPath.getName)
       .filter(_.startsWith("_branchover-v"))
       .flatMap(n => n.stripPrefix("_branchover-v").toLongOption)
@@ -2067,14 +2075,11 @@ object Snapshots {
     latestVersion(spark, tablePath).foreach(h =>
       Eq.requireUngoverned(Eq.listing(spark, tablePath), tablePath, h,
         "vacuum"))
-    val m = manifest(spark, tablePath)
-    val keptRows = m.filter(col("version") >= keepFrom)
-      .select(col("version"), col("file"), col("part"), col("schema_json"),
-        col("rows"), col("commit_ts"), col("parent"))
-      .collect()
-    require(keptRows.nonEmpty,
+    val all = history(spark, tablePath)
+    val (keptGens, dropped) = all.partition(_.version >= keepFrom)
+    require(keptGens.nonEmpty,
       s"vacuum(keepFrom=$keepFrom) would retain no versions of $tablePath")
-    val kept = keptRows.map(_.getString(1)).toSet
+    val kept = keptGens.flatMap(_.paths).toSet
     // a TAG is a retention pin (the Iceberg contract): expiring a
     // tagged version would turn its name into a dangling pointer —
     // refuse loudly; drop the tag or raise keepFrom
@@ -2083,29 +2088,15 @@ object Snapshots {
       s"vacuum(keepFrom=$keepFrom) would expire tagged version(s) " +
         pinnedBelow.map { case (n, v) => s"'$n'→$v" }.mkString(", ") +
         s" of $tablePath — removeTag first, or keep from lower")
-    val all = m.select(col("file")).distinct().collect()
-      .map(_.getString(0))
-    val doomed = all.filterNot(kept)
-    // resolved BEFORE the manifest swap below — `m` reads the live
-    // manifest lazily, and post-swap the dropped generations are gone
-    val droppedVersions =
-      m.select(col("version")).distinct().collect().map(_.getLong(0))
-        .filter(_ < keepFrom)
+    val doomed = all.flatMap(_.paths).distinct.filterNot(kept)
 
     val f = fs(spark, tablePath)
-    requireHeadUnmoved(spark, tablePath,
-      Some(m.select(col("version")).collect().map(_.getLong(0)).max),
+    requireHeadUnmoved(spark, tablePath, Some(all.map(_.version).max),
       "vacuum")
-    swapManifest(spark, tablePath,
-      keptRows.toSeq.map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) null else r.getString(2),
-        if (r.isNullAt(3)) null else r.getString(3),
-        if (r.isNullAt(4)) None else Some(r.getLong(4)),
-        if (r.isNullAt(5)) None else Some(r.getLong(5)),
-        // a parent expired by this vacuum keeps its number: lineage
-        // below keepFrom is historical fact, and inLineage treats the
-        // resulting chain break as a conflict, which is the safe side
-        if (r.isNullAt(6)) None else Some(r.getLong(6)))))
+    // a parent expired by this vacuum keeps its number: lineage below
+    // keepFrom is historical fact, and inLineage treats the resulting
+    // chain break as a conflict, which is the safe side
+    swapManifest(spark, tablePath, keptGens)
 
     // EXTERNAL files (a clone's pointers into its source) only drop
     // from the manifest — the source table still owns and references
@@ -2137,7 +2128,7 @@ object Snapshots {
     // stats dirs and commit markers go with their data (retained
     // versions keep theirs; claims only ever move upward, so dropping
     // an old marker can never free a number for re-minting)
-    droppedVersions.foreach { v =>
+    dropped.map(_.version).foreach { v =>
       sidecarFamilies.map(_.dirAt(tablePath, v))
         .foreach { d =>
           val sd = new Path(d)
@@ -2163,8 +2154,7 @@ object Snapshots {
       Set.empty
     else {
       val parentRoot = p.getParent.getParent.toString
-      manifest(spark, parentRoot).select(col("file")).distinct()
-        .collect().map(r => normPath(r.getString(0))).toSet
+      history(spark, parentRoot).flatMap(_.paths).map(normPath).toSet
     }
   }
 
@@ -2181,8 +2171,7 @@ object Snapshots {
       tablePath: String): Set[String] =
     branches(spark, tablePath).flatMap { case (name, _, _) =>
       val root = branchPath(tablePath, name)
-      manifest(spark, root).select(col("file")).distinct()
-        .collect().map(r => normPath(r.getString(0))) ++
+      history(spark, root).flatMap(_.paths).map(normPath) ++
         liveBranchRefs(spark, root)
     }.toSet
 
@@ -2507,8 +2496,8 @@ object Snapshots {
     /** One sync's tombstone count, off the keys files' footers. */
     def keyCount(spark: SparkSession, dir: String): Long =
       footerCounts(spark,
-        listDataFiles(spark, s"$dir/keys").map((_, null: String)))
-        .map(_._3.get).sum
+        listDataFiles(spark, s"$dir/keys").map(DataFile(_, None, None)))
+        .map(_.rows.get).sum
 
     /** One sync's own fresh data files, normalized — read on the
       * driver and memoized per published dir (every governed SQL
@@ -2583,7 +2572,6 @@ object Snapshots {
           "commit the base face first"))
     val gen = observedGeneration(spark, tablePath, observed,
       "commitEqUpsert")
-    val fileRows = fileRowsOf(gen)
     // the MOR lineage composes with hive partitioning: a partitioned
     // base face syncs `partitionBy(partCol)` batches (fragments follow
     // the data; partition pruning survives the lineage — see
@@ -2591,20 +2579,19 @@ object Snapshots {
     // vice versa, so one lineage never mixes layouts
     partCol match {
       case Some(pc) =>
-        require(fileRows.forall(r =>
-            r._2 != null && r._2.startsWith(s"$pc=")),
+        require(gen.files.forall(_.part.exists(_.startsWith(s"$pc="))),
           s"commitEqUpsert: $tablePath's base face is not " +
             s"hive-partitioned on '$pc' — commit it via " +
             "commitPartitioned first (one layout per MOR lineage)")
       case None =>
-        require(fileRows.forall(_._2 == null),
+        require(gen.files.forall(_.part.isEmpty),
           s"commitEqUpsert: $tablePath carries hive-partitioned " +
             "files — pass partCol so the sync batches keep the layout")
     }
     val gens = Eq.composable(
       resolveSidecars(spark, tablePath, observed, refuseEqAs = None),
       tablePath, "commitEqUpsert")
-    val stored = storedSchemaOf(gen).getOrElse(
+    val stored = gen.schema.getOrElse(
       throw new IllegalArgumentException(
         s"commitEqUpsert: version $observed of $tablePath carries no " +
           "stored schema — recommit the base first"))
@@ -2641,8 +2628,8 @@ object Snapshots {
     Eq.write(spark, tablePath, version,
       tombstones.select(keyCols.map(c =>
         col(c).cast(keysSchema(c).dataType)).toIndexedSeq: _*).distinct(),
-      fresh.map(_._1))
-    publishDerived(spark, tablePath, version, fileRows ++ fresh,
+      fresh.map(_.path))
+    publishDerived(spark, tablePath, version, gen.files ++ fresh,
       stored.json, ts, observed, "commitEqUpsert")
   }
 
@@ -2663,14 +2650,15 @@ object Snapshots {
       keyCols: Seq[String],
       fragFilter: Option[String] = None): DataFrame = {
     require(keyCols.nonEmpty, "readMorAsOf needs key columns")
-    val (allRows, stored) = generationOf(spark, tablePath, version)
+    val gen = generationOf(spark, tablePath, version)
     // partition scope ([[readMorPartitionAsOf]]): metadata-level
     // fragment pruning of EVERY leg's file list, before any read plans
-    val rows = fragFilter.fold(allRows)(f => allRows.filter(_._2 == f))
-    if (rows.isEmpty) // an absent partition answers empty, schema intact
+    val files =
+      fragFilter.fold(gen.files)(f => gen.files.filter(_.part.contains(f)))
+    if (files.isEmpty) // an absent partition answers empty, schema intact
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        stored.getOrElse(readAsOf(spark, tablePath, version).schema))
-    readMorFace(spark, Face(tablePath, version, rows, stored,
+        gen.schema.getOrElse(readAsOf(spark, tablePath, version).schema))
+    readMorFace(spark, Face(tablePath, version, files, gen.schema,
       sidecarPass(spark, tablePath, version, GovFamilies)), keyCols)
   }
 
@@ -2679,12 +2667,12 @@ object Snapshots {
       spark: SparkSession,
       face: Face,
       keyCols: Seq[String]): DataFrame = {
-    val Face(tablePath, version, rows, stored, _) = face
+    val Face(tablePath, version, files, stored, _) = face
     val gens = Eq.composable(face.gens, tablePath, "readMorAsOf")
     require(keyCols.nonEmpty, "readMorAsOf needs key columns")
     val eqDirs = gens.eqLive
     if (eqDirs.isEmpty)
-      return readWithDv(spark, rows, stored, gens)
+      return readWithDv(spark, files, stored, gens)
     val eqVs = eqDirs.map(_._1).toSet
     val firstEq = eqDirs.map(_._1).min
     val foreign = gens.eq.generations
@@ -2700,9 +2688,9 @@ object Snapshots {
     val claimed = freshOf.flatMap(_._2).toSet
     val seqCol = "__eq_seq"
     val legs = ((Long.MinValue,
-      rows.filterNot(r => claimed.contains(normPath(r._1)))) +:
-      freshOf.map { case (n, files) =>
-        n -> rows.filter(r => files.contains(normPath(r._1)))
+      files.filterNot(d => claimed.contains(normPath(d.path)))) +:
+      freshOf.map { case (n, fresh) =>
+        n -> files.filter(d => fresh.contains(normPath(d.path)))
       }).filter(_._2.nonEmpty).map { case (n, group) =>
       readFileRows(spark, group, stored).withColumn(seqCol, lit(n))
     }
@@ -2786,7 +2774,7 @@ object Snapshots {
     val eqVs = eqAll.map(_._1).toSet
     val crashedFoldLanded = intentFrom.exists { from =>
       head > from && !eqVs.contains(head) &&
-        parentOf(manifestFor(spark, tablePath, head)).contains(from)
+        manifestFor(spark, tablePath, head).flatMap(_.parent).contains(from)
     }
     val v =
       if (crashedFoldLanded) head
@@ -2797,11 +2785,10 @@ object Snapshots {
         // commit — the materialized face keeps its layout (and its
         // partition pruning) instead of silently flattening
         val headFrags = manifestFor(spark, tablePath, head)
-          .map(r => if (r.isNullAt(2)) null else r.getString(2)).toSeq
-        headFrags.headOption.filter(_ != null)
+          .fold(Seq.empty[Option[String]])(_.files.map(_.part))
+        headFrags.headOption.flatten
           .map(_.takeWhile(_ != '=')) match {
-          case Some(pc) if headFrags.forall(p =>
-            p != null && p.startsWith(s"$pc=")) =>
+          case Some(pc) if headFrags.forall(_.exists(_.startsWith(s"$pc="))) =>
             commitPartitioned(spark, face, tablePath, pc,
               append = false, derivedFrom = Some(head),
               verb = "foldEqDeletes")
@@ -2976,41 +2963,22 @@ object Snapshots {
       gens: SidecarGens): Option[DataFrame] =
     gens.dv.map { case (_, dir) => Dv.read(spark, dir) }
 
-  /** (file, partition fragment, footer row count) of ONE generation —
-    * the SQL catalog's `files` metadata-table face, read from that
-    * generation's own manifest file alone (O(files of v), never the
-    * history). Null count = a legacy generation predating row-count
-    * manifests. */
-  private[graft] def generationFileMeta(
-      spark: SparkSession,
-      tablePath: String,
-      version: Long): Seq[(String, String, Option[Long])] = {
-    val rows = manifestFor(spark, tablePath, version)
-    require(rows.nonEmpty,
-      s"snapshot version $version of $tablePath is not in the manifest " +
-        "(never committed, or expired by vacuum)")
-    rows.map(r => (r.getString(1),
-      if (r.isNullAt(2)) null else r.getString(2),
-      if (r.isNullAt(4)) None else Some(r.getLong(4)))).toSeq
-  }
-
-  /** (file, part) rows + stored schema of ONE generation from a single
-    * eager manifest read, so both come from the same point-in-time
-    * snapshot — what readers and the SQL catalog plan scans from. */
+  /** ONE generation from its own manifest file (O(files of v), never
+    * the history), refused by name when it is not in the manifest —
+    * what readers, the SQL catalog's scans and its `files` metadata
+    * table plan from. */
   private[graft] def generationOf(
       spark: SparkSession,
       tablePath: String,
-      version: Long)
-      : (Seq[(String, String)],
-        Option[org.apache.spark.sql.types.StructType]) = {
-    val rows = manifestFor(spark, tablePath, version)
-    require(rows.nonEmpty,
-      s"snapshot version $version of $tablePath is not in the manifest " +
-        "(never committed, or expired by vacuum)")
-    (rows.map(r => (r.getString(1),
-      if (r.isNullAt(2)) null else r.getString(2))).toSeq,
-      storedSchemaOf(rows))
+      version: Long): Generation = {
+    val gen = manifestFor(spark, tablePath, version)
+    require(gen.isDefined, notInManifest(tablePath, version))
+    gen.get
   }
+
+  private def notInManifest(tablePath: String, version: Long): String =
+    s"snapshot version $version of $tablePath is not in the manifest " +
+      "(never committed, or expired by vacuum)"
 
   /** The normalized file set one DV sidecar dir records — the SQL
     * catalog's DV guard ([[Face.dvGoverned]]) and every governed read's
@@ -3070,18 +3038,18 @@ object Snapshots {
     * deletes' blast radius, not the table. */
   private def readWithDv(
       spark: SparkSession,
-      rows: Seq[(String, String)],
+      files: Seq[DataFile],
       stored: Option[org.apache.spark.sql.types.StructType],
       gens: SidecarGens): DataFrame = {
     val l2p = logicalToPhysical(gens.governing(spark, ColMap))
     val phys = stored.map(physicalSchema(_, l2p))
     gens.dv match {
       case None =>
-        fromPhysical(readFileRows(spark, rows, phys), l2p)
+        fromPhysical(readFileRows(spark, files, phys), l2p)
       case Some((_, dir)) =>
         val dirtySet = dvRecordedFiles(spark, dir)
-        val (dirty, clean) = rows.partition(r =>
-          dirtySet.contains(normPath(r._1)))
+        val (dirty, clean) = files.partition(d =>
+          dirtySet.contains(normPath(d.path)))
         val legs =
           (if (clean.nonEmpty)
             Seq(fromPhysical(readFileRows(spark, clean, phys), l2p))
@@ -3123,49 +3091,50 @@ object Snapshots {
       predicate: org.apache.spark.sql.Column,
       ts: Option[Long] = None): Long = {
     val face = dmlFace(spark, tablePath, "deleteWhere", Seq(ColMap))
-    val fresh = face.live(face.fileRows).filter(predicate)
+    val fresh = face.live(face.files).filter(predicate)
       .select(col(DvFileCol).as("file"), col(DvPosCol).as("row_index"))
     val version = claimVersion(spark, tablePath, face.observed + 1L)
     val full = face.prior.fold(fresh)(p =>
       p.select(col("file"), col("row_index")).unionByName(fresh))
     Dv.write(spark, tablePath, version, full)
-    publishDerived(spark, tablePath, version, face.fileRows,
+    publishDerived(spark, tablePath, version, face.files,
       face.schemaJson, ts, face.observed, "deleteWhere")
   }
 
   /** The observed face every row-level DML verb reads and derives its
-    * commit from: the head's manifest rows and stored schema from ONE
-    * read, and the sidecars its verb reads from ONE pass (`gens`) —
-    * the column mapping, the deletion vectors governing it, the
-    * write-governance sets its batch is prepared under
-    * ([[writeBatch]]) and the pruning indexes describing it
-    * ([[indexDir]]). */
+    * commit from: the head's generation from ONE read, and the
+    * sidecars its verb reads from ONE pass (`gens`) — the column
+    * mapping, the deletion vectors governing it, the write-governance
+    * sets its batch is prepared under ([[writeBatch]]) and the pruning
+    * indexes describing it ([[indexDir]]). */
   private[graft] final case class DmlFace(
       spark: SparkSession,
       tablePath: String,
-      observed: Long,
-      fileRows: Seq[(String, String, Option[Long])],
-      schemaJson: String,
-      stored: Option[org.apache.spark.sql.types.StructType],
+      gen: Generation,
       gens: SidecarGens) {
     private val cmap = gens.governing(spark, ColMap)
     val l2p: Map[String, String] = logicalToPhysical(cmap)
     val prior: Option[DataFrame] = dvSetOf(spark, gens)
 
-    /** The live rows of `rows` (deletion vectors applied), carrying the
+    def observed: Long = gen.version
+
+    def files: Seq[DataFile] = gen.files
+
+    def stored: Option[org.apache.spark.sql.types.StructType] = gen.schema
+
+    def schemaJson: String = gen.schemaJson.orNull
+
+    /** The live rows of `files` (deletion vectors applied), carrying the
       * [[DvFileCol]]/[[DvPosCol]] row identity. */
-    def live(rows: Seq[(String, String, Option[Long])]): DataFrame = {
-      val base = fromPhysical(readFileRows(spark,
-        rows.map(r => (r._1, r._2)),
+    def live(files: Seq[DataFile]): DataFrame = {
+      val base = fromPhysical(readFileRows(spark, files,
         stored.map(physicalSchema(_, l2p)), withMeta = true), l2p)
       prior.fold(base)(applyDv(base, _))
     }
 
-    /** (dirty, clean) file rows against a normalized dirty-file set. */
-    def split(dirty: Set[String])
-        : (Seq[(String, String, Option[Long])],
-          Seq[(String, String, Option[Long])]) =
-      fileRows.partition(r => dirty.contains(normPath(r._1)))
+    /** (dirty, clean) files against a normalized dirty-file set. */
+    def split(dirty: Set[String]): (Seq[DataFile], Seq[DataFile]) =
+      files.partition(d => dirty.contains(normPath(d.path)))
 
     /** `fam`'s dir that describes the observed head — None under a
       * rename/drop column mapping: index rows and physical file columns
@@ -3173,7 +3142,7 @@ object Snapshots {
       * stand down there. */
     def indexDir(fam: IndexFamily): Option[String] =
       if (renamesAny(cmap)) None
-      else gens.describing(spark, fam, fileRows.map(_._1))
+      else gens.describing(spark, fam, files.map(_.path))
   }
 
   /** Resolve a DML verb's [[DmlFace]] at the current head, its
@@ -3194,9 +3163,8 @@ object Snapshots {
         s"$verb: $tablePath has no committed versions"))
     val gens = resolveSidecars(spark, tablePath, observed,
       refuseEqAs = Some(verb), families = families)
-    val gen = observedGeneration(spark, tablePath, observed, verb)
-    DmlFace(spark, tablePath, observed, fileRowsOf(gen),
-      schemaJsonOf(gen).orNull, storedSchemaOf(gen), gens)
+    DmlFace(spark, tablePath,
+      observedGeneration(spark, tablePath, observed, verb), gens)
   }
 
   /** The normalized set of files a live frame (or a frame derived from
@@ -3214,7 +3182,7 @@ object Snapshots {
       face: DmlFace,
       predicate: org.apache.spark.sql.Column): Set[String] = {
     val discovery = bloomPrunedForDml(face,
-      statsPrunedForDml(face, face.fileRows, predicate), predicate)
+      statsPrunedForDml(face, face.files, predicate), predicate)
     if (discovery.isEmpty) Set.empty
     else dirtyFilesOf(face.live(discovery).filter(predicate))
   }
@@ -3360,15 +3328,15 @@ object Snapshots {
     * (partition evolution mid-flight) refuses: fragment-scoped
     * answers over it are undefined until [[optimizePartitioned]]. */
   private def dmlPartitionCol(face: DmlFace, verb: String): Option[String] = {
-    val (fileRows, version, tablePath) =
-      (face.fileRows, face.observed, face.tablePath)
-    if (fileRows.isEmpty || fileRows.forall(_._2 == null)) None
+    val (files, version, tablePath) =
+      (face.files, face.observed, face.tablePath)
+    if (files.forall(_.part.isEmpty)) None
     else {
-      require(fileRows.forall(_._2 != null),
+      require(files.forall(_.part.isDefined),
         s"$verb: version $version of $tablePath mixes flat and " +
           "partitioned files (partition evolution) — compact with " +
           "optimizePartitioned first")
-      val keys = fileRows.map(_._2.split("=", 2)(0)).distinct
+      val keys = files.flatMap(_.part).map(_.split("=", 2)(0)).distinct
       require(keys.length == 1,
         s"$verb: version $version of $tablePath carries fragments on " +
           s"multiple keys (${keys.mkString(", ")}) — compact with " +
@@ -3387,7 +3355,7 @@ object Snapshots {
       face: DmlFace,
       partCol: Option[String],
       dirtySet: Set[String],
-      cleanRows: Seq[(String, String, Option[Long])],
+      cleanRows: Seq[DataFile],
       frame: DataFrame,
       ts: Option[Long],
       verb: String): Long = {
@@ -3407,8 +3375,8 @@ object Snapshots {
         if (survivingFiles.isEmpty) p.limit(0)
         else p.filter(col("file").isin(survivingFiles.toIndexedSeq: _*)))
     }
-    maintainIndexSidecars(face, version, cleanRows.map(_._1),
-      fresh.map(_._1))
+    maintainIndexSidecars(face, version, cleanRows.map(_.path),
+      fresh.map(_.path))
     publishDerived(spark, tablePath, version, cleanRows ++ fresh,
       face.schemaJson, ts, face.observed, verb)
   }
@@ -3458,12 +3426,11 @@ object Snapshots {
     * nothing translates. */
   private[graft] def statsPrunedForDml(
       face: DmlFace,
-      fileRows: Seq[(String, String, Option[Long])],
-      predicate: org.apache.spark.sql.Column)
-      : Seq[(String, String, Option[Long])] = {
-    if (fileRows.isEmpty) return fileRows
+      files: Seq[DataFile],
+      predicate: org.apache.spark.sql.Column): Seq[DataFile] = {
+    if (files.isEmpty) return files
     val spark = face.spark
-    val sd = face.indexDir(StatsIndex).getOrElse(return fileRows)
+    val sd = face.indexDir(StatsIndex).getOrElse(return files)
     val statKeys = StatsIndex.keys(spark, sd).toSet
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo => CEq, Expression, GreaterThan => CGt, GreaterThanOrEqual => CGe, In => CIn, LessThan => CLt, LessThanOrEqual => CLe, Literal => CLit}
@@ -3507,9 +3474,9 @@ object Snapshots {
         case _ => None
       }
     val admits = conjunctsOf(predicate).flatMap(admitOne)
-    if (admits.isEmpty) return fileRows
+    if (admits.isEmpty) return files
     val admitted = statsAdmitted(spark, sd, admits.reduce(_ && _))
-    fileRows.filter(r => admitted.contains(normPath(r._1)))
+    files.filter(d => admitted.contains(normPath(d.path)))
   }
 
   /** [[statsPrunedForDml]]'s point-lookup sibling: when a BLOOM
@@ -3523,14 +3490,13 @@ object Snapshots {
     * exact predicate still runs row-level. */
   private[graft] def bloomPrunedForDml(
       face: DmlFace,
-      fileRows: Seq[(String, String, Option[Long])],
-      predicate: org.apache.spark.sql.Column)
-      : Seq[(String, String, Option[Long])] = {
-    if (fileRows.isEmpty) return fileRows
+      files: Seq[DataFile],
+      predicate: org.apache.spark.sql.Column): Seq[DataFile] = {
+    if (files.isEmpty) return files
     val spark = face.spark
-    val bd = face.indexDir(BloomIndex).getOrElse(return fileRows)
+    val bd = face.indexDir(BloomIndex).getOrElse(return files)
     val keyCol = BloomIndex.keys(spark, bd).headOption
-      .getOrElse(return fileRows)
+      .getOrElse(return files)
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo => CEq, Expression, In => CIn, Literal => CLit}
     def isKey(e: Expression): Boolean = e match {
@@ -3555,11 +3521,11 @@ object Snapshots {
     // the FIRST point conjunct suffices (conjuncts intersect): a row
     // matching the whole predicate must match it
     conjunctsOf(predicate).flatMap(pointValues).headOption match {
-      case None => fileRows
+      case None => files
       case Some(values) =>
         val admitted = Skipping.bloomAdmitted(spark, bd,
           Skipping.hashesOf(spark, values)).map(normPath).toSet
-        fileRows.filter(r => admitted.contains(normPath(r._1)))
+        files.filter(d => admitted.contains(normPath(d.path)))
     }
   }
 
@@ -3576,13 +3542,12 @@ object Snapshots {
     * misses every source key), so the join answer is unchanged. */
   private[graft] def mergeSourcePruned(
       face: DmlFace,
-      fileRows: Seq[(String, String, Option[Long])],
+      files: Seq[DataFile],
       source: DataFrame,
-      on: org.apache.spark.sql.Column)
-      : Seq[(String, String, Option[Long])] = {
-    if (fileRows.isEmpty) return fileRows
+      on: org.apache.spark.sql.Column): Seq[DataFile] = {
+    if (files.isEmpty) return files
     val spark = face.spark
-    val sd = face.indexDir(StatsIndex).getOrElse(return fileRows)
+    val sd = face.indexDir(StatsIndex).getOrElse(return files)
     val statKeys = StatsIndex.keys(spark, sd).toSet
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{EqualTo => CEq, Expression}
@@ -3607,14 +3572,14 @@ object Snapshots {
       .find { case (tc, sc) =>
         statKeys.contains(tc) && source.columns.contains(sc)
       }
-      .getOrElse(return fileRows)
+      .getOrElse(return files)
     val (tCol, sCol) = key
     val bounds = source.agg(
       min(col(sCol)).as("lo"), max(col(sCol)).as("hi")).collect().head
-    if (bounds.isNullAt(0)) return fileRows // all-null source key
+    if (bounds.isNullAt(0)) return files // all-null source key
     val admitted = statsAdmitted(spark, sd,
       Skipping.admits(tCol, bounds.get(0), bounds.get(1)))
-    fileRows.filter(r => admitted.contains(normPath(r._1)))
+    files.filter(d => admitted.contains(normPath(d.path)))
   }
 
   /** One WHEN clause of [[mergeInto]] — the SQL MERGE action shapes.
@@ -3688,7 +3653,7 @@ object Snapshots {
     }
     val face = dmlFace(spark, tablePath, "mergeInto")
     val partCol = dmlPartitionCol(face, "mergeInto")
-    val fileRows = face.fileRows
+    val files = face.files
     // the sentinel marks "the left join FOUND a source row" without
     // guessing at a non-null source column — MERGE's matched test
     val src = source.withColumn(MergeSrcSentinel, lit(1)).alias("s")
@@ -3699,11 +3664,11 @@ object Snapshots {
       // no matched clause → no matched-file rewrites (and the ANSI
       // cardinality contract binds only update/delete — Spark and
       // Iceberg agree); an empty face has nothing to match either way
-      if (fileRows.isEmpty || matched.isEmpty) Set.empty
+      if (files.isEmpty || matched.isEmpty) Set.empty
       else {
         // target files whose stats interval misses the source's whole
         // key range cannot contain a match — prune the match scan
-        val matchScan = mergeSourcePruned(face, fileRows, source, on)
+        val matchScan = mergeSourcePruned(face, files, source, on)
         if (matchScan.isEmpty) Set.empty // stats disprove any match
         else {
           val matchCounts = face.live(matchScan).alias("t")
@@ -3723,14 +3688,14 @@ object Snapshots {
     // target row with NO match that some by-source clause would hit —
     // one anti-join pass, pruned by the clauses' own conditions
     val dirtyBySource: Set[String] =
-      if (fileRows.isEmpty || bySource.isEmpty) Set.empty
+      if (files.isEmpty || bySource.isEmpty) Set.empty
       else {
         val anyCond = bySource.map {
           case MergeUpdateBySource(c, _) => c.getOrElse(lit(true))
           case MergeDeleteBySource(c) => c.getOrElse(lit(true))
           case _ => lit(false)
         }.reduce(_ || _)
-        dirtyFilesOf(face.live(fileRows).alias("t")
+        dirtyFilesOf(face.live(files).alias("t")
           .join(src, on, "left_anti")
           .filter(anyCond))
       }
@@ -3743,11 +3708,10 @@ object Snapshots {
       colType.get(c).map(v.cast).getOrElse(v)
     val targetCols: Seq[String] = face.stored.map(_.fieldNames.toSeq)
       .getOrElse {
-        require(fileRows.nonEmpty,
+        require(files.nonEmpty,
           s"mergeInto: version ${face.observed} of $tablePath is empty " +
             "and carries no stored schema — the insert face is unknowable")
-        fromPhysical(readFileRows(spark,
-          fileRows.take(1).map(r => (r._1, r._2)), None), face.l2p)
+        fromPhysical(readFileRows(spark, files.take(1), None), face.l2p)
           .columns.toSeq
       }
     // pass 2 — rewrite the dirty files: left-join their live rows to
@@ -3821,8 +3785,8 @@ object Snapshots {
       if (inserts.isEmpty) None
       else {
         val unmatched =
-          if (fileRows.isEmpty) src
-          else src.join(face.live(fileRows).alias("t"), on, "left_anti")
+          if (files.isEmpty) src
+          else src.join(face.live(files).alias("t"), on, "left_anti")
         var decided: org.apache.spark.sql.Column = lit(false)
         val legs = inserts.map { case MergeInsert(cond, values) =>
           values.foreach { case (c, _) =>
@@ -4029,8 +3993,8 @@ object Snapshots {
       govWrite: Long => Unit = _ => ())
 
   /** The shared commit tail of the metadata-only DDL verbs (constraint,
-    * generated-column and column add/drop/rename): the observed head —
-    * refused by name when the table is empty — and its files, handed to
+    * generated-column and column add/drop/rename): the observed head's
+    * generation — refused by name when the table is empty — handed to
     * `change` for the verb's checks; then the claim, the governance
     * write and the derived publish that repoints the head's files
     * verbatim. Returns the minted version. */
@@ -4038,20 +4002,31 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       verb: String)(
-      change: (Long, Seq[(String, String, Option[Long])]) => DdlChange)
-      : Long = {
+      change: Generation => DdlChange): Long = {
     val observed = latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"$verb: $tablePath has no committed versions"))
     val gen = observedGeneration(spark, tablePath, observed, verb)
-    val fileRows = fileRowsOf(gen)
-    val c = change(observed, fileRows)
+    val c = change(gen)
     val version = claimVersion(spark, tablePath, observed + 1L)
     c.govWrite(version)
-    publishDerived(spark, tablePath, version, fileRows,
-      c.schema.fold(schemaJsonOf(gen).orNull)(_.json), None, observed,
-      verb)
+    publishDerived(spark, tablePath, version, gen.files,
+      c.schema.fold(gen.schemaJson.orNull)(_.json), None, observed, verb)
   }
+
+  /** The head's stored schema for a DDL verb that edits it — refused
+    * for generations written before stored schemas. */
+  private def ddlSchema(
+      gen: Generation,
+      tablePath: String,
+      verb: String): org.apache.spark.sql.types.StructType =
+    gen.schema.getOrElse(throw new IllegalArgumentException(
+      s"$verb: version ${gen.version} of $tablePath predates " +
+        "manifest-carried schemas — recommit first"))
+
+  /** Is `col` a hive partition key of one of `gen`'s files? */
+  private def partitionsOn(gen: Generation, col: String): Boolean =
+    gen.files.exists(_.part.exists(_.startsWith(s"$col=")))
 
   /** The CHECK constraints GOVERNING `version`, as (name, exprSql)
     * pairs. */
@@ -4129,7 +4104,8 @@ object Snapshots {
       name: String,
       exprSql: String): Long = {
     require(name.nonEmpty, "addConstraint needs a constraint name")
-    metadataDdl(spark, tablePath, "addConstraint") { (observed, _) =>
+    metadataDdl(spark, tablePath, "addConstraint") { gen =>
+      val observed = gen.version
       val active = constraintsAsOf(spark, tablePath, observed)
       require(!active.exists(_._1 == name),
         s"addConstraint: constraint '$name' already exists on $tablePath")
@@ -4162,7 +4138,8 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       name: String): Long =
-    metadataDdl(spark, tablePath, "dropConstraint") { (observed, _) =>
+    metadataDdl(spark, tablePath, "dropConstraint") { gen =>
+      val observed = gen.version
       val active = constraintsAsOf(spark, tablePath, observed)
       require(active.exists(_._1 == name),
         s"dropConstraint: no constraint '$name' on $tablePath")
@@ -4202,8 +4179,9 @@ object Snapshots {
       name: String,
       exprSql: String): Long = {
     require(name.nonEmpty, "addGeneratedColumn needs a column name")
-    metadataDdl(spark, tablePath, "addGeneratedColumn") { (observed, _) =>
-      storedSchema(spark, tablePath, observed).foreach(st =>
+    metadataDdl(spark, tablePath, "addGeneratedColumn") { gen =>
+      val observed = gen.version
+      gen.schema.foreach(st =>
         require(!st.fieldNames.contains(name),
           s"addGeneratedColumn: '$name' already exists as a data column"))
       val active = generatedColumnsAsOf(spark, tablePath, observed)
@@ -4220,7 +4198,8 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       name: String): Long =
-    metadataDdl(spark, tablePath, "dropGeneratedColumn") { (observed, _) =>
+    metadataDdl(spark, tablePath, "dropGeneratedColumn") { gen =>
+      val observed = gen.version
       val active = generatedColumnsAsOf(spark, tablePath, observed)
       require(active.exists(_._1 == name),
         s"dropGeneratedColumn: no generated column '$name' on $tablePath")
@@ -4229,12 +4208,12 @@ object Snapshots {
     }
 
   /** A batch written for ingest: its LOGICAL schema (what the manifest
-    * records), the logical→physical names its files carry, and their
-    * manifest rows. */
+    * records), the logical→physical names its files carry, and the
+    * files, counted. */
   private final case class Written(
       schema: org.apache.spark.sql.types.StructType,
       l2p: Map[String, String],
-      fresh: Seq[(String, String, Option[Long])])
+      fresh: Seq[DataFile])
 
   /** The ONE ingest write of every data-writing verb: `df` prepared
     * under the write-governance sets `gens` resolved at the batch's
@@ -4283,7 +4262,7 @@ object Snapshots {
       case None =>
         w.parquet(dataPath)
         footerCounts(spark,
-          listDataFiles(spark, dataPath).map((_, null: String)))
+          listDataFiles(spark, dataPath).map(DataFile(_, None, None)))
     })
   }
 
@@ -4342,16 +4321,14 @@ object Snapshots {
       tablePath: String,
       from: String,
       to: String): Long =
-    metadataDdl(spark, tablePath, "renameColumn") { (observed, fileRows) =>
-      val stored = storedSchema(spark, tablePath, observed).getOrElse(
-        throw new IllegalArgumentException(
-          s"renameColumn: version $observed of $tablePath predates " +
-            "manifest-carried schemas — recommit first"))
+    metadataDdl(spark, tablePath, "renameColumn") { gen =>
+      val observed = gen.version
+      val stored = ddlSchema(gen, tablePath, "renameColumn")
       require(stored.fieldNames.contains(from),
         s"renameColumn: no column '$from' in ${stored.fieldNames.mkString(",")}")
       require(!stored.fieldNames.contains(to),
         s"renameColumn: column '$to' already exists")
-      require(!fileRows.exists(r => r._2 != null && r._2.startsWith(s"$from=")),
+      require(!partitionsOn(gen, from),
         s"renameColumn: '$from' is a partition column — its fragments " +
           "are path-encoded and cannot be relabeled in metadata")
       val cmap = colMapAsOf(spark, tablePath, observed)
@@ -4374,16 +4351,14 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       name: String): Long =
-    metadataDdl(spark, tablePath, "dropColumn") { (observed, fileRows) =>
-      val stored = storedSchema(spark, tablePath, observed).getOrElse(
-        throw new IllegalArgumentException(
-          s"dropColumn: version $observed of $tablePath predates " +
-            "manifest-carried schemas — recommit first"))
+    metadataDdl(spark, tablePath, "dropColumn") { gen =>
+      val observed = gen.version
+      val stored = ddlSchema(gen, tablePath, "dropColumn")
       require(stored.fieldNames.contains(name),
         s"dropColumn: no column '$name' in ${stored.fieldNames.mkString(",")}")
       require(stored.fields.length > 1,
         "dropColumn: cannot drop the last column")
-      require(!fileRows.exists(r => r._2 != null && r._2.startsWith(s"$name=")),
+      require(!partitionsOn(gen, name),
         s"dropColumn: '$name' is a partition column — drop is undefined " +
           "for path-encoded fragments")
       val cmap = colMapAsOf(spark, tablePath, observed)
@@ -4410,11 +4385,9 @@ object Snapshots {
       name: String,
       dataType: org.apache.spark.sql.types.DataType): Long = {
     require(name.nonEmpty, "addColumn needs a column name")
-    metadataDdl(spark, tablePath, "addColumn") { (observed, _) =>
-      val stored = storedSchema(spark, tablePath, observed).getOrElse(
-        throw new IllegalArgumentException(
-          s"addColumn: version $observed of $tablePath predates " +
-            "manifest-carried schemas — recommit first"))
+    metadataDdl(spark, tablePath, "addColumn") { gen =>
+      val observed = gen.version
+      val stored = ddlSchema(gen, tablePath, "addColumn")
       require(!stored.fieldNames.contains(name),
         s"addColumn: '$name' already exists")
       require(!colMapAsOf(spark, tablePath, observed).map(_._1)
@@ -4514,7 +4487,7 @@ object Snapshots {
     if (append) latestVersion(spark, tablePath).foreach { h =>
       val gens = sidecarPass(spark, tablePath, h, Seq(ColMap, fam))
       val dir = gens.describing(spark, fam,
-        manifestRows(spark, tablePath, h).map(_._1))
+        filesOf(manifestFor(spark, tablePath, h)).map(_.path))
       require(dir.isDefined,
         s"$verb append onto version $h of $tablePath, which no " +
           s"${fam.noun} sidecar describes — the parent's files would " +
@@ -4704,9 +4677,10 @@ object Snapshots {
       stored: Option[org.apache.spark.sql.types.StructType]): DataFrame =
     if (admitted.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        stored.orElse(generationOf(spark, tablePath, version)._2)
+        stored.orElse(generationOf(spark, tablePath, version).schema)
           .getOrElse(readAsOf(spark, tablePath, version).schema))
-    else readWithDv(spark, admitted.map((_, null: String)), stored, gens)
+    else readWithDv(spark, admitted.map(DataFile(_, None, None)), stored,
+      gens)
 
   /** RUNTIME FILTER into a snapshot scan — the dynamic-file-pruning
     * leg Spark's DPP cannot give a manifest-planned union scan: for a
@@ -4746,11 +4720,11 @@ object Snapshots {
           s"stats or bloom sidecar applicable to '$keyCol' — nothing " +
           "answers file admission; commit via commitClustered/" +
           "commitBloom on that key (or join the plain readAsOf face)"))
-    val files = face.rows.filter(r => admitted.contains(normPath(r._1)))
+    val files = face.files.filter(d => admitted.contains(normPath(d.path)))
     if (files.isEmpty) spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row],
       face.stored.getOrElse(readAsOf(spark, tablePath, version).schema))
-    else readFace(spark, face.copy(rows = files))
+    else readFace(spark, face.copy(files = files))
   }
 
   /** The STATS/BLOOM admission core of [[scanJoinPruned]] and the SQL
@@ -4778,7 +4752,7 @@ object Snapshots {
       max(col(dimCol)).as("hi"),
       count_distinct(col(dimCol)).as("n")).collect().head
     if (bounds.isNullAt(0)) return Some(Set.empty) // no dim keys at all
-    var admitted: Set[String] = face.rows.map(r => normPath(r._1)).toSet
+    var admitted: Set[String] = face.files.map(d => normPath(d.path)).toSet
     sd.foreach { d =>
       admitted = admitted.intersect(statsAdmitted(spark, d,
         Skipping.admits(keyCol, bounds.get(0), bounds.get(1))))
@@ -4813,7 +4787,7 @@ object Snapshots {
       java.util.Arrays.asList(values.map(Row(_)): _*), schema)
     sidecarAdmission(spark, face, keyCol, dimKeys, maxPointKeys)
       .map(admitted =>
-        face.rows.map(_._1).filter(f => admitted.contains(normPath(f))))
+        face.files.map(_.path).filter(f => admitted.contains(normPath(f))))
   }
 
   /** [[commit]] plus a per-file BLOOM sidecar on `keyCol` — the
@@ -4996,7 +4970,7 @@ object Snapshots {
       families = GovFamilies ++ IndexFamilies)
     val l2p = logicalToPhysical(gens.governing(spark, ColMap))
     val sd = gens.describing(spark, StatsIndex,
-      manifestRows(spark, tablePath, version).map(_._1))
+      filesOf(manifestFor(spark, tablePath, version)).map(_.path))
       .getOrElse(throw new IllegalArgumentException(
         s"no stats manifest for version $version of $tablePath — not " +
           "committed via a clustered/Z-ordered verb, or expired by " +
@@ -5073,7 +5047,7 @@ object Snapshots {
     val l2p = logicalToPhysical(gens.governing(spark, ColMap))
     val phys = l2p.getOrElse(keyCol, keyCol)
     val bd = gens.describing(spark, BloomIndex,
-      manifestRows(spark, tablePath, version).map(_._1))
+      filesOf(manifestFor(spark, tablePath, version)).map(_.path))
       .getOrElse(throw new IllegalArgumentException(
         s"no bloom sidecar for version $version of $tablePath — not " +
           "committed via commitBloom, or expired by vacuum"))
@@ -5085,7 +5059,7 @@ object Snapshots {
         "queried key")
     val admitted = Skipping.pruneFilesPoint(spark, bd, value)
     admittedFace(spark, tablePath, version, gens, admitted,
-      generationOf(spark, tablePath, version)._2)
+      generationOf(spark, tablePath, version).schema)
       .filter(col(keyCol) === lit(value))
   }
 
@@ -5107,7 +5081,7 @@ object Snapshots {
     val latest = latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"optimize: $tablePath has no committed versions"))
-    val files = manifestFiles(spark, tablePath, latest)
+    val files = filesOf(manifestFor(spark, tablePath, latest)).map(_.path)
     val f = fs(spark, tablePath)
     val bytes = files.map(p => f.getFileStatus(new Path(p)).getLen).sum
     val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
@@ -5144,12 +5118,12 @@ object Snapshots {
     val head = latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"optimizePreserving: $tablePath has no committed versions"))
-    val rows = observedGeneration(spark, tablePath, head,
-      "optimizePreserving")
+    val files = observedGeneration(spark, tablePath, head,
+      "optimizePreserving").files
     val f = fs(spark, tablePath)
-    if (rows.forall(r => !r.isNullAt(2))) {
+    if (files.forall(_.part.isDefined)) {
       // fragment key precedes '='; hive escaping applies to VALUES only
-      val partCol = rows.head.getString(2).takeWhile(_ != '=')
+      val partCol = files.head.part.get.takeWhile(_ != '=')
       return optimizePartitioned(spark, tablePath, partCol)
     }
     // a stats generation GOVERNS the head when it still DESCRIBES
@@ -5161,11 +5135,10 @@ object Snapshots {
     // re-clusters on them and mints a FRESH sidecar at the new head.
     val gens = sidecarPass(spark, tablePath, head, IndexFamilies)
     def describing(fam: IndexFamily): Option[String] =
-      gens.describing(spark, fam, rows.map(_.getString(1)).toSeq)
+      gens.describing(spark, fam, files.map(_.path))
     describing(StatsIndex).foreach { dir =>
       val keys = StatsIndex.keys(spark, dir)
-      val bytes = rows
-        .map(r => f.getFileStatus(new Path(r.getString(1))).getLen).sum
+      val bytes = files.map(d => f.getFileStatus(new Path(d.path)).getLen).sum
       val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
       return keys match {
         case Seq(one) =>
@@ -5214,8 +5187,7 @@ object Snapshots {
     val f = fs(spark, tablePath)
     val dataRoot = new Path(s"$tablePath/$DataDir")
     if (!f.exists(dataRoot)) return 0L
-    val referenced = manifest(spark, tablePath)
-      .select(col("file")).distinct().collect().map(_.getString(0)).toSet
+    val referenced = history(spark, tablePath).flatMap(_.paths).toSet
     val cutoff = System.currentTimeMillis() - olderThanMs
     def walk(p: Path): Seq[org.apache.hadoop.fs.FileStatus] =
       f.listStatus(p).toSeq.flatMap { s =>
@@ -5268,7 +5240,8 @@ object Snapshots {
     val latest = latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"optimizePartitioned: $tablePath has no committed versions"))
-    require(manifestRows(spark, tablePath, latest).forall(_._2 != null),
+    require(manifestFor(spark, tablePath, latest)
+      .forall(_.files.forall(_.part.isDefined)),
       s"optimizePartitioned needs a partitioned table (commitPartitioned); " +
         s"version $latest of $tablePath carries flat files")
     commitPartitioned(spark,
@@ -5347,16 +5320,17 @@ object Snapshots {
       onto: Option[Long],
       verb: String,
       ts: Option[Long] = None): Long = {
-    val gen = manifestFor(spark, src, srcVersion)
-    require(gen.nonEmpty,
+    val found = manifestFor(spark, src, srcVersion)
+    require(found.isDefined,
       s"$verb: snapshot version $srcVersion of $src is not in " +
         "the manifest (never committed, or expired by vacuum)")
-    val rows = fileRowsOf(gen)
-    val schemaJson = schemaJsonOf(gen).orNull
+    val gen = found.get
     val version = claimVersion(spark, dst, onto.fold(0L)(_ + 1L))
     CarriedFamilies.foreach(_.carry(spark, src, srcVersion, dst, version))
-    onto.fold(publishRows(spark, dst, version, rows, schemaJson, ts, None))(
-      publishDerived(spark, dst, version, rows, schemaJson, ts, _, verb))
+    onto.fold(publishRows(spark, dst,
+      Generation(Commit(version, ts, None), gen.files, gen.schemaJson)))(
+      publishDerived(spark, dst, version, gen.files, gen.schemaJson.orNull,
+        ts, _, verb))
   }
 
   // ------------------------------------------------------------------
@@ -5499,9 +5473,8 @@ object Snapshots {
     if (!f.exists(marker)) return false
     val root = branchPath(tablePath, name)
     val prefix = normPath(root) + "/"
-    val borrowed = manifest(spark, tablePath)
-      .select(col("file")).distinct().collect().map(_.getString(0))
-      .exists(file => normPath(file).startsWith(prefix))
+    val borrowed = history(spark, tablePath).exists(
+      _.paths.exists(file => normPath(file).startsWith(prefix)))
     require(!borrowed,
       s"dropBranch('$name'): a retained main generation references " +
         "files under the branch root (it was fast-forwarded) — " +
@@ -5522,30 +5495,27 @@ object Snapshots {
       spark: SparkSession,
       tablePath: String,
       version: Long): Long = {
-    val rows = manifestRows(spark, tablePath, version)
-    require(rows.nonEmpty,
-      s"snapshot version $version of $tablePath is not in the manifest " +
-        "(never committed, or expired by vacuum)")
-    require(rows.forall(_._3.isDefined),
+    val files = generationOf(spark, tablePath, version).files
+    require(files.forall(_.rows.isDefined),
       s"snapshot version $version of $tablePath predates row-count " +
         "manifests — its generation carries no footer counts")
-    val base = rows.map(_._3.get).sum
+    val base = files.map(_.rows.get).sum
     // deletion vectors subtract from the footer counts. Still zero
     // DATA files opened — the DV sidecar is metadata-scale (bounded by
     // deletes).
-    base - liveDvRows(spark, tablePath, version, rows)
+    base - liveDvRows(spark, tablePath, version, files)
   }
 
   /** The governing DV entries of `version` on the generation's own
-    * `rows` — entries on files outside it (replaced or compacted away)
+    * `files` — entries on files outside it (replaced or compacted away)
     * are dead and never count. */
   private def liveDvRows(
       spark: SparkSession,
       tablePath: String,
       version: Long,
-      rows: Seq[(String, String, Option[Long])]): Long =
+      files: Seq[DataFile]): Long =
     dvSetOf(spark, resolveSidecars(spark, tablePath, version)).fold(0L) {
-      _.join(spark.createDataFrame(rows.map(r => Tuple1(r._1))).toDF("file"),
+      _.join(spark.createDataFrame(files.map(d => Tuple1(d.path))).toDF("file"),
         Seq("file"), "left_semi").count()
     }
 
@@ -5555,47 +5525,75 @@ object Snapshots {
     * commit), so the whole history of a 100-TB table profiles without
     * opening one data file; the row-count columns are null-free by
     * construction for tables written by this layer (guarded loudly
-    * for legacy generations). The frame is ordinary lazy SQL over the
-    * metadata-scale manifest — filter/join it like any table
-    * (Iceberg's `.snapshots`/`.files` metadata-table shape). */
+    * for legacy generations). Aggregated on the driver over
+    * [[history]] — filter/join the frame like any table (Iceberg's
+    * `.snapshots`/`.files` metadata-table shape). */
   def tableStats(spark: SparkSession, tablePath: String): DataFrame = {
-    val m = manifest(spark, tablePath)
-    require(m.filter(col("rows").isNull).limit(1).collect().isEmpty,
-      s"$tablePath carries generations without footer counts — " +
-        "tableStats would undercount; recommit those versions")
-    // footer counts are PHYSICAL; live deletion vectors would make
-    // them silently overcount — refuse toward the DV-aware countAsOf
-    require(!liveDvEntriesExist(spark, tablePath,
-      m.select(col("file")).collect().map(_.getString(0)).toSeq),
-      s"$tablePath carries live deletion vectors — tableStats' footer " +
-        "counts would overcount deleted rows; use countAsOf per " +
-        "version, and dvStats for the deletion pressure gauge")
-    m.groupBy(col("version"), col("part"))
-      .agg(count(lit(1)).as("n_files"), sum(col("rows")).as("n_rows"))
+    import org.apache.spark.sql.types._
+    val rows = countedHistory(spark, tablePath, "tableStats",
+      "use countAsOf per version, and dvStats for the deletion " +
+        "pressure gauge").flatMap { g =>
+      g.files.groupBy(_.part).toSeq.sortBy(_._1).map { case (p, fs) =>
+        Row(g.version, p.orNull, fs.length.toLong, fs.map(_.rows.get).sum)
+      }
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("version", LongType, nullable = false),
+      StructField("part", StringType, nullable = true),
+      StructField("n_files", LongType, nullable = false),
+      StructField("n_rows", LongType, nullable = true))))
   }
 
   /** Version-level history frame: one row per generation with its
     * logical commit stamp, file count, and row count — the Iceberg
     * `.history`/`.snapshots` metadata-table shape, derived entirely
     * from the manifest ([[tableStats]] is the per-partition
-    * refinement). Ordinary lazy SQL over metadata-scale rows; loud
-    * when any generation predates row-count manifests, exactly as
-    * [[tableStats]] refuses rather than undercounting. `commit_ts` is
-    * null for unstamped generations — a report column, unlike
-    * [[versionAt]] which refuses mixed timelines. */
+    * refinement), over [[historyRows]]. */
   def tableHistory(spark: SparkSession, tablePath: String): DataFrame = {
-    val m = manifest(spark, tablePath)
-    require(m.filter(col("rows").isNull).limit(1).collect().isEmpty,
+    import org.apache.spark.sql.types._
+    val rows = historyRows(spark, tablePath).map { case (v, ts, n, r) =>
+      Row(v, ts.orNull, n, r)
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("version", LongType, nullable = false),
+      StructField("commit_ts", LongType, nullable = true),
+      StructField("n_files", LongType, nullable = false),
+      StructField("n_rows", LongType, nullable = true))))
+  }
+
+  /** (version, commit_ts, n_files, n_rows) per generation,
+    * version-ascending, aggregated on the driver — [[tableHistory]]'s
+    * rows and the SQL catalog's `<t>.history` table. Loud when any
+    * generation predates row-count manifests, rather than
+    * undercounting. `commit_ts` is None for unstamped generations — a
+    * report column, unlike [[versionAt]] which refuses mixed
+    * timelines. */
+  private[graft] def historyRows(
+      spark: SparkSession,
+      tablePath: String): Seq[(Long, Option[Long], Long, Long)] =
+    countedHistory(spark, tablePath, "tableHistory", "use countAsOf")
+      .map(g => (g.version, g.commit.commitTs, g.files.length.toLong,
+        g.files.map(_.rows.get).sum))
+
+  /** [[history]] for a verb that sums its footer counts, refused when a
+    * generation predates row counts (it would undercount) or when live
+    * deletion vectors touch its files: footer counts are PHYSICAL and
+    * would silently overcount deleted rows — `advice` names the
+    * DV-aware verb. */
+  private def countedHistory(
+      spark: SparkSession,
+      tablePath: String,
+      verb: String,
+      advice: String): Seq[Generation] = {
+    val gens = history(spark, tablePath)
+    require(gens.forall(_.files.forall(_.rows.isDefined)),
       s"$tablePath carries generations without footer counts — " +
-        "tableHistory would undercount; recommit those versions")
-    require(!liveDvEntriesExist(spark, tablePath,
-      m.select(col("file")).collect().map(_.getString(0)).toSeq),
-      s"$tablePath carries live deletion vectors — tableHistory's " +
-        "footer counts would overcount deleted rows; use countAsOf")
-    m.groupBy(col("version"))
-      .agg(max(col("commit_ts")).as("commit_ts"),
-        count(lit(1)).as("n_files"),
-        sum(col("rows")).as("n_rows"))
+        s"$verb would undercount; recommit those versions")
+    val possessive = if (verb.endsWith("s")) s"$verb'" else s"$verb's"
+    require(!liveDvEntriesExist(spark, tablePath, gens.flatMap(_.paths)),
+      s"$tablePath carries live deletion vectors — $possessive footer " +
+        s"counts would overcount deleted rows; $advice")
+    gens
   }
 
   /** Deletion-vector PRESSURE on the head version — the growth trigger
@@ -5623,12 +5621,12 @@ object Snapshots {
     val head = latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(
         s"dvStats: $tablePath has no committed versions"))
-    val rows = manifestRows(spark, tablePath, head)
-    require(rows.forall(_._3.isDefined),
+    val files = filesOf(manifestFor(spark, tablePath, head))
+    require(files.forall(_.rows.isDefined),
       s"version $head of $tablePath predates row-count manifests — " +
         "dvStats needs footer counts; recommit the version")
-    val physical = rows.map(_._3.get).sum
-    val dvRows = liveDvRows(spark, tablePath, head, rows)
+    val physical = files.map(_.rows.get).sum
+    val dvRows = liveDvRows(spark, tablePath, head, files)
     val frac =
       if (physical == 0L) 0.0 else dvRows.toDouble / physical.toDouble
     spark.createDataFrame(Seq(
@@ -5658,11 +5656,11 @@ object Snapshots {
         s"eqStats: $tablePath has no committed versions"))
     val eqDirs = Eq.listing(spark, tablePath).liveAt(head)
     val tombRows = eqDirs.map { case (_, dir) => Eq.keyCount(spark, dir) }.sum
-    val rows = manifestRows(spark, tablePath, head)
-    require(rows.forall(_._3.isDefined),
+    val files = filesOf(manifestFor(spark, tablePath, head))
+    require(files.forall(_.rows.isDefined),
       s"version $head of $tablePath predates row-count manifests — " +
         "eqStats needs footer counts; recommit the version")
-    val physical = rows.map(_._3.get).sum
+    val physical = files.map(_.rows.get).sum
     val frac =
       if (physical == 0L) { if (tombRows > 0L) 1.0 else 0.0 }
       else tombRows.toDouble / physical.toDouble
@@ -5710,18 +5708,16 @@ object Snapshots {
       tablePath: String,
       ts: Long): Long = {
     val gens = manifestMeta(spark, tablePath)
-      .map(r => (r.getLong(0),
-        if (r.isNullAt(1)) None else Some(r.getLong(1))))
     require(gens.nonEmpty, s"$tablePath has no committed versions")
-    val missing = gens.filter(_._2.isEmpty).map(_._1)
+    val missing = gens.filter(_.commitTs.isEmpty).map(_.version)
     require(missing.isEmpty,
       s"versions ${missing.sorted.mkString(",")} of $tablePath carry no " +
         "commit_ts — AS OF TIMESTAMP needs every generation timestamped")
-    val admitted = gens.filter(_._2.get <= ts)
+    val admitted = gens.filter(_.commitTs.get <= ts)
     require(admitted.nonEmpty,
       s"no snapshot of $tablePath at or before ts=$ts (earliest " +
-        s"commit_ts ${gens.map(_._2.get).min})")
-    admitted.map(_._1).max
+        s"commit_ts ${gens.map(_.commitTs.get).min})")
+    admitted.map(_.version).max
   }
 
   /** [[readAsOf]] with the version resolved by [[versionAt]] — the
@@ -5764,17 +5760,16 @@ object Snapshots {
     require(fromVersion <= toVersion,
       s"readAppendsBetween: fromVersion $fromVersion > toVersion $toVersion")
     val (from, to, stored) =
-      generationPair(spark, tablePath, fromVersion, toVersion,
-        "readAppendsBetween")
-    val toFiles = to.map(_._1).toSet
-    val dropped = from.filterNot(r => toFiles.contains(r._1))
+      generationPair(spark, tablePath, fromVersion, toVersion)
+    val toFiles = to.map(_.path).toSet
+    val dropped = from.filterNot(d => toFiles.contains(d.path))
     require(dropped.isEmpty,
       s"readAppendsBetween: versions $fromVersion..$toVersion of " +
         s"$tablePath are not append lineage — ${dropped.size} file(s) of " +
         s"v$fromVersion were rewritten in between (replace/MERGE/" +
         "OPTIMIZE); use diff() for the row-level audit")
-    val fromFiles = from.map(_._1).toSet
-    val fresh = to.filterNot(r => fromFiles.contains(r._1))
+    val fromFiles = from.map(_.path).toSet
+    val fresh = to.filterNot(d => fromFiles.contains(d.path))
     if (fresh.isEmpty) {
       val schema = stored.getOrElse(
         readAsOf(spark, tablePath, toVersion).schema)
@@ -5785,18 +5780,17 @@ object Snapshots {
     }
   }
 
-  /** (file, part) rows of TWO generations plus the destination's
-    * stored schema, from a single eager read of exactly those TWO
-    * generations' manifest files — the interval verbs' resolution:
-    * O(files of from + files of to) rows collected, never the history.
-    * Loud per missing version, naming the verb's contract. */
+  /** The files of TWO generations plus the destination's stored
+    * schema, from a single eager read of exactly those TWO generations'
+    * manifest files — the interval verbs' resolution: O(files of from
+    * + files of to) rows collected, never the history. Loud per missing
+    * version. */
   private def generationPair(
       spark: SparkSession,
       tablePath: String,
       fromVersion: Long,
-      toVersion: Long,
-      verb: String)
-      : (Seq[(String, String)], Seq[(String, String)],
+      toVersion: Long)
+      : (Seq[DataFile], Seq[DataFile],
         Option[org.apache.spark.sql.types.StructType]) = {
     manifestReads.incrementAndGet()
     recoverManifestSwap(spark, tablePath)
@@ -5804,25 +5798,18 @@ object Snapshots {
     val paths = Seq(fromVersion, toVersion).distinct
       .map(genFilePath(tablePath, _))
       .filter(p => f.exists(new Path(p)))
-    val rows =
-      if (paths.isEmpty) Array.empty[Row]
-      else try readManifestFiles(spark, paths, ManifestColNames)
+    val gens =
+      try readGenerations(spark, paths)
       catch {
         // an endpoint vanished mid-read (racing retraction/vacuum) —
         // same loud answer as a missing generation below
-        case e: Throwable if isFileGone(e) => Array.empty[Row]
+        case e: Throwable if isFileGone(e) => Seq.empty
       }
-    def of(v: Long): Seq[(String, String)] =
-      rows.filter(_.getLong(0) == v).map(r => (r.getString(1),
-        if (r.isNullAt(2)) null else r.getString(2))).toSeq
+    def of(v: Long): Option[Generation] = gens.find(_.version == v)
     val (from, to) = (of(fromVersion), of(toVersion))
-    require(from.nonEmpty,
-      s"snapshot version $fromVersion of $tablePath is not in the " +
-        "manifest (never committed, or expired by vacuum)")
-    require(to.nonEmpty,
-      s"snapshot version $toVersion of $tablePath is not in the " +
-        "manifest (never committed, or expired by vacuum)")
-    (from, to, storedSchemaOf(rows.filter(_.getLong(0) == toVersion)))
+    require(from.isDefined, notInManifest(tablePath, fromVersion))
+    require(to.isDefined, notInManifest(tablePath, toVersion))
+    (from.get.files, to.get.files, to.get.schema)
   }
 
   /** Row-level CDC feed between two versions, O(delta) — the
@@ -5848,10 +5835,9 @@ object Snapshots {
     require(fromVersion <= toVersion,
       s"readChangesBetween: fromVersion $fromVersion > toVersion $toVersion")
     val (from, to, stored) =
-      generationPair(spark, tablePath, fromVersion, toVersion,
-        "readChangesBetween")
-    val toFiles = to.map(_._1).toSet
-    val dropped = from.filterNot(r => toFiles.contains(r._1))
+      generationPair(spark, tablePath, fromVersion, toVersion)
+    val toFiles = to.map(_.path).toSet
+    val dropped = from.filterNot(d => toFiles.contains(d.path))
     require(dropped.isEmpty,
       s"readChangesBetween: versions $fromVersion..$toVersion of " +
         s"$tablePath are not append+delete lineage — ${dropped.size} " +
@@ -5861,7 +5847,7 @@ object Snapshots {
     val gens = resolveSidecars(spark, tablePath, toVersion)
     val l2p = logicalToPhysical(gens.governing(spark, ColMap))
     val phys = stored.map(physicalSchema(_, l2p))
-    def rowsOf(files: Seq[(String, String)], withMeta: Boolean) =
+    def rowsOf(files: Seq[DataFile], withMeta: Boolean) =
       fromPhysical(readFileRows(spark, files, phys, withMeta), l2p)
 
     def dvAt(v: Long) =
@@ -5873,8 +5859,8 @@ object Snapshots {
     val newlyDeleted = dTo.exceptAll(dFrom)
     val resurrected = dFrom.exceptAll(dTo)
 
-    val fromFileSet = from.map(_._1).toSet
-    val freshFiles = to.filterNot(r => fromFileSet.contains(r._1))
+    val fromFileSet = from.map(_.path).toSet
+    val freshFiles = to.filterNot(d => fromFileSet.contains(d.path))
     // materialize rows addressed by a DV-id frame: scan ONLY the
     // files that carry them, semi-join on the row identity
     def materialize(ids: DataFrame, tag: String): Option[DataFrame] = {
@@ -5882,8 +5868,8 @@ object Snapshots {
         .collect().map(_.getString(0)).toSet
       if (files.isEmpty) None
       else {
-        val rows = to.filter(r => files.contains(r._1))
-        val scan = rowsOf(rows, withMeta = true)
+        val scan = rowsOf(to.filter(d => files.contains(d.path)),
+          withMeta = true)
         Some(scan.join(ids,
           scan(DvFileCol) === ids("file") &&
             scan(DvPosCol) === ids("row_index"), "left_semi")
@@ -5902,7 +5888,7 @@ object Snapshots {
     // deletes that hit PRE-EXISTING rows only (fresh-file deletes
     // already cancelled inside plusFresh)
     val fromFilesDf = spark.createDataFrame(
-      from.map(r => Tuple1(r._1))).toDF("file")
+      from.map(d => Tuple1(d.path))).toDF("file")
     val minusRows = materialize(
       newlyDeleted.join(fromFilesDf, Seq("file"), "left_semi"), "-")
     val plusBack = materialize(resurrected, "+")
@@ -6007,16 +5993,16 @@ object Snapshots {
       keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "purgeKeys needs key columns")
     requireNoColMap(spark, tablePath, "purgeKeys")
-    val m = manifest(spark, tablePath).collect()
-    require(m.nonEmpty, s"$tablePath has no committed versions")
+    val gens = history(spark, tablePath)
+    require(gens.nonEmpty, s"$tablePath has no committed versions")
+    val entries = gens.flatMap(_.files)
     // purge rewrites files under NEW paths; a live deletion-vector
     // entry pointing at an old path would die silently and resurrect
     // its deleted row in every governed version. Refuse loudly while
     // any DV entry references a manifest file — compact the deletes
     // away first (optimize + vacuum) or extend purge with DV
     // remapping. (Dead entries — files already replaced — are fine.)
-    require(!liveDvEntriesExist(spark, tablePath,
-      m.map(_.getString(1)).toSeq),
+    require(!liveDvEntriesExist(spark, tablePath, entries.map(_.path)),
       s"purgeKeys: $tablePath carries live deletion-vector entries — " +
         "rewritten files would orphan them and resurrect deleted rows; " +
         "compact deletes first (optimize, then vacuum) or remap the " +
@@ -6025,7 +6011,7 @@ object Snapshots {
     val k = keys.select(keyCols.map(col): _*).distinct()
     val keySchema = org.apache.spark.sql.types.StructType(
       keyCols.map(c => k.schema(c)))
-    val allFiles = m.map(_.getString(1)).distinct.toSeq.sorted
+    val allFiles = entries.map(_.path).distinct.sorted
     val hitFiles = spark.read.schema(keySchema)
       .parquet(allFiles: _*)
       .withColumn("__f", input_file_name())
@@ -6042,10 +6028,8 @@ object Snapshots {
       var purged = 0L
       val mapping = hitFiles.toSeq.sorted.zipWithIndex.map {
         case (old, i) =>
-          val row = m.find(r => norm(r.getString(1)) == old).get
-          val frag = if (row.isNullAt(2)) null else row.getString(2)
-          val outDir = if (frag == null) s"$purgeRoot/f$i"
-            else s"$purgeRoot/f$i/$frag"
+          val frag = entries.find(d => norm(d.path) == old).get.part
+          val outDir = frag.fold(s"$purgeRoot/f$i")(p => s"$purgeRoot/f$i/$p")
           spark.read.schema(graft.Tables.footerSchema(spark, old))
             .parquet(old)
             .join(k, keyCols.toSeq, "left_anti")
@@ -6054,27 +6038,17 @@ object Snapshots {
           val fresh = listDataFiles(spark, outDir)
           require(fresh.size == 1,
             s"purge rewrite of $old produced ${fresh.size} files")
-          val oldRows = footerCounts(spark, Seq((old, frag))).head._3.get
-          val newRows =
-            footerCounts(spark, Seq((fresh.head, frag))).head._3.get
+          val Seq(oldRows, newRows) = footerCounts(spark,
+            Seq(old, fresh.head).map(DataFile(_, frag, None))).map(_.rows.get)
           purged += oldRows - newRows
           old -> (fresh.head, newRows)
       }.toMap
-      requireHeadUnmoved(spark, tablePath,
-        Some(m.map(_.getLong(0)).max), "purgeKeys")
-      swapManifest(spark, tablePath, m.toSeq.map { r =>
-        val part = if (r.isNullAt(2)) null else r.getString(2)
-        val schemaJson = if (r.isNullAt(3)) null else r.getString(3)
-        val ts = if (r.isNullAt(5)) None else Some(r.getLong(5))
-        val par = if (r.isNullAt(6)) None else Some(r.getLong(6))
-        mapping.get(norm(r.getString(1))) match {
-          case Some((nf, nRows)) =>
-            (r.getLong(0), nf, part, schemaJson, Some(nRows), ts, par)
-          case None =>
-            (r.getLong(0), r.getString(1), part, schemaJson,
-              if (r.isNullAt(4)) None else Some(r.getLong(4)), ts, par)
-        }
-      })
+      requireHeadUnmoved(spark, tablePath, Some(gens.map(_.version).max),
+        "purgeKeys")
+      swapManifest(spark, tablePath, gens.map(g => g.copy(files =
+        g.files.map(d => mapping.get(norm(d.path)).fold(d) {
+          case (nf, nRows) => d.copy(path = nf, rows = Some(nRows))
+        }))))
       // per-version sidecars (clustered min/max stats, bloom
       // manifests) reference data files by path too: repoint them
       // (and refresh n_rows) BEFORE the old files die, so

@@ -1416,8 +1416,8 @@ private[graft] object CoreQueries {
       val v1 = Snapshots.latestVersion(s, tbl).get
       require(v1 == v0 + 1,
         "SQL UPDATE must mint exactly one generation")
-      val shared = Snapshots.generationOf(s, tbl, v0)._1.map(_._1).toSet
-        .intersect(Snapshots.generationOf(s, tbl, v1)._1.map(_._1).toSet)
+      val shared = Snapshots.generationOf(s, tbl, v0).paths.toSet
+        .intersect(Snapshots.generationOf(s, tbl, v1).paths.toSet)
       // the sharing pin is only falsifiable when some range file lies
       // ENTIRELY above the predicate cut: at sf0.001 user_id tops out
       // at 14, `<= 25` matches every row, and the correct file-exact
@@ -1625,7 +1625,7 @@ private[graft] object CoreQueries {
       Snapshots.commitClustered(s, ev, tbl, "event_type",
         numFiles = 6, append = false)
       val v0 = Snapshots.latestVersion(s, tbl).get
-      val f0 = Snapshots.generationOf(s, tbl, v0)._1.map(_._1).toSet
+      val f0 = Snapshots.generationOf(s, tbl, v0).paths.toSet
       Catalog.register(s, root, "rw", tbl)
       val cat = sqlCatalog(s, "grw", root)
       // the corrected reload: click rows at doubled cents
@@ -1644,7 +1644,7 @@ private[graft] object CoreQueries {
       val v1 = Snapshots.latestVersion(s, tbl).get
       require(v1 == v0 + 1,
         "REPLACE WHERE must be exactly ONE derived generation")
-      val f1 = Snapshots.generationOf(s, tbl, v1)._1.map(_._1).toSet
+      val f1 = Snapshots.generationOf(s, tbl, v1).paths.toSet
       require((f0 -- f1).nonEmpty && (f0 intersect f1).nonEmpty,
         s"file-exact blast radius: only the click-carrying files may " +
           s"rewrite (rewrote ${(f0 -- f1).size} of ${f0.size})")
@@ -1813,7 +1813,7 @@ private[graft] object CoreQueries {
       val ev = eventsCents(s, dir)
       Snapshots.commit(s, ev, tbl, append = false)
       def filesOf(v: Long) =
-        Snapshots.generationOf(s, tbl, v)._1.map(_._1).toSet
+        Snapshots.generationOf(s, tbl, v).paths.toSet
       val changed = ev.filter(col("event_id") % 5 === 0)
       val v1 = Snapshots.commitEqUpsert(s, tbl,
         upserts = changed.withColumn("value_cents",

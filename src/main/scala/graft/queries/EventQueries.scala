@@ -1503,9 +1503,8 @@ private[graft] object EventQueries {
       // ZERO-REWRITE pin: every sync's generation carries every file
       // of its parent verbatim (tombstones + fresh files only)
       (1L to head).foreach { v =>
-        val prev = Snapshots.generationOf(s, tbl, v - 1)._1
-          .map(_._1).toSet
-        val cur = Snapshots.generationOf(s, tbl, v)._1.map(_._1).toSet
+        val prev = Snapshots.generationOf(s, tbl, v - 1).paths.toSet
+        val cur = Snapshots.generationOf(s, tbl, v).paths.toSet
         require(prev.subsetOf(cur),
           s"MOR sync v$v of the CDC stream rewrote a pre-existing file")
       }

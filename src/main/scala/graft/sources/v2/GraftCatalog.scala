@@ -208,24 +208,21 @@ class GraftCatalog extends TableCatalog with ProcedureCatalog
         require(version.isEmpty,
           s"$qualified is the whole commit timeline — VERSION/TIMESTAMP " +
             "AS OF addresses the data table and the files face")
-        val rows = Snapshots.tableHistory(s, root)
-          .orderBy("version").collect().map { r =>
+        val rows = Snapshots.historyRows(s, root).map {
+          case (v, ts, nFiles, nRows) =>
             new GenericInternalRow(Array[Any](
-              r.getLong(0),
-              if (r.isNullAt(1)) null else Long.box(r.getLong(1)),
-              r.getLong(2), r.getLong(3))): InternalRow
-          }
+              v, ts.map(Long.box).orNull, nFiles, nRows)): InternalRow
+        }.toArray
         new GraftMetaTable(qualified, GraftMetaTables.HistorySchema, rows)
       case "files" =>
         val v = version.orElse(Snapshots.latestVersion(s, root))
           .getOrElse(throw new NoSuchTableException(ident))
-        val rows = Snapshots.generationFileMeta(s, root, v)
-          .map { case (f, p, n) =>
-            new GenericInternalRow(Array[Any](
-              UTF8String.fromString(f),
-              if (p == null) null else UTF8String.fromString(p),
-              n.map(Long.box).orNull)): InternalRow
-          }.toArray
+        val rows = Snapshots.generationOf(s, root, v).files.map { d =>
+          new GenericInternalRow(Array[Any](
+            UTF8String.fromString(d.path),
+            d.part.map(UTF8String.fromString).orNull,
+            d.rows.map(Long.box).orNull)): InternalRow
+        }.toArray
         new GraftMetaTable(qualified, GraftMetaTables.FilesSchema, rows)
       case "branches" =>
         require(version.isEmpty,
@@ -765,15 +762,15 @@ private[v2] object GraftSnapshotTable {
       version: Long): Table = {
     val face = Snapshots.resolveFace(spark, root, version,
       Snapshots.GovFamilies ++ Snapshots.IndexFamilies)
-    val parted = face.rows.filter(_._2 != null)
+    val parted = face.files.filter(_.part.isDefined)
     // partition columns are path-encoded; Spark reconstructs them from
     // ONE basePath — the single commit root every file of a freshly
     // written or compacted partitioned generation shares. A MULTI-ROOT
     // lineage (a partitioned table after file-swapping DML) cannot.
     val partRoots =
-      parted.map(r => new Path(r._1).getParent.getParent.toString).distinct
+      parted.map(d => new Path(d.path).getParent.getParent.toString).distinct
     val multiRoot = parted.nonEmpty &&
-      (parted.length != face.rows.length || partRoots.length != 1)
+      (parted.length != face.files.length || partRoots.length != 1)
     val options: Map[String, String] =
       if (parted.isEmpty || multiRoot) Map.empty
       else Map("basePath" -> partRoots.head)
@@ -791,7 +788,7 @@ private[v2] object GraftSnapshotTable {
     new GraftSnapshotTable(tableName, face, refusal,
       ParquetTable(tableName, spark,
         new CaseInsensitiveStringMap(options.asJava),
-        face.rows.map(_._1).toIndexedSeq, face.stored,
+        face.files.map(_.path).toIndexedSeq, face.stored,
         classOf[ParquetFileFormat]),
       if (refusal.isEmpty) face.runtimeKeys(spark) else Seq.empty)
   }
@@ -960,8 +957,8 @@ private[v2] class GraftWriteBuilder(
             case None =>
               if (!overwrite)
                 Snapshots.latestVersion(s, root).foreach { head =>
-                  val (rows, _) = Snapshots.generationOf(s, root, head)
-                  require(rows.forall(_._2 == null),
+                  require(Snapshots.generationOf(s, root, head).files
+                    .forall(_.part.isEmpty),
                     s"INSERT INTO $tableName: the head generation is " +
                       "hive-partitioned — a flat SQL append would mix " +
                       "layouts under the SQL scan's single basePath; " +

@@ -67,7 +67,7 @@ class GraftSnapshotStreamSource extends TableProvider
     val head = Snapshots.latestVersion(spark, root).getOrElse(
       throw new IllegalArgumentException(
         s"graft-snapshot stream source: $root has no committed versions"))
-    Snapshots.generationOf(spark, root, head)._2.getOrElse(
+    Snapshots.generationOf(spark, root, head).schema.getOrElse(
       throw new IllegalArgumentException(
         s"graft-snapshot stream source: $root v$head carries no stored " +
           "schema (pre-schema-manifest generation) — recommit the head"))
@@ -144,7 +144,8 @@ private[v2] class GraftMicroBatchStream(
     val s = start.asInstanceOf[GraftVersionOffset].version
     val e = end.asInstanceOf[GraftVersionOffset].version
     if (e <= s || e < 0) return Array.empty
-    val (endRows, stored) = Snapshots.generationOf(spark, root, e)
+    val endGen = Snapshots.generationOf(spark, root, e)
+    val (endRows, stored) = (endGen.files, endGen.schema)
     require(stored.contains(streamSchema) || stored.isEmpty,
       s"graft-snapshot stream on $root: version $e's stored schema " +
         s"(${stored.map(_.simpleString).getOrElse("?")}) no longer " +
@@ -154,25 +155,24 @@ private[v2] class GraftMicroBatchStream(
     val fresh =
       if (s < 0) endRows
       else {
-        val (startRows, _) = Snapshots.generationOf(spark, root, s)
-        val startFiles = startRows.map(_._1).toSet
-        val dropped = startRows.map(_._1)
-          .filterNot(f => endRows.exists(_._1 == f))
+        val startPaths = Snapshots.generationOf(spark, root, s).paths
+        val startFiles = startPaths.toSet
+        val dropped = startPaths.filterNot(f => endRows.exists(_.path == f))
         require(dropped.isEmpty,
           s"graft-snapshot stream on $root: versions $s..$e are not " +
             s"append lineage — ${dropped.size} file(s) of v$s were " +
             "rewritten in between (replace/MERGE/OPTIMIZE); the stream " +
             "cannot express row removal — re-seed the consumer (or " +
             "poll Snapshots.readChangesBetween in batch)")
-        endRows.filterNot(r => startFiles.contains(r._1))
+        endRows.filterNot(d => startFiles.contains(d.path))
       }
     if (fresh.isEmpty) return Array.empty
-    require(fresh.forall(_._2 == null),
+    require(fresh.forall(_.part.isEmpty),
       s"graft-snapshot stream on $root: the interval's fresh files are " +
         "hive-partitioned — the stream scan cannot reconstruct " +
         "path-encoded partition columns; poll " +
         "Snapshots.readAppendsBetween in batch")
-    require(!Snapshots.liveDvEntriesExist(spark, root, fresh.map(_._1)),
+    require(!Snapshots.liveDvEntriesExist(spark, root, fresh.map(_.path)),
       s"graft-snapshot stream on $root: live deletion vectors govern " +
         "the interval's fresh files — the stream cannot apply them; " +
         "compact with optimize, or poll readChangesBetween in batch")
@@ -188,7 +188,7 @@ private[v2] class GraftMicroBatchStream(
         "in batch")
     val tbl = ParquetTable(s"graft-snapshot(`$root`)@$s..$e", spark,
       CaseInsensitiveStringMap.empty(),
-      fresh.map(_._1).toIndexedSeq, Some(streamSchema),
+      fresh.map(_.path).toIndexedSeq, Some(streamSchema),
       classOf[ParquetFileFormat])
     val batch = tbl.newScanBuilder(CaseInsensitiveStringMap.empty())
       .build().toBatch

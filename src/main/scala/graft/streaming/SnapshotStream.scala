@@ -37,6 +37,17 @@ import graft.operators.{Changes, Snapshots}
   */
 object SnapshotStream {
 
+  /** Has a generation of the table been stamped with `batchId`? One
+    * timeline entry per GENERATION, so the replay check reads
+    * O(versions) entries per micro-batch — never the manifest's
+    * O(versions × files) fan-out. */
+  private def replayed(
+      spark: SparkSession,
+      tablePath: String,
+      batchId: Long): Boolean =
+    Snapshots.manifestMeta(spark, tablePath)
+      .exists(_.commitTs.contains(batchId))
+
   /** Commit one micro-batch as an append generation, exactly once:
     * returns the minted version, or None when a generation stamped
     * with this `batchId` already exists (a replay — skipped without
@@ -48,11 +59,7 @@ object SnapshotStream {
       tablePath: String,
       batchId: Long,
       df: DataFrame): Option[Long] = {
-    // one row per GENERATION (the distinct runs in the executors), so
-    // the replay check collects O(versions) rows per micro-batch —
-    // never the manifest's O(versions × files) fan-out
-    val seen = Snapshots.manifestMeta(spark, tablePath)
-      .exists(r => !r.isNullAt(1) && r.getLong(1) == batchId)
+    val seen = replayed(spark, tablePath, batchId)
     if (seen) None
     else Some(Snapshots.commit(spark, df, tablePath,
       append = Snapshots.latestVersion(spark, tablePath).isDefined,
@@ -77,8 +84,7 @@ object SnapshotStream {
       audit: DataFrame => DataFrame,
       batchId: Long,
       df: DataFrame): Option[Long] = {
-    val seen = Snapshots.manifestMeta(spark, tablePath)
-      .exists(r => !r.isNullAt(1) && r.getLong(1) == batchId)
+    val seen = replayed(spark, tablePath, batchId)
     val dlqDir = s"$dlqPath/b$batchId"
     val hadoop = new org.apache.hadoop.fs.Path(dlqDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -200,8 +206,7 @@ object SnapshotStream {
       tsCol: String,
       tieCols: Seq[String] = Nil,
       opCol: String = "op"): Option[Long] = {
-    val seen = Snapshots.manifestMeta(spark, tablePath)
-      .exists(r => !r.isNullAt(1) && r.getLong(1) == batchId)
+    val seen = replayed(spark, tablePath, batchId)
     if (seen) return None
     val head = Snapshots.latestVersion(spark, tablePath).getOrElse(
       throw new IllegalArgumentException(

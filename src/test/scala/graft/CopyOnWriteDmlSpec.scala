@@ -64,8 +64,8 @@ class CopyOnWriteDmlSpec extends SparkSuite {
       .getOrElse(Set.empty)
 
   private def files(tbl: String, v: Long): Set[String] =
-    Snapshots.generationOf(spark, tbl, v)._1
-      .map(r => new Path(r._1).toUri.getPath).toSet
+    Snapshots.generationOf(spark, tbl, v).paths
+      .map(p => new Path(p).toUri.getPath).toSet
 
   private val expected: Map[Long, Long] =
     ((1L to 12L).filterNot(Set(4L, 10L)).map(i => i -> i * 10L) :+

@@ -138,7 +138,7 @@ class GovernanceTravelSpec extends SparkSuite {
       Seq((5L, "a")).toDF("id", "p"), "p")
     val full = dvAsOf(tbl, vRp)
     assert(full.length == 2 && !exists(s"$tbl/_dv/v$vRp"))
-    val keptFiles = Snapshots.generationOf(spark, tbl, vRp)._1.map(_._1).toSet
+    val keptFiles = Snapshots.generationOf(spark, tbl, vRp).paths.toSet
     Snapshots.vacuum(spark, tbl, keepFrom = vRp)
     assert(!exists(s"$tbl/_dv/v$vDel"), "the delete's dir expires with it")
     assert(dvAsOf(tbl, vRp) == full.filter(e => keptFiles.contains(e._1)),

@@ -498,8 +498,8 @@ class GraftCatalogSpec extends SparkSuite {
     spark.sql(s"ALTER TABLE $cat.al ADD COLUMNS (score BIGINT)")
     assert(Snapshots.latestVersion(spark, tbl).contains(1L),
       "ADD COLUMN must mint exactly one generation, no data rewrite")
-    assert(Snapshots.generationOf(spark, tbl, 0L)._1.map(_._1).toSet ==
-      Snapshots.generationOf(spark, tbl, 1L)._1.map(_._1).toSet,
+    assert(Snapshots.generationOf(spark, tbl, 0L).paths.toSet ==
+      Snapshots.generationOf(spark, tbl, 1L).paths.toSet,
       "the files must repoint verbatim")
     val evolved = spark.sql(s"SELECT id, score FROM $cat.al ORDER BY id")
       .collect().map(r => (r.getLong(0), r.isNullAt(1)))

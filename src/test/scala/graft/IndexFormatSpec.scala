@@ -149,7 +149,7 @@ class IndexFormatSpec extends SparkSuite {
       tbl, "id", append = false)
     // a mixed sidecar: the same files' sketches over both columns
     val dir = s"$tbl/_bloom/v$v"
-    val files = Snapshots.generationFileMeta(spark, tbl, v).map(_._1)
+    val files = Snapshots.generationOf(spark, tbl, v).paths
     val mixed = freshDir() + "/mixed"
     Skipping.bloomRows(spark, files, "id", Skipping.DefaultSizing)
       .unionByName(
@@ -162,7 +162,7 @@ class IndexFormatSpec extends SparkSuite {
       Snapshots.scanPointAsOf(spark, tbl, v, "id", 7L))
     assert(Snapshots.resolveFace(spark, tbl, v, Snapshots.IndexFamilies)
       .runtimeKeys(spark).isEmpty)
-    val rows = Snapshots.generationFileMeta(spark, tbl, v)
+    val rows = Snapshots.generationOf(spark, tbl, v).files
     assert(Snapshots.bloomPrunedForDml(
       Snapshots.dmlFace(spark, tbl, "updateWhere"), rows,
       col("id") === 7L) == rows)

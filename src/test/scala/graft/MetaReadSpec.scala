@@ -26,6 +26,18 @@ class MetaReadSpec extends SparkSuite {
 
   private def conf = spark.sparkContext.hadoopConfiguration
 
+  /** A generation's (file, part, rows) entries, the shape a Spark read of
+    * the generation file collects. */
+  private def fileMeta(root: String, v: Long) =
+    Snapshots.generationOf(spark, root, v).files
+      .map(d => (d.path, d.part.orNull, d.rows))
+
+  /** A timeline entry as the (version, commit_ts, parent) row a Spark
+    * read of the generation file collects. */
+  private def timelineRow(c: Snapshots.Commit): Row =
+    Row(c.version, c.commitTs.map(Long.box).orNull,
+      c.parent.map(Long.box).orNull)
+
   /** A copy of the directory tree at `src` — its files get new paths,
     * so the status-keyed memo holds nothing for them. */
   private def copyTree(src: String, dst: String): Unit = {
@@ -87,8 +99,7 @@ class MetaReadSpec extends SparkSuite {
     val gen = s"$cold/_versions/gen-v6.parquet"
 
     val opened0 = Snapshots.manifestFilesOpened.get
-    val (files, jobsGen) = jobsDuring(
-      Snapshots.generationFileMeta(spark, cold, 6L))
+    val (files, jobsGen) = jobsDuring(fileMeta(cold, 6L))
     assert(jobsGen == 0, s"a cold generation read ran $jobsGen job(s)")
     assert(Snapshots.manifestFilesOpened.get - opened0 == 1L,
       "the generation read must open its file (a cold read)")
@@ -97,7 +108,8 @@ class MetaReadSpec extends SparkSuite {
       .as[(String, String, Option[Long])].collect().toSeq
     assert(files.sortBy(_._1) == sparkFiles.sortBy(_._1))
 
-    val (timeline, jobsMeta) = jobsDuring(Snapshots.manifestMeta(spark, cold))
+    val (timeline, jobsMeta) =
+      jobsDuring(Snapshots.manifestMeta(spark, cold).map(timelineRow))
     assert(jobsMeta == 0, s"a checkpointed timeline read ran $jobsMeta job(s)")
     val sparkTimeline = (0L to 6L).map { v =>
       spark.read.parquet(s"$cold/_versions/gen-v$v.parquet")
@@ -115,6 +127,45 @@ class MetaReadSpec extends SparkSuite {
     assert(entries == Map(
       "t" -> Catalog.Entry(root, Map("retain_versions" -> "3")),
       "u" -> Catalog.Entry(cold, Map.empty)))
+  }
+
+  test("the full-history verbs and the catalog's history/files tables " +
+    "run no Spark job on a warm, plain 3-generation table") {
+    val base = tmpDir("graft_metaread_hist_")
+    val root = s"$base/t"
+    Snapshots.init(spark, root)
+    (0 until 3).foreach { i =>
+      Snapshots.commit(spark, Seq((i.toLong, s"x$i")).toDF("id", "s"), root,
+        append = i > 0, ts = Some(10L + i))
+    }
+    val catRoot = s"$base/cat"
+    Catalog.register(spark, catRoot, "t", root)
+    val cat = "gmetaread"
+    spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.v2.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$cat.root", catRoot)
+    Snapshots.manifest(spark, root).collect() // warm the generation memo
+    def noJobs[T](what: String)(body: => T): T = {
+      val (out, jobs) = jobsDuring(body)
+      assert(jobs == 0, s"$what ran $jobs Spark job(s)")
+      out
+    }
+    assert(noJobs("tableHistory")(
+      Snapshots.tableHistory(spark, root).collect()).length == 3)
+    val hist = s"SELECT * FROM $cat.t.history"
+    val files = s"SELECT * FROM $cat.t.files"
+    spark.sql(hist).collect() // the catalog's first load
+    assert(noJobs("<t>.history")(spark.sql(hist).collect()).length == 3)
+    assert(noJobs("<t>.files")(spark.sql(files).collect()).length == 3)
+    assert(noJobs("removeOrphans")(
+      Snapshots.removeOrphans(spark, root, olderThanMs = 86400000L)) == 0L)
+    Snapshots.createBranch(spark, root, "gone")
+    assert(noJobs("dropBranch")(Snapshots.dropBranch(spark, root, "gone")))
+    noJobs("vacuum")(Snapshots.vacuum(spark, root, keepFrom = 1L))
+    Snapshots.createBranch(spark, root, "live")
+    noJobs("vacuum beside a live branch")(
+      Snapshots.vacuum(spark, root, keepFrom = 2L))
+    assert(Snapshots.listGenerations(spark, root) == Seq(2L))
+    assert(Snapshots.readAsOf(spark, root, 2L).count() == 3L)
   }
 
   test("a legacy Spark-written generation lacking columns (int32 row " +
@@ -138,10 +189,11 @@ class MetaReadSpec extends SparkSuite {
         null, null)
     }
     assert(driver.sortBy(_.getString(1)) == viaSpark.sortBy(_.getString(1)))
-    assert(Snapshots.generationFileMeta(spark, root, 0L).sortBy(_._1) ==
+    assert(fileMeta(root, 0L).sortBy(_._1) ==
       Seq(("file:/data/a.parquet", null, Some(3L)),
         ("file:/data/b.parquet", null, Some(4L))))
-    assert(Snapshots.manifestMeta(spark, root).toSeq == Seq(Row(0L, null, null)))
+    assert(Snapshots.manifestMeta(spark, root).map(timelineRow) ==
+      Seq(Row(0L, null, null)))
   }
 
   test("a Spark-written catalog dir (two part files, _SUCCESS and " +

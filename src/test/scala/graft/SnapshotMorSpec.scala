@@ -25,7 +25,7 @@ class SnapshotMorSpec extends SparkSuite {
   }
 
   private def filesOf(tbl: String, v: Long): Set[String] =
-    Snapshots.generationOf(spark, tbl, v)._1.map(_._1).toSet
+    Snapshots.generationOf(spark, tbl, v).paths.toSet
 
   test("commitEqUpsert is O(batch): tombstones + fresh files only, " +
     "every parent file repoints verbatim; readMorAsOf resolves " +
@@ -405,7 +405,8 @@ class SnapshotMorSpec extends SparkSuite {
         s"${p2.inputFiles.toSeq}")
     // the fold keeps the layout: every materialized file re-fragments
     val vF = Snapshots.foldEqDeletes(spark, tbl, Seq("id"))
-    val foldedRows = Snapshots.generationOf(spark, tbl, vF)._1
+    val foldedRows = Snapshots.generationOf(spark, tbl, vF).files
+      .map(d => (d.path, d.part.orNull))
     assert(foldedRows.nonEmpty && foldedRows.forall(r =>
       r._2 != null && r._2.startsWith("p=")),
       s"the fold must materialize a partitioned face: $foldedRows")

@@ -41,14 +41,14 @@ class SnapshotsConcurrencySpec extends SparkSuite {
   private def staged(
       tbl: String,
       tag: String,
-      df: DataFrame): Seq[(String, String, Option[Long])] = {
+      df: DataFrame): Seq[Snapshots.DataFile] = {
     val dir = s"$tbl/data/$tag"
     df.coalesce(1).write.parquet(dir)
     val fs = new java.io.File(dir).listFiles
       .filter(f => f.isFile && !f.getName.startsWith("_") &&
         !f.getName.startsWith("."))
     assert(fs.length == 1, s"expected one staged file, got ${fs.length}")
-    Seq((fs.head.getAbsolutePath, null: String, Some(df.count())))
+    Seq(Snapshots.DataFile(fs.head.getAbsolutePath, None, Some(df.count())))
   }
 
   private def headValues(tbl: String): Set[String] = {

@@ -31,7 +31,7 @@ class SnapshotsDmlSpec extends SparkSuite {
   }
 
   private def filesOf(tbl: String, v: Long): Set[String] =
-    Snapshots.generationOf(spark, tbl, v)._1.map(_._1).toSet
+    Snapshots.generationOf(spark, tbl, v).paths.toSet
 
   test("updateWhere rewrites ONLY the predicate's files; carried rows " +
     "byte-equal; history time-travels") {
@@ -116,7 +116,8 @@ class SnapshotsDmlSpec extends SparkSuite {
       col("id") === 1L, Seq("v" -> lit("A")))
     val v2 = Snapshots.updateWhere(spark, tbl,
       col("id") === 2L, Seq("p" -> lit("p9")))
-    val rows2 = Snapshots.generationOf(spark, tbl, v2)._1
+    val rows2 = Snapshots.generationOf(spark, tbl, v2).files
+      .map(d => (d.path, d.part.orNull))
     assert(rows2.forall(_._2 != null),
       "every manifest row must keep a partition fragment")
     assert(rows2.exists(_._2 == "p=p9"),
@@ -440,8 +441,7 @@ class SnapshotsDmlSpec extends SparkSuite {
       .toDF("id", "v", "amt")
     Snapshots.commitClustered(spark, df, tbl, "id",
       numFiles = 4, append = false)
-    val rows = Snapshots.generationOf(spark, tbl, 0L)._1
-      .map { case (f, p) => (f, p, None: Option[Long]) }
+    val rows = Snapshots.generationOf(spark, tbl, 0L).files
     val face = Snapshots.dmlFace(spark, tbl, "updateWhere")
     def admitted(pred: org.apache.spark.sql.Column): Int =
       Snapshots.statsPrunedForDml(face, rows, pred).length
@@ -477,8 +477,7 @@ class SnapshotsDmlSpec extends SparkSuite {
       .repartitionByRange(4, col("id"))
       .sortWithinPartitions("id")
     Snapshots.commitBloom(spark, df, tbl, "id", append = false)
-    val rows = Snapshots.generationOf(spark, tbl, 0L)._1
-      .map { case (f, p) => (f, p, None: Option[Long]) }
+    val rows = Snapshots.generationOf(spark, tbl, 0L).files
     val face = Snapshots.dmlFace(spark, tbl, "updateWhere")
     def admitted(pred: org.apache.spark.sql.Column): Int =
       Snapshots.bloomPrunedForDml(face, rows, pred).length
@@ -504,8 +503,7 @@ class SnapshotsDmlSpec extends SparkSuite {
       .toDF("id", "v", "amt")
     Snapshots.commitClustered(spark, df, tbl, "id",
       numFiles = 4, append = false)
-    val rows = Snapshots.generationOf(spark, tbl, 0L)._1
-      .map { case (f, p) => (f, p, None: Option[Long]) }
+    val rows = Snapshots.generationOf(spark, tbl, 0L).files
     val narrow = Seq((4L, 1L), (5L, 2L)).toDF("sid", "samt")
     val face = Snapshots.dmlFace(spark, tbl, "mergeInto")
     val admitted = Snapshots.mergeSourcePruned(face, rows,
@@ -534,8 +532,8 @@ class SnapshotsDmlSpec extends SparkSuite {
       tbl, "k", numFiles = 4, append = false)
     Snapshots.renameColumn(spark, tbl, "k", "key")
     val face = Snapshots.dmlFace(spark, tbl, "updateWhere")
-    assert(Snapshots.statsPrunedForDml(face, face.fileRows,
-      col("key") === 5L) == face.fileRows,
+    assert(Snapshots.statsPrunedForDml(face, face.files,
+      col("key") === 5L) == face.files,
       "stats pruning must stand down under a column mapping")
     val v = Snapshots.updateWhere(spark, tbl, col("key") === 5L,
       Seq("amt" -> lit(999L)))
@@ -567,8 +565,8 @@ class SnapshotsDmlSpec extends SparkSuite {
     spark.sql(s"DELETE FROM $cat.xd WHERE id % 5 = 0 AND length(v) > 1")
     assert(Snapshots.latestVersion(spark, tbl).contains(1L),
       "the expression delete must be ONE metadata generation")
-    assert(Snapshots.generationOf(spark, tbl, 0L)._1.map(_._1).toSet ==
-      Snapshots.generationOf(spark, tbl, 1L)._1.map(_._1).toSet,
+    assert(Snapshots.generationOf(spark, tbl, 0L).paths.toSet ==
+      Snapshots.generationOf(spark, tbl, 1L).paths.toSet,
       "a deletion-vector commit rewrites no data file")
     val left = Snapshots.readAsOf(spark, tbl, 1L)
       .select("id").as[Long].collect().sorted.toSeq

@@ -457,6 +457,17 @@ class SnapshotsResolutionSpec extends SparkSuite {
     assert(dl3 == 1L && rc3 <= 200L + 16L,
       s"versionAt budget: listings=$dl3 rows=$rc3 — one listing, one " +
         "row per generation (never the per-file fan-out)")
+    // the same reads, and the full-history ones, run no Spark job
+    Seq[(String, () => Any)](
+      "latestVersion" -> (() => Snapshots.latestVersion(spark, tbl)),
+      "versionAt" -> (() => Snapshots.versionAt(spark, tbl, 100L)),
+      "manifest()" -> (() => Snapshots.manifest(spark, tbl).collect()),
+      "tableHistory" -> (() => Snapshots.tableHistory(spark, tbl).collect())
+    ).foreach { case (what, read) =>
+      val (_, jobs) = jobsDuring(read())
+      assert(jobs == 0, s"$what ran $jobs Spark job(s) on a " +
+        "200-generation table")
+    }
   }
 
   test("full-history manifest() is served by the generation memo: a " +
