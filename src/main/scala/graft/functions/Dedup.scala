@@ -1,7 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Deduplication operators for corpus-scale pipelines: exact, MinHash+LSH,
   * SimHash, and n-gram Jaccard.
@@ -576,6 +579,13 @@ object Dedup {
     * `Observation` per round), instead of a separate `count()` job per
     * round against the checkpointed frame.
     *
+    * When the symmetrized edge list fits on the driver
+    * ([[symmetrizedEdges]]: no null endpoint and rows × 16 bytes within
+    * `spark.sql.autoBroadcastJoinThreshold`; -1 keeps it distributed)
+    * the same rounds replay there over primitive arrays: the same
+    * neighbour-min and label-of-label jump, the same changed count, the
+    * same `maxIter` failure, and a local frame with the same columns.
+    *
     * Only nodes that appear in at least one edge are returned (isolated
     * docs are their own trivial cluster and need no shuffle). Output:
     * (node, component) with component = min reachable node id.
@@ -588,43 +598,66 @@ object Dedup {
       aCol: String = "doc_a",
       bCol: String = "doc_b",
       maxIter: Int = 25): DataFrame = {
-    val symM = symmetrizedEdges(edges, aCol, bCol)
-    var labels = Materialize(
-      symM.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node")))
+    val loop: Rounds = symmetrizedEdges(edges, aCol, bCol) match {
+      case OnDriver(g) => new Rounds {
+        private var lbl = Array.range(0, g.n)
+        def round(): Long = {
+          val cur = lbl
+          // min of its label, its label's label and its neighbours'
+          lbl = Array.tabulate(g.n)(v => g.row(v).foldLeft(
+            math.min(cur(v), cur(cur(v))))((m, j) =>
+            math.min(m, cur(g.nbr(j)))))
+          (0 until g.n).count(v => lbl(v) < cur(v)).toLong
+        }
+        def result(): DataFrame = g.frame(edges.sparkSession, "component",
+          v => Some(g.ids(lbl(v))))
+      }
+      case OnExecutors(symM, _) => new Rounds {
+        private var labels = Materialize(
+          symM.select(col("src").as("node")).distinct()
+            .withColumn("lbl", col("node")))
+        def round(): Long = {
+          val nbrMin = symM
+            .join(labels.select(col("node").as("dst"), col("lbl")), Seq("dst"))
+            .groupBy(col("src")).agg(min(col("lbl")).as("nbr_lbl"))
+          // pointer jump: the label of my label (left join — every lbl IS
+          // a node id in the frame, but coalesce keeps a miss from
+          // dropping rows rather than silently mislabeling)
+          val obs = org.apache.spark.sql.Observation()
+          val next = labels
+            .join(nbrMin.select(col("src").as("node"), col("nbr_lbl")),
+              Seq("node"))
+            .join(labels.select(col("node").as("j_node"),
+              col("lbl").as("j_lbl")), col("lbl") === col("j_node"), "left")
+            .select(col("node"), col("lbl"),
+              least(col("lbl"), col("nbr_lbl"),
+                coalesce(col("j_lbl"), col("lbl"))).as("new_lbl"))
+            .observe(obs,
+              sum(when(col("new_lbl") < col("lbl"), 1L).otherwise(0L))
+                .as("changed"))
+          val nextM = Materialize(next)
+          Materialize.drop(labels) // superseded round frame: blocks dead
+          labels = nextM.select(col("node"), col("new_lbl").as("lbl"))
+          Option(obs.get.apply("changed"))
+            .map(_.asInstanceOf[Long]).getOrElse(0L)
+        }
+        def result(): DataFrame = {
+          Materialize.drop(symM) // final labels are materialized
+          labels.select(col("node"), col("lbl").as("component"))
+        }
+      }
+    }
     var it = 0
     var changed = 1L
     while (changed > 0 && it < maxIter) {
-      val nbrMin = symM
-        .join(labels.select(col("node").as("dst"), col("lbl")), Seq("dst"))
-        .groupBy(col("src")).agg(min(col("lbl")).as("nbr_lbl"))
-      // pointer jump: the label of my label (left join — every lbl IS a
-      // node id in the frame, but coalesce keeps a miss from dropping
-      // rows rather than silently mislabeling)
-      val obs = org.apache.spark.sql.Observation()
-      val next = labels
-        .join(nbrMin.select(col("src").as("node"), col("nbr_lbl")), Seq("node"))
-        .join(labels.select(col("node").as("j_node"), col("lbl").as("j_lbl")),
-          col("lbl") === col("j_node"), "left")
-        .select(col("node"), col("lbl"),
-          least(col("lbl"), col("nbr_lbl"),
-            coalesce(col("j_lbl"), col("lbl"))).as("new_lbl"))
-        .observe(obs,
-          sum(when(col("new_lbl") < col("lbl"), 1L).otherwise(0L))
-            .as("changed"))
-      val nextM = Materialize(next)
-      changed = Option(obs.get.apply("changed"))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      Materialize.drop(labels) // superseded round frame: blocks dead
-      labels = nextM.select(col("node"), col("new_lbl").as("lbl"))
+      changed = loop.round()
       it += 1
     }
     if (changed > 0)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds — " +
           s"raise maxIter (graph diameter exceeds it)")
-    Materialize.drop(symM) // final labels are materialized
-    labels.select(col("node"), col("lbl").as("component"))
+    loop.result()
   }
 
   /** STRONGLY connected components of a DIRECTED graph — the classic
@@ -831,7 +864,10 @@ object Dedup {
     * join of the (node, rank, deg) frame against it plus a
     * map-side-combinable sum and a node-sized degree re-attach (skipped
     * on the final round), with the rank frame re-materialized per round
-    * to cap lineage.
+    * to cap lineage. An edge list that fits on the driver
+    * ([[symmetrizedEdges]]) replays the same `Long` rounds there — `r
+    * div deg`, `(85 * in_sum) div 100`, overflow throwing as under ANSI
+    * — and returns a local frame.
     * A fixed iteration count (not a convergence test) keeps the replay
     * closed-form; 4–8 rounds is the usual plateau for near-dup graphs,
     * whose components are small by construction.
@@ -848,31 +884,57 @@ object Dedup {
       bCol: String = "doc_b"): DataFrame = {
     require(iterations >= 1, "pagerank needs at least one iteration")
     val Scale = 1000000L
-    val symM = symmetrizedEdges(edges, aCol, bCol)
-    val deg = symM.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    // degree rides along with the rank frame so the contribution is a
-    // single projection at round start — one edge join + one node-sized
-    // deg re-attach per round, the latter skipped after the final round
-    // where it would only feed a dropped column
-    var ranks = Materialize(
-      deg.select(col("src").as("node"), lit(Scale).as("r"), col("deg")))
-    for (i <- 1 to iterations) {
-      val stepped = symM
-        .join(ranks.select(col("node").as("src"),
-          expr("r div deg").as("contrib")), Seq("src"))
-        .groupBy(col("dst")).agg(sum(col("contrib")).as("in_sum"))
-        .select(col("dst").as("node"),
-          (lit(15L * Scale / 100) +
-            expr("(85 * in_sum) div 100")).as("r"))
-      val next = Materialize(
-        if (i == iterations) stepped
-        else stepped.join(
-          deg.select(col("src").as("node"), col("deg")), Seq("node")))
-      Materialize.drop(ranks) // superseded round frame: blocks dead
-      ranks = next
+    val Teleport = 15L * Scale / 100
+    val loop: Rounds = symmetrizedEdges(edges, aCol, bCol) match {
+      case OnDriver(g) => new Rounds {
+        private val deg = Array.tabulate(g.n)(v => g.row(v).length.toLong)
+        private var r = Array.fill(g.n)(Scale)
+        def round(): Long = {
+          val contrib = Array.tabulate(g.n)(v => r(v) / deg(v))
+          r = Array.tabulate(g.n) { v =>
+            val inSum = g.row(v).foldLeft(0L)((t, j) =>
+              Math.addExact(t, contrib(g.nbr(j))))
+            Math.addExact(Teleport, Math.multiplyExact(85L, inSum) / 100)
+          }
+          0L
+        }
+        def result(): DataFrame =
+          g.frame(edges.sparkSession, "rank_fp", v => Some(r(v)))
+      }
+      case OnExecutors(symM, _) => new Rounds {
+        private val deg =
+          symM.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        // degree rides along with the rank frame so the contribution is
+        // a single projection at round start — one edge join + one
+        // node-sized deg re-attach per round, the latter skipped after
+        // the final round where it would only feed a dropped column
+        private var ranks = Materialize(
+          deg.select(col("src").as("node"), lit(Scale).as("r"), col("deg")))
+        private var i = 0
+        def round(): Long = {
+          i += 1
+          val stepped = symM
+            .join(ranks.select(col("node").as("src"),
+              expr("r div deg").as("contrib")), Seq("src"))
+            .groupBy(col("dst")).agg(sum(col("contrib")).as("in_sum"))
+            .select(col("dst").as("node"),
+              (lit(Teleport) + expr("(85 * in_sum) div 100")).as("r"))
+          val next = Materialize(
+            if (i == iterations) stepped
+            else stepped.join(
+              deg.select(col("src").as("node"), col("deg")), Seq("node")))
+          Materialize.drop(ranks) // superseded round frame: blocks dead
+          ranks = next
+          0L
+        }
+        def result(): DataFrame = {
+          Materialize.drop(symM) // final ranks are materialized
+          ranks.select(col("node"), col("r").as("rank_fp"))
+        }
+      }
     }
-    Materialize.drop(symM) // final ranks are materialized
-    ranks.select(col("node"), col("r").as("rank_fp"))
+    for (_ <- 1 to iterations) loop.round()
+    loop.result()
   }
 
   /** Synchronous label-propagation community detection (Raghavan et
@@ -890,7 +952,9 @@ object Dedup {
     * map-side-combinable (node, label) count, one argmax via lexical
     * `min(struct(-count, label))` — all exact longs. The label frame
     * re-materializes per round ([[Materialize]]) to cap lineage, the CC
-    * / pagerank loop shape. Fixed `rounds` keeps the replay closed-form;
+    * / pagerank loop shape; an edge list that fits on the driver
+    * ([[symmetrizedEdges]]) replays the same argmax rounds there and
+    * returns a local frame. Fixed `rounds` keeps the replay closed-form;
     * LPA plateaus in a handful of rounds on community-structured
     * graphs. Output: (node, community) after `rounds` rounds. */
   def labelPropagation(
@@ -899,25 +963,144 @@ object Dedup {
       aCol: String = "doc_a",
       bCol: String = "doc_b"): DataFrame = {
     require(rounds >= 1, "labelPropagation needs at least one round")
-    val symM = symmetrizedEdges(edges, aCol, bCol)
-    var labels = Materialize(symM.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node")))
-    for (_ <- 1 to rounds) {
-      val counts = symM
-        .join(labels.select(col("node").as("src"), col("lbl")), Seq("src"))
-        .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("n"))
-      val next = Materialize(counts.groupBy(col("dst"))
-        .agg(min(struct((-col("n")).as("negn"), col("lbl").as("l"))).as("m"))
-        .select(col("dst").as("node"), col("m.l").as("lbl")))
-      // the superseded round's label blocks are dead once the next
-      // round materialized — release them instead of letting them crowd
-      // the storage pool until the context cleaner catches up
-      Materialize.drop(labels)
-      labels = next
+    val loop: Rounds = symmetrizedEdges(edges, aCol, bCol) match {
+      case OnDriver(g) => new Rounds {
+        private var lbl = Array.range(0, g.n)
+        // votes(j) is the label row j carries into its node this round
+        private val votes = new Array[Int](g.nbr.length)
+        def round(): Long = {
+          val cur = lbl
+          lbl = Array.tabulate(g.n) { v =>
+            val (lo, hi) = (g.off(v), g.off(v + 1))
+            for (j <- lo until hi) votes(j) = cur(g.nbr(j))
+            java.util.Arrays.sort(votes, lo, hi)
+            // the longest run of equal labels wins; scanning ascending,
+            // a tie keeps the smaller label
+            var best = -1
+            var bestN = 0
+            var j = lo
+            while (j < hi) {
+              var e = j + 1
+              while (e < hi && votes(e) == votes(j)) e += 1
+              if (e - j > bestN) { best = votes(j); bestN = e - j }
+              j = e
+            }
+            best
+          }
+          0L
+        }
+        def result(): DataFrame = g.frame(edges.sparkSession, "community",
+          v => Some(g.ids(lbl(v))))
+      }
+      case OnExecutors(symM, _) => new Rounds {
+        private var labels =
+          Materialize(symM.select(col("src").as("node")).distinct()
+            .withColumn("lbl", col("node")))
+        def round(): Long = {
+          val counts = symM
+            .join(labels.select(col("node").as("src"), col("lbl")),
+              Seq("src"))
+            .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("n"))
+          val next = Materialize(counts.groupBy(col("dst"))
+            .agg(min(struct((-col("n")).as("negn"), col("lbl").as("l")))
+              .as("m"))
+            .select(col("dst").as("node"), col("m.l").as("lbl")))
+          // the superseded round's label blocks are dead once the next
+          // round materialized — release them instead of letting them
+          // crowd the storage pool until the context cleaner catches up
+          Materialize.drop(labels)
+          labels = next
+          0L
+        }
+        def result(): DataFrame = {
+          Materialize.drop(symM) // final labels are materialized; the
+          // edge frame is dead once the loop ends
+          labels.select(col("node"), col("lbl").as("community"))
+        }
+      }
     }
-    Materialize.drop(symM) // final labels are materialized; the edge
-    // frame is dead once the loop ends
-    labels.select(col("node"), col("lbl").as("community"))
+    for (_ <- 1 to rounds) loop.round()
+    loop.result()
+  }
+
+  /** k-core decomposition by iterative peeling: repeatedly delete nodes
+    * of degree < k (and their edges) until every survivor has >= k
+    * neighbors inside the surviving set — the densest-region extractor
+    * used to separate tightly-duplicated spam farms from incidental
+    * near-dup pairs in a candidate graph. Each round is one degree
+    * aggregation plus two semi-joins of the live edge set against the
+    * survivor list; the edge frame is re-[[Materialize]]d per round, so
+    * lineage stays O(1) and each round's shuffle is bounded by the
+    * shrinking live set. Rounds ~ the core-peeling depth (typically a
+    * handful), detected by the edge count reaching a fixpoint — the same
+    * unrollable fixed-round shape the other graph loops use, so the
+    * oracle replays the rounds as CTEs (post-fixpoint rounds are no-ops
+    * on both engines). The initial count is the one the symmetrize
+    * checkpoint observes, and an edge list that fits on the driver
+    * ([[symmetrizedEdges]]) peels there by the same rule. Returns
+    * surviving (node, degree) — degrees within the k-core, not the input
+    * graph. Fails loudly on non-convergence. */
+  def kCore(
+      edges: DataFrame,
+      k: Int,
+      aCol: String = "doc_a",
+      bCol: String = "doc_b",
+      maxIter: Int = 20): DataFrame = {
+    require(k >= 1, s"kCore: k must be >= 1, got $k")
+    val sym = symmetrizedEdges(edges, aCol, bCol)
+    // round() peels once and returns the surviving row count
+    val loop: Rounds = sym match {
+      case OnDriver(g) => new Rounds {
+        private val alive = Array.fill(g.nbr.length)(true)
+        private def degrees = Array.tabulate(g.n)(v => g.row(v).count(alive(_)))
+        def round(): Long = {
+          val deg = degrees
+          for (v <- 0 until g.n; j <- g.row(v))
+            alive(j) &&= deg(v) >= k && deg(g.nbr(j)) >= k
+          alive.count(a => a).toLong
+        }
+        def result(): DataFrame = {
+          val deg = degrees
+          g.frame(edges.sparkSession, "degree",
+            v => Some(deg(v).toLong).filter(_ > 0))
+        }
+      }
+      case OnExecutors(symM, _) => new Rounds {
+        private var live = symM
+        def round(): Long = {
+          val keep = live.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+            .filter(col("deg") >= k).select(col("src"))
+          // the surviving-edge count rides the checkpoint action itself
+          // via observe() (the connectedComponents convergence pattern) —
+          // the fixpoint test costs zero extra jobs per peel round
+          val obs = org.apache.spark.sql.Observation()
+          val next = Materialize(live
+            .join(keep, Seq("src"), "left_semi")
+            .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi")
+            .select(col("src"), col("dst"))
+            .observe(obs, count(lit(1)).as("n")))
+          Materialize.drop(live) // superseded peel round: blocks dead
+          live = next
+          Option(obs.get.apply("n")).map(_.asInstanceOf[Long]).getOrElse(0L)
+        }
+        def result(): DataFrame =
+          live.groupBy(col("src").as("node"))
+            .agg(count(lit(1)).as("degree"))
+      }
+    }
+    var prev = -1L
+    var cur = sym.rows
+    var it = 0
+    while (cur != prev && it < maxIter) {
+      prev = cur
+      cur = loop.round()
+      it += 1
+    }
+    if (cur != prev)
+      throw new IllegalStateException(
+        s"kCore did not reach a fixpoint in $maxIter rounds — " +
+          "raise maxIter (peeling depth exceeds it)")
+    loop.result()
   }
 
   /** Triangle enumeration by degree-ordered orientation — the
@@ -944,58 +1127,6 @@ object Dedup {
     * O(√m) out-degree bound, not the raw hub degree. All comparisons
     * are exact longs. Output: one row per triangle, corner ids sorted
     * as (a < b < c). */
-  /** k-core decomposition by iterative peeling: repeatedly delete nodes
-    * of degree < k (and their edges) until every survivor has >= k
-    * neighbors inside the surviving set — the densest-region extractor
-    * used to separate tightly-duplicated spam farms from incidental
-    * near-dup pairs in a candidate graph. Each round is one degree
-    * aggregation plus two semi-joins of the live edge set against the
-    * survivor list; the edge frame is re-[[Materialize]]d per round, so
-    * lineage stays O(1) and each round's shuffle is bounded by the
-    * shrinking live set. Rounds ~ the core-peeling depth (typically a
-    * handful), detected by the edge count reaching a fixpoint — the same
-    * unrollable fixed-round shape the other graph loops use, so the
-    * oracle replays the rounds as CTEs (post-fixpoint rounds are no-ops
-    * on both engines). Returns surviving (node, degree) — degrees within
-    * the k-core, not the input graph. Fails loudly on non-convergence. */
-  def kCore(
-      edges: DataFrame,
-      k: Int,
-      aCol: String = "doc_a",
-      bCol: String = "doc_b",
-      maxIter: Int = 20): DataFrame = {
-    require(k >= 1, s"kCore: k must be >= 1, got $k")
-    var live = symmetrizedEdges(edges, aCol, bCol)
-    var prev = -1L
-    var cur = live.count()
-    var it = 0
-    while (cur != prev && it < maxIter) {
-      val keep = live.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src"))
-      // the surviving-edge count rides the checkpoint action itself via
-      // observe() (the connectedComponents convergence pattern) — the
-      // fixpoint test costs zero extra jobs per peel round
-      val obs = org.apache.spark.sql.Observation()
-      val next = Materialize(live
-        .join(keep, Seq("src"), "left_semi")
-        .join(keep.select(col("src").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .observe(obs, count(lit(1)).as("n")))
-      Materialize.drop(live) // superseded peel round: blocks dead
-      live = next
-      prev = cur
-      cur = Option(obs.get.apply("n"))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      it += 1
-    }
-    if (cur != prev)
-      throw new IllegalStateException(
-        s"kCore did not reach a fixpoint in $maxIter rounds — " +
-          "raise maxIter (peeling depth exceeds it)")
-    live.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("degree"))
-  }
-
   def triangles(
       edges: DataFrame,
       aCol: String = "doc_a",
@@ -1038,12 +1169,6 @@ object Dedup {
         element_at(col("__t"), 3).as("c"))
   }
 
-  /** Symmetrize an undirected (a, b) edge list into long-typed (src,
-    * dst) rows in BOTH directions, materialized once ([[Materialize]])
-    * — the shared first step of the iterative graph operators
-    * ([[connectedComponents]], [[pagerank]]): every round joins against
-    * it, and without the checkpoint each round would re-run the whole
-    * upstream candidate-generation pipeline the edges derive from. */
   /** Incremental connected-components maintenance — the graph face of
     * the [[graft.operators.IncrementalAgg]] story: yesterday's
     * (node, component) labels absorb a delta edge batch WITHOUT
@@ -1071,20 +1196,110 @@ object Dedup {
       aCol, bCol, maxIter)
   }
 
+  /** One graph loop on either side of [[symmetrizedEdges]]' decision:
+    * `round()` runs one synchronous round and returns the count the
+    * loop's stop rule reads (changed labels, surviving rows; 0 for the
+    * fixed-round loops), `result()` the loop's answer. */
+  private trait Rounds {
+    def round(): Long
+    def result(): DataFrame
+  }
+
+  /** Where a loop over a symmetrized edge list runs; `rows` counts the
+    * (src, dst) rows, both directions. */
+  private sealed trait SymEdges { def rows: Long }
+  private final case class OnExecutors(edges: DataFrame, rows: Long)
+    extends SymEdges
+  private final case class OnDriver(g: DriverGraph) extends SymEdges {
+    def rows: Long = g.nbr.length.toLong
+  }
+
+  /** A symmetrized edge list on the driver, as CSR: node ids ascending
+    * (a node's index orders like its id, so min-label rules hold on
+    * indices), and for node `v` the slice `nbr(off(v) until off(v + 1))`
+    * holding `u` for each (v, u) row — one entry per row, so duplicate
+    * edges and self-loops weigh what they weigh in the joins. The list
+    * is symmetric, so the slice is also the multiset of v's (u, v)
+    * rows. */
+  private final class DriverGraph(
+      val ids: Array[Long], val off: Array[Int], val nbr: Array[Int]) {
+    def n: Int = ids.length
+    def row(v: Int): Range = off(v) until off(v + 1)
+
+    /** The loop's answer as a local frame of (node, `value`) longs, one
+      * row per node `at` keeps. */
+    def frame(spark: SparkSession, value: String,
+        at: Int => Option[Long]): DataFrame = {
+      val rows = (0 until n).flatMap(v => at(v).map(x => Row(ids(v), x)))
+      spark.createDataFrame(rows.asJava, StructType(Seq(
+        StructField("node", LongType), StructField(value, LongType))))
+    }
+  }
+
+  private object DriverGraph {
+    def apply(rows: Array[Row]): DriverGraph = {
+      val ids = rows.map(_.getLong(0)).distinct.sorted
+      def ix(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+      val off = new Array[Int](ids.length + 1)
+      rows.foreach(r => off(ix(r.getLong(0)) + 1) += 1)
+      for (v <- ids.indices) off(v + 1) += off(v)
+      val at = off.clone()
+      val nbr = new Array[Int](rows.length)
+      rows.foreach { r =>
+        val v = ix(r.getLong(0))
+        nbr(at(v)) = ix(r.getLong(1))
+        at(v) += 1
+      }
+      new DriverGraph(ids, off, nbr)
+    }
+  }
+
+  /** Symmetrize an undirected (a, b) edge list into long-typed (src,
+    * dst) rows in BOTH directions, materialized once ([[Materialize]])
+    * — the shared first step of [[connectedComponents]], [[pagerank]],
+    * [[labelPropagation]] and [[kCore]]: without the checkpoint each
+    * round would re-run the whole upstream pipeline the edges derive
+    * from.
+    *
+    * It also decides where the loop runs. The checkpoint job counts the
+    * rows and the null endpoints (`observe`, no extra job). With no null
+    * endpoint and rows × 16 bytes within
+    * `spark.sql.autoBroadcastJoinThreshold` — Spark's own size for a
+    * relation shipped whole, -1 turning this off — the rows are
+    * collected once, the blocks released, and the loop replays its own
+    * round rule on the driver ([[OnDriver]]): the small-tail finish of
+    * Kiveris et al. (SoCC 2014), where a graph of a few thousand edges
+    * would otherwise pay several Spark jobs a round. Otherwise the loop
+    * joins against the materialized frame ([[OnExecutors]]); a null
+    * endpoint always goes that way, since the joins drop null ids in
+    * ways a replay would have to copy. */
   private def symmetrizedEdges(
-      edges: DataFrame, aCol: String, bCol: String): DataFrame =
+      edges: DataFrame, aCol: String, bCol: String): SymEdges = {
+    val obs = org.apache.spark.sql.Observation()
     // explode, not self-union: the union form reads the (often
     // shuffle-produced) edge subtree twice and doubles the map tasks of
     // the materializing stage; one explode pass emits exactly the same
     // (src, dst) ∪ (dst, src) rows from a single read (guide §2.3 —
     // fewer bytes through the exchange, same multiset out)
-    Materialize(edges
+    val symM = Materialize(edges
       .select(explode(array(
         struct(col(aCol).cast("long").as("src"),
           col(bCol).cast("long").as("dst")),
         struct(col(bCol).cast("long").as("src"),
           col(aCol).cast("long").as("dst")))).as("__e"))
-      .select(col("__e.src").as("src"), col("__e.dst").as("dst")))
+      .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
+      .observe(obs, count(lit(1)).as("rows"),
+        count(when(col("src").isNull || col("dst").isNull, 1)).as("nulls")))
+    val seen = obs.get
+    val rows = seen("rows").asInstanceOf[Long]
+    val fits = rows * 16 <=
+      edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (seen("nulls").asInstanceOf[Long] == 0L && fits) {
+      val g = DriverGraph(symM.collect())
+      Materialize.drop(symM)
+      OnDriver(g)
+    } else OnExecutors(symM, rows)
+  }
 
   /** Jaccard similarity of two (already distinct) string arrays. */
   def jaccard(a: Column, b: Column): Column = {

@@ -856,8 +856,21 @@ private[graft] class GraftSnapshotTable(
     * route UPDATE/MERGE through the snapshot verbs against it. */
   private[graft] def snapshotRoot: String = root
 
+  /** The table's columns. A refused face without partition columns
+    * takes them from its stored schema, read as a file source reads it
+    * (every field nullable) — the same columns the file table would
+    * report, without building its file index (an `exists` and a
+    * listing of every data file) for a scan that never runs; the
+    * governed read lists the files itself. */
+  private lazy val tableSchema: StructType = face.stored match {
+    case Some(stored)
+        if refusal.nonEmpty && face.files.forall(_.part.isEmpty) =>
+      org.apache.spark.sql.GraftSqlShim.nullable(stored)
+    case _ => delegate.schema
+  }
+
   override def name(): String = tableName
-  override def schema(): StructType = delegate.schema
+  override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE,
@@ -882,10 +895,10 @@ private[graft] class GraftSnapshotTable(
       // DML/DDL planning (DELETE FROM's optimizer pass, ALTER TABLE's
       // loadTable) builds scans it never executes — so a refused face
       // refuses at EXECUTION (toBatch), not at plan construction or
-      // table load
-      private val inner = delegate.newScanBuilder(o)
+      // table load; its schema is the table's, so planning it builds
+      // no file index
       override def build(): Scan = new Scan {
-        override def readSchema(): StructType = inner.build().readSchema()
+        override def readSchema(): StructType = tableSchema
         override def toBatch: Batch = throw new IllegalArgumentException(
           refusal.get.message(tableName, face.version))
       }

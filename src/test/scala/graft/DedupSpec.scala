@@ -504,7 +504,7 @@ class DedupSpec extends SparkSuite {
     }
   }
 
-  test("connected components: transitive closure with min-id labels, " +
+  graphTest("connected components: transitive closure with min-id labels, " +
     "edge-free nodes absent") {
     import spark.implicits._
     // two components: a 4-chain {1,2,3,4} (diameter 3 — needs real
@@ -518,7 +518,7 @@ class DedupSpec extends SparkSuite {
       (10L, 10L), (11L, 10L)))
   }
 
-  test("connected components: pointer jumping converges a deep chain in " +
+  graphTest("connected components: pointer jumping converges a deep chain in " +
     "logarithmic rounds") {
     import spark.implicits._
     // a 64-node chain has diameter 63: plain one-hop min propagation
@@ -530,7 +530,7 @@ class DedupSpec extends SparkSuite {
     assert(cc.length == 64 && cc.forall(_._2 == 1L))
   }
 
-  test("connected components under RELIABLE checkpointing: same labels, " +
+  graphTest("connected components under RELIABLE checkpointing: same labels, " +
     "and reliable mode without a checkpoint dir fails loudly") {
     import spark.implicits._
     import graft.functions.Materialize
@@ -572,7 +572,7 @@ class DedupSpec extends SparkSuite {
     Materialize.drop(b)
   }
 
-  test("incrementalComponents: star-collapsed fold equals the full " +
+  graphTest("incrementalComponents: star-collapsed fold equals the full " +
     "recompute — delta bridges two base components, isolated base " +
     "components survive via their self-loop stars") {
     // base: {1,2,3} (chain) and {10,11}; isolated pair {20,21}
@@ -592,7 +592,7 @@ class DedupSpec extends SparkSuite {
     assert(inc(31L) == 30L, "delta-only nodes must cluster fresh")
   }
 
-  test("kCore: cascading peel reaches the maximal k-core, degrees are " +
+  graphTest("kCore: cascading peel reaches the maximal k-core, degrees are " +
     "within-core, fully-peeled graph returns empty") {
     // triangle {1,2,3} each + a pendant chain 3-4-5: 2-core = the
     // triangle, and the chain peels in CASCADE (5 first, then 4) —
@@ -609,7 +609,7 @@ class DedupSpec extends SparkSuite {
     assert(core1 == Map(1L -> 2L, 2L -> 2L, 3L -> 3L, 4L -> 2L, 5L -> 1L))
   }
 
-  test("connected components: non-convergence fails loudly") {
+  graphTest("connected components: non-convergence fails loudly") {
     import spark.implicits._
     // a 6-node chain has diameter 5; min-label propagation moves the min
     // one hop per round, so maxIter = 2 cannot converge
@@ -642,7 +642,7 @@ class DedupSpec extends SparkSuite {
     assert(j == Seq(3.0 / 7.0))
   }
 
-  test("pagerank: exact fixed-point round on a star, hub dominates") {
+  graphTest("pagerank: exact fixed-point round on a star, hub dominates") {
     import spark.implicits._
     // star 1—{2,3,4}: deg(1)=3, deg(leaf)=1. Round 1 by hand:
     //   center in-sum = 3·(10⁶ div 1)       → 150000 + (85·3000000) div 100
@@ -660,7 +660,7 @@ class DedupSpec extends SparkSuite {
     assert(r4(1L) > r4(2L))
   }
 
-  test("pagerank: symmetric graphs stay symmetric; bad args rejected") {
+  graphTest("pagerank: symmetric graphs stay symmetric; bad args rejected") {
     import spark.implicits._
     // 4-cycle: every node has degree 2 — ranks must all stay equal at
     // the teleport-adjusted fixed point

@@ -31,6 +31,25 @@ trait SparkSuite extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** Runs `body` with `spark.sql.autoBroadcastJoinThreshold=-1`, which
+    * keeps every graph loop over `Dedup`'s symmetrized edges on the
+    * executors, whatever the graph's size. */
+  def distributed[T](body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try body
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Registers a graph-loop test twice with the same assertions: `name`
+    * in the default session, where a small graph finishes on the
+    * driver, and `name (distributed)` under [[distributed]]. */
+  def graphTest(name: String)(body: => Any): Unit = {
+    test(name)(body)
+    test(s"$name (distributed)")(distributed(body))
+  }
+
   /** Naive comma-split reader matching the reference's CSV dialect
     * (BatchUpdate.py:762-780) — the golden files contain a raw `"` (the
     * reference's Nov typo), which a quoting CSV parser would mangle. */

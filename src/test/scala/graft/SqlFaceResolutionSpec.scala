@@ -102,12 +102,21 @@ class SqlFaceResolutionSpec extends SparkSuite {
     assertFaceBudget(tbl, Set("_dv"), m, calls)
     assert(lists(tbl, "_dv", calls) == 1,
       s"_dv listed ${lists(tbl, "_dv", calls)} times: $calls")
+    // each data file is checked and listed once, by the governed read's
+    // own relation: the refused scan builds no file index of its own
+    val head = Snapshots.latestVersion(spark, tbl).get
+    val files = Snapshots.generationOf(spark, tbl, head).files
+      .map(f => new HPath(f.path).toUri.getPath)
+    assert(files.nonEmpty)
+    for (f <- files; op <- Seq("exists", "list")) {
+      val n = calls.count(_ == s"$op $f")
+      assert(n == 1, s"$op $f: $n calls in $calls")
+    }
     val (_, jobs) = jobsDuring(
       spark.sql(s"SELECT count(*) FROM $cat.dv").queryExecution.analyzed)
     assert(jobs == 0, s"planning the DV-governed SELECT ran $jobs job(s)")
     // the function verb splits clean and dirty files from the same
     // memoized DV file set
-    val head = Snapshots.latestVersion(spark, tbl).get
     val (face, readJobs) = jobsDuring(Snapshots.readAsOf(spark, tbl, head))
     assert(readJobs == 0, s"planning a warm DV readAsOf ran $readJobs job(s)")
     assert(face.count() == 4L)

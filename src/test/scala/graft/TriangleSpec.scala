@@ -20,7 +20,7 @@ class TriangleSpec extends SparkSuite {
     assert(tris(Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L))).isEmpty)
   }
 
-  test("labelPropagation: two cliques joined by a bridge keep separate " +
+  graphTest("labelPropagation: two cliques joined by a bridge keep separate " +
     "communities (hand-replayed 3 sync rounds)") {
     import org.apache.spark.sql.functions.col
     val edges = (Seq((1L, 2L), (1L, 3L), (2L, 3L), // clique A
